@@ -567,15 +567,14 @@ def update_cluster_table(
     cron/stream-shaped ingest loop can die mid-update without losing
     the corpus's cluster state. ``provenance`` replaces the sidecar's
     dict when given; otherwise the existing sidecar stays as-is."""
-    import os
-    import shutil
+    from commercepulse_data_pipeline_spark.sources import commit
 
     # crash recovery: a prior update that died between its two swap
     # renames leaves the rows reachable only at clusters.old — adopt it
-    # back before reading (the gold_upsert rename-aside discipline)
+    # back before reading
     rows_dir = f"{path}/clusters"
-    if not os.path.exists(rows_dir) and os.path.exists(rows_dir + ".old"):
-        os.replace(rows_dir + ".old", rows_dir)
+    table = (rows_dir, rows_dir + ".tmp", rows_dir + ".old")
+    commit.recover_swap([table], keep_old=True)
     cur = read_cluster_table(spark, path)
     upd = merge_cluster_update(
         cur, new_pairs,
@@ -589,28 +588,18 @@ def update_cluster_table(
     # mid-write would leave NO live copy of the table (the next update
     # would misread the missing dir). With renames the rows are always
     # reachable at clusters/ or clusters.old; the localCheckpoint above
-    # pins the update's content before anything moves. local-fs renames
-    # only — object stores route updates through their own commit layer.
-    tmp = rows_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    # pins the update's content before anything moves.
     (
         upd.select(*_CLUSTER_TABLE_COLS)
         .repartition("cluster_id")
         .write.mode("overwrite")
-        .parquet(tmp)
+        .parquet(table[1])
     )
-    old_dir = rows_dir + ".old"
-    if os.path.exists(old_dir):
-        # backup from the PREVIOUS successful update (or a prior crash
-        # while rows_dir stayed live) — superseded now that a fresh swap
-        # is about to land
-        shutil.rmtree(old_dir)
-    os.replace(rows_dir, old_dir)
-    os.replace(tmp, rows_dir)
     # clusters.old is RETAINED until the next successful update: it is
     # the rollback copy if corruption is discovered after the swap, and
-    # costs one table's worth of disk. The adoption path above only
-    # reads it when rows_dir itself is gone.
+    # costs one table's worth of disk. Recovery only adopts it when
+    # rows_dir itself is gone.
+    commit.swap([table], keep_old=True)
     if provenance is not None:
         import json
 

@@ -391,9 +391,11 @@ def read_text_index_meta(spark, path: str) -> dict:
     # same-named LOCAL directory must not shadow the cluster copy, so
     # the driver-filesystem fast path is taken only for explicit file:
     # URIs or when the default filesystem itself is local.
+    from ..sources.commit import local_path
+
     local = None
     if path.startswith("file:"):
-        local = path[7:] if path.startswith("file://") else path[5:]
+        local = local_path(path)
     elif "://" not in path:
         default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
         if default_fs.startswith("file:"):

@@ -19,6 +19,10 @@ from pyspark.sql import types as T
 
 from commercepulse_data_pipeline_spark.functions.drift import coalesce_keys
 from commercepulse_data_pipeline_spark.functions.hashing import event_id as _event_id
+from commercepulse_data_pipeline_spark.sources import commit
+from commercepulse_data_pipeline_spark.sources.commit import (  # noqa: F401 — historical import path
+    recover_fold as _recover_index_compact,
+)
 
 ENVELOPE_FIELDS = ("event_id", "event_type", "event_time", "vendor", "payload", "ingested_at", "source")
 
@@ -185,46 +189,51 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-def _swap_in(path: str, tmp: str, old: str) -> None:
-    """Replace ``path`` with ``tmp`` via two renames. NOT atomic as a
-    whole: between the two renames ``path`` does not exist, so a reader
-    racing the swap can observe a missing directory for an instant, and a
-    crash in that window strands the only copy at ``old`` —
-    :func:`_recover_swap` (called at the top of every rewrite op) adopts
-    it back automatically on the next run. The source stays intact if the
-    rewrite died before this point. A stale old-dir from a prior crashed
-    swap is cleared first (rename onto a non-empty target fails).
-
-    Local-filesystem only (``os.rename``/``glob``/``shutil``): each
-    individual rename is atomic on POSIX, but the helpers don't speak
-    HDFS/object-store URIs — there, use a table format's commit protocol
-    (Delta/Iceberg/Hudi) instead of directory swaps."""
-    import os as _os
-    import shutil as _shutil
-
-    if _os.path.exists(old):
-        _shutil.rmtree(old)
-    _os.rename(path.rstrip("/"), old)
-    _os.rename(tmp, path.rstrip("/"))
-    _shutil.rmtree(old)
-
-
-def _recover_swap(path: str) -> bool:
-    """Crash recovery for :func:`_swap_in`: if a prior swap died between
-    its two renames, ``path`` is missing and the only copy sits at
-    ``<path>._compact_old`` / ``<path>._purge_old``. Adopt it back so the
-    dataset is readable again; returns True if a recovery happened.
-    Leftover ``._*_tmp`` dirs (crash before the first rename) are inert —
-    the next rewrite overwrites them."""
-    import os as _os
-
+def _staged(path: str, kind: str) -> commit.Table:
     p = path.rstrip("/")
-    if not _os.path.exists(p):
-        for suffix in ("._compact_old", "._purge_old"):
-            if _os.path.exists(p + suffix):
-                _os.rename(p + suffix, p)
-                return True
-    return False
+    return (p, f"{p}._{kind}_tmp", f"{p}._{kind}_old")
+
+
+def _recover(path: str) -> None:
+    # either rewrite kind may have stranded the dataset at its old dir
+    for kind in ("compact", "purge"):
+        commit.recover_swap([_staged(path, kind)])
+
+
+def _data_files(path: str, pattern: str = "*") -> list[str]:
+    import glob as _glob
+    import os as _os
+
+    return [
+        f
+        for f in _glob.glob(_os.path.join(path, "**", pattern), recursive=True)
+        if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
+    ]
+
+
+def _rewrite_layout(spark: SparkSession, path: str, target_file_mb: int, write) -> dict:
+    """The shared body of the layout rewrites: recover a stranded earlier
+    rewrite, size the dataset from its file listing (no scan), let
+    ``write(df, n_out, files, tmp)`` write ``ceil(bytes / target)`` files
+    to the tmp sibling, swap it in (:func:`commit.swap` — each rename is
+    atomic, the pair is not: a crash between them strands the dataset at
+    ``<path>._compact_old`` until the next rewrite adopts it back), and
+    recount. Local filesystem only."""
+    import math
+    import os as _os
+
+    _recover(path)
+    files = _data_files(path)
+    total = sum(_os.path.getsize(f) for f in files)
+    n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
+    table = _staged(path, "compact")
+    write(spark.read.parquet(path), n_out, files, table[1])
+    commit.swap([table])
+    return {
+        "files_before": len(files),
+        "files_after": len(_data_files(path, "*.parquet")),
+        "bytes": total,
+    }
 
 
 def compact_parquet(
@@ -254,31 +263,21 @@ def compact_parquet(
     gives each partition ``ceil(its bytes / target)`` write tasks while
     partition pruning survives. If the input isn't hive-laid-out yet
     (first compaction), widths fall back to a uniform
-    ``ceil(n_out / n_partitions)``. The rewrite goes to a temp sibling
-    directory first and swaps in with two renames (see
-    :func:`_swap_in` for the non-atomicity window and the local-FS-only
-    caveat; a prior crashed swap is auto-recovered first).
+    ``ceil(n_out / n_partitions)``. The rewrite is swapped in by
+    :func:`_rewrite_layout`.
 
     Returns {"files_before", "files_after", "bytes"} for ops logging.
     """
-    import glob as _glob
     import math
     import os as _os
     import urllib.parse as _uparse
 
-    _recover_swap(path)
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*"), recursive=True)
-        if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
     target_bytes = target_file_mb * 1024 * 1024
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    if partition_col:
+
+    def write(df, n_out, files, tmp):
+        if not partition_col:
+            df.repartition(n_out).write.mode("overwrite").parquet(tmp)
+            return
         # Per-partition salt widths from the hive listing (no extra scan).
         part_bytes: dict[str, int] = {}
         hive = True
@@ -312,20 +311,14 @@ def compact_parquet(
         # of ONLY maps degrades to an unsalted (still correct) write.
         hashable = [F.col(c) for c, t in df.dtypes if not t.startswith("map<")]
         salt = F.pmod(F.hash(*hashable) if hashable else F.lit(0), width)
-        writer = (
+        (
             df.repartition(n_tasks, F.col(partition_col), salt)
             .write.partitionBy(partition_col)
+            .mode("overwrite")
+            .parquet(tmp)
         )
-    else:
-        writer = df.repartition(n_out).write
-    writer.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp, old)
-    after = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    return {"files_before": len(files), "files_after": len(after), "bytes": total}
+
+    return _rewrite_layout(spark, path, target_file_mb, write)
 
 
 def optimize_layout(
@@ -347,38 +340,20 @@ def optimize_layout(
     sort key).
 
     Same listing-based sizing and rename-swap as :func:`compact_parquet`
-    (shares its crash-recovery suffixes). ``repartitionByRange`` samples
-    the key distribution, so output files are near-equal-sized even under
-    skew. Returns {"files_after", "bytes"}.
+    (:func:`_rewrite_layout`). ``repartitionByRange`` samples the key
+    distribution, so output files are near-equal-sized even under skew.
+    Returns {"files_before", "files_after", "bytes"}.
     """
-    import glob as _glob
-    import math
-    import os as _os
 
-    _recover_swap(path)
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*"), recursive=True)
-        if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    (
-        df.repartitionByRange(n_out, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    _swap_in(path, tmp, old)
-    after = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    return {"files_after": len(after), "bytes": total}
+    def write(df, n_out, files, tmp):
+        (
+            df.repartitionByRange(n_out, *[F.col(c) for c in sort_cols])
+            .sortWithinPartitions(*sort_cols)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+
+    return _rewrite_layout(spark, path, target_file_mb, write)
 
 
 def zorder_layout(
@@ -411,112 +386,39 @@ def zorder_layout(
 
     Same listing-based sizing and crash-safe rename-swap as
     :func:`compact_parquet`. NULLs sort to bucket 0 (curve start).
-    Returns {"files_after", "bytes"}.
+    Returns {"files_before", "files_after", "bytes"}.
     """
-    import glob as _glob
-    import math
-    import os as _os
-
-    _recover_swap(path)
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*"), recursive=True)
-        if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
     n_buckets = 1 << bits_per_col
     probs = [i / n_buckets for i in range(1, n_buckets)]
-    bucket_exprs = []
-    for c in zorder_cols:
-        # sketch-based boundaries; cast to double for a uniform rank space
-        dcol = F.col(c).cast("double")
-        bnds = df.select(dcol.alias(c)).approxQuantile(c, probs, 0.001)
-        # dedupe (heavy ties collapse boundaries) while preserving order
-        uniq = sorted(set(bnds))
-        bucket_exprs.append(
-            F.size(F.filter(F.lit(uniq), lambda b: b <= dcol)).cast("long")
-        )
-    z = F.lit(0).cast("long")
-    for bit in range(bits_per_col):
-        for ci, b in enumerate(bucket_exprs):
-            z = z + F.shiftleft(
-                F.shiftright(b, bit).bitwiseAND(F.lit(1)),
-                bit * len(zorder_cols) + ci,
+
+    def write(df, n_out, files, tmp):
+        bucket_exprs = []
+        for c in zorder_cols:
+            # sketch-based boundaries; cast to double for a uniform rank space
+            dcol = F.col(c).cast("double")
+            bnds = df.select(dcol.alias(c)).approxQuantile(c, probs, 0.001)
+            # dedupe (heavy ties collapse boundaries) while preserving order
+            uniq = sorted(set(bnds))
+            bucket_exprs.append(
+                F.size(F.filter(F.lit(uniq), lambda b: b <= dcol)).cast("long")
             )
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    (
-        df.withColumn("__zorder", z)
-        .repartitionByRange(n_out, F.col("__zorder"))
-        .sortWithinPartitions("__zorder")
-        .drop("__zorder")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    _swap_in(path, tmp, old)
-    after = [
-        f
-        for f in _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    return {"files_after": len(after), "bytes": total}
+        z = F.lit(0).cast("long")
+        for bit in range(bits_per_col):
+            for ci, b in enumerate(bucket_exprs):
+                z = z + F.shiftleft(
+                    F.shiftright(b, bit).bitwiseAND(F.lit(1)),
+                    bit * len(zorder_cols) + ci,
+                )
+        (
+            df.withColumn("__zorder", z)
+            .repartitionByRange(n_out, F.col("__zorder"))
+            .sortWithinPartitions("__zorder")
+            .drop("__zorder")
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
 
-
-def _recover_index_compact(root: str) -> None:
-    """Crash recovery for :func:`compact_streaming_index`. The marker file
-    (written at the commit decision point) lists the folded partition
-    dirs: marker present → roll FORWARD (finish placing the consolidated
-    partition from the tmp dir if needed, delete the listed folded dirs,
-    discard the set-aside state); marker absent but set-aside dir present
-    → roll BACK (adopt set-aside partitions back, discard the tmp)."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    p = root.rstrip("/")
-    old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    marker = _os.path.join(old_root, "_FOLDED.json")
-    m = None
-    if _os.path.exists(marker):
-        # The marker is written via tmp-file + rename, so a torn file here
-        # means a pre-atomic-write store or exotic FS corruption; either
-        # way an unparseable marker is treated as ABSENT (the commit never
-        # happened) and we fall through to the roll-back branch below.
-        try:
-            with open(marker) as fh:
-                m = _json.load(fh)
-        except (ValueError, OSError):
-            _os.remove(marker)
-            m = None
-    if m is not None:
-        dst = _os.path.join(p, m["consolidated"])
-        src = _os.path.join(tmp_root, m["consolidated"])
-        if not _os.path.exists(dst) and _os.path.exists(src):
-            _os.rename(src, dst)
-        for name in m["folded"]:
-            # the folded list INCLUDES the old consolidated dir when a
-            # re-fold subsumed it — but at roll-forward time the dir at
-            # that name is the NEW consolidated partition (the old one
-            # sits in old_root); deleting it here would destroy the fold
-            # we are completing
-            if name == m["consolidated"]:
-                continue
-            d = _os.path.join(p, name)
-            if _os.path.exists(d):
-                _shutil.rmtree(d)
-        _shutil.rmtree(old_root, ignore_errors=True)
-    elif _os.path.isdir(old_root):
-        for entry in _os.listdir(old_root):
-            if entry.startswith("_FOLDED.json"):  # torn/partial marker
-                continue
-            dst = _os.path.join(p, entry)
-            if not _os.path.exists(dst):
-                _os.rename(_os.path.join(old_root, entry), dst)
-        _shutil.rmtree(old_root, ignore_errors=True)
-    if _os.path.isdir(tmp_root):
-        _shutil.rmtree(tmp_root, ignore_errors=True)
+    return _rewrite_layout(spark, path, target_file_mb, write)
 
 
 def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
@@ -578,13 +480,13 @@ def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
         return False
     if root is None:
         return True
-    if "://" in root and not root.startswith("file://"):
+    path = commit.local_path(root)
+    if path is None:
         # Non-local scheme: no driver-local listing exists, so the race
         # probe below would ALWAYS read "absent". Skip it explicitly and
         # let the error classification decide (documented local-only
         # contract above).
         return True
-    path = root[len("file:"):] if root.startswith("file:") else root
     if not _os.path.exists(path):
         return True
     try:
@@ -608,7 +510,7 @@ def fold_consistent_read(
     (and after a mid-fold crash, BEFORE any recovery runs — this function
     never mutates the store).
 
-    The fold protocol (:func:`_fold_commit`) has two windows where a
+    The fold protocol (:func:`commit.fold_partitions`) has two windows where a
     naive ``spark.read.parquet(root)`` reads a WRONG store:
 
     - pre-commit (old consolidated set aside, marker not yet written):
@@ -631,20 +533,19 @@ def fold_consistent_read(
 
     LOCAL-ONLY by construction: marker/old-dir detection uses driver
     ``os.path``/``os.listdir``, matching the fold protocol itself (the
-    compactors commit with ``os.rename``). A non-file scheme
+    compactors commit with driver-local renames). A non-file scheme
     (``hdfs://``, ``s3a://``) would silently degrade to a plain read —
     exactly the inconsistency window this reader exists to close — so it
     raises instead (ADVICE r9). Non-local stores need a compactor and a
     reader built on the same atomic-rename substrate (HDFS rename / a
     table format's snapshot isolation), not this marker protocol."""
-    import json as _json
     import os as _os
 
     if "://" in root:
         scheme = root.split("://", 1)[0]
         raise ValueError(
             f"fold_consistent_read is local-filesystem-only (the fold "
-            f"marker protocol is driver-local os.rename/os.listdir); got "
+            f"marker protocol is driver-local rename/listdir); got "
             f"scheme {scheme!r} for {root!r}. Use spark.read.parquet "
             f"directly (NO fold consistency) or a snapshot-isolated table "
             f"format for non-local stores."
@@ -652,14 +553,7 @@ def fold_consistent_read(
     p = root.rstrip("/")
     old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
     cons_name = f"{partition_col}={consolidated_value}"
-    marker = _os.path.join(old_root, "_FOLDED.json")
-    m = None
-    if _os.path.exists(marker):
-        try:
-            with open(marker) as fh:
-                m = _json.load(fh)
-        except (ValueError, OSError):  # torn marker = commit never happened
-            m = None
+    m = commit.read_marker(_os.path.join(old_root, "_FOLDED.json"))
 
     def _part_df(path: str, value: int) -> DataFrame:
         return spark.read.parquet(path).withColumn(
@@ -718,39 +612,6 @@ def fold_consistent_read(
     return spark.read.parquet(p)
 
 
-def _fold_commit(p: str, cons_name: str, fold_names: list[str], had_consolidated: bool) -> None:
-    """Steps 3–7 of the fold protocol, shared by the index and sketch
-    compactors (the tmp consolidated dir must already be written): set the
-    old consolidated aside, write the marker (COMMIT POINT — recovery
-    rolls forward past it), rename the new consolidated in, delete the
-    folded dirs, clean up."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-
-    old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    _os.makedirs(old_root, exist_ok=True)
-    if had_consolidated:
-        _os.rename(_os.path.join(p, cons_name), _os.path.join(old_root, cons_name))
-    # Marker write must be atomic: a crash mid-dump would otherwise leave a
-    # torn JSON file AFTER the old consolidated dir was set aside, and
-    # recovery would raise on it forever instead of rolling back. Write to
-    # a tmp name and rename in (atomic on POSIX).
-    marker = _os.path.join(old_root, "_FOLDED.json")
-    with open(marker + ".tmp", "w") as fh:
-        _json.dump({"consolidated": cons_name, "folded": fold_names}, fh)
-        fh.flush()
-        _os.fsync(fh.fileno())
-    _os.rename(marker + ".tmp", marker)
-    _os.rename(_os.path.join(tmp_root, cons_name), _os.path.join(p, cons_name))
-    for name in fold_names:
-        d = _os.path.join(p, name)
-        if _os.path.exists(d) and name != cons_name:
-            _shutil.rmtree(d)
-    _shutil.rmtree(old_root, ignore_errors=True)
-    _shutil.rmtree(tmp_root, ignore_errors=True)
-
-
 def compact_streaming_index(
     spark: SparkSession,
     root: str,
@@ -776,74 +637,40 @@ def compact_streaming_index(
     ``sub_partition_col`` preserves an inner layout (the embedding lists'
     ``lsh_bucket``) through the rewrite.
 
-    Crash safety (local-FS rename model, same as :func:`_swap_in`): the
-    consolidated rewrite lands in a hidden tmp sibling; a marker file
-    written at the commit point lists the folded dirs, and
-    :func:`_recover_index_compact` (run first, every call) rolls an
-    interrupted fold forward past the marker or back before it. Readers
-    racing the swap can transiently see the index without the consolidated
-    rows (a near-dup admitted once) or with folded rows duplicated
-    (harmless: candidate pairs are distinct, width caps momentarily
-    tighter) — a transactional table format is the cluster-grade answer,
-    the protocol here is the plain-parquet equivalent.
+    Crash safety: the fold goes through :func:`commit.fold_partitions` —
+    the consolidated rewrite lands in a hidden tmp sibling, a marker file
+    written at the commit point lists the folded dirs, and an interrupted
+    fold is rolled forward past the marker or back before it on the next
+    call. Readers racing the swap can transiently see the index without
+    the consolidated rows (a near-dup admitted once) or with folded rows
+    duplicated (harmless: candidate pairs are distinct, width caps
+    momentarily tighter) — :func:`fold_consistent_read` closes that
+    window; a transactional table format is the cluster-grade answer.
 
     Returns {"folded", "partitions_after", "files_after"}.
     """
-    import glob as _glob
-    import json as _json
     import math
     import os as _os
-    import shutil as _shutil
 
-    p = root.rstrip("/")
-    _recover_index_compact(p)
-    prefix = partition_col + "="
-    parts: dict[int, str] = {}
-    for entry in _os.listdir(p):
-        if entry.startswith(prefix) and _os.path.isdir(_os.path.join(p, entry)):
-            parts[int(entry[len(prefix):])] = entry
-    real = sorted(v for v in parts if v != consolidated_value)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts), "files_after": None}
-    fold_vals = fold + ([consolidated_value] if consolidated_value in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
-    fold_bytes = sum(
-        _os.path.getsize(f)
-        for name in fold_names
-        for f in _glob.glob(_os.path.join(p, name, "**", "*"), recursive=True)
-        if _os.path.isfile(f)
-    )
-    n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
+    def write(folded, target, fold_dirs):
+        fold_bytes = sum(_os.path.getsize(f) for d in fold_dirs for f in _data_files(d))
+        n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
+        df = folded.drop(partition_col)
+        if sub_partition_col:
+            writer = df.repartition(n_out, sub_partition_col).write.partitionBy(
+                sub_partition_col
+            )
+        else:
+            writer = df.repartition(n_out).write
+        writer.mode("overwrite").parquet(target)
 
-    df = (
-        spark.read.parquet(p)
-        .where(F.col(partition_col).isin(fold_vals))
-        .drop(partition_col)
+    stats = commit.fold_partitions(
+        spark, root, write,
+        partition_col=partition_col,
+        consolidated_value=consolidated_value,
+        keep_latest=keep_latest,
     )
-    cons_name = f"{prefix}{consolidated_value}"
-    target = _os.path.join(p + "._fold_tmp", cons_name)
-    if sub_partition_col:
-        writer = df.repartition(n_out, sub_partition_col).write.partitionBy(
-            sub_partition_col
-        )
-    else:
-        writer = df.repartition(n_out).write
-    writer.mode("overwrite").parquet(target)
-
-    _fold_commit(p, cons_name, fold_names, consolidated_value in parts)
-    files_after = len(
-        [
-            f
-            for f in _glob.glob(_os.path.join(p, "**", "*"), recursive=True)
-            if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
-        ]
-    )
-    return {
-        "folded": len(fold),
-        "partitions_after": len(parts) - len(fold_vals) + 1,
-        "files_after": files_after,
-    }
+    return {**stats, "files_after": len(_data_files(root)) if stats["folded"] else None}
 
 
 def purge_keys(
@@ -873,7 +700,7 @@ def purge_keys(
     compliance tool. (The validation job runs over the keys only —
     bounded-small by construction.)
     """
-    _recover_swap(path)
+    _recover(path)
     df = spark.read.parquet(path)
     key_type = df.schema[key_col].dataType
     # try_cast, not cast: under ANSI mode a malformed key would throw an
@@ -906,10 +733,9 @@ def purge_keys(
     keys_df = typed.select(key_col).dropDuplicates([key_col])
     kept = df.join(F.broadcast(keys_df), on=key_col, how="left_anti")
     before = df.count()
-    tmp = path.rstrip("/") + "._purge_tmp"
-    old = path.rstrip("/") + "._purge_old"
+    table = _staged(path, "purge")
     writer = kept.write.partitionBy(partition_col) if partition_col else kept.write
-    writer.mode("overwrite").parquet(tmp)
-    _swap_in(path, tmp, old)
+    writer.mode("overwrite").parquet(table[1])
+    commit.swap([table])
     after = spark.read.parquet(path).count()
     return {"rows_before": before, "rows_removed": before - after}

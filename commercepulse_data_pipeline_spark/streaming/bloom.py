@@ -94,42 +94,15 @@ def compact_bloom_rollup(
     """Re-fold the per-batch partials to one DISTINCT (shard, pos) set in
     the consolidated ``ingest_batch=-1`` partition, via the shared
     marker-file fold protocol (crash-recoverable at every point; see
-    ``sources/readers.py::compact_streaming_index``). Compaction is EXACT
+    ``sources/commit.py::fold_partitions``). Compaction is EXACT
     — bit-OR of bit-ORs — so probe answers are identical before, during,
     and after. ``keep_latest`` batch partitions stay untouched for
     replay safety."""
-    import os
+    from commercepulse_data_pipeline_spark.sources.commit import fold_partitions
 
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        _fold_commit,
-        _recover_index_compact,
-    )
+    def write(folded, target, _dirs):
+        folded.select(shard_col, "pos").distinct().coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(target)
 
-    p = store_dir.rstrip("/")
-    _recover_index_compact(p)
-    prefix = "ingest_batch="
-    parts: dict[int, str] = {}
-    for entry in os.listdir(p):
-        if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry)):
-            parts[int(entry[len(prefix):])] = entry
-    real = sorted(v for v in parts if v != -1)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([-1] if -1 in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
-    merged = (
-        spark.read.parquet(p)
-        .where(F.col("ingest_batch").isin(fold_vals))
-        .select(shard_col, "pos")
-        .distinct()
-    )
-    cons_name = f"{prefix}-1"
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(p + "._fold_tmp", cons_name)
-    )
-    _fold_commit(p, cons_name, fold_names, -1 in parts)
-    return {
-        "folded": len(fold),
-        "partitions_after": len(parts) - len(fold_vals) + 1,
-    }
+    return fold_partitions(spark, store_dir, write, keep_latest=keep_latest)

@@ -39,8 +39,6 @@ partials × capacity rows — kilobytes — and compaction keeps partials at
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -168,60 +166,36 @@ def compact_mg_rollup(
     (single root — the unified layout makes the whole fold one atomic
     swap); ``keep_latest >= 2`` keeps a replayed batch's own partition
     safe, same argument as the other streaming stores."""
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        _fold_commit,
-        _recover_index_compact,
-    )
+    from commercepulse_data_pipeline_spark.sources.commit import fold_partitions
 
-    p = store_dir.rstrip("/")
-    _recover_index_compact(p)
-    prefix = "ingest_batch="
-    parts: dict[int, str] = {}
-    for entry in os.listdir(p):
-        if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry)):
-            parts[int(entry[len(prefix):])] = entry
-    real = sorted(v for v in parts if v != -1)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([-1] if -1 in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
+    def write(t, target, _dirs):
+        merged = (
+            t.where(~F.col("is_meta"))
+            .groupBy("item")
+            .agg(F.sum("est").alias("est"))
+        )
+        w = Window.orderBy(F.desc("est"), F.col("item"))
+        ranked = merged.withColumn("rn", F.row_number().over(w)).where(
+            F.col("rn") <= capacity + 1
+        )
+        # bounded collect: <= capacity+1 rows by construction
+        top = ranked.collect()
+        new_off = next((r["est"] for r in top if r["rn"] == capacity + 1), 0)
+        folded_meta = t.where(F.col("is_meta")).agg(
+            F.sum("c_off").alias("c_off"), F.sum("n_items").alias("n_items")
+        ).first()
+        item_t = dict(merged.dtypes)["item"]
+        kept = [
+            (r["item"], int(r["est"] - new_off))
+            for r in top
+            if r["rn"] <= capacity and r["est"] > new_off
+        ]
+        rows = [(False, i, e, None, None) for i, e in kept] + [
+            (True, None, None, int(folded_meta["c_off"] or 0) + int(new_off),
+             int(folded_meta["n_items"] or 0))
+        ]
+        one_slice_df(
+            spark, rows, f"is_meta boolean, item {item_t}, est long, c_off long, n_items long"
+        ).write.mode("overwrite").parquet(target)
 
-    t = spark.read.parquet(p).where(F.col("ingest_batch").isin(fold_vals))
-    merged = (
-        t.where(~F.col("is_meta"))
-        .groupBy("item")
-        .agg(F.sum("est").alias("est"))
-    )
-    w = Window.orderBy(F.desc("est"), F.col("item"))
-    ranked = merged.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= capacity + 1
-    )
-    # bounded collect: <= capacity+1 rows by construction
-    top = ranked.collect()
-    new_off = next((r["est"] for r in top if r["rn"] == capacity + 1), 0)
-    folded_meta = t.where(F.col("is_meta")).agg(
-        F.sum("c_off").alias("c_off"), F.sum("n_items").alias("n_items")
-    ).first()
-    item_t = dict(merged.dtypes)["item"]
-    kept = [
-        (r["item"], int(r["est"] - new_off))
-        for r in top
-        if r["rn"] <= capacity and r["est"] > new_off
-    ]
-    rows = [(False, i, e, None, None) for i, e in kept] + [
-        (True, None, None, int(folded_meta["c_off"] or 0) + int(new_off),
-         int(folded_meta["n_items"] or 0))
-    ]
-    cons = one_slice_df(
-        spark, rows, f"is_meta boolean, item {item_t}, est long, c_off long, n_items long"
-    )
-    cons_name = f"{prefix}-1"
-    cons.write.mode("overwrite").parquet(
-        os.path.join(p + "._fold_tmp", cons_name)
-    )
-    _fold_commit(p, cons_name, fold_names, -1 in parts)
-    return {
-        "folded": len(fold),
-        "partitions_after": len(parts) - len(fold_vals) + 1,
-    }
+    return fold_partitions(spark, store_dir, write, keep_latest=keep_latest)

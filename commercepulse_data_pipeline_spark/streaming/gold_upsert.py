@@ -28,22 +28,31 @@ normalizers needed):
    affected dates' rows — the drop handles (date, vendor) groups that
    vanished entirely (all of a vendor's orders moved off the day).
 
-Storage is plain parquet with write-to-tmp-then-swap (all writes
-materialize against the OLD state before any directory is swapped, so a
-batch reads a consistent snapshot). Be explicit about what that costs:
-the swap REWRITES each silver table in full every batch — fine for the
-daily-file cadence this models, wrong at 100 TB. The cluster shape is a
-transactional table format (Delta/Iceberg): silver keyed MERGE, gold
-``replaceWhere`` on the affected dates — the batch-function body and all
-its dataframe logic are unchanged, only the four writes at the end swap
-for MERGE statements. The driver holds only the affected-date list
-(bounded by the batch's touched days), never data.
+Storage is plain parquet committed through ``sources/commit.py``'s swap
+protocol. All four new tables are written to ``<table>.tmp`` against the
+OLD state first, so a batch reads a consistent snapshot. Then
+``_SWAP.json`` is written atomically in the store; it is the commit
+point. Only after it does any live table get renamed aside to
+``<table>.old`` and replaced by its tmp. A crash before the record
+leaves all four tables old; a crash after it is rolled forward by the
+next batch's recovery, so all four become new. The tables never mix
+snapshots. A mix would break the fold: a replay that read the new
+``orders`` as its previous state would miss the old date of an order the
+batch moved, and gold would keep that date's stale count for good.
+
+Be explicit about what the swap costs: it REWRITES each silver table in
+full every batch — fine for the daily-file cadence this models, wrong
+at 100 TB. The cluster shape is a transactional table format
+(Delta/Iceberg): silver keyed MERGE, gold ``replaceWhere`` on the
+affected dates — the batch-function body and all its dataframe logic
+are unchanged, only the four writes at the end swap for MERGE
+statements. The driver holds only the affected-date list (bounded by
+the batch's touched days), never data.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -56,6 +65,7 @@ from commercepulse_data_pipeline_spark.plans.silver import (
     normalize_payments,
     normalize_refunds,
 )
+from commercepulse_data_pipeline_spark.sources import commit
 
 _TABLES = ("orders", "payments", "refunds", "gold")
 
@@ -71,16 +81,14 @@ def upsert_gold_batch(
     backfill) or from ``foreachBatch`` (streaming)."""
     spark = batch_df.sparkSession
     paths = {t: os.path.join(store_dir, t) for t in _TABLES}
+    tables = [(paths[t], paths[t] + ".tmp", paths[t] + ".old") for t in _TABLES]
+    intent = os.path.join(store_dir, "_SWAP.json")
+    # finish or undo a prior batch's interrupted swap before reading: a
+    # missing table would otherwise read as "first batch ever" and be
+    # rebuilt from this batch alone
+    commit.recover_swap(tables, intent=intent)
 
     def load(t: str) -> DataFrame | None:
-        # crash recovery: a prior batch that died between its two swap
-        # renames leaves the table reachable only at <path>.old — adopt it
-        # back (the replayed batch then re-folds against the OLD snapshot,
-        # which the union + re-dedup fold converges from). Without this, a
-        # missing path would read as "first batch ever" and silently
-        # rebuild the table from the new batch alone — data loss.
-        if not os.path.exists(paths[t]) and os.path.exists(paths[t] + ".old"):
-            os.replace(paths[t] + ".old", paths[t])
         return spark.read.parquet(paths[t]) if os.path.exists(paths[t]) else None
 
     batch = batch_df.where(F.col("event_id").isNotNull())
@@ -147,30 +155,11 @@ def upsert_gold_batch(
     else:
         gold = fact
 
-    # write everything against the old snapshot, then swap (gold first is
-    # irrelevant — no swap happens until all four writes are durable)
+    # write all four against the old snapshot, then commit them as one unit
     new_state = {"orders": orders, "payments": payments, "refunds": refunds, "gold": gold}
-    tmps = {}
     for t, df in new_state.items():
-        tmp = f"{paths[t]}.tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        tmps[t] = tmp
-    # swap by RENAME-aside, never rmtree-then-rename: a crash between a
-    # delete and a rename would leave no live copy of the table at all
-    # (the replay would then misread the missing path as "first batch" and
-    # rebuild it from the new batch alone — silent data loss, caught by
-    # tests/test_streaming.py::test_gold_upsert_mid_swap_crash_*). With
-    # renames the table is always reachable at <path> or <path>.old, and
-    # load() adopts a stranded .old back before the next fold.
-    for t, tmp in tmps.items():
-        old = paths[t] + ".old"
-        if os.path.exists(old):
-            shutil.rmtree(old)  # stale backup from a prior crash; path is live
-        if os.path.exists(paths[t]):
-            os.replace(paths[t], old)
-        os.replace(tmp, paths[t])
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        df.write.mode("overwrite").parquet(paths[t] + ".tmp")
+    commit.swap(tables, intent=intent)
 
 
 def maintain_gold_daily_stream(

@@ -26,8 +26,6 @@ batch only; any range quantile reads kilobytes of bucket rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,37 +141,13 @@ def compact_hist_rollup(
     answers every query identically to the uncompacted one (asserted in
     tests, unlike the estimate-preserving-but-lossy MG re-truncation).
     Same marker-file commit protocol as the other streaming stores."""
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        _fold_commit,
-        _recover_index_compact,
-    )
+    from commercepulse_data_pipeline_spark.sources.commit import fold_partitions
 
-    p = store_dir.rstrip("/")
-    _recover_index_compact(p)
-    prefix = "ingest_batch="
-    parts: dict[int, str] = {}
-    for entry in os.listdir(p):
-        if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry)):
-            parts[int(entry[len(prefix):])] = entry
-    real = sorted(v for v in parts if v != -1)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([-1] if -1 in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
     keys = [shard_col, *(group_cols or []), "bin_lo"]
-    merged = (
-        spark.read.parquet(p)
-        .where(F.col("ingest_batch").isin(fold_vals))
-        .groupBy(*keys)
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    cons_name = f"{prefix}-1"
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(p + "._fold_tmp", cons_name)
-    )
-    _fold_commit(p, cons_name, fold_names, -1 in parts)
-    return {
-        "folded": len(fold),
-        "partitions_after": len(parts) - len(fold_vals) + 1,
-    }
+
+    def write(folded, target, _dirs):
+        folded.groupBy(*keys).agg(F.sum("cnt").alias("cnt")).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(target)
+
+    return fold_partitions(spark, store_dir, write, keep_latest=keep_latest)

@@ -94,48 +94,26 @@ def compact_sketch_rollup(
     keep_latest: int = 2,
 ) -> dict:
     """Re-merge the per-batch partial rows to one row per (day, group),
-    via :func:`sources.readers.compact_streaming_index`'s fold protocol —
+    via :func:`sources.commit.fold_partitions`'s fold protocol —
     but with an aggregation step: the consolidated partition holds
     ``hll_union_agg`` of the folded partials (readers are agnostic: they
     union-merge whatever rows exist). ``keep_latest`` batch partitions
     stay untouched for replay safety (same argument as the index stores).
     """
-    import os
+    from commercepulse_data_pipeline_spark.sources.commit import fold_partitions
 
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        _fold_commit,
-        _recover_index_compact,
-    )
-
-    p = store_dir.rstrip("/")
-    _recover_index_compact(p)
-    prefix = "ingest_batch="
-    parts: dict[int, str] = {}
-    for entry in os.listdir(p):
-        if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry)):
-            parts[int(entry[len(prefix):])] = entry
-    real = sorted(v for v in parts if v != -1)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([-1] if -1 in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
     groups = [day_col, *(group_cols or [])]
-    merged = (
-        spark.read.parquet(p)
-        .where(F.col("ingest_batch").isin(fold_vals))
-        .groupBy(*groups)
-        .agg(
-            F.hll_union_agg("key_sketch").alias("key_sketch"),
-            F.sum("n_rows").alias("n_rows"),
+
+    def write(folded, target, _dirs):
+        (
+            folded.groupBy(*groups)
+            .agg(
+                F.hll_union_agg("key_sketch").alias("key_sketch"),
+                F.sum("n_rows").alias("n_rows"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(target)
         )
-    )
-    cons_name = f"{prefix}-1"
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(p + "._fold_tmp", cons_name)
-    )
-    _fold_commit(p, cons_name, fold_names, -1 in parts)
-    return {
-        "folded": len(fold),
-        "partitions_after": len(parts) - len(fold_vals) + 1,
-    }
+
+    return fold_partitions(spark, store_dir, write, keep_latest=keep_latest)

@@ -580,9 +580,8 @@ def test_missing_store_error_classification(spark, tmp_path):
     (markers / "_SUCCESS").write_text("")
     assert is_missing_store_error(FileNotFoundError("x"), str(markers))
     # file:-prefixed roots are normalized before the FS probe
-    assert not is_missing_store_error(
-        FileNotFoundError("x"), f"file:{populated}"
-    )
+    for uri in (f"file:{populated}", f"file://{populated}", f"file://localhost{populated}"):
+        assert not is_missing_store_error(FileNotFoundError("x"), uri)
     # non-file scheme raises loudly instead of degrading to a plain read
     with _pytest.raises(ValueError, match="local-filesystem-only"):
         fold_consistent_read(spark, "s3a://bucket/store")

@@ -2647,7 +2647,8 @@ def test_text_index_build_query_and_append(spark, tmp_path):
         def __getattr__(self, name):  # noqa: D105
             raise AssertionError(f"touched Spark ({name}) for a file: path")
 
-    assert ret.read_text_index_meta(_NoSpark(), f"file://{path}") == meta
+    for uri in (f"file:{path}", f"file://{path}", f"file://localhost{path}"):
+        assert ret.read_text_index_meta(_NoSpark(), uri) == meta
 
     class _Sentinel(Exception):
         pass

@@ -833,21 +833,22 @@ def test_gold_stream_crash_replay_from_checkpoint(spark, landing_dir, tmp_path):
     assert got.count() > 0
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("crash_at", [2, 3])
-def test_gold_upsert_mid_swap_crash_then_replay_converges(
-    spark, landing_dir, tmp_path, monkeypatch, crash_at
-):
-    """The torn-store cases: upsert_gold_batch crashes mid-swap —
-    crash_at=2 between ONE table's two renames (the table is reachable
-    only at <path>.old), crash_at=3 after one table fully swapped with
-    the next renamed aside (mixed old/new snapshot). Replaying the same
-    batch must converge to the batch reference: load() adopts stranded
-    .old dirs back, and the union + re-dedup fold makes re-applied events
-    a no-op. Before the r7 fix the swap was rmtree-then-rename, so the
-    first window DELETED the only live copy of a silver table and the
-    replay silently rebuilt it from the new batch alone."""
-    import os as _os
+# the fold's renames into the store: the swap's intent record, then two
+# per table (live aside, tmp in) for orders, payments, refunds, gold
+_FOLD_STORE_RENAMES = 9
+
+
+@pytest.fixture(scope="module")
+def date_move_fold(spark, tmp_path_factory):
+    """A two-batch fold whose second batch MOVES an order across dates:
+    batch 0 lands o1 late on 2026-01-01 plus o2 on 2026-01-01; batch 1
+    updates o1 to 2026-01-02. Batch 1 is folded once, uninterrupted,
+    into a copy of the batch-0 store, and the store is copied just before
+    each rename or replace into it: copy k is exactly what a crash at
+    rename k leaves on disk. Counting both calls keeps the test
+    independent of which one the commit code uses."""
+    import os
+    import shutil
 
     from commercepulse_data_pipeline_spark.plans.gold import build_fact_order_daily
     from commercepulse_data_pipeline_spark.plans.silver import (
@@ -857,48 +858,82 @@ def test_gold_upsert_mid_swap_crash_then_replay_converges(
     )
     from commercepulse_data_pipeline_spark.sources.readers import ENVELOPE_SCHEMA
     from commercepulse_data_pipeline_spark.streaming import gold_upsert as gu
+    from tests.conftest import _env
 
-    days = sorted(
-        d for d in _os.listdir(landing_dir) if not d.startswith("_")
-    )
-    assert len(days) >= 2
-    read = lambda day: (  # noqa: E731
-        spark.read.schema(ENVELOPE_SCHEMA).json(f"{landing_dir}/{day}/events.jsonl")
-    )
-    store = str(tmp_path / "store")
-    gu.upsert_gold_batch(read(days[0]), store)
+    def order(eid, etype, oid, created_at):
+        return _env(eid, etype, created_at, "vendor_b",
+                    {"order_id": oid, "customerId": "C1", "totalAmount": 100.0,
+                     "state": "confirmed", "created_at": created_at})
 
-    calls = {"n": 0}
-    real_replace = _os.replace
+    def frame(events):
+        names = ENVELOPE_SCHEMA.fieldNames()
+        return spark.createDataFrame([tuple(e.get(n) for n in names) for e in events], ENVELOPE_SCHEMA)
 
-    def flaky(src, dst):
-        if store in str(dst):
-            calls["n"] += 1
-            if calls["n"] == crash_at:
-                raise RuntimeError("injected mid-swap crash")
-        return real_replace(src, dst)
+    batch0 = frame([order("e1", "order_created", "o1", "2026-01-01T23:00:00Z"),
+                    order("e2", "order_created", "o2", "2026-01-01T10:00:00Z")])
+    batch1 = frame([order("e3", "order_updated", "o1", "2026-01-02T01:00:00Z")])
+    root = tmp_path_factory.mktemp("date_move")
+    store = str(root / "store")
+    gu.upsert_gold_batch(batch0, store)
 
-    batch1 = read(days[1])
-    monkeypatch.setattr(gu.os, "replace", flaky)
-    with pytest.raises(RuntimeError, match="mid-swap"):
+    crashed: list[str] = []
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("rename", "replace"):
+            def snapshot(src, dst, *a, _real=getattr(os, name), **kw):
+                if store in str(src) or store in str(dst):
+                    crashed.append(str(root / f"crash{len(crashed) + 1}"))
+                    shutil.copytree(store, crashed[-1])
+                return _real(src, dst, *a, **kw)
+
+            mp.setattr(os, name, snapshot)
         gu.upsert_gold_batch(batch1, store)
-    monkeypatch.undo()
-    assert calls["n"] == crash_at  # the store really is torn
 
-    gu.upsert_gold_batch(batch1, store)  # replay against the torn state
-
-    all_events = (
-        spark.read.schema(ENVELOPE_SCHEMA)
-        .json(f"{landing_dir}/*/events.jsonl")
-        .where(F.col("event_id").isNotNull())
-    )
+    both = batch0.unionByName(batch1)
     expect = build_fact_order_daily(
-        normalize_orders(all_events),
-        normalize_payments(all_events),
-        normalize_refunds(all_events),
+        normalize_orders(both), normalize_payments(both), normalize_refunds(both)
     )
-    got = spark.read.parquet(f"{store}/gold").select(*expect.columns)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
+    return {
+        "store": store,
+        "crashed": crashed,
+        "batch1": batch1,
+        "cols": expect.columns,
+        "expect": sorted(map(tuple, expect.collect())),
+    }
+
+
+def _gold_rows(spark, store, cols):
+    return sorted(map(tuple, spark.read.parquet(f"{store}/gold").select(*cols).collect()))
+
+
+def test_gold_fold_uninterrupted_matches_batch(spark, date_move_fold):
+    import os
+
+    f = date_move_fold
+    assert len(f["crashed"]) == _FOLD_STORE_RENAMES
+    assert _gold_rows(spark, f["store"], f["cols"]) == f["expect"]
+    assert sorted(os.listdir(f["store"])) == ["gold", "orders", "payments", "refunds"]
+
+
+@pytest.mark.parametrize("crash_at", range(1, _FOLD_STORE_RENAMES + 1))
+def test_gold_fold_crash_at_every_store_rename_then_replay_converges(
+    spark, date_move_fold, tmp_path, crash_at
+):
+    """Replay batch 1 on the store a crash at each rename left behind:
+    gold must equal the batch build. A fold whose four tables swap one by
+    one fails here: the replay reads the already-swapped orders, misses
+    o1's old date, and 2026-01-01 keeps order_count 2."""
+    import os
+    import shutil
+
+    from commercepulse_data_pipeline_spark.streaming import gold_upsert as gu
+
+    f = date_move_fold
+    assert crash_at <= len(f["crashed"]), "the fold made fewer renames"
+    store = str(tmp_path / "store")
+    shutil.copytree(f["crashed"][crash_at - 1], store)
+    gu.upsert_gold_batch(f["batch1"], store)
+    assert _gold_rows(spark, store, f["cols"]) == f["expect"]
+    assert sorted(os.listdir(store)) == ["gold", "orders", "payments", "refunds"]
 
 
 @pytest.mark.slow

@@ -2,7 +2,8 @@
 against exact brute-force ground truth, on the real testdata embeddings.
 
 Speed without recall numbers is half a benchmark — this is the "measure,
-don't guess" companion to tools/scale_probe.py for the approximate tier:
+don't guess" companion to the scaling results in SCALE.md for the
+approximate tier:
 
 - sign-LSH buckets (lsh_topk, with and without multiprobe)
 - IVF inverted lists (ivf_topk, nprobe sweep)
