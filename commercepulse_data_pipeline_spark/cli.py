@@ -767,20 +767,21 @@ def cmd_stream_clean_corpus(args) -> int:
     against the persisted MinHash index, keep-first across batches).
     ``--follow`` keeps the query alive; without it the query drains
     what's available and exits."""
-    from commercepulse_data_pipeline_spark.streaming.corpus import stream_clean_corpus
+    from commercepulse_data_pipeline_spark.streaming import batches
+    from commercepulse_data_pipeline_spark.streaming.corpus import clean_corpus_batch
 
     spark = _spark()
-    kwargs = {}
-    if getattr(args, "schema", None):
-        kwargs["schema"] = args.schema
-    q = stream_clean_corpus(
-        spark, args.docs, args.store, args.checkpoint,
+    q = batches.start(
+        batches.drops(spark, args.docs, args.schema),
+        args.checkpoint,
+        lambda df, i: clean_corpus_batch(
+            df, i, args.store,
+            quarantine=args.quarantine,
+            html_col=args.html_col,
+            quality_model_dir=args.quality_model,
+            quality_threshold=args.quality_threshold,
+        ),
         trigger_once=not args.follow,
-        quarantine=bool(getattr(args, "quarantine", False)),
-        html_col=getattr(args, "html_col", None),
-        quality_model_dir=getattr(args, "quality_model", None),
-        quality_threshold=getattr(args, "quality_threshold", 0.0),
-        **kwargs,
     )
     q.awaitTermination()
     print(f"stream-clean-corpus: corpus maintained at {args.store}/corpus")
@@ -795,13 +796,16 @@ def cmd_stream_cluster_table(args) -> int:
     savings / quarantine policy reads the table via `dedup-report`).
     ``--follow`` keeps the query alive; without it the query drains
     what's available and exits."""
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.clusters import (
-        stream_cluster_table,
+        cluster_table_batch,
     )
 
     spark = _spark()
-    q = stream_cluster_table(
-        spark, args.docs, args.store, args.checkpoint,
+    q = batches.start(
+        batches.drops(spark, args.docs, "doc_id long, text string"),
+        args.checkpoint,
+        lambda df, i: cluster_table_batch(df, i, args.store),
         trigger_once=not args.follow,
     )
     q.awaitTermination()
@@ -820,9 +824,10 @@ def cmd_stream_passage_dedup(args) -> int:
     evaluation set's fingerprints so the same stream also decontaminates
     (no canonical survivor for eval passages). ``--follow`` keeps the
     query alive."""
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.passages import (
+        passage_dedup_batch,
         seed_probe_fingerprints,
-        stream_passage_dedup,
     )
 
     spark = _spark()
@@ -833,9 +838,13 @@ def cmd_stream_passage_dedup(args) -> int:
             window_tokens=args.window_tokens,
             min_docs=args.min_docs,
         )
-    q = stream_passage_dedup(
-        spark, args.docs, args.store, args.checkpoint,
-        window_tokens=args.window_tokens, min_docs=args.min_docs,
+    q = batches.start(
+        batches.drops(spark, args.docs, "doc_id long, text string"),
+        args.checkpoint,
+        lambda df, i: passage_dedup_batch(
+            df, i, args.store,
+            window_tokens=args.window_tokens, min_docs=args.min_docs,
+        ),
         trigger_once=not args.follow,
     )
     q.awaitTermination()
@@ -848,14 +857,19 @@ def cmd_stream_dedup_embeddings(args) -> int:
     drops and maintain a semantically-deduplicated store + sign-LSH index
     (the vector twin of ``stream-clean-corpus``; keep-first across
     batches, replay-idempotent). ``--follow`` keeps the query alive."""
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.embeddings import (
-        stream_dedup_embeddings,
+        dedup_embeddings_batch,
     )
 
     spark = _spark()
-    q = stream_dedup_embeddings(
-        spark, args.vectors, args.store, args.checkpoint,
-        tau=args.tau, n_planes=args.n_planes, trigger_once=not args.follow,
+    q = batches.start(
+        batches.drops(spark, args.vectors, "vec_id long, embedding array<float>"),
+        args.checkpoint,
+        lambda df, i: dedup_embeddings_batch(
+            df, i, args.store, tau=args.tau, n_planes=args.n_planes
+        ),
+        trigger_once=not args.follow,
     )
     q.awaitTermination()
     print(f"stream-dedup-embeddings: vector store maintained at {args.store}/vectors")
@@ -1305,18 +1319,23 @@ def cmd_search(args) -> int:
 
 def cmd_stream_text_index(args) -> int:
     """Continuously maintain the BM25 postings store from a directory of
-    document parquet drops (streaming/retrieval.py::stream_text_index —
+    document parquet drops (streaming/retrieval.py::text_index_batch —
     per-batch overwrite partitions, replay-idempotent; serve any time
     with `search --index <store>`)."""
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.retrieval import (
-        stream_text_index,
+        text_index_batch,
     )
 
     spark = _spark()
-    q = stream_text_index(
-        spark, args.docs_path, args.store, args.checkpoint,
-        schema=args.schema, text_col=args.text_col, id_col=args.id_col,
-        n_buckets=args.n_buckets, trigger_once=not args.continuous,
+    q = batches.start(
+        batches.drops(spark, args.docs_path, args.schema),
+        args.checkpoint,
+        lambda df, i: text_index_batch(
+            df, i, args.store,
+            text_col=args.text_col, id_col=args.id_col, n_buckets=args.n_buckets,
+        ),
+        trigger_once=not args.continuous,
     )
     if args.continuous:
         print(f"stream-text-index: running against {args.docs_path} "
@@ -1555,9 +1574,8 @@ def main(argv: list[str] | None = None) -> int:
     sc.add_argument("--quarantine", action="store_true",
                     help="also maintain <store>/quarantine: one (doc_id, "
                          "reason) row per dropped doc per batch")
-    sc.add_argument("--schema", default=None,
-                    help="stream source schema (default "
-                         "'doc_id long, text string'); required when "
+    sc.add_argument("--schema", default="doc_id long, text string",
+                    help="stream source schema; required when "
                          "--html-col names a non-default column")
     sc.add_argument("--html-col", default=None, dest="html_col",
                     help="streaming twin of clean-corpus --html-col: run "

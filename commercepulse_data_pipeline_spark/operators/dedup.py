@@ -26,6 +26,7 @@ from commercepulse_data_pipeline_spark.operators.text import (
     token_ngrams,
     tokens as _tokens,
 )
+from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL, CONSOLIDATED_BATCH
 
 
 # ---------------------------------------------------------------------------
@@ -1124,7 +1125,7 @@ def _append_bands(spark, bands_df: DataFrame, path: str, mode: str) -> None:
     partitioned = False
     if mode == "append":
         try:
-            partitioned = "ingest_batch" in spark.read.parquet(f"{path}/bands").columns
+            partitioned = BATCH_COL in spark.read.parquet(f"{path}/bands").columns
         except Exception as exc:  # noqa: BLE001 — filtered just below
             from commercepulse_data_pipeline_spark.sources.readers import (
                 is_missing_store_error,
@@ -1137,9 +1138,9 @@ def _append_bands(spark, bands_df: DataFrame, path: str, mode: str) -> None:
             partitioned = False  # no bands yet: layout set by this write
     if partitioned:
         (
-            bands_df.withColumn("ingest_batch", F.lit(-1))
+            bands_df.withColumn(BATCH_COL, F.lit(CONSOLIDATED_BATCH))
             .write.mode("append")
-            .partitionBy("ingest_batch")
+            .partitionBy(BATCH_COL)
             .parquet(f"{path}/bands")
         )
     else:

@@ -1513,7 +1513,7 @@ def ivfpq_append(
     the list's partition — O(batch) pure projections, probes stay
     partition-pruned, nothing is rebuilt (the ivf_append / pq_append
     posture applied to the combined index). For an at-least-once
-    STREAMING source use ``streaming/vectors.py::stream_ivfpq_ingest``
+    STREAMING source use ``streaming/vectors.py::ivfpq_ingest_batch``
     instead — a replayed batch through this plain append would
     duplicate its rows."""
     ivfpq_encode_frozen(

@@ -41,6 +41,12 @@ from urllib.parse import urlparse
 # (live, tmp, old) paths of one swapped directory
 Table = tuple[str, str, str]
 
+# A folded store's layout: micro-batch N lands in ``<root>/ingest_batch=N``
+# and a fold consolidates into ``<root>/ingest_batch=-1``, a value no
+# streaming batch id takes.
+BATCH_COL = "ingest_batch"
+CONSOLIDATED_BATCH = -1
+
 
 def local_path(uri: str) -> str | None:
     """The driver-local path of ``uri``, or None when it names another
@@ -183,16 +189,14 @@ def fold_partitions(
     root: str,
     write: Callable,
     *,
-    partition_col: str = "ingest_batch",
-    consolidated_value: int = -1,
     keep_latest: int = 2,
 ) -> dict:
-    """Fold all but the ``keep_latest`` newest ``<partition_col>=N``
+    """Fold all but the ``keep_latest`` newest ``ingest_batch=N``
     partitions of ``root`` (plus any previous consolidated partition)
-    into one ``<partition_col>=<consolidated_value>`` partition.
+    into one ``ingest_batch=-1`` partition.
 
     ``write(folded, target, fold_dirs)`` gets the folded partitions' rows
-    (``partition_col`` still attached), the directory to write the
+    (``ingest_batch`` still attached), the directory to write the
     consolidated partition to, and the folded partition dirs (for
     sizing); it does the store-specific merge and the one parquet write.
     Recovery of an earlier interrupted fold runs first. Returns
@@ -201,23 +205,23 @@ def fold_partitions(
 
     p = root.rstrip("/")
     recover_fold(p)
-    prefix = partition_col + "="
+    prefix = BATCH_COL + "="
     parts = {
         int(entry[len(prefix):]): entry
         for entry in os.listdir(p)
         if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry))
     }
-    real = sorted(v for v in parts if v != consolidated_value)
+    real = sorted(v for v in parts if v != CONSOLIDATED_BATCH)
     fold = real[: len(real) - keep_latest] if keep_latest else real
     if not fold:
         return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([consolidated_value] if consolidated_value in parts else [])
+    fold_vals = fold + ([CONSOLIDATED_BATCH] if CONSOLIDATED_BATCH in parts else [])
     fold_names = [parts[v] for v in fold_vals]
-    cons_name = f"{prefix}{consolidated_value}"
+    cons_name = f"{prefix}{CONSOLIDATED_BATCH}"
     write(
-        spark.read.parquet(p).where(F.col(partition_col).isin(fold_vals)),
+        spark.read.parquet(p).where(F.col(BATCH_COL).isin(fold_vals)),
         os.path.join(p + "._fold_tmp", cons_name),
         [os.path.join(p, name) for name in fold_names],
     )
-    _fold_commit(p, cons_name, fold_names, consolidated_value in parts)
+    _fold_commit(p, cons_name, fold_names, CONSOLIDATED_BATCH in parts)
     return {"folded": len(fold), "partitions_after": len(parts) - len(fold_vals) + 1}

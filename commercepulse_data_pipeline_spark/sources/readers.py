@@ -497,13 +497,7 @@ def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
     return all(e.startswith("_") for e in entries)
 
 
-def fold_consistent_read(
-    spark: SparkSession,
-    root: str,
-    *,
-    partition_col: str = "ingest_batch",
-    consolidated_value: int = -1,
-) -> DataFrame:
+def fold_consistent_read(spark: SparkSession, root: str) -> DataFrame:
     """READ-SIDE contract for the streaming sketch/index stores: return a
     CONSISTENT view of the store at every resting point of the fold
     protocol, so a monitoring job can probe concurrently with compaction
@@ -552,15 +546,15 @@ def fold_consistent_read(
         )
     p = root.rstrip("/")
     old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    cons_name = f"{partition_col}={consolidated_value}"
+    cons_name = f"{commit.BATCH_COL}={commit.CONSOLIDATED_BATCH}"
     m = commit.read_marker(_os.path.join(old_root, "_FOLDED.json"))
 
     def _part_df(path: str, value: int) -> DataFrame:
         return spark.read.parquet(path).withColumn(
-            partition_col, F.lit(value).cast("int")
+            commit.BATCH_COL, F.lit(value).cast("int")
         )
 
-    prefix = partition_col + "="
+    prefix = commit.BATCH_COL + "="
     if m is not None:
         # post-commit: roll-forward view. TWO plan branches regardless of
         # how many batch partitions exist (a per-partition union would
@@ -578,7 +572,7 @@ def fold_consistent_read(
             if _os.path.isdir(cons_at_root)
             else _os.path.join(tmp_root, m["consolidated"])
         )
-        cons_df = _part_df(cons_path, consolidated_value)
+        cons_df = _part_df(cons_path, commit.CONSOLIDATED_BATCH)
         live = [
             entry
             for entry in _os.listdir(p)
@@ -590,8 +584,8 @@ def fold_consistent_read(
         if not live:
             return cons_df
         rest = spark.read.parquet(p).where(
-            ~F.col(partition_col).isin(
-                folded_vals + [consolidated_value]
+            ~F.col(commit.BATCH_COL).isin(
+                folded_vals + [commit.CONSOLIDATED_BATCH]
             )
         )
         return rest.unionByName(cons_df)
@@ -599,7 +593,7 @@ def fold_consistent_read(
         # pre-commit: roll-back view (set-aside consolidated + everything
         # still at root) — again two branches
         cons_df = _part_df(
-            _os.path.join(old_root, cons_name), consolidated_value
+            _os.path.join(old_root, cons_name), commit.CONSOLIDATED_BATCH
         )
         has_root_parts = any(
             entry.startswith(prefix)
@@ -616,8 +610,6 @@ def compact_streaming_index(
     spark: SparkSession,
     root: str,
     *,
-    partition_col: str = "ingest_batch",
-    consolidated_value: int = -1,
     keep_latest: int = 2,
     target_file_mb: int = 128,
     sub_partition_col: str | None = None,
@@ -630,8 +622,9 @@ def compact_streaming_index(
     single consolidated partition (``ingest_batch=-1``, a value no real
     batch id takes), rewritten at ~``target_file_mb`` per file.
 
-    Replay safety: the foreachBatch sinks exclude ``ingest_batch ==
-    batch_id`` when probing the index, and a checkpoint restart replays
+    Replay safety: the foreachBatch sinks probe the index through
+    ``streaming.batches.prior``, which excludes ``ingest_batch ==
+    batch_id``, and a checkpoint restart replays
     only the single uncommitted batch — so ``keep_latest >= 2`` guarantees
     a replayed batch's own partition is never folded out from under it.
     ``sub_partition_col`` preserves an inner layout (the embedding lists'
@@ -655,7 +648,7 @@ def compact_streaming_index(
     def write(folded, target, fold_dirs):
         fold_bytes = sum(_os.path.getsize(f) for d in fold_dirs for f in _data_files(d))
         n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
-        df = folded.drop(partition_col)
+        df = folded.drop(commit.BATCH_COL)
         if sub_partition_col:
             writer = df.repartition(n_out, sub_partition_col).write.partitionBy(
                 sub_partition_col
@@ -664,12 +657,7 @@ def compact_streaming_index(
             writer = df.repartition(n_out).write
         writer.mode("overwrite").parquet(target)
 
-    stats = commit.fold_partitions(
-        spark, root, write,
-        partition_col=partition_col,
-        consolidated_value=consolidated_value,
-        keep_latest=keep_latest,
-    )
+    stats = commit.fold_partitions(spark, root, write, keep_latest=keep_latest)
     return {**stats, "files_after": len(_data_files(root)) if stats["folded"] else None}
 
 

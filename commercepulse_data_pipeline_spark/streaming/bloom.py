@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.operators.sketches import build_bloom_rollup
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def bloom_rollup_batch(
@@ -43,45 +44,13 @@ def bloom_rollup_batch(
     """Fold one micro-batch into the store: THIS batch's bit rows only,
     landed under the batch's own partition (replay-idempotent
     overwrite)."""
-    build_bloom_rollup(
-        batch_df, shard_col=shard_col, key_col=key_col, m_bits=m_bits, k=k
-    ).write.mode("overwrite").parquet(f"{store_dir}/ingest_batch={batch_id}")
-
-
-def stream_bloom_rollup(
-    spark: SparkSession,
-    events_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "day string, user_id long",
-    shard_col: str = "day",
-    key_col: str = "user_id",
-    m_bits: int = 1 << 16,
-    k: int = 4,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of event parquet drops and maintain the membership
-    filters continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
+    batches.write(
+        build_bloom_rollup(
+            batch_df, shard_col=shard_col, key_col=key_col, m_bits=m_bits, k=k
+        ),
+        store_dir,
+        batch_id,
     )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_rollup_batch(
-            batch_df, batch_id, store_dir,
-            shard_col=shard_col, key_col=key_col, m_bits=m_bits, k=k,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_bloom_rollup(

@@ -40,13 +40,13 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from commercepulse_data_pipeline_spark.operators import dedup as dd
 from commercepulse_data_pipeline_spark.operators import graph
+from commercepulse_data_pipeline_spark.streaming import batches
 from commercepulse_data_pipeline_spark.streaming.corpus import DEFAULT_PARAMS
 
 
@@ -75,27 +75,11 @@ def cluster_table_batch(
     )
 
     bands_root = f"{store_dir}/index/bands"
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
-
-    try:
-        idx = fold_consistent_read(spark, bands_root)
-        have_index = True
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, bands_root):
-            # a transient error is not "first batch": skipping the probe
-            # would permanently miss this batch's cross-batch near-dups
-            raise
-        have_index = False
-    if have_index:
-        # REPLAY SAFETY: exclude this batch's own partition — a replayed
-        # batch otherwise pairs against its first attempt's bands (the
-        # streaming/corpus.py self-review finding; here it would merely
-        # duplicate pairs, which the fold tolerates, but the exclusion
-        # keeps the pair set bit-identical across replays)
-        idx = idx.where(F.col("ingest_batch") != F.lit(batch_id))
+    # without its own partition, a replayed batch's pair set stays
+    # bit-identical (pairing against its first attempt's bands would only
+    # duplicate pairs, which the fold tolerates)
+    idx = batches.prior(spark, bands_root, batch_id)
+    if idx is not None:
         vs_index = dd.minhash_pairs_between(
             batch_df, idx, "text", "doc_id",
             max_bucket=max_bucket, new_bands=batch_bands, **p,
@@ -112,46 +96,9 @@ def cluster_table_batch(
             provenance=dict(p, blocker="minhash", max_bucket=max_bucket),
         )
 
-    batch_bands.write.mode("overwrite").parquet(
-        f"{bands_root}/ingest_batch={batch_id}"
-    )
+    batches.write(batch_bands, bands_root, batch_id)
     # same sidecar as write_minhash_index: {store}/index is a full index
     meta = dict(p, id_col="doc_id", text_col="text")
     one_slice_df(
         spark, [(json.dumps(sorted(meta.items())),)], "meta string"
     ).write.mode("overwrite").json(f"{store_dir}/index/meta")
-
-
-def stream_cluster_table(
-    spark: SparkSession,
-    docs_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "doc_id long, text string",
-    params: dict | None = None,
-    max_bucket: int = 1000,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of document parquet drops and maintain the
-    corpus's near-dup cluster table continuously. Returns the started
-    query; read the state with ``graph.read_cluster_table(spark,
-    f"{store_dir}/clusters")`` at any point."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        cluster_table_batch(
-            batch_df, batch_id, store_dir, params=params, max_bucket=max_bucket
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -31,13 +31,14 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from commercepulse_data_pipeline_spark.operators import dedup as dd
 from commercepulse_data_pipeline_spark.operators import text as tx
+from commercepulse_data_pipeline_spark.streaming import batches
 
 DEFAULT_PARAMS = {"num_hashes": 8, "bands": 4, "shingle_n": 3}
 
@@ -152,35 +153,13 @@ def clean_corpus_batch(
     drop = within
     # Fold-aware read: compact_streaming_index's pre-commit window would
     # otherwise HIDE the consolidated bands partition — a silently missed
-    # near-dup, the worst failure mode for a dedup index. The fold
-    # protocol (and this reader) is driver-local by construction;
-    # fold_consistent_read RAISES on non-file schemes rather than
-    # silently disabling cross-batch dedup (the r9 self-review finding,
-    # closed by the ADVICE r9 scheme guard).
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-    )
-
-    try:
-        idx = fold_consistent_read(spark, bands_root)
-        have_index = True
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        from commercepulse_data_pipeline_spark.sources.readers import (
-            is_missing_store_error,
-        )
-
-        if not is_missing_store_error(exc, bands_root):
-            # a transient error is not "first batch": skipping the index
-            # probe would permanently keep cross-batch near-dups
-            raise
-        have_index = False  # PATH_NOT_FOUND: genuinely the first batch
-    if have_index:
-        # REPLAY SAFETY: exclude this batch's own partition. A replayed
-        # batch otherwise sees its first attempt's bands as "indexed",
-        # every within-batch near-dup pair comes back as a cross-batch
-        # pair, BOTH members get dropped, and the overwrite erases the
-        # doc the first attempt kept (self-review finding).
-        idx = idx.where(F.col("ingest_batch") != F.lit(batch_id))
+    # near-dup, the worst failure mode for a dedup index. Without its own
+    # partition: a replayed batch would otherwise see its first attempt's
+    # bands as "indexed", every within-batch near-dup pair would come back
+    # as a cross-batch pair, BOTH members would be dropped, and the
+    # overwrite would erase the doc the first attempt kept.
+    idx = batches.prior(spark, bands_root, batch_id)
+    if idx is not None:
         # cross-batch: the INDEXED copy survives; the arriving dup drops.
         # Pairs come back normalized (id_a < id_b), so "the batch side"
         # is whichever member is in this batch — the other member is an
@@ -243,22 +222,16 @@ def clean_corpus_batch(
         kept = kept.join(keep_ids, "doc_id", "left_semi")
 
     # idempotent two-sink write: both land under this batch's directory
-    kept.write.mode("overwrite").parquet(
-        f"{store_dir}/corpus/ingest_batch={batch_id}"
-    )
+    batches.write(kept, f"{store_dir}/corpus", batch_id)
     if quarantine:
         from functools import reduce as _reduce
 
         qdf = _reduce(DataFrame.unionByName, rejects)
-        qdf.write.mode("overwrite").parquet(
-            f"{store_dir}/quarantine/ingest_batch={batch_id}"
-        )
+        batches.write(qdf, f"{store_dir}/quarantine", batch_id)
     kept_bands = batch_bands.join(
         F.broadcast(kept.select("doc_id")), "doc_id", "left_semi"
     )
-    kept_bands.write.mode("overwrite").parquet(
-        f"{bands_root}/ingest_batch={batch_id}"
-    )
+    batches.write(kept_bands, bands_root, batch_id)
     # same sidecar format as write_minhash_index, so {store}/index is a
     # full-fledged index: minhash_pairs_incremental can read it directly.
     # Written unconditionally — params are constant for a query, so the
@@ -267,53 +240,3 @@ def clean_corpus_batch(
     one_slice_df(
         spark, [(json.dumps(sorted(meta.items())),)], "meta string"
     ).write.mode("overwrite").json(f"{store_dir}/index/meta")
-
-
-def stream_clean_corpus(
-    spark: SparkSession,
-    docs_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "doc_id long, text string",
-    params: dict | None = None,
-    max_bucket: int = 1000,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-    strip_repeats: bool = False,
-    repeat_window: int = 8,
-    min_repeats: int = 2,
-    min_remaining_tokens: int = 1,
-    quarantine: bool = False,
-    html_col: str | None = None,
-    quality_model_dir: str | None = None,
-    quality_threshold: float = 0.0,
-):
-    """Tail a directory of document parquet drops and maintain a cleaned,
-    near-dup-free corpus continuously. Returns the started query.
-    ``quarantine`` also maintains ``{store}/quarantine`` — one
-    (doc_id, reason) row per dropped doc per batch; ``html_col`` /
-    ``quality_model_dir`` are the streaming twins of the CLI's
-    --html-col / --quality-model (see :func:`clean_corpus_batch`)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        clean_corpus_batch(
-            batch_df, batch_id, store_dir, params=params, max_bucket=max_bucket,
-            strip_repeats=strip_repeats, repeat_window=repeat_window,
-            min_repeats=min_repeats, min_remaining_tokens=min_remaining_tokens,
-            quarantine=quarantine, html_col=html_col,
-            quality_model_dir=quality_model_dir,
-            quality_threshold=quality_threshold,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

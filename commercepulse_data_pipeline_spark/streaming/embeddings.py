@@ -56,6 +56,7 @@ from commercepulse_data_pipeline_spark.operators.similarity import (
     lsh_bucket,
     random_hyperplanes,
 )
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def _read_or_create_planes(
@@ -133,26 +134,8 @@ def dedup_embeddings_batch(
     drop = within
 
     lists_root = f"{store_dir}/index/lists"
-    # fold-aware read (same rationale as streaming/corpus.py: a mid-fold
-    # crash must not hide the consolidated lists from the dedup probe)
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
-
-    try:
-        idx = fold_consistent_read(spark, lists_root)
-        have_index = True
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, lists_root):
-            # a transient error is not "first batch": skipping the index
-            # probe would permanently keep cross-batch near-dups
-            raise
-        have_index = False  # PATH_NOT_FOUND: genuinely the first batch
-    if have_index:
-        # REPLAY SAFETY: exclude this batch's own partition (see module
-        # docstring) — a replayed batch must not dedup against itself.
-        idx = idx.where(F.col("ingest_batch") != F.lit(batch_id))
+    idx = batches.prior(spark, lists_root, batch_id)
+    if idx is not None:
         probe = F.broadcast(b.select("lsh_bucket").distinct())
         cand = idx.join(probe, "lsh_bucket", "left_semi")
         from pyspark.sql import Window
@@ -186,46 +169,5 @@ def dedup_embeddings_batch(
         drop = drop.union(arriving)
 
     kept = b.join(drop.distinct(), id_col, "left_anti")
-    kept.drop("lsh_bucket").write.mode("overwrite").parquet(
-        f"{store_dir}/vectors/ingest_batch={batch_id}"
-    )
-    kept.write.mode("overwrite").partitionBy("lsh_bucket").parquet(
-        f"{lists_root}/ingest_batch={batch_id}"
-    )
-
-
-def stream_dedup_embeddings(
-    spark: SparkSession,
-    vectors_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "vec_id long, embedding array<float>",
-    tau: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 42,
-    max_bucket: int = 1000,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of embedding parquet drops and maintain a
-    semantically-deduplicated vector store + LSH index continuously.
-    Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(vectors_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_embeddings_batch(
-            batch_df, batch_id, store_dir,
-            tau=tau, n_planes=n_planes, seed=seed, max_bucket=max_bucket,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    batches.write(kept.drop("lsh_bucket"), f"{store_dir}/vectors", batch_id)
+    batches.write(kept, lists_root, batch_id, "lsh_bucket")

@@ -48,6 +48,7 @@ from commercepulse_data_pipeline_spark.operators.sketches import (
     build_mg_summary,
     merge_mg_summaries,
 )
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def _unified(items: DataFrame, shards: DataFrame, item_col: str) -> DataFrame:
@@ -86,44 +87,11 @@ def mg_rollup_batch(
     items, shards = build_mg_summary(
         tagged, shard_col="__shard", item_col=item_col, capacity=capacity
     )
-    _unified(
-        items.drop("__shard"), shards.drop("__shard"), item_col
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{store_dir}/ingest_batch={batch_id}"
+    batches.write(
+        _unified(items.drop("__shard"), shards.drop("__shard"), item_col).coalesce(1),
+        store_dir,
+        batch_id,
     )
-
-
-def stream_mg_rollup(
-    spark: SparkSession,
-    events_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "token string",
-    item_col: str = "token",
-    capacity: int = 64,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of parquet drops and maintain the frequent-items
-    rollup continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        mg_rollup_batch(
-            batch_df, batch_id, store_dir, item_col=item_col, capacity=capacity
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def heavy_hitters_from_store(

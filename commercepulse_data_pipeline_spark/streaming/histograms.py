@@ -33,6 +33,8 @@ from commercepulse_data_pipeline_spark.operators.sketches import (
     log2_hist_sketch,
     merge_hist_quantiles,
 )
+from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def hist_rollup_batch(
@@ -48,52 +50,17 @@ def hist_rollup_batch(
     """Fold one micro-batch into the rollup store: bin THIS batch's rows
     only, land under the batch's own partition (replay-idempotent
     overwrite)."""
-    log2_hist_sketch(
-        batch_df,
-        value_col,
-        shard_col=shard_col,
-        group_cols=group_cols,
-        sub_bits=sub_bits,
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{store_dir}/ingest_batch={batch_id}"
+    batches.write(
+        log2_hist_sketch(
+            batch_df,
+            value_col,
+            shard_col=shard_col,
+            group_cols=group_cols,
+            sub_bits=sub_bits,
+        ).coalesce(1),
+        store_dir,
+        batch_id,
     )
-
-
-def stream_hist_rollup(
-    spark: SparkSession,
-    events_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str,
-    value_col: str,
-    shard_col: str,
-    group_cols: list[str] | None = None,
-    sub_bits: int = 6,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of parquet drops and maintain the histogram
-    rollup continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        hist_rollup_batch(
-            batch_df, batch_id, store_dir,
-            value_col=value_col, shard_col=shard_col,
-            group_cols=group_cols, sub_bits=sub_bits,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quantiles_from_store(
@@ -119,7 +86,7 @@ def quantiles_from_store(
         fold_consistent_read,
     )
 
-    hist = fold_consistent_read(spark, store_dir).drop("ingest_batch")
+    hist = fold_consistent_read(spark, store_dir).drop(BATCH_COL)
     if shard_filter is not None:
         hist = hist.where(shard_filter)
     return merge_hist_quantiles(

@@ -33,6 +33,7 @@ from commercepulse_data_pipeline_spark.operators.sketches import (
     build_kmv_rollup,
     kmv_truncate,
 )
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def kmv_rollup_batch(
@@ -47,43 +48,11 @@ def kmv_rollup_batch(
     """Fold one micro-batch into the sketch store: sketch THIS batch's
     rows only, land under the batch's own partition (replay-idempotent
     overwrite)."""
-    build_kmv_rollup(batch_df, set_col=set_col, key_col=key_col, k=k).write.mode(
-        "overwrite"
-    ).parquet(f"{store_dir}/ingest_batch={batch_id}")
-
-
-def stream_kmv_rollup(
-    spark: SparkSession,
-    events_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "event_type string, ukey string",
-    set_col: str = "event_type",
-    key_col: str = "ukey",
-    k: int = 128,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of parquet drops and maintain the KMV store
-    continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
+    batches.write(
+        build_kmv_rollup(batch_df, set_col=set_col, key_col=key_col, k=k),
+        store_dir,
+        batch_id,
     )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_rollup_batch(
-            batch_df, batch_id, store_dir, set_col=set_col, key_col=key_col, k=k
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def kmv_sketches_from_store(

@@ -24,13 +24,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from commercepulse_data_pipeline_spark.multimodal import (
     FEATURE_SCHEMA,
     DeterministicFakeDecoder,
     _chunked,
 )
+from commercepulse_data_pipeline_spark.streaming import batches
 
 # fresh StructType — StructType.add MUTATES its receiver, which would
 # corrupt the shared batch-path FEATURE_SCHEMA
@@ -100,43 +101,11 @@ def media_features_batch(
 ) -> None:
     """Featurize one micro-batch and land it under its own partition
     (replay-idempotent overwrite)."""
-    extract_features_tolerant(
-        batch_df, decoder=decoder, batch_rows=batch_rows
-    ).write.mode("overwrite").parquet(f"{store_dir}/ingest_batch={batch_id}")
-
-
-def stream_media_features(
-    spark: SparkSession,
-    media_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "media_id string, modality string, content binary",
-    decoder=DeterministicFakeDecoder.decode,
-    batch_rows: int = 64,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of media parquet drops (binary ``content``
-    column) and maintain the feature store continuously. Returns the
-    started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(media_path)
+    batches.write(
+        extract_features_tolerant(batch_df, decoder=decoder, batch_rows=batch_rows),
+        store_dir,
+        batch_id,
     )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        media_features_batch(
-            batch_df, batch_id, store_dir, decoder=decoder, batch_rows=batch_rows
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def image_hash_batch(
@@ -182,10 +151,6 @@ def image_hash_batch(
         image_ahash,
     )
     from commercepulse_data_pipeline_spark.operators import dedup as dd
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
 
     from pyspark.sql import functions as F
 
@@ -215,15 +180,8 @@ def image_hash_batch(
         hamming_threshold=hamming_threshold, max_bucket=max_bucket,
     )
     hash_root = f"{store_dir}/hashes"
-    try:
-        idx = fold_consistent_read(spark, hash_root)
-        have_index = True
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, hash_root):
-            raise  # transient != first batch: a skipped probe loses dups
-        have_index = False
-    if have_index:
-        idx = idx.where(F.col("ingest_batch") != F.lit(batch_id))
+    idx = batches.prior(spark, hash_root, batch_id)
+    if idx is not None:
         idx_sigs = idx.where(F.col(sig_col).isNotNull()).select(
             "media_id", F.col(sig_col).alias("sig")
         )
@@ -255,58 +213,8 @@ def image_hash_batch(
                     "max_bucket": max_bucket,
                 },
             )
-    pairs.write.mode("overwrite").parquet(
-        f"{store_dir}/pairs/ingest_batch={batch_id}"
-    )
-    hashes.write.mode("overwrite").parquet(
-        f"{hash_root}/ingest_batch={batch_id}"
-    )
-
-
-def stream_image_hash_index(
-    spark: SparkSession,
-    media_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "media_id string, content binary",
-    hamming_threshold: int = 6,
-    sig_col: str = "ahash",
-    max_bucket: int = 1000,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-    cluster: bool = False,
-    modality: str = "image",
-    drop_degenerate: bool = True,
-):
-    """Tail a directory of media parquet drops and maintain the
-    perceptual-hash store + continuous near-dup pair stream. Returns the
-    started query; ``{store}/pairs`` is the policy-free match feed.
-    ``cluster=True`` additionally folds each batch's pairs into the
-    persisted cluster table at ``{store}/clusters``;
-    ``modality="audio"`` (r14) swaps in the gain-invariant audio
-    energy-envelope hash — the store/probe/pair/cluster plumbing is
-    signature-agnostic (see :func:`image_hash_batch`)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(media_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        image_hash_batch(
-            batch_df, batch_id, store_dir,
-            hamming_threshold=hamming_threshold, sig_col=sig_col,
-            max_bucket=max_bucket, cluster=cluster, modality=modality,
-            drop_degenerate=drop_degenerate,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    batches.write(pairs, f"{store_dir}/pairs", batch_id)
+    batches.write(hashes, hash_root, batch_id)
 
 
 def video_hash_batch(
@@ -339,12 +247,6 @@ def video_hash_batch(
         video_neardup_pairs_between,
     )
     from commercepulse_data_pipeline_spark.operators import dedup as dd
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
-
-    from pyspark.sql import functions as F
 
     spark = batch_df.sparkSession
     frames = video_frame_hashes(
@@ -362,15 +264,8 @@ def video_hash_batch(
         min_match_frac=min_match_frac, max_bucket=max_bucket,
     )
     frames_root = f"{store_dir}/frames"
-    try:
-        idx = fold_consistent_read(spark, frames_root)
-        have_index = True
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, frames_root):
-            raise
-        have_index = False
-    if have_index:
-        idx = idx.where(F.col("ingest_batch") != F.lit(batch_id))
+    idx = batches.prior(spark, frames_root, batch_id)
+    if idx is not None:
         if drop_degenerate:
             idx = dd.drop_degenerate_sigs(idx, sig_col="ahash")
         vs_index = video_neardup_pairs_between(
@@ -400,51 +295,5 @@ def video_hash_batch(
                     "max_frames": max_frames,
                 },
             )
-    pairs.write.mode("overwrite").parquet(
-        f"{store_dir}/pairs/ingest_batch={batch_id}"
-    )
-    frames.write.mode("overwrite").parquet(
-        f"{frames_root}/ingest_batch={batch_id}"
-    )
-
-
-def stream_video_hash_index(
-    spark: SparkSession,
-    media_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "media_id string, content binary",
-    hamming_threshold: int = 4,
-    min_match_frac: float = 0.5,
-    max_frames: int = 16,
-    max_bucket: int = 1000,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-    cluster: bool = False,
-    drop_degenerate: bool = True,
-):
-    """Tail a directory of video parquet drops and maintain the
-    per-frame signature index + continuous containment-pair feed —
-    the video sibling of :func:`stream_image_hash_index`."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(media_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        video_hash_batch(
-            batch_df, batch_id, store_dir,
-            hamming_threshold=hamming_threshold,
-            min_match_frac=min_match_frac, max_frames=max_frames,
-            max_bucket=max_bucket, cluster=cluster,
-            drop_degenerate=drop_degenerate,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    batches.write(pairs, f"{store_dir}/pairs", batch_id)
+    batches.write(frames, frames_root, batch_id)

@@ -12,7 +12,7 @@ fingerprint space is not watermarkable):
    duplicated when (docs already indexed) + (distinct docs in this
    batch) ≥ ``min_docs``. If the index already holds the fingerprint,
    its canonical occurrence lives in an EARLIER batch (keep-first, the
-   same retention discipline as ``stream_clean_corpus``) and every batch
+   same retention discipline as ``clean_corpus_batch``) and every batch
    occurrence is spliced; otherwise the smallest (doc_id, position) in
    the batch survives — so a corpus arriving in one batch reproduces the
    batch operator exactly;
@@ -40,11 +40,12 @@ batch's distinct fingerprints, uniformly md5-partitioned.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.functions.expr import let
 from commercepulse_data_pipeline_spark.operators.text import token_ngrams, tokens
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def passage_dedup_batch(
@@ -61,10 +62,6 @@ def passage_dedup_batch(
     passages duplicated within the batch or against the accumulated
     fingerprint index, append rewritten docs + this batch's fingerprint
     counts under the batch's own directories."""
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-    )
-
     spark = batch_df.sparkSession
     w = window_tokens
     fp_root = f"{store_dir}/fp_index"
@@ -86,30 +83,13 @@ def passage_dedup_batch(
         F.countDistinct("__doc").alias("__n_batch"),
         F.min(F.struct("__doc", "__pos")).alias("__canon"),
     )
-    try:
-        idx = (
-            fold_consistent_read(spark, fp_root)
-            # REPLAY SAFETY: a replayed batch must not see its own first
-            # attempt's fingerprints as "indexed" — every within-batch
-            # canonical would turn into a cross-batch dup and the
-            # overwrite would splice docs the first attempt kept intact
-            .where(F.col("ingest_batch") != F.lit(batch_id))
-            .groupBy("fp")
-            .agg(F.sum("n_docs").alias("__n_idx"))
-        )
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        from commercepulse_data_pipeline_spark.sources.readers import (
-            is_missing_store_error,
-        )
-
-        if not is_missing_store_error(exc, fp_root):
-            # a transient listing/schema error is NOT "first batch":
-            # swallowing it would skip cross-batch dedup, land the batch
-            # unspliced permanently, and still append its fingerprints.
-            # Fail the batch so the stream retries it (ADVICE r9).
-            raise
-        idx = None  # PATH_NOT_FOUND: genuinely the first batch
+    # without its own partition: a replayed batch must not see its first
+    # attempt's fingerprints as "indexed" — every within-batch canonical
+    # would turn into a cross-batch dup and the overwrite would splice
+    # docs the first attempt kept intact
+    idx = batches.prior(spark, fp_root, batch_id)
     if idx is not None:
+        idx = idx.groupBy("fp").agg(F.sum("n_docs").alias("__n_idx"))
         stats = stats.join(
             idx.select(F.col("fp").alias("__fp"), "__n_idx"), "__fp", "left"
         )
@@ -152,12 +132,14 @@ def passage_dedup_batch(
             "n_tokens_removed"
         ),
     )
-    out.write.mode("overwrite").parquet(
-        f"{store_dir}/corpus/ingest_batch={batch_id}"
+    batches.write(out, f"{store_dir}/corpus", batch_id)
+    batches.write(
+        occ.groupBy(F.col("__fp").alias("fp")).agg(
+            F.countDistinct("__doc").alias("n_docs")
+        ),
+        fp_root,
+        batch_id,
     )
-    occ.groupBy(F.col("__fp").alias("fp")).agg(
-        F.countDistinct("__doc").alias("n_docs")
-    ).write.mode("overwrite").parquet(f"{fp_root}/ingest_batch={batch_id}")
 
 
 def seed_probe_fingerprints(
@@ -181,56 +163,14 @@ def seed_probe_fingerprints(
         token_ngrams(tokens(F.col(text_col)), window_tokens),
         lambda g: F.md5(g),
     )
-    (
+    batches.write(
         probes.select(F.explode_outer(fps).alias("fp"))
         .where(F.col("fp").isNotNull())
         .distinct()
-        .withColumn("n_docs", F.lit(min_docs).cast("long"))
-        .write.mode("overwrite")
-        .parquet(f"{store_dir}/fp_index/ingest_batch=-2")
+        .withColumn("n_docs", F.lit(min_docs).cast("long")),
+        f"{store_dir}/fp_index",
+        -2,
     )
-
-
-def stream_passage_dedup(
-    spark: SparkSession,
-    docs_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "doc_id long, text string",
-    doc_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 8,
-    min_docs: int = 2,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of document parquet drops and maintain a
-    passage-deduplicated corpus continuously. Returns the started
-    query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        passage_dedup_batch(
-            batch_df,
-            batch_id,
-            store_dir,
-            doc_col=doc_col,
-            text_col=text_col,
-            window_tokens=window_tokens,
-            min_docs=min_docs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def boilerplate_strip_batch(
@@ -259,11 +199,6 @@ def boilerplate_strip_batch(
     ``strip_boilerplate`` as a batch job. Same store layout, replay
     safety (own-partition exclusion + batch-dir overwrite) and
     fold-aware index reads as the passage store."""
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
-
     spark = batch_df.sparkSession
     w = window_tokens
     fp_root = f"{store_dir}/fp_index"
@@ -287,20 +222,9 @@ def boilerplate_strip_batch(
     stats = occ.groupBy("__scope", "__fp").agg(
         F.countDistinct("__doc").alias("__n_batch")
     )
-    try:
-        idx = (
-            fold_consistent_read(spark, fp_root)
-            # REPLAY SAFETY: own-partition exclusion, as in
-            # passage_dedup_batch
-            .where(F.col("ingest_batch") != F.lit(batch_id))
-            .groupBy("scope", "fp")
-            .agg(F.sum("n_docs").alias("__n_idx"))
-        )
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, fp_root):
-            raise
-        idx = None  # PATH_NOT_FOUND: genuinely the first batch
+    idx = batches.prior(spark, fp_root, batch_id)
     if idx is not None:
+        idx = idx.groupBy("scope", "fp").agg(F.sum("n_docs").alias("__n_idx"))
         stats = stats.join(
             idx.select(
                 F.col("scope").alias("__scope"),
@@ -341,55 +265,11 @@ def boilerplate_strip_batch(
             "n_tokens_removed"
         ),
     )
-    out.write.mode("overwrite").parquet(
-        f"{store_dir}/corpus/ingest_batch={batch_id}"
+    batches.write(out, f"{store_dir}/corpus", batch_id)
+    batches.write(
+        occ.groupBy(
+            F.col("__scope").alias("scope"), F.col("__fp").alias("fp")
+        ).agg(F.countDistinct("__doc").alias("n_docs")),
+        fp_root,
+        batch_id,
     )
-    occ.groupBy(
-        F.col("__scope").alias("scope"), F.col("__fp").alias("fp")
-    ).agg(F.countDistinct("__doc").alias("n_docs")).write.mode(
-        "overwrite"
-    ).parquet(f"{fp_root}/ingest_batch={batch_id}")
-
-
-def stream_boilerplate_strip(
-    spark: SparkSession,
-    docs_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "doc_id long, source string, text string",
-    doc_col: str = "doc_id",
-    text_col: str = "text",
-    scope_col: str = "source",
-    window_tokens: int = 8,
-    min_docs: int = 2,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of document parquet drops and maintain a
-    boilerplate-stripped corpus continuously. Returns the started
-    query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        boilerplate_strip_batch(
-            batch_df,
-            batch_id,
-            store_dir,
-            doc_col=doc_col,
-            text_col=text_col,
-            scope_col=scope_col,
-            window_tokens=window_tokens,
-            min_docs=min_docs,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,6 +1,6 @@
 """Continuous inverted-index ingest — the streaming sibling of
 ``operators/retrieval.py::write_text_index`` (the same discipline as
-``streaming/media.py::stream_image_hash_index``): tail a directory of
+``streaming/media.py::image_hash_batch``): tail a directory of
 document parquet drops and maintain a BM25-servable postings store.
 
 Store layout (what ``bm25_topk_indexed`` reads when no batch-mode
@@ -33,12 +33,13 @@ exactly as a corpus containing both copies would. Dedup belongs upstream
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from ..operators.retrieval import _corpus_stats, _postings_from_staged, _staged_rle
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def text_index_batch(
@@ -67,56 +68,18 @@ def text_index_batch(
     spark = batch_df.sparkSession
     staged = _staged_rle(batch_df, text_col).localCheckpoint(eager=True)
     stats_row = _corpus_stats(staged)
-    one_slice_df(
-        spark,
-        [(int(stats_row["n"]), int(stats_row["s"]), n_buckets, id_col)],
-        "n long, s long, n_buckets int, id_col string",
-    ).write.mode("overwrite").parquet(
-        f"{store_dir}/stats/ingest_batch={batch_id}"
+    batches.write(
+        one_slice_df(
+            spark,
+            [(int(stats_row["n"]), int(stats_row["s"]), n_buckets, id_col)],
+            "n long, s long, n_buckets int, id_col string",
+        ),
+        f"{store_dir}/stats",
+        batch_id,
     )
-    _postings_from_staged(staged, id_col, n_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(
-        f"{store_dir}/postings/ingest_batch={batch_id}"
+    batches.write(
+        _postings_from_staged(staged, id_col, n_buckets),
+        f"{store_dir}/postings",
+        batch_id,
+        "term_bucket",
     )
-
-
-def stream_text_index(
-    spark: SparkSession,
-    docs_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "doc_id bigint, text string",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail ``docs_path`` for document parquet drops and maintain the
-    BM25 postings store. Returns the started query; serve with
-    ``operators.retrieval.bm25_topk_indexed(spark, store_dir, terms)``
-    at any point — results reflect every committed batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        text_index_batch(
-            batch_df,
-            batch_id,
-            store_dir,
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

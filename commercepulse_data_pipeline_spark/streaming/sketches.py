@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.operators.sketches import build_sketch_rollup
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def sketch_rollup_batch(
@@ -44,45 +45,13 @@ def sketch_rollup_batch(
     """Fold one micro-batch into the rollup store: sketch THIS batch's
     rows only, land under the batch's own partition (replay-idempotent
     overwrite)."""
-    build_sketch_rollup(
-        batch_df, day_col=day_col, group_cols=group_cols, key_col=key_col, lg_k=lg_k
-    ).write.mode("overwrite").parquet(f"{store_dir}/ingest_batch={batch_id}")
-
-
-def stream_sketch_rollup(
-    spark: SparkSession,
-    events_path: str,
-    store_dir: str,
-    checkpoint: str,
-    *,
-    schema: str = "day string, event_type string, user_id long",
-    day_col: str = "day",
-    group_cols: list[str] | None = None,
-    key_col: str = "user_id",
-    lg_k: int = 12,
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of event parquet drops and maintain the sketch
-    rollup continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_path)
+    batches.write(
+        build_sketch_rollup(
+            batch_df, day_col=day_col, group_cols=group_cols, key_col=key_col, lg_k=lg_k
+        ),
+        store_dir,
+        batch_id,
     )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_rollup_batch(
-            batch_df, batch_id, store_dir,
-            day_col=day_col, group_cols=group_cols, key_col=key_col, lg_k=lg_k,
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_sketch_rollup(

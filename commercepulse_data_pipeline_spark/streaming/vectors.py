@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.operators.similarity import (
     ivfpq_encode_frozen,
 )
+from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def ivfpq_ingest_batch(
@@ -43,45 +45,14 @@ def ivfpq_ingest_batch(
 ) -> None:
     """Encode one micro-batch against the frozen index and land it under
     the batch's own partition (replay-idempotent overwrite)."""
-    spark = batch_df.sparkSession
-    ivfpq_encode_frozen(
-        spark, index_path, batch_df, id_col=id_col, vec_col=vec_col
-    ).write.mode("overwrite").partitionBy("centroid_id").parquet(
-        f"{index_path}/codes_stream/ingest_batch={batch_id}"
+    batches.write(
+        ivfpq_encode_frozen(
+            batch_df.sparkSession, index_path, batch_df, id_col=id_col, vec_col=vec_col
+        ),
+        f"{index_path}/codes_stream",
+        batch_id,
+        "centroid_id",
     )
-
-
-def stream_ivfpq_ingest(
-    spark: SparkSession,
-    vectors_path: str,
-    index_path: str,
-    checkpoint: str,
-    *,
-    schema: str = "vec_id long, embedding array<float>",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_files_per_trigger: int = 10,
-    trigger_once: bool = True,
-):
-    """Tail a directory of vector parquet drops and grow the IVF+PQ code
-    store continuously. Returns the started query."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(vectors_path)
-    )
-
-    def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        ivfpq_ingest_batch(
-            batch_df, batch_id, index_path, id_col=id_col, vec_col=vec_col
-        )
-
-    writer = stream.writeStream.foreachBatch(_batch_fn).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ivfpq_codes_from_store(
@@ -103,7 +74,7 @@ def ivfpq_codes_from_store(
     try:
         streamed = fold_consistent_read(
             spark, f"{index_path}/codes_stream"
-        ).drop("ingest_batch")
+        ).drop(BATCH_COL)
     except Exception as exc:  # noqa: BLE001 — filtered just below
         if not is_missing_store_error(exc, f"{index_path}/codes_stream"):
             # a transient error is not "no streaming partitions": serving

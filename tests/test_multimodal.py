@@ -1467,8 +1467,8 @@ def test_stream_media_features_tolerant_and_idempotent(spark, tmp_path):
     from commercepulse_data_pipeline_spark.multimodal import real_decode
     from commercepulse_data_pipeline_spark.streaming.media import (
         media_features_batch,
-        stream_media_features,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = tmp_path / "drops"
     drops.mkdir()
@@ -1488,9 +1488,13 @@ def test_stream_media_features_tolerant_and_idempotent(spark, tmp_path):
                  (time.time() - 60 + i, time.time() - 60 + i))
 
     store = str(tmp_path / "media_store")
-    q = stream_media_features(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        decoder=real_decode, max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "media_id string, modality string, content binary",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: media_features_batch(df, i, store, decoder=real_decode),
     )
     q.awaitTermination(120)
 
@@ -1817,7 +1821,7 @@ def test_dhash_brightness_invariance(spark):
 
 
 def test_stream_image_hash_index_cross_batch_and_replay(spark, tmp_path):
-    """stream_image_hash_index (r13): a re-crawled near-copy arriving two
+    """image_hash_batch on a stream (r13): a re-crawled near-copy arriving two
     batches after its original pairs against the indexed hash; the pair
     feed is per-batch partitioned and a direct batch replay reproduces
     its pair set exactly (own-partition exclusion)."""
@@ -1828,8 +1832,8 @@ def test_stream_image_hash_index_cross_batch_and_replay(spark, tmp_path):
 
     from commercepulse_data_pipeline_spark.streaming.media import (
         image_hash_batch,
-        stream_image_hash_index,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     rng = np.random.default_rng(31)
     pic = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
@@ -1854,9 +1858,13 @@ def test_stream_image_hash_index_cross_batch_and_replay(spark, tmp_path):
         shutil.rmtree(f"{incoming}/d{i}")
 
     store = str(tmp_path / "store")
-    q = stream_image_hash_index(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True,
+    q = batches.start(
+        batches.drops(
+            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: image_hash_batch(df, i, store),
+        trigger_once=True,
     )
     q.awaitTermination()
 
@@ -2046,8 +2054,8 @@ def test_stream_image_hash_cluster_table(spark, tmp_path):
     )
     from commercepulse_data_pipeline_spark.streaming.media import (
         image_hash_batch,
-        stream_image_hash_index,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     rng = np.random.default_rng(47)
     pic = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
@@ -2072,9 +2080,13 @@ def test_stream_image_hash_cluster_table(spark, tmp_path):
         shutil.rmtree(f"{incoming}/d{i}")
 
     store = str(tmp_path / "store")
-    q = stream_image_hash_index(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True, cluster=True,
+    q = batches.start(
+        batches.drops(
+            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: image_hash_batch(df, i, store, cluster=True),
+        trigger_once=True,
     )
     q.awaitTermination()
 
@@ -2204,7 +2216,7 @@ def test_audio_hash_cross_format_gain_invariance_and_pairs(spark):
 
 
 def test_stream_audio_hash_index_cross_batch(spark, tmp_path):
-    """stream_image_hash_index(modality='audio') (r14): the continuous
+    """image_hash_batch(modality="audio") on a stream (r14): the continuous
     hash store runs the audio energy-envelope hash through the SAME
     signature-agnostic plumbing — a lossless FLAC re-encode arriving two
     batches after its WAV original pairs against the indexed hash and
@@ -2216,8 +2228,9 @@ def test_stream_audio_hash_index_cross_batch(spark, tmp_path):
         read_cluster_table,
     )
     from commercepulse_data_pipeline_spark.streaming.media import (
-        stream_image_hash_index,
+        image_hash_batch,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     tone = _audio_test_samples("tone")
     other = _audio_test_samples("other")
@@ -2240,10 +2253,15 @@ def test_stream_audio_hash_index_cross_batch(spark, tmp_path):
         shutil.rmtree(f"{incoming}/d{i}")
 
     store = str(tmp_path / "store")
-    q = stream_image_hash_index(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True,
-        modality="audio", hamming_threshold=4, cluster=True,
+    q = batches.start(
+        batches.drops(
+            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: image_hash_batch(
+            df, i, store, modality="audio", hamming_threshold=4, cluster=True
+        ),
+        trigger_once=True,
     )
     q.awaitTermination()
 
@@ -2554,7 +2572,7 @@ def test_video_neardup_pairs_between_incremental(spark):
 
 @pytest.mark.slow
 def test_stream_video_hash_index_cross_batch_and_cluster(spark, tmp_path):
-    """stream_video_hash_index (r14): a re-encoded clip arriving two
+    """video_hash_batch on a stream (r14): a re-encoded clip arriving two
     batches after its original pairs against the frame index with full
     containment and joins the original's cluster; a direct batch replay
     reproduces the pair partition (own-partition exclusion) and leaves
@@ -2566,9 +2584,9 @@ def test_stream_video_hash_index_cross_batch_and_cluster(spark, tmp_path):
         read_cluster_table,
     )
     from commercepulse_data_pipeline_spark.streaming.media import (
-        stream_video_hash_index,
         video_hash_batch,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     w, h, n = 32, 24, 6
     pal_a = bytes(v for i in range(16) for v in (i * 16 + 4,) * 3)
@@ -2592,9 +2610,13 @@ def test_stream_video_hash_index_cross_batch_and_cluster(spark, tmp_path):
         shutil.rmtree(f"{incoming}/d{i}")
 
     store = str(tmp_path / "store")
-    q = stream_video_hash_index(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True, cluster=True,
+    q = batches.start(
+        batches.drops(
+            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: video_hash_batch(df, i, store, cluster=True),
+        trigger_once=True,
     )
     q.awaitTermination()
 

@@ -218,8 +218,8 @@ def test_stream_mg_rollup_and_retruncating_compaction(spark, tmp_path):
         compact_mg_rollup,
         heavy_hitters_from_store,
         mg_rollup_batch,
-        stream_mg_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = tmp_path / "drops"
     drops.mkdir()
@@ -239,9 +239,10 @@ def test_stream_mg_rollup_and_retruncating_compaction(spark, tmp_path):
     os.utime(str(drops / "b2.parquet"), (now, now))
 
     store = str(tmp_path / "mg_store")
-    q = stream_mg_rollup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        item_col="token", capacity=8, max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(spark, str(drops), "token string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: mg_rollup_batch(df, i, store, item_col="token", capacity=8),
     )
     q.awaitTermination(120)
     parts = {e.name for e in os.scandir(store) if e.is_dir()}
@@ -374,8 +375,8 @@ def test_stream_sketch_rollup_and_compaction(spark, tmp_path):
     from commercepulse_data_pipeline_spark.streaming.sketches import (
         compact_sketch_rollup,
         sketch_rollup_batch,
-        stream_sketch_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = tmp_path / "drops"
     drops.mkdir()
@@ -404,9 +405,13 @@ def test_stream_sketch_rollup_and_compaction(spark, tmp_path):
     os.utime(str(drops / "b2.parquet"), (now, now))
 
     store = str(tmp_path / "rollup")
-    q = stream_sketch_rollup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        group_cols=["event_type"], max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "day string, event_type string, user_id long",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: sketch_rollup_batch(df, i, store, group_cols=["event_type"]),
     )
     q.awaitTermination(120)
     parts = {e.name for e in os.scandir(store) if e.is_dir()}
@@ -564,8 +569,8 @@ def test_stream_hist_rollup_and_compaction(spark, tmp_path):
         compact_hist_rollup,
         hist_rollup_batch,
         quantiles_from_store,
-        stream_hist_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = tmp_path / "drops"
     drops.mkdir()
@@ -591,11 +596,15 @@ def test_stream_hist_rollup_and_compaction(spark, tmp_path):
     os.utime(str(drops / "b2.parquet"), (now, now))
 
     store = str(tmp_path / "hist_store")
-    q = stream_hist_rollup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        schema="day string, grp string, v long",
-        value_col="v", shard_col="day", group_cols=["grp"],
-        max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "day string, grp string, v long",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: hist_rollup_batch(
+            df, i, store, value_col="v", shard_col="day", group_cols=["grp"]
+        ),
     )
     q.awaitTermination(120)
     parts = {e.name for e in os.scandir(store) if e.is_dir()}
@@ -747,8 +756,8 @@ def test_stream_bloom_rollup_and_compaction(spark, tmp_path):
     from commercepulse_data_pipeline_spark.streaming.bloom import (
         bloom_rollup_batch,
         compact_bloom_rollup,
-        stream_bloom_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = tmp_path / "drops"
     drops.mkdir()
@@ -776,9 +785,12 @@ def test_stream_bloom_rollup_and_compaction(spark, tmp_path):
     os.utime(str(drops / "b2.parquet"), (now, now))
 
     store = str(tmp_path / "bloom")
-    q = stream_bloom_rollup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        m_bits=2048, k=4, max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "day string, user_id long", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: bloom_rollup_batch(df, i, store, m_bits=2048, k=4),
     )
     q.awaitTermination(120)
     parts = {e.name for e in os.scandir(store) if e.is_dir()}
@@ -970,8 +982,8 @@ def test_stream_kmv_rollup_and_compaction(spark, tmp_path):
         compact_kmv_rollup,
         kmv_rollup_batch,
         kmv_sketches_from_store,
-        stream_kmv_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     k = 16
     drops = tmp_path / "drops"
@@ -997,9 +1009,14 @@ def test_stream_kmv_rollup_and_compaction(spark, tmp_path):
     os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
 
     store = str(tmp_path / "kmv_store")
-    q = stream_kmv_rollup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        k=k, max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "event_type string, ukey string", max_files_per_trigger=1
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: kmv_rollup_batch(
+            df, i, store, set_col="event_type", key_col="ukey", k=k
+        ),
     )
     q.awaitTermination(120)
     assert {e.name for e in os.scandir(store) if e.is_dir()} == {
@@ -1066,8 +1083,8 @@ def test_stream_kmv_crash_replay_from_checkpoint(spark, tmp_path):
     from commercepulse_data_pipeline_spark.streaming.kmv import (
         kmv_rollup_batch,
         kmv_sketches_from_store,
-        stream_kmv_rollup,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     k = 8
     drops = tmp_path / "drops"
@@ -1107,8 +1124,14 @@ def test_stream_kmv_crash_replay_from_checkpoint(spark, tmp_path):
     # batch 1's write IS durable (landed before the crash)
     assert os.path.isdir(f"{store}/ingest_batch=1")
 
-    q2 = stream_kmv_rollup(
-        spark, str(drops), store, ckpt, k=k, max_files_per_trigger=1
+    q2 = batches.start(
+        batches.drops(
+            spark, str(drops), "event_type string, ukey string", max_files_per_trigger=1
+        ),
+        ckpt,
+        lambda df, i: kmv_rollup_batch(
+            df, i, store, set_col="event_type", key_col="ukey", k=k
+        ),
     )
     q2.awaitTermination(120)
     want = sorted(map(tuple, build_kmv_rollup(

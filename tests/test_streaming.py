@@ -440,7 +440,8 @@ def test_stream_clean_corpus_cross_batch_neardup(spark, tmp_path):
     import time
 
     from commercepulse_data_pipeline_spark.operators import dedup as dd
-    from commercepulse_data_pipeline_spark.streaming.corpus import stream_clean_corpus
+    from commercepulse_data_pipeline_spark.streaming import batches
+    from commercepulse_data_pipeline_spark.streaming.corpus import clean_corpus_batch
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -469,9 +470,10 @@ def test_stream_clean_corpus_cross_batch_neardup(spark, tmp_path):
     os.utime(f2, (now, now))
 
     store = str(tmp_path / "store")
-    q = stream_clean_corpus(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, max_bucket=100000,
+    q = batches.start(
+        batches.drops(spark, str(drops), "doc_id long, text string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: clean_corpus_batch(df, i, store, max_bucket=100000),
     )
     q.awaitTermination(120)
 
@@ -573,8 +575,8 @@ def test_stream_dedup_embeddings_cross_batch(spark, tmp_path):
     from commercepulse_data_pipeline_spark.operators import similarity as sim
     from commercepulse_data_pipeline_spark.streaming.embeddings import (
         dedup_embeddings_batch,
-        stream_dedup_embeddings,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     A = [1.0, 0.2, -0.5, 3.0]
     B = [-2.0, 1.0, 0.7, 0.1]
@@ -598,9 +600,13 @@ def test_stream_dedup_embeddings_cross_batch(spark, tmp_path):
     os.utime(f2, (now, now))
 
     store = str(tmp_path / "store")
-    q = stream_dedup_embeddings(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        tau=0.99, n_planes=4, max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "vec_id long, embedding array<float>",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: dedup_embeddings_batch(df, i, store, tau=0.99, n_planes=4),
     )
     q.awaitTermination(120)
 
@@ -672,8 +678,8 @@ def test_corpus_stream_crash_replay_from_checkpoint(spark, tmp_path):
 
     from commercepulse_data_pipeline_spark.streaming.corpus import (
         clean_corpus_batch,
-        stream_clean_corpus,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = _two_doc_drops(tmp_path)
     store = str(tmp_path / "store")
@@ -700,8 +706,10 @@ def test_corpus_stream_crash_replay_from_checkpoint(spark, tmp_path):
     assert not os.path.exists(f"{store}/index/bands/ingest_batch=1")  # torn
 
     # restart from the SAME checkpoint: batch 1 is re-delivered
-    q2 = stream_clean_corpus(
-        spark, drops, store, ckpt, max_files_per_trigger=1, max_bucket=100000
+    q2 = batches.start(
+        batches.drops(spark, drops, "doc_id long, text string", max_files_per_trigger=1),
+        ckpt,
+        lambda df, i: clean_corpus_batch(df, i, store, max_bucket=100000),
     )
     q2.awaitTermination(120)
     kept = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
@@ -723,8 +731,8 @@ def test_embeddings_stream_crash_replay_from_checkpoint(spark, tmp_path):
 
     from commercepulse_data_pipeline_spark.streaming.embeddings import (
         dedup_embeddings_batch,
-        stream_dedup_embeddings,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     A = [1.0, 0.2, -0.5, 3.0]
     B = [-2.0, 1.0, 0.7, 0.1]
@@ -764,8 +772,13 @@ def test_embeddings_stream_crash_replay_from_checkpoint(spark, tmp_path):
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(120)
 
-    q2 = stream_dedup_embeddings(
-        spark, str(drops), store, ckpt, tau=0.99, n_planes=4, max_files_per_trigger=1
+    q2 = batches.start(
+        batches.drops(
+            spark, str(drops), "vec_id long, embedding array<float>",
+            max_files_per_trigger=1,
+        ),
+        ckpt,
+        lambda df, i: dedup_embeddings_batch(df, i, store, tau=0.99, n_planes=4),
     )
     q2.awaitTermination(120)
     kept = {r.vec_id for r in
@@ -1146,9 +1159,9 @@ def test_stream_passage_dedup_cross_batch(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.passages import (
         passage_dedup_batch,
-        stream_passage_dedup,
     )
 
     shared = "alpha bravo charlie delta echo foxtrot golf hotel"
@@ -1168,9 +1181,10 @@ def test_stream_passage_dedup_cross_batch(spark, tmp_path):
                  (time.time() - 60 + i, time.time() - 60 + i))
 
     store = str(tmp_path / "store")
-    q = stream_passage_dedup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
+    q = batches.start(
+        batches.drops(spark, str(drops), "doc_id long, text string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: passage_dedup_batch(df, i, store),
     )
     q.awaitTermination(120)
 
@@ -1222,9 +1236,10 @@ def test_stream_passage_dedup_with_seeded_probe_index(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.passages import (
+        passage_dedup_batch,
         seed_probe_fingerprints,
-        stream_passage_dedup,
     )
 
     eval_text = "alpha bravo charlie delta echo foxtrot golf hotel india"
@@ -1245,8 +1260,10 @@ def test_stream_passage_dedup_with_seeded_probe_index(spark, tmp_path):
     )
     os.utime(str(drops / "d0.parquet"), (time.time() - 60, time.time() - 60))
 
-    q = stream_passage_dedup(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
+    q = batches.start(
+        batches.drops(spark, str(drops), "doc_id long, text string"),
+        str(tmp_path / "ckpt"),
+        lambda df, i: passage_dedup_batch(df, i, store),
     )
     q.awaitTermination(120)
     texts = {r["doc_id"]: r["text"]
@@ -1271,9 +1288,9 @@ def test_passage_stream_crash_replay_from_checkpoint(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from commercepulse_data_pipeline_spark.streaming import batches as stream_batches
     from commercepulse_data_pipeline_spark.streaming.passages import (
         passage_dedup_batch,
-        stream_passage_dedup,
     )
 
     shared = "alpha bravo charlie delta echo foxtrot golf hotel"
@@ -1315,8 +1332,13 @@ def test_passage_stream_crash_replay_from_checkpoint(spark, tmp_path):
         q.awaitTermination(120)
     assert not os.path.exists(f"{store}/fp_index/ingest_batch=1")  # torn
 
-    q2 = stream_passage_dedup(spark, str(drops), store, ckpt,
-                              max_files_per_trigger=1)
+    q2 = stream_batches.start(
+        stream_batches.drops(
+            spark, str(drops), "doc_id long, text string", max_files_per_trigger=1
+        ),
+        ckpt,
+        lambda df, i: passage_dedup_batch(df, i, store),
+    )
     q2.awaitTermination(120)
     texts = {r["doc_id"]: r["text"]
              for r in spark.read.parquet(f"{store}/corpus").collect()}
@@ -1347,8 +1369,8 @@ def test_stream_ivfpq_ingest_replay_idempotent(spark, tmp_path):
     from commercepulse_data_pipeline_spark.streaming.vectors import (
         ivfpq_codes_from_store,
         ivfpq_ingest_batch,
-        stream_ivfpq_ingest,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     rng = random.Random(21)
 
@@ -1377,8 +1399,13 @@ def test_stream_ivfpq_ingest_replay_idempotent(spark, tmp_path):
         os.utime(str(drops / f"d{i}.parquet"),
                  (time.time() - 60 + i, time.time() - 60 + i))
 
-    q = stream_ivfpq_ingest(
-        spark, str(drops), idx, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    q = batches.start(
+        batches.drops(
+            spark, str(drops), "vec_id long, embedding array<float>",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: ivfpq_ingest_batch(df, i, idx),
     )
     q.awaitTermination(120)
 
@@ -1588,8 +1615,9 @@ def test_stream_boilerplate_strip_wrapper_end_to_end(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from commercepulse_data_pipeline_spark.streaming import batches as stream_batches
     from commercepulse_data_pipeline_spark.streaming.passages import (
-        stream_boilerplate_strip,
+        boilerplate_strip_batch,
     )
 
     tpl = "one two three four five six seven eight"
@@ -1612,9 +1640,13 @@ def test_stream_boilerplate_strip_wrapper_end_to_end(spark, tmp_path):
                  (time.time() - 60 + i, time.time() - 60 + i))
 
     store = str(tmp_path / "store")
-    q = stream_boilerplate_strip(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,
+    q = stream_batches.start(
+        stream_batches.drops(
+            spark, str(drops), "doc_id long, source string, text string",
+            max_files_per_trigger=1,
+        ),
+        str(tmp_path / "ckpt"),
+        lambda df, i: boilerplate_strip_batch(df, i, store),
     )
     q.awaitTermination(120)
     texts = {r["doc_id"]: r["text"]
@@ -1758,8 +1790,9 @@ def test_stream_clean_corpus_strip_repeats(spark, tmp_path):
     import os
     import time
 
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.corpus import (
-        stream_clean_corpus,
+        clean_corpus_batch,
     )
 
     import pyarrow as pa
@@ -1785,10 +1818,12 @@ def test_stream_clean_corpus_strip_repeats(spark, tmp_path):
     os.utime(f2, (now, now))
 
     store = str(tmp_path / "store")
-    q = stream_clean_corpus(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, max_bucket=100000,
-        strip_repeats=True, repeat_window=4,
+    q = batches.start(
+        batches.drops(spark, str(drops), "doc_id long, text string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: clean_corpus_batch(
+            df, i, store, max_bucket=100000, strip_repeats=True, repeat_window=4
+        ),
     )
     q.awaitTermination(120)
 
@@ -1876,7 +1911,7 @@ def test_stream_clean_corpus_quarantine_reasons(spark, tmp_path):
 
 @pytest.mark.slow
 def test_stream_cluster_table_cross_batch_and_replay(spark, tmp_path):
-    """stream_cluster_table (r13): three drops with a near-dup spanning
+    """cluster_table_batch on a stream (r13): three drops with a near-dup spanning
     batches converge to the SAME cluster table a from-scratch batch
     build over all docs produces; a direct replay of the last batch
     changes nothing (pair derivation excludes the batch's own index
@@ -1890,8 +1925,8 @@ def test_stream_cluster_table_cross_batch_and_replay(spark, tmp_path):
     )
     from commercepulse_data_pipeline_spark.streaming.clusters import (
         cluster_table_batch,
-        stream_cluster_table,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
             "lambda mu nu xi omicron")
@@ -1920,9 +1955,11 @@ def test_stream_cluster_table_cross_batch_and_replay(spark, tmp_path):
         _shutil.rmtree(f"{incoming}/drop{i}")
 
     store = str(tmp_path / "store")
-    q = stream_cluster_table(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True,
+    q = batches.start(
+        batches.drops(spark, incoming, "doc_id long, text string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: cluster_table_batch(df, i, store),
+        trigger_once=True,
     )
     q.awaitTermination()
 
@@ -1963,8 +2000,9 @@ def test_cluster_stream_crash_replay_from_checkpoint(spark, tmp_path):
         dedup_clusters,
         read_cluster_table,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
     from commercepulse_data_pipeline_spark.streaming.clusters import (
-        stream_cluster_table,
+        cluster_table_batch,
     )
 
     drops = _two_doc_drops(tmp_path)
@@ -2004,8 +2042,10 @@ def test_cluster_stream_crash_replay_from_checkpoint(spark, tmp_path):
         q.awaitTermination(120)
     assert not os.path.exists(f"{store}/clusters/clusters")  # mid-swap state
 
-    q2 = stream_cluster_table(
-        spark, drops, store, ckpt, max_files_per_trigger=1, max_bucket=100000
+    q2 = batches.start(
+        batches.drops(spark, drops, "doc_id long, text string", max_files_per_trigger=1),
+        ckpt,
+        lambda df, i: cluster_table_batch(df, i, store, max_bucket=100000),
     )
     q2.awaitTermination(120)
 
@@ -2030,8 +2070,8 @@ def test_stream_clean_corpus_html_and_quality_gate(spark, tmp_path):
     from commercepulse_data_pipeline_spark.operators import classifier as clf
     from commercepulse_data_pipeline_spark.streaming.corpus import (
         clean_corpus_batch,
-        stream_clean_corpus,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2063,11 +2103,13 @@ def test_stream_clean_corpus_html_and_quality_gate(spark, tmp_path):
         str(drops / "b1.parquet"),
     )
     store = str(tmp_path / "store")
-    q = stream_clean_corpus(
-        spark, str(drops), store, str(tmp_path / "ckpt"),
-        schema="doc_id long, page string",
-        max_bucket=100000, quarantine=True,
-        html_col="page", quality_model_dir=model_dir,
+    q = batches.start(
+        batches.drops(spark, str(drops), "doc_id long, page string"),
+        str(tmp_path / "ckpt"),
+        lambda df, i: clean_corpus_batch(
+            df, i, store, max_bucket=100000, quarantine=True,
+            html_col="page", quality_model_dir=model_dir,
+        ),
     )
     q.awaitTermination(120)
 
@@ -2095,7 +2137,7 @@ def test_stream_clean_corpus_html_and_quality_gate(spark, tmp_path):
 
 
 def test_stream_text_index_serve_and_replay(spark, tmp_path):
-    """stream_text_index (r15): three document drops build a BM25
+    """text_index_batch on a stream (r15): three document drops build a BM25
     postings store whose indexed top-k equals the scan scorer over the
     full corpus (ranks/docs/n_match/dl exact, scores to 1e-6); a direct
     replay of the last batch reproduces its partitions bit-identically
@@ -2105,9 +2147,9 @@ def test_stream_text_index_serve_and_replay(spark, tmp_path):
 
     from commercepulse_data_pipeline_spark.operators import retrieval as ret
     from commercepulse_data_pipeline_spark.streaming.retrieval import (
-        stream_text_index,
         text_index_batch,
     )
+    from commercepulse_data_pipeline_spark.streaming import batches
 
     drops = [
         [(1, "spark query engine spark spark"), (2, "pasta recipe basil spark")],
@@ -2126,9 +2168,11 @@ def test_stream_text_index_serve_and_replay(spark, tmp_path):
         shutil.rmtree(f"{incoming}/d{i}")
 
     store = str(tmp_path / "store")
-    q = stream_text_index(
-        spark, incoming, store, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, trigger_once=True, n_buckets=8,
+    q = batches.start(
+        batches.drops(spark, incoming, "doc_id bigint, text string", max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        lambda df, i: text_index_batch(df, i, store, n_buckets=8),
+        trigger_once=True,
     )
     q.awaitTermination()
 
