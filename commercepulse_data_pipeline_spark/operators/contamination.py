@@ -26,9 +26,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.functions.expr import let
 from commercepulse_data_pipeline_spark.operators.dedup import word_shingles
-from commercepulse_data_pipeline_spark.operators.text import token_ngrams, tokens
+from commercepulse_data_pipeline_spark.operators.text import (
+    rolling_fingerprints,
+    splice_windows,
+    window_occurrences,
+)
 
 
 def ngram_contamination(
@@ -111,55 +114,25 @@ def scrub_contamination(
     fp) rows — corpus text never moves for detection. The only
     corpus-sized shuffle is the final doc-keyed join of the (typically
     tiny) contaminated-position lists back onto the text; pre-bucket the
-    corpus by ``id_col`` to co-locate it. The splice is the same codegen
-    projection as ``dedup_passages``."""
+    corpus by ``id_col`` to co-locate it. Occurrences and the splice go
+    through the shared ``text.window_occurrences`` /
+    ``text.splice_windows`` routine, like ``dedup_passages``."""
     probe_text_col = probe_text_col or text_col
-    w = window_tokens
     probe_vocab = F.broadcast(
         probes.select(
             F.explode_outer(
-                F.transform(
-                    token_ngrams(tokens(F.col(probe_text_col)), w),
-                    lambda g: F.md5(g),
-                )
+                rolling_fingerprints(F.col(probe_text_col), window_tokens)
             ).alias("__fp")
         )
         .where(F.col("__fp").isNotNull())
         .distinct()
     )
-    staged = corpus.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(token_ngrams(F.col("__toks"), w), lambda g: F.md5(g))
-    occ = staged.select(
-        F.col(id_col).alias("__doc"), F.posexplode(fps)
-    ).select(
-        "__doc",
-        F.col("pos").cast("int").alias("__pos"),
-        F.col("col").alias("__fp"),
+    staged, occ = window_occurrences(
+        corpus, doc_col=id_col, text_col=text_col, window_tokens=window_tokens
     )
-    dup_lists = (
-        occ.join(probe_vocab, "__fp", "left_semi")
-        .groupBy("__doc")
-        .agg(F.array_sort(F.collect_set("__pos")).alias("__dup_pos"))
-    )
-    joined = staged.join(
-        dup_lists, staged[id_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
-
-    from commercepulse_data_pipeline_spark.operators.text import (
-        splice_covered_tokens,
-    )
-
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    )
-    return out.select(
-        *corpus.columns,
-        F.col("__spliced.kept_text").alias("text_scrubbed"),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias(
-            "n_tokens_removed"
-        ),
-        F.size(dup_pos).alias("n_probe_windows"),
+    return splice_windows(
+        staged,
+        occ.join(probe_vocab, "__fp", "left_semi"),
+        doc_col=id_col, window_tokens=window_tokens, keep=corpus.columns,
+        text_out="text_scrubbed", windows_out="n_probe_windows",
     )

@@ -944,24 +944,38 @@ def pq_train(
     ``isin`` filter, so the expensive projection runs on ``n_codes``
     rows. Same rows, same floats, same books (A/B: outputs
     bit-identical; the full-pass init cost scales with the corpus, this
-    one with ``n_codes``)."""
+    one with ``n_codes``).
+
+    Only non-NULL ids are ranked for init (an ``isin`` fetch can never
+    return a NULL id); NULL-id vectors still take part in every Lloyd
+    iteration. Because init evaluates ``corpus`` twice, its lineage must
+    be deterministic — both scans must see the same ids. Pin or
+    checkpoint a nondeterministic input first; a sampled id the second
+    scan does not return raises ``ValueError``."""
     from commercepulse_data_pipeline_spark.operators.dedup import _md5_long
 
     key_rows = (
         corpus.select(id_col)
+        .where(F.col(id_col).isNotNull())
         .orderBy(_md5_long(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
         .limit(n_codes)
         .collect()
     )
     keys = [r[0] for r in key_rows]
     if not keys:
-        raise ValueError("pq_train: empty corpus")
+        raise ValueError("pq_train: empty corpus (no non-NULL ids)")
     fetched = {
         r[0]: r[1]
         for r in corpus.select(id_col, vec_col)
         .where(F.col(id_col).isin(keys))
         .collect()
     }
+    missing = [k for k in keys if k not in fetched]
+    if missing:
+        raise ValueError(
+            f"pq_train: sampled ids {missing} were not returned by the second "
+            "corpus scan — the corpus lineage must be deterministic"
+        )
     sample = [(k, fetched[k]) for k in keys]
     dim = len(sample[0][1])
     if dim % m:

@@ -294,12 +294,11 @@ def splice_covered_tokens(
     """struct(kept_text, n_kept): drop every token covered by at least
     one ``window_tokens``-wide window starting at a position in
     ``dup_pos`` (0-based), survivors space-joined. THE single definition
-    of the splice arithmetic shared by :func:`dedup_passages`,
-    :func:`strip_boilerplate`, ``contamination.scrub_contamination`` and
-    their streaming twins — one place to change the coverage predicate,
-    so batch and streaming rewrites cannot silently diverge (r10
-    self-review). Callers let-bind ``dup_pos`` (it is referenced once
-    per token)."""
+    of the splice arithmetic; its one caller is :func:`splice_windows`,
+    through which every window-splice operator (batch and streaming)
+    rewrites its text — one place to change the coverage predicate, so
+    batch and streaming rewrites cannot silently diverge. ``dup_pos`` is
+    let-bound by the caller (it is referenced once per token)."""
     kept = F.filter(
         toks,
         lambda _t, i: ~F.exists(
@@ -310,6 +309,71 @@ def splice_covered_tokens(
         F.array_join(kept, " ").alias("kept_text"),
         F.size(kept).alias("n_kept"),
     )
+
+
+def window_occurrences(
+    df: DataFrame,
+    *,
+    doc_col: str,
+    text_col: str,
+    window_tokens: int,
+    scope_col: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """First half of every window-splice operator: ``(staged, occ)``,
+    ``staged`` = ``df`` + its ``__toks`` array (tokenized once), ``occ``
+    = one ``(__doc[, __scope], __pos, __fp)`` row per
+    ``window_tokens``-token window (``__fp`` = md5 of the space-joined
+    window, as :func:`rolling_fingerprints`). Text never travels through
+    ``occ``; each operator's rule turns it into the ``(__doc, __pos)``
+    duplicate rows :func:`splice_windows` takes."""
+    staged = df.withColumn("__toks", tokens(F.col(text_col)))
+    fps = F.transform(
+        token_ngrams(F.col("__toks"), window_tokens), lambda g: F.md5(g)
+    )
+    scope = [] if scope_col is None else [F.col(scope_col).alias("__scope")]
+    exploded = staged.select(F.col(doc_col).alias("__doc"), *scope, F.posexplode(fps))
+    occ = exploded.select(
+        *exploded.columns[:-2],  # __doc[, __scope]
+        F.col("pos").cast("int").alias("__pos"),
+        F.col("col").alias("__fp"),
+    )
+    return staged, occ
+
+
+def splice_windows(
+    staged: DataFrame,
+    dup_windows: DataFrame,
+    *,
+    doc_col: str,
+    window_tokens: int,
+    keep: list[str],
+    text_out: str,
+    windows_out: str | None = None,
+) -> DataFrame:
+    """Second half of every window-splice operator: collect the
+    ``(__doc, __pos)`` ``dup_windows`` rows per doc, left-join those
+    (typically tiny) lists onto ``staged`` — the one corpus-sized
+    shuffle; pre-bucket by ``doc_col`` to co-locate it — and splice with
+    :func:`splice_covered_tokens`. Returns ``keep``, the rewritten text
+    as ``text_out`` and ``n_tokens_removed``; with ``windows_out`` (the
+    batch operators) also ``n_tokens`` and the doc's duplicate-window
+    count under that name."""
+    dup_lists = dup_windows.groupBy("__doc").agg(
+        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
+    )
+    joined = staged.join(
+        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
+    ).drop("__doc")
+    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
+    out = joined.withColumn(
+        "__spliced",
+        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, window_tokens)),
+    )
+    removed = (F.size("__toks") - F.col("__spliced.n_kept")).alias("n_tokens_removed")
+    counts = [removed] if windows_out is None else [
+        F.size("__toks").alias("n_tokens"), removed, F.size(dup_pos).alias(windows_out)
+    ]
+    return out.select(*keep, F.col("__spliced.kept_text").alias(text_out), *counts)
 
 
 def dedup_passages(
@@ -358,18 +422,8 @@ def dedup_passages(
     per-token coverage tests against the per-doc duplicate-position
     array (O(tokens × dup-windows-in-doc); dup lists are empty for the
     typical document)."""
-    w = window_tokens
-    staged = df.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(
-        token_ngrams(F.col("__toks"), w), lambda g: F.md5(g)
-    )
-    occ = (
-        staged.select(F.col(doc_col).alias("__doc"), F.posexplode(fps))
-        .select(
-            "__doc",
-            F.col("pos").cast("int").alias("__pos"),
-            F.col("col").alias("__fp"),
-        )
+    staged, occ = window_occurrences(
+        df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens
     )
     # one fp-keyed agg decides BOTH questions: is the fingerprint shared
     # across enough distinct docs, and which occurrence is canonical
@@ -387,28 +441,9 @@ def dedup_passages(
         )
         .select("__doc", "__pos")
     )
-    dup_lists = dup_windows.groupBy("__doc").agg(
-        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
-    )
-    joined = staged.join(
-        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(
-        F.col("__dup_pos"), F.array().cast("array<int>")
-    )
-
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    )
-    return out.select(
-        *df.columns,
-        F.col("__spliced.kept_text").alias("text_deduped"),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias(
-            "n_tokens_removed"
-        ),
-        F.size(dup_pos).alias("n_dup_windows"),
+    return splice_windows(
+        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        keep=df.columns, text_out="text_deduped", windows_out="n_dup_windows",
     )
 
 
@@ -451,20 +486,9 @@ def strip_boilerplate(
     Rows with a NULL ``scope_col`` pass through UNSTRIPPED (the equi-join
     never matches a NULL scope, so no threshold is defined for them) —
     fill or filter upstream if unattributed docs must participate."""
-    w = window_tokens
-    staged = df.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(token_ngrams(F.col("__toks"), w), lambda g: F.md5(g))
-    occ = (
-        staged.select(
-            F.col(doc_col).alias("__doc"),
-            F.col(scope_col).alias("__scope"),
-            F.posexplode(fps),
-        ).select(
-            "__doc",
-            "__scope",
-            F.col("pos").cast("int").alias("__pos"),
-            F.col("col").alias("__fp"),
-        )
+    staged, occ = window_occurrences(
+        df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens,
+        scope_col=scope_col,
     )
     boiler = (
         occ.groupBy("__scope", "__fp")
@@ -473,26 +497,10 @@ def strip_boilerplate(
         .select("__scope", "__fp")
     )
     dup_windows = occ.join(boiler, ["__scope", "__fp"]).select("__doc", "__pos")
-    dup_lists = dup_windows.groupBy("__doc").agg(
-        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
-    )
-    joined = staged.join(
-        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
-
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    )
-    return out.select(
-        *df.columns,
-        F.col("__spliced.kept_text").alias("text_stripped"),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias(
-            "n_tokens_removed"
-        ),
-        F.size(dup_pos).alias("n_boiler_windows"),
+    return splice_windows(
+        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        keep=df.columns, text_out="text_stripped",
+        windows_out="n_boiler_windows",
     )
 
 
@@ -511,7 +519,7 @@ def strip_intradoc_repeats(
     inside ONE document (looping generation artifacts, duplicated
     paragraphs, nav chrome repeated down a page), the FIRST occurrence
     (lowest position) survives and every later occurrence is spliced out
-    via the shared :func:`splice_covered_tokens` arithmetic. Distinct
+    via the shared :func:`splice_windows` routine. Distinct
     from :func:`dedup_passages` (cross-doc duplication, one canonical
     occurrence corpus-wide) and :func:`strip_boilerplate`
     ((source, fp)-scoped templates, no survivor): the decision here is
@@ -525,15 +533,8 @@ def strip_intradoc_repeats(
 
     Returns the input columns plus ``text_derepeated``, ``n_tokens``,
     ``n_tokens_removed`` and ``n_repeat_windows``."""
-    w = window_tokens
-    staged = df.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(
-        token_ngrams(F.col("__toks"), w), lambda g: F.md5(g)
-    )
-    occ = staged.select(F.col(doc_col).alias("__doc"), F.posexplode(fps)).select(
-        "__doc",
-        F.col("pos").cast("int").alias("__pos"),
-        F.col("col").alias("__fp"),
+    staged, occ = window_occurrences(
+        df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens
     )
     # one (doc, fp)-keyed agg decides both questions: does the window
     # repeat within this doc, and which occurrence is first
@@ -546,23 +547,10 @@ def strip_intradoc_repeats(
         .where(F.col("__pos") != F.col("__first"))
         .select("__doc", "__pos")
     )
-    dup_lists = dup_windows.groupBy("__doc").agg(
-        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
-    )
-    joined = staged.join(
-        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    )
-    return out.select(
-        *df.columns,
-        F.col("__spliced.kept_text").alias("text_derepeated"),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias("n_tokens_removed"),
-        F.size(dup_pos).alias("n_repeat_windows"),
+    return splice_windows(
+        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        keep=df.columns, text_out="text_derepeated",
+        windows_out="n_repeat_windows",
     )
 
 

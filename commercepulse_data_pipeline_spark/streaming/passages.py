@@ -7,7 +7,8 @@ persisted fingerprint index, not Spark streaming state, because the md5
 fingerprint space is not watermarkable):
 
 1. fingerprint this batch's documents (``window_tokens``-token rolling
-   windows, same md5 family as the batch operator);
+   windows) with ``operators/text.py::window_occurrences``, the same
+   occurrence table the batch operators build;
 2. decide duplicated windows with CROSS-BATCH counts: a fingerprint is
    duplicated when (docs already indexed) + (distinct docs in this
    batch) ≥ ``min_docs``. If the index already holds the fingerprint,
@@ -16,8 +17,10 @@ fingerprint space is not watermarkable):
    occurrence is spliced; otherwise the smallest (doc_id, position) in
    the batch survives — so a corpus arriving in one batch reproduces the
    batch operator exactly;
-3. splice the duplicate windows out (array-side, identical arithmetic to
-   the batch operator) and land the rewritten docs under
+3. splice the duplicate windows out with ``text.splice_windows`` — the
+   one splice routine every batch and streaming window-splice operator
+   shares, so only the duplicate-window rule differs from the batch
+   operator — and land the rewritten docs under
    ``{store}/corpus/ingest_batch=N``;
 4. append this batch's per-fingerprint distinct-doc counts to
    ``{store}/fp_index/ingest_batch=N``.
@@ -43,8 +46,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.functions.expr import let
-from commercepulse_data_pipeline_spark.operators.text import token_ngrams, tokens
+from commercepulse_data_pipeline_spark.operators.text import (
+    rolling_fingerprints,
+    splice_windows,
+    window_occurrences,
+)
 from commercepulse_data_pipeline_spark.streaming import batches
 
 
@@ -63,22 +69,14 @@ def passage_dedup_batch(
     fingerprint index, append rewritten docs + this batch's fingerprint
     counts under the batch's own directories."""
     spark = batch_df.sparkSession
-    w = window_tokens
     fp_root = f"{store_dir}/fp_index"
 
-    staged = batch_df.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(token_ngrams(F.col("__toks"), w), lambda g: F.md5(g))
+    staged, occ = window_occurrences(
+        batch_df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens
+    )
     # occurrence table feeds stats, the dup join and the index write —
     # eager checkpoint so the tokenize+md5 build runs once
-    occ = (
-        staged.select(F.col(doc_col).alias("__doc"), F.posexplode(fps))
-        .select(
-            "__doc",
-            F.col("pos").cast("int").alias("__pos"),
-            F.col("col").alias("__fp"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    occ = occ.localCheckpoint(eager=True)
     stats = occ.groupBy("__fp").agg(
         F.countDistinct("__doc").alias("__n_batch"),
         F.min(F.struct("__doc", "__pos")).alias("__canon"),
@@ -110,27 +108,9 @@ def passage_dedup_batch(
         )
         .select("__doc", "__pos")
     )
-    dup_lists = dup_windows.groupBy("__doc").agg(
-        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
-    )
-    joined = staged.join(
-        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
-
-    from commercepulse_data_pipeline_spark.operators.text import (
-        splice_covered_tokens,
-    )
-
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    ).select(
-        *[c for c in batch_df.columns if c != text_col],
-        F.col("__spliced.kept_text").alias(text_col),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias(
-            "n_tokens_removed"
-        ),
+    out = splice_windows(
+        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        keep=[c for c in batch_df.columns if c != text_col], text_out=text_col,
     )
     batches.write(out, f"{store_dir}/corpus", batch_id)
     batches.write(
@@ -159,10 +139,7 @@ def seed_probe_fingerprints(
     :func:`operators.contamination.scrub_contamination` semantics applied
     continuously. Idempotent overwrite; call before (or any time during)
     the stream."""
-    fps = F.transform(
-        token_ngrams(tokens(F.col(text_col)), window_tokens),
-        lambda g: F.md5(g),
-    )
+    fps = rolling_fingerprints(F.col(text_col), window_tokens)
     batches.write(
         probes.select(F.explode_outer(fps).alias("fp"))
         .where(F.col("fp").isNotNull())
@@ -200,25 +177,13 @@ def boilerplate_strip_batch(
     safety (own-partition exclusion + batch-dir overwrite) and
     fold-aware index reads as the passage store."""
     spark = batch_df.sparkSession
-    w = window_tokens
     fp_root = f"{store_dir}/fp_index"
 
-    staged = batch_df.withColumn("__toks", tokens(F.col(text_col)))
-    fps = F.transform(token_ngrams(F.col("__toks"), w), lambda g: F.md5(g))
-    occ = (
-        staged.select(
-            F.col(doc_col).alias("__doc"),
-            F.col(scope_col).alias("__scope"),
-            F.posexplode(fps),
-        )
-        .select(
-            "__doc",
-            "__scope",
-            F.col("pos").cast("int").alias("__pos"),
-            F.col("col").alias("__fp"),
-        )
-        .localCheckpoint(eager=True)
+    staged, occ = window_occurrences(
+        batch_df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens,
+        scope_col=scope_col,
     )
+    occ = occ.localCheckpoint(eager=True)
     stats = occ.groupBy("__scope", "__fp").agg(
         F.countDistinct("__doc").alias("__n_batch")
     )
@@ -243,27 +208,9 @@ def boilerplate_strip_batch(
         stats.where(n_idx + F.col("__n_batch") >= min_docs),
         ["__scope", "__fp"],
     ).select("__doc", "__pos")
-    dup_lists = dup_windows.groupBy("__doc").agg(
-        F.array_sort(F.collect_set("__pos")).alias("__dup_pos")
-    )
-    joined = staged.join(
-        dup_lists, staged[doc_col] == dup_lists["__doc"], "left"
-    ).drop("__doc")
-    dup_pos = F.coalesce(F.col("__dup_pos"), F.array().cast("array<int>"))
-
-    from commercepulse_data_pipeline_spark.operators.text import (
-        splice_covered_tokens,
-    )
-
-    out = joined.withColumn(
-        "__spliced",
-        let(dup_pos, lambda dp: splice_covered_tokens(F.col("__toks"), dp, w)),
-    ).select(
-        *[c for c in batch_df.columns if c != text_col],
-        F.col("__spliced.kept_text").alias(text_col),
-        (F.size("__toks") - F.col("__spliced.n_kept")).alias(
-            "n_tokens_removed"
-        ),
+    out = splice_windows(
+        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        keep=[c for c in batch_df.columns if c != text_col], text_out=text_col,
     )
     batches.write(out, f"{store_dir}/corpus", batch_id)
     batches.write(

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+import uuid
 
 import pytest
 from pyspark.sql import Window
@@ -232,6 +233,39 @@ def test_dedup_passages_overlapping_windows_union_coverage(spark):
     assert out[2]["n_dup_windows"] == 3  # positions 3, 4, 5
     assert out[2]["n_tokens_removed"] == 10
     assert out[2]["text_deduped"] == "unrelated head words unrelated tail"
+
+
+def test_one_routine_splices_windows():
+    """Every window-splice operator rewrites text through
+    ``text.splice_windows``: ``splice_covered_tokens`` has exactly one
+    call site (inside it) and the per-doc duplicate-position column
+    ``"__dup_pos"`` is named only in ``operators/text.py`` — a
+    hand-copied occurrence/splice join anywhere else fails here."""
+    import ast
+    import pathlib
+
+    package = pathlib.Path(tx.__file__).resolve().parents[1]
+    callers, namers = [], set()
+
+    def visit(node, owner, module):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, module)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name == "splice_covered_tokens":
+                    callers.append((module, owner))
+            if isinstance(child, ast.Constant) and child.value == "__dup_pos":
+                namers.add(module)
+            visit(child, owner, module)
+
+    for path in sorted(package.rglob("*.py")):
+        module = path.relative_to(package).as_posix()
+        visit(ast.parse(path.read_text()), None, module)
+    assert callers == [("operators/text.py", "splice_windows")]
+    assert namers == {"operators/text.py"}
 
 
 def test_simhash_near_dup(spark):
@@ -1195,6 +1229,37 @@ def test_pq_train_encode_topk_and_index(spark, tmp_path):
     )
     assert "TakeOrderedAndProject" in plan, plan
     assert "Join" not in plan, plan
+
+
+def test_pq_train_null_ids_and_nondeterministic_lineage(spark):
+    """pq_train init ranks only non-NULL ids (an ``isin`` fetch can never
+    return a NULL id, which used to surface as ``KeyError: None``), while
+    NULL-id vectors still move the Lloyd means; a corpus whose two init
+    scans disagree on ids fails with a ValueError naming them."""
+    from pyspark.sql.types import StringType
+
+    from commercepulse_data_pipeline_spark.operators import similarity as sim
+
+    rows = [(i, [float(i % 3), 1.0, float(i % 2), 0.5]) for i in range(9)]
+    rows.append((None, [9.0, 9.0, 9.0, 9.0]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    known = df.where(F.col("vec_id").isNotNull())
+
+    books = sim.pq_train(df, m=2, n_codes=4, iters=1)
+    assert len(books) == 2 and all(len(b) == 4 for b in books)
+    # same init as the corpus without the NULL row ...
+    assert sim.pq_train(df, m=2, n_codes=4, iters=0) == sim.pq_train(
+        known, m=2, n_codes=4, iters=0
+    )
+    # ... but the NULL-id vector is in the Lloyd means
+    assert books != sim.pq_train(known, m=2, n_codes=4, iters=1)
+
+    fresh_id = F.udf(lambda: uuid.uuid4().hex, StringType()).asNondeterministic()
+    drifting = spark.range(6).select(
+        fresh_id().alias("vec_id"), F.array(F.lit(1.0), F.lit(2.0)).alias("embedding")
+    )
+    with pytest.raises(ValueError, match="not returned by the second corpus scan"):
+        sim.pq_train(drifting, m=2, n_codes=2, iters=0)
 
 
 def test_pq_append_incremental_ingest(spark, tmp_path):

@@ -940,6 +940,54 @@ def test_strip_boilerplate_matches_python_model(spark, docs, w):
 
 
 @given(
+    docs=st.lists(
+        st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=0, max_size=14),
+        min_size=1,
+        max_size=8,
+    ),
+    w=st.sampled_from([2, 3]),
+    min_repeats=st.sampled_from([2, 3]),
+)
+@pytest.mark.slow
+@settings(**_SETTINGS)
+def test_strip_intradoc_repeats_matches_python_model(spark, docs, w, min_repeats):
+    """strip_intradoc_repeats ≡ a pure-Python splice model on random
+    tiny-vocab corpora: a window occurring ≥ min_repeats times in ONE
+    doc keeps its lowest position and every other occurrence is a
+    repeat window; token removed iff covered by any repeat window."""
+    from commercepulse_data_pipeline_spark.operators.text import (
+        strip_intradoc_repeats,
+    )
+
+    rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (
+            r["text_derepeated"], r["n_tokens"], r["n_tokens_removed"],
+            r["n_repeat_windows"],
+        )
+        for r in strip_intradoc_repeats(
+            df, window_tokens=w, min_repeats=min_repeats
+        ).collect()
+    }
+
+    for i, toks in enumerate(docs):
+        places = {}  # window -> positions in this doc
+        for p in range(len(toks) - w + 1):
+            places.setdefault(tuple(toks[p : p + w]), []).append(p)
+        dp = {
+            p for ps in places.values() if len(ps) >= min_repeats
+            for p in ps if p != min(ps)
+        }
+        kept = [
+            t for j, t in enumerate(toks)
+            if not any(p <= j < p + w for p in dp)
+        ]
+        want = (" ".join(kept), len(toks), len(toks) - len(kept), len(dp))
+        assert got[i] == want, (i, got[i], want)
+
+
+@given(
     vecs=st.dictionaries(
         st.integers(0, 9),
         st.lists(

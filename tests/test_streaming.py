@@ -1151,8 +1151,8 @@ def test_stream_passage_dedup_cross_batch(spark, tmp_path):
     """Streaming passage dedup: a passage indexed by an earlier batch is
     spliced out of later arrivals (keep-first), within-batch canonicals
     survive, a direct replay of a batch reproduces its first attempt
-    (own-partition exclusion), and min_docs counts accumulate ACROSS
-    batches."""
+    (own-partition exclusion), min_docs counts accumulate ACROSS
+    batches, and a single-batch arrival matches ``dedup_passages``."""
     import os
     import time
 
@@ -1222,6 +1222,20 @@ def test_stream_passage_dedup_cross_batch(spark, tmp_path):
           for r in spark.read.parquet(f"{store3}/corpus").collect()}
     assert shared in t3[10] and shared in t3[11]   # totals 1, 2 < 3
     assert shared not in t3[12]                     # total reaches 3
+
+    # single-batch arrival == batch operator: same rewrite, same removed
+    # counts (the within-batch canonical min (doc_id, pos) survives)
+    from commercepulse_data_pipeline_spark.operators.text import dedup_passages
+
+    store1 = str(tmp_path / "store1")
+    allrows = spark.createDataFrame(b1 + b2, "doc_id long, text string")
+    passage_dedup_batch(allrows, 0, store1)
+    stream_out = {(r["doc_id"], r["text"], r["n_tokens_removed"])
+                  for r in spark.read.parquet(f"{store1}/corpus").collect()}
+    batch_out = {(r["doc_id"], r["text_deduped"], r["n_tokens_removed"])
+                 for r in dedup_passages(allrows, window_tokens=8, min_docs=2).collect()}
+    assert stream_out == batch_out
+    assert any(n > 0 for _, _, n in batch_out)
 
 
 def test_stream_passage_dedup_with_seeded_probe_index(spark, tmp_path):
