@@ -21,6 +21,13 @@ CALLER's, exactly as documented on ``connected_components``: Spark never
 deletes reliable checkpoint files; delete the directory when the session's
 results are materialized.
 
+The policy points the SparkContext's checkpoint dir at its directory once,
+in :func:`set_pin_policy`; :func:`pin` never touches it. That dir is
+SparkContext-global and SHARED with ``connected_components(
+checkpoint_dir=)``, which repoints it at a per-call subdirectory of its own
+argument: pins run after such a call write there (still a reliable
+location). Call :func:`set_pin_policy` again to point it back.
+
 The default policy (no directory) is byte-for-byte the prior behaviour:
 ``localCheckpoint(eager=...)`` with each site's measured eager/lazy choice
 (lazy only when ONE sequential consumer materializes the cache first;
@@ -40,7 +47,18 @@ def set_pin_policy(checkpoint_dir: str | None = None) -> None:
     directory switches every pin site to fault-tolerant
     ``DataFrame.checkpoint`` — the 100 TB preemptible-executor posture.
     Takes effect for pins executed after the call; checkpoint-file
-    lifecycle is the caller's (see module docstring)."""
+    lifecycle is the caller's (see module docstring). A directory is set
+    as the active SparkContext's checkpoint dir here, so one must be
+    running."""
+    if checkpoint_dir is not None:
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            raise RuntimeError(
+                "set_pin_policy(checkpoint_dir=...) needs an active SparkContext"
+            )
+        sc.setCheckpointDir(checkpoint_dir)
     _POLICY["checkpoint_dir"] = checkpoint_dir
 
 
@@ -53,10 +71,7 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
     policy. Callers must only pin frames bounded by something other than
     corpus row count (pair lists, vocabularies, group counts, series) —
     the pinned blocks live in executor storage until RDD GC."""
-    ckpt_dir = _POLICY["checkpoint_dir"]
-    if ckpt_dir is not None:
-        sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(ckpt_dir)
+    if _POLICY["checkpoint_dir"] is not None:
         # reliable checkpoints are ALWAYS eager: a lazy RDD.checkpoint()
         # recomputes the plan when the checkpoint file is saved after the
         # first job over it (r15 measured rule)

@@ -21,6 +21,19 @@ hashes + containment aggregation (``video_frame_hashes`` /
 gain-invariant temporal energy-envelope hash over REAL PCM
 (``audio_pcm_mono`` / ``audio_ehash64`` — WAV and lossless FLAC).
 
+Container parsing: each layout is walked by exactly ONE function —
+GIF ``_gif_blocks`` (block events, no LZW), PNG ``_png_chunks``, RIFF
+``_riff_chunks`` (WAV via ``_wav_chunks``, and WebP), FLAC
+``_flac_stream``, TIFF ``_tiff_ifds``; BMP's header is read inline by
+its two consumers (sharing those two lines would add code). The feature
+path (``real_decode``), the hash raster path (``image_gray_raster``,
+``gif_frame_rasters``) and the PCM path (``audio_pcm_mono``) keep their
+own rules on top of that walk. The walks' bounds checks raise
+ValueError, so a truncated container leaks no IndexError/struct.error
+from them (a cut PNG IDAT stream still surfaces ``zlib.error``).
+``tests/test_multimodal.py::test_one_walker_per_container`` fails on a
+second walker.
+
 Scale design:
 - media rows are big → ``repartition`` by size budget before mapInPandas
   so each Arrow batch stays within executor memory
@@ -100,8 +113,7 @@ def _decode_bmp(content: bytes) -> dict:
 
     if len(content) < 26:
         raise ValueError("truncated BMP header")
-    pixel_off = struct.unpack_from("<I", content, 10)[0]
-    width, height = struct.unpack_from("<ii", content, 18)
+    pixel_off, width, height = struct.unpack_from("<I4xii", content, 10)
     pixels = content[pixel_off:]
     return {
         "width": abs(width),
@@ -111,43 +123,65 @@ def _decode_bmp(content: bytes) -> dict:
     }
 
 
-def _decode_tiff(content: bytes) -> dict:
-    """TIFF metadata extract (public TIFF 6.0 spec): byte-order mark
-    ('II' little / 'MM' big) + magic 42 + first-IFD offset; IFD entries
-    are 12 bytes (tag, type, count, value-or-offset) — tags 256/257 give
-    ImageWidth/ImageLength as SHORT(3) or LONG(4), inlined in the value
-    field when they fit (the raster itself may be packed/LZW/JPEG-coded —
-    the curation-filter fields don't need it)."""
+_TIFF_TYPES = {1: "B", 3: "H", 4: "I"}  # BYTE, SHORT, LONG
+
+
+def _tiff_ifds(content: bytes):
+    """The one TIFF IFD walk (public TIFF 6.0 spec): byte-order mark
+    ('II' little / 'MM' big) + magic 42 + first-IFD offset, then the IFD
+    chain (a revisited offset ends it). Yields one list per IFD of
+    ``(tag, type, count, values)`` entries — each entry is 12 bytes:
+    tag, type, count, value-or-offset — where ``values`` is the decoded
+    BYTE/SHORT/LONG tuple (inlined in the value field when it fits in 4
+    bytes), or None for other types and for arrays past the payload."""
     import struct
 
     bo = {"II": "<", "MM": ">"}.get(content[:2].decode("latin1", "replace"))
-    if bo is None or struct.unpack_from(bo + "H", content, 2)[0] != 42:
+    if bo is None or len(content) < 4 or struct.unpack_from(bo + "H", content, 2)[0] != 42:
         raise ValueError("not a TIFF header")
+    if len(content) < 8:
+        raise ValueError("truncated TIFF header")
     ifd = struct.unpack_from(bo + "I", content, 4)[0]
-    width = height = None
     seen = set()
     while ifd and ifd not in seen and ifd + 2 <= len(content):
         seen.add(ifd)
         n = struct.unpack_from(bo + "H", content, ifd)[0]
+        entries = []
         for k in range(n):
             off = ifd + 2 + 12 * k
             if off + 12 > len(content):
                 break
             tag, typ, cnt = struct.unpack_from(bo + "HHI", content, off)
-            if tag in (256, 257) and cnt == 1 and typ in (3, 4):
-                v = struct.unpack_from(
-                    bo + ("H" if typ == 3 else "I"), content, off + 8
-                )[0]
-                if tag == 256:
-                    width = v
-                else:
-                    height = v
-        if width is not None and height is not None:
-            break
+            values = None
+            if typ in _TIFF_TYPES:
+                fmt = f"{bo}{cnt}{_TIFF_TYPES[typ]}"
+                size = struct.calcsize(fmt)
+                src = off + 8 if size <= 4 else struct.unpack_from(bo + "I", content, off + 8)[0]
+                if src + size <= len(content):
+                    values = struct.unpack_from(fmt, content, src)
+            entries.append((tag, typ, cnt, values))
+        yield entries
         nxt_off = ifd + 2 + 12 * n
         if nxt_off + 4 > len(content):
-            break
+            return
         ifd = struct.unpack_from(bo + "I", content, nxt_off)[0]
+
+
+def _decode_tiff(content: bytes) -> dict:
+    """TIFF metadata extract over :func:`_tiff_ifds`: searches the IFD
+    chain for a single SHORT(3) or LONG(4) value of tags 256/257
+    (ImageWidth/ImageLength) — the raster itself may be packed/LZW/
+    JPEG-coded; the curation-filter fields don't need it."""
+    width = height = None
+    for entries in _tiff_ifds(content):
+        for tag, typ, cnt, values in entries:
+            if tag in (256, 257) and cnt == 1 and typ in (3, 4):
+                if tag == 256:
+                    width = values[0]
+                else:
+                    height = values[0]
+        if width is not None and height is not None:
+            break
     if width is None or height is None:
         raise ValueError("TIFF without ImageWidth/ImageLength")
     return {
@@ -158,36 +192,52 @@ def _decode_tiff(content: bytes) -> dict:
     }
 
 
-def _decode_wav(content: bytes) -> dict:
-    """WAV (RIFF/PCM): walk the chunk list; 'fmt ' gives channels/rate/
-    bits, 'data' gives payload size → duration = data_bytes / byte_rate."""
+def _riff_chunks(content: bytes):
+    """The one RIFF walk (WAV and WebP): yield ``(chunk_id, body)`` per
+    chunk past the 12-byte 'RIFF' <size> <form> header. Chunks are
+    word-aligned; a body is cut short where the payload ends."""
     import struct
 
-    byte_rate = None
-    data = b""
-    pos = 12  # past 'RIFF' <size> 'WAVE'
+    pos = 12
     while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
         csz = struct.unpack_from("<I", content, pos + 4)[0]
-        body = content[pos + 8 : pos + 8 + csz]
+        yield content[pos : pos + 4], content[pos + 8 : pos + 8 + csz]
+        pos += 8 + csz + (csz & 1)
+
+
+def _wav_chunks(content: bytes) -> tuple[tuple | None, bytes]:
+    """WAV's two chunks off :func:`_riff_chunks`: ``(fmt, data)`` — the
+    last valid 'fmt ' chunk as (format code, channels, rate, byte rate,
+    block align, bits) or None, and the last 'data' body (b"" if none)."""
+    import struct
+
+    fmt, data = None, b""
+    for cid, body in _riff_chunks(content):
         if cid == b"fmt " and len(body) >= 16:
-            _fmt, _ch, _rate, byte_rate, _align, _bits = struct.unpack_from("<HHIIHH", body, 0)
+            fmt = struct.unpack_from("<HHIIHH", body, 0)
         elif cid == b"data":
             data = body
-        pos += 8 + csz + (csz & 1)  # chunks are word-aligned
-    if not byte_rate:
+    return fmt, data
+
+
+def _decode_wav(content: bytes) -> dict:
+    """WAV (RIFF/PCM): 'fmt ' gives channels/rate/bits, 'data' gives
+    payload size → duration = data_bytes / byte_rate."""
+    fmt, data = _wav_chunks(content)
+    if fmt is None or not fmt[3]:
         raise ValueError("WAV without a valid fmt chunk")
     return {
         "width": None,
         "height": None,
-        "duration_sec": len(data) / float(byte_rate),
+        "duration_sec": len(data) / float(fmt[3]),
         "feature": _feature_from_bytes(data),
     }
 
 
 def _decode_webp(content: bytes) -> dict:
-    """WebP (RIFF container, public container+bitstream specs): walk the
-    chunk list; dimensions come from whichever variant is present —
+    """WebP (RIFF container, public container+bitstream specs): over
+    :func:`_riff_chunks`, dimensions come from whichever variant is
+    present —
 
     - ``VP8 `` (lossy): keyframe start code 0x9D 0x01 0x2A at payload
       bytes 3-5, then 14-bit width/height in the next two LE u16s;
@@ -209,11 +259,7 @@ def _decode_webp(content: bytes) -> dict:
     canvas = None
     dur_ms = 0
     animated = False
-    pos = 12
-    while pos + 8 <= len(content):
-        cid = content[pos : pos + 4]
-        csz = struct.unpack_from("<I", content, pos + 4)[0]
-        body = content[pos + 8 : pos + 8 + csz]
+    for cid, body in _riff_chunks(content):
         if cid == b"VP8 " and len(body) >= 10:
             if body[3:6] != b"\x9d\x01\x2a":
                 raise ValueError("VP8 chunk without a keyframe start code")
@@ -233,7 +279,6 @@ def _decode_webp(content: bytes) -> dict:
         elif cid == b"ANMF" and len(body) >= 15:
             animated = True
             dur_ms += int.from_bytes(body[12:15], "little")
-        pos += 8 + csz + (csz & 1)  # chunks are word-aligned
     if canvas is not None:
         width, height = canvas
     if width is None:
@@ -291,7 +336,10 @@ def _gif_lzw_decode(min_code_size: int, data: bytes, max_pixels: int) -> bytes:
     """GIF's variable-width LZW (spec appendix F): codes are packed
     LSB-first; width starts at min_code_size+1 and grows when the table
     fills 2^width (capped at 12); CLEAR resets the table, END stops.
-    Returns the palette-index string."""
+    Returns the palette-index string. ``min_code_size`` None (the
+    payload ended inside the image descriptor) raises ValueError."""
+    if min_code_size is None:
+        raise ValueError("truncated GIF image descriptor")
     clear = 1 << min_code_size
     end_code = clear + 1
     base = [bytes([i]) for i in range(clear)] + [b"", b""]
@@ -332,81 +380,118 @@ def _gif_lzw_decode(min_code_size: int, data: bytes, max_pixels: int) -> bytes:
     return bytes(out[:max_pixels])
 
 
-def _gif_skip_subblocks(content: bytes, pos: int) -> int:
-    """Advance past a GIF sub-block chain (len-prefixed blocks, 0 ends)."""
+def _gif_subblocks(content: bytes, pos: int) -> tuple[bytes, int]:
+    """Join a GIF sub-block chain (len-prefixed blocks, 0 ends) starting
+    at ``pos``: returns (joined bytes, position past the terminator)."""
+    data = bytearray()
     while pos < len(content) and content[pos] != 0:
+        data += content[pos + 1 : pos + 1 + content[pos]]
         pos += content[pos] + 1
-    return pos + 1
+    return bytes(data), pos + 1
 
 
-def _decode_gif(content: bytes) -> dict:
-    """GIF87a/89a: logical screen descriptor → dims; block walk over
-    extensions (Graphic Control delays sum to the animation duration)
-    and image descriptors; the FIRST frame's raster is fully LZW-decoded
-    and mapped through its (local or global) palette to RGB bytes for
-    the feature histogram. Interlace only permutes row order, which the
-    byte histogram is invariant to, so no de-interlace pass is needed."""
+def _gif_blocks(content: bytes):
+    """The one GIF block walk: every GIF consumer reads the container
+    through it. Yields ``("screen", width, height, gct, bg_index)``
+    first, then one event per block in file order:
+
+    - ``("gce", body)`` per Graphic Control extension — its 4 body bytes
+      (packed, delay lo/hi in centiseconds, transparent index), SHORTER
+      when the payload ends inside it (each consumer keeps its own rule
+      for that);
+    - ``("image", left, top, w, h, packed, lct, min_code, data)`` per
+      image descriptor — ``lct`` is b"" without a local table,
+      ``min_code`` None when the payload ends first, ``data`` the joined
+      raw LZW sub-blocks. No LZW decoding happens here.
+
+    Structural errors raise ValueError when the walk reaches them, so a
+    lazy consumer has already seen every block before them."""
     import struct
 
     if content[:6] not in (b"GIF87a", b"GIF89a") or len(content) < 13:
         raise ValueError("not a GIF")
     width, height = struct.unpack_from("<HH", content, 6)
-    packed = content[10]
     pos = 13
     gct = b""
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        gct = content[pos : pos + 3 * n]
-        pos += 3 * n
-    duration_cs = 0
-    frames = 0
-    first_rgb: bytes | None = None
-    first_frame: dict | None = None
+    if content[10] & 0x80:
+        gct = content[pos : pos + 3 * (2 << (content[10] & 7))]
+        pos += 3 * (2 << (content[10] & 7))
+    yield "screen", width, height, gct, content[11]
     while pos < len(content):
         block = content[pos]
         if block == 0x3B:  # trailer
-            break
+            return
         if block == 0x21:  # extension
-            label = content[pos + 1]
-            pos += 2
-            if label == 0xF9 and pos < len(content) and content[pos] >= 4:
-                duration_cs += struct.unpack_from("<H", content, pos + 2)[0]
-            pos = _gif_skip_subblocks(content, pos)
+            if pos + 1 >= len(content):
+                raise ValueError("truncated GIF extension")
+            if content[pos + 1] == 0xF9 and pos + 2 < len(content) and content[pos + 2] >= 4:
+                yield "gce", content[pos + 3 : pos + 7]
+            _, pos = _gif_subblocks(content, pos + 2)
         elif block == 0x2C:  # image descriptor
-            fw, fh = struct.unpack_from("<HH", content, pos + 5)
+            if pos + 10 > len(content):
+                raise ValueError("truncated GIF image descriptor")
+            left, top, fw, fh = struct.unpack_from("<HHHH", content, pos + 1)
             fpacked = content[pos + 9]
             pos += 10
             lct = b""
             if fpacked & 0x80:
-                n = 2 << (fpacked & 7)
-                lct = content[pos : pos + 3 * n]
-                pos += 3 * n
-            min_code = content[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(content) and content[pos] != 0:
-                n = content[pos]
-                data += content[pos + 1 : pos + 1 + n]
-                pos += n + 1
-            pos += 1
-            frames += 1
-            if first_rgb is None:
-                idx = _gif_lzw_decode(min_code, bytes(data), fw * fh)
-                pal = lct or gct
-                first_rgb = b"".join(pal[3 * i : 3 * i + 3] for i in idx)
-                first_frame = {
-                    "w": fw, "h": fh,
-                    "interlaced": bool(fpacked & 0x40),
-                    "rgb": first_rgb,
-                }
+                lct = content[pos : pos + 3 * (2 << (fpacked & 7))]
+                pos += 3 * (2 << (fpacked & 7))
+            min_code = content[pos] if pos < len(content) else None
+            data, pos = _gif_subblocks(content, pos + 1)
+            yield "image", left, top, fw, fh, fpacked, lct, min_code, data
         else:
             raise ValueError(f"unknown GIF block id 0x{block:02x}")
+
+
+def _gif_deinterlace(rows):
+    """Undo GIF interlace: rows are stored in four passes (8k, 8k+4,
+    4k+2, 2k+1); return them top-down."""
+    import numpy as np
+
+    h = rows.shape[0]
+    order = [*range(0, h, 8), *range(4, h, 8), *range(2, h, 4), *range(1, h, 2)]
+    out = np.empty_like(rows)
+    out[order] = rows
+    return out
+
+
+def _decode_gif(content: bytes) -> dict:
+    """GIF87a/89a over :func:`_gif_blocks`: logical screen → dims; EVERY
+    Graphic Control delay sums into the animation duration; the FIRST
+    frame's raster is fully LZW-decoded and mapped through its (local or
+    global) palette to RGB bytes for the feature histogram. Interlace
+    only permutes row order, which the byte histogram is invariant to,
+    so no de-interlace pass is needed."""
+    walk = _gif_blocks(content)
+    _, width, height, gct, _bg = next(walk)
+    duration_cs = 0
+    frames = 0
+    first_frame: dict | None = None
+    for kind, *ev in walk:
+        if kind == "gce":
+            if len(ev[0]) < 3:  # every delay is summed: both bytes must be there
+                raise ValueError("truncated GIF extension")
+            duration_cs += int.from_bytes(ev[0][1:3], "little")
+            continue
+        _left, _top, fw, fh, fpacked, lct, min_code, data = ev
+        if min_code is None:
+            raise ValueError("truncated GIF image descriptor")
+        frames += 1
+        if first_frame is None:
+            idx = _gif_lzw_decode(min_code, data, fw * fh)
+            pal = lct or gct
+            first_frame = {
+                "w": fw, "h": fh,
+                "interlaced": bool(fpacked & 0x40),
+                "rgb": b"".join(pal[3 * i : 3 * i + 3] for i in idx),
+            }
     return {
         "width": width,
         "height": height,
         # animated GIF: delays are centiseconds; single frame → no duration
         "duration_sec": duration_cs / 100.0 if frames > 1 and duration_cs else None,
-        "feature": _feature_from_bytes(first_rgb or b""),
+        "feature": _feature_from_bytes(first_frame["rgb"] if first_frame else b""),
         # raster consumers (image_gray_raster) read the first frame;
         # histogram consumers ignore the extra key
         "first_frame": first_frame,
@@ -418,10 +503,53 @@ _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> bytes:
-    """Invert PNG per-scanline filtering (spec §9: None/Sub/Up/Average/
-    Paeth). Each scanline is 1 filter-type byte + ``stride`` data bytes;
-    reconstruction references the previous (already reconstructed) line."""
+def _png_chunks(content: bytes) -> tuple[tuple, bytes, bytes]:
+    """The one PNG chunk walk (IHDR, PLTE, IDAT until IEND) behind both
+    PNG consumers: returns ``(ihdr, plte, idat)`` — the 7 IHDR fields
+    (width, height, bit depth, color type, compression, filter,
+    interlace), the PLTE body (b"" if none) and the joined IDAT stream.
+    A later IHDR/PLTE overrides an earlier one; CRCs are not checked."""
+    import struct
+
+    if content[:8] != _PNG_MAGIC:
+        raise ValueError("not a PNG")
+    pos = 8
+    ihdr = None
+    plte = b""
+    idat = bytearray()
+    while pos + 8 <= len(content):
+        clen, ctype = struct.unpack_from(">I4s", content, pos)
+        body = content[pos + 8 : pos + 8 + clen]
+        if ctype == b"IHDR":
+            if len(body) < 13:
+                raise ValueError("truncated IHDR")
+            ihdr = struct.unpack_from(">IIBBBBB", body, 0)
+        elif ctype == b"PLTE":
+            plte = bytes(body)
+        elif ctype == b"IDAT":
+            idat += body
+        elif ctype == b"IEND":
+            break
+        pos += 12 + clen  # length + type + payload-implied CRC
+    if ihdr is None:
+        raise ValueError("PNG without IHDR")
+    return ihdr, plte, bytes(idat)
+
+
+def _png_unfilter(idat: bytes, ihdr: tuple) -> bytes:
+    """Inflate the IDAT stream and invert PNG per-scanline filtering
+    (spec §9: None/Sub/Up/Average/Paeth) for the image ``ihdr``
+    describes (its color type already validated). Each scanline is 1
+    filter-type byte + ``stride`` data bytes; reconstruction references
+    the previous (already reconstructed) line."""
+    import zlib
+
+    width, height, bit_depth, color_type = ihdr[:4]
+    channels = _PNG_CHANNELS[color_type]
+    # filtering operates on bytes: bpp = bytes per complete pixel, min 1
+    bpp = max(1, (channels * bit_depth) // 8)
+    stride = (width * channels * bit_depth + 7) // 8
+    raw = zlib.decompress(idat)
     out = bytearray()
     prev = bytearray(stride)
     pos = 0
@@ -458,47 +586,22 @@ def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> bytes:
 
 
 def _decode_png(content: bytes) -> dict:
-    """PNG (RFC 2083 / W3C spec), pure stdlib: chunk walk → IHDR dims,
-    IDAT concat → zlib inflate → per-scanline un-filter. Handles all five
-    filter types, bit depths 1/2/4/8/16, color types 0/2/3/4/6.
-    Adam7-interlaced files raise ValueError (rare on the web; a full
-    deinterlacer is not worth the hot-path complexity — route those to a
-    codec library build). The feature summarizes the RECONSTRUCTED raster,
-    so identical images stored with different filter choices featurize
-    identically — which raw-IDAT hashing would not give you."""
-    import struct
-    import zlib
-
-    if content[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG")
-    pos = 8
-    width = height = bit_depth = color_type = interlace = None
-    idat = bytearray()
-    while pos + 8 <= len(content):
-        clen, ctype = struct.unpack_from(">I4s", content, pos)
-        body = content[pos + 8 : pos + 8 + clen]
-        if ctype == b"IHDR":
-            if len(body) < 13:
-                raise ValueError("truncated IHDR")
-            width, height, bit_depth, color_type, _comp, _filt, interlace = (
-                struct.unpack_from(">IIBBBBB", body, 0)
-            )
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + clen  # length + type + payload-implied CRC
-    if width is None:
-        raise ValueError("PNG without IHDR")
+    """PNG (RFC 2083 / W3C spec), pure stdlib: :func:`_png_chunks` →
+    IHDR dims + IDAT stream → zlib inflate → per-scanline un-filter.
+    Handles all five filter types, bit depths 1/2/4/8/16, color types
+    0/2/3/4/6. Adam7-interlaced files raise ValueError (rare on the web;
+    a full deinterlacer is not worth the hot-path complexity — route
+    those to a codec library build). The feature summarizes the
+    RECONSTRUCTED raster, so identical images stored with different
+    filter choices featurize identically — which raw-IDAT hashing would
+    not give you."""
+    ihdr, _plte, idat = _png_chunks(content)
+    width, height, _depth, color_type, _comp, _filt, interlace = ihdr
     if interlace:
         raise ValueError("Adam7-interlaced PNG not supported by the stdlib decoder")
     if color_type not in _PNG_CHANNELS:
         raise ValueError(f"bad PNG color type {color_type}")
-    channels = _PNG_CHANNELS[color_type]
-    # filtering operates on bytes: bpp = bytes per complete pixel, min 1
-    bpp = max(1, (channels * bit_depth) // 8)
-    stride = (width * channels * bit_depth + 7) // 8
-    raster = _png_unfilter(zlib.decompress(bytes(idat)), height, stride, bpp)
+    raster = _png_unfilter(idat, ihdr)
     return {
         "width": width,
         "height": height,
@@ -1118,16 +1221,15 @@ def _flac_pcm(
     return rate_out, channels_out
 
 
-def _decode_flac(content: bytes) -> dict:
-    """FLAC decode (public format spec / RFC 9639): 'fLaC' magic, then
-    metadata blocks — 1-byte header (bit 7 = last, bits 0-6 = type, 0 =
-    STREAMINFO) + 24-bit big-endian length. STREAMINFO packs sample rate
-    (20 bits), channels-1 (3), bits-per-sample-1 (5) and total samples
-    (36). When audio frames follow the metadata, the SAMPLES are decoded
-    too (:func:`_flac_pcm` — constant/verbatim/fixed/LPC subframes, rice
-    residuals, stereo decorrelation, CRC-verified; bit-exact, FLAC is
-    lossless) and the feature summarizes the reconstructed PCM; a
-    metadata-only payload falls back to the STREAMINFO duration."""
+def _flac_stream(content: bytes) -> tuple[tuple | None, int, bool]:
+    """The one FLAC metadata walk (public format spec / RFC 9639): after
+    the 'fLaC' magic, metadata blocks — 1-byte header (bit 7 = last,
+    bits 0-6 = type, 0 = STREAMINFO) + 24-bit big-endian length.
+    STREAMINFO packs sample rate (20 bits), channels-1 (3),
+    bits-per-sample-1 (5) and total samples (36). Returns ``(info,
+    frames_start, has_frames)``: the FIRST STREAMINFO's (rate, bps,
+    total) or None, where the audio frames start, and whether a frame
+    sync code sits there. A zero rate is the caller's to reject."""
     pos = 4
     info = None
     while pos + 4 <= len(content):
@@ -1138,23 +1240,34 @@ def _decode_flac(content: bytes) -> dict:
             if len(body) < 18:
                 raise ValueError("truncated FLAC STREAMINFO block")
             rate = (body[10] << 12) | (body[11] << 4) | (body[12] >> 4)
-            if not rate:
-                raise ValueError("FLAC STREAMINFO with zero sample rate")
-            bps = (((body[12] >> 0) & 0x01) << 4 | (body[13] >> 4)) + 1
+            bps = ((body[12] & 0x01) << 4 | (body[13] >> 4)) + 1
             total = ((body[13] & 0x0F) << 32) | int.from_bytes(body[14:18], "big")
             info = (rate, bps, total)
         pos += 4 + blen
         if hdr & 0x80:
             break
+    start = min(pos, len(content))
+    has_frames = (
+        start + 2 <= len(content)
+        and content[start] == 0xFF
+        and (content[start + 1] & 0xFC) == 0xF8
+    )
+    return info, start, has_frames
+
+
+def _decode_flac(content: bytes) -> dict:
+    """FLAC decode over :func:`_flac_stream`. When audio frames follow
+    the metadata, the SAMPLES are decoded too (:func:`_flac_pcm` —
+    constant/verbatim/fixed/LPC subframes, rice residuals, stereo
+    decorrelation, CRC-verified; bit-exact, FLAC is lossless) and the
+    feature summarizes the reconstructed PCM; a metadata-only payload
+    falls back to the STREAMINFO duration."""
+    info, frames_start, has_frames = _flac_stream(content)
     if info is None:
         raise ValueError("FLAC container without a STREAMINFO block")
     rate, bps, total = info
-    frames_start = min(pos, len(content))
-    has_frames = (
-        frames_start + 2 <= len(content)
-        and content[frames_start] == 0xFF
-        and (content[frames_start + 1] & 0xFC) == 0xF8
-    )
+    if not rate:
+        raise ValueError("FLAC STREAMINFO with zero sample rate")
     if not has_frames:
         return {
             "width": None,
@@ -1423,27 +1536,69 @@ def extract_features(
     large blobs — at 100 TB this is the knob that keeps executors from
     OOMing on 4K video rows (pair with a caller-side
     ``arrow.maxRecordsPerBatch`` / size-based repartition to also bound
-    the Arrow transfer batch)."""
+    the Arrow transfer batch). Strict: an undecodable payload fails the
+    task — :func:`extract_features_tolerant` with ``on_error="raise"``,
+    minus its ``decode_error`` column."""
+    return extract_features_tolerant(
+        media, decoder=decoder, batch_rows=batch_rows, on_error="raise"
+    ).drop("decode_error")
+
+
+# fresh StructType — StructType.add MUTATES its receiver, which would
+# corrupt the shared FEATURE_SCHEMA
+FEATURE_ERR_SCHEMA = T.StructType(
+    [*FEATURE_SCHEMA.fields, T.StructField("decode_error", T.StringType())]
+)
+
+
+def extract_features_tolerant(
+    media: DataFrame,
+    *,
+    decoder=DeterministicFakeDecoder.decode,
+    batch_rows: int = 64,
+    on_error: str = "null",
+) -> DataFrame:
+    """The one feature-row loop: :func:`extract_features` with a per-row
+    error boundary — undecodable payloads yield NULL fields +
+    ``decode_error`` instead of failing the task (``on_error="raise"``
+    restores strict mode)."""
     import pandas as pd
+
+    strict = on_error == "raise"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in _chunked(batches, batch_rows):
             out = []
             for _, row in pdf.iterrows():
-                d = decoder(row["content"], row["modality"])
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "modality": row["modality"],
-                        "width": d.get("width"),
-                        "height": d.get("height"),
-                        "duration_sec": d.get("duration_sec"),
-                        "feature": d.get("feature"),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in FEATURE_SCHEMA.fields])
+                rec = {
+                    "media_id": row["media_id"],
+                    "modality": row["modality"],
+                    "width": None,
+                    "height": None,
+                    "duration_sec": None,
+                    "feature": None,
+                    "decode_error": None,
+                }
+                try:
+                    d = decoder(row["content"], row["modality"])
+                    rec.update(
+                        width=d.get("width"),
+                        height=d.get("height"),
+                        duration_sec=d.get("duration_sec"),
+                        feature=d.get("feature"),
+                    )
+                except Exception as exc:  # noqa: BLE001 — quarantine, don't wedge
+                    if strict:
+                        raise
+                    rec["decode_error"] = f"{type(exc).__name__}: {exc}"
+                out.append(rec)
+            yield pd.DataFrame(
+                out, columns=[f.name for f in FEATURE_ERR_SCHEMA.fields]
+            )
 
-    return media.select("media_id", "modality", "content").mapInPandas(run, FEATURE_SCHEMA)
+    return media.select("media_id", "modality", "content").mapInPandas(
+        run, FEATURE_ERR_SCHEMA
+    )
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -1678,10 +1833,7 @@ def image_gray_raster(content: bytes):
     if content[:2] == b"BM":
         if len(content) < 34:
             raise ValueError("truncated BMP header")
-        pixel_off = struct.unpack_from("<I", content, 10)[0]
-        w, h_signed = struct.unpack_from("<ii", content, 18)
-        bpp = struct.unpack_from("<H", content, 28)[0]
-        comp = struct.unpack_from("<I", content, 30)[0]
+        pixel_off, w, h_signed, bpp, comp = struct.unpack_from("<I4xii2xHI", content, 10)
         if bpp != 24 or comp != 0:
             raise ValueError(f"unsupported BMP (bpp={bpp}, compression={comp})")
         h = abs(h_signed)
@@ -1696,8 +1848,7 @@ def image_gray_raster(content: bytes):
             arr = arr[::-1]  # bottom-up storage
         return _luma(arr)
     if content[:6] in (b"GIF87a", b"GIF89a"):
-        meta = _decode_gif(content)
-        frame = meta.get("first_frame")
+        frame = _decode_gif(content)["first_frame"]
         if not frame:
             raise ValueError("GIF without an image frame")
         fw, fh, rgb = frame["w"], frame["h"], frame["rgb"]
@@ -1705,39 +1856,11 @@ def image_gray_raster(content: bytes):
             raise ValueError("GIF palette/raster size mismatch")
         arr = np.frombuffer(rgb, dtype=np.uint8).reshape(fh, fw, 3)
         if frame["interlaced"]:
-            # GIF interlace stores rows in four passes (8k, 8k+4, 4k+2,
-            # 2k+1); undo the permutation so the raster is top-down
-            order = (
-                list(range(0, fh, 8)) + list(range(4, fh, 8))
-                + list(range(2, fh, 4)) + list(range(1, fh, 2))
-            )
-            out = np.empty_like(arr)
-            out[order] = arr
-            arr = out
+            arr = _gif_deinterlace(arr)
         return _luma(arr)
     if content[:8] == _PNG_MAGIC:
-        import zlib
-
-        pos, width, height = 8, None, None
-        bit_depth = color_type = interlace = None
-        idat = bytearray()
-        plte = b""
-        while pos + 8 <= len(content):
-            clen, ctype = struct.unpack_from(">I4s", content, pos)
-            body = content[pos + 8 : pos + 8 + clen]
-            if ctype == b"IHDR":
-                width, height, bit_depth, color_type, _c, _f, interlace = (
-                    struct.unpack_from(">IIBBBBB", body, 0)
-                )
-            elif ctype == b"PLTE":
-                plte = bytes(body)
-            elif ctype == b"IDAT":
-                idat += body
-            elif ctype == b"IEND":
-                break
-            pos += 12 + clen
-        if width is None:
-            raise ValueError("PNG without IHDR")
+        ihdr, plte, idat = _png_chunks(content)
+        width, height, bit_depth, color_type, _c, _f, interlace = ihdr
         # all five 8-bit color types decode (r14 adds palette 3 and the
         # alpha types 4/6 — alpha is DROPPED: hashing wants the rendered
         # luma, and near-dup pairing across a re-save that strips alpha
@@ -1750,10 +1873,8 @@ def image_gray_raster(content: bytes):
                 f"interlace={interlace})"
             )
         ch = _PNG_CHANNELS[color_type]
-        raster = _png_unfilter(
-            zlib.decompress(bytes(idat)), height, width * ch, ch
-        )
-        arr = np.frombuffer(bytes(raster), dtype=np.uint8).reshape(
+        raster = _png_unfilter(idat, ihdr)
+        arr = np.frombuffer(raster, dtype=np.uint8).reshape(
             height, width, ch
         )
         if color_type == 3:  # palette indices -> RGB via PLTE
@@ -1781,34 +1902,12 @@ def _tiff_gray_raster(content: bytes):
     BT.601 luma). Compressed/tiled/planar variants raise ValueError (the
     tolerant wrapper emits an err row — the same boundary policy as
     every other format)."""
-    import struct
-
     import numpy as np
 
-    bo = {"II": "<", "MM": ">"}.get(content[:2].decode("latin1", "replace"))
-    if bo is None or struct.unpack_from(bo + "H", content, 2)[0] != 42:
-        raise ValueError("not a TIFF header")
-    ifd = struct.unpack_from(bo + "I", content, 4)[0]
-    if not ifd or ifd + 2 > len(content):
+    entries = next(_tiff_ifds(content), None)
+    if entries is None:
         raise ValueError("TIFF without a readable IFD")
-    n = struct.unpack_from(bo + "H", content, ifd)[0]
-    tags: dict[int, tuple[int, ...]] = {}
-    _SZ = {1: 1, 3: 2, 4: 4}
-    for k in range(n):
-        off = ifd + 2 + 12 * k
-        if off + 12 > len(content):
-            break
-        tag, typ, cnt = struct.unpack_from(bo + "HHI", content, off)
-        if typ not in _SZ:
-            continue
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        total = _SZ[typ] * cnt
-        src = off + 8 if total <= 4 else struct.unpack_from(
-            bo + "I", content, off + 8
-        )[0]
-        if src + total > len(content):
-            continue
-        tags[tag] = struct.unpack_from(bo + f"{cnt}{fmt}", content, src)
+    tags = {tag: values for tag, _typ, _cnt, values in entries if values is not None}
 
     def one(tag: int, default=None):
         v = tags.get(tag)
@@ -2073,21 +2172,10 @@ def _gif_raster_iter(content: bytes):
     snapshot being yielded, regardless of frame count. Raises the same
     ValueErrors as the list form for malformed payloads encountered up
     to the last frame the consumer pulls."""
-    import struct
-
     import numpy as np
 
-    if content[:6] not in (b"GIF87a", b"GIF89a") or len(content) < 13:
-        raise ValueError("not a GIF")
-    width, height = struct.unpack_from("<HH", content, 6)
-    packed = content[10]
-    bg_index = content[11]
-    pos = 13
-    gct = b""
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        gct = content[pos : pos + 3 * n]
-        pos += 3 * n
+    walk = _gif_blocks(content)
+    _, width, height, gct, bg_index = next(walk)
     if gct and 3 * bg_index + 3 <= len(gct):
         bg_rgb = gct[3 * bg_index : 3 * bg_index + 3]
     else:
@@ -2097,112 +2185,59 @@ def _gif_raster_iter(content: bytes):
     ).reshape(height, width, 3).copy()
     pending_delay = 0
     transparent_idx: int | None = None
-    while pos < len(content):
-        block = content[pos]
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = content[pos + 1]
-            if label == 0xF9 and pos + 2 < len(content) and content[pos + 2] >= 4:
-                gce_packed = content[pos + 3]
-                pending_delay = int.from_bytes(
-                    content[pos + 4 : pos + 6], "little"
-                )
-                transparent_idx = (
-                    content[pos + 6] if gce_packed & 0x01 else None
-                )
-            pos = _gif_skip_subblocks(content, pos + 2)
-        elif block == 0x2C:  # image descriptor
-            left, top, fw, fh = struct.unpack_from("<HHHH", content, pos + 1)
-            fpacked = content[pos + 9]
-            pos += 10
-            lct = b""
-            if fpacked & 0x80:
-                n = 2 << (fpacked & 7)
-                lct = content[pos : pos + 3 * n]
-                pos += 3 * n
-            min_code = content[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(content) and content[pos] != 0:
-                n = content[pos]
-                data += content[pos + 1 : pos + 1 + n]
-                pos += n + 1
-            pos += 1
-            idx = _gif_lzw_decode(min_code, bytes(data), fw * fh)
-            if len(idx) < fw * fh:
-                raise ValueError("truncated GIF frame raster")
-            pal = lct or gct
-            if not pal:
-                raise ValueError("GIF frame without a palette")
-            arr = np.frombuffer(idx[: fw * fh], dtype=np.uint8).reshape(fh, fw)
-            if fpacked & 0x40:  # interlace: undo the four-pass row order
-                order = (
-                    list(range(0, fh, 8)) + list(range(4, fh, 8))
-                    + list(range(2, fh, 4)) + list(range(1, fh, 2))
-                )
-                out = np.empty_like(arr)
-                out[order] = arr
-                arr = out
-            pal_arr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
-            if arr.max() >= len(pal_arr):
-                raise ValueError("GIF palette index out of range")
-            rgb = pal_arr[arr]  # (fh, fw, 3)
-            region = canvas[top : top + fh, left : left + fw]
-            if region.shape[:2] != (fh, fw):
-                raise ValueError("GIF frame rect outside logical screen")
-            if transparent_idx is not None:
-                opaque = arr != transparent_idx
-                region[opaque] = rgb[opaque]
-            else:
-                region[...] = rgb
-            yield _luma(canvas), pending_delay
-            pending_delay = 0
-            transparent_idx = None  # GCE applies to ONE image block
+    for kind, *ev in walk:
+        if kind == "gce":
+            gce = ev[0]
+            # a cut GCE is the last block: only the fields read must exist
+            if not gce or (gce[0] & 0x01 and len(gce) < 4):
+                raise ValueError("truncated GIF extension")
+            pending_delay = int.from_bytes(gce[1:3], "little")
+            transparent_idx = gce[3] if gce[0] & 0x01 else None
+            continue
+        left, top, fw, fh, fpacked, lct, min_code, data = ev
+        idx = _gif_lzw_decode(min_code, data, fw * fh)
+        if len(idx) < fw * fh:
+            raise ValueError("truncated GIF frame raster")
+        pal = lct or gct
+        if not pal:
+            raise ValueError("GIF frame without a palette")
+        arr = np.frombuffer(idx[: fw * fh], dtype=np.uint8).reshape(fh, fw)
+        if fpacked & 0x40:
+            arr = _gif_deinterlace(arr)
+        pal_arr = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
+        if arr.max() >= len(pal_arr):
+            raise ValueError("GIF palette index out of range")
+        rgb = pal_arr[arr]  # (fh, fw, 3)
+        region = canvas[top : top + fh, left : left + fw]
+        if region.shape[:2] != (fh, fw):
+            raise ValueError("GIF frame rect outside logical screen")
+        if transparent_idx is not None:
+            opaque = arr != transparent_idx
+            region[opaque] = rgb[opaque]
         else:
-            raise ValueError(f"unknown GIF block id 0x{block:02x}")
+            region[...] = rgb
+        yield _luma(canvas), pending_delay
+        pending_delay = 0
+        transparent_idx = None  # GCE applies to ONE image block
 
 
 def _gif_frame_delays(content: bytes) -> list:
-    """Per-frame GCE delays (centiseconds) via a structure-only walk —
-    image data sub-blocks are SKIPPED, not LZW-decoded, so reading the
-    timeline of a long animation costs O(bytes) with no canvas at all.
-    Raises ValueError for payloads whose block structure is broken
-    (same contract as the decode walk, minus raster-level errors)."""
-    if content[:6] not in (b"GIF87a", b"GIF89a") or len(content) < 13:
-        raise ValueError("not a GIF")
-    packed = content[10]
-    pos = 13
-    if packed & 0x80:
-        pos += 3 * (2 << (packed & 7))
+    """Per-frame GCE delays (centiseconds) — the last Graphic Control
+    delay before each image — read off :func:`_gif_blocks`. Image data
+    is never LZW-decoded, so reading the timeline of a long animation
+    costs O(bytes) with no canvas at all. Raises ValueError for payloads
+    whose block structure is broken (same contract as the decode walk,
+    minus raster-level errors)."""
+    walk = _gif_blocks(content)
+    next(walk)
     delays_cs: list = []
     pending_delay = 0
-    while pos < len(content):
-        block = content[pos]
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            if pos + 1 >= len(content):
-                raise ValueError("truncated GIF extension")
-            label = content[pos + 1]
-            if label == 0xF9 and pos + 2 < len(content) and content[pos + 2] >= 4:
-                pending_delay = int.from_bytes(content[pos + 4 : pos + 6], "little")
-            pos = _gif_skip_subblocks(content, pos + 2)
-        elif block == 0x2C:  # image descriptor
-            if pos + 10 > len(content):
-                raise ValueError("truncated GIF image descriptor")
-            fpacked = content[pos + 9]
-            pos += 10
-            if fpacked & 0x80:
-                pos += 3 * (2 << (fpacked & 7))
-            pos += 1  # LZW min code size
-            while pos < len(content) and content[pos] != 0:
-                pos += content[pos] + 1
-            pos += 1
+    for kind, *ev in walk:
+        if kind == "gce":
+            pending_delay = int.from_bytes(ev[0][1:3], "little")
+        else:
             delays_cs.append(pending_delay)
             pending_delay = 0
-        else:
-            raise ValueError(f"unknown GIF block id 0x{block:02x}")
     if not delays_cs:
         raise ValueError("GIF without an image frame")
     return delays_cs
@@ -2466,21 +2501,8 @@ def audio_pcm_mono(content: bytes) -> tuple[int, list]:
     as per-sample ``sum(channels) // n_channels`` — floor division, so
     the mixdown replays identically anywhere. Anything else raises
     ValueError (the tolerant wrapper turns that into an err row)."""
-    import struct
-
     if content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-        fmt = None
-        data = b""
-        pos = 12
-        while pos + 8 <= len(content):
-            cid = content[pos : pos + 4]
-            csz = struct.unpack_from("<I", content, pos + 4)[0]
-            body = content[pos + 8 : pos + 8 + csz]
-            if cid == b"fmt " and len(body) >= 16:
-                fmt = struct.unpack_from("<HHIIHH", body, 0)
-            elif cid == b"data":
-                data = body
-            pos += 8 + csz + (csz & 1)
+        fmt, data = _wav_chunks(content)
         if fmt is None:
             raise ValueError("WAV without a valid fmt chunk")
         audio_fmt, n_ch, rate, _brate, _align, bits = fmt
@@ -2506,29 +2528,13 @@ def audio_pcm_mono(content: bytes) -> tuple[int, list]:
             samples.append(acc // n_ch)
         return rate, samples
     if content[:4] == b"fLaC":
-        # one metadata walk: STREAMINFO rate/bps + the frames offset
-        pos, rate, bps = 4, None, None
-        while pos + 4 <= len(content):
-            hdr = content[pos]
-            blen = int.from_bytes(content[pos + 1 : pos + 4], "big")
-            body = content[pos + 4 : pos + 4 + blen]
-            if (hdr & 0x7F) == 0 and rate is None:
-                if len(body) < 18:
-                    raise ValueError("truncated FLAC STREAMINFO block")
-                rate = (body[10] << 12) | (body[11] << 4) | (body[12] >> 4)
-                bps = (((body[12]) & 0x01) << 4 | (body[13] >> 4)) + 1
-            pos += 4 + blen
-            if hdr & 0x80:
-                break
-        if rate is None or not rate:
+        info, frames_start, has_frames = _flac_stream(content)
+        if info is None or not info[0]:
             raise ValueError("FLAC container without a valid STREAMINFO")
-        if not (
-            pos + 2 <= len(content)
-            and content[pos] == 0xFF
-            and (content[pos + 1] & 0xFC) == 0xF8
-        ):
+        if not has_frames:
             raise ValueError("FLAC payload has no audio frames to hash")
-        pcm_rate, channels = _flac_pcm(content, pos, rate, bps)
+        rate, bps, _total = info
+        pcm_rate, channels = _flac_pcm(content, frames_start, rate, bps)
         if not channels or not channels[0]:
             raise ValueError("FLAC payload decoded to zero samples")
         n_ch = len(channels)

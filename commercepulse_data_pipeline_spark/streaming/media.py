@@ -3,7 +3,8 @@
 out).
 
 Per micro-batch (``foreachBatch``): decode/featurize the batch through
-the same Arrow-batched ``mapInPandas`` path the batch operator uses
+``multimodal.extract_features_tolerant`` — the one Arrow-batched
+feature-row loop, which the strict batch operator also runs
 (``decoder=`` picks the deterministic fake codec or ``real_decode``'s
 pure-Python decoders), and land the feature rows under the batch's own
 ``ingest_batch=N`` partition — the replay-idempotent overwrite contract
@@ -22,73 +23,16 @@ with ``sources.readers.compact_streaming_index`` like every other store.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 
-from commercepulse_data_pipeline_spark.multimodal import (
-    FEATURE_SCHEMA,
+# the feature-row loop lives in multimodal; both names stay importable
+# from here
+from commercepulse_data_pipeline_spark.multimodal import (  # noqa: F401
+    FEATURE_ERR_SCHEMA,
     DeterministicFakeDecoder,
-    _chunked,
+    extract_features_tolerant,
 )
 from commercepulse_data_pipeline_spark.streaming import batches
-
-# fresh StructType — StructType.add MUTATES its receiver, which would
-# corrupt the shared batch-path FEATURE_SCHEMA
-from pyspark.sql import types as T  # noqa: E402
-
-FEATURE_ERR_SCHEMA = T.StructType(
-    [*FEATURE_SCHEMA.fields, T.StructField("decode_error", T.StringType())]
-)
-
-
-def extract_features_tolerant(
-    media: DataFrame,
-    *,
-    decoder=DeterministicFakeDecoder.decode,
-    batch_rows: int = 64,
-    on_error: str = "null",
-) -> DataFrame:
-    """``multimodal.extract_features`` with a per-row error boundary:
-    undecodable payloads yield NULL fields + ``decode_error`` instead of
-    failing the task (``on_error="raise"`` restores strict mode)."""
-    import pandas as pd
-
-    strict = on_error == "raise"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _chunked(batches, batch_rows):
-            out = []
-            for _, row in pdf.iterrows():
-                rec = {
-                    "media_id": row["media_id"],
-                    "modality": row["modality"],
-                    "width": None,
-                    "height": None,
-                    "duration_sec": None,
-                    "feature": None,
-                    "decode_error": None,
-                }
-                try:
-                    d = decoder(row["content"], row["modality"])
-                    rec.update(
-                        width=d.get("width"),
-                        height=d.get("height"),
-                        duration_sec=d.get("duration_sec"),
-                        feature=d.get("feature"),
-                    )
-                except Exception as exc:  # noqa: BLE001 — quarantine, don't wedge
-                    if strict:
-                        raise
-                    rec["decode_error"] = f"{type(exc).__name__}: {exc}"
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FEATURE_ERR_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "modality", "content").mapInPandas(
-        run, FEATURE_ERR_SCHEMA
-    )
 
 
 def media_features_batch(

@@ -2784,3 +2784,107 @@ def test_image_hash_batch_drops_degenerate_family(spark, tmp_path):
     flooded = {(r.id_a, r.id_b) for r in
                spark.read.parquet(f"{store2}/pairs").collect()}
     assert len(flooded) == 1 + 6  # the real pair + C(4,2) solid junk
+
+
+def test_truncated_containers_raise_valueerror():
+    """Every cut of a GIF, PNG, WAV, FLAC and TIFF payload, plus the two
+    malformed GIFs of test_sample_frames_malformed_gif_err_row, either
+    decodes or raises ValueError on each entry point — the container
+    walks' bounds checks never leak IndexError or struct.error. The two
+    other exits are not walk errors: zlib's own error for a cut PNG IDAT
+    stream, and real_decode's NotImplementedError once a cut drops the
+    magic bytes."""
+    import zlib
+
+    import numpy as np
+
+    from commercepulse_data_pipeline_spark.multimodal import (
+        audio_pcm_mono,
+        gif_frame_rasters,
+        image_gray_raster,
+    )
+
+    pal = bytes([0, 0, 0, 255, 0, 0, 0, 255, 0, 0, 0, 255])
+    frames = [bytes((i * k) % 4 for i in range(30)) for k in (1, 3)]
+    samples = _audio_test_samples("tone", 64)
+    gray = np.arange(30, dtype=np.uint8).reshape(5, 6)
+    payloads = {
+        "gif": _gif_bytes(6, 5, frames, pal, delays=[10, 20]),
+        "png": _png_bytes(4, 3, bytes(range(36)), filters=[0, 1, 4]),
+        "wav": _wav_from_samples(samples),
+        "flac": _flac_full([samples], 16, 8000,
+                           [_flac_frame_enc([samples], 16, 0, ["fixed2"])]),
+        "tiff": _tiff_raster_bytes(gray, b"MM"),
+    }
+    cases = [(kind, p[:n]) for kind, p in payloads.items() for n in range(len(p))]
+    cases += [
+        ("gif", b"GIF89a" + bytes([4, 0, 4, 0, 0, 0, 0]) + b"\x2c\x01"),
+        ("gif", b"GIF89a" + bytes([4, 0, 4, 0, 0, 0, 0]) + b"\x21"),
+    ]
+    entries = {
+        "real_decode": lambda b: real_decode(b, "image"),
+        "image_gray_raster": image_gray_raster,
+        "gif_frame_rasters": gif_frame_rasters,
+        "audio_pcm_mono": audio_pcm_mono,
+    }
+    for kind, blob in cases:
+        for name, fn in entries.items():
+            allowed = (ValueError,)
+            if kind == "png" and name in ("real_decode", "image_gray_raster"):
+                allowed += (zlib.error,)
+            if name == "real_decode":
+                allowed += (NotImplementedError,)
+            try:
+                fn(blob)
+            except allowed:
+                pass
+
+
+def test_one_walker_per_container():
+    """Each media container layout is parsed inside exactly one function
+    of multimodal.py: the PNG b"IHDR" chunk id, the GIF ``== 0x2C``
+    image-descriptor branch, the WAV b"fmt " chunk id, the FLAC
+    STREAMINFO ``(hdr & 0x7F) == 0`` test and the TIFF 12-byte IFD entry
+    read (``"HHI"``). A second hand-written walker fails this."""
+    import ast
+    import pathlib
+
+    from commercepulse_data_pipeline_spark import multimodal
+
+    def const(node, value):
+        return isinstance(node, ast.Constant) and node.value == value
+
+    def eq_const(node, value):
+        return isinstance(node, ast.Compare) and isinstance(node.ops[0], ast.Eq) and any(
+            const(c, value) for c in (node.left, *node.comparators)
+        )
+
+    markers = {
+        "png IHDR": lambda n: const(n, b"IHDR"),
+        "gif image descriptor": lambda n: eq_const(n, 0x2C),
+        "wav fmt": lambda n: const(n, b"fmt "),
+        "flac STREAMINFO": lambda n: eq_const(n, 0) and isinstance(n.left, ast.BinOp)
+        and isinstance(n.left.op, ast.BitAnd) and const(n.left.right, 0x7F),
+        "tiff IFD entry": lambda n: isinstance(n, ast.Constant)
+        and isinstance(n.value, str) and n.value.endswith("HHI"),
+    }
+    found = {name: set() for name in markers}
+
+    def scan(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, f"{owner}.{child.name}".lstrip("."))
+                continue
+            for name, hit in markers.items():
+                if hit(child):
+                    found[name].add(owner or "<module>")
+            scan(child, owner)
+
+    scan(ast.parse(pathlib.Path(multimodal.__file__).read_text()), "")
+    assert found == {
+        "png IHDR": {"_png_chunks"},
+        "gif image descriptor": {"_gif_blocks"},
+        "wav fmt": {"_wav_chunks"},
+        "flac STREAMINFO": {"_flac_stream"},
+        "tiff IFD entry": {"_tiff_ifds"},
+    }

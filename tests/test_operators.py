@@ -1125,6 +1125,7 @@ def test_pin_policy_reliable_checkpoint_same_output(spark, tmp_path):
     must be identical and checkpoint files must actually land in the
     directory."""
     import os
+    from urllib.parse import urlparse
 
     from commercepulse_data_pipeline_spark.functions.pins import (
         get_pin_policy,
@@ -1144,6 +1145,10 @@ def test_pin_policy_reliable_checkpoint_same_output(spark, tmp_path):
     set_pin_policy(checkpoint_dir=ckpt)
     try:
         assert get_pin_policy() == ckpt
+        # the policy set the SparkContext's checkpoint dir before any pin
+        # ran (Spark appends a per-context subdirectory)
+        got = spark.sparkContext.getCheckpointDir()
+        assert got is not None and urlparse(got).path.startswith(ckpt + "/")
         reliable = sorted(
             (r.doc_id, r.lang)
             for r in temperature_mixture(
