@@ -187,42 +187,13 @@ def cmd_dims(args) -> int:
 
 
 def cmd_clean_corpus(args) -> int:
-    """Training-corpus cleaning pipeline (extension tier), end to end:
-
-        optional HTML-to-text extraction (--html-col: the crawl-funnel
-          front stage — tag/script/style strip + link-density block
-          filter, operators/text.py::html_extract)
-        → optional per-source boilerplate strip (--strip-boilerplate:
-          within-source template windows spliced from every occurrence,
-          BEFORE dedup so shared chrome can't fake near-dups)
-        → scrub (line dedup + PII redaction)
-        → exact dedup (content hash, lowest id wins)
-        → near-dup clusters (MinHash pairs — or, with --pair-source
-          semantic, model-free tfidf-hashed-vector cosine pairs —
-          optionally gated by --confirm-embeddings: pairs must ALSO
-          score cosine ≥ --confirm-tau on a provided embedding table
-          before anything is dropped (two-signal precision mode)
-          → connected components)
-          → keep the best-quality member per cluster
-        → optional substring-level passage dedup (--passage-dedup:
-          cross-doc duplicated passages spliced out of every
-          non-canonical occurrence, Lee et al. 2022; docs falling below
-          --min-remaining-tokens are dropped)
-        → optional DSIR selection (--dsir-target: keep the --dsir-top-k
-          docs ranked by hashed-ngram log-likelihood ratio vs the target
-          corpus, Xie et al. 2023 — after dedup, before the rate sample)
-        → optional CE-band selection (--ce-bands: keep only the listed
-          CCNet perplexity bands — head,middle,tail over the corpus's own
-          unigram LM, histogram two-pass; Wenzek et al. 2020 keep
-          head+middle)
-        → optional model-based quality gate (--quality-model: keep docs
-          whose hashed-feature NB log-odds under a train-quality model
-          is >= --quality-threshold — the fastText-style supervised
-          filter, Joulin et al. 2016 / operators/classifier.py)
-        → deterministic sample (md5-bucket, reproducible/incremental)
-        → optional train/val/test split manifest (--splits; content-keyed,
-          stable under incremental reruns)
-        → sharded next-fit packing into fixed-token context windows
+    """Training-corpus cleaning pipeline (extension tier): the stage
+    table of operators/curation.py::clean_corpus_stages (optional HTML
+    extraction and pre-dedup gates/strips → scrub → exact dedup →
+    near-dup clusters keep-best → optional passage dedup, DSIR, CE-band
+    and quality selection → deterministic sample → optional split
+    manifest), applied by ``curation.run``, then sharded next-fit packing
+    into fixed-token context windows.
 
     Writes <out>/corpus (cleaned docs + window assignment) and
     <out>/windows (one row per context window) as parquet. Every stage is
@@ -230,428 +201,20 @@ def cmd_clean_corpus(args) -> int:
 
     ``--quarantine`` additionally writes <out>/quarantine: one
     (doc_id, reason) row per INPUT doc absent from the output, tagged
-    with the FIRST stage that dropped it (stage order: repetitive →
-    code → boilerplate_hollowed → repeat_hollowed → exact_dup → near_dup →
-    passage_hollowed → not_dsir_selected → no_tokens → ce_band_dropped →
-    classifier_low_quality → not_sampled; no_tokens = the doc tokenizes
-    to zero tokens, so no CE
-    score exists and --ce-bands drops it even when all three bands are
-    requested) — the auditable
-    exclusion table (the CLI-chain form of
-    operators/text.py::quarantine_report; the last two reasons are RATE
-    decisions, not quality judgments). Each stage's complement is taken
-    against that stage's own input, so quarantine ∪ kept partitions the
-    input exactly. The flag adds localCheckpoints on the stage outputs
-    ONLY its complements re-consume (stripped/derep/deduped/spliced/
-    topk), so the rejected sides never re-run the expensive
-    splice/pair-generation lineage; the clusters and with_tokens
-    checkpoints are UNCONDITIONAL — those frames are double-consumed on
-    the default path too (the r12 chain probe measured both cuts paying
-    for themselves flag-off, SCALE.md)."""
-    from functools import reduce as _reduce
+    with the FIRST stage that dropped it (reason order in the curation
+    module docstring), so quarantine ∪ kept partitions the input
+    exactly."""
+    from commercepulse_data_pipeline_spark.operators import curation, packing
 
-    from pyspark.sql import DataFrame
-
-    from commercepulse_data_pipeline_spark.operators import dedup as dd
-    from commercepulse_data_pipeline_spark.operators import graph
-    from commercepulse_data_pipeline_spark.operators import packing
-    from commercepulse_data_pipeline_spark.operators import text as tx
-    from commercepulse_data_pipeline_spark.operators.sampling import (
-        assign_splits,
-        deterministic_sample,
-    )
-
-    # Parse + validate CLI stage specs UP FRONT (ADVICE r12): a typo like
-    # --ce-bands 'head,bogus' used to be caught only inside the pipeline,
-    # AFTER the eager exact-dedup and cluster localCheckpoint jobs had
-    # already burned the whole scrub/dedup/clustering compute. Same class
-    # of late failure for a malformed --splits spec — both now exit
-    # before a SparkSession even starts, with the same messages.
-    keep_bands: set[str] | None = None
-    if args.ce_bands:
-        keep_bands = {b.strip() for b in args.ce_bands.split(",") if b.strip()}
-        bad = keep_bands - {"head", "middle", "tail"}
-        if bad or not keep_bands:
-            raise SystemExit(
-                f"--ce-bands: want a comma list from head,middle,tail — got {args.ce_bands!r}"
-            )
-    split_fracs: dict[str, float] | None = None
-    if args.splits:
-        split_fracs = {}
-        for spec in args.splits.split(","):
-            name, eq, frac = spec.partition("=")
-            name = name.strip()
-            try:
-                value = float(frac)
-            except ValueError:
-                value = None
-            if not eq or not name or value is None:
-                raise SystemExit(
-                    f"--splits: bad spec {spec!r} (want name=fraction, "
-                    f"e.g. 'train=0.9,val=0.05,test=0.05')"
-                )
-            if name in split_fracs:
-                raise SystemExit(f"--splits: duplicate split name {name!r}")
-            split_fracs[name] = value
-
+    stages = curation.clean_corpus_stages(args, _spark)
     spark = _spark()
     docs = spark.read.parquet(args.docs)
+    if args.html_col and args.html_col not in docs.columns:
+        raise SystemExit(f"--html-col {args.html_col!r} not in {sorted(docs.columns)}")
+    if args.strip_boilerplate and "source" not in docs.columns:
+        raise SystemExit("--strip-boilerplate needs a 'source' column in --docs")
+    with_tokens, rejects = curation.run(docs, stages, args.quarantine)
 
-    if getattr(args, "html_col", None):
-        # HTML-to-text extraction FIRST (r15): real crawls arrive as
-        # markup; every stage below assumes extracted text. Map-only
-        # regex projection (operators/text.py::html_extract), then one
-        # id-keyed join to keep the input's other columns (source,
-        # lang, ...) on the extracted rows.
-        if args.html_col not in docs.columns:
-            raise SystemExit(
-                f"--html-col {args.html_col!r} not in {sorted(docs.columns)}"
-            )
-        extracted = tx.html_extract(docs, args.html_col, "doc_id").select(
-            "doc_id", "text"
-        )
-        # cut the regex lineage ONCE: every downstream stage (repetition
-        # gate, scrub, dedup pair source, quality, the quarantine
-        # complements) consumes docs, and without the checkpoint each
-        # re-runs the whole extraction chain + the id join — measured
-        # +5.6s on the 20k chain probe, 0 with the cut (r15)
-        docs = (
-            docs.drop("text", args.html_col)
-            .join(extracted, "doc_id")
-            .localCheckpoint(eager=True)
-        )
-
-    quarantine = bool(getattr(args, "quarantine", False))
-    rejects: list[DataFrame] = []
-
-    def _reject(ids: DataFrame, reason: str) -> None:
-        rejects.append(ids.select(F.col("doc_id"), F.lit(reason).alias("reason")))
-
-    if args.max_dup_line_frac < 1.0 or args.max_top_ngram_frac < 1.0:
-        # Gopher-style boilerplate gate (map-only), on the RAW text and
-        # BEFORE scrub: scrub's line-dedup removes exactly the repeats
-        # dup_line_frac measures, so gating after it would be a no-op.
-        # Dropping repetitive docs first also shrinks the shingle volume
-        # the pairwise dedup stages shuffle.
-        scores = tx.repetition_scores(docs, "text")
-        keep_rep = (F.col("dup_line_frac") <= args.max_dup_line_frac) & (
-            F.col("top_ngram_frac") <= args.max_top_ngram_frac
-        )
-        if quarantine:
-            _reject(scores.where(~keep_rep), "repetitive")
-        docs = scores.where(keep_rep).drop("dup_line_frac", "top_ngram_frac")
-    if args.drop_code:
-        # code-vs-prose routing gate (map-only, RAW text — scrub's
-        # redaction would perturb the symbol counts): a prose corpus
-        # drops flagged docs here so the dedup stages never shingle
-        # them; route the quarantine table to a code-specific pipeline
-        # instead of discarding (the operator's intended use)
-        flags = tx.code_detect(docs, "text", "doc_id").where(F.col("is_code"))
-        if quarantine:
-            _reject(flags, "code")
-        # no broadcast hint: the flagged set is corpus-proportional (code
-        # is commonly 10-30% of a mixed crawl), so let AQE pick the join
-        # strategy like the other quarantine stages do
-        docs = docs.join(flags.select("doc_id"), "doc_id", "left_anti")
-    if args.strip_boilerplate:
-        # per-source template removal BEFORE dedup: shared chrome makes
-        # otherwise-distinct docs look like near-dups, so stripping it
-        # first both fixes the text and keeps the MinHash stage honest
-        if "source" not in docs.columns:
-            raise SystemExit(
-                "--strip-boilerplate needs a 'source' column in --docs"
-            )
-        stripped = tx.strip_boilerplate(
-            docs,
-            window_tokens=args.passage_window,
-            min_docs=args.min_passage_docs,
-        )
-        keep_strip = (
-            F.col("n_tokens") - F.col("n_tokens_removed")
-            >= args.min_remaining_tokens
-        )
-        if quarantine:
-            # consumed twice below (keep + reject) — cut the splice lineage
-            stripped = stripped.localCheckpoint(eager=True)
-            _reject(stripped.where(~keep_strip), "boilerplate_hollowed")
-        docs = (
-            stripped.where(keep_strip)
-            .withColumn("text", F.col("text_stripped"))
-            .drop(
-                "text_stripped", "n_tokens", "n_tokens_removed",
-                "n_boiler_windows",
-            )
-        )
-    if args.strip_repeats:
-        # WITHIN-doc repeated-span removal (loop artifacts, paragraphs
-        # duplicated down a page) BEFORE scrub/dedup: repeats inflate a
-        # doc's shingle mass, so de-repeating first keeps the pair
-        # stages honest the same way boilerplate stripping does
-        derep = tx.strip_intradoc_repeats(
-            docs,
-            window_tokens=args.passage_window,
-            min_repeats=args.min_repeats,
-        )
-        keep_derep = (
-            F.col("n_tokens") - F.col("n_tokens_removed")
-            >= args.min_remaining_tokens
-        )
-        if quarantine:
-            derep = derep.localCheckpoint(eager=True)
-            _reject(derep.where(~keep_derep), "repeat_hollowed")
-        docs = (
-            derep.where(keep_derep)
-            .withColumn("text", F.col("text_derepeated"))
-            .drop("text_derepeated", "n_tokens", "n_tokens_removed", "n_repeat_windows")
-        )
-    scrubbed = tx.scrub(docs, "text").withColumn("text", F.col("scrubbed")).drop("scrubbed")
-    # Materialize the post-strip/scrub/dedup corpus ONCE: downstream it is
-    # consumed by the pair source, the quality scorer and the survivor
-    # anti-join (plus every final write), and without a lineage cut each
-    # consumer re-runs the whole splice+scrub+dedup chain — the r11
-    # end-to-end chain probe (SCALE.md) is what surfaced the recompute.
-    # localCheckpoint = executor-local storage, the same single-node
-    # posture as connected_components' default (pass a reliable
-    # checkpoint dir there for the preemptible-cluster variant).
-    exact = dd.exact_dedup(scrubbed, "text", "doc_id").localCheckpoint(eager=True)
-    if quarantine:
-        _reject(
-            scrubbed.join(exact.select("doc_id"), "doc_id", "left_anti"),
-            "exact_dup",
-        )
-
-    if args.pair_source == "semantic":
-        # model-free SEMANTIC near-dup pairs: tfidf hashed vectors →
-        # LSH-blocked self-kNN → cosine threshold. Catches paraphrase
-        # duplicates (same content words, different order/stopwords)
-        # that token-shingle MinHash misses; MinHash remains the default
-        # for verbatim/boilerplate near-dups.
-        from commercepulse_data_pipeline_spark.operators import (
-            similarity as _sim,
-        )
-
-        # one materialization: knn_join_self consumes its corpus three
-        # times (bucketing + both sides of the pair-score join), and the
-        # tfidf vector build is itself a multi-shuffle lineage — without
-        # the cut it runs three times inside the one pairs job (r11
-        # chain-probe finding, SCALE.md)
-        vecs = (
-            tx.hashed_doc_vectors(
-                exact, "text", "doc_id", dim=64, weighting="tfidf"
-            )
-            .select(F.col("doc_id").alias("vec_id"), F.col("vector").alias("embedding"))
-            .localCheckpoint(eager=True)
-        )
-        # recall-oriented LSH knobs: paraphrase pairs sit near the
-        # threshold (cos ~0.8 → ~0.8 per-bit agreement), where the
-        # operator's default 8-planes/4-tables finds a pair with only
-        # ~50% probability; 6 planes × 8 tables lifts that to ~90% while
-        # the cosine threshold still rejects false candidates exactly
-        knn = _sim.knn_join_self(
-            vecs, k=5, n_planes=6, n_tables=8,
-            id_col="vec_id", vec_col="embedding", dim=64,
-        )
-        pairs = knn.where(
-            (F.col("cosine_sim") >= args.semantic_tau)
-            & (F.col("query_id") < F.col("neighbor_id"))
-        ).select(
-            F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
-        )
-    elif args.confirm_embeddings:
-        pairs = dd.minhash_candidate_pairs(exact, "text", "doc_id")
-    else:
-        # cluster-only consumer: STAR edges (r16) — identical components,
-        # CC input linear (not quadratic) in band-bucket occupancy
-        pairs = dd.minhash_star_edges(exact, "text", "doc_id")
-    if args.confirm_embeddings:
-        # two-signal dedup (precision mode): the lexical blocker's
-        # candidate pairs must ALSO agree semantically before any doc is
-        # dropped — score each pair with exact pairwise cosine over the
-        # provided embedding table (operators/similarity.py::score_pairs,
-        # O(|pairs|) joins, never generates pairs) and keep only pairs at
-        # or above --confirm-tau. A pair with a missing or zero-norm
-        # vector has NO semantic evidence and is NOT confirmed — both
-        # docs survive (conservative: precision mode never drops a doc on
-        # lexical evidence alone).
-        from commercepulse_data_pipeline_spark.operators import (
-            similarity as _simc,
-        )
-
-        emb = spark.read.parquet(args.confirm_embeddings)
-        pairs = (
-            _simc.score_pairs(pairs, emb)
-            .where(F.col("cosine_sim") >= args.confirm_tau)
-            .select("id_a", "id_b")
-        )
-    # clusters is ALWAYS double-consumed (keep_best_per_cluster + the
-    # losers anti-join put its subtree in the final plan twice), and its
-    # lineage is the pair generation + iterative CC — the r12 quarantine
-    # probe measured the cut paying for itself even on the base chain
-    # (20k-doc chain ran FASTER with the flag on before this hoist)
-    clusters = graph.dedup_clusters(pairs).localCheckpoint(eager=True)
-    quality = tx.quality_score(exact, "text").select("doc_id", "quality_score")
-    keep = graph.keep_best_per_cluster(clusters, quality)
-    # drop clustered docs that are NOT the kept representative
-    losers = clusters.join(
-        keep.select(F.col("kept_doc_id").alias("doc_id")), "doc_id", "left_anti"
-    ).select("doc_id")
-    deduped = exact.join(losers, "doc_id", "left_anti")
-    if quarantine:
-        _reject(losers, "near_dup")
-        # downstream complements (dsir/sample) re-consume deduped
-        deduped = deduped.localCheckpoint(eager=True)
-
-    if args.passage_dedup:
-        # whole-doc dedup above removes duplicate DOCUMENTS; this splices
-        # duplicated PASSAGES out of otherwise-distinct survivors (one
-        # canonical occurrence kept), then drops hollowed-out docs
-        spliced = tx.dedup_passages(
-            deduped,
-            window_tokens=args.passage_window,
-            min_docs=args.min_passage_docs,
-        )
-        keep_passage = (
-            F.col("n_tokens") - F.col("n_tokens_removed")
-            >= args.min_remaining_tokens
-        )
-        if quarantine:
-            spliced = spliced.localCheckpoint(eager=True)
-            _reject(spliced.where(~keep_passage), "passage_hollowed")
-        deduped = (
-            spliced.where(keep_passage)
-            .withColumn("text", F.col("text_deduped"))
-            .drop("text_deduped", "n_tokens", "n_tokens_removed", "n_dup_windows")
-        )
-
-    if args.dsir_target:
-        # DSIR selection AFTER dedup (scoring duplicates would just
-        # re-rank copies) and BEFORE the rate sample: keep the docs that
-        # look most like the target distribution, then thin uniformly
-        from commercepulse_data_pipeline_spark.operators.sampling import (
-            dsir_importance,
-        )
-
-        tgt = spark.read.parquet(args.dsir_target)
-        scored = dsir_importance(
-            deduped.select("doc_id", "text"), tgt.select("text")
-        )
-        topk = (
-            scored.orderBy(
-                F.col("dsir_logratio").desc(), F.col("doc_id").asc()
-            )
-            .limit(args.dsir_top_k)
-            .select("doc_id")
-        )
-        if quarantine:
-            # topk is consumed twice under the flag; it is a <= top_k-row
-            # id frame, so the checkpoint is pennies next to re-running
-            # the DSIR scoring join for the reject side
-            topk = topk.localCheckpoint(eager=True)
-            _reject(deduped.join(topk, "doc_id", "left_anti"), "not_dsir_selected")
-        deduped = deduped.join(F.broadcast(topk), "doc_id", "left_semi")
-
-    if args.ce_bands:
-        # CCNet-style perplexity-band selection AFTER dedup (scoring
-        # duplicates would weight copies) and BEFORE the rate sample:
-        # band every doc by unigram-LM bits-per-token via the histogram
-        # two-pass (global, no per-row sort — works with or without a
-        # lang column), keep only the requested bands. Wenzek et al.
-        # 2020 keep head+middle; tail = rare-word soup / noise.
-        from commercepulse_data_pipeline_spark.operators.sampling import (
-            score_bands_histogram,
-        )
-
-        # (keep_bands parsed + validated up front, before any Spark job)
-        ce = tx.unigram_cross_entropy(deduped.select("doc_id", "text"), "text")
-        if quarantine:
-            # ce is consumed twice under the flag (the band map AND the
-            # no_tokens anti-join below) and its lineage is the vocab
-            # join — cut it BEFORE deriving the band map so the CE
-            # scoring runs once
-            ce = ce.localCheckpoint(eager=True)
-        banded = score_bands_histogram(ce, "bits_per_token")
-        kept_ids = banded.where(F.col("band").isin(*sorted(keep_bands))).select(
-            "doc_id"
-        )
-        if quarantine:
-            # a doc whose text tokenizes to ZERO tokens has no CE row at
-            # all (no perplexity is defined for it), so it can never band
-            # — it is dropped even by '--ce-bands head,middle,tail'.
-            # Quarantine it under its own reason (ADVICE r12: tagging it
-            # ce_band_dropped misstated why it vanished).
-            kept_ids = kept_ids.localCheckpoint(eager=True)
-            _reject(
-                deduped.join(ce.select("doc_id"), "doc_id", "left_anti"),
-                "no_tokens",
-            )
-            _reject(
-                deduped.join(ce.select("doc_id"), "doc_id", "left_semi")
-                .join(kept_ids, "doc_id", "left_anti"),
-                "ce_band_dropped",
-            )
-        deduped = deduped.join(kept_ids, "doc_id", "left_semi")
-
-    if getattr(args, "quality_model", None):
-        # model-based quality gate (r15): score every survivor under the
-        # persisted NB model (train-quality artifact) and keep docs at or
-        # above the log-odds threshold. Runs AFTER dedup (scoring
-        # duplicates would just re-judge copies) and after the
-        # distribution selectors, BEFORE the rate sample — it is a
-        # quality judgment, not a rate decision. The model (a
-        # ~n_buckets-row table) broadcasts; scoring is one feature
-        # explode + one broadcast join per doc.
-        from commercepulse_data_pipeline_spark.operators import (
-            classifier as _clf,
-        )
-
-        model, meta = _clf.read_model(spark, args.quality_model)
-        if meta.get("kind", "nb-binary-v1") != "nb-binary-v1":
-            raise SystemExit(
-                f"--quality-model: {args.quality_model} is a "
-                f"{meta.get('kind')!r} artifact; the quality gate needs a "
-                f"BINARY model (train-quality without --multiclass)"
-            )
-        scored = _clf.nb_score(
-            deduped.select("doc_id", "text"), model,
-            n_buckets=meta["n_buckets"], salt=meta["salt"],
-        )
-        keep_ids = scored.where(
-            F.col("nb_logodds") >= args.quality_threshold
-        ).select("doc_id")
-        if quarantine:
-            keep_ids = keep_ids.localCheckpoint(eager=True)
-            _reject(
-                deduped.join(keep_ids, "doc_id", "left_anti"),
-                "classifier_low_quality",
-            )
-        deduped = deduped.join(keep_ids, "doc_id", "left_semi")
-
-    sampled = deterministic_sample(deduped, "doc_id", args.sample_rate, salt=args.salt)
-    if quarantine:
-        _reject(
-            deduped.join(sampled.select("doc_id"), "doc_id", "left_anti"),
-            "not_sampled",
-        )
-
-    if args.splits:
-        # train/val/test manifest AFTER all dedup/sampling (so the split
-        # fractions apply to what actually ships) — content-keyed, so a
-        # doc keeps its split across incremental reruns (no eval leakage);
-        # fracs parsed + validated up front, before any Spark job
-        fracs = split_fracs
-        # salt MUST differ from deterministic_sample's: with the same salt,
-        # every sample survivor has bucket < rate*2^32, so the split
-        # boundaries (computed over the full [0, 2^32) range) collapse —
-        # e.g. rate 0.1 with train=0.8 would put ALL rows in the last split
-        sampled = assign_splits(sampled, "doc_id", fracs, salt=args.salt + "split:")
-
-    # with_tokens is double-consumed (pack_sequences input + the corpus
-    # join), so without a cut the sample/splice chain above it runs twice
-    # inside the corpus-write action (r12 chain probe: 15.0 -> 13.8s at
-    # 20k docs with the cut)
-    with_tokens = sampled.withColumn(
-        "n_tokens", F.size(tx.tokens(F.col("text")))
-    ).localCheckpoint(eager=True)
     # packed feeds both the corpus join and the windows write; without the
     # persist each write would re-run the MinHash + iterative
     # connected-components DAG upstream of it
@@ -664,14 +227,11 @@ def cmd_clean_corpus(args) -> int:
     packing.packed_windows(packed).write.mode("overwrite").parquet(f"{args.out}/windows")
     quarantine_msg = ""
     n_out = corpus.count()  # corpus is cached by its write
-    if quarantine:
-        qdf = _reduce(DataFrame.unionByName, rejects)
-        qdf.write.mode("overwrite").parquet(f"{args.out}/quarantine")
+    if rejects is not None:
+        rejects.write.mode("overwrite").parquet(f"{args.out}/quarantine")
         n_q = spark.read.parquet(f"{args.out}/quarantine").count()
         quarantine_msg = f", {n_q} quarantined with reasons"
-        # kept + quarantined partitions the INPUT exactly, so derive the
-        # input count instead of counting `docs` (which by this point is
-        # the post-gate/post-strip frame and would understate it)
+        # kept + quarantined partitions the input exactly
         n_in = n_out + n_q
     else:
         n_in = docs.count()

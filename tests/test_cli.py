@@ -537,6 +537,25 @@ def test_clean_corpus_quarantine_reasons(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "out_noq/quarantine"))
 
 
+def test_clean_corpus_counts_input_as_read(spark, tmp_path, capsys):
+    """The summary line counts the input as read, not the frame left
+    after the pre-dedup gates: a 3-doc input whose repetition gate drops
+    one doc reports 3 docs in, with or without --quarantine."""
+    rows = [
+        (1, "another completely distinct document with its own vocabulary set"),
+        (2, "mail me at a@b.co and some unique words entirely different here"),
+        (3, "spam spam spam spam spam spam spam spam"),
+    ]
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(str(tmp_path / "docs"))
+    capsys.readouterr()
+    assert cli.main([
+        "clean-corpus", "--docs", str(tmp_path / "docs"),
+        "--out", str(tmp_path / "out"), "--capacity", "64",
+        "--max-top-ngram-frac", "0.5",
+    ]) == 0
+    assert "clean-corpus: 3 docs in -> 2 kept," in capsys.readouterr().out
+
+
 def test_clean_corpus_confirm_embeddings_gate(spark, tmp_path):
     """--confirm-embeddings (r12): a lexical near-dup pair is dropped
     only when the provided embeddings ALSO agree (cosine >= tau);
@@ -1055,10 +1074,13 @@ def test_cluster_table_report_occupancy_warns_on_dropped_bucket(
     assert "occupancy clean" in capsys.readouterr().out
 
 
-def test_train_quality_multiclass_artifact_and_gate_rejection(spark, tmp_path, capsys):
+def test_train_quality_multiclass_artifact_and_gate_rejection(
+    spark, tmp_path, capsys, monkeypatch
+):
     """r15 multiclass routing via the CLI: --multiclass trains the
     per-class model and stamps the artifact kind; the binary quality
-    gate REFUSES a multiclass artifact instead of mis-scoring."""
+    gate REFUSES a multiclass artifact instead of mis-scoring, and does
+    so before any chain work (exact dedup is stubbed to explode)."""
     from commercepulse_data_pipeline_spark import cli
     from commercepulse_data_pipeline_spark.operators import classifier as clf
 
@@ -1091,6 +1113,12 @@ def test_train_quality_multiclass_artifact_and_gate_rejection(spark, tmp_path, c
     spark.createDataFrame(
         [(1, "anything at all")], ["doc_id", "text"]
     ).write.parquet(str(tmp_path / "docs"))
+    from commercepulse_data_pipeline_spark.operators import dedup as dd
+
+    def _boom(*a, **k):
+        raise AssertionError("chain work ran before the --quality-model check")
+
+    monkeypatch.setattr(dd, "exact_dedup", _boom)
     import pytest as _pytest
     with _pytest.raises(SystemExit, match="BINARY"):
         cli.main([

@@ -268,6 +268,82 @@ def test_one_routine_splices_windows():
     assert namers == {"operators/text.py"}
 
 
+_CHAIN_REASONS = {
+    "repetitive", "code", "boilerplate_hollowed", "repeat_hollowed", "exact_dup",
+    "near_dup", "passage_hollowed", "not_dsir_selected", "no_tokens",
+    "ce_band_dropped", "classifier_low_quality", "not_sampled",
+}
+
+
+def test_quarantine_reasons_live_in_the_curation_module():
+    """The clean-corpus chain's quarantine reasons are spelled only in
+    ``operators/curation.py`` (its stage table), and neither
+    ``cmd_clean_corpus`` nor ``clean_corpus_batch`` keeps a ``_reject``
+    helper or a quarantine-only ``localCheckpoint`` — a hand-written
+    reject anywhere else fails here. ``"code"`` is also a column name,
+    so it counts only where it is used as a reason (``lit(...)``, a
+    ``reason=`` keyword, a ``Stage``'s first argument or a ``*reject*``
+    call). ``text.quarantine_report`` is a separate one-pass operator with
+    its own 3-reason order and is exempt."""
+    import ast
+    import pathlib
+
+    package = pathlib.Path(tx.__file__).resolve().parents[1]
+    spelled, hand_wired = {}, []
+
+    def name_of(call):
+        f = call.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", "") or ""
+
+    def visit(node, owner, module, as_reason):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, module, as_reason)
+                continue
+            if (
+                isinstance(child, ast.Constant)
+                and child.value in _CHAIN_REASONS
+                and (child.value != "code" or id(child) in as_reason)
+                and (module, owner) != ("operators/text.py", "quarantine_report")
+            ):
+                spelled.setdefault(module, set()).add(child.value)
+            visit(child, owner, module, as_reason)
+
+    for path in sorted(package.rglob("*.py")):
+        module = path.relative_to(package).as_posix()
+        tree = ast.parse(path.read_text())
+        as_reason = set()
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            name = name_of(call)
+            if name == "lit" or "reject" in name:
+                as_reason.update(id(a) for a in call.args)
+            if name == "Stage" and call.args:
+                as_reason.add(id(call.args[0]))
+            as_reason.update(id(k.value) for k in call.keywords if k.arg == "reason")
+        visit(tree, None, module, as_reason)
+        for fn in ast.walk(tree):
+            if not (isinstance(fn, ast.FunctionDef)
+                    and fn.name in ("cmd_clean_corpus", "clean_corpus_batch")):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Name) and node.id == "_reject" or (
+                    isinstance(node, ast.FunctionDef) and node.name == "_reject"
+                ):
+                    hand_wired.append((fn.name, "_reject"))
+                if isinstance(node, ast.If) and any(
+                    getattr(n, "id", getattr(n, "attr", None)) == "quarantine"
+                    for n in ast.walk(node.test)
+                ):
+                    hand_wired += [
+                        (fn.name, "localCheckpoint") for n in ast.walk(node)
+                        if isinstance(n, ast.Call) and name_of(n) == "localCheckpoint"
+                    ]
+    assert spelled == {"operators/curation.py": _CHAIN_REASONS}
+    assert hand_wired == []
+
+
 def test_simhash_near_dup(spark):
     df = spark.createDataFrame(
         [(1, "spark is a unified analytics engine for large scale data"),

@@ -1357,3 +1357,85 @@ def test_html_extract_matches_python_model(spark, frags):
     row = tx.html_extract(df).head()
     assert row.text == "\n".join(kept)
     assert (row.n_blocks, row.n_kept_blocks) == (nb, nk)
+
+
+# Every optional stage flag of clean-corpus the runner property draws
+# from (the quality gate shares the selection body of the DSIR/CE stages
+# and needs a trained model, so it is left to the CLI tests).
+_CURATION_FLAGS = {
+    "repetitive": ["--max-top-ngram-frac", "0.5"],
+    "code": ["--drop-code"],
+    "boilerplate": ["--strip-boilerplate"],
+    "repeats": ["--strip-repeats"],
+    "passage": ["--passage-dedup"],
+    "dsir": ["--dsir-top-k", "4"],
+    "ce": ["--ce-bands", "head,middle"],
+    "sample": ["--sample-rate", "0.6"],
+    "splits": ["--splits", "train=0.5,test=0.5"],
+}
+_CURATION_WORD = st.sampled_from(["alpha", "beta", "gamma", "delta", "spam", "x1", "x2"])
+
+
+def _clean_corpus_args(argv):
+    """The CLI's own parse of ``clean-corpus`` flags (defaults included)."""
+    from commercepulse_data_pipeline_spark import cli
+
+    got, real = [], cli.cmd_clean_corpus
+    cli.cmd_clean_corpus = lambda a: got.append(a) or 0
+    try:
+        cli.main(["clean-corpus", "--docs", "-", "--out", "-", *argv])
+    finally:
+        cli.cmd_clean_corpus = real
+    return got[0]
+
+
+@given(
+    flags=st.sets(st.sampled_from(sorted(_CURATION_FLAGS))),
+    docs=st.lists(
+        st.tuples(st.sampled_from(["A", "B"]), st.lists(_CURATION_WORD, max_size=10)),
+        min_size=1, max_size=12,
+    ),
+)
+@settings(**dict(_SETTINGS, max_examples=3))
+def test_curation_run_partitions_input_with_first_reason(spark, tmp_path, flags, docs):
+    """``curation.run`` under quarantine, over a random subset of the
+    clean-corpus stage flags: kept and quarantine are disjoint, their
+    union is the input, each doc has one row, and each quarantined doc's
+    reason is the first stage whose output lacks it — checked on the
+    stage prefixes run with quarantine off. A reason-None stage never
+    drops a doc (first[d] would be None)."""
+    from commercepulse_data_pipeline_spark.operators import curation
+
+    tgt = str(tmp_path / "dsir_target")
+    argv = ["--passage-window", "2", "--min-remaining-tokens", "3"]
+    for flag in sorted(flags):
+        argv += _CURATION_FLAGS[flag]
+    if "dsir" in flags:
+        spark.createDataFrame([("alpha beta gamma",)], "text string").write.mode(
+            "overwrite"
+        ).parquet(tgt)
+        argv += ["--dsir-target", tgt]
+    stages = curation.clean_corpus_stages(_clean_corpus_args(argv), lambda: spark)
+    df = spark.createDataFrame(
+        [(i, src, " ".join(words)) for i, (src, words) in enumerate(docs, 1)],
+        "doc_id long, source string, text string",
+    )
+    ids = set(range(1, len(docs) + 1))
+
+    kept, rejects = curation.run(df, stages, True)
+    kept_ids = [r.doc_id for r in kept.select("doc_id").collect()]
+    q = [(r.doc_id, r.reason) for r in rejects.collect()]
+    assert len(set(kept_ids)) == len(kept_ids)
+    assert len({d for d, _ in q}) == len(q)
+    assert set(kept_ids).isdisjoint(d for d, _ in q)
+    assert set(kept_ids) | {d for d, _ in q} == ids
+
+    # prefix k's output = stage k run over prefix k-1's output (pinned, so
+    # each stage executes once)
+    first: dict[int, str] = {}
+    prefix = df
+    for stage in stages:
+        prefix = curation.run(prefix, [stage], False)[0].localCheckpoint(eager=True)
+        for d in ids - {r.doc_id for r in prefix.select("doc_id").collect()}:
+            first.setdefault(d, stage.reason)
+    assert dict(q) == first
