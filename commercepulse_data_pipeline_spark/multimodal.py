@@ -30,7 +30,8 @@ path (``real_decode``), the hash raster path (``image_gray_raster``,
 ``gif_frame_rasters``) and the PCM path (``audio_pcm_mono``) keep their
 own rules on top of that walk. The walks' bounds checks raise
 ValueError, so a truncated container leaks no IndexError/struct.error
-from them (a cut PNG IDAT stream still surfaces ``zlib.error``).
+from them; the one IDAT inflate both PNG consumers share turns
+``zlib.error`` into ValueError too.
 ``tests/test_multimodal.py::test_one_walker_per_container`` fails on a
 second walker.
 
@@ -549,7 +550,10 @@ def _png_unfilter(idat: bytes, ihdr: tuple) -> bytes:
     # filtering operates on bytes: bpp = bytes per complete pixel, min 1
     bpp = max(1, (channels * bit_depth) // 8)
     stride = (width * channels * bit_depth + 7) // 8
-    raw = zlib.decompress(idat)
+    try:
+        raw = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"bad PNG IDAT stream: {e}") from e
     out = bytearray()
     prev = bytearray(stride)
     pos = 0

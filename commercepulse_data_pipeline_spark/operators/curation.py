@@ -324,10 +324,9 @@ def clean_corpus_stages(args, get_spark) -> list[Stage]:
         ), pin=False))
     if args.drop_code:
         # raw text too: scrub's redaction would perturb the symbol counts
-        stages.append(Stage("code", lambda df: df.join(
-            tx.code_detect(df, "text", "doc_id").where(F.col("is_code")).select("doc_id"),
-            "doc_id", "left_anti",
-        ), pin=False))
+        stages.append(Stage(
+            "code", lambda df: df.where(~tx.code_signals(F.col("text"))["is_code"]), pin=False
+        ))
     if args.strip_boilerplate:
         # before dedup, so shared chrome can't fake near-dups
         stages.append(_hollowed(

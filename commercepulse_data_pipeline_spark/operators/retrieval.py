@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
-from commercepulse_data_pipeline_spark.functions.pins import pin
 
 from ..functions.expr import let
 from .text import tokens
@@ -528,8 +527,11 @@ def bm25_topk_indexed(
     # the pruned scan once and the scoring join reads executor cache,
     # cutting the second listing+scan pass per query. The
     # PartitionFilters regression evidence moved to the probe subplan
-    # (tests/test_plans.py asserts it on _probed_postings directly).
-    probed = pin(_probed_postings(spark, path, terms, buckets), eager=False)
+    # (tests/test_plans.py asserts it on _probed_postings directly). The
+    # pin is executor-local whatever ``set_pin_policy`` says: a query is
+    # short and can be re-issued if an executor is lost, and a reliable
+    # checkpoint would write files per query that nothing deletes.
+    probed = _probed_postings(spark, path, terms, buckets).localCheckpoint(eager=False)
     dfs = probed.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
     avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)

@@ -1405,6 +1405,39 @@ def cdc_chunks(
     )
 
 
+def code_signals(
+    text: Column,
+    *,
+    symbol_threshold: float = 0.06,
+    indent_threshold: float = 0.2,
+    min_signals: int = 2,
+) -> dict[str, Column]:
+    """``code_detect``'s columns over the ``text`` column, keyed by output
+    name (``symbol_ratio``, ``indent_frac``, ``term_frac``, ``is_code``),
+    so a filter can use ``is_code`` without a join."""
+    n_chars = F.length(text).cast("double")
+    sym = F.regexp_count(text, F.lit(r"[{}\[\]();=<>]")).cast("double")
+    lines = F.filter(F.split(text, "\n"), lambda x: x != "")
+    n_lines = F.size(lines).cast("double")
+    indented = F.size(
+        F.filter(lines, lambda x: x.rlike(r"^(  |\t)"))
+    ).cast("double")
+    terminated = F.size(
+        F.filter(lines, lambda x: x.rlike(r"[;{}]\s*$"))
+    ).cast("double")
+    cols = {
+        "symbol_ratio": F.when(n_chars > 0, F.round(sym / n_chars, 6)),
+        "indent_frac": F.when(n_lines > 0, F.round(indented / n_lines, 6)),
+        "term_frac": F.when(n_lines > 0, F.round(terminated / n_lines, 6)),
+    }
+    signals = (
+        F.coalesce((cols["symbol_ratio"] >= symbol_threshold).cast("int"), F.lit(0))
+        + F.coalesce((cols["indent_frac"] >= indent_threshold).cast("int"), F.lit(0))
+        + F.coalesce((cols["term_frac"] >= 0.5).cast("int"), F.lit(0))
+    )
+    return {**cols, "is_code": signals >= min_signals}
+
+
 def code_detect(
     df: DataFrame,
     text_col: str = "text",
@@ -1433,32 +1466,9 @@ def code_detect(
     backreferences or lookarounds, so RE2-based engines replay the same
     counts — the oracle-parity discipline of bpe_ish_tokens). NULL text
     yields NULL metrics and is_code=false (no evidence)."""
-    t = F.col(text_col)
-    n_chars = F.length(t).cast("double")
-    sym = F.regexp_count(t, F.lit(r"[{}\[\]();=<>]")).cast("double")
-    lines = F.filter(F.split(t, "\n"), lambda x: x != "")
-    n_lines = F.size(lines).cast("double")
-    indented = F.size(
-        F.filter(lines, lambda x: x.rlike(r"^(  |\t)"))
-    ).cast("double")
-    terminated = F.size(
-        F.filter(lines, lambda x: x.rlike(r"[;{}]\s*$"))
-    ).cast("double")
-    symbol_ratio = F.when(n_chars > 0, F.round(sym / n_chars, 6))
-    indent_frac = F.when(n_lines > 0, F.round(indented / n_lines, 6))
-    term_frac = F.when(n_lines > 0, F.round(terminated / n_lines, 6))
-    signals = (
-        F.coalesce((symbol_ratio >= symbol_threshold).cast("int"), F.lit(0))
-        + F.coalesce((indent_frac >= indent_threshold).cast("int"), F.lit(0))
-        + F.coalesce((term_frac >= 0.5).cast("int"), F.lit(0))
-    )
-    return df.select(
-        F.col(id_col),
-        symbol_ratio.alias("symbol_ratio"),
-        indent_frac.alias("indent_frac"),
-        term_frac.alias("term_frac"),
-        (signals >= min_signals).alias("is_code"),
-    )
+    cols = code_signals(F.col(text_col), symbol_threshold=symbol_threshold,
+                        indent_threshold=indent_threshold, min_signals=min_signals)
+    return df.select(F.col(id_col), *(c.alias(name) for name, c in cols.items()))
 
 
 def winnow_fingerprints(

@@ -14,7 +14,10 @@ Two deliberate capability fixes over the reference (SURVEY §1.4, §7.1):
 The machinery is identical to the reference's (prioritized key coalescing,
 F1) — just with a complete key map. Dedup: last-writer-wins by event time
 for orders (reference D1), deterministic keep-first for payments/refunds
-(reference D2).
+(reference D2). Each of these three tables is ``dedup_<t>(<t>_rows(events))``:
+the row projection and the dedup are separate functions, because the
+gold fold (``streaming/gold_upsert.py``) dedups the previous silver ∪ the
+batch's projected rows in one window.
 
 Everything here is a single codegen'd projection per table: at 100 TB the
 cost is the bronze scan itself; get_json_object runs JVM-side.
@@ -87,9 +90,8 @@ def _extract(payload_col: str, keys: dict[str, list[str]]) -> dict[str, F.Column
     return {out: json_keys(p, candidates, skip_falsy=True) for out, candidates in keys.items()}
 
 
-def normalize_orders(events: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """fact_orders: current order state, unique by order_id, last event
-    wins by event time (reference src/transformer.py:20-45)."""
+def order_rows(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_orders before dedup: one row per order event with an id."""
     x = _extract(payload_col, ORDER_KEYS)
     df = events.where(F.col("event_type").isin(ORDER_TYPES)).select(
         x["order_id"].alias("order_id"),
@@ -102,13 +104,21 @@ def normalize_orders(events: DataFrame, payload_col: str = "payload") -> DataFra
         F.col("event_type"),
     )
     df = df.where(F.col("order_id").isNotNull())
-    df = last_writer_wins(df, ["order_id"], "created_at", tiebreak_cols=["event_id"])
     return df.withColumn("order_date", F.to_date("created_at"))
 
 
-def normalize_payments(events: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """fact_payments: append-only, unique by payment_id, status
-    canonicalized (reference src/transformer.py:48-93)."""
+def dedup_orders(rows: DataFrame) -> DataFrame:
+    return last_writer_wins(rows, ["order_id"], "created_at", tiebreak_cols=["event_id"])
+
+
+def normalize_orders(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_orders: current order state, unique by order_id, last event
+    wins by event time (reference src/transformer.py:20-45)."""
+    return dedup_orders(order_rows(events, payload_col))
+
+
+def payment_rows(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_payments before dedup: one row per payment event with an id."""
     x = _extract(payload_col, PAYMENT_KEYS)
     df = events.where(F.col("event_type").isin(PAYMENT_TYPES)).select(
         x["payment_id"].alias("payment_id"),
@@ -120,8 +130,17 @@ def normalize_payments(events: DataFrame, payload_col: str = "payload") -> DataF
         F.col("event_id"),
         F.col("vendor"),
     )
-    df = df.where(F.col("payment_id").isNotNull())
-    return keep_first(df, ["payment_id"], "payment_date", tiebreak_cols=["event_id"])
+    return df.where(F.col("payment_id").isNotNull())
+
+
+def dedup_payments(rows: DataFrame) -> DataFrame:
+    return keep_first(rows, ["payment_id"], "payment_date", tiebreak_cols=["event_id"])
+
+
+def normalize_payments(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_payments: append-only, unique by payment_id, status
+    canonicalized (reference src/transformer.py:48-93)."""
+    return dedup_payments(payment_rows(events, payload_col))
 
 
 def normalize_shipments(events: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -147,13 +166,12 @@ def normalize_shipments(events: DataFrame, payload_col: str = "payload") -> Data
     return last_writer_wins(df, ["tracking_id"], "shipment_time", tiebreak_cols=["event_id"])
 
 
-def normalize_refunds(events: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """fact_refunds: append-only, unique by refund_id (reference
-    src/transformer.py:96-127). Refunds without their own id get a
-    deterministic synthetic id (md5 of order+date) — the reference would
-    have dropped them into a single NULL-keyed row."""
+def refund_rows(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_refunds before dedup: one row per refund event. Refunds
+    without their own id get a deterministic synthetic id (md5 of
+    order+date+event)."""
     x = _extract(payload_col, REFUND_KEYS)
-    df = events.where(F.col("event_type").isin(REFUND_TYPES)).select(
+    return events.where(F.col("event_type").isin(REFUND_TYPES)).select(
         F.coalesce(
             x["refund_id"],
             F.md5(F.concat_ws("|", x["order_id"], x["refund_date"], F.col("event_id"))),
@@ -167,4 +185,14 @@ def normalize_refunds(events: DataFrame, payload_col: str = "payload") -> DataFr
         F.col("event_id"),
         F.col("vendor"),
     )
-    return keep_first(df, ["refund_id"], "refund_date", tiebreak_cols=["event_id"])
+
+
+def dedup_refunds(rows: DataFrame) -> DataFrame:
+    return keep_first(rows, ["refund_id"], "refund_date", tiebreak_cols=["event_id"])
+
+
+def normalize_refunds(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """fact_refunds: append-only, unique by refund_id (reference
+    src/transformer.py:96-127) — the reference would have dropped
+    id-less refunds into a single NULL-keyed row."""
+    return dedup_refunds(refund_rows(events, payload_col))

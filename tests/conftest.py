@@ -41,6 +41,14 @@ def _env(event_id, event_type, event_time, vendor, payload, ingested_at=None):
     }
 
 
+def _envelope_frame(spark, events):
+    """``events`` (``_env`` dicts) as a DataFrame of the envelope schema."""
+    from commercepulse_data_pipeline_spark.sources.readers import ENVELOPE_SCHEMA
+
+    names = ENVELOPE_SCHEMA.fieldNames()
+    return spark.createDataFrame([tuple(e.get(n) for n in names) for e in events], ENVELOPE_SCHEMA)
+
+
 def fixture_events() -> list[dict]:
     ev = []
     # -- orders: vendor_b dialect (flat, ISO timestamps) ------------------

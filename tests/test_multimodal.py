@@ -2790,12 +2790,10 @@ def test_truncated_containers_raise_valueerror():
     """Every cut of a GIF, PNG, WAV, FLAC and TIFF payload, plus the two
     malformed GIFs of test_sample_frames_malformed_gif_err_row, either
     decodes or raises ValueError on each entry point — the container
-    walks' bounds checks never leak IndexError or struct.error. The two
-    other exits are not walk errors: zlib's own error for a cut PNG IDAT
-    stream, and real_decode's NotImplementedError once a cut drops the
+    walks' bounds checks never leak IndexError or struct.error, and a cut
+    PNG IDAT stream never leaks zlib.error. The one other exit is not a
+    walk error: real_decode's NotImplementedError once a cut drops the
     magic bytes."""
-    import zlib
-
     import numpy as np
 
     from commercepulse_data_pipeline_spark.multimodal import (
@@ -2830,8 +2828,6 @@ def test_truncated_containers_raise_valueerror():
     for kind, blob in cases:
         for name, fn in entries.items():
             allowed = (ValueError,)
-            if kind == "png" and name in ("real_decode", "image_gray_raster"):
-                allowed += (zlib.error,)
             if name == "real_decode":
                 allowed += (NotImplementedError,)
             try:

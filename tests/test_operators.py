@@ -2842,6 +2842,30 @@ def test_text_index_build_query_and_append(spark, tmp_path):
         ret.write_text_index(batch2, path, n_buckets=16, mode="append")
 
 
+def test_indexed_bm25_leaves_no_checkpoint_files_under_reliable_pins(spark, tmp_path):
+    """The indexed BM25 serving path pins its probed postings locally
+    whatever the pin policy: under a reliable ``set_pin_policy`` one query
+    returns the default policy's rows and writes no checkpoint file (a
+    reliable pin there wrote files per query that nothing deletes)."""
+    import os
+
+    from commercepulse_data_pipeline_spark.functions.pins import set_pin_policy
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+
+    docs = [(1, "spark query engine spark"), (2, "basil spark pesto"), (3, "query planner")]
+    path = str(tmp_path / "tix")
+    ret.write_text_index(spark.createDataFrame(docs, ["doc_id", "text"]), path, n_buckets=8)
+    base = ret.bm25_topk_indexed(spark, path, ["spark", "query"], k=5).collect()
+    ckpt = str(tmp_path / "reliable_pins")
+    set_pin_policy(checkpoint_dir=ckpt)
+    try:
+        got = ret.bm25_topk_indexed(spark, path, ["spark", "query"], k=5).collect()
+    finally:
+        set_pin_policy(checkpoint_dir=None)
+    assert got == base and len(got) == 3
+    assert [f for _, _, files in os.walk(ckpt) for f in files] == []
+
+
 def test_phrase_topk_positional_index(spark, tmp_path):
     """Positional index + exact phrase search: occurrence counts match a
     pure-Python sliding-window model (incl. a REPEATED-term phrase and

@@ -1439,3 +1439,120 @@ def test_curation_run_partitions_input_with_first_reason(spark, tmp_path, flags,
         for d in ids - {r.doc_id for r in prefix.select("doc_id").collect()}:
             first.setdefault(d, stage.reason)
     assert dict(q) == first
+
+
+def _fold_event(kind, eid, vendor, key, oid, day, hour, amount):
+    """One envelope of ``kind`` (order/order_updated/payment/refund) in
+    ``vendor``'s dialect (FIXTURES.md: a = orderRef + slash dates, b =
+    flat ids + ISO, c = nested order.id + epoch seconds), at hour ``hour``
+    of 2026-01-0<day+1>."""
+    import datetime as dt
+
+    from tests.conftest import _env
+
+    t = dt.datetime(2026, 1, 1 + day, hour, tzinfo=dt.timezone.utc)
+    iso, slash = t.strftime("%Y-%m-%dT%H:%M:%SZ"), t.strftime("%Y/%m/%d %H:%M:%S")
+    epoch = int(t.timestamp())
+    payload = {
+        ("order", "vendor_a"): {"orderRef": oid, "buyerEmail": "a@x.com", "total": amount,
+                                "status": "confirmed", "created": slash},
+        ("order", "vendor_b"): {"order_id": oid, "customerId": "C1", "totalAmount": amount,
+                                "state": "pending", "created_at": iso},
+        ("order", "vendor_c"): {"order": {"id": oid}, "amount": amount, "state": "paid",
+                                "ts": epoch},
+        ("payment", "vendor_a"): {"paymentId": key, "orderRef": oid, "amount": amount,
+                                  "status": "FAILED", "method": "transfer", "date": slash},
+        ("payment", "vendor_b"): {"transaction_id": key, "order_id": oid,
+                                  "amountPaid": amount, "payment_status": "successful",
+                                  "channel": "card", "paid_at": iso},
+        ("payment", "vendor_c"): {"id": key, "order": {"id": oid}, "payment_amount": amount,
+                                  "state": "paid", "ts": epoch},
+        ("refund", "vendor_a"): {"refund_id": key, "orderRef": oid, "amount": amount,
+                                 "reason": "other", "refundedAt": iso},
+        ("refund", "vendor_b"): {"refund_id": key, "order_id": oid, "payment_id": "P1",
+                                 "refundAmount": amount, "reason": "damaged",
+                                 "refunded_at": iso},
+        ("refund", "vendor_c"): {"refundRef": key, "order": {"id": oid}, "amt": amount,
+                                 "ts": epoch},
+    }[("order" if kind == "order_updated" else kind, vendor)]
+    etype = {"order": "order_created", "order_updated": "order_updated",
+             "payment": "payment_succeeded", "refund": "refund_issued"}[kind]
+    return _env(eid, etype, iso, vendor, payload)
+
+
+_FOLD_EVENT = st.tuples(
+    st.sampled_from(["order", "order_updated", "payment", "refund"]),
+    st.sampled_from(["vendor_a", "vendor_b", "vendor_c"]),
+    st.sampled_from(["K1", "K2"]),  # payment / refund id
+    st.sampled_from(["o1", "o2", "o3"]),
+    st.integers(0, 2),  # day
+    st.integers(0, 23),  # hour
+    st.sampled_from([0.0, 12.5, 100.0]),  # exact in binary: sums agree in any order
+)
+
+
+@given(
+    extra=st.lists(_FOLD_EVENT, max_size=6),
+    n_batches=st.integers(1, 3),
+    picks=st.lists(st.integers(0, 2), min_size=16, max_size=16),
+    replays=st.lists(st.integers(0, 15), min_size=1, max_size=3),
+)
+@settings(**dict(_SETTINGS, max_examples=2))
+def test_gold_fold_converges_under_any_split(spark, tmp_path, extra, n_batches, picks, replays):
+    """Folding any split of an event set into 1-3 batches with
+    ``upsert_gold_batch`` leaves orders/payments/refunds equal to
+    ``normalize_*`` over all events and gold equal to
+    ``build_fact_order_daily`` over them. Every drawn set holds an order
+    that moves across dates, payments and a refund for orders the first
+    batch created, one batch with two rows of one payment_id for
+    different orders (the fold touches both orders), and exact replays
+    of events, in the same or another batch."""
+    import shutil
+
+    from commercepulse_data_pipeline_spark.plans.gold import build_fact_order_daily
+    from commercepulse_data_pipeline_spark.plans.silver import (
+        normalize_orders,
+        normalize_payments,
+        normalize_refunds,
+    )
+    from commercepulse_data_pipeline_spark.streaming import gold_upsert as gu
+    from tests.conftest import _envelope_frame
+
+    last = n_batches - 1
+    batches = [[] for _ in range(n_batches)]
+    core = [
+        (0, ("order", "vendor_b", None, "o1", 0, 23, 100.0)),
+        (0, ("order", "vendor_c", None, "o2", 0, 10, 12.5)),
+        (picks[0] % n_batches, ("order_updated", "vendor_a", None, "o1", 1, 1, 100.0)),
+        (last, ("payment", "vendor_b", "P9", "o1", 1, 2, 100.0)),
+        (last, ("payment", "vendor_c", "P9", "o2", 1, 3, 12.5)),
+        (last, ("refund", "vendor_b", "R9", "o2", 2, 4, 12.5)),
+    ]
+    drawn = [(p % n_batches, e) for p, e in zip(picks[1:], extra)]
+    events = []
+    for i, (b, spec) in enumerate(core + drawn):
+        events.append(_fold_event(spec[0], f"e{i}", *spec[1:]))
+        batches[b].append(events[-1])
+    for r in replays:  # exact duplicates of an event, in a drawn batch
+        ev = events[r % len(events)]
+        batches[picks[r] % n_batches].append(dict(ev))
+        events.append(ev)
+
+    store = str(tmp_path / "store")
+    shutil.rmtree(store, ignore_errors=True)  # tmp_path is shared across examples
+    for evs in batches:
+        gu.upsert_gold_batch(_envelope_frame(spark, evs), store)
+
+    def rows(df, cols):
+        return sorted(map(repr, map(tuple, df.select(*cols).collect())))
+
+    every = _envelope_frame(spark, events)
+    want = {
+        "orders": normalize_orders(every),
+        "payments": normalize_payments(every),
+        "refunds": normalize_refunds(every),
+    }
+    want["gold"] = build_fact_order_daily(want["orders"], want["payments"], want["refunds"])
+    for table, expect in want.items():
+        got = spark.read.parquet(f"{store}/{table}")
+        assert rows(got, expect.columns) == rows(expect, expect.columns), table

@@ -851,6 +851,14 @@ def test_gold_stream_crash_replay_from_checkpoint(spark, landing_dir, tmp_path):
 _FOLD_STORE_RENAMES = 9
 
 
+def _fold_order(eid, etype, oid, created_at):
+    from tests.conftest import _env
+
+    return _env(eid, etype, created_at, "vendor_b",
+                {"order_id": oid, "customerId": "C1", "totalAmount": 100.0,
+                 "state": "confirmed", "created_at": created_at})
+
+
 @pytest.fixture(scope="module")
 def date_move_fold(spark, tmp_path_factory):
     """A two-batch fold whose second batch MOVES an order across dates:
@@ -869,25 +877,20 @@ def date_move_fold(spark, tmp_path_factory):
         normalize_payments,
         normalize_refunds,
     )
-    from commercepulse_data_pipeline_spark.sources.readers import ENVELOPE_SCHEMA
     from commercepulse_data_pipeline_spark.streaming import gold_upsert as gu
-    from tests.conftest import _env
+    from tests.conftest import _envelope_frame
 
-    def order(eid, etype, oid, created_at):
-        return _env(eid, etype, created_at, "vendor_b",
-                    {"order_id": oid, "customerId": "C1", "totalAmount": 100.0,
-                     "state": "confirmed", "created_at": created_at})
-
-    def frame(events):
-        names = ENVELOPE_SCHEMA.fieldNames()
-        return spark.createDataFrame([tuple(e.get(n) for n in names) for e in events], ENVELOPE_SCHEMA)
-
-    batch0 = frame([order("e1", "order_created", "o1", "2026-01-01T23:00:00Z"),
-                    order("e2", "order_created", "o2", "2026-01-01T10:00:00Z")])
-    batch1 = frame([order("e3", "order_updated", "o1", "2026-01-02T01:00:00Z")])
+    batch0 = _envelope_frame(spark, [
+        _fold_order("e1", "order_created", "o1", "2026-01-01T23:00:00Z"),
+        _fold_order("e2", "order_created", "o2", "2026-01-01T10:00:00Z"),
+    ])
+    batch1 = _envelope_frame(
+        spark, [_fold_order("e3", "order_updated", "o1", "2026-01-02T01:00:00Z")]
+    )
     root = tmp_path_factory.mktemp("date_move")
     store = str(root / "store")
     gu.upsert_gold_batch(batch0, store)
+    shutil.copytree(store, str(root / "store0"))
 
     crashed: list[str] = []
     with pytest.MonkeyPatch.context() as mp:
@@ -907,6 +910,7 @@ def date_move_fold(spark, tmp_path_factory):
     )
     return {
         "store": store,
+        "store0": str(root / "store0"),
         "crashed": crashed,
         "batch1": batch1,
         "cols": expect.columns,
@@ -947,6 +951,52 @@ def test_gold_fold_crash_at_every_store_rename_then_replay_converges(
     gu.upsert_gold_batch(f["batch1"], store)
     assert _gold_rows(spark, store, f["cols"]) == f["expect"]
     assert sorted(os.listdir(store)) == ["gold", "orders", "payments", "refunds"]
+
+
+# ceilings on one fold of date_move_fold's batch 1 plus a payment, set
+# from the silver-first fold's counts: 24 jobs; 21-22 janino compilations
+# on the second identical fold in a fresh local[4] session, 66 after the
+# whole default tier has filled the 100-entry codegen cache (the
+# MERGE-based fold before it: 34 jobs, 186 compilations fresh)
+_FOLD_JOBS_MAX = 24
+_WARM_FOLD_COMPILES_MAX = 100
+
+
+def test_gold_fold_job_and_codegen_ceilings(spark, date_move_fold, tmp_path):
+    """Counters behind the fold's cost: the Spark jobs of one fold (each
+    silver table computed once, gold built from the written tables) and
+    the janino compilations of a second, identical fold (its generated
+    code repeats, so the codegen cache mostly hits)."""
+    import shutil
+
+    from commercepulse_data_pipeline_spark.streaming import gold_upsert as gu
+    from tests.conftest import _env, _envelope_frame
+
+    sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    batch = date_move_fold["batch1"].unionByName(_envelope_frame(spark, [
+        _env("p1", "payment_succeeded", "2026-01-02T02:00:00Z", "vendor_b",
+             {"payment_id": "P1", "order_id": "o2", "amount": 100.0,
+              "status": "success", "paid_at": "2026-01-02T02:00:00Z"}),
+    ]))
+
+    def fold(k):
+        store = str(tmp_path / f"store{k}")
+        shutil.copytree(date_move_fold["store0"], store)
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+        sc.setJobGroup(f"gold-fold-{k}", "gold fold counters")
+        try:
+            gu.upsert_gold_batch(batch, store)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(f"gold-fold-{k}")), compiled
+
+    jobs, _ = fold(0)
+    _, compiled = fold(1)
+    assert jobs <= _FOLD_JOBS_MAX, jobs
+    assert compiled <= _WARM_FOLD_COMPILES_MAX, compiled
 
 
 @pytest.mark.slow
