@@ -1,7 +1,5 @@
 """Scalar column-expression library (reference §2.4 F1-F11), all
-JVM-side Catalyst expressions — no Python UDFs. (The sanctioned
-Arrow-batched extension templates live in ``functions.pandas_ext``,
-imported explicitly so the core library stays UDF-free.)"""
+JVM-side Catalyst expressions — no Python UDFs."""
 
 from commercepulse_data_pipeline_spark.functions.expr import let
 from commercepulse_data_pipeline_spark.functions.drift import (

@@ -1425,9 +1425,8 @@ def ivfpq_topk(
     re-rank on unit-norm embeddings — normalize before encoding.
 
     ``codes`` overrides the code-row source (default: the index's base
-    ``codes`` table) — pass ``streaming.vectors.ivfpq_codes_from_store``
-    to query base + streamed rows together; the centroid_id filter still
-    prunes partitions on every level."""
+    ``codes`` table); the centroid_id filter still prunes its
+    partitions."""
     cents = sorted(
         (r["centroid_id"], list(r["centroid"]))
         for r in spark.read.parquet(f"{path}/centroids").collect()
@@ -1526,10 +1525,8 @@ def ivfpq_append(
     coarse list, residual-encode against the frozen codebooks, append to
     the list's partition — O(batch) pure projections, probes stay
     partition-pruned, nothing is rebuilt (the ivf_append / pq_append
-    posture applied to the combined index). For an at-least-once
-    STREAMING source use ``streaming/vectors.py::ivfpq_ingest_batch``
-    instead — a replayed batch through this plain append would
-    duplicate its rows."""
+    posture applied to the combined index). Not replay-safe: appending
+    the same batch twice duplicates its rows."""
     ivfpq_encode_frozen(
         spark, path, new_vectors, id_col=id_col, vec_col=vec_col
     ).write.mode("append").partitionBy("centroid_id").parquet(f"{path}/codes")

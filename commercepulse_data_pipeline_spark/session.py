@@ -26,10 +26,11 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 # RocksDB-backed streaming state (bundled with Spark since 3.2): keeps
-# dedup/session/stateful-upsert state OFF the executor heap and spillable
-# to disk — at 100 TB stream volumes the in-memory HDFS-backed provider
-# OOMs long before the watermark can evict. Changelog checkpointing
-# uploads per-batch deltas instead of full snapshots.
+# watermarked dedup state OFF the executor heap and spillable to disk —
+# at 100 TB stream volumes the in-memory HDFS-backed provider OOMs long
+# before the watermark can evict. Changelog checkpointing uploads
+# per-batch deltas instead of full snapshots. A long-running streaming
+# job applies it with ``spark.conf.set`` before starting its query.
 ROCKSDB_STATE_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -43,12 +44,8 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with scale-appropriate defaults.
-
-    ``rocksdb_state=True`` applies ``ROCKSDB_STATE_CONF`` — recommended
-    for any long-running streaming job with keyed state."""
+    """Build (or fetch) a SparkSession with scale-appropriate defaults."""
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{DEFAULT_CPUS}]")
@@ -62,9 +59,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if rocksdb_state:
-        for k, v in ROCKSDB_STATE_CONF.items():
-            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

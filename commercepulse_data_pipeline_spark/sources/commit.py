@@ -16,8 +16,8 @@ back. Users: ``readers`` (``<path>._compact_*``, ``<path>._purge_*``),
 ``old`` copy is kept as the rollback copy).
 
 **Fold** consolidates the append-only ``ingest_batch=N`` partitions of
-the streaming index and sketch stores: :func:`fold_partitions` writes
-all but the ``keep_latest`` newest partitions (plus any previous
+a streaming index store: ``readers.compact_streaming_index`` writes all
+but the ``keep_latest`` newest partitions (plus any previous
 consolidated one) as one ``ingest_batch=-1`` partition under
 ``<root>._fold_tmp``, then :func:`_fold_commit` sets the old
 consolidated aside in ``<root>._fold_old``, writes ``_FOLDED.json`` there
@@ -35,7 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Callable, Sequence
+from typing import Sequence
 from urllib.parse import urlparse
 
 # (live, tmp, old) paths of one swapped directory
@@ -128,7 +128,7 @@ def recover_swap(tables: Sequence[Table], *, intent: str | None = None, keep_old
 
 
 def recover_fold(root: str) -> None:
-    """Crash recovery for :func:`fold_partitions`. The marker (written at
+    """Crash recovery for an interrupted fold. The marker (written at
     the commit point) lists the folded partition dirs: marker present →
     roll FORWARD (place the consolidated partition from the tmp dir if
     needed, delete the listed folded dirs, discard the set-aside state);
@@ -183,45 +183,3 @@ def _fold_commit(p: str, cons_name: str, fold_names: list[str], had_consolidated
     shutil.rmtree(old_root, ignore_errors=True)
     shutil.rmtree(tmp_root, ignore_errors=True)
 
-
-def fold_partitions(
-    spark,
-    root: str,
-    write: Callable,
-    *,
-    keep_latest: int = 2,
-) -> dict:
-    """Fold all but the ``keep_latest`` newest ``ingest_batch=N``
-    partitions of ``root`` (plus any previous consolidated partition)
-    into one ``ingest_batch=-1`` partition.
-
-    ``write(folded, target, fold_dirs)`` gets the folded partitions' rows
-    (``ingest_batch`` still attached), the directory to write the
-    consolidated partition to, and the folded partition dirs (for
-    sizing); it does the store-specific merge and the one parquet write.
-    Recovery of an earlier interrupted fold runs first. Returns
-    {"folded", "partitions_after"}."""
-    from pyspark.sql import functions as F
-
-    p = root.rstrip("/")
-    recover_fold(p)
-    prefix = BATCH_COL + "="
-    parts = {
-        int(entry[len(prefix):]): entry
-        for entry in os.listdir(p)
-        if entry.startswith(prefix) and os.path.isdir(os.path.join(p, entry))
-    }
-    real = sorted(v for v in parts if v != CONSOLIDATED_BATCH)
-    fold = real[: len(real) - keep_latest] if keep_latest else real
-    if not fold:
-        return {"folded": 0, "partitions_after": len(parts)}
-    fold_vals = fold + ([CONSOLIDATED_BATCH] if CONSOLIDATED_BATCH in parts else [])
-    fold_names = [parts[v] for v in fold_vals]
-    cons_name = f"{prefix}{CONSOLIDATED_BATCH}"
-    write(
-        spark.read.parquet(p).where(F.col(BATCH_COL).isin(fold_vals)),
-        os.path.join(p + "._fold_tmp", cons_name),
-        [os.path.join(p, name) for name in fold_names],
-    )
-    _fold_commit(p, cons_name, fold_names, CONSOLIDATED_BATCH in parts)
-    return {"folded": len(fold), "partitions_after": len(parts) - len(fold_vals) + 1}

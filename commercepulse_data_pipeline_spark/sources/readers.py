@@ -20,9 +20,6 @@ from pyspark.sql import types as T
 from commercepulse_data_pipeline_spark.functions.drift import coalesce_keys
 from commercepulse_data_pipeline_spark.functions.hashing import event_id as _event_id
 from commercepulse_data_pipeline_spark.sources import commit
-from commercepulse_data_pipeline_spark.sources.commit import (  # noqa: F401 — historical import path
-    recover_fold as _recover_index_compact,
-)
 
 ENVELOPE_FIELDS = ("event_id", "event_type", "event_time", "vendor", "payload", "ingested_at", "source")
 
@@ -498,13 +495,13 @@ def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
 
 
 def fold_consistent_read(spark: SparkSession, root: str) -> DataFrame:
-    """READ-SIDE contract for the streaming sketch/index stores: return a
+    """READ-SIDE contract for the streaming index stores: return a
     CONSISTENT view of the store at every resting point of the fold
     protocol, so a monitoring job can probe concurrently with compaction
     (and after a mid-fold crash, BEFORE any recovery runs — this function
     never mutates the store).
 
-    The fold protocol (:func:`commit.fold_partitions`) has two windows where a
+    The fold protocol (:func:`compact_streaming_index`) has two windows where a
     naive ``spark.read.parquet(root)`` reads a WRONG store:
 
     - pre-commit (old consolidated set aside, marker not yet written):
@@ -512,8 +509,9 @@ def fold_consistent_read(spark: SparkSession, root: str) -> DataFrame:
       reader rolls BACK: root partitions + the set-aside consolidated.
     - post-commit (marker written; new consolidated possibly not yet
       renamed in, folded dirs possibly not yet deleted): folded partials
-      and the new consolidated can coexist → double-count for the
-      count-summing sketches (MG, histogram). This reader rolls FORWARD:
+      and the new consolidated can coexist → double-count for
+      count-summing stores (the passage fingerprint index). This reader
+      rolls FORWARD:
       the new consolidated (from root, or from the tmp dir if the rename
       hasn't happened) + only the partitions NOT in the marker's folded
       list — exactly the post-fold store, which every compactor
@@ -630,35 +628,55 @@ def compact_streaming_index(
     ``sub_partition_col`` preserves an inner layout (the embedding lists'
     ``lsh_bucket``) through the rewrite.
 
-    Crash safety: the fold goes through :func:`commit.fold_partitions` —
-    the consolidated rewrite lands in a hidden tmp sibling, a marker file
+    Crash safety: the fold commits through :mod:`sources.commit` — the
+    consolidated rewrite lands in a hidden tmp sibling, a marker file
     written at the commit point lists the folded dirs, and an interrupted
-    fold is rolled forward past the marker or back before it on the next
-    call. Readers racing the swap can transiently see the index without
-    the consolidated rows (a near-dup admitted once) or with folded rows
-    duplicated (harmless: candidate pairs are distinct, width caps
-    momentarily tighter) — :func:`fold_consistent_read` closes that
-    window; a transactional table format is the cluster-grade answer.
+    fold is rolled forward past the marker or back before it by
+    :func:`commit.recover_fold` on the next call. Readers racing the swap
+    can transiently see the index without the consolidated rows (a
+    near-dup admitted once) or with folded rows duplicated (harmless:
+    candidate pairs are distinct, width caps momentarily tighter) —
+    :func:`fold_consistent_read` closes that window; a transactional
+    table format is the cluster-grade answer.
 
     Returns {"folded", "partitions_after", "files_after"}.
     """
     import math
     import os as _os
 
-    def write(folded, target, fold_dirs):
-        fold_bytes = sum(_os.path.getsize(f) for d in fold_dirs for f in _data_files(d))
-        n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
-        df = folded.drop(commit.BATCH_COL)
-        if sub_partition_col:
-            writer = df.repartition(n_out, sub_partition_col).write.partitionBy(
-                sub_partition_col
-            )
-        else:
-            writer = df.repartition(n_out).write
-        writer.mode("overwrite").parquet(target)
+    p = root.rstrip("/")
+    commit.recover_fold(p)
+    prefix = commit.BATCH_COL + "="
+    parts = {
+        int(entry[len(prefix):]): entry
+        for entry in _os.listdir(p)
+        if entry.startswith(prefix) and _os.path.isdir(_os.path.join(p, entry))
+    }
+    real = sorted(v for v in parts if v != commit.CONSOLIDATED_BATCH)
+    fold = real[: len(real) - keep_latest] if keep_latest else real
+    if not fold:
+        return {"folded": 0, "partitions_after": len(parts), "files_after": None}
+    had_consolidated = commit.CONSOLIDATED_BATCH in parts
+    fold_vals = fold + ([commit.CONSOLIDATED_BATCH] if had_consolidated else [])
+    fold_names = [parts[v] for v in fold_vals]
+    cons_name = f"{prefix}{commit.CONSOLIDATED_BATCH}"
 
-    stats = commit.fold_partitions(spark, root, write, keep_latest=keep_latest)
-    return {**stats, "files_after": len(_data_files(root)) if stats["folded"] else None}
+    fold_bytes = sum(
+        _os.path.getsize(f) for name in fold_names for f in _data_files(_os.path.join(p, name))
+    )
+    n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
+    df = spark.read.parquet(p).where(F.col(commit.BATCH_COL).isin(fold_vals)).drop(commit.BATCH_COL)
+    if sub_partition_col:
+        writer = df.repartition(n_out, sub_partition_col).write.partitionBy(sub_partition_col)
+    else:
+        writer = df.repartition(n_out).write
+    writer.mode("overwrite").parquet(_os.path.join(p + "._fold_tmp", cons_name))
+    commit._fold_commit(p, cons_name, fold_names, had_consolidated)
+    return {
+        "folded": len(fold),
+        "partitions_after": len(parts) - len(fold_vals) + 1,
+        "files_after": len(_data_files(root)),
+    }
 
 
 def purge_keys(

@@ -154,3 +154,22 @@ def test_fold_commit_is_all_or_nothing_at_every_crash_point(tmp_path, monkeypatc
         assert got == {"ingest_batch=-1": "ab", "ingest_batch=4": "c"}
     assert not os.path.exists(root + "._fold_old")
     assert not os.path.exists(root + "._fold_tmp")
+
+
+def test_fold_recovery_rolls_back_past_a_torn_marker(tmp_path):
+    """An unparseable ``_FOLDED.json`` (a store written before markers
+    were atomic) beside a torn ``_FOLDED.json.tmp`` means the commit never
+    happened: recovery adopts the set-aside partition back and removes
+    the set-aside dir instead of failing on the marker."""
+    root = str(tmp_path / "idx")
+    old_root = root + "._fold_old"
+    _write_table(os.path.join(root, "ingest_batch=1"), "b")
+    _write_table(os.path.join(old_root, "ingest_batch=0"), "a")
+    with open(os.path.join(old_root, "_FOLDED.json"), "w") as fh:
+        fh.write('{"consolidated": "ingest_batch=-1", "fol')
+    with open(os.path.join(old_root, "_FOLDED.json.tmp"), "w") as fh:
+        fh.write("{")
+    commit.recover_fold(root)
+    got = {name: _version(os.path.join(root, name)) for name in os.listdir(root)}
+    assert got == {"ingest_batch=0": "a", "ingest_batch=1": "b"}
+    assert not os.path.exists(old_root)

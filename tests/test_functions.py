@@ -134,31 +134,6 @@ def test_stable_bucket_range(spark):
     assert r.lo >= 0 and r.hi < 16 and r.n == 16
 
 
-def test_pandas_udf_extension_point(spark):
-    """§2.11: the Arrow-batched extension surface agrees with the
-    built-in higher-order-function computation."""
-    import math
-
-    from commercepulse_data_pipeline_spark.functions.pandas_ext import (
-        unit_normalize,
-        vector_norm,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, None)],
-        "vec_id long, embedding array<double>",
-    )
-    out = {r.vec_id: r for r in df.select(
-        "vec_id",
-        vector_norm("embedding").alias("norm"),
-        unit_normalize("embedding").alias("unit"),
-    ).collect()}
-    assert abs(out[1].norm - 5.0) < 1e-9
-    assert abs(out[1].unit[0] - 0.6) < 1e-9 and abs(out[1].unit[1] - 0.8) < 1e-9
-    assert out[2].norm == 0.0 and out[2].unit == [0.0, 0.0]
-    assert out[3].norm is None and out[3].unit is None
-
-
 def test_approx_within_tolerance_of_exact(spark):
     """Sketch aggregates (the 100 TB path) must land within their stated
     error of the exact twins."""

@@ -319,6 +319,57 @@ def test_compact_streaming_index_embeddings_sub_partitions(spark, tmp_path):
     assert 10 not in kept and kept == {1, 2, 3}
 
 
+def test_fold_consistent_read_counts_set_aside_consolidated_before_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A re-fold killed before its marker is durable leaves the old
+    consolidated partition set aside in ``._fold_old``: a plain read of
+    the root misses its rows, ``fold_consistent_read`` does not, and the
+    next compaction recovers and folds the same rows."""
+    import os
+
+    from commercepulse_data_pipeline_spark.sources.readers import (
+        compact_streaming_index,
+        fold_consistent_read,
+    )
+    from commercepulse_data_pipeline_spark.streaming import batches
+
+    root = str(tmp_path / "idx")
+
+    def land(batch_id):
+        rows = [(batch_id, i) for i in range(batch_id + 1)]
+        batches.write(spark.createDataFrame(rows, "fp long, n long"), root, batch_id)
+
+    def probe():
+        return sorted(map(tuple, fold_consistent_read(spark, root).select("fp", "n").collect()))
+
+    for batch_id in range(3):
+        land(batch_id)
+    compact_streaming_index(spark, root, keep_latest=1)  # batches 0-1 -> consolidated
+    land(3)
+    truth = probe()
+    assert len(truth) == 10
+
+    real_rename = os.rename
+
+    def crash_marker(src, dst):
+        if str(dst).endswith("_FOLDED.json"):
+            raise RuntimeError("injected crash before commit")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_marker)
+    with pytest.raises(RuntimeError, match="before commit"):
+        compact_streaming_index(spark, root, keep_latest=0)
+    monkeypatch.undo()
+    assert os.path.isdir(root + "._fold_old/ingest_batch=-1")
+    assert spark.read.parquet(root).count() < len(truth)
+    assert probe() == truth
+
+    stats = compact_streaming_index(spark, root, keep_latest=0)
+    assert stats["folded"] == 2 and stats["partitions_after"] == 1
+    assert probe() == truth
+
+
 @pytest.mark.slow
 def test_compact_streaming_index_crash_rolls_forward(spark, tmp_path, monkeypatch):
     """Kill the fold at its commit point (marker written, consolidated

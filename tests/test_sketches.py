@@ -202,259 +202,6 @@ def test_mg_plans_are_scale_shaped(spark, tmp_path):
     assert plan.count("FileScan") == 2  # items + shards; raw data nowhere
 
 
-def test_stream_mg_rollup_and_retruncating_compaction(spark, tmp_path):
-    """Streaming frequent-items: per-batch MG partials append under their
-    own ingest_batch partition; the merged envelope holds across batches,
-    survives the RE-TRUNCATING compaction (new_off folded into the
-    consolidated offset), and the compacted store keeps accepting
-    appends + further re-folds with the bound intact."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming.frequent_items import (
-        compact_mg_rollup,
-        heavy_hitters_from_store,
-        mg_rollup_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-
-    def batch_tokens(seed):
-        # token t ~ Zipf with per-batch jitter; 'hot' dominates every batch
-        out = ["hot"] * (80 + 13 * seed)
-        for t in range(30):
-            out += [f"tok{t:02d}"] * max(1, (60 // (t + 1) + (seed * t) % 3) - 1)
-        return out
-
-    b1, b2 = batch_tokens(1), batch_tokens(2)
-    for name, toks in (("b1.parquet", b1), ("b2.parquet", b2)):
-        pq.write_table(pa.table({"token": toks}), str(drops / name))
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-    os.utime(str(drops / "b2.parquet"), (now, now))
-
-    store = str(tmp_path / "mg_store")
-    q = batches.start(
-        batches.drops(spark, str(drops), "token string", max_files_per_trigger=1),
-        str(tmp_path / "ckpt"),
-        lambda df, i: mg_rollup_batch(df, i, store, item_col="token", capacity=8),
-    )
-    q.awaitTermination(120)
-    parts = {e.name for e in os.scandir(store) if e.is_dir()}
-    assert parts == {"ingest_batch=0", "ingest_batch=1"}
-
-    from collections import Counter
-
-    def check_envelope(all_toks):
-        exact = Counter(all_toks)
-        rows = heavy_hitters_from_store(spark, store, item_col="token").collect()
-        got = {r["token"]: r for r in rows}
-        off = rows[0]["total_offset"]
-        assert rows[0]["n_total"] == len(all_toks)
-        for tok, r in got.items():
-            assert r["est"] <= exact[tok] <= r["est"] + off, (tok, r, exact[tok])
-        for tok, true in exact.items():
-            if true > off:
-                assert tok in got, (tok, true, off)
-        assert max(got, key=lambda t: got[t]["est"]) == "hot"
-        return off
-
-    check_envelope(b1 + b2)
-
-    stats = compact_mg_rollup(spark, store, capacity=8, keep_latest=0)
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    # consolidated partition is bounded at capacity item rows + 1 meta row
-    cons = spark.read.parquet(os.path.join(store, "ingest_batch=-1"))
-    assert cons.where(~F.col("is_meta")).count() <= 8
-    check_envelope(b1 + b2)
-
-    # keeps accepting appends; a second re-fold subsumes the old
-    # consolidated partition and the envelope still holds
-    b3 = batch_tokens(3)
-    mg_rollup_batch(
-        spark.createDataFrame([(t,) for t in b3], "token string"),
-        2, store, item_col="token", capacity=8,
-    )
-    check_envelope(b1 + b2 + b3)
-    stats2 = compact_mg_rollup(spark, store, capacity=8, keep_latest=0)
-    assert stats2["folded"] == 1 and stats2["partitions_after"] == 1
-    check_envelope(b1 + b2 + b3)
-
-
-def test_mg_rollup_null_items_counted(spark, tmp_path):
-    """A genuine NULL item value in the stream is a countable group (same
-    as the batch MG path's groupBy semantics), NOT a meta row: the
-    explicit is_meta discriminator keeps its counts in the estimates
-    through both the merged read and a re-truncating compaction."""
-    import os
-
-    from commercepulse_data_pipeline_spark.streaming.frequent_items import (
-        compact_mg_rollup,
-        heavy_hitters_from_store,
-        mg_rollup_batch,
-    )
-
-    store = str(tmp_path / "mg_null_store")
-    toks = [None] * 40 + ["a"] * 30 + ["b"] * 5
-    mg_rollup_batch(
-        spark.createDataFrame([(t,) for t in toks], "token string"),
-        0, store, item_col="token", capacity=4,
-    )
-    rows = heavy_hitters_from_store(spark, store, item_col="token").collect()
-    got = {r["token"]: r["est"] for r in rows}
-    assert got[None] == 40 and got["a"] == 30
-    assert rows[0]["n_total"] == 75
-
-    compact_mg_rollup(spark, store, capacity=4, keep_latest=0)
-    rows2 = heavy_hitters_from_store(spark, store, item_col="token").collect()
-    got2 = {r["token"]: r["est"] for r in rows2}
-    off = rows2[0]["total_offset"]
-    assert got2[None] <= 40 <= got2[None] + off
-    assert rows2[0]["n_total"] == 75
-    # exactly one meta row in the consolidated partition
-    cons = spark.read.parquet(os.path.join(store, "ingest_batch=-1"))
-    assert cons.where(F.col("is_meta")).count() == 1
-
-
-def test_fold_marker_torn_write_rolls_back(spark, tmp_path):
-    """Crash-recovery hardening: an unparseable _FOLDED.json (torn write
-    from a pre-atomic-rename store) is treated as 'commit never
-    happened' — recovery rolls BACK via the set-aside dir instead of
-    raising JSONDecodeError forever, and the store reads consistently."""
-    import os
-    import shutil
-
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        _recover_index_compact,
-    )
-    from commercepulse_data_pipeline_spark.streaming.frequent_items import (
-        heavy_hitters_from_store,
-        mg_rollup_batch,
-    )
-
-    store = str(tmp_path / "mg_torn")
-    for b, toks in enumerate((["x"] * 10 + ["y"] * 3, ["x"] * 7 + ["z"] * 2)):
-        mg_rollup_batch(
-            spark.createDataFrame([(t,) for t in toks], "token string"),
-            b, store, item_col="token", capacity=4,
-        )
-    # simulate a crash: batch-0 partition set aside, marker torn, no tmp
-    old_root = store + "._fold_old"
-    os.makedirs(old_root)
-    shutil.move(os.path.join(store, "ingest_batch=0"), old_root)
-    with open(os.path.join(old_root, "_FOLDED.json"), "w") as fh:
-        fh.write('{"consolidated": "ingest_batch=-1", "fol')  # torn
-    with open(os.path.join(old_root, "_FOLDED.json.tmp"), "w") as fh:
-        fh.write("{")  # crash mid-write of the atomic tmp, too
-
-    _recover_index_compact(store)
-    assert not os.path.exists(old_root)
-    assert os.path.isdir(os.path.join(store, "ingest_batch=0"))
-    rows = heavy_hitters_from_store(spark, store, item_col="token").collect()
-    got = {r["token"]: r["est"] for r in rows}
-    assert got["x"] == 17 and rows[0]["n_total"] == 22
-
-
-def test_stream_sketch_rollup_and_compaction(spark, tmp_path):
-    """Streaming form: each micro-batch appends its own partial sketches
-    (no cross-batch state — HLL union associativity makes duplicate
-    (day, group) partials correct by construction); compaction re-merges
-    to one row per (day, group) and range queries agree before, during,
-    and after."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming.sketches import (
-        compact_sketch_rollup,
-        sketch_rollup_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    # batch 1: days 01-02; batch 2: days 02-03 (day 02 spans batches →
-    # partial-merge is actually exercised)
-    def write_drop(name, rows):
-        pq.write_table(
-            pa.table({
-                "day": [r[0] for r in rows],
-                "event_type": [r[1] for r in rows],
-                "user_id": pa.array([r[2] for r in rows], type=pa.int64()),
-            }),
-            str(drops / name),
-        )
-
-    b1 = [("2026-03-01", "view", u) for u in range(200)] + [
-        ("2026-03-02", "view", u) for u in range(100, 300)
-    ]
-    b2 = [("2026-03-02", "view", u) for u in range(250, 400)] + [
-        ("2026-03-03", "view", u) for u in range(350, 500)
-    ]
-    write_drop("b1.parquet", b1)
-    write_drop("b2.parquet", b2)
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-    os.utime(str(drops / "b2.parquet"), (now, now))
-
-    store = str(tmp_path / "rollup")
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "day string, event_type string, user_id long",
-            max_files_per_trigger=1,
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: sketch_rollup_batch(df, i, store, group_cols=["event_type"]),
-    )
-    q.awaitTermination(120)
-    parts = {e.name for e in os.scandir(store) if e.is_dir()}
-    assert parts == {"ingest_batch=0", "ingest_batch=1"}
-
-    all_rows = b1 + b2
-    def exact_between(lo, hi):
-        return len({u for d, _t, u in all_rows if lo <= d <= hi})
-
-    got = sk.distinct_over_range(
-        spark, store, "2026-03-01", "2026-03-03", group_cols=["event_type"]
-    ).first()
-    exact = exact_between("2026-03-01", "2026-03-03")
-    assert got.n_rows == len(all_rows)
-    assert abs(got.distinct_estimate - exact) <= _tol(exact)
-
-    # compact: one row per (day, group); day 02's two partials merged
-    stats = compact_sketch_rollup(
-        spark, store, group_cols=["event_type"], keep_latest=0
-    )
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    cons = spark.read.parquet(store)
-    assert cons.count() == 3  # days 01, 02, 03 — one row each
-    got2 = sk.distinct_over_range(
-        spark, store, "2026-03-02", "2026-03-03", group_cols=["event_type"]
-    ).first()
-    exact2 = exact_between("2026-03-02", "2026-03-03")
-    assert abs(got2.distinct_estimate - exact2) <= _tol(exact2)
-
-    # the compacted store keeps accepting batch appends
-    b3 = [("2026-03-04", "view", u) for u in range(450, 600)]
-    sketch_rollup_batch(
-        spark.createDataFrame(b3, "day string, event_type string, user_id long"),
-        2, store, group_cols=["event_type"],
-    )
-    all_rows += b3
-    got3 = sk.distinct_over_range(
-        spark, store, "2026-03-01", "2026-03-04", group_cols=["event_type"]
-    ).first()
-    exact3 = exact_between("2026-03-01", "2026-03-04")
-    assert abs(got3.distinct_estimate - exact3) <= _tol(exact3)
-
-
 def test_log2_hist_quantiles_error_bound_and_merge(spark):
     """HDR-style log2 histogram rollup: (a) every quantile estimate is
     within the guaranteed relative error 2^-(sub_bits+1) of the exact
@@ -553,113 +300,6 @@ def test_hist_rollup_range_query_never_rescans(spark, tmp_path):
         assert abs(r["est"] - exact) <= max(exact, 1) * 2 ** -7, (r, exact)
 
 
-def test_stream_hist_rollup_and_compaction(spark, tmp_path):
-    """Streaming histogram rollup: per-batch bucket partials append under
-    their own ingest_batch partition; quantiles from the store stay
-    within the guaranteed bound across batches; compaction by count
-    addition answers EVERY query identically (exactness asserted, not
-    just an envelope); the compacted store keeps accepting appends."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming.histograms import (
-        compact_hist_rollup,
-        hist_rollup_batch,
-        quantiles_from_store,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-
-    def batch_vals(seed):
-        return [
-            (f"2024-02-{1 + (i + seed) % 3:02d}", "g%d" % (i % 2), (i * 7919 + seed * 104729) % 3_000_000)
-            for i in range(800)
-        ]
-
-    b1, b2 = batch_vals(1), batch_vals(2)
-    for name, rows in (("b1.parquet", b1), ("b2.parquet", b2)):
-        pq.write_table(
-            pa.table({
-                "day": [r[0] for r in rows],
-                "grp": [r[1] for r in rows],
-                "v": [r[2] for r in rows],
-            }),
-            str(drops / name),
-        )
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-    os.utime(str(drops / "b2.parquet"), (now, now))
-
-    store = str(tmp_path / "hist_store")
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "day string, grp string, v long",
-            max_files_per_trigger=1,
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: hist_rollup_batch(
-            df, i, store, value_col="v", shard_col="day", group_cols=["grp"]
-        ),
-    )
-    q.awaitTermination(120)
-    parts = {e.name for e in os.scandir(store) if e.is_dir()}
-    assert parts == {"ingest_batch=0", "ingest_batch=1"}
-
-    probs = [("p50", 1, 2), ("p99", 99, 100)]
-
-    def check(all_rows):
-        got = quantiles_from_store(
-            spark, store, probs, shard_col="day", group_cols=["grp"]
-        ).collect()
-        assert len(got) == 4  # 2 groups x 2 probs
-        by = {}
-        for r in got:
-            xs = sorted(v for d, g, v in all_rows if g == r["grp"])
-            num, den = {"p50": (1, 2), "p99": (99, 100)}[r["q_label"]]
-            exact = xs[(num * len(xs) + den - 1) // den - 1]
-            assert r["n_total"] == len(xs)
-            assert abs(r["est"] - exact) <= max(exact, 1) * 2 ** -7, (r, exact)
-            by[(r["grp"], r["q_label"])] = r["est"]
-        return by
-
-    pre = check(b1 + b2)
-
-    stats = compact_hist_rollup(
-        spark, store, shard_col="day", group_cols=["grp"], keep_latest=0
-    )
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    assert check(b1 + b2) == pre  # compaction is EXACT, answers unchanged
-
-    # keeps accepting appends; a second re-fold subsumes the consolidated
-    b3 = batch_vals(3)
-    hist_rollup_batch(
-        spark.createDataFrame(b3, "day string, grp string, v long"),
-        2, store, value_col="v", shard_col="day", group_cols=["grp"],
-    )
-    check(b1 + b2 + b3)
-    stats2 = compact_hist_rollup(
-        spark, store, shard_col="day", group_cols=["grp"], keep_latest=0
-    )
-    assert stats2["folded"] == 1 and stats2["partitions_after"] == 1
-    post = check(b1 + b2 + b3)
-    # shard filter: restricting days changes the population it reflects
-    lo = quantiles_from_store(
-        spark, store, probs, shard_col="day", group_cols=["grp"],
-        shard_filter=F.col("day") == "2024-02-01",
-    ).collect()
-    for r in lo:
-        xs = sorted(
-            v for d, g, v in b1 + b2 + b3 if g == r["grp"] and d == "2024-02-01"
-        )
-        assert r["n_total"] == len(xs)
-    assert post  # smoke: merged answers exist after the second fold
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter membership rollup
 # ---------------------------------------------------------------------------
@@ -740,103 +380,6 @@ def test_bloom_absent_candidates_report_zero_or_fp_rate(spark, tmp_path):
     # fill ≈ 4*160/16384 ≈ 3.9% → FP rate ≈ 2e-6 per (user, day);
     # expected FPs over 600 probes ≈ 0 — allow a couple for slack
     assert sum(r.n_shards_maybe for r in got) <= 2
-
-
-def test_stream_bloom_rollup_and_compaction(spark, tmp_path):
-    """Streaming Bloom store: per-batch partial bit rows are correct by
-    construction (bit-OR idempotence), membership answers are EXACTLY
-    identical before/after compaction (no estimate slack at all), and
-    the compacted store keeps accepting appends."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming.bloom import (
-        bloom_rollup_batch,
-        compact_bloom_rollup,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-
-    def write_drop(name, rows):
-        pq.write_table(
-            pa.table({
-                "day": [r[0] for r in rows],
-                "user_id": pa.array([r[1] for r in rows], type=pa.int64()),
-            }),
-            str(drops / name),
-        )
-
-    # day 02 spans both batches; user 150 appears in both (duplicate bits)
-    b1 = [("2026-03-01", u) for u in range(100)] + [
-        ("2026-03-02", u) for u in range(100, 200)
-    ]
-    b2 = [("2026-03-02", u) for u in range(150, 250)] + [
-        ("2026-03-03", u) for u in range(200, 300)
-    ]
-    write_drop("b1.parquet", b1)
-    write_drop("b2.parquet", b2)
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-    os.utime(str(drops / "b2.parquet"), (now, now))
-
-    store = str(tmp_path / "bloom")
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "day string, user_id long", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: bloom_rollup_batch(df, i, store, m_bits=2048, k=4),
-    )
-    q.awaitTermination(120)
-    parts = {e.name for e in os.scandir(store) if e.is_dir()}
-    assert parts == {"ingest_batch=0", "ingest_batch=1"}
-
-    all_rows = b1 + b2
-    cands = spark.range(0, 400).select(F.col("id").alias("user_id"))
-
-    def probe():
-        return {
-            r.user_id: r.n_shards_maybe
-            for r in sk.membership_over_range(
-                spark, store, cands, "2026-03-01", "2026-03-03",
-                shard_col="day", key_col="user_id", m_bits=2048, k=4,
-            ).collect()
-        }
-
-    def true_days(u):
-        return len({d for d, uu in all_rows if uu == u})
-
-    before = probe()
-    assert all(before[u] >= true_days(u) for u in range(400))
-
-    stats = compact_bloom_rollup(spark, store, keep_latest=0)
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    # bit-OR of bit-ORs: EXACT equality across compaction
-    assert probe() == before
-
-    # compacted store keeps accepting appends
-    b3 = [("2026-03-04", u) for u in range(300, 350)]
-    bloom_rollup_batch(
-        spark.createDataFrame(b3, "day string, user_id long"),
-        2, store, m_bits=2048, k=4,
-    )
-    after = {
-        r.user_id: r.n_shards_maybe
-        for r in sk.membership_over_range(
-            spark, store, cands, "2026-03-01", "2026-03-04",
-            shard_col="day", key_col="user_id", m_bits=2048, k=4,
-        ).collect()
-    }
-    all_rows += b3
-    assert all(
-        after[u] >= len({d for d, uu in all_rows if uu == u}) for u in range(400)
-    )
-    assert all(after[u] >= before[u] for u in range(400))
 
 
 # ---------------------------------------------------------------------------
@@ -961,189 +504,6 @@ def test_kmv_build_plan_pushes_group_limit_map_side(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_stream_kmv_rollup_and_compaction(spark, tmp_path):
-    """Streaming KMV store: each micro-batch appends its own per-set
-    partial sketch (per-batch truncation is lossless because the k
-    smallest of a union come from the parts' k smallest); the live store
-    answers set ops identically to a one-shot batch build, compaction
-    re-truncates to one k-row sketch per set, and the compacted store
-    keeps accepting appends."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.operators.sketches import (
-        build_kmv_rollup,
-        kmv_truncate,
-    )
-    from commercepulse_data_pipeline_spark.streaming.kmv import (
-        compact_kmv_rollup,
-        kmv_rollup_batch,
-        kmv_sketches_from_store,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    k = 16
-    drops = tmp_path / "drops"
-    drops.mkdir()
-
-    def write_drop(name, rows):
-        pq.write_table(
-            pa.table({
-                "event_type": [r[0] for r in rows],
-                "ukey": [r[1] for r in rows],
-            }),
-            str(drops / name),
-        )
-
-    # set A spans both batches (overlapping keys exercise DISTINCT merge)
-    b1 = [("A", f"k{i}") for i in range(120)] + [("B", f"k{i}") for i in range(60)]
-    b2 = [("A", f"k{i}") for i in range(80, 200)] + [
-        ("B", f"k{i}") for i in range(40, 90)
-    ]
-    write_drop("b1.parquet", b1)
-    write_drop("b2.parquet", b2)
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-
-    store = str(tmp_path / "kmv_store")
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "event_type string, ukey string", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: kmv_rollup_batch(
-            df, i, store, set_col="event_type", key_col="ukey", k=k
-        ),
-    )
-    q.awaitTermination(120)
-    assert {e.name for e in os.scandir(store) if e.is_dir()} == {
-        "ingest_batch=0", "ingest_batch=1"
-    }
-
-    all_df = spark.createDataFrame(b1 + b2, "event_type string, ukey string")
-    want = sorted(
-        map(tuple, build_kmv_rollup(
-            all_df, set_col="event_type", key_col="ukey", k=k
-        ).collect())
-    )
-    got = sorted(
-        map(tuple, kmv_sketches_from_store(
-            spark, store, set_col="event_type", k=k
-        ).collect())
-    )
-    assert got == want  # streaming partials == one-shot batch sketch
-
-    stats = compact_kmv_rollup(spark, store, set_col="event_type", k=k, keep_latest=0)
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    # consolidated store: exactly k rows per set, same sketch
-    cons = spark.read.parquet(store)
-    assert cons.groupBy("event_type").count().rdd.map(
-        lambda r: r["count"]
-    ).collect() == [k, k]
-    got2 = sorted(
-        map(tuple, kmv_truncate(cons, set_col="event_type", k=k).collect())
-    )
-    assert got2 == want
-
-    # post-compaction append still merges correctly
-    b3 = [("B", f"z{i}") for i in range(50)]
-    kmv_rollup_batch(
-        spark.createDataFrame(b3, "event_type string, ukey string"),
-        2, store, set_col="event_type", key_col="ukey", k=k,
-    )
-    want3 = sorted(
-        map(tuple, build_kmv_rollup(
-            spark.createDataFrame(b1 + b2 + b3, "event_type string, ukey string"),
-            set_col="event_type", key_col="ukey", k=k,
-        ).collect())
-    )
-    got3 = sorted(
-        map(tuple, kmv_sketches_from_store(
-            spark, store, set_col="event_type", k=k
-        ).collect())
-    )
-    assert got3 == want3
-
-
-def test_stream_kmv_crash_replay_from_checkpoint(spark, tmp_path):
-    """Kill the KMV stream AFTER batch 1's partition landed but BEFORE
-    the checkpoint commit (the replay-duplication window). The restart
-    re-delivers batch 1, which OVERWRITES its own partition — and even
-    if it had appended, readers' DISTINCT + re-truncate makes duplicate
-    partials harmless. Final store must equal the one-shot batch
-    sketch."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
-    from commercepulse_data_pipeline_spark.operators.sketches import build_kmv_rollup
-    from commercepulse_data_pipeline_spark.streaming.kmv import (
-        kmv_rollup_batch,
-        kmv_sketches_from_store,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    k = 8
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    b1 = [("A", f"k{i}") for i in range(40)]
-    b2 = [("A", f"k{i}") for i in range(20, 80)] + [("B", f"z{i}") for i in range(30)]
-    for name, rows in (("b1", b1), ("b2", b2)):
-        pq.write_table(
-            pa.table({"event_type": [r[0] for r in rows],
-                      "ukey": [r[1] for r in rows]}),
-            str(drops / f"{name}.parquet"),
-        )
-    import os
-    import time
-    now = time.time()
-    os.utime(str(drops / "b1.parquet"), (now - 60, now - 60))
-
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def crashing(bdf, bid):
-        kmv_rollup_batch(bdf, bid, store, set_col="event_type", key_col="ukey", k=k)
-        if bid == 1:
-            raise RuntimeError("injected crash before checkpoint commit")
-
-    q = (
-        spark.readStream.schema("event_type string, ukey string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drops))
-        .writeStream.foreachBatch(crashing)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    with _pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
-    # batch 1's write IS durable (landed before the crash)
-    assert os.path.isdir(f"{store}/ingest_batch=1")
-
-    q2 = batches.start(
-        batches.drops(
-            spark, str(drops), "event_type string, ukey string", max_files_per_trigger=1
-        ),
-        ckpt,
-        lambda df, i: kmv_rollup_batch(
-            df, i, store, set_col="event_type", key_col="ukey", k=k
-        ),
-    )
-    q2.awaitTermination(120)
-    want = sorted(map(tuple, build_kmv_rollup(
-        spark.createDataFrame(b1 + b2, "event_type string, ukey string"),
-        set_col="event_type", key_col="ukey", k=k,
-    ).collect()))
-    got = sorted(map(tuple, kmv_sketches_from_store(
-        spark, store, set_col="event_type", k=k
-    ).collect()))
-    assert got == want
-
-
 def test_kmv_set_overlap_explicit_pairs(spark, tmp_path):
     """set_pairs restricts the pair fan-out to caller-chosen candidates
     (the thousands-of-sets escape hatch) and returns values identical to
@@ -1191,244 +551,3 @@ def test_kmv_set_overlap_tag_join_is_equi_only(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert out.count() == 3
-
-
-def test_compact_kmv_rollup_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """Kill compact_kmv_rollup at its commit point (marker written,
-    consolidated partition not yet renamed in): the next call rolls
-    FORWARD via the shared fold protocol and the sketch answers are
-    unchanged."""
-    import os
-
-    import pytest as _pytest
-
-    from commercepulse_data_pipeline_spark.streaming.kmv import (
-        compact_kmv_rollup,
-        kmv_rollup_batch,
-        kmv_sketches_from_store,
-    )
-
-    k = 8
-    store = str(tmp_path / "kmv_store")
-    for bid in range(3):
-        kmv_rollup_batch(
-            spark.createDataFrame(
-                [("A", f"k{bid * 30 + i}") for i in range(60)],
-                "event_type string, ukey string",
-            ),
-            bid, store, set_col="event_type", key_col="ukey", k=k,
-        )
-    before = sorted(map(tuple, kmv_sketches_from_store(
-        spark, store, set_col="event_type", k=k
-    ).collect()))
-
-    real_rename = os.rename
-    cons_dst = os.path.join(store, "ingest_batch=-1")
-
-    def crashing(src, dst):
-        if str(dst) == cons_dst:
-            raise RuntimeError("injected crash at commit point")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crashing)
-    with _pytest.raises(RuntimeError, match="commit point"):
-        compact_kmv_rollup(spark, store, set_col="event_type", k=k, keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.exists(store + "._fold_old/_FOLDED.json")
-    assert not os.path.exists(cons_dst)
-
-    stats = compact_kmv_rollup(spark, store, set_col="event_type", k=k, keep_latest=0)
-    assert os.path.exists(cons_dst)
-    assert not os.path.exists(store + "._fold_old")
-    after = sorted(map(tuple, kmv_sketches_from_store(
-        spark, store, set_col="event_type", k=k
-    ).collect()))
-    assert after == before
-    assert stats["partitions_after"] >= 1
-
-
-def _hist_probe(spark, store):
-    from commercepulse_data_pipeline_spark.streaming.histograms import (
-        quantiles_from_store,
-    )
-
-    return sorted(map(tuple, quantiles_from_store(
-        spark, store, [("p50", 1, 2), ("p99", 99, 100)],
-        shard_col="day", group_cols=["grp"],
-    ).collect()))
-
-
-def test_probe_during_in_flight_hist_fold_exact(spark, tmp_path, monkeypatch):
-    """A monitoring job probing the histogram store CONCURRENTLY with (or
-    after a crash of) compaction reads the exact pre-fold answer at every
-    resting point of the fold protocol — including the two windows where
-    a naive read is provably wrong for count-summing sketches:
-
-    - pre-commit (old consolidated set aside, no marker): naive read
-      UNDER-counts (the consolidated rows are invisible);
-    - post-commit after rename-in, folded dirs not yet deleted: naive
-      read DOUBLE-counts (consolidated + partials both visible).
-    """
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from commercepulse_data_pipeline_spark.streaming.histograms import (
-        compact_hist_rollup,
-        hist_rollup_batch,
-    )
-
-    store = str(tmp_path / "hist_store")
-    for bid in range(3):
-        rows = [("2024-02-%02d" % (1 + i % 3), "g%d" % (i % 2),
-                 (i * 7919 + bid * 104729) % 3_000_000) for i in range(400)]
-        hist_rollup_batch(
-            spark.createDataFrame(rows, "day string, grp string, v long"),
-            bid, store, value_col="v", shard_col="day", group_cols=["grp"],
-        )
-    # fold #1 completes: store now has a consolidated partition
-    compact_hist_rollup(spark, store, shard_col="day", group_cols=["grp"],
-                        keep_latest=1)
-    rows4 = [("2024-02-01", "g0", i * 13) for i in range(200)]
-    hist_rollup_batch(
-        spark.createDataFrame(rows4, "day string, grp string, v long"),
-        3, store, value_col="v", shard_col="day", group_cols=["grp"],
-    )
-    truth = _hist_probe(spark, store)
-
-    # -- window 1: PRE-COMMIT. Crash fold #2 at the marker rename: the old
-    # consolidated sits in ._fold_old, no marker yet.
-    real_rename = os.rename
-
-    def crash_marker(src, dst):
-        if str(dst).endswith("_FOLDED.json"):
-            raise RuntimeError("injected crash before commit")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_marker)
-    with _pytest.raises(RuntimeError, match="before commit"):
-        compact_hist_rollup(spark, store, shard_col="day",
-                            group_cols=["grp"], keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.isdir(store + "._fold_old/ingest_batch=-1")
-    assert not os.path.exists(store + "._fold_old/_FOLDED.json")
-    assert _hist_probe(spark, store) == truth  # roll-back view
-    # full recovery + fold: answers unchanged, store clean again
-    compact_hist_rollup(spark, store, shard_col="day", group_cols=["grp"],
-                        keep_latest=0)
-    assert _hist_probe(spark, store) == truth
-    assert not os.path.exists(store + "._fold_old")
-
-    # -- window 2: POST-COMMIT, consolidated still in tmp. The store is
-    # clean pre-fold, so the only rename to the consolidated root path is
-    # _fold_commit's rename-in — crash there.
-    rows5 = [("2024-02-02", "g1", i * 17) for i in range(200)]
-    hist_rollup_batch(
-        spark.createDataFrame(rows5, "day string, grp string, v long"),
-        4, store, value_col="v", shard_col="day", group_cols=["grp"],
-    )
-    truth2 = _hist_probe(spark, store)
-
-    def crash_cons(src, dst):
-        if str(dst) == os.path.join(store, "ingest_batch=-1"):
-            raise RuntimeError("injected crash at commit point")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_cons)
-    with _pytest.raises(RuntimeError, match="commit point"):
-        compact_hist_rollup(spark, store, shard_col="day",
-                            group_cols=["grp"], keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.exists(store + "._fold_old/_FOLDED.json")
-    assert not os.path.isdir(os.path.join(store, "ingest_batch=-1"))
-    assert _hist_probe(spark, store) == truth2  # roll-forward view (tmp)
-
-    # -- window 3: POST-COMMIT, consolidated renamed in, folded dirs not
-    # yet deleted (the double-count window). The next compact's implicit
-    # recovery renames the consolidated in, then deletes folded dirs —
-    # crash at the first folded-dir delete.
-    real_rmtree = shutil.rmtree
-
-    def crash_rmtree(path, *a, **kw):
-        if "ingest_batch=" in str(path) and "._fold" not in str(path):
-            raise RuntimeError("injected crash before folded-dir delete")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
-    with _pytest.raises(RuntimeError, match="folded-dir delete"):
-        compact_hist_rollup(spark, store, shard_col="day",
-                            group_cols=["grp"], keep_latest=0)
-    monkeypatch.undo()
-    # the poisoned state: consolidated AND its folded sources both on disk
-    assert os.path.isdir(os.path.join(store, "ingest_batch=-1"))
-    leftover = [e for e in os.listdir(store)
-                if e.startswith("ingest_batch=") and e != "ingest_batch=-1"]
-    assert leftover, "expected folded dirs still present"
-    assert _hist_probe(spark, store) == truth2  # no double count
-    # and after full recovery the answers are still identical
-    compact_hist_rollup(spark, store, shard_col="day", group_cols=["grp"],
-                        keep_latest=0)
-    assert _hist_probe(spark, store) == truth2
-
-
-def test_probe_during_in_flight_kmv_fold_exact(spark, tmp_path, monkeypatch):
-    """Same contract for the KMV store, probed through BOTH readers
-    (kmv_sketches_from_store and the kmv_set_overlap estimates): exact
-    pre-fold answers in the pre-commit window, where a naive read would
-    lose the set-aside consolidated partition's hashes entirely."""
-    import os
-
-    import pytest as _pytest
-
-    from commercepulse_data_pipeline_spark.operators.sketches import (
-        kmv_set_overlap,
-    )
-    from commercepulse_data_pipeline_spark.streaming.kmv import (
-        compact_kmv_rollup,
-        kmv_rollup_batch,
-        kmv_sketches_from_store,
-    )
-
-    k = 8
-    store = str(tmp_path / "kmv_store")
-    for bid in range(2):
-        kmv_rollup_batch(
-            spark.createDataFrame(
-                [(s, f"k{bid * 30 + i}") for s in ("A", "B") for i in range(40)]
-                + [("B", f"x{bid * 9 + i}") for i in range(9)],
-                "event_type string, ukey string",
-            ),
-            bid, store, set_col="event_type", key_col="ukey", k=k,
-        )
-    compact_kmv_rollup(spark, store, set_col="event_type", k=k, keep_latest=1)
-    kmv_rollup_batch(
-        spark.createDataFrame([("A", f"z{i}") for i in range(25)],
-                              "event_type string, ukey string"),
-        2, store, set_col="event_type", key_col="ukey", k=k,
-    )
-
-    def probe():
-        sk = sorted(map(tuple, kmv_sketches_from_store(
-            spark, store, set_col="event_type", k=k).collect()))
-        ov = sorted(map(tuple, kmv_set_overlap(
-            spark, store, set_col="event_type", k=k).collect()))
-        return sk, ov
-
-    truth = probe()
-    real_rename = os.rename
-
-    def crash_marker(src, dst):
-        if str(dst).endswith("_FOLDED.json"):
-            raise RuntimeError("injected crash before commit")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_marker)
-    with _pytest.raises(RuntimeError, match="before commit"):
-        compact_kmv_rollup(spark, store, set_col="event_type", k=k,
-                           keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.isdir(store + "._fold_old/ingest_batch=-1")
-    assert probe() == truth  # pre-commit roll-back view, both readers
-    compact_kmv_rollup(spark, store, set_col="event_type", k=k, keep_latest=0)
-    assert probe() == truth

@@ -104,61 +104,6 @@ def test_stream_bronze_sink_exactly_once(spark, landing_dir, tmp_path):
     assert 0 < one_day.count() <= first
 
 
-def test_current_order_state_stateful_upsert(spark, tmp_path):
-    """applyInPandasWithState: state carries across micro-batches; a later
-    batch's OLDER event must not overwrite newer state (D1 semantics)."""
-    from commercepulse_data_pipeline_spark.streaming.state import current_order_state
-
-    d1, d2 = tmp_path / "b1", tmp_path / "b2"
-    d1.mkdir(); d2.mkdir()
-    (d1 / "events.jsonl").write_text("\n".join([
-        json.dumps({"order_id": "O1", "event_time": "2026-02-10T10:00:00Z",
-                    "order_status": "pending", "order_amount": 100.0}),
-        json.dumps({"order_id": "O2", "event_time": "2026-02-10T11:00:00Z",
-                    "order_status": "pending", "order_amount": 50.0}),
-    ]) + "\n")
-    (d2 / "events.jsonl").write_text("\n".join([
-        # newer event for O1 → state advances
-        json.dumps({"order_id": "O1", "event_time": "2026-02-11T09:00:00Z",
-                    "order_status": "confirmed", "order_amount": 100.0}),
-        # OUT-OF-ORDER older event for O2 → must NOT overwrite
-        json.dumps({"order_id": "O2", "event_time": "2026-02-09T00:00:00Z",
-                    "order_status": "created", "order_amount": 49.0}),
-        # NULL event time → never wins, still counted
-        json.dumps({"order_id": "O2", "event_time": None,
-                    "order_status": "ghost", "order_amount": 0.0}),
-    ]) + "\n")
-
-    schema = ("order_id string, event_time string, order_status string, "
-              "order_amount double")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force 2 micro-batches
-        .json(str(tmp_path) + "/*/events.jsonl")
-        .withColumn("event_ts", F.to_timestamp("event_time"))
-    )
-    out = current_order_state(stream)
-    q = (
-        out.writeStream.format("memory").queryName("order_state")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT * FROM order_state ORDER BY updated_at_us"
-    ).collect()
-    # last emitted row per key = final state
-    final = {}
-    for r in rows:
-        if r.n_events >= final.get(r.order_id, (0,))[0]:
-            final[r.order_id] = (r.n_events, r)
-    o1 = final["O1"][1]
-    assert o1.order_status == "confirmed" and o1.n_events == 2
-    o2 = final["O2"][1]
-    assert o2.order_status == "pending"      # out-of-order event ignored
-    assert o2.order_amount == 50.0
-    assert o2.n_events == 3                  # but all events counted
-
-
 def test_stream_session_windows(spark, landing_dir):
     from commercepulse_data_pipeline_spark.streaming.ingest import session_counts
 
@@ -999,166 +944,6 @@ def test_gold_fold_job_and_codegen_ceilings(spark, date_move_fold, tmp_path):
     assert compiled <= _WARM_FOLD_COMPILES_MAX, compiled
 
 
-@pytest.mark.slow
-def test_streaming_funnel_converges_to_batch_under_late_arrival(spark, tmp_path):
-    """The stateful streaming funnel (streaming/funnels.py) equals the
-    batch ordered_funnel after the stream drains — INCLUDING a
-    late-but-within-watermark step-1 event that arrives a batch later
-    and retroactively moves t1 (the case a naive advance-a-counter
-    funnel gets wrong). Heartbeat events (a type outside the step list)
-    only push the watermark."""
-    import os
-    import time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.operators.windows import ordered_funnel
-    from commercepulse_data_pipeline_spark.streaming.funnels import streaming_funnel
-
-    def ts(sec):
-        return pd.Timestamp("2026-03-01", tz="UTC") + pd.Timedelta(seconds=sec)
-
-    steps = ["A", "B", "C"]
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    d1 = [(1, ts(100), "A"), (1, ts(105), "B"), (2, ts(100), "A")]
-    # u1's A@96 arrives one batch LATE (watermark after d1 = 105-10 = 95,
-    # so 96 is still admissible) and must become the new t1; B@105 > 96
-    # still matches; C@110 completes. u3's far-future heartbeats push the
-    # watermark GLOBALLY — u1/u2 receive NOTHING after d2 and must
-    # finalize via their EventTimeTimeout, not via events of their own.
-    d2 = [(1, ts(96), "A"), (1, ts(110), "C"), (2, ts(103), "B"),
-          (3, ts(200), "hb")]
-    d3 = [(3, ts(300), "hb")]
-    for i, rows in enumerate((d1, d2, d3)):
-        pq.write_table(
-            pa.table({
-                "user_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                "event_ts": pa.array([r[1] for r in rows],
-                                     type=pa.timestamp("us", tz="UTC")),
-                "event_type": [r[2] for r in rows],
-            }),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    stream = (
-        spark.readStream.schema("user_id long, event_ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drops))
-        .withWatermark("event_ts", "10 seconds")
-    )
-    out_dir = str(tmp_path / "out")
-
-    def sink(bdf, bid):
-        bdf.withColumn("b", F.lit(bid)).write.mode("append").parquet(out_dir)
-
-    q = (
-        streaming_funnel(stream, steps)
-        .writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = spark.read.parquet(out_dir).collect()
-    latest = {}
-    for r in rows:
-        if r["user_id"] not in latest or r["b"] > latest[r["user_id"]]["b"]:
-            latest[r["user_id"]] = r
-
-    events = spark.createDataFrame(
-        [(u, t.to_pydatetime(), ty) for batch in (d1, d2, d3) for (u, t, ty) in batch],
-        "user_id long, ts timestamp, event_type string",
-    )
-    batch = {
-        r["user_id"]: r
-        for r in ordered_funnel(events, steps, ts_col="ts").collect()
-    }
-    for u in (1, 2):
-        got, want = latest[u], batch[u]
-        for i, _ in enumerate(steps, start=1):
-            want_us = (
-                None
-                if want[f"t{i}"] is None
-                else int(pd.Timestamp(want[f"t{i}"]).value // 1000)
-            )
-            assert got[f"t{i}_us"] == want_us, (u, i, got, want)
-    assert latest[1]["steps_completed"] == 3
-    assert latest[2]["steps_completed"] == 2
-    # the late A@96 really did move t1 back
-    assert latest[1]["t1_us"] == int(pd.Timestamp(ts(96)).value // 1000)
-
-
-@pytest.mark.slow
-def test_streaming_funnel_string_keyed_custom_column(spark, tmp_path):
-    """The output key column derives its name AND type from the input
-    stream's user_col — a string-keyed stream named something other than
-    user_id works and labels the column correctly (the hardcoded
-    user_id/LongType schema this test pins against regressing)."""
-    import os
-    import time
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming.funnels import streaming_funnel
-
-    def ts(sec):
-        return pd.Timestamp("2026-03-01", tz="UTC") + pd.Timedelta(seconds=sec)
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    d1 = [("alice", ts(100), "A"), ("alice", ts(105), "B"),
-          ("bob", ts(100), "A"), ("hb", ts(500), "hb")]
-    d2 = [("hb", ts(900), "hb")]
-    for i, rows in enumerate((d1, d2)):
-        pq.write_table(
-            pa.table({
-                "session_key": [r[0] for r in rows],
-                "event_ts": pa.array([r[1] for r in rows],
-                                     type=pa.timestamp("us", tz="UTC")),
-                "event_type": [r[2] for r in rows],
-            }),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    stream = (
-        spark.readStream.schema(
-            "session_key string, event_ts timestamp, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(drops))
-        .withWatermark("event_ts", "10 seconds")
-    )
-    out = streaming_funnel(stream, ["A", "B"], user_col="session_key")
-    assert out.schema["session_key"].dataType.simpleString() == "string"
-    out_dir = str(tmp_path / "out")
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(lambda bdf, bid: bdf.write.mode("append").parquet(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows_out = spark.read.parquet(out_dir).collect()
-    got = {}
-    for r in rows_out:
-        if (r["session_key"] not in got
-                or r["steps_completed"] > got[r["session_key"]]["steps_completed"]):
-            got[r["session_key"]] = r
-    assert got["alice"]["steps_completed"] == 2
-    assert got["bob"]["steps_completed"] == 1
-
-
 def test_deterministic_sample_is_stream_batch_unified(spark, tmp_path):
     """Content-keyed sampling is a stateless projection, so the SAME
     operator runs unchanged on a stream and selects the SAME rows the
@@ -1414,77 +1199,6 @@ def test_passage_stream_crash_replay_from_checkpoint(spark, tmp_path):
     parts = {e for e in os.listdir(f"{store}/fp_index")
              if e.startswith("ingest_batch=")}
     assert parts == {"ingest_batch=0", "ingest_batch=1", "ingest_batch=2"}
-
-
-def test_stream_ivfpq_ingest_replay_idempotent(spark, tmp_path):
-    """Streaming IVF+PQ ingest: drops encode against the frozen index
-    under batch-id partitions (a direct batch replay overwrites, never
-    duplicates), and a probe over base + streamed codes finds an
-    appended near-twin through the combined store."""
-    import math
-    import os
-    import random
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.operators import similarity as sim
-    from commercepulse_data_pipeline_spark.streaming.vectors import (
-        ivfpq_codes_from_store,
-        ivfpq_ingest_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    rng = random.Random(21)
-
-    def mk(i, base):
-        v = [x + rng.gauss(0, 0.05) for x in base]
-        n = math.sqrt(sum(x * x for x in v))
-        return (i, [x / n for x in v])
-
-    A, B = [1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]
-    base_rows = [mk(i, A if i % 2 == 0 else B) for i in range(30)]
-    df = spark.createDataFrame(base_rows, "vec_id long, embedding array<float>")
-    idx = str(tmp_path / "ivfpq")
-    sim.write_ivfpq_index(df, idx, n_centroids=2, m=2, n_codes=4, iters=1)
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    emb = pa.list_(pa.float32())
-    d1 = [mk(100, A), mk(101, B)]
-    d2 = [(200, A)]  # exact cluster-A center arrives in batch 2
-    for i, rows in enumerate((d1, d2)):
-        pq.write_table(
-            pa.table({"vec_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                      "embedding": pa.array([r[1] for r in rows], type=emb)}),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "vec_id long, embedding array<float>",
-            max_files_per_trigger=1,
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: ivfpq_ingest_batch(df, i, idx),
-    )
-    q.awaitTermination(120)
-
-    combined = ivfpq_codes_from_store(spark, idx)
-    assert combined.count() == 33
-    got = sim.ivfpq_topk(spark, idx, A, k=33, nprobe=1, codes=combined)
-    by_id = {r["vec_id"]: r["approx_d2"] for r in got.collect()}
-    assert 200 in by_id and by_id[200] == min(by_id.values())
-
-    # direct replay of batch 1: own-partition overwrite, no duplication
-    ivfpq_ingest_batch(
-        spark.createDataFrame(d2, "vec_id long, embedding array<float>"),
-        1, idx,
-    )
-    assert ivfpq_codes_from_store(spark, idx).count() == 33
 
 
 def test_passage_fp_index_fold_probe_equality(spark, tmp_path, monkeypatch):
