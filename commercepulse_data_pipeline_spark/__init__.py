@@ -22,8 +22,8 @@ Layout
                    similarity search, text analysis, windows.
 - ``plans``      — end-to-end table builds: silver facts, gold
                    fact_order_daily, dimensions, quality report.
-- ``streaming``  — Structured Streaming variants: watermarked dedup,
-                   daily windowed aggregates, late-data metrics.
+- ``streaming``  — Structured Streaming stores: the incremental gold
+                   fold and the micro-batch curation/index stores.
 - ``multimodal`` — binary-column (image/audio/video) plumbing with
                    stubbed decoders.
 """

@@ -506,7 +506,7 @@ def cmd_media_features(args) -> int:
     Default error posture quarantines undecodable payloads as
     ``decode_error`` rows (``--strict`` restores raise-on-error)."""
     from commercepulse_data_pipeline_spark import multimodal as mm
-    from commercepulse_data_pipeline_spark.streaming.media import (
+    from commercepulse_data_pipeline_spark.multimodal import (
         extract_features_tolerant,
     )
 

@@ -11,10 +11,7 @@ from commercepulse_data_pipeline_spark.functions.drift import (
 )
 from commercepulse_data_pipeline_spark.functions.hashing import (
     event_id,
-    row_fingerprint,
-    short_id,
     stable_bucket,
-    text_fingerprint,
 )
 from commercepulse_data_pipeline_spark.functions.temporal import (
     calendar_columns,
@@ -32,9 +29,6 @@ __all__ = [
     "let",
     "numeric_or_zero",
     "parse_timestamp",
-    "row_fingerprint",
     "safe_divide",
-    "short_id",
     "stable_bucket",
-    "text_fingerprint",
 ]

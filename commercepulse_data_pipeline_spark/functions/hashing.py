@@ -1,20 +1,13 @@
 """Deterministic hash identities (reference F9).
 
 The reference mints event ids as SHA-256 of ``"{event_type}:{natural_key}"``
-(src/bootstrap_loader.py:22-24), falls back to MD5 of sorted-key JSON
-(src/bootstrap_loader.py:43), and the generator uses SHA-1[:12]
-(src/live_event_generator.py:27-29). All are stock Spark expressions —
-no UDF, fully codegen'd.
-
-Canonical-JSON parity note (SURVEY §7.3): ``json.dumps(sort_keys=True)``
-orders keys lexicographically; Spark's ``to_json(struct(...))`` preserves
-struct field order, so we sort the field list ourselves before building
-the struct.
+(src/bootstrap_loader.py:22-24). Both helpers are stock Spark
+expressions — no UDF, fully codegen'd.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -22,25 +15,6 @@ def event_id(event_type: Column, natural_key: Column) -> Column:
     """SHA-256 of "{event_type}:{natural_key}" (reference
     src/bootstrap_loader.py:22-24)."""
     return F.sha2(F.concat_ws(":", event_type, natural_key), 256)
-
-
-def short_id(*cols: Column, length: int = 12) -> Column:
-    """SHA-1 prefix id (reference src/live_event_generator.py:27-29)."""
-    return F.substring(F.sha1(F.concat_ws("|", *cols)), 1, length)
-
-
-def row_fingerprint(df: DataFrame, cols: list[str] | None = None) -> Column:
-    """MD5 over a canonical (key-sorted) JSON of the row (reference
-    src/bootstrap_loader.py:43 ``md5(json.dumps(record, sort_keys=True))``
-    in spirit; exact byte-parity with Python json is not promised — the
-    fixture hashes are computed one way and documented, SURVEY §7.3)."""
-    names = sorted(cols or df.columns)
-    return F.md5(F.to_json(F.struct(*[F.col(n) for n in names])))
-
-
-def text_fingerprint(text: Column) -> Column:
-    """Content fingerprint for exact-dedup: MD5 hex of the raw text."""
-    return F.md5(text)
 
 
 def stable_bucket(col: Column, n_buckets: int) -> Column:

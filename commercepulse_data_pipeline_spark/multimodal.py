@@ -1605,178 +1605,6 @@ def extract_features_tolerant(
     )
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("frame_ts_sec", T.DoubleType()),
-        T.StructField("frame", T.BinaryType()),
-        T.StructField("err", T.StringType()),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame, *, target: tuple[int, int] = (224, 224), batch_rows: int = 64
-) -> DataFrame:
-    """Image resize through the same Arrow-batched path as decode.
-
-    The resize itself is STUBBED (no PIL here): output bytes are a
-    deterministic function of (input bytes, target) so the distributed
-    contract — schema, batching, one output row per image row — is fully
-    testable; swap the inner function for `PIL.Image.resize` on a cluster
-    image that has it."""
-    import pandas as pd
-
-    tw, th = target
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _chunked(batches, batch_rows):
-            out = []
-            for _, row in pdf.iterrows():
-                content = row["content"] or b""
-                # STUB: deterministic fake "resized" payload
-                fake = bytes([tw % 256, th % 256]) + content[: tw * th % 97]
-                out.append({"media_id": row["media_id"], "width": tw, "height": th, "content": fake})
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return (
-        media.where(F.col("modality") == "image")
-        .select("media_id", "content")
-        .mapInPandas(run, RESIZED_SCHEMA)
-    )
-
-
-def sample_frames(
-    media: DataFrame, *, fps: float = 1.0, max_frames: int = 16, batch_rows: int = 16
-) -> DataFrame:
-    """Video frame sampling: one output ROW PER FRAME (row explosion
-    happens inside the Arrow batch, so a 2-hour video yields max_frames
-    rows without materializing the decode on the driver).
-
-    GIF payloads sample REAL frames (r14): the animation timeline from
-    the GCE delays is sampled at ``fps`` ticks, each tick emitting the
-    canvas displayed at that instant, re-encoded as a PPM P6 payload —
-    decodable by this module's own raster path, so sampled frames feed
-    straight back into ``image_ahash``/``resize_images``. A MALFORMED
-    GIF yields one tolerant err row (r15 — the err-row contract every
-    tolerant path here follows; stub frames are never emitted for a
-    payload that claims to be GIF). Memory is bounded (r15): delays are
-    read by a structure-only walk, then the streaming decoder retains
-    ONLY the canvases at sampled tick indices — a long animation never
-    holds all frames at once. Other containers keep the deterministic
-    STUB (no ffmpeg in this environment): fake frame bytes, duration
-    from the fake decoder — the Spark contract (schema, per-row
-    fan-out, batch sizing) is what that path tests; swap the inner loop
-    for an ffmpeg pipe on a cluster image that has it."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _chunked(batches, batch_rows):
-            out = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"]) if row["content"] else b""
-                if content[:6] in (b"GIF87a", b"GIF89a"):
-                    try:
-                        delays = _gif_frame_delays(content)
-                        duration = sum(delays) / 100.0
-                        n = min(max_frames, max(1, int(duration * fps)))
-                        # cumulative end-time of each frame, in seconds
-                        ends, acc = [], 0
-                        for d_cs in delays:
-                            acc += d_cs
-                            ends.append(acc / 100.0)
-                        # displayed frame at tick ts = first frame whose
-                        # interval END is past ts; a zero-duration
-                        # timeline (all delays 0) shows frame 0, as
-                        # renderers do at t=0 (r15 fix — the old walk
-                        # advanced past every zero-length interval and
-                        # sampled the LAST frame instead)
-                        ticks = []
-                        for i in range(n):
-                            ts = i / fps
-                            fi = next(
-                                (j for j, e in enumerate(ends) if e > ts),
-                                len(ends) - 1 if duration > 0 else 0,
-                            )
-                            ticks.append((i, ts, fi))
-                        needed = {fi for _, _, fi in ticks}
-                        kept = {}
-                        for j, (g, _d) in enumerate(_gif_raster_iter(content)):
-                            if j in needed:
-                                kept[j] = g
-                            if len(kept) == len(needed):
-                                break
-                        for i, ts, fi in ticks:
-                            g = kept[fi]
-                            hh, ww = g.shape
-                            ppm = (
-                                f"P6\n{ww} {hh}\n255\n".encode()
-                                + g.repeat(3).tobytes()
-                            )
-                            out.append(
-                                {
-                                    "media_id": row["media_id"],
-                                    "frame_index": i,
-                                    "frame_ts_sec": ts,
-                                    "frame": ppm,
-                                    "err": None,
-                                }
-                            )
-                    except Exception as exc:  # noqa: BLE001 — tolerant
-                        out.append(
-                            {
-                                "media_id": row["media_id"],
-                                "frame_index": None,
-                                "frame_ts_sec": None,
-                                "frame": None,
-                                "err": f"{type(exc).__name__}: {exc}",
-                            }
-                        )
-                    continue
-                d = DeterministicFakeDecoder.decode(content, "video")
-                duration = d["duration_sec"] or 0.0
-                n = min(max_frames, max(1, int(duration * fps)))
-                for i in range(n):
-                    ts = i / fps
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_index": i,
-                            "frame_ts_sec": ts,
-                            # STUB: deterministic fake frame bytes
-                            "frame": bytes([i % 256]) + content[:32],
-                            "err": None,
-                        }
-                    )
-            yield _exact_frame(out, FRAME_SCHEMA)
-
-    return (
-        media.where(F.col("modality") == "video")
-        .select("media_id", "content")
-        .mapInPandas(run, FRAME_SCHEMA)
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only rollup — deliberately never references ``content`` so
-    the parquet scan prunes the binary column entirely."""
-    return media.groupBy("modality", "mime_type").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.round(F.avg("n_bytes"), 2).alias("avg_bytes"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Image perceptual hashing (r13): near-dup dedup for the image modality
 # ---------------------------------------------------------------------------
@@ -2135,9 +1963,7 @@ def image_ahash(
 # machinery, the sig_hamming_pairs contract extends along the frame axis.
 
 
-def gif_frame_rasters(
-    content: bytes, max_frames: int | None = None, return_delays: bool = False
-):
+def gif_frame_rasters(content: bytes, max_frames: int | None = None) -> list:
     """Decode EVERY frame of a GIF to (h, w) uint8 grayscale rasters on
     the logical-screen canvas — the all-frames extension of the
     first-frame path in :func:`image_gray_raster`. Real decode: per-frame
@@ -2147,31 +1973,24 @@ def gif_frame_rasters(
     do-not-dispose — a documented simplification that only affects clips
     using those modes with transparency), GCE transparency honored
     (transparent pixels leave the canvas unchanged). Returns a list of
-    per-frame rasters, one snapshot of the canvas per image block — or
-    (rasters, per-frame GCE delays in centiseconds) with
-    ``return_delays`` (the timeline :func:`sample_frames` samples).
+    per-frame rasters, one snapshot of the canvas per image block.
 
-    Memory contract: this LIST form materializes every snapshot at once;
-    callers that need only a subset (frame sampling at tick indices)
-    should drive :func:`_gif_raster_iter` directly and retain only what
-    they keep — the iterator holds ONE canvas at a time (r15)."""
+    Memory contract: this LIST form materializes every snapshot it
+    keeps; ``max_frames`` stops the walk there, since
+    :func:`_gif_raster_iter` holds ONE canvas at a time (r15)."""
     frames: list = []
-    delays_cs: list = []
-    for g, d_cs in _gif_raster_iter(content):
+    for g in _gif_raster_iter(content):
         frames.append(g)
-        delays_cs.append(d_cs)
         if max_frames is not None and len(frames) >= max_frames:
             break
     if not frames:
         raise ValueError("GIF without an image frame")
-    if return_delays:
-        return frames, delays_cs
     return frames
 
 
 def _gif_raster_iter(content: bytes):
-    """Streaming core of :func:`gif_frame_rasters`: yield one
-    ``(luma_snapshot, delay_centiseconds)`` per image block, compositing
+    """Streaming core of :func:`gif_frame_rasters`: yield one luma
+    snapshot per image block, compositing
     onto a single persisting canvas — peak memory is one canvas plus the
     snapshot being yielded, regardless of frame count. Raises the same
     ValueErrors as the list form for malformed payloads encountered up
@@ -2187,7 +2006,6 @@ def _gif_raster_iter(content: bytes):
     canvas = np.tile(
         np.frombuffer(bg_rgb, dtype=np.uint8), (height, width, 1)
     ).reshape(height, width, 3).copy()
-    pending_delay = 0
     transparent_idx: int | None = None
     for kind, *ev in walk:
         if kind == "gce":
@@ -2195,7 +2013,6 @@ def _gif_raster_iter(content: bytes):
             # a cut GCE is the last block: only the fields read must exist
             if not gce or (gce[0] & 0x01 and len(gce) < 4):
                 raise ValueError("truncated GIF extension")
-            pending_delay = int.from_bytes(gce[1:3], "little")
             transparent_idx = gce[3] if gce[0] & 0x01 else None
             continue
         left, top, fw, fh, fpacked, lct, min_code, data = ev
@@ -2220,31 +2037,8 @@ def _gif_raster_iter(content: bytes):
             region[opaque] = rgb[opaque]
         else:
             region[...] = rgb
-        yield _luma(canvas), pending_delay
-        pending_delay = 0
+        yield _luma(canvas)
         transparent_idx = None  # GCE applies to ONE image block
-
-
-def _gif_frame_delays(content: bytes) -> list:
-    """Per-frame GCE delays (centiseconds) — the last Graphic Control
-    delay before each image — read off :func:`_gif_blocks`. Image data
-    is never LZW-decoded, so reading the timeline of a long animation
-    costs O(bytes) with no canvas at all. Raises ValueError for payloads
-    whose block structure is broken (same contract as the decode walk,
-    minus raster-level errors)."""
-    walk = _gif_blocks(content)
-    next(walk)
-    delays_cs: list = []
-    pending_delay = 0
-    for kind, *ev in walk:
-        if kind == "gce":
-            pending_delay = int.from_bytes(ev[0][1:3], "little")
-        else:
-            delays_cs.append(pending_delay)
-            pending_delay = 0
-    if not delays_cs:
-        raise ValueError("GIF without an image frame")
-    return delays_cs
 
 
 FRAME_HASH_SCHEMA = T.StructType(
@@ -2437,52 +2231,6 @@ def _video_pair_agg(
         F.round(frac_b, 6).alias("frac_b"),
         "min_hamming",
     ).where(F.greatest(frac_a, frac_b) >= F.lit(min_match_frac))
-
-
-def video_neardup_pairs_between(
-    new_frames: DataFrame,
-    index_frames: DataFrame,
-    *,
-    sig_col: str = "ahash",
-    hamming_threshold: int = 4,
-    min_match_frac: float = 0.5,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Video near-dup pairs between a NEW batch's frame table and an
-    accumulated frame-signature index — the incremental sibling of
-    :func:`video_neardup_pairs` (the minhash_pairs_between /
-    sig_hamming_pairs_between shape): per-ingest work is O(new batch)
-    banding + a probed-key-restricted scan of the index, so a video
-    corpus's near-dup feed never re-pairs the whole history per arrival.
-    Same output columns and containment semantics; a video re-ingested
-    under its own id never pairs with itself (shared fids are excluded
-    by the underlying between-form, and same-video frame matches are
-    dropped by the video-key split)."""
-    from commercepulse_data_pipeline_spark.operators.dedup import (
-        sig_hamming_pairs_between,
-    )
-
-    new_sigs = _frame_sig_table(new_frames, sig_col)
-    idx_sigs = _frame_sig_table(index_frames, sig_col)
-    fpairs = sig_hamming_pairs_between(
-        new_sigs, idx_sigs, id_col="fid", sig_col="sig",
-        hamming_threshold=hamming_threshold, max_bucket=max_bucket,
-    )
-    # per-video frame counts from BOTH sides; a re-ingested video
-    # appears in both with identical frames — max() keeps one row
-    counts = (
-        new_frames.where(F.col(sig_col).isNotNull())
-        .select("media_id", "frame_index")
-        .unionByName(
-            index_frames.where(F.col(sig_col).isNotNull()).select(
-                "media_id", "frame_index"
-            )
-        )
-        .distinct()
-        .groupBy("media_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames"))
-    )
-    return _video_pair_agg(fpairs, counts, min_match_frac)
 
 
 # ---------------------------------------------------------------------------

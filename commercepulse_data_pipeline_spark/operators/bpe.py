@@ -1,50 +1,28 @@
-"""Distributed BPE tokenizer training and encoding.
+"""Byte-pair-encoding round-0 statistics over a Spark corpus.
 
-Byte-pair-encoding (Sennrich et al. 2016, public algorithm) over a Spark
-corpus — the tokenizer-training step of an LLM data pipeline, next to the
-vocab/encode tier in ``operators/text.py``.
+BPE (Sennrich et al. 2016, public algorithm) trains a tokenizer by
+repeatedly merging the most frequent adjacent symbol pair. This module
+computes the statistics the first round ranks: adjacent-pair counts
+weighted by word frequency.
 
-Convention (shared by trainer, encoder, oracle SQL and the pure-Python
-test reference, so all four agree symbol-for-symbol):
+Convention (shared with the oracle SQL and the pure-Python test
+reference, so all three agree symbol-for-symbol):
 
 - words  = whitespace tokens of ``lower(text)`` (``text.tokens``);
 - symbols(word) = characters of the word followed by an ``</w>``
   end-of-word marker;
-- a merge ``(a, b)`` joins every non-overlapping adjacent occurrence
-  left-to-right in one pass (so ``aaa`` under ``(a, a)`` → ``[aa, a]``);
-- the best pair each round is max total count, ties broken by the
-  lexicographically smallest ``(a, b)`` — deterministic across engines.
+- a pair counts once per adjacent occurrence inside a word.
 
-Scale shape — the part that matters at 100 TB:
-
-- the corpus is scanned ONCE (``word_freqs``): BPE statistics depend only
-  on the distinct-word frequency table, which is orders of magnitude
-  smaller than the corpus (Heaps' law) and is what every iteration runs
-  on;
-- each training round is: adjacent-pair explode → map-side-combined
-  count → a bounded top-``pool`` fetch (a few hundred driver rows, never
-  a full collect) → greedy selection of the longest merge BATCH that is
-  provably equivalent to sequential BPE (pairwise symbol-disjoint with a
-  rank-safety guard, see ``_select_disjoint_batch``) → ONE JVM-side
-  ``F.aggregate`` fold pass applying the whole batch (no Python in the
-  loop). A 32k-merge vocab therefore costs thousands, not 32k, of Spark
-  jobs. Lineage is cut with ``localCheckpoint`` every few merges so
-  ``n_merges`` stays bounded in plan size;
-- encoding dedups to DISTINCT words first, runs the (inherently
-  sequential per-word) merge loop once per distinct word in an
-  Arrow-batched pandas UDF, then joins the word→pieces map back to the
-  corpus with a HYBRID join — broadcast for the ``head_k`` hottest
-  words, unhinted shuffle for the Heaps-law tail — so UDF work is
-  O(distinct words) and no executor ever materializes the full vocab.
+Scale shape: the corpus is scanned ONCE (``word_freqs``). BPE statistics
+depend only on the distinct-word frequency table, which is orders of
+magnitude smaller than the corpus (Heaps' law), so the pair explode and
+count run on that table.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from .text import tokens
 
@@ -94,288 +72,3 @@ def pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.sum("freq").alias("n_pairs"))
     )
-
-
-def _apply_merge(syms: Column, a: str, b: str) -> Column:
-    """One merge round as a JVM-side left-to-right fold: append each
-    symbol unless it completes the (a, b) pair at the tail, in which case
-    the tail is replaced by the joined symbol. Non-overlapping by
-    construction (the joined tail no longer equals ``a`` unless a==a+b)."""
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (x == F.lit(b)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(a + b))),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def _select_disjoint_batch(
-    cands: list[tuple[int, str, str]], batch_size: int, floor: int
-) -> list[tuple[int, str, str]]:
-    """Greedy prefix of ranked pair candidates that is PROVABLY safe to
-    apply as one batch, i.e. batched training emits exactly the sequence
-    sequential BPE would.
-
-    ``cands`` is ranked (count desc, a asc, b asc); ``floor`` bounds the
-    count of any UNFETCHED pair (the last fetched count when the fetch
-    was full, else 0 — nothing was left behind).
-
-    Safety argument: applying merge (a, b) can only (1) decrease counts
-    of pairs sharing a symbol with it and (2) CREATE pairs (x, a+b) /
-    (a+b, y) whose counts are bounded by the current counts of (x, a) /
-    (b, y) at apply time — themselves bounded by those pairs' OLD counts
-    if fetched, by ``floor`` if unfetched, or (if they were created by an
-    earlier merge of this batch, transitively) by the running
-    ``created_bound``. A later candidate c = (n_c, ...) is therefore the
-    exact sequential argmax at its turn when:
-
-    - n_c > floor (no unfetched pair can rank above it),
-    - n_c > created_bound, STRICTLY (no created pair can reach n_c — a
-      created pair that merely TIED could still win the lexicographic
-      tie-break, the bbb/bbbc counter-example hypothesis found in r8:
-      merging (b,b) creates (bb,b) whose count ties the next candidate
-      and whose name sorts first),
-    - c shares no symbol with earlier merges (its own count is then
-      unchanged), and no fetched pair ranked at-or-above c's tie block
-      shares one either (their counts may have decreased, but a decrease
-      cannot promote anything past c; an un-decreased dirty pair above c
-      would mean c was never the argmax). Earlier SELECTED merges are
-      exempt from that last check — their counts are consumed to ~0 by
-      application — but NOT from the created_bound, which is exactly
-      where the pre-fix exemption was unsound.
-
-    The first candidate is always the sequential argmax."""
-    if not cands:
-        return []
-
-    def creation_bound(a: str, b: str) -> int:
-        # max old count of any fetched (x, a) / (b, y) — each bounds one
-        # pair the merge (a, b) can create; unfetched such pairs are
-        # bounded by floor
-        m = floor
-        for n, x, y in cands:
-            if y == a or x == b:
-                m = max(m, n)
-        return m
-
-    selected = [cands[0]]
-    used = {cands[0][1], cands[0][2], cands[0][1] + cands[0][2]}
-    created_bound = creation_bound(cands[0][1], cands[0][2])
-    for idx in range(1, len(cands)):
-        if len(selected) >= batch_size:
-            break
-        n, a, b = cands[idx]
-        if n <= floor or n <= created_bound or a in used or b in used:
-            break
-        # every pair ranked at-or-above this count (the contiguous tie
-        # block included) must be clean w.r.t. already-used symbols
-        tie_end = idx
-        while tie_end + 1 < len(cands) and cands[tie_end + 1][0] == n:
-            tie_end += 1
-        if any(
-            (cands[j][1] in used or cands[j][2] in used)
-            for j in range(tie_end + 1)
-            if j != idx and cands[j] not in selected
-        ):
-            break
-        selected.append((n, a, b))
-        used |= {a, b, a + b}
-        created_bound = max(created_bound, creation_bound(a, b))
-    return selected
-
-
-def train_bpe(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    *,
-    checkpoint_every: int = 8,
-    batch_size: int = 16,
-    stats: dict | None = None,
-) -> list[tuple[str, str, int]]:
-    """Learn ``n_merges`` BPE merges over the corpus; returns the ordered
-    merge list [(a, b, count), …] — bit-identical to one-merge-per-round
-    sequential BPE (tests pin this against an independent reference).
-
-    Each ROUND is one Spark job: pair counts → top-``candidate pool``
-    fetch (a few hundred driver rows) → greedy selection of the longest
-    sequentially-equivalent pairwise-disjoint merge prefix
-    (:func:`_select_disjoint_batch`) → ONE fold pass applying the whole
-    batch. On Zipf-ish corpora that packs several merges per job, so a
-    32k-merge vocab costs thousands — not 32k — of Spark jobs
-    (``stats["rounds"]`` records the realized round count;
-    ``batch_size=1`` recovers the strictly sequential trainer). The
-    symbol table stays distributed; lineage is cut via localCheckpoint
-    every ``checkpoint_every`` applied merges."""
-    state = (
-        word_freqs(df, text_col)
-        .select(_symbols(F.col("word")).alias("syms"), "freq")
-        .localCheckpoint()
-    )
-    pool = max(64, 4 * batch_size)
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    since_ckpt = 0
-    while len(merges) < n_merges:
-        fetched = (
-            state.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "freq")
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(pool)
-            .collect()
-        )
-        rounds += 1
-        cands = [(int(r["n"]), r["a"], r["b"]) for r in fetched]
-        if not cands or cands[0][0] < 1:
-            break
-        floor = cands[-1][0] if len(cands) == pool else 0
-        batch = _select_disjoint_batch(
-            cands, min(batch_size, n_merges - len(merges)), floor
-        )
-        col = F.col("syms")
-        for n, a, b in batch:
-            merges.append((a, b, n))
-            col = _apply_merge(col, a, b)
-        state = state.select(col.alias("syms"), "freq")
-        since_ckpt += len(batch)
-        if since_ckpt >= checkpoint_every:
-            state = state.localCheckpoint()
-            since_ckpt = 0
-    state.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["merges"] = len(merges)
-    return merges
-
-
-def encode_bpe(
-    df: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    head_k: int = 32768,
-) -> DataFrame:
-    """Encode documents with a learned merge list → (id_col, pieces:
-    array<string>, n_pieces). The merge loop is inherently sequential per
-    word, so it runs in an Arrow-batched pandas UDF — but only over
-    DISTINCT words, so UDF work is O(vocab), not O(corpus).
-
-    Vocab-join shape (the 100 TB part): the distinct-word table follows
-    Heaps' law — hundreds of millions of rows on a web-scale corpus — so
-    force-broadcasting ALL of it would OOM every executor. Instead the
-    join is HYBRID: the ``head_k`` most frequent words (which cover the
-    overwhelming majority of corpus tokens under Zipf, and are exactly
-    the keys that would skew a shuffle) are broadcast; the long tail
-    shuffle-joins with no hint, so Catalyst/AQE picks — and a tail that
-    happens to be small still gets broadcast at runtime. Documents whose
-    text yields ZERO tokens (NULL/empty) are kept, with an empty
-    ``pieces`` array and ``n_pieces = 0``, so per-doc accounting over the
-    result never silently loses documents."""
-    from pyspark.sql import types as T
-
-    ranks = {(m[0], m[1]): i for i, m in enumerate(merges)}
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def bpe_word(words: pd.Series) -> pd.Series:
-        def enc(word: str) -> list[str]:
-            syms = list(word) + [END]
-            while len(syms) > 1:
-                ranked = [
-                    (ranks[(syms[i], syms[i + 1])], i)
-                    for i in range(len(syms) - 1)
-                    if (syms[i], syms[i + 1]) in ranks
-                ]
-                if not ranked:
-                    break
-                r = min(ranked)[0]
-                a, b = merges[r][0], merges[r][1]
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return syms
-
-        return words.map(enc)
-
-    words = df.select(
-        F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("pos", "word")
-    )
-    wf = words.groupBy("word").agg(F.count(F.lit(1)).alias("wf"))
-    head = (
-        wf.orderBy(F.col("wf").desc(), F.col("word").asc())
-        .limit(head_k)
-        .select("word")
-    )
-    head_pieces = head.withColumn("pieces", bpe_word(F.col("word")))
-    tail_pieces = (
-        wf.join(F.broadcast(head), "word", "left_anti")
-        .select("word")
-        .withColumn("pieces", bpe_word(F.col("word")))
-    )
-    joined = words.join(F.broadcast(head_pieces), "word").unionByName(
-        words.join(F.broadcast(head), "word", "left_anti").join(tail_pieces, "word")
-    )
-    encoded = (
-        joined.groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("pieces")))
-                    ),
-                    lambda s: s["pieces"],
-                )
-            ).alias("pieces")
-        )
-    )
-    return (
-        df.select(id_col)
-        .join(encoded, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(
-                F.col("pieces"), F.array().cast("array<string>")
-            ).alias("pieces"),
-        )
-        .withColumn("n_pieces", F.size("pieces"))
-    )
-
-
-def save_bpe_model(
-    spark: SparkSession,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    path: str,
-) -> None:
-    """Persist a trained merge list as a rank-ordered parquet table — the
-    tokenizer artifact a training pipeline trains once and ships to every
-    encode job (rank IS the merge priority; counts kept when present for
-    auditability)."""
-    rows = []
-    for rank, m in enumerate(merges):
-        a, b = m[0], m[1]
-        n = int(m[2]) if len(m) > 2 else None
-        rows.append((rank, a, b, n))
-    one_slice_df(
-        spark, rows, "rank int, a string, b string, n bigint"
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_bpe_model(spark: SparkSession, path: str) -> list[tuple[str, str, int]]:
-    """Load a persisted merge table back into the ordered list
-    :func:`encode_bpe` consumes (rank order restored exactly)."""
-    rows = spark.read.parquet(path).collect()
-    return [
-        (r["a"], r["b"], int(r["n"]) if r["n"] is not None else 0)
-        for r in sorted(rows, key=lambda r: r["rank"])
-    ]

@@ -80,13 +80,6 @@ def keep_first(
     )
 
 
-def idempotent_append(df: DataFrame, id_col: str = "event_id") -> DataFrame:
-    """Storage-level idempotency (reference D3/K1: Mongo upsert on unique
-    event_id index). Batch shape: dedup on the deterministic id before
-    append. Streaming shape: ``streaming.ingest.dedup_within_watermark``."""
-    return df.dropDuplicates([id_col])
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact-content dedup via hash-groupBy: keep the lowest id per distinct
     content hash. Shuffles on md5(text) — uniform by construction, no skew.
@@ -175,20 +168,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     which staging in a projection does not.
     """
     return F.array_distinct(token_ngrams(_tokens(text), n))
-
-
-def eligible_buckets(keyed: DataFrame, keys: list[str], *, max_bucket: int) -> DataFrame:
-    """Bucket keys whose member count is in [2, max_bucket] — computed from
-    a plain COUNT aggregation, so deciding a bucket's fate never
-    materializes its id array. Singletons can't produce pairs; over-cap
-    buckets are degenerate (empty docs, boilerplate, zero vectors) and are
-    dropped wholesale."""
-    return (
-        keyed.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bucket_n"))
-        .where((F.col("__bucket_n") >= 2) & (F.col("__bucket_n") <= max_bucket))
-        .select(*keys)
-    )
 
 
 def capped_posting_lists(
@@ -678,32 +657,6 @@ def _md5_long(s: Column) -> Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def _simhash_from_hashes(hashes: Column, n: Column, bits: int = 64) -> Column:
-    """SimHash from an ALREADY-MATERIALIZED array of 64-bit hashes.
-
-    Per-bit majority vote: bit_i(sig) = 1 iff more hashes have bit_i set
-    than not. ``hashes``/``n`` must be plain column references (staged in
-    their own projection) — inlining the hash computation here would make
-    Catalyst re-expand it per bit (64× recompute; measured ~15× slower).
-    """
-    def bit_sum(i: int) -> Column:
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc + F.shiftright(h, i).bitwiseAND(F.lit(1)).cast("int"),
-        )
-    bit_cols = [
-        F.when(bit_sum(i) * 2 > n, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")) * F.lit(2**i).cast("long")
-        if i < 63
-        else F.when(bit_sum(i) * 2 > n, F.lit(-(2**63)).cast("long")).otherwise(F.lit(0).cast("long"))
-        for i in range(bits)
-    ]
-    total = bit_cols[0]
-    for c in bit_cols[1:]:
-        total = total + c
-    return F.when(n > 0, total)
-
-
 def simhash_table(
     df: DataFrame,
     text_col: str = "text",
@@ -774,15 +727,6 @@ def simhash_table(
         total = total + c
     # docs with zero shingles produce no rows (same contract as minhash)
     return counts.select(F.col(id_col), total.alias("sig"))
-
-
-def simhash(text: Column, bits: int = 64, shingle_n: int = 2) -> Column:
-    """SimHash as a single column expression. Prefer ``simhash_table``
-    in real plans — as one inline expression Catalyst re-expands the
-    shingle/hash subtrees per bit (see _simhash_from_hashes)."""
-    shingles = word_shingles(text, shingle_n)
-    hashes = F.transform(shingles, lambda s: _md5_long(s))
-    return _simhash_from_hashes(hashes, F.size(shingles), bits)
 
 
 def _sig_blocks(
@@ -1059,7 +1003,7 @@ def write_minhash_index(
     mode: str = "overwrite",
 ) -> None:
     """Persist the corpus's LSH band table as its near-dup INDEX
-    (mirroring ``similarity.write_ivf_index`` / ``write_lsh_index``):
+    (mirroring the persisted LSH/PQ indexes in ``similarity``):
     (id, band_id, band_key) parquet plus a sidecar meta file pinning the
     banding parameters, so the read side always re-bands new docs with
     the SAME hash family. ``mode="append"`` is the incremental-ingest

@@ -34,14 +34,6 @@ def orphans(child: DataFrame, parent: DataFrame, key: str, *, broadcast_parent: 
     return child.join(parent_keys, on=key, how="left_anti")
 
 
-def enrich(
-    fact: DataFrame, dim: DataFrame, on: str | list[str], *, how: str = "left", broadcast_dim: bool = True
-) -> DataFrame:
-    """Fact-to-dimension equi-join (reference J1). Dims broadcast by
-    default — the 100 TB posture: never shuffle the fact for a small dim."""
-    return fact.join(F.broadcast(dim) if broadcast_dim else dim, on=on, how=how)
-
-
 def range_join(
     points: DataFrame,
     intervals: DataFrame,

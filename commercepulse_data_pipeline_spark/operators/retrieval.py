@@ -276,7 +276,7 @@ def write_text_index(
     positions: bool = False,
 ) -> None:
     """Persist the corpus's inverted index — the BM25 SERVING artifact
-    (mirroring ``write_minhash_index`` / ``similarity.write_ivf_index``):
+    (mirroring ``write_minhash_index`` / ``similarity.write_pq_index``):
     ``postings/`` = one parquet row per (doc, distinct term) carrying
     ``(id, term, tf, dl)``, hive-partitioned by
     ``term_bucket = stable_bucket(term, n_buckets)`` so a query's probe

@@ -129,29 +129,6 @@ def weighted_sample_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
 
 
-def weighted_rate_sample(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    rate: float,
-    max_weight: int,
-    *,
-    salt: str = "",
-) -> DataFrame:
-    """Proportional-to-weight deterministic sampling: keep a row with
-    probability ``rate · w / max_weight`` (weights clamped to
-    ``[1, max_weight]``), decided by exact integer comparison
-    ``bucket · max_weight < threshold(rate) · w`` — same stability and
-    oracle-replay properties as ``deterministic_sample``. Requires
-    ``max_weight < 2^31`` (int64-overflow bound on both products)."""
-    if not 1 <= max_weight < (1 << 31):
-        raise ValueError(f"max_weight must be in [1, 2^31), got {max_weight}")
-    w = F.least(F.greatest(F.col(weight_col).cast("long"), F.lit(1)), F.lit(max_weight))
-    lhs = hash_bucket(F.col(key_col), salt) * F.lit(max_weight)
-    rhs = F.lit(threshold_for(rate)) * w
-    return df.where(lhs < rhs)
-
-
 def assign_splits(
     df: DataFrame,
     key_col: str,
@@ -333,8 +310,7 @@ def dsir_importance(
 
     Returns (id_col, n_feats, dsir_logratio) for every document with at
     least one feature; resample by taking the top-k by
-    (dsir_logratio DESC, id) or feeding the weights to
-    :func:`weighted_rate_sample`.
+    (dsir_logratio DESC, id).
 
     Cross-engine determinism: the md5 bucket replays in SQL
     (hash_bucket), both engines feed log2 identical IEEE ratios of

@@ -153,9 +153,10 @@ def lsh_topk(
     bucket(s).
 
     This form recomputes the bucket key over a full corpus scan — the
-    build/ad-hoc path. At scale, persist the corpus pre-bucketed with
-    ``write_lsh_index`` and query with ``lsh_topk_indexed``: probes then
-    become partition PRUNING (only the probed buckets' files are opened).
+    build/ad-hoc path. At scale, persist the corpus pre-bucketed (the
+    ``streaming/embeddings.py`` store) and query with ``lsh_topk_indexed``:
+    probes then become partition PRUNING (only the probed buckets' files
+    are opened).
     Recall tuning: ``n_planes`` (bucket granularity) and ``probes``
     (multi-probe: also scan the buckets one sign-flip away —
     near-boundary neighbors land there; probes=1+n_planes covers all
@@ -165,57 +166,6 @@ def lsh_topk(
     buckets = _probe_buckets(query_vec, planes, probes)
     bucketed = corpus.where(lsh_bucket(F.col(vec_col), planes).isin(buckets))
     return cosine_topk(bucketed, query_vec, k, id_col=id_col, vec_col=vec_col)
-
-
-def write_lsh_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> None:
-    """Persist the sign-LSH index: the corpus PARTITIONED BY its bucket key
-    (probes become partition PRUNING) plus the hyperplane table next to it,
-    mirroring ``write_ivf_index``. The planes are persisted — not re-derived
-    from (dim, n_planes, seed) at query time — so the index is
-    self-describing and survives any future change to the plane generator.
-
-    This is the 100 TB serving shape for sign-LSH ANN: build once (one
-    full scan + one shuffle-free partitioned write), then every query
-    opens only its ``probes`` buckets' files.
-    """
-    if not 1 <= n_planes <= 63:
-        # the integer bucket key must fit a signed long; a 64-bit bucket
-        # would overflow conv().cast("long") into NULL partition values
-        # and probes would silently miss
-        raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-    if dim is None:
-        first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"]) if first else 0
-    planes = random_hyperplanes(dim, n_planes, seed)
-    # Partition key is the bucket's integer value, not the bit string:
-    # partition-column type inference would read "0101" back as int 101
-    # (leading zero lost) and probe matching would silently miss.
-    bucketed = corpus.withColumn(
-        "lsh_bucket", F.conv(lsh_bucket(F.col(vec_col), planes), 2, 10).cast("long")
-    )
-    # rebalance before the partitioned write (guide §6): an unbalanced
-    # partitionBy emits (input partitions × bucket values) files — 256
-    # tiny files at bench shape, millions at production widths; the AQE
-    # rebalance right-sizes output files per bucket AND is ~2× faster
-    # locally (fewer file creates/commits than the fan-out write)
-    bucketed.hint("rebalance", "lsh_bucket").write.mode("overwrite").partitionBy(
-        "lsh_bucket"
-    ).parquet(f"{path}/lists")
-    spark = corpus.sparkSession
-    one_slice_df(
-        spark,
-        [(i, [float(v) for v in p]) for i, p in enumerate(planes)],
-        "plane_id int, plane array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/planes")
 
 
 def lsh_topk_indexed(
@@ -385,94 +335,6 @@ def ivf_topk(
     return cosine_topk(bucketed, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 
-def write_ivf_index(
-    assigned: DataFrame, path: str, *, centroids: list[tuple[int, list[float]]]
-) -> None:
-    """Persist the IVF index: the assigned corpus PARTITIONED BY
-    centroid_id (probes become partition PRUNING — the scan never opens a
-    non-probed list's files) plus the centroid table next to it. This is
-    the 100 TB serving shape: ``ivf_topk`` over a fresh ``ivf_assign`` is
-    the build path, this is the query path."""
-    # rebalance-before-partitionBy: see write_lsh_index
-    assigned.hint("rebalance", "centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(f"{path}/lists")
-    spark = assigned.sparkSession
-    one_slice_df(
-        spark,
-        [(cid, [float(v) for v in c]) for cid, c in centroids],
-        "centroid_id int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Query a persisted IVF index: rank the (tiny) centroid table on the
-    driver, read ONLY the ``nprobe`` nearest partitions (partition
-    pruning, plan-asserted in tests), exact cosine re-rank inside them."""
-    cents = [
-        (int(r.centroid_id), list(r.centroid))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-
-    def d2(c: list[float]) -> float:
-        return sum((a - b) * (a - b) for a, b in zip(query_vec, c))
-
-    probe_ids = [cid for cid, c in sorted(cents, key=lambda t: d2(t[1]))[:nprobe]]
-    lists = spark.read.parquet(f"{path}/lists").where(F.col("centroid_id").isin(probe_ids))
-    return cosine_topk(lists, query_vec, k, id_col=id_col, vec_col=vec_col)
-
-
-def ivf_append(
-    new_df: DataFrame,
-    spark,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incremental IVF ingest: assign a NEW batch of vectors to the
-    persisted index's EXISTING centroids (the quantizer stays frozen —
-    re-clustering would reshuffle every already-written list, and the
-    standard IVF ingest contract is 'assign to nearest, retrain offline
-    when drift warrants'), then append each vector into its inverted
-    list's partition directory. Per-ingest cost is O(batch): one pass of
-    literal-centroid argmin (no shuffle) + a partitioned append; probes
-    keep being served by partition pruning with no index rebuild —
-    the ANN mirror of ``dedup.minhash_pairs_incremental``.
-
-    Returns the number of rows appended."""
-    cents = [
-        (int(r.centroid_id), [float(v) for v in r.centroid])
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-    if not cents:
-        raise ValueError(f"no centroids at {path}/centroids — not an IVF index")
-    dists = [
-        F.struct(
-            _sq_dist(F.col(vec_col), F.array(*[F.lit(v) for v in c])).alias("d"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, c in cents
-    ]
-    assigned = new_df.withColumn("centroid_id", F.array_min(F.array(*dists))["cid"])
-    # pin the count BEFORE the append so the returned number can't
-    # double-read the new files (same discipline as
-    # minhash_pairs_incremental's checkpoint-before-append)
-    assigned = assigned.localCheckpoint(eager=True)
-    n = assigned.count()
-    assigned.write.mode("append").partitionBy("centroid_id").parquet(f"{path}/lists")
-    return n
-
-
 def knn_join_self(
     corpus: DataFrame,
     k: int = 5,
@@ -626,7 +488,7 @@ def _check_query_side(queries: DataFrame, max_queries: int | None, op: str) -> N
             "goes quadratic (30.9x at 10x corpus in the r10 SCALE.md "
             "probe). For self/near-self kNN over the whole corpus use "
             "knn_join_self (LSH-blocked, broadcasts nothing) or the "
-            "persisted-index probes (lsh/ivf/pq/ivfpq_topk_indexed); for "
+            "persisted-index probes (lsh/pq_topk_indexed, ivfpq_topk); for "
             "a deliberately large query batch pass max_queries=None."
         )
 
@@ -778,47 +640,6 @@ def embedding_gram(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         .agg(F.round(F.sum(prod), 6).cast("double").alias("gram"))
         .select(F.col("i").cast("int"), F.col("j").cast("int"), "gram")
     )
-
-
-def pca_components(
-    spark, gram_rows, dim: int, *, k: int = 8
-) -> list[list[float]]:
-    """Top-k principal directions from a collected Gram upper triangle
-    (``gram_rows``: (i, j, gram) tuples — a BOUNDED d(d+1)/2 collect; the
-    corpus itself is never collected). Driver-side numpy ``eigh`` on the
-    d×d symmetric matrix (d is the embedding width — tiny next to the
-    corpus), eigenvectors sign-normalized (largest-|component| positive)
-    so the answer is unique."""
-    import numpy as np
-
-    m = np.zeros((dim, dim))
-    for i, j, g in gram_rows:
-        m[i][j] = g
-        m[j][i] = g
-    vals, vecs = np.linalg.eigh(m)
-    order = np.argsort(vals)[::-1][:k]
-    comps = []
-    for idx in order:
-        v = vecs[:, idx]
-        sign = 1.0 if v[int(np.argmax(np.abs(v)))] >= 0 else -1.0
-        comps.append([float(x * sign) for x in v])
-    return comps
-
-
-def project_embeddings(
-    df: DataFrame,
-    components: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Append the k-dim PCA projection: one sequential-fold dot product
-    per component (same deterministic fold as :func:`_dot` — literal
-    component vectors, pure codegen, no shuffle, no UDF)."""
-    projs = [
-        F.round(_dot(F.col(vec_col), F.array(*[F.lit(float(c)) for c in comp])), 6)
-        for comp in components
-    ]
-    return df.withColumn(out_col, F.array(*projs))
 
 
 # ---------------------------------------------------------------------------
@@ -1031,13 +852,12 @@ def pq_encode(
     books: list[list[list[float]]],
     *,
     vec_col: str = "embedding",
-    code_col: str = "pq_code",
 ) -> DataFrame:
-    """Append the m-code PQ encoding (``array<int>``) — a pure codegen
-    projection against the broadcast-literal codebooks; at 100 TB this
-    runs at scan speed and the codes table is ~d/m·(d→1 byte) smaller
-    than the raw vectors."""
-    return _with_pq_codes(corpus, books, vec_col=vec_col, out_col=code_col)
+    """Append the m-code PQ encoding as ``pq_code`` (``array<int>``) — a
+    pure codegen projection against the broadcast-literal codebooks; at
+    100 TB this runs at scan speed and the codes table is ~d/m·(d→1 byte)
+    smaller than the raw vectors."""
+    return _with_pq_codes(corpus, books, vec_col=vec_col, out_col="pq_code")
 
 
 def _pq_lut(books: list[list[list[float]]], query_vec: list[float]) -> list[list[float]]:
@@ -1197,28 +1017,6 @@ def pq_topk_indexed(
     return pq_topk(codes, books, query_vec, k, id_col=id_col, code_col=code_col)
 
 
-def pq_append(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> None:
-    """Incremental PQ ingest (the ivf_append sibling): encode a new batch
-    against the FROZEN persisted codebooks — a pure projection, O(batch),
-    no retraining, no rewrite of existing codes — and append to the codes
-    table. Queries (``pq_topk_indexed``) see old + new rows with the same
-    codebooks, so distances stay comparable across ingests. Retrain and
-    rewrite only when drift between the codebooks and the vector
-    distribution warrants it (the standard PQ serving posture)."""
-    books = read_pq_books(spark, path)
-    pq_encode(new_vectors, books, vec_col=vec_col, code_col=code_col).select(
-        id_col, code_col
-    ).write.mode("append").parquet(f"{path}/codes")
-
-
 def pq_knn_join(
     codes: DataFrame,
     queries: DataFrame,
@@ -1372,8 +1170,9 @@ def write_ivfpq_index(
         iters=iters,
     )
     encoded = pq_encode(resid, books, vec_col="__resid")
-    # rebalance-before-partitionBy: see write_lsh_index (256 tiny files
-    # → 8 at bench shape; measured ~2× faster write)
+    # rebalance before the partitioned write: an unbalanced partitionBy
+    # emits (input partitions × list values) files (256 tiny files → 8
+    # at bench shape; measured ~2× faster write)
     encoded.select(id_col, "centroid_id", "pq_code").hint(
         "rebalance", "centroid_id"
     ).write.mode("overwrite").partitionBy("centroid_id").parquet(f"{path}/codes")
@@ -1404,7 +1203,6 @@ def ivfpq_topk(
     refine: int | float = 0,
     corpus: DataFrame | None = None,
     vec_col: str = "embedding",
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """Query the IVF+PQ index: rank centroids driver-side (tiny), scan
     only the ``nprobe`` nearest lists (partition pruning — non-probed
@@ -1422,11 +1220,7 @@ def ivfpq_topk(
     width silently loses recall as the corpus grows, so growing stores
     should pass the fractional form. Unit-norm caveat as in
     :func:`pq_topk`: the L2-ADC shortlist only agrees with the cosine
-    re-rank on unit-norm embeddings — normalize before encoding.
-
-    ``codes`` overrides the code-row source (default: the index's base
-    ``codes`` table); the centroid_id filter still prunes its
-    partitions."""
+    re-rank on unit-norm embeddings — normalize before encoding."""
     cents = sorted(
         (r["centroid_id"], list(r["centroid"]))
         for r in spark.read.parquet(f"{path}/centroids").collect()
@@ -1442,7 +1236,7 @@ def ivfpq_topk(
     # one codes read shared by every probed list (ADVICE r9: re-reading
     # per probe re-listed the store once per list) — the per-list LUT and
     # centroid_id filter are what vary per probe
-    src = codes if codes is not None else spark.read.parquet(f"{path}/codes")
+    src = spark.read.parquet(f"{path}/codes")
     refine = _resolve_refine(refine, k, lambda: src.count())
     out = None
     for cid in probe:
@@ -1483,301 +1277,6 @@ def ivfpq_topk(
     )
 
 
-def ivfpq_encode_frozen(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode a batch against a persisted IVF+PQ index's FROZEN coarse
-    centroids + residual codebooks: returns (id, centroid_id, pq_code) —
-    O(batch) pure projections, no retraining. Shared by the batch append
-    and the streaming ingest."""
-    cents = sorted(
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    )
-    books = read_pq_books(spark, path)
-    mm = len(books)
-    # _with_centroid_assign/_with_residual index by POSITION, which must
-    # equal the centroid id — true for every index this engine writes
-    # (ivf_assign enumerates 0..n-1) and already assumed by the prior
-    # literal form's element_at(cent_lit, centroid_id + 1)
-    cvecs = [c for _, c in cents]
-    assigned = _with_centroid_assign(new_vectors, cvecs, vec_col=vec_col)
-    resid = _with_residual(assigned, cvecs, vec_col=vec_col)
-    return pq_encode(resid, books, vec_col="__resid").select(
-        id_col, "centroid_id", "pq_code"
-    )
-
-
-def ivfpq_append(
-    spark: SparkSession,
-    path: str,
-    new_vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental IVF+PQ ingest: assign each new vector to its frozen
-    coarse list, residual-encode against the frozen codebooks, append to
-    the list's partition — O(batch) pure projections, probes stay
-    partition-pruned, nothing is rebuilt (the ivf_append / pq_append
-    posture applied to the combined index). Not replay-safe: appending
-    the same batch twice duplicates its rows."""
-    ivfpq_encode_frozen(
-        spark, path, new_vectors, id_col=id_col, vec_col=vec_col
-    ).write.mode("append").partitionBy("centroid_id").parquet(f"{path}/codes")
-
-
-def ivfpq_recommend(
-    spark: SparkSession,
-    path: str,
-    corpus: DataFrame,
-    *,
-    queries: DataFrame | None = None,
-    n_queries: int = 25,
-    recall_target: float = 0.9,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe_grid: tuple[int, ...] = (1, 2, 4),
-    refine_grid: tuple[float, ...] = (0.0, 0.02, 0.1),
-) -> dict:
-    """Recommend (nprobe, refine) for a persisted IVF+PQ index from a
-    sampled ground truth — the SCALE.md r9/r10 tuning rule ("raise nprobe
-    first: it sets the recall CEILING — the true neighbors whose lists
-    were never probed are unrecoverable; then refine approaches that
-    ceiling by exact re-rank") encoded as API, so a user gets the knob
-    order without reading SCALE.md (VERDICT r10 item 6).
-
-    This is an EVALUATION helper, not the serving path: it scores every
-    sampled query against the whole codes table once (a broadcast join —
-    the same batch-ADC shape as ``pq_knn_join``, with per-(query, list)
-    residual LUTs) so that every grid cell is a cheap filter over ONE
-    localCheckpointed score table, instead of len(grid) probe runs.
-    Queries default to a deterministic md5-order sample of the corpus
-    (the ``pq_train`` init discipline). Ground truth is metric-matched
-    (ADVICE r9): pure-ADC rows (refine=0) grade against exact L2,
-    refined rows against exact cosine — the metric each path ranks by.
-
-    Returns ``{"recommended": {"nprobe", "refine", "recall"},
-    "frontier": [{"nprobe", "refine", "recall", "ceiling"}, ...],
-    "k", "n_queries", "recall_target", "target_met"}``. The
-    recommendation walks nprobe ascending, then refine ascending — the
-    documented knob order — and picks the FIRST cell meeting
-    ``recall_target``; if no cell does, the max-recall cell (smallest
-    knobs on ties) with ``target_met=False``. ``refine`` values are
-    fractions of the code-table size (the fractional contract of
-    :func:`_resolve_refine` — fixed widths silently lose recall as the
-    corpus grows); the recommended value is returned in that fractional
-    form, ready to pass to :func:`ivfpq_topk`."""
-    from commercepulse_data_pipeline_spark.operators.dedup import _md5_long
-
-    if queries is None:
-        queries = (
-            corpus.select(id_col, vec_col)
-            .orderBy(_md5_long(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
-            .limit(n_queries)
-        )
-    qrows = [
-        (r[0], [float(v) for v in r[1]])
-        for r in queries.select(id_col, vec_col).collect()
-    ]
-    if not qrows:
-        raise ValueError("ivfpq_recommend: empty query sample")
-    cents = sorted(
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    )
-    books = read_pq_books(spark, path)
-    mm = len(books)
-    codes = spark.read.parquet(f"{path}/codes")
-    n_codes_rows = codes.count()
-    nprobe_grid = tuple(sorted({min(n, len(cents)) for n in nprobe_grid}))
-
-    # per-(query, list): probe rank + residual LUT, built driver-side
-    # from driver-resident data (codebooks, centroids, sampled queries)
-    lut_rows = []
-    for qid, qv in qrows:
-        byd = sorted(
-            cents,
-            key=lambda t: sum((a - b) * (a - b) for a, b in zip(qv, t[1])),
-        )
-        for rank, (cid, cvec) in enumerate(byd, start=1):
-            q_res = [float(a) - b for a, b in zip(qv, cvec)]
-            lut_rows.append((qid, cid, rank, _pq_lut(books, q_res)))
-    # schema carries the CALLER's id type for query_id (r11 review: a
-    # hardcoded 'long' broke string-keyed corpora despite the generic
-    # id_col contract everywhere else in this module)
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    qid_type = queries.select(F.col(id_col)).schema[0].dataType
-    lut_df = one_slice_df(
-        spark,
-        lut_rows,
-        StructType(
-            [
-                StructField("query_id", qid_type),
-                StructField("centroid_id", IntegerType()),
-                StructField("probe_rank", IntegerType()),
-                StructField("lut", ArrayType(ArrayType(DoubleType()))),
-            ]
-        ),
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(mm - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(
-            F.element_at(F.col("lut"), j + 1),
-            F.element_at(F.col("pq_code"), j + 1) + 1,
-        ),
-    )
-    scored = (
-        codes.join(F.broadcast(lut_df), "centroid_id")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            "probe_rank",
-            adc.alias("adc_d2"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    # metric-matched exact ground truths over the sampled queries
-    qdf = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        )
-    )
-    pairs = (
-        corpus.crossJoin(qdf)
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            cosine(F.col(vec_col), F.col("__qvec")).alias("__cos"),
-            _sq_dist(F.col(vec_col), F.col("__qvec")).alias("__l2"),
-        )
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    w_l2 = Window.partitionBy("query_id").orderBy(
-        F.col("__l2").asc(), F.col("neighbor_id").asc()
-    )
-    truth_cos = (
-        pairs.where(F.col("__cos").isNotNull())
-        .withColumn("rank", F.row_number().over(w_cos))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-        .localCheckpoint(eager=True)
-    )
-    truth_l2 = (
-        pairs.withColumn("rank", F.row_number().over(w_l2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-        .localCheckpoint(eager=True)
-    )
-
-    def _mean_recall(approx: DataFrame, truth: DataFrame) -> float:
-        row = recall_at_k(truth, approx, k=k).agg(F.avg("recall")).head()
-        return round(float(row[0]), 4)
-
-    # recall CEILING per (nprobe, truth): the fraction of true neighbors
-    # whose list is probed at all — no refine width can recover the rest.
-    # Computed ONCE per (nprobe, metric) and the truth counts once per
-    # metric (r11 review: recomputing per refine cell tripled the
-    # ceiling jobs for identical answers).
-    n_true_cos, n_true_l2 = truth_cos.count(), truth_l2.count()
-
-    def _ceiling(nprobe: int, truth: DataFrame, n_true: int) -> float:
-        reach = scored.where(F.col("probe_rank") <= nprobe).select(
-            "query_id", "neighbor_id"
-        )
-        hit = truth.join(reach, ["query_id", "neighbor_id"], "left_semi")
-        return round(hit.count() / n_true, 4) if n_true else 0.0
-
-    qvec_df = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("__rq"), F.col(vec_col).alias("__rqvec")
-        )
-    )
-    frontier: list[dict] = []
-    for nprobe in nprobe_grid:
-        ceil_cos = _ceiling(nprobe, truth_cos, n_true_cos)
-        ceil_l2 = _ceiling(nprobe, truth_l2, n_true_l2)
-        cands = scored.where(F.col("probe_rank") <= nprobe)
-        w_adc = Window.partitionBy("query_id").orderBy(
-            F.col("adc_d2").asc(), F.col("neighbor_id").asc()
-        )
-        ranked = cands.withColumn("rank", F.row_number().over(w_adc))
-        for refine in refine_grid:
-            width = _resolve_refine(float(refine), k, lambda: n_codes_rows)
-            if width:
-                shortlist = ranked.where(F.col("rank") <= width).select(
-                    "query_id", "neighbor_id"
-                )
-                rescored = (
-                    shortlist.join(
-                        corpus.select(
-                            F.col(id_col).alias("neighbor_id"),
-                            F.col(vec_col).alias("__nvec"),
-                        ),
-                        "neighbor_id",
-                    )
-                    .join(qvec_df, F.col("query_id") == F.col("__rq"))
-                    .select(
-                        "query_id",
-                        "neighbor_id",
-                        cosine(F.col("__nvec"), F.col("__rqvec")).alias("__cos"),
-                    )
-                )
-                approx = (
-                    rescored.withColumn("rank", F.row_number().over(w_cos))
-                    .where(F.col("rank") <= k)
-                )
-                rec, ceil_ = _mean_recall(approx, truth_cos), ceil_cos
-            else:
-                approx = ranked.where(F.col("rank") <= k)
-                rec, ceil_ = _mean_recall(approx, truth_l2), ceil_l2
-            frontier.append(
-                {"nprobe": nprobe, "refine": float(refine),
-                 "recall": rec, "ceiling": ceil_}
-            )
-    best = None
-    for cell in frontier:  # grid order IS the knob order: nprobe, then refine
-        if cell["recall"] >= recall_target:
-            best = cell
-            break
-    target_met = best is not None
-    if best is None:
-        best = max(
-            frontier, key=lambda c: (c["recall"], -c["nprobe"], -c["refine"])
-        )
-    return {
-        "recommended": {
-            "nprobe": best["nprobe"], "refine": best["refine"],
-            "recall": best["recall"],
-        },
-        "frontier": frontier,
-        "k": k,
-        "n_queries": len(qrows),
-        "recall_target": recall_target,
-        "target_met": target_met,
-    }
-
-
 def label_centroid_outliers(
     df: DataFrame,
     *,
@@ -1811,8 +1310,7 @@ def label_centroid_outliers(
     if first is None or first[0] is None:
         raise ValueError(
             "label_centroid_outliers: cannot infer vector dimension — the "
-            f"corpus is empty or its first `{vec_col}` is NULL (ADVICE r11; "
-            "the ivfpq_recommend empty-sample contract)."
+            f"corpus is empty or its first `{vec_col}` is NULL (ADVICE r11)."
         )
     dim = len(first[0])
     sums = df.groupBy(label_col).agg(

@@ -1,16 +1,12 @@
-"""Skew mitigation: salted aggregation and salted join.
+"""Skew mitigation: salted aggregation and the skew report.
 
 AQE's skew-join splitting (on in `session.get_spark`) handles skewed
-sort-merge joins at runtime, but two shapes still need explicit salting at
-100 TB:
-
-- **hot-key aggregation**: one key with billions of rows lands on one
-  reducer. Salting splits it into N partial groups (extra map-side
-  fan-out is free — partial aggregation already runs per partition),
-  then a second tiny aggregation merges the N partials.
-- **skewed join against a non-broadcastable side**: replicate the small
-  side N ways (explode), salt the big side uniformly, join on
-  (key, salt) — the hot key's rows spread over N partitions.
+sort-merge joins at runtime, but hot-key aggregation still needs explicit
+salting at 100 TB: one key with billions of rows lands on one reducer.
+Salting splits it into N partial groups (extra map-side fan-out is free —
+partial aggregation already runs per partition), then a second tiny
+aggregation merges the N partials. ``skew_report`` measures whether a
+key needs it.
 
 Both are pure DataFrame transforms — no RDDs, no custom partitioner.
 """
@@ -93,34 +89,6 @@ def salted_agg(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    *,
-    how: str = "inner",
-    salt_buckets: int = 16,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Equi-join where ``big`` is skewed on ``on`` and ``small`` is too
-    large to broadcast: salt the big side uniformly, replicate the small
-    side ``salt_buckets``×, join on (key, salt).
-
-    Cost model: small side shuffles salt_buckets× its size; the hot key's
-    probe rows spread over salt_buckets partitions. Pick buckets ≈ the
-    skew factor, not more.
-
-    The salt is a content hash over the big side's row (``_content_salt``)
-    — a retried or repartitioned task salts identically, so the join is
-    row-level deterministic, not just multiset-equal.
-    """
-    big_s = big.withColumn("__salt", _content_salt(big, salt_cols, salt_buckets))
-    small_r = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return big_s.join(small_r, on=[on, "__salt"], how=how).drop("__salt")
-
-
 def skew_report(
     df: DataFrame,
     key_cols: list[str],
@@ -128,7 +96,7 @@ def skew_report(
     top_n: int = 3,
 ) -> DataFrame:
     """Key-distribution diagnostics — the MEASURE step that decides
-    whether :func:`salted_agg` / :func:`salted_join` / AQE skew handling
+    whether :func:`salted_agg` / AQE skew handling
     is needed at all, and with what width. One row per profiled key
     column:
 

@@ -44,10 +44,6 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.filter(F.split(s, r"[^\p{L}\p{N}]+"), lambda t: t != "")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def token_ngrams(toks: Column, n: int) -> Column:
     """Space-joined token n-grams; empty array when the document has
     fewer than ``n`` tokens. ``toks`` is let-bound
@@ -417,8 +413,8 @@ def dedup_passages(
     equi-join back, one per-doc position collect, bounded by windows per
     doc). The single corpus-side shuffle is the final doc-keyed join of
     the small duplicate-position lists onto the text; pre-bucket the
-    corpus by ``doc_col`` (``write_bucketed``) and that join is
-    co-located too. The splice itself is a pure codegen projection —
+    corpus by ``doc_col`` (``DataFrameWriter.bucketBy``) and that join
+    is co-located too. The splice itself is a pure codegen projection —
     per-token coverage tests against the per-doc duplicate-position
     array (O(tokens × dup-windows-in-doc); dup lists are empty for the
     typical document)."""

@@ -26,19 +26,6 @@ def running_total(
     return df.withColumn(out_col, F.sum(value_col).over(w))
 
 
-def top_n_per_group(
-    df: DataFrame, partition_cols: list[str], order_col: str, n: int,
-    *, descending: bool = True, tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """Top-n rows per group by rank — the distributed replacement for the
-    driver-side ``.head(n)`` pattern."""
-    ordering = [F.col(order_col).desc() if descending else F.col(order_col).asc()]
-    for c in tiebreak_cols or []:
-        ordering.append(F.col(c).asc())
-    w = Window.partitionBy(*partition_cols).orderBy(*ordering)
-    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= n).drop("__rn")
-
-
 def sessionize(
     df: DataFrame,
     user_col: str = "user_id",

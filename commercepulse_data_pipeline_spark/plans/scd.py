@@ -30,7 +30,7 @@ def merge_upsert(
 
     Both inputs must share a schema. Scale: one anti-join + one window,
     both shuffling on the key — bucket the target by the key to make the
-    anti-join co-located (see ``sources.readers.write_bucketed``).
+    anti-join co-located (``DataFrameWriter.bucketBy`` on ``key_cols``).
     """
     deduped = last_writer_wins(updates, key_cols, order_col)
     untouched = target.join(deduped.select(*key_cols), on=key_cols, how="left_anti")

@@ -25,20 +25,6 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-# RocksDB-backed streaming state (bundled with Spark since 3.2): keeps
-# watermarked dedup state OFF the executor heap and spillable to disk —
-# at 100 TB stream volumes the in-memory HDFS-backed provider OOMs long
-# before the watermark can evict. Changelog checkpointing uploads
-# per-batch deltas instead of full snapshots. A long-running streaming
-# job applies it with ``spark.conf.set`` before starting its query.
-ROCKSDB_STATE_CONF = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-}
-
-
 def get_spark(
     app_name: str = "commercepulse-spark",
     master: str | None = None,

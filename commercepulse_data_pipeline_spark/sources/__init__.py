@@ -11,7 +11,6 @@ from commercepulse_data_pipeline_spark.sources.readers import (
     skip_count,
     valid_events,
     write_bronze,
-    write_bucketed,
 )
 
 __all__ = [
@@ -24,5 +23,4 @@ __all__ = [
     "skip_count",
     "valid_events",
     "write_bronze",
-    "write_bucketed",
 ]

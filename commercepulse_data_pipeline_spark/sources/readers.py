@@ -162,30 +162,6 @@ def read_fx_rates(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_bucketed(
-    df,
-    table_name: str,
-    bucket_col: str,
-    *,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (co-located join layout).
-
-    Two fact tables bucketed by the same key into the same bucket count
-    join WITHOUT a shuffle — the physical plan has no Exchange on either
-    side (SortMergeJoin reads matching buckets directly). At 100 TB this
-    is the difference between re-shuffling petabytes per join and reading
-    co-located files; bucket the big fact tables by their join key at
-    write time (orders/payments/refunds by order_id).
-    """
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
 def _staged(path: str, kind: str) -> commit.Table:
     p = path.rstrip("/")
     return (p, f"{p}._{kind}_tmp", f"{p}._{kind}_old")
@@ -312,106 +288,6 @@ def compact_parquet(
             df.repartition(n_tasks, F.col(partition_col), salt)
             .write.partitionBy(partition_col)
             .mode("overwrite")
-            .parquet(tmp)
-        )
-
-    return _rewrite_layout(spark, path, target_file_mb, write)
-
-
-def optimize_layout(
-    spark: SparkSession,
-    path: str,
-    sort_cols: list[str],
-    *,
-    target_file_mb: int = 128,
-) -> dict:
-    """Data-skipping layout rewrite: range-partition the dataset on
-    ``sort_cols`` and sort within partitions, so each output file covers a
-    DISJOINT value range and its parquet row-group min/max statistics
-    prune scans server-side. On a randomly-laid-out table every file's
-    min/max spans the whole domain and a point lookup reads everything;
-    after this rewrite a point or range predicate touches only the files
-    whose range intersects it — the plain-parquet equivalent of
-    Z-ordering on one key prefix (at 100 TB this is the difference
-    between a full scan and a few files for every selective query on the
-    sort key).
-
-    Same listing-based sizing and rename-swap as :func:`compact_parquet`
-    (:func:`_rewrite_layout`). ``repartitionByRange`` samples the key
-    distribution, so output files are near-equal-sized even under skew.
-    Returns {"files_before", "files_after", "bytes"}.
-    """
-
-    def write(df, n_out, files, tmp):
-        (
-            df.repartitionByRange(n_out, *[F.col(c) for c in sort_cols])
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-
-    return _rewrite_layout(spark, path, target_file_mb, write)
-
-
-def zorder_layout(
-    spark: SparkSession,
-    path: str,
-    zorder_cols: list[str],
-    *,
-    target_file_mb: int = 128,
-    bits_per_col: int = 8,
-) -> dict:
-    """Multi-column data-skipping rewrite: cluster the dataset along a
-    Z-order (Morton) curve over ``zorder_cols`` so selective predicates
-    on ANY of the columns prune files/row-groups — where
-    :func:`optimize_layout`'s linear sort serves only its leading key
-    (a filter on the second sort column still touches every file).
-
-    Scale shape (no global sort of raw values anywhere):
-
-    1. each column is rank-normalized to ``bits_per_col`` bits through
-       its approximate quantile boundaries (``approxQuantile`` — a
-       driver-side array of 2^bits-1 values from a mergeable sketch, so
-       skewed distributions still spread across the full bucket range,
-       unlike min/max linear scaling);
-    2. the per-column bucket ids are bit-interleaved into the Morton key
-       with plain shift/mask expressions (codegen'd, no UDF);
-    3. ``repartitionByRange`` + ``sortWithinPartitions`` on the Morton
-       key give each output file a disjoint curve segment, i.e. a small
-       hyper-rectangle of the value space — parquet min/max stats on the
-       ORIGINAL columns then prune on every dimension.
-
-    Same listing-based sizing and crash-safe rename-swap as
-    :func:`compact_parquet`. NULLs sort to bucket 0 (curve start).
-    Returns {"files_before", "files_after", "bytes"}.
-    """
-    n_buckets = 1 << bits_per_col
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-
-    def write(df, n_out, files, tmp):
-        bucket_exprs = []
-        for c in zorder_cols:
-            # sketch-based boundaries; cast to double for a uniform rank space
-            dcol = F.col(c).cast("double")
-            bnds = df.select(dcol.alias(c)).approxQuantile(c, probs, 0.001)
-            # dedupe (heavy ties collapse boundaries) while preserving order
-            uniq = sorted(set(bnds))
-            bucket_exprs.append(
-                F.size(F.filter(F.lit(uniq), lambda b: b <= dcol)).cast("long")
-            )
-        z = F.lit(0).cast("long")
-        for bit in range(bits_per_col):
-            for ci, b in enumerate(bucket_exprs):
-                z = z + F.shiftleft(
-                    F.shiftright(b, bit).bitwiseAND(F.lit(1)),
-                    bit * len(zorder_cols) + ci,
-                )
-        (
-            df.withColumn("__zorder", z)
-            .repartitionByRange(n_out, F.col("__zorder"))
-            .sortWithinPartitions("__zorder")
-            .drop("__zorder")
-            .write.mode("overwrite")
             .parquet(tmp)
         )
 

@@ -1,15 +1,9 @@
 """Structured Streaming layer (reference §2.10 semantics, real streaming)."""
 
 from commercepulse_data_pipeline_spark.streaming.ingest import (
-    daily_counts,
-    dedup_within_watermark,
     read_event_stream,
-    write_bronze_stream,
 )
 
 __all__ = [
-    "daily_counts",
-    "dedup_within_watermark",
     "read_event_stream",
-    "write_bronze_stream",
 ]

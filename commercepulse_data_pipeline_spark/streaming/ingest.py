@@ -1,16 +1,9 @@
-"""Structured Streaming variants of the ingestion + daily aggregate
-(reference §2.10 — the reference SIMULATES a stream as daily JSONL batch
-files and states "No real-time streaming" as a limitation,
-reference README.md:207; this module is the real thing).
-
-Semantics mapped:
-- duplicates (same event_id, possibly later ingested_at, generator
-  :233-237)        → ``withWatermark + dropDuplicatesWithinWatermark``
-- late data (event_time lags ingested_at by 1-7 days for ~10%,
-  generator :211-215) → 7-day watermark; late-beyond-watermark rows are
-  dropped by the engine and surfaced via the observable metrics
-- daily tumbling windows (transformer groups by calendar date)
-  → ``F.window(event_time, '1 day')``
+"""The event stream's file source (reference §2.10 — the reference
+SIMULATES a stream as daily JSONL batch files and states "No real-time
+streaming" as a limitation, reference README.md:207). The gold fold
+(``streaming/gold_upsert.py``) consumes this stream: its silver dedup
+absorbs duplicated events, and a late event re-folds the date it falls
+on.
 """
 
 from __future__ import annotations
@@ -30,164 +23,4 @@ def read_event_stream(spark: SparkSession, path: str, max_files_per_trigger: int
         .json(path)
         .where(F.col("event_id").isNotNull())
         .withColumn("event_ts", F.to_timestamp("event_time"))
-    )
-
-
-def dedup_within_watermark(stream: DataFrame, watermark: str = "7 days") -> DataFrame:
-    """Streaming replacement for the reference's Mongo upsert-by-event_id
-    (K1/D3): exact-duplicate events collapse as long as they arrive within
-    the watermark horizon — bounded state, unlike a grow-forever set."""
-    return stream.withWatermark("event_ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def daily_counts(stream: DataFrame, watermark: str = "7 days") -> DataFrame:
-    """Daily tumbling event counts by type — the streaming form of the
-    daily batch rollup. Append-mode capable: results finalize once the
-    watermark passes the day boundary."""
-    return (
-        stream.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", "1 day").alias("day"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.to_date(F.col("day.start")).alias("event_date"), "event_type", "n_events")
-    )
-
-
-def session_counts(
-    stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming session windows: per-vendor activity sessions that merge
-    as events arrive (native ``session_window`` state — the streaming twin
-    of the batch ``operators.windows.sessionize``). Watermark bounds the
-    session-merge state; run in append mode (sessions emit once finalized
-    past the watermark) or complete mode — session windows do not support
-    update mode."""
-    return (
-        stream.withWatermark("event_ts", watermark)
-        .groupBy(F.session_window("event_ts", gap).alias("w"), F.col("vendor"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "vendor",
-            "n_events",
-        )
-    )
-
-
-def late_arrival_counts(
-    stream: DataFrame, *, threshold_days: float = 1.0, watermark: str = "7 days"
-) -> DataFrame:
-    """Streaming late-data detection (reference Q9 detects in a batch
-    report, src/quality_report.py:72-98; generator emits 1-7-day-late
-    events): per-event-day counts of events whose ingestion lagged their
-    event time by more than ``threshold_days``. Rows later than the
-    watermark are dropped by the engine itself — this measures the late
-    ones that still made it."""
-    lag_days = (
-        F.unix_timestamp(F.to_timestamp("ingested_at")) - F.unix_timestamp("event_ts")
-    ) / F.lit(86400.0)
-    return (
-        stream.withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", "1 day").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((lag_days > threshold_days).cast("long")).alias("late_events"),
-            F.round(F.max(lag_days), 2).alias("max_lag_days"),
-        )
-        .select(F.to_date(F.col("day.start")).alias("event_date"), "n_events", "late_events", "max_lag_days")
-    )
-
-
-def write_bronze_stream(stream: DataFrame, path: str, checkpoint: str, trigger_once: bool = True):
-    """Bronze sink: append parquet partitioned by INGESTION date,
-    exactly-once via checkpointing. Combined with ``dedup_within_watermark``
-    this is the reference's idempotent landing zone, distributed.
-
-    ``ingest_date`` derives from ``ingested_at`` (processing time, falling
-    back to the batch-time clock) — the same layout the batch
-    ``sources.readers.write_bronze`` produces, so batch and streaming
-    bronze agree under one partition-column name. Event-time layouts
-    belong to silver/gold, not the landing zone (a 7-day-late event must
-    land in TODAY's partition or daily replays would rewrite old ones)."""
-    writer = (
-        stream.withColumn(
-            "ingest_date",
-            F.coalesce(F.to_date(F.substring("ingested_at", 1, 10)), F.current_date()),
-        )
-        .writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("ingest_date")
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def join_payments_to_orders_stream(
-    stream: DataFrame, *, watermark: str = "7 days", within: str = "1 day"
-) -> DataFrame:
-    """STREAM-STREAM inner join: each payment event joins its order
-    creation if it arrives within ``within`` of the order's event time —
-    the streaming form of the batch enrich join, with the vendor-drift
-    order-id coalesce (F1) applied on both sides.
-
-    Why the time-range condition is load-bearing at scale: an equi-join
-    alone would force Spark to buffer EVERY order forever (any future
-    payment might match). With both sides watermarked and the range bound
-    ``order_ts <= pay_ts <= order_ts + within``, the engine can evict an
-    order's join state once the watermark passes ``order_ts + within`` and
-    a payment's once it passes ``pay_ts`` — bounded state on both sides.
-    Append-mode capable (matches finalize when eviction proves no further
-    partner can arrive).
-
-    Replay safety: the landing stream is at-least-once, and a REPLAYED
-    order_created would fan each matching payment into one output row per
-    replica (the batch path dedups with last_writer_wins first). Both
-    sides therefore dedup within the watermark before joining — orders by
-    order_id (replicas of the same creation event are bit-identical, so
-    first-arrival-wins equals last-writer-wins here), payments by
-    event_id. A genuine second order_created with a DIFFERENT event time
-    for the same order_id is also collapsed to the first arrival — the
-    stream twin of the batch one-row-per-order_id contract.
-    """
-    oid = F.coalesce(
-        F.get_json_object("payload", "$.order_id"),
-        F.get_json_object("payload", "$.orderRef"),
-        F.get_json_object("payload", "$.order.id"),
-    )
-    amount = F.coalesce(
-        F.get_json_object("payload", "$.amountPaid"),
-        F.get_json_object("payload", "$.amount"),
-        F.get_json_object("payload", "$.payment_amount"),
-    ).cast("double")
-    orders = (
-        stream.where(F.col("event_type") == "order_created")
-        .select(oid.alias("order_id"), F.col("event_ts").alias("order_ts"))
-        .where(F.col("order_id").isNotNull())
-        .withWatermark("order_ts", watermark)
-        .dropDuplicatesWithinWatermark(["order_id"])
-    )
-    payments = (
-        stream.where(F.col("event_type").startswith("payment_"))
-        .select(
-            F.col("event_id").alias("payment_event_id"),
-            oid.alias("pay_order_id"),
-            F.col("event_ts").alias("pay_ts"),
-            amount.alias("amount"),
-        )
-        .where(F.col("pay_order_id").isNotNull())
-        .withWatermark("pay_ts", watermark)
-        .dropDuplicatesWithinWatermark(["payment_event_id"])
-    )
-    return (
-        orders.join(
-            payments,
-            (F.col("order_id") == F.col("pay_order_id"))
-            & (F.col("pay_ts") >= F.col("order_ts"))
-            & (F.col("pay_ts") <= F.col("order_ts") + F.expr(f"INTERVAL {within}")),
-            "inner",
-        )
-        .select("order_id", "order_ts", "payment_event_id", "pay_ts", "amount")
     )

@@ -148,75 +148,3 @@ def seed_probe_fingerprints(
         f"{store_dir}/fp_index",
         -2,
     )
-
-
-def boilerplate_strip_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    *,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
-    scope_col: str = "source",
-    window_tokens: int = 8,
-    min_docs: int = 2,
-) -> None:
-    """Streaming form of ``operators/text.py::strip_boilerplate``: splice
-    out windows that are per-source template chrome, deciding with
-    CROSS-BATCH counts scoped to (source, fingerprint). Differences from
-    :func:`passage_dedup_batch`, both inherited from the batch operator:
-    counts never mix sources, and there is NO canonical survivor — every
-    occurrence in THIS batch of a window at/over threshold is spliced.
-
-    Streaming divergence (documented, by construction): occurrences that
-    LANDED in earlier batches before the threshold was crossed stay as
-    written — a stream cannot retro-splice committed output. A corpus
-    arriving in one batch reproduces the batch operator exactly; for a
-    retroactive template pass over an already-landed corpus run
-    ``strip_boilerplate`` as a batch job. Same store layout, replay
-    safety (own-partition exclusion + batch-dir overwrite) and
-    fold-aware index reads as the passage store."""
-    spark = batch_df.sparkSession
-    fp_root = f"{store_dir}/fp_index"
-
-    staged, occ = window_occurrences(
-        batch_df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens,
-        scope_col=scope_col,
-    )
-    occ = occ.localCheckpoint(eager=True)
-    stats = occ.groupBy("__scope", "__fp").agg(
-        F.countDistinct("__doc").alias("__n_batch")
-    )
-    idx = batches.prior(spark, fp_root, batch_id)
-    if idx is not None:
-        idx = idx.groupBy("scope", "fp").agg(F.sum("n_docs").alias("__n_idx"))
-        stats = stats.join(
-            idx.select(
-                F.col("scope").alias("__scope"),
-                F.col("fp").alias("__fp"),
-                "__n_idx",
-            ),
-            ["__scope", "__fp"],
-            "left",
-        )
-    else:
-        stats = stats.withColumn("__n_idx", F.lit(None).cast("long"))
-    n_idx = F.coalesce(F.col("__n_idx"), F.lit(0))
-    # every batch occurrence of a boilerplate (scope, fp) is a duplicate
-    # window — no canonical exception
-    dup_windows = occ.join(
-        stats.where(n_idx + F.col("__n_batch") >= min_docs),
-        ["__scope", "__fp"],
-    ).select("__doc", "__pos")
-    out = splice_windows(
-        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
-        keep=[c for c in batch_df.columns if c != text_col], text_out=text_col,
-    )
-    batches.write(out, f"{store_dir}/corpus", batch_id)
-    batches.write(
-        occ.groupBy(
-            F.col("__scope").alias("scope"), F.col("__fp").alias("fp")
-        ).agg(F.countDistinct("__doc").alias("n_docs")),
-        fp_root,
-        batch_id,
-    )

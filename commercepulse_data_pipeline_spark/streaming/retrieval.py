@@ -1,6 +1,6 @@
 """Continuous inverted-index ingest — the streaming sibling of
 ``operators/retrieval.py::write_text_index`` (the same discipline as
-``streaming/media.py::image_hash_batch``): tail a directory of
+``streaming/embeddings.py::dedup_embeddings_batch``): tail a directory of
 document parquet drops and maintain a BM25-servable postings store.
 
 Store layout (what ``bm25_topk_indexed`` reads when no batch-mode
@@ -28,7 +28,7 @@ when small-batch file counts grow.
 Append semantics: batches are treated as DISJOINT corpus slices — a doc
 re-ingested in a later batch contributes postings (and stats) again,
 exactly as a corpus containing both copies would. Dedup belongs upstream
-(the curation funnel / ``dedup_within_watermark``), not in the index.
+(the curation funnel / ``stream-clean-corpus``), not in the index.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
-"""BPE tokenizer training/encoding vs an independent pure-Python
-reference (the Sennrich dict-based algorithm, implemented here from the
-published description — no shared code with operators/bpe.py)."""
+"""BPE round-0 statistics vs an independent pure-Python reference (the
+Sennrich dict-based algorithm, implemented here from the published
+description — no shared code with operators/bpe.py)."""
 
 from __future__ import annotations
 
@@ -10,9 +10,7 @@ import pytest
 
 from commercepulse_data_pipeline_spark.operators.bpe import (
     END,
-    encode_bpe,
     pair_counts,
-    train_bpe,
     word_freqs,
 )
 
@@ -46,47 +44,6 @@ def _ref_pairs(freqs):
     return stats
 
 
-def _ref_merge_word(syms, a, b):
-    out, i = [], 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
-def _ref_train(texts, n_merges):
-    freqs = {
-        tuple(list(w) + [END]): f for w, f in _ref_word_freqs(texts).items()
-    }
-    merges = []
-    for _ in range(n_merges):
-        stats = collections.Counter()
-        for syms, f in freqs.items():
-            for i in range(len(syms) - 1):
-                stats[(syms[i], syms[i + 1])] += f
-        if not stats:
-            break
-        # max count, ties by lexicographically smallest pair
-        n = max(stats.values())
-        a, b = min(p for p, c in stats.items() if c == n)
-        merges.append((a, b, n))
-        freqs = {
-            tuple(_ref_merge_word(list(s), a, b)): f for s, f in freqs.items()
-        }
-    return merges, freqs
-
-
-def _ref_encode(word, merges):
-    syms = list(word) + [END]
-    for a, b, _ in merges:
-        syms = _ref_merge_word(syms, a, b)
-    return syms
-
-
 # -- tests -------------------------------------------------------------------
 
 
@@ -107,110 +64,3 @@ def test_word_freqs_drops_empty(docs_df):
     wf = {r.word: r.freq for r in word_freqs(docs_df).collect()}
     assert wf == dict(_ref_word_freqs(t for _, t in CORPUS))
     assert "" not in wf
-
-
-def test_train_bpe_matches_reference(docs_df):
-    """20 merges — far enough to cross count ties, overlap ('aaaa'),
-    multi-byte symbols, and merges building on earlier merges."""
-    got = train_bpe(docs_df, 20, checkpoint_every=4)
-    want, _ = _ref_train([t for _, t in CORPUS], 20)
-    assert got == want
-
-
-def test_encode_matches_trainer_final_state(docs_df):
-    """Encoding the training words with the learned merges must land on
-    exactly the trainer's final symbol table (rank-priority encode ≡
-    in-order one-pass-per-merge training)."""
-    merges = train_bpe(docs_df, 12)
-    _, final = _ref_train([t for _, t in CORPUS], 12)
-    enc = encode_bpe(docs_df, merges)
-    by_doc = {r.doc_id: r for r in enc.collect()}
-    # reference final state keyed by original word
-    ref_state = {"".join(s).removesuffix(END): list(s) for s in final}
-    for doc_id, text in CORPUS:
-        want = [p for w in text.lower().split() if w for p in ref_state[w]]
-        # empty docs are KEPT with an empty pieces array (per-doc
-        # accounting must not silently lose them)
-        assert list(by_doc[doc_id].pieces) == want, doc_id
-        assert by_doc[doc_id].n_pieces == len(want)
-
-
-def test_encode_roundtrip(docs_df):
-    """Pieces re-concatenate to the original words (END markers delimit)."""
-    merges = train_bpe(docs_df, 8)
-    for r in encode_bpe(docs_df, merges).collect():
-        text = dict(CORPUS)[r.doc_id]
-        rebuilt = "".join(r.pieces).replace(END, " ").split()
-        assert rebuilt == [w for w in text.lower().split() if w]
-
-
-@pytest.mark.slow
-def test_train_batched_equals_sequential(docs_df):
-    """Batched rounds emit EXACTLY the sequential merge sequence on a
-    corpus dense with overlapping candidate pairs and count ties ('aaaa
-    aaa aa a', 'banana bandana ananas', repeated 'the'/'and') — the
-    disjointness + rank-safety guard must fall back to smaller batches
-    wherever a lower-ranked candidate shares a symbol with a higher one —
-    while using strictly fewer Spark rounds than merges."""
-    seq = train_bpe(docs_df, 24, batch_size=1)
-    stats: dict = {}
-    batched = train_bpe(docs_df, 24, batch_size=8, stats=stats)
-    assert batched == seq
-    want, _ = _ref_train([t for _, t in CORPUS], 24)
-    assert batched == want
-    assert stats["merges"] == len(batched)
-    assert stats["rounds"] < len(batched)  # the whole point of batching
-
-
-def test_encode_hybrid_tail_join_not_broadcast(docs_df):
-    """Above head_k the vocab tail join must NOT be a forced broadcast
-    (a Heaps-law vocab at 100 TB cannot ship to every executor): with a
-    tiny head_k the initial plan keeps an unhinted (sort-merge) join for
-    the tail pieces, while the default head_k plan is all-broadcast."""
-    merges = train_bpe(docs_df, 4)
-    forced_tail = encode_bpe(docs_df, merges, head_k=2)
-    plan = forced_tail._jdf.queryExecution().executedPlan().toString()
-    # the corpus-sized word stream hits the head map as a broadcast join
-    # and the vocab tail as an UNHINTED shuffle join (AQE may still
-    # broadcast a genuinely small tail at runtime — never the reverse)
-    assert "SortMergeJoin [word" in plan
-    assert "BroadcastHashJoin [word" in plan
-    all_head = encode_bpe(docs_df, merges)  # default head_k covers vocab
-    # both shapes produce identical encodings
-    a = {r.doc_id: list(r.pieces) for r in forced_tail.collect()}
-    b = {r.doc_id: list(r.pieces) for r in all_head.collect()}
-    assert a == b
-
-
-def test_train_zero_merges_and_exhaustion(spark):
-    tiny = spark.createDataFrame([("d", "ab ab")], "doc_id string, text string")
-    assert train_bpe(tiny, 0) == []
-    # 'ab' exhausts after 2 merges (a+b, ab+</w>) — asking for 10 stops early
-    merges = train_bpe(tiny, 10)
-    assert [m[:2] for m in merges] == [("a", "b"), ("ab", END)]
-    assert all(m[2] == 2 for m in merges)
-
-
-def test_bpe_model_save_load_roundtrip(spark, tmp_path):
-    """The persisted merge table restores the EXACT ordered merge list,
-    and encoding with the loaded model is identical to encoding with the
-    in-memory one (train once, ship the artifact)."""
-    from commercepulse_data_pipeline_spark.operators.bpe import (
-        encode_bpe,
-        load_bpe_model,
-        save_bpe_model,
-        train_bpe,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "low lower lowest low low"), (2, "new newer newest new")],
-        ["doc_id", "text"],
-    )
-    merges = train_bpe(df, 6)
-    p = str(tmp_path / "bpe_model")
-    save_bpe_model(spark, merges, p)
-    loaded = load_bpe_model(spark, p)
-    assert loaded == merges
-    enc_a = sorted(map(tuple, encode_bpe(df, merges).collect()))
-    enc_b = sorted(map(tuple, encode_bpe(df, loaded).collect()))
-    assert enc_a == enc_b and enc_a

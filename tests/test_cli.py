@@ -371,6 +371,10 @@ def test_cli_media_features(spark, tmp_path):
     rows = {r["media_id"]: r for r in spark.read.parquet(out).collect()}
     assert rows["a"]["width"] == 5 and rows["a"]["decode_error"] is None
     assert rows["bad"]["decode_error"] is not None
+    # the error column never leaks into the shared strict schema
+    from commercepulse_data_pipeline_spark.multimodal import FEATURE_SCHEMA
+
+    assert "decode_error" not in FEATURE_SCHEMA.fieldNames()
 
 
 def test_clean_corpus_boilerplate_and_dsir_stages(spark, tmp_path):

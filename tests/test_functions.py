@@ -15,8 +15,6 @@ from commercepulse_data_pipeline_spark.functions.drift import (
 )
 from commercepulse_data_pipeline_spark.functions.hashing import (
     event_id,
-    row_fingerprint,
-    short_id,
     stable_bucket,
 )
 from commercepulse_data_pipeline_spark.functions.temporal import (
@@ -111,21 +109,8 @@ def test_hash_identities(spark):
     import hashlib
 
     df = spark.createDataFrame([("order_created", "O1")], ["t", "k"])
-    r = df.select(
-        event_id(F.col("t"), F.col("k")).alias("eid"),
-        short_id(F.col("t"), F.col("k")).alias("sid"),
-    ).collect()[0]
+    r = df.select(event_id(F.col("t"), F.col("k")).alias("eid")).collect()[0]
     assert r.eid == hashlib.sha256(b"order_created:O1").hexdigest()
-    assert r.sid == hashlib.sha1(b"order_created|O1").hexdigest()[:12]
-    assert len(r.sid) == 12
-
-
-def test_row_fingerprint_key_order_independent(spark):
-    a = spark.createDataFrame([(1, "x")], ["k1", "k2"])
-    b = spark.createDataFrame([("x", 1)], ["k2", "k1"])
-    fa = a.select(row_fingerprint(a).alias("f")).collect()[0].f
-    fb = b.select(row_fingerprint(b).alias("f")).collect()[0].f
-    assert fa == fb
 
 
 def test_stable_bucket_range(spark):

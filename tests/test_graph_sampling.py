@@ -19,7 +19,6 @@ from commercepulse_data_pipeline_spark.operators.sampling import (
     stratified_sample,
     threshold_for,
     weighted_priority,
-    weighted_rate_sample,
     weighted_sample_per_group,
 )
 
@@ -201,24 +200,6 @@ def test_weighted_sample_per_group_exact_k_and_bias(spark):
     again = {(r.grp, r.doc_id) for r in
              weighted_sample_per_group(df, "grp", "doc_id", "w", k=20).collect()}
     assert again == {(r.grp, r.doc_id) for r in out}
-
-
-def test_weighted_rate_sample_proportional(spark):
-    """Empirical keep rates track rate·w/max_weight per weight class, and
-    the verdict is stable across partitionings."""
-    rows = [(i, 5 if i % 2 == 0 else 1) for i in range(20000)]
-    df = spark.createDataFrame(rows, ["id", "w"])
-    kept = weighted_rate_sample(df, "id", "w", rate=0.2, max_weight=5).collect()
-    n5 = sum(1 for r in kept if r.w == 5)
-    n1 = sum(1 for r in kept if r.w == 1)
-    assert abs(n5 / 10000 - 0.2) < 0.02
-    assert abs(n1 / 10000 - 0.04) < 0.01
-    again = {r.id for r in
-             weighted_rate_sample(df.repartition(13), "id", "w", rate=0.2,
-                                  max_weight=5).collect()}
-    assert again == {r.id for r in kept}
-    with pytest.raises(ValueError):
-        weighted_rate_sample(df, "id", "w", rate=0.2, max_weight=1 << 31)
 
 
 # ---------------------------------------------------------------------------

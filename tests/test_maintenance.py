@@ -425,111 +425,6 @@ def test_cli_compact_index_subcommand(spark, tmp_path, capsys):
     assert spark.read.parquet(f"{store}/index/bands").count() > 0
 
 
-def test_optimize_layout_gives_disjoint_file_ranges(spark, tmp_path):
-    """Data-skipping layout (r7): after optimize_layout on a key, each
-    output file's parquet min/max statistics cover a disjoint key range —
-    a selective predicate then prunes to the files whose range intersects
-    (on the original random layout every file spans the whole domain)."""
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.sources.readers import optimize_layout
-
-    path = str(tmp_path / "layout")
-    # write deliberately shuffled: random-ish interleaving across 8 files
-    df = spark.range(30_000).select(
-        F.pmod(F.col("id") * 48271, F.lit(20011)).alias("k"),
-        F.col("id").alias("v"),
-        F.sha2(F.col("id").cast("string"), 512).alias("payload"),  # bulk
-    )
-    df.repartition(8).write.parquet(path)
-
-    def file_ranges():
-        out = []
-        for f in _parquet_files(path):
-            md = pq.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(0)  # k
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            out.append((min(mins), max(maxs)))
-        return sorted(out)
-
-    before = file_ranges()
-    domain = max(m for _, m in before) - min(m for m, _ in before)
-    # precondition: the random layout's files each span ~the whole domain
-    assert all(hi - lo > domain * 0.8 for lo, hi in before)
-
-    stats = optimize_layout(spark, path, ["k"], target_file_mb=1)
-    assert stats["files_after"] >= 2
-    after = file_ranges()
-    assert len(after) == stats["files_after"]
-    # ranges are (near-)disjoint: each file ends before the next begins
-    # (boundary values may be shared by duplicates of the range split key)
-    for (lo1, hi1), (lo2, _hi2) in zip(after, after[1:]):
-        assert hi1 <= lo2, (after,)
-    back = spark.read.parquet(path)
-    assert back.count() == 30_000
-    plan = back.where(F.col("k") == 7)._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(k), EqualTo(k,7)]" in plan
-
-
-def test_zorder_layout_prunes_on_both_dimensions(spark, tmp_path):
-    """Z-order layout (r7): after clustering on TWO independent keys, a
-    selective range predicate on EITHER key intersects only a strict
-    subset of files' min/max stats — where the linear sort serves only
-    its leading key (the trailing key's per-file ranges still span the
-    whole domain, so nothing prunes)."""
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        optimize_layout,
-        zorder_layout,
-    )
-
-    def build(path):
-        # x, y decorrelated via multiplicative hashing; shuffled layout
-        df = spark.range(90_000).select(
-            F.pmod(F.col("id") * 48271, F.lit(9973)).alias("x"),
-            F.pmod(F.col("id") * 16807, F.lit(9973)).alias("y"),
-            F.sha2(F.col("id").cast("string"), 512).alias("payload"),
-        )
-        df.repartition(8).write.mode("overwrite").parquet(path)
-
-    def matching_files(path, col_idx, lo, hi):
-        files = _parquet_files(path)
-        hit = 0
-        for f in files:
-            md = pq.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            if min(mins) <= hi and max(maxs) >= lo:
-                hit += 1
-        return hit, len(files)
-
-    zpath = str(tmp_path / "zorder")
-    build(zpath)
-    stats = zorder_layout(spark, zpath, ["x", "y"], target_file_mb=1)
-    assert stats["files_after"] >= 8
-    # a 10%-of-domain window on each dimension prunes most files
-    for col_idx in (0, 1):
-        hit, n = matching_files(zpath, col_idx, 1000, 1997)
-        assert hit < n * 0.6, (col_idx, hit, n)
-    back = spark.read.parquet(zpath)
-    assert back.count() == 90_000
-    assert back.columns == ["x", "y", "payload"]  # helper column dropped
-
-    # contrast: linear sort on (x, y) leaves y unprunable
-    lpath = str(tmp_path / "linear")
-    build(lpath)
-    optimize_layout(spark, lpath, ["x", "y"], target_file_mb=1)
-    hit_y, n_l = matching_files(lpath, 1, 1000, 1997)
-    assert hit_y == n_l  # every file's y-range spans the domain
-
-
 @pytest.mark.slow
 def test_compact_streaming_index_refold_crash_keeps_new_consolidated(
     spark, tmp_path, monkeypatch

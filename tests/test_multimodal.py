@@ -13,7 +13,6 @@ from commercepulse_data_pipeline_spark.multimodal import (
     FEATURE_SCHEMA,
     DeterministicFakeDecoder,
     extract_features,
-    media_stats,
     real_decode,
 )
 
@@ -58,23 +57,6 @@ def test_extract_features_partition_independent(media_df):
         for r in extract_features(media_df.repartition(4), batch_rows=2).collect()
     }
     assert a == b
-
-
-def test_media_stats_metadata_only(media_df, tmp_path):
-    stats = {(r.modality, r.mime_type): r for r in media_stats(media_df).collect()}
-    assert stats[("image", "image/png")].n_items == 2
-    assert stats[("image", "image/png")].total_bytes == 34
-    # the rollup never references `content` — column pruning must drop the
-    # binary column from the parquet scan (ReadSchema excludes it)
-    path = str(tmp_path / "media")
-    media_df.write.parquet(path)
-    spark = media_df.sparkSession
-    plan = (
-        media_stats(spark.read.parquet(path))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("content" not in ln for ln in read_schema)
 
 
 def _bmp_bytes(width: int, height: int, pixel: bytes = b"\x10\x80\xf0") -> bytes:
@@ -1247,31 +1229,6 @@ def test_fake_decoder_deterministic():
     assert d1 == d2
 
 
-def test_resize_images_contract(media_df):
-    from commercepulse_data_pipeline_spark.multimodal import resize_images
-
-    out = resize_images(media_df, target=(224, 224)).collect()
-    # one row per IMAGE row only (3 images in the fixture)
-    assert len(out) == 3
-    assert all(r.width == 224 and r.height == 224 for r in out)
-    # deterministic across partitionings
-    again = resize_images(media_df.repartition(4), target=(224, 224)).collect()
-    assert {r.media_id: bytes(r.content) for r in out} == \
-           {r.media_id: bytes(r.content) for r in again}
-
-
-def test_sample_frames_fanout(media_df):
-    from commercepulse_data_pipeline_spark.multimodal import sample_frames
-
-    out = sample_frames(media_df, fps=1.0, max_frames=5).collect()
-    # only the video row fans out; ≥1 and ≤ max_frames frames
-    ids = {r.media_id for r in out}
-    assert ids == {"vid-1"}
-    assert 1 <= len(out) <= 5
-    assert [r.frame_index for r in sorted(out, key=lambda r: r.frame_index)] == list(range(len(out)))
-    assert all(r.frame_ts_sec == r.frame_index / 1.0 for r in out)
-
-
 def test_real_decode_flac_roundtrip_fuzz():
     """Randomized (seeded) round-trips across subframe kinds, rice
     parameters, partition orders, bit depths and channel modes — every
@@ -1451,75 +1408,6 @@ def test_real_decode_webp_variants():
         real_decode(bytes(bad), "image")
     with pytest.raises(ValueError):
         real_decode(b"RIFF\x04\x00\x00\x00WEBP", "image")  # no dims chunk
-
-
-def test_stream_media_features_tolerant_and_idempotent(spark, tmp_path):
-    """Streaming media featurization: real bytes decode through the
-    Arrow path per micro-batch, corrupt payloads quarantine as
-    decode_error rows instead of wedging the stream, and a direct batch
-    replay overwrites its own partition (no duplication)."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.multimodal import real_decode
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        media_features_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    b1 = [("m1", "image", _bmp_bytes(9, 7)),
-          ("bad", "image", b"\x00\x01 not a real container")]
-    b2 = [("m2", "audio", _wav_bytes(1.5, rate=8000))]
-    for i, rows in enumerate((b1, b2)):
-        pq.write_table(
-            pa.table({
-                "media_id": [r[0] for r in rows],
-                "modality": [r[1] for r in rows],
-                "content": pa.array([r[2] for r in rows], type=pa.binary()),
-            }),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    store = str(tmp_path / "media_store")
-    q = batches.start(
-        batches.drops(
-            spark, str(drops), "media_id string, modality string, content binary",
-            max_files_per_trigger=1,
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: media_features_batch(df, i, store, decoder=real_decode),
-    )
-    q.awaitTermination(120)
-
-    rows = {r["media_id"]: r for r in spark.read.parquet(store).collect()}
-    assert rows["m1"]["width"] == 9 and rows["m1"]["height"] == 7
-    assert rows["m1"]["decode_error"] is None
-    assert rows["m2"]["duration_sec"] == pytest.approx(1.5)
-    assert rows["bad"]["width"] is None and rows["bad"]["feature"] is None
-    assert "NotImplementedError" in rows["bad"]["decode_error"]
-
-    # replay batch 0 directly: own-partition overwrite, counts unchanged
-    media_features_batch(
-        spark.createDataFrame(
-            [(r[0], r[1], bytearray(r[2])) for r in b1],
-            "media_id string, modality string, content binary",
-        ),
-        0, store, decoder=real_decode,
-    )
-    assert spark.read.parquet(store).count() == 3
-    # the shared batch FEATURE_SCHEMA was not mutated by the +error field
-    from commercepulse_data_pipeline_spark.multimodal import FEATURE_SCHEMA
-
-    assert [f.name for f in FEATURE_SCHEMA.fields] == [
-        "media_id", "modality", "width", "height", "duration_sec", "feature",
-    ]
 
 
 def _heif_bytes(brand: bytes, dims: list[tuple[int, int]]) -> bytes:
@@ -1820,71 +1708,6 @@ def test_dhash_brightness_invariance(spark):
     assert ahash64(pic) is not None  # both signatures coexist per row
 
 
-def test_stream_image_hash_index_cross_batch_and_replay(spark, tmp_path):
-    """image_hash_batch on a stream (r13): a re-crawled near-copy arriving two
-    batches after its original pairs against the indexed hash; the pair
-    feed is per-batch partitioned and a direct batch replay reproduces
-    its pair set exactly (own-partition exclusion)."""
-    import os
-    import shutil
-
-    import numpy as np
-
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        image_hash_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    rng = np.random.default_rng(31)
-    pic = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
-    recrawl = pic.copy()
-    recrawl[::8, ::8] = np.clip(recrawl[::8, ::8].astype(int) + 9, 0, 255)
-    other = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
-
-    drops = [
-        [("orig", _ppm_from_gray(pic)), ("junk", b"not an image")],
-        [("other", _ppm_from_gray(other))],
-        [("recrawl", _ppm_from_gray(recrawl))],
-    ]
-    incoming = str(tmp_path / "in")
-    os.makedirs(incoming)
-    for i, rows in enumerate(drops):
-        spark.createDataFrame(rows, "media_id string, content binary").coalesce(
-            1
-        ).write.parquet(f"{incoming}/d{i}")
-        for f in os.listdir(f"{incoming}/d{i}"):
-            if f.endswith(".parquet"):
-                os.rename(f"{incoming}/d{i}/{f}", f"{incoming}/b{i}_{f}")
-        shutil.rmtree(f"{incoming}/d{i}")
-
-    store = str(tmp_path / "store")
-    q = batches.start(
-        batches.drops(
-            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: image_hash_batch(df, i, store),
-        trigger_once=True,
-    )
-    q.awaitTermination()
-
-    pairs = {(r.id_a, r.id_b) for r in
-             spark.read.parquet(f"{store}/pairs").collect()}
-    assert pairs == {("orig", "recrawl")}
-    hashes = spark.read.parquet(f"{store}/hashes")
-    assert hashes.where("media_id = 'junk'").head().ahash is None
-    assert hashes.count() == 4
-
-    # direct replay of the LAST batch: identical pair partition
-    before = sorted(map(tuple, spark.read.parquet(
-        f"{store}/pairs/ingest_batch=2").collect()))
-    last = spark.createDataFrame(drops[2], "media_id string, content binary")
-    image_hash_batch(last, 2, store)
-    after = sorted(map(tuple, spark.read.parquet(
-        f"{store}/pairs/ingest_batch=2").collect()))
-    assert after == before and len(after) == 1
-
-
 def test_gif_frame_rasters_full_walk_and_compositing():
     """gif_frame_rasters (r14): every frame of an animated GIF decodes to
     the palette-mapped luma raster the construction parameters predict
@@ -2035,78 +1858,6 @@ def test_video_neardup_pairs_re_encode_and_containment(spark):
     assert still_pair.n_frames_b == 1 and still_pair.frac_b == 1.0
 
 
-def test_stream_image_hash_cluster_table(spark, tmp_path):
-    """image_hash_batch(cluster=True) (r14, VERDICT r13 item 7): the
-    image pair feed folds into the SAME persisted cluster-table artifact
-    the text tier maintains — a re-crawled image arriving two batches
-    after its original lands in the original's cluster (canonical =
-    lexicographic min media_id), unrelated images stay singletons (no
-    row), and a direct batch replay leaves the table unchanged (fold of
-    an identical pair set is idempotent)."""
-    import os
-    import shutil
-
-    import numpy as np
-
-    from commercepulse_data_pipeline_spark.operators.graph import (
-        read_cluster_table,
-        read_cluster_table_meta,
-    )
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        image_hash_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    rng = np.random.default_rng(47)
-    pic = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
-    recrawl = pic.copy()
-    recrawl[::8, ::8] = np.clip(recrawl[::8, ::8].astype(int) + 9, 0, 255)
-    other = rng.integers(0, 256, size=(24, 36), dtype=np.uint8)
-
-    drops = [
-        [("orig", _ppm_from_gray(pic))],
-        [("other", _ppm_from_gray(other))],
-        [("recrawl", _ppm_from_gray(recrawl))],
-    ]
-    incoming = str(tmp_path / "in")
-    os.makedirs(incoming)
-    for i, rows in enumerate(drops):
-        spark.createDataFrame(rows, "media_id string, content binary").coalesce(
-            1
-        ).write.parquet(f"{incoming}/d{i}")
-        for f in os.listdir(f"{incoming}/d{i}"):
-            if f.endswith(".parquet"):
-                os.rename(f"{incoming}/d{i}/{f}", f"{incoming}/b{i}_{f}")
-        shutil.rmtree(f"{incoming}/d{i}")
-
-    store = str(tmp_path / "store")
-    q = batches.start(
-        batches.drops(
-            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: image_hash_batch(df, i, store, cluster=True),
-        trigger_once=True,
-    )
-    q.awaitTermination()
-
-    table = sorted(
-        map(tuple, read_cluster_table(spark, f"{store}/clusters").collect())
-    )
-    assert table == [("orig", "orig", 2), ("recrawl", "orig", 2)]
-    assert read_cluster_table_meta(spark, f"{store}/clusters")["blocker"] == (
-        "sig_hamming"
-    )
-
-    # replay the pairing batch: identical pair set folds to the same table
-    last = spark.createDataFrame(drops[2], "media_id string, content binary")
-    image_hash_batch(last, 2, store, cluster=True)
-    again = sorted(
-        map(tuple, read_cluster_table(spark, f"{store}/clusters").collect())
-    )
-    assert again == table
-
-
 def _wav_from_samples(samples, rate=8000, channels=1) -> bytes:
     """Independent mono/stereo 16-bit RIFF/PCM encoder from explicit
     samples (``samples`` is per-channel lists when channels > 1)."""
@@ -2213,67 +1964,6 @@ def test_audio_hash_cross_format_gain_invariance_and_pairs(spark):
     family = {"wav", "flac", "gain2", "soft", "stereo"}
     assert pairs == {frozenset(p) for p in
                      __import__("itertools").combinations(sorted(family), 2)}
-
-
-def test_stream_audio_hash_index_cross_batch(spark, tmp_path):
-    """image_hash_batch(modality="audio") on a stream (r14): the continuous
-    hash store runs the audio energy-envelope hash through the SAME
-    signature-agnostic plumbing — a lossless FLAC re-encode arriving two
-    batches after its WAV original pairs against the indexed hash and
-    lands in the original's cluster."""
-    import os
-    import shutil
-
-    from commercepulse_data_pipeline_spark.operators.graph import (
-        read_cluster_table,
-    )
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        image_hash_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    tone = _audio_test_samples("tone")
-    other = _audio_test_samples("other")
-    fr1 = _flac_frame_enc([tone[:2000]], 16, 0, ["verbatim"])
-    fr2 = _flac_frame_enc([tone[2000:]], 16, 1, ["verbatim"])
-    drops = [
-        [("orig", _wav_from_samples(tone)), ("junk", b"not audio")],
-        [("other", _wav_from_samples(other))],
-        [("reenc", _flac_full([tone], 16, 8000, [fr1, fr2]))],
-    ]
-    incoming = str(tmp_path / "in")
-    os.makedirs(incoming)
-    for i, rows in enumerate(drops):
-        spark.createDataFrame(rows, "media_id string, content binary").coalesce(
-            1
-        ).write.parquet(f"{incoming}/d{i}")
-        for f in os.listdir(f"{incoming}/d{i}"):
-            if f.endswith(".parquet"):
-                os.rename(f"{incoming}/d{i}/{f}", f"{incoming}/b{i}_{f}")
-        shutil.rmtree(f"{incoming}/d{i}")
-
-    store = str(tmp_path / "store")
-    q = batches.start(
-        batches.drops(
-            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: image_hash_batch(
-            df, i, store, modality="audio", hamming_threshold=4, cluster=True
-        ),
-        trigger_once=True,
-    )
-    q.awaitTermination()
-
-    pairs = {(r.id_a, r.id_b) for r in
-             spark.read.parquet(f"{store}/pairs").collect()}
-    assert pairs == {("orig", "reenc")}
-    hashes = spark.read.parquet(f"{store}/hashes")
-    assert hashes.where("media_id = 'junk'").head().ehash is None
-    table = sorted(
-        map(tuple, read_cluster_table(spark, f"{store}/clusters").collect())
-    )
-    assert table == [("orig", "orig", 2), ("reenc", "orig", 2)]
 
 
 def test_hash_exactness_in_mixed_null_chunks(spark):
@@ -2520,280 +2210,14 @@ def test_image_gray_raster_uncompressed_tiff(spark):
     assert out["tiff_lzw"].ahash is None and "compress" in out["tiff_lzw"].err
 
 
-def test_video_neardup_pairs_between_incremental(spark):
-    """video_neardup_pairs_between (r14): a NEW clip probes an
-    accumulated frame-signature index at O(batch) — the re-encode of an
-    indexed clip pairs with full containment, an unrelated new clip
-    pairs with nothing, and a clip re-ingested under its own id never
-    self-pairs."""
-    from commercepulse_data_pipeline_spark.multimodal import (
-        video_frame_hashes,
-        video_neardup_pairs_between,
-    )
-
-    w, h, n = 32, 24, 6
-    pal_a = bytes(v for i in range(16) for v in (i * 16 + 4,) * 3)
-    pal_re = bytes(min(255, v + 6) for v in pal_a)
-    fa = _clip_frames("scroll_h", n, w, h)
-    fb = _clip_frames("bands_v", n, w, h)
-
-    index_media = spark.createDataFrame(
-        [("clip_a", _clip_gif(fa, pal_a, w, h)),
-         ("clip_b", _clip_gif(fb, pal_a, w, h))],
-        "media_id string, content binary",
-    )
-    # diagonal pattern: structurally unlike both indexed clips
-    fdiag = [
-        bytes(((x + 2 * y + 5 * t) * 16 // w) % 16
-              for y in range(h) for x in range(w))
-        for t in range(5)
-    ]
-    batch_media = spark.createDataFrame(
-        [("clip_a_re", _clip_gif(fa, pal_re, w, h)),
-         ("clip_a", _clip_gif(fa, pal_a, w, h)),       # re-ingest, same id
-         # excerpt + re-encode of the INDEXED clip_b: must pair by
-         # containment across the batch/index boundary
-         ("b_sub_re", _clip_gif(_clip_frames("bands_v", 4, w, h), pal_re, w, h)),
-         ("fresh", _clip_gif(fdiag, pal_a, w, h))],
-        "media_id string, content binary",
-    )
-    idx = video_frame_hashes(index_media)
-    new = video_frame_hashes(batch_media)
-    pairs = {(r.id_a, r.id_b): r for r in video_neardup_pairs_between(
-        new, idx, hamming_threshold=4, min_match_frac=0.5
-    ).collect()}
-    p = pairs[("clip_a", "clip_a_re")]
-    assert p.n_matched_a == n and p.frac_a == 1.0 and p.frac_b == 1.0
-    sub = pairs[("b_sub_re", "clip_b")]
-    assert sub.n_frames_a == 4 and sub.frac_a == 1.0
-    assert not any(a == b for a, b in pairs)          # no self-pair
-    assert not any("fresh" in k for k in pairs)
-
-
-@pytest.mark.slow
-def test_stream_video_hash_index_cross_batch_and_cluster(spark, tmp_path):
-    """video_hash_batch on a stream (r14): a re-encoded clip arriving two
-    batches after its original pairs against the frame index with full
-    containment and joins the original's cluster; a direct batch replay
-    reproduces the pair partition (own-partition exclusion) and leaves
-    the cluster table unchanged."""
-    import os
-    import shutil
-
-    from commercepulse_data_pipeline_spark.operators.graph import (
-        read_cluster_table,
-    )
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        video_hash_batch,
-    )
-    from commercepulse_data_pipeline_spark.streaming import batches
-
-    w, h, n = 32, 24, 6
-    pal_a = bytes(v for i in range(16) for v in (i * 16 + 4,) * 3)
-    pal_re = bytes(min(255, v + 6) for v in pal_a)
-    fa = _clip_frames("scroll_h", n, w, h)
-    fb = _clip_frames("bands_v", n, w, h)
-    drops = [
-        [("orig", _clip_gif(fa, pal_a, w, h)), ("junk", b"not media")],
-        [("other", _clip_gif(fb, pal_a, w, h))],
-        [("reenc", _clip_gif(fa, pal_re, w, h))],
-    ]
-    incoming = str(tmp_path / "in")
-    os.makedirs(incoming)
-    for i, rows in enumerate(drops):
-        spark.createDataFrame(rows, "media_id string, content binary").coalesce(
-            1
-        ).write.parquet(f"{incoming}/d{i}")
-        for f in os.listdir(f"{incoming}/d{i}"):
-            if f.endswith(".parquet"):
-                os.rename(f"{incoming}/d{i}/{f}", f"{incoming}/b{i}_{f}")
-        shutil.rmtree(f"{incoming}/d{i}")
-
-    store = str(tmp_path / "store")
-    q = batches.start(
-        batches.drops(
-            spark, incoming, "media_id string, content binary", max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: video_hash_batch(df, i, store, cluster=True),
-        trigger_once=True,
-    )
-    q.awaitTermination()
-
-    pairs = {(r.id_a, r.id_b): r for r in
-             spark.read.parquet(f"{store}/pairs").collect()}
-    assert set(pairs) == {("orig", "reenc")}
-    assert pairs[("orig", "reenc")].frac_a == 1.0
-    frames = spark.read.parquet(f"{store}/frames")
-    assert frames.where("media_id = 'junk'").count() == 1  # one err row
-    assert frames.where("err is null").count() == 3 * n
-
-    table = sorted(
-        map(tuple, read_cluster_table(spark, f"{store}/clusters").collect())
-    )
-    assert table == [("orig", "orig", 2), ("reenc", "orig", 2)]
-
-    # direct replay of the pairing batch: identical pair partition,
-    # unchanged cluster table
-    before = sorted(map(tuple, spark.read.parquet(
-        f"{store}/pairs/ingest_batch=2").collect()))
-    last = spark.createDataFrame(drops[2], "media_id string, content binary")
-    video_hash_batch(last, 2, store, cluster=True)
-    after = sorted(map(tuple, spark.read.parquet(
-        f"{store}/pairs/ingest_batch=2").collect()))
-    assert after == before and len(after) == 1
-    again = sorted(
-        map(tuple, read_cluster_table(spark, f"{store}/clusters").collect())
-    )
-    assert again == table
-
-
-def test_sample_frames_real_gif_timeline(spark):
-    """sample_frames (r14): GIF payloads sample REAL frames — the GCE
-    delay timeline picks the canvas displayed at each fps tick, each
-    emitted as a PPM P6 payload that this module's own raster path
-    decodes back to the exact frame; non-GIF payloads keep the
-    deterministic stub contract."""
-    from commercepulse_data_pipeline_spark.multimodal import (
-        gif_frame_rasters,
-        image_gray_raster,
-        sample_frames,
-    )
-
-    w, h = 14, 9
-    palette = bytes([250, 10, 10, 10, 250, 10, 10, 10, 250, 128, 128, 128])
-    f1 = bytes((x // 3 + y) % 4 for y in range(h) for x in range(w))
-    f2 = f1[::-1]
-    gif = _gif_bytes(w, h, [f1, f2], palette, delays=[50, 100])  # 1.5s
-    rasters = gif_frame_rasters(gif)
-
-    media = spark.createDataFrame(
-        [("clip", "video", gif)],
-        "media_id string, modality string, content binary",
-    )
-    out = sorted(
-        sample_frames(media, fps=2.0, max_frames=16).collect(),
-        key=lambda r: r.frame_index,
-    )
-    # duration 1.5s at 2 fps -> 3 ticks: t=0 shows frame 0 (ends at
-    # 0.5s), t=0.5 and t=1.0 show frame 1
-    assert [r.frame_ts_sec for r in out] == [0.0, 0.5, 1.0]
-    want = [rasters[0], rasters[1], rasters[1]]
-    for r, exp in zip(out, want):
-        got = image_gray_raster(bytes(r.frame))
-        assert (got == exp).all()
-
-
-def test_sample_frames_malformed_gif_err_row(spark):
-    """r15: a payload that CLAIMS to be GIF but is corrupt yields one
-    tolerant err row — never stub frames, never a task failure. The two
-    payloads reproduce the crash shapes the r14 advice probe found: a
-    truncated image descriptor (struct.error in the old decode walk) and
-    a trailing bare extension byte (IndexError)."""
-    from commercepulse_data_pipeline_spark.multimodal import sample_frames
-
-    trunc_desc = b"GIF89a" + bytes([4, 0, 4, 0, 0, 0, 0]) + b"\x2c\x01"
-    trailing_ext = b"GIF89a" + bytes([4, 0, 4, 0, 0, 0, 0]) + b"\x21"
-    media = spark.createDataFrame(
-        [("bad-desc", "video", trunc_desc), ("bad-ext", "video", trailing_ext)],
-        "media_id string, modality string, content binary",
-    )
-    out = sample_frames(media, fps=1.0, max_frames=4).collect()
-    assert len(out) == 2
-    by_id = {r.media_id: r for r in out}
-    for mid in ("bad-desc", "bad-ext"):
-        r = by_id[mid]
-        assert r.err is not None
-        assert r.frame is None and r.frame_index is None
-
-
-def test_sample_frames_zero_delay_gif_shows_first_frame(spark):
-    """r15: a multi-frame GIF whose GCE delays are ALL zero samples
-    frame 0 (what a renderer displays at t=0), not the last frame the
-    old tick walk advanced to."""
-    from commercepulse_data_pipeline_spark.multimodal import (
-        gif_frame_rasters,
-        image_gray_raster,
-        sample_frames,
-    )
-
-    w, h = 8, 6
-    palette = bytes([250, 10, 10, 10, 250, 10, 10, 10, 250, 128, 128, 128])
-    f1 = bytes((x + y) % 4 for y in range(h) for x in range(w))
-    f2 = bytes((x * y) % 4 for y in range(h) for x in range(w))
-    gif = _gif_bytes(w, h, [f1, f2], palette, delays=[0, 0])
-    rasters = gif_frame_rasters(gif)
-    assert not (rasters[0] == rasters[1]).all()
-
-    media = spark.createDataFrame(
-        [("z", "video", gif)], "media_id string, modality string, content binary"
-    )
-    out = sample_frames(media, fps=1.0, max_frames=8).collect()
-    assert len(out) == 1 and out[0].err is None
-    assert (image_gray_raster(bytes(out[0].frame)) == rasters[0]).all()
-
-
-def test_gif_frame_delays_matches_full_decode():
-    """r15: the structure-only delay walk (no LZW) reads the same
-    timeline as the full decode's return_delays form."""
-    from commercepulse_data_pipeline_spark.multimodal import (
-        _gif_frame_delays,
-        gif_frame_rasters,
-    )
-
-    palette = bytes([250, 10, 10, 10, 250, 10, 10, 10, 250, 128, 128, 128])
-    frames = [
-        bytes((x + y + k) % 4 for y in range(7) for x in range(11))
-        for k in range(4)
-    ]
-    gif = _gif_bytes(11, 7, frames, palette, delays=[25, 0, 100, 7])
-    _, delays = gif_frame_rasters(gif, return_delays=True)
-    assert _gif_frame_delays(gif) == delays == [25, 0, 100, 7]
-
-
-def test_image_hash_batch_drops_degenerate_family(spark, tmp_path):
-    """r15 streaming guard: a solid-color family (constant aHash) stops
-    flooding the pair feed by default — the hash STORE still records
-    every row — while drop_degenerate=False restores the old behavior."""
-    import numpy as np
-
-    from commercepulse_data_pipeline_spark.streaming.media import (
-        image_hash_batch,
-    )
-
-    rng = np.random.default_rng(11)
-    pic = rng.integers(0, 256, size=(16, 16), dtype=np.uint8)
-    near = pic.copy()
-    near[::6, ::6] = np.clip(near[::6, ::6].astype(int) + 7, 0, 255)
-    solid = np.full((16, 16), 77, dtype=np.uint8)
-    rows = [("a", _ppm_from_gray(pic)), ("b", _ppm_from_gray(near))]
-    rows += [(f"solid-{i}", _ppm_from_gray(solid)) for i in range(4)]
-    batch = spark.createDataFrame(rows, "media_id string, content binary")
-
-    store1 = str(tmp_path / "s1")
-    image_hash_batch(batch, 0, store1, hamming_threshold=6)
-    pairs = {(r.id_a, r.id_b) for r in
-             spark.read.parquet(f"{store1}/pairs").collect()}
-    assert pairs == {("a", "b")}
-    # the store is policy-free: all six hash rows recorded
-    assert spark.read.parquet(f"{store1}/hashes").count() == 6
-
-    store2 = str(tmp_path / "s2")
-    image_hash_batch(batch, 0, store2, hamming_threshold=6,
-                     drop_degenerate=False)
-    flooded = {(r.id_a, r.id_b) for r in
-               spark.read.parquet(f"{store2}/pairs").collect()}
-    assert len(flooded) == 1 + 6  # the real pair + C(4,2) solid junk
-
-
 def test_truncated_containers_raise_valueerror():
-    """Every cut of a GIF, PNG, WAV, FLAC and TIFF payload, plus the two
-    malformed GIFs of test_sample_frames_malformed_gif_err_row, either
-    decodes or raises ValueError on each entry point — the container
-    walks' bounds checks never leak IndexError or struct.error, and a cut
-    PNG IDAT stream never leaks zlib.error. The one other exit is not a
-    walk error: real_decode's NotImplementedError once a cut drops the
-    magic bytes."""
+    """Every cut of a GIF, PNG, WAV, FLAC and TIFF payload, plus two
+    malformed GIFs (cut after an image separator, cut after an extension
+    introducer), either decodes or raises ValueError on each entry point
+    — the container walks' bounds checks never leak IndexError or
+    struct.error, and a cut PNG IDAT stream never leaks zlib.error. The
+    one other exit is not a walk error: real_decode's NotImplementedError
+    once a cut drops the magic bytes."""
     import numpy as np
 
     from commercepulse_data_pipeline_spark.multimodal import (

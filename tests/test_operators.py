@@ -14,7 +14,7 @@ from commercepulse_data_pipeline_spark.operators import dedup as dd
 from commercepulse_data_pipeline_spark.operators import similarity as sim
 from commercepulse_data_pipeline_spark.operators import text as tx
 from commercepulse_data_pipeline_spark.operators import windows as win
-from commercepulse_data_pipeline_spark.operators.joins import anti_join, enrich, orphans, semi_join
+from commercepulse_data_pipeline_spark.operators.joins import anti_join, orphans, semi_join
 
 
 def _events_df(spark):
@@ -359,11 +359,12 @@ def test_simhash_near_dup(spark):
 
 @pytest.mark.slow
 def test_simhash_table_non64_bits(spark):
-    """Lane packing generalizes over bits/2 lanes: simhash_table at any
-    even width matches the single-expression simhash column form (same
-    shingles, same md5 bit source, same majority vote), and odd/oversize
-    widths are rejected up front (ADVICE r4: the 64-only assert had made
-    the documented ``bits`` parameter a trap)."""
+    """Lane packing generalizes over bits/2 lanes: each bit's majority
+    vote does not depend on the width, so simhash_table at any even width
+    equals the 64-bit signature's low ``bits`` bits (the lanes pair
+    different bits at each width), and odd/oversize widths are rejected
+    up front (ADVICE r4: the 64-only assert had made the documented
+    ``bits`` parameter a trap)."""
     import pytest as _pytest
 
     df = spark.createDataFrame(
@@ -371,12 +372,11 @@ def test_simhash_table_non64_bits(spark):
          (2, "entirely unrelated words about cooking pasta with tomato sauce")],
         ["doc_id", "text"],
     )
-    for bits in (16, 32, 64):
+    full = {r.doc_id: r.sig for r in dd.simhash_table(df, "text", "doc_id").collect()}
+    for bits in (16, 32):
         table = {r.doc_id: r.sig for r in
                  dd.simhash_table(df, "text", "doc_id", bits=bits).collect()}
-        expr = {r.doc_id: r.sig for r in
-                df.select("doc_id", dd.simhash(F.col("text"), bits=bits).alias("sig")).collect()}
-        assert table == expr, bits
+        assert table == {d: s & ((1 << bits) - 1) for d, s in full.items()}, bits
     with _pytest.raises(ValueError):
         dd.simhash_table(df, "text", "doc_id", bits=15)
     with _pytest.raises(ValueError):
@@ -389,9 +389,6 @@ def test_joins(spark):
     assert semi_join(child, parent, "k").count() == 1
     assert anti_join(child, parent, "k").count() == 1
     assert orphans(child, parent, "k").collect()[0].x == "b"
-    enriched = enrich(child, parent.withColumn("p", F.lit("P")), "k", broadcast_dim=True)
-    got = {(r.k, r.p) for r in enriched.collect()}
-    assert got == {(1, "P"), (3, None)}  # left join keeps orphan child
 
 
 def test_windows_running_total_and_topn(spark):
@@ -401,8 +398,6 @@ def test_windows_running_total_and_topn(spark):
     rt = win.running_total(df, ["u"], order_col="seq", value_col="v")
     got = {(r.u, r.seq): r.running_total for r in rt.collect()}
     assert got[("u1", 2)] == 15.0
-    top = win.top_n_per_group(df, ["u"], order_col="v", n=1)
-    assert {(r.u, r.v) for r in top.collect()} == {("u1", 10.0), ("u2", 7.0)}
 
 
 def test_sessionize_gap(spark):
@@ -521,9 +516,6 @@ def test_capped_posting_lists_never_collects_overcap_bucket(spark):
     rows = [("hot", i) for i in range(12)] + [("ok", 100), ("ok", 101), ("lone", 200)]
     keyed = spark.createDataFrame(rows, ["bucket", "doc_id"])
 
-    ok_keys = dd.eligible_buckets(keyed, ["bucket"], max_bucket=10)
-    assert [r.bucket for r in ok_keys.collect()] == ["ok"]  # hot dropped, lone pruned
-
     # the exact pre-collect input: window-counted rows after the cap filter —
     # zero rows of the degenerate bucket reach the collect aggregation
     w = Window.partitionBy("bucket")
@@ -617,23 +609,6 @@ def test_salt_deterministic_under_repartitioning(spark):
     assert all(0 <= s < 8 for s in s1.values())
 
 
-def test_salted_join_matches_plain_join(spark):
-    from commercepulse_data_pipeline_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(300)] + [("k2", 0), ("orphan", 1)], ["k", "i"]
-    )
-    small = spark.createDataFrame([("hot", "H"), ("k2", "T")], ["k", "tag"])
-    out = salted_join(big, small, "k", salt_buckets=4)
-    plain = big.join(small, "k")
-    assert out.count() == plain.count() == 301
-    assert {r.tag for r in out.where(F.col("k") == "hot").collect()} == {"H"}
-    # left join keeps unmatched big rows exactly once
-    left = salted_join(big, small, "k", how="left", salt_buckets=4)
-    assert left.count() == 302
-    assert left.where(F.col("k") == "orphan").collect()[0].tag is None
-
-
 def test_lsh_multiprobe_recall_improves(spark):
     import math
 
@@ -647,6 +622,38 @@ def test_lsh_multiprobe_recall_improves(spark):
     # only improve
     assert len(multi & exact) >= len(one & exact)
     assert one <= multi | one  # sanity: both sorted subsets of the corpus
+
+
+def test_lsh_index_partition_pruning(spark, tmp_path):
+    """The persisted sign-LSH index that the ``stream-dedup-embeddings``
+    store writes must answer probes via partition PRUNING: the scan's
+    PartitionFilters carry the lsh_bucket restriction, and the indexed
+    answer equals the unindexed lsh_topk answer with the same
+    planes/probes."""
+    import math
+
+    from commercepulse_data_pipeline_spark.streaming.embeddings import (
+        dedup_embeddings_batch,
+    )
+
+    rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0), (i % 11) / 11.0]) for i in range(200)]
+    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    q = [1.0, 0.05, 0.5]
+
+    direct = sim.lsh_topk(df, q, k=5, n_planes=4, probes=2).collect()
+
+    store = str(tmp_path / "emb")
+    # tau above every cosine: the whole corpus lands in the index
+    dedup_embeddings_batch(df, 0, store, tau=1.01, n_planes=4)
+    indexed_df = sim.lsh_topk_indexed(spark, f"{store}/index", q, k=5, probes=2)
+    indexed = indexed_df.collect()
+    assert [(r.vec_id, r.cosine_sim) for r in indexed] == [
+        (r.vec_id, r.cosine_sim) for r in direct
+    ]
+
+    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "PartitionFilters: [" in final and "lsh_bucket" in final.split("PartitionFilters")[1][:120], plan
 
 
 def test_ivf_assign_and_topk(spark):
@@ -669,95 +676,6 @@ def test_ivf_assign_and_topk(spark):
     approx = [r.vec_id for r in sim.ivf_topk(assigned, cents, q, k=5, nprobe=3).collect()]
     assert len(approx) == 5
     assert len(set(exact) & set(approx)) >= 3  # recall ≥ 0.6 at nprobe=3/6
-
-
-def test_lsh_index_partition_pruning(spark, tmp_path):
-    """The persisted sign-LSH index must answer probes via partition
-    PRUNING: the scan's PartitionFilters carry the lsh_bucket restriction,
-    and the indexed answer equals the unindexed lsh_topk answer with the
-    same planes/probes."""
-    import math
-
-    rows = [(i, [math.cos(i / 7.0), math.sin(i / 7.0), (i % 11) / 11.0]) for i in range(200)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = [1.0, 0.05, 0.5]
-
-    direct = sim.lsh_topk(df, q, k=5, n_planes=4, probes=2).collect()
-
-    idx = str(tmp_path / "lsh")
-    sim.write_lsh_index(df, idx, n_planes=4)
-    indexed_df = sim.lsh_topk_indexed(spark, idx, q, k=5, probes=2)
-    indexed = indexed_df.collect()
-    assert [(r.vec_id, r.cosine_sim) for r in indexed] == [
-        (r.vec_id, r.cosine_sim) for r in direct
-    ]
-
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "PartitionFilters: [" in final and "lsh_bucket" in final.split("PartitionFilters")[1][:120], plan
-
-    # bucket key must fit a signed long: 64+ planes would overflow the
-    # partition value into NULL and probes would silently miss
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        sim.write_lsh_index(df, str(tmp_path / "bad"), n_planes=64)
-
-
-def test_ivf_index_partition_pruning(spark, tmp_path):
-    """The persisted IVF index must answer probes via partition PRUNING:
-    the scan's PartitionFilters carry the centroid_id restriction, and the
-    indexed answer equals the unindexed ivf_topk answer."""
-    rows = [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(200)]
-    e = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    assigned, cents = sim.ivf_assign(e, n_centroids=4, iters=1)
-    q = rows[5][1]
-
-    direct = sim.ivf_topk(assigned, cents, q, k=5, nprobe=2).collect()
-
-    idx = str(tmp_path / "ivf")
-    sim.write_ivf_index(assigned, idx, centroids=cents)
-    indexed_df = sim.ivf_topk_indexed(spark, idx, q, k=5, nprobe=2)
-    indexed = indexed_df.collect()
-    assert [(r.vec_id, r.cosine_sim) for r in indexed] == [
-        (r.vec_id, r.cosine_sim) for r in direct
-    ]
-
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert "PartitionFilters: [" in final and "centroid_id" in final.split("PartitionFilters")[1][:120], plan
-
-
-def test_ivf_append_incremental_ingest(spark, tmp_path):
-    """Incremental IVF ingest: a new batch assigns to the FROZEN centroids
-    and lands in the partitioned lists; a probe then finds the appended
-    near-duplicate vector through the same partition-pruned read, with no
-    index rebuild. Appending must not disturb pre-existing rows."""
-    rows = [(i, [float((i * 7 + j) % 13) for j in range(8)]) for i in range(200)]
-    e = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    assigned, cents = sim.ivf_assign(e, n_centroids=4, iters=1)
-    idx = str(tmp_path / "ivf")
-    sim.write_ivf_index(assigned, idx, centroids=cents)
-    n_before = spark.read.parquet(f"{idx}/lists").count()
-
-    # query direction OFF the corpus lattice (the mod-13 rows contain
-    # exact duplicates that would crowd a lattice-near plant out of top-k)
-    q = [41.0, -7.0, 18.5, 3.3, -12.0, 9.9, 0.5, 25.0]
-    near = [v * 1.001 for v in q]            # planted near-dup of the query
-    batch = spark.createDataFrame([(1000, near), (1001, [-v for v in q])],
-                                  ["vec_id", "embedding"])
-    n = sim.ivf_append(batch, spark, idx)
-    assert n == 2
-    lists = spark.read.parquet(f"{idx}/lists")
-    assert lists.count() == n_before + 2     # old rows untouched, both landed
-    got = sim.ivf_topk_indexed(spark, idx, q, k=3, nprobe=2).collect()
-    assert got[0].vec_id == 1000              # the appended near-dup tops the probe
-    assert 1001 not in [r.vec_id for r in got]  # opposite direction never ranks
-
-    # frozen quantizer: appended rows carry valid centroid ids
-    valid = {cid for cid, _ in cents}
-    batch_cids = {r.centroid_id for r in
-                  lists.where(F.col("vec_id") >= 1000).select("centroid_id").collect()}
-    assert batch_cids <= valid
 
 
 def test_rle_counts_matches_counter(spark):
@@ -1118,10 +1036,7 @@ def test_collocations_lift_exact_and_ranking(spark):
 
 def test_embedding_gram_and_pca_match_numpy(spark):
     """Distributed Gram ≡ numpy X.T @ X (to the decimal-accumulation
-    rounding); pca_components reproduces numpy eigh's principal
-    directions (sign-normalized) and project_embeddings projects with
-    the deterministic fold dot — variance captured by PC1 matches numpy
-    to float tolerance."""
+    rounding)."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -1139,25 +1054,6 @@ def test_embedding_gram_and_pca_match_numpy(spark):
     assert len(got) == 6 * 7 // 2
     for (i, j), g in got.items():
         assert abs(g - expect[i][j]) < 1e-3, (i, j)
-
-    comps = sim.pca_components(
-        spark, [(i, j, g) for (i, j), g in got.items()], dim=6, k=2
-    )
-    vals, vecs = np.linalg.eigh(expect)
-    top = vecs[:, np.argsort(vals)[::-1][:2]]
-    for k_i in range(2):
-        v = top[:, k_i]
-        v = v if v[int(np.argmax(np.abs(v)))] >= 0 else -v
-        assert np.allclose(comps[k_i], v, atol=1e-4), k_i
-
-    proj = sim.project_embeddings(df, comps, "embedding").collect()
-    want0 = xf @ np.array(comps[0])
-    by_id = {r["vec_id"]: r["pca"] for r in proj}
-    for i in range(0, 200, 37):
-        assert abs(by_id[i][0] - want0[i]) < 1e-4
-    # PC1 projections carry the most variance
-    p = np.array([by_id[i] for i in range(200)])
-    assert p[:, 0].var() > p[:, 1].var() * 2
 
 
 def test_robust_anomalies_median_mad_flags(spark):
@@ -1343,42 +1239,6 @@ def test_pq_train_null_ids_and_nondeterministic_lineage(spark):
         sim.pq_train(drifting, m=2, n_codes=2, iters=0)
 
 
-def test_pq_append_incremental_ingest(spark, tmp_path):
-    """pq_append encodes a new batch against the FROZEN persisted
-    codebooks (no retrain, no rewrite) and the indexed query sees old +
-    new rows with comparable distances: a planted exact query twin
-    appended later lands at the top."""
-    from commercepulse_data_pipeline_spark.operators import similarity as sim
-
-    import random
-
-    rng = random.Random(11)
-    base_rows = [
-        (i, [rng.uniform(0.4, 0.6) for _ in range(8)]) for i in range(20)
-    ]
-    df = spark.createDataFrame(base_rows, "vec_id long, embedding array<float>")
-    books = sim.pq_train(df, m=2, n_codes=4, iters=1)
-    p = str(tmp_path / "pq")
-    sim.write_pq_index(sim.pq_encode(df, books), p, books=books)
-
-    qvec = [1.0] * 4 + [0.0] * 4
-    before = {r["vec_id"] for r in sim.pq_topk_indexed(spark, p, qvec, k=3).collect()}
-    assert 200 not in before
-
-    sim.pq_append(
-        spark, p,
-        spark.createDataFrame([(200, qvec)], "vec_id long, embedding array<float>"),
-    )
-    full = sim.pq_topk_indexed(spark, p, qvec, k=21).collect()
-    by_id = {r["vec_id"]: r["approx_d2"] for r in full}
-    # the appended twin's ADC distance is the global minimum (ties with
-    # any old row that quantized to the same codes — compressed-domain
-    # distances depend only on codes, so equality, not strict order)
-    assert by_id[200] == min(by_id.values())
-    # old rows still present and unchanged
-    assert spark.read.parquet(f"{p}/codes").count() == 21
-
-
 def test_pq_knn_join_and_recall_at_k(spark):
     """Batch ADC join: every query row gets compressed-domain top-k from
     the codes table alone; recall@k against exact knn_join ground truth
@@ -1452,37 +1312,6 @@ def test_ivfpq_index_residual_coding_and_pruned_probe(spark, tmp_path):
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "embedding" not in plan          # raw vectors never read
     assert "PartitionFilters" in plan, plan  # probe = partition pruning
-
-
-def test_ivfpq_append_incremental_ingest(spark, tmp_path):
-    """ivfpq_append assigns new vectors to their frozen coarse list and
-    residual-encodes with the frozen codebooks: an appended near-twin of
-    the query is found through the same partition-pruned probe, and the
-    old lists are untouched."""
-    from commercepulse_data_pipeline_spark.operators import similarity as sim
-
-    import random
-
-    rng = random.Random(9)
-    rows = []
-    for i in range(40):
-        base = [1.0, 0.0, 0.0, 0.0] if i % 2 == 0 else [0.0, 0.0, 1.0, 0.0]
-        rows.append((i, [v + rng.uniform(-0.05, 0.05) for v in base]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    p = str(tmp_path / "ivfpq")
-    sim.write_ivfpq_index(df, p, n_centroids=2, m=2, n_codes=4, iters=1)
-    n_before = spark.read.parquet(f"{p}/codes").count()
-
-    qvec = [1.0, 0.0, 0.0, 0.0]
-    sim.ivfpq_append(
-        spark, p,
-        spark.createDataFrame([(500, qvec)], "vec_id long, embedding array<float>"),
-    )
-    assert spark.read.parquet(f"{p}/codes").count() == n_before + 1
-    got = sim.ivfpq_topk(spark, p, qvec, k=40, nprobe=1)
-    by_id = {r["vec_id"]: r["approx_d2"] for r in got.collect()}
-    assert 500 in by_id
-    assert by_id[500] == min(by_id.values())  # ADC-minimal (ties by code)
 
 
 def test_fuzzy_text_join_cross_table_exact(spark):
@@ -1930,75 +1759,6 @@ def test_broadcast_query_side_guard(spark):
     with pytest.raises(ValueError, match="knn_join_self"):
         sim.pq_knn_join(codes, df, books, k=2, max_queries=5)
     assert sim.pq_knn_join(codes, small, books, k=2, max_queries=5).count() > 0
-
-
-def _clustered_embeddings(spark, n_clusters=4, per=10, dim=16, noise=0.02):
-    import math
-    import random
-
-    rng = random.Random(7)
-    rows, vid = [], 0
-    for _ in range(n_clusters):
-        d = [rng.gauss(0, 1) for _ in range(dim)]
-        n = math.sqrt(sum(x * x for x in d))
-        d = [x / n for x in d]
-        for _ in range(per):
-            v = [x + rng.gauss(0, noise) for x in d]
-            n = math.sqrt(sum(x * x for x in v))
-            rows.append((vid, [x / n for x in v]))
-            vid += 1
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-@pytest.mark.slow
-def test_ivfpq_recommend_knob_frontier(spark, tmp_path):
-    """ivfpq_recommend encodes the SCALE.md knob order (VERDICT r10 item
-    6). On a CLUSTERED corpus whose true neighbors are cluster-mates,
-    nprobe=1 already probes the whole answer list -> it recommends the
-    smallest knobs (nprobe=1, refine=0) at recall 1.0. On an
-    UNSTRUCTURED corpus the nprobe=1 ceiling is ~1/n_lists, so the
-    recommendation must climb the nprobe axis; ceilings are
-    non-decreasing in nprobe (the rule's premise: nprobe sets the
-    ceiling, refine only approaches it)."""
-    import math
-    import random
-
-    # clusters of size k+1: the k true neighbors of any member are
-    # exactly its cluster-mates, order-free (set recall), so ADC
-    # quantization error inside the cluster cannot cost recall
-    e = _clustered_embeddings(spark, n_clusters=4, per=10)
-    idx = str(tmp_path / "ivfpq_clustered")
-    sim.write_ivfpq_index(e, idx, n_centroids=4, m=4, n_codes=8)
-    out = sim.ivfpq_recommend(
-        spark, idx, e, n_queries=8, recall_target=0.9, k=9,
-        nprobe_grid=(1, 2, 4), refine_grid=(0.0, 0.1),
-    )
-    assert out["target_met"] is True
-    assert out["recommended"]["nprobe"] == 1
-    assert out["recommended"]["refine"] == 0.0
-    assert out["recommended"]["recall"] == 1.0
-
-    rng = random.Random(13)
-    rows = []
-    for vid in range(160):
-        v = [rng.gauss(0, 1) for _ in range(16)]
-        n = math.sqrt(sum(x * x for x in v))
-        rows.append((vid, [x / n for x in v]))
-    u = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    idx2 = str(tmp_path / "ivfpq_unstructured")
-    sim.write_ivfpq_index(u, idx2, n_centroids=4, m=4, n_codes=8)
-    out2 = sim.ivfpq_recommend(
-        spark, idx2, u, n_queries=8, recall_target=0.9, k=9,
-        nprobe_grid=(1, 2, 4), refine_grid=(0.0, 0.1),
-    )
-    assert out2["recommended"]["nprobe"] > 1
-    # ceilings non-decreasing along the nprobe axis, per truth metric
-    for refine in (0.0, 0.1):
-        ceils = [c["ceiling"] for c in out2["frontier"] if c["refine"] == refine]
-        assert ceils == sorted(ceils), ceils
-    # the nprobe=1 ceiling on unstructured data is far below the target
-    ceil1 = [c for c in out2["frontier"] if c["nprobe"] == 1][0]["ceiling"]
-    assert ceil1 < 0.9
 
 
 def test_strip_intradoc_repeats_planted(spark):

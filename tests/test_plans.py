@@ -97,33 +97,6 @@ def test_partial_aggregation_before_shuffle(spark):
     assert "Exchange hashpartitioning" in plan
 
 
-def test_bucketed_join_elides_shuffle(spark, tmp_path):
-    """Co-located bucketed tables: the same-key join must plan with NO
-    Exchange on either side — the 100 TB fact⋈fact strategy."""
-    from pyspark.sql import functions as F
-
-    from commercepulse_data_pipeline_spark.sources.readers import write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-    try:
-        left = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-        )
-        right = spark.range(0, 1000).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-        )
-        write_bucketed(left, "bt_left", "k", n_buckets=4, sort_col="k")
-        write_bucketed(right, "bt_right", "k", n_buckets=4, sort_col="k")
-        joined = spark.table("bt_left").join(spark.table("bt_right"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bt_left")
-        spark.sql("DROP TABLE IF EXISTS bt_right")
-
-
 def test_stratified_sample_is_shuffle_free(spark):
     """Deterministic sampling must stay a scan-side filter: no Exchange,
     no aggregation — the plan is projection + filter over the scan."""

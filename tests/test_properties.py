@@ -540,98 +540,6 @@ def test_chunk_documents_matches_python_model(spark, texts, max_tokens, stride):
 
 
 @given(
-    texts=st.lists(
-        st.text(alphabet="abc", min_size=0, max_size=6), min_size=1, max_size=10
-    ),
-    batch_size=st.integers(min_value=2, max_value=6),
-    pool=st.integers(min_value=2, max_value=8),
-)
-@settings(max_examples=120, deadline=None)
-def test_bpe_batch_selection_sequentially_equivalent(texts, batch_size, pool):
-    """The batched merge selection (operators/bpe.py::_select_disjoint_batch,
-    the exact driver logic train_bpe runs per round, including the
-    truncated-fetch floor bound) emits bit-identical merge sequences to
-    one-merge-per-round sequential BPE — pure-Python mirror, adversarial
-    regime: a 3-letter alphabet of short words maximizes count ties,
-    overlapping candidates ('aaa' under (a,a)), and symbol collisions
-    (a+b equal to an existing symbol), with tiny candidate pools
-    stressing the unfetched-pair floor."""
-    import collections
-
-    from commercepulse_data_pipeline_spark.operators.bpe import (
-        END,
-        _select_disjoint_batch,
-    )
-
-    def merge_word(syms, a, b):
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return tuple(out)
-
-    def word_state(ts):
-        state = collections.Counter()
-        for t in ts:
-            for w in t.lower().split():
-                if w:
-                    state[tuple(list(w) + [END])] += 1
-        return state
-
-    def stats_of(state):
-        stats = collections.Counter()
-        for syms, f in state.items():
-            for i in range(len(syms) - 1):
-                stats[(syms[i], syms[i + 1])] += f
-        return stats
-
-    def apply_merge(state, a, b):
-        nxt = collections.Counter()
-        for syms, f in state.items():
-            nxt[merge_word(list(syms), a, b)] += f
-        return nxt
-
-    n_merges = 10
-
-    # sequential reference: global argmax, ties by lexicographically
-    # smallest pair
-    state = word_state(texts)
-    seq = []
-    for _ in range(n_merges):
-        stats = stats_of(state)
-        if not stats:
-            break
-        n = max(stats.values())
-        a, b = min(p for p, c in stats.items() if c == n)
-        seq.append((a, b, n))
-        state = apply_merge(state, a, b)
-
-    # batched trainer: the driver loop of train_bpe verbatim (top-pool
-    # fetch, floor bound, disjoint-batch selection, batch application)
-    state = word_state(texts)
-    batched = []
-    while len(batched) < n_merges:
-        stats = stats_of(state)
-        if not stats:
-            break
-        ranked = sorted(stats.items(), key=lambda kv: (-kv[1], kv[0]))[:pool]
-        cands = [(n, a, b) for (a, b), n in ranked]
-        floor = cands[-1][0] if len(cands) == pool else 0
-        batch = _select_disjoint_batch(
-            cands, min(batch_size, n_merges - len(batched)), floor
-        )
-        for n, a, b in batch:
-            batched.append((a, b, n))
-            state = apply_merge(state, a, b)
-
-    assert batched == seq
-
-
-@given(
     events=st.lists(
         st.tuples(
             st.integers(min_value=1, max_value=4),     # user

@@ -1,6 +1,6 @@
 """Structured Streaming tests (SURVEY §2.10): file-source stream over the
-daily JSONL landing layout, dedup-within-watermark, daily tumbling
-aggregation, exactly-once bronze sink via checkpointing.
+daily JSONL landing layout, the incremental gold fold, and the
+micro-batch curation/index stores.
 
 All runs use trigger(availableNow=True) so they are bounded and
 deterministic under test.
@@ -13,12 +13,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.streaming.ingest import (
-    daily_counts,
-    dedup_within_watermark,
-    read_event_stream,
-    write_bronze_stream,
-)
+from commercepulse_data_pipeline_spark.streaming.ingest import read_event_stream
 from tests.conftest import fixture_events
 
 
@@ -37,182 +32,6 @@ def landing_dir(tmp_path_factory) -> str:
         d.mkdir()
         (d / "events.jsonl").write_text("\n".join(json.dumps(e) for e in evs) + "\n")
     return str(root)
-
-
-def _run_to_memory(stream_df, name: str, output_mode: str):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
-def test_stream_dedup_within_watermark(spark, landing_dir):
-    stream = read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    deduped = dedup_within_watermark(stream, watermark="7 days")
-    _run_to_memory(deduped, "dedup_sink", "append")
-    out = spark.sql("SELECT event_id FROM dedup_sink")
-    # the exact duplicate (same event_id, later ingested_at) collapsed
-    assert out.count() == out.distinct().count() == 15
-
-
-def test_stream_daily_counts(spark, landing_dir):
-    stream = read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    counts = daily_counts(stream, watermark="7 days")
-    _run_to_memory(counts, "daily_sink", "complete")
-    rows = {
-        (str(r.event_date), r.event_type): r.n_events
-        for r in spark.sql("SELECT * FROM daily_sink").collect()
-    }
-    # fixture: 2 order events on 2026-02-10 (ord-b-1, ord-a-1); the raw
-    # stream still carries the duplicate, so 2026-02-11 order_updated = 2
-    assert rows[("2026-02-10", "order_created")] == 2
-    assert rows[("2026-02-11", "order_updated")] == 2
-    assert rows[("2026-02-13", "refund_issued")] == 2
-
-
-def test_stream_bronze_sink_exactly_once(spark, landing_dir, tmp_path):
-    bronze = str(tmp_path / "bronze")
-    ckpt = str(tmp_path / "ckpt")
-    stream = dedup_within_watermark(
-        read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    )
-    q = write_bronze_stream(stream, bronze, ckpt)
-    q.awaitTermination(120)
-    first = spark.read.parquet(bronze).count()
-    assert first == 15
-    # re-run with the SAME checkpoint: no new source files → no new rows
-    q2 = write_bronze_stream(
-        dedup_within_watermark(read_event_stream(spark, f"{landing_dir}/*/events.jsonl")),
-        bronze,
-        ckpt,
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(bronze).count() == first
-    # partitioned by INGESTION date (same layout as batch write_bronze —
-    # ingested_at-derived, not event time): fixture events land on their
-    # ingested_at days, not their event days
-    back = spark.read.parquet(bronze)
-    days = {str(r.ingest_date) for r in back.select("ingest_date").distinct().collect()}
-    assert days <= {"2026-02-20", "2026-02-21"} and "2026-02-20" in days
-    one_day = back.where(F.col("ingest_date") == "2026-02-20")
-    # ≤: the 02-21 duplicate collapses to whichever copy the dedup kept
-    assert 0 < one_day.count() <= first
-
-
-def test_stream_session_windows(spark, landing_dir):
-    from commercepulse_data_pipeline_spark.streaming.ingest import session_counts
-
-    stream = read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    q = (
-        session_counts(stream, gap="30 minutes", watermark="1 hour")
-        .writeStream.format("memory").queryName("session_sink")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM session_sink").collect()
-    assert rows and all(r.n_events >= 1 for r in rows)
-    assert all(r.session_end > r.session_start for r in rows)
-
-
-def test_stream_late_arrival_counts(spark, landing_dir):
-    from commercepulse_data_pipeline_spark.streaming.ingest import late_arrival_counts
-
-    stream = read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    q = (
-        late_arrival_counts(stream, threshold_days=1.0, watermark="30 days")
-        .writeStream.format("memory").queryName("late_sink")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = {str(r.event_date): r for r in spark.sql("SELECT * FROM late_sink").collect()}
-    # fixture pay-6: event_time 2026-02-13, ingested 2026-02-20 → 7 days late
-    assert rows["2026-02-13"].late_events >= 1
-    assert rows["2026-02-13"].max_lag_days >= 6.9
-    # totals match the raw stream (nothing dropped at this watermark):
-    # 16 envelope lines incl. the duplicate replay
-    assert sum(r.n_events for r in rows.values()) == 16
-
-
-def test_dedup_state_bounded_with_rocksdb_eviction(spark, tmp_path):
-    """The bounded-state claim, demonstrated (VERDICT r1 #8): under the
-    RocksDB state store, dedup_within_watermark must EVICT keys older
-    than the watermark as it advances — state at the end holds roughly
-    one day's keys, not every key ever seen."""
-    from commercepulse_data_pipeline_spark.session import ROCKSDB_STATE_CONF
-
-    n_days, per_day = 3, 300
-    for d in range(n_days):
-        day = f"2026-03-{10 + d:02d}"
-        p = tmp_path / day
-        p.mkdir()
-        (p / "events.jsonl").write_text("\n".join(
-            json.dumps({
-                "event_id": f"e-{day}-{i}",
-                "event_type": "order_created",
-                "event_time": f"{day}T{i % 24:02d}:{i % 60:02d}:00Z",
-                "vendor": "vendor_b",
-                "payload": "{}",
-                "ingested_at": f"{day}T23:59:59Z",
-                "source": "t",
-            }) for i in range(per_day)
-        ) + "\n")
-
-    prev = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        stream = read_event_stream(
-            spark, str(tmp_path) + "/*/events.jsonl", max_files_per_trigger=1
-        )
-        deduped = dedup_within_watermark(stream, watermark="1 hour")
-        q = (
-            deduped.writeStream.format("memory").queryName("rocksdb_dedup")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        assert spark.sql("SELECT count(*) FROM rocksdb_dedup").first()[0] == n_days * per_day
-        states = [p["stateOperators"][0] for p in q.recentProgress if p["stateOperators"]]
-        assert states, "no state operator metrics reported"
-        final_rows = states[-1]["numRowsTotal"]
-        removed = sum(s.get("numRowsRemoved", 0) for s in states)
-        # eviction happened and end-state is bounded by ~one day of keys,
-        # not the full 3-day history
-        assert removed > 0
-        assert final_rows <= per_day
-        assert "RocksDB" in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-@pytest.mark.slow
-def test_stream_stream_join_payments_to_orders(spark, landing_dir):
-    """Stream-stream inner join with an event-time range bound: payments
-    match their order iff within 1 day of the order creation. The orphan
-    payment (no order) and the out-of-range duplicate-payment event are
-    both excluded; the drift-coalesced order id matches all 3 vendor
-    dialects."""
-    from commercepulse_data_pipeline_spark.streaming.ingest import (
-        join_payments_to_orders_stream,
-    )
-
-    stream = read_event_stream(spark, f"{landing_dir}/*/events.jsonl")
-    joined = join_payments_to_orders_stream(stream, within="1 day")
-    _run_to_memory(joined, "ss_join_sink", "append")
-    rows = {r.payment_event_id: r for r in spark.sql("SELECT * FROM ss_join_sink").collect()}
-    assert set(rows) == {"pay-1", "pay-2", "pay-3", "pay-6"}
-    assert rows["pay-1"].order_id == "O1" and rows["pay-1"].amount == 1000.0
-    assert rows["pay-3"].order_id == "O3" and rows["pay-3"].amount == 250.0
-    # pay-4 (orphan O-GHOST) and pay-5 (2 days after O1's creation, outside
-    # the 1-day range) are excluded by the join itself
 
 
 @pytest.mark.slow
@@ -270,39 +89,6 @@ def test_streaming_gold_upsert_converges_to_batch(spark, landing_dir, tmp_path):
     q2.awaitTermination(180)
     got2 = spark.read.parquet(f"{store}/gold").select(*expect.columns)
     assert rows_of(got2) == rows_of(expect)
-
-
-def test_stream_stream_join_replayed_order_no_fanout(spark, tmp_path):
-    """An at-least-once REPLAY of an order_created (same event_id, and a
-    second replica arriving in a later file) must not fan the matching
-    payment into multiple join rows: both join sides dedup within the
-    watermark before joining (batch path parity — LWW runs first there)."""
-    import json as _json
-
-    from commercepulse_data_pipeline_spark.streaming.ingest import (
-        join_payments_to_orders_stream,
-    )
-    from tests.conftest import _env
-
-    order = _env("ord-r-1", "order_created", "2026-02-10T10:00:00Z", "vendor_b",
-                 {"order_id": "O9", "customerId": "C9", "totalAmount": 70.0,
-                  "state": "pending", "created_at": "2026-02-10T10:00:00Z"})
-    pay = _env("pay-r-1", "payment_received", "2026-02-10T12:00:00Z", "vendor_b",
-               {"payment_id": "P9", "order_id": "O9", "amount": 70.0,
-                "payment_status": "success"})
-    d1 = tmp_path / "2026-02-10"; d1.mkdir()
-    d2 = tmp_path / "2026-02-11"; d2.mkdir()
-    (d1 / "events.jsonl").write_text(
-        "\n".join(_json.dumps(e) for e in (order, order, pay)) + "\n"
-    )
-    (d2 / "events.jsonl").write_text(_json.dumps(order) + "\n")  # late replica
-
-    stream = read_event_stream(spark, f"{tmp_path}/*/events.jsonl")
-    joined = join_payments_to_orders_stream(stream, within="1 day")
-    _run_to_memory(joined, "ss_replay_sink", "append")
-    rows = spark.sql("SELECT * FROM ss_replay_sink").collect()
-    assert len(rows) == 1
-    assert rows[0].payment_event_id == "pay-r-1" and rows[0].amount == 70.0
 
 
 @pytest.mark.slow
@@ -1321,205 +1107,6 @@ def test_passage_fp_index_fold_probe_equality(spark, tmp_path, monkeypatch):
     t15 = spark.read.parquet(f"{store}/corpus/ingest_batch=5").head()
     assert shared not in t15["text"]
     assert t15["n_tokens_removed"] == 8
-
-
-def test_stream_boilerplate_strip_scoped_cross_batch(spark, tmp_path):
-    """Streaming per-source boilerplate stripping: (a) a template window
-    reaching min_docs WITHIN one source across batches is spliced from
-    every occurrence in the deciding (and later) batches — no canonical
-    survivor; (b) the same text in a different source stays (scope
-    isolation); (c) a direct replay of a batch reproduces its first
-    attempt (own-partition exclusion); (d) a single-batch arrival
-    matches the batch operator."""
-    from commercepulse_data_pipeline_spark.operators.text import (
-        strip_boilerplate,
-    )
-    from commercepulse_data_pipeline_spark.streaming.passages import (
-        boilerplate_strip_batch,
-    )
-
-    tpl = "click here to subscribe to our newsletter today"  # 8 tokens
-    store = str(tmp_path / "bstore")
-    b0 = [(1, "A", f"first article text then {tpl} closing words")]
-    b1 = [(2, "A", f"second piece also carries {tpl} at the end"),
-          (3, "B", f"b source quoting {tpl} exactly once here")]
-    schema = "doc_id long, source string, text string"
-    boilerplate_strip_batch(spark.createDataFrame(b0, schema), 0, store)
-    boilerplate_strip_batch(spark.createDataFrame(b1, schema), 1, store)
-
-    corpus = spark.read.parquet(f"{store}/corpus")
-    got = {r["doc_id"]: r for r in corpus.collect()}
-    # batch 0 landed before the threshold: streaming cannot retro-splice
-    assert tpl in got[1]["text"] and got[1]["n_tokens_removed"] == 0
-    # batch 1 crosses the A-source threshold: doc 2 loses the template
-    assert tpl not in got[2]["text"]
-    assert got[2]["n_tokens_removed"] == 8
-    assert "second piece also carries" in got[2]["text"]
-    # scope isolation: B has one occurrence, stays
-    assert tpl in got[3]["text"] and got[3]["n_tokens_removed"] == 0
-
-    # replay of batch 1: own-partition exclusion -> identical output
-    boilerplate_strip_batch(spark.createDataFrame(b1, schema), 1, store)
-    got_r = {r["doc_id"]: r["text"]
-             for r in spark.read.parquet(f"{store}/corpus").collect()}
-    assert got_r == {k: v["text"] for k, v in got.items()}
-
-    # later batch in A: the index alone (2 docs) trips the threshold
-    b2 = [(4, "A", f"third doc with {tpl} and nothing else shared")]
-    boilerplate_strip_batch(spark.createDataFrame(b2, schema), 2, store)
-    t4 = spark.read.parquet(f"{store}/corpus/ingest_batch=2").head()
-    assert tpl not in t4["text"] and t4["n_tokens_removed"] == 8
-
-    # single-batch arrival == batch operator (both A docs spliced, B kept)
-    store2 = str(tmp_path / "bstore2")
-    allrows = b0 + b1
-    boilerplate_strip_batch(spark.createDataFrame(allrows, schema), 0, store2)
-    stream_out = {r["doc_id"]: r["text"] for r in
-                  spark.read.parquet(f"{store2}/corpus").collect()}
-    batch_out = {r["doc_id"]: r["text_stripped"] for r in
-                 strip_boilerplate(
-                     spark.createDataFrame(allrows, schema),
-                     window_tokens=8, min_docs=2).collect()}
-    assert stream_out == batch_out
-
-
-def test_stream_boilerplate_strip_wrapper_end_to_end(spark, tmp_path):
-    """The readStream wrapper drives the same batch fn: two drops arrive
-    as separate micro-batches; the second crosses the per-source
-    threshold and lands stripped."""
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.streaming import batches as stream_batches
-    from commercepulse_data_pipeline_spark.streaming.passages import (
-        boilerplate_strip_batch,
-    )
-
-    tpl = "one two three four five six seven eight"
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    batches = [
-        [(1, "A", f"lead text {tpl} tail text")],
-        [(2, "A", f"other words {tpl} trailing bits")],
-    ]
-    for i, rows in enumerate(batches):
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                "source": [r[1] for r in rows],
-                "text": [r[2] for r in rows],
-            }),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    store = str(tmp_path / "store")
-    q = stream_batches.start(
-        stream_batches.drops(
-            spark, str(drops), "doc_id long, source string, text string",
-            max_files_per_trigger=1,
-        ),
-        str(tmp_path / "ckpt"),
-        lambda df, i: boilerplate_strip_batch(df, i, store),
-    )
-    q.awaitTermination(120)
-    texts = {r["doc_id"]: r["text"]
-             for r in spark.read.parquet(f"{store}/corpus").collect()}
-    assert tpl in texts[1]       # first arrival pre-threshold
-    assert tpl not in texts[2]   # second arrival stripped
-
-
-def test_boilerplate_stream_crash_replay_and_fold(spark, tmp_path):
-    """Boilerplate-strip store inherits the passage store's guarantees:
-    (a) a crash between the two sinks (corpus written, fp-index
-    partition torn) heals on checkpoint restart — the replayed batch
-    reproduces its first attempt (own-partition exclusion) and later
-    batches see correct scoped counts; (b) a compact_streaming_index
-    fold of the (scope, fp) index preserves the duplicate decision for
-    a post-fold batch."""
-    import os
-    import shutil
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        compact_streaming_index,
-    )
-    from commercepulse_data_pipeline_spark.streaming.passages import (
-        boilerplate_strip_batch,
-    )
-
-    tpl = "one two three four five six seven eight"
-    drops = tmp_path / "drops"
-    drops.mkdir()
-    batches = [
-        [(1, "A", f"first arrival carries {tpl} today")],
-        [(2, "A", f"second arrival repeats {tpl} again")],
-        [(3, "A", f"third arrival also has {tpl} inside")],
-    ]
-    schema = "doc_id long, source string, text string"
-    for i, rows in enumerate(batches):
-        pq.write_table(
-            pa.table({
-                "doc_id": pa.array([r[0] for r in rows], type=pa.int64()),
-                "source": [r[1] for r in rows],
-                "text": [r[2] for r in rows],
-            }),
-            str(drops / f"d{i}.parquet"),
-        )
-        os.utime(str(drops / f"d{i}.parquet"),
-                 (time.time() - 60 + i, time.time() - 60 + i))
-
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def crashing(bdf, bid):
-        boilerplate_strip_batch(bdf, bid, store)
-        if bid == 1:
-            shutil.rmtree(f"{store}/fp_index/ingest_batch=1")
-            raise RuntimeError("injected crash before checkpoint commit")
-
-    def start(fn):
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(drops))
-            .writeStream.foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = start(crashing)
-    with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination(120)
-    # restart: batch 1 replays (healing its torn index partition), batch
-    # 2 then sees counts from batches 0+1
-    q2 = start(lambda bdf, bid: boilerplate_strip_batch(bdf, bid, store))
-    q2.awaitTermination(120)
-    texts = {r["doc_id"]: r["text"]
-             for r in spark.read.parquet(f"{store}/corpus").collect()}
-    assert tpl in texts[1]        # pre-threshold batch stays as landed
-    assert tpl not in texts[2]    # threshold crossed at batch 1's replay
-    assert tpl not in texts[3]
-    assert os.path.isdir(f"{store}/fp_index/ingest_batch=1")  # healed
-
-    # fold the scoped index; a post-fold batch still strips
-    compact_streaming_index(spark, f"{store}/fp_index", keep_latest=0)
-    boilerplate_strip_batch(
-        spark.createDataFrame(
-            [(4, "A", f"post fold arrival with {tpl} too")], schema
-        ),
-        9, store,
-    )
-    t4 = spark.read.parquet(f"{store}/corpus/ingest_batch=9").head()
-    assert tpl not in t4["text"] and t4["n_tokens_removed"] == 8
 
 
 def test_streaming_modelfree_neardup_via_hashed_vectors(spark, tmp_path):
