@@ -1180,10 +1180,9 @@ def q_revenue_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding Gram matrix upper triangle
     (``operators/similarity.py::embedding_gram`` — r8): the one-pass
-    n·d² statistic feeding PCA/whitening (``pca_components`` eigh-solves
-    the collected d×d triangle driver-side — bounded — and
-    ``project_embeddings`` is a codegen fold, pytest-tier). Products are
-    single IEEE multiplies, sums DECIMAL-accumulated → the whole matrix
+    n·d² statistic a PCA/whitening step would eigh-solve driver-side from
+    the collected (bounded) d×d triangle. Products are single IEEE
+    multiplies, sums DECIMAL-accumulated → the whole matrix
     hash-replays in DuckDB."""
     e = _t(spark, sf_dir, "embeddings")
     return sim.embedding_gram(e, "embedding")
@@ -1206,7 +1205,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — r8): exact group-size quantiles at integer inverted-CDF ranks,
     max/p50 skew ratio, the recommended salt width, and the top-3
     heaviest keys, for lineitem's order and part keys — the MEASURE step
-    that justifies (or spares) salted_agg/salted_join at 100 TB. All
+    that justifies (or spares) salted_agg at 100 TB. All
     integer/4-dp-double arithmetic over distinct keys → replays exactly
     in the DuckDB oracle."""
     from commercepulse_data_pipeline_spark.operators import skew as sk_ops

@@ -262,8 +262,7 @@ def cmd_train_quality(args) -> int:
             f"train-quality: --label-col {args.label_col!r} not in "
             f"{sorted(labeled.columns)}"
         )
-    multiclass = bool(getattr(args, "multiclass", False))
-    if multiclass:
+    if args.multiclass:
         model = clf.nb_train_multiclass(
             labeled, text_col=args.text_col, label_col=args.label_col,
             n_buckets=args.n_buckets, salt=args.salt,
@@ -275,11 +274,11 @@ def cmd_train_quality(args) -> int:
         )
     clf.write_model(
         model, args.out, n_buckets=args.n_buckets, salt=args.salt,
-        kind="nb-multiclass-v1" if multiclass else "nb-binary-v1",
+        kind="nb-multiclass-v1" if args.multiclass else "nb-binary-v1",
         provenance={"label_col": args.label_col, "docs": args.docs},
     )
     n = labeled.count()
-    if multiclass:
+    if args.multiclass:
         k = labeled.where(F.col(args.label_col).isNotNull()).select(
             args.label_col
         ).distinct().count()
@@ -544,14 +543,13 @@ def cmd_media_dedup(args) -> int:
 
     spark = _spark()
     media = spark.read.parquet(args.media)
-    keep_degenerate = getattr(args, "keep_degenerate", False)
     if args.modality == "video":
         frames = mm.video_frame_hashes(
             media, max_frames=args.max_frames
         ).localCheckpoint(eager=True)
         n_bad = frames.where(F.col("err").isNotNull()).count()
         vsig = args.sig if args.sig != "ehash" else "ahash"
-        if not keep_degenerate:
+        if not args.keep_degenerate:
             frames = dd.drop_degenerate_sigs(frames, sig_col=vsig)
         occ_sigs = mm._frame_sig_table(frames, vsig).withColumnRenamed(
             "fid", "media_id"
@@ -571,7 +569,7 @@ def cmd_media_dedup(args) -> int:
             sig = "ehash"
         n_bad = hashes.where(F.col("err").isNotNull()).count()
         sigs = hashes.where(F.col(sig).isNotNull()).select("media_id", sig)
-        if not keep_degenerate:
+        if not args.keep_degenerate:
             sigs = dd.drop_degenerate_sigs(sigs, sig_col=sig)
         occ_sigs = sigs.select("media_id", F.col(sig).alias("sig"))
         pairs = dd.sig_hamming_pairs(
@@ -646,6 +644,20 @@ def cmd_cluster_table(args) -> int:
         )
     spark = _spark()
     docs = spark.read.parquet(args.docs)
+
+    def confirmed(pairs):
+        # --confirm-embeddings: keep only the pairs whose embeddings agree
+        if not args.confirm_embeddings:
+            return pairs
+        from commercepulse_data_pipeline_spark.operators.similarity import score_pairs
+
+        emb = spark.read.parquet(args.confirm_embeddings)
+        return (
+            score_pairs(pairs, emb)
+            .where(F.col("cosine_sim") >= args.confirm_tau)
+            .select("id_a", "id_b")
+        )
+
     if args.update:
         # incremental ingest: the batch probes the persisted index
         # (O(batch) banding + a key-restricted index scan, appending its
@@ -653,21 +665,10 @@ def cmd_cluster_table(args) -> int:
         # table via merge_cluster_update — per-batch cost is
         # batch-proportional on BOTH stages; neither the corpus nor its
         # pair graph is ever re-derived
-        pairs = dd.minhash_pairs_incremental(
+        pairs = confirmed(dd.minhash_pairs_incremental(
             docs, spark, args.index,
             max_bucket=args.max_bucket, update_index=True,
-        )
-        if args.confirm_embeddings:
-            from commercepulse_data_pipeline_spark.operators import (
-                similarity as _simc,
-            )
-
-            emb = spark.read.parquet(args.confirm_embeddings)
-            pairs = (
-                _simc.score_pairs(pairs, emb)
-                .where(F.col("cosine_sim") >= args.confirm_tau)
-                .select("id_a", "id_b")
-            )
+        ))
         graph.update_cluster_table(spark, args.out, pairs)
         stats = graph.read_cluster_table(spark, args.out).agg(
             F.count(F.lit(1)).alias("n"),
@@ -679,7 +680,7 @@ def cmd_cluster_table(args) -> int:
         )
         return 0
     bands_df = None
-    if getattr(args, "report_occupancy", False):
+    if args.report_occupancy:
         # occupancy under EXACTLY the banding keys + cap the pair stage
         # uses (r15 guard): a band bucket past --max-bucket drops
         # WHOLESALE — surface it instead of letting "few clusters" read
@@ -733,17 +734,8 @@ def cmd_cluster_table(args) -> int:
         "max_bucket": args.max_bucket, "docs": args.docs,
         "index": args.index,
     }
+    pairs = confirmed(pairs)
     if args.confirm_embeddings:
-        from commercepulse_data_pipeline_spark.operators import (
-            similarity as _simc,
-        )
-
-        emb = spark.read.parquet(args.confirm_embeddings)
-        pairs = (
-            _simc.score_pairs(pairs, emb)
-            .where(F.col("cosine_sim") >= args.confirm_tau)
-            .select("id_a", "id_b")
-        )
         provenance.update(
             {"confirm_embeddings": args.confirm_embeddings,
              "confirm_tau": args.confirm_tau}

@@ -54,7 +54,7 @@ REF_REFUND_TYPES = ["historical_refund", "refund_created", "refund_processed"]
 POS_COL = "ingest_pos"
 
 
-def read_events_with_pos(spark: SparkSession, path: str, source: str = "live_stream") -> DataFrame:
+def read_events_with_pos(spark: SparkSession, path: str) -> DataFrame:
     """JSONL scan carrying ingestion position (file order) for the
     reference's tie-break semantics.
 
@@ -81,7 +81,7 @@ def read_events_with_pos(spark: SparkSession, path: str, source: str = "live_str
         valid_events,
     )
 
-    raw = read_jsonl_events(spark, path, source=source)
+    raw = read_jsonl_events(spark, path)
     good = (
         valid_events(raw)
         .withColumn("__file", F.input_file_name())
@@ -144,11 +144,11 @@ def _dedup_ref(df: DataFrame, key: str, order_col: str | None) -> DataFrame:
     )
 
 
-def normalize_orders_ref(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+def normalize_orders_ref(events: DataFrame) -> DataFrame:
     """fact_orders, reference-exact (src/transformer.py:20-41): vendor_b
     keys only (Q2), plain ``payload.get`` (no falsy skip), NULL ids kept,
     last-writer-wins with the NaT-first/keep-last ordering."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     df = events.where(F.col("event_type").isin(REF_ORDER_TYPES)).select(
         F.get_json_object(p, "$.order_id").alias("order_id"),
         F.get_json_object(p, "$.customerId").alias("customer_id"),
@@ -185,11 +185,11 @@ _REF_REFUND_KEYS = {
 }
 
 
-def normalize_payments_ref(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+def normalize_payments_ref(events: DataFrame) -> DataFrame:
     """fact_payments, reference-exact (src/transformer.py:44-89):
     falsy-skipping ``or``-chains, NULL payment_ids kept (and collapsed to
     one row), keep-FIRST in ingestion order."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     k = {out: json_keys(p, cands, skip_falsy=True) for out, cands in _REF_PAYMENT_KEYS.items()}
     df = events.where(F.col("event_type").isin(REF_PAYMENT_TYPES)).select(
         k["payment_id"].alias("payment_id"),
@@ -205,11 +205,11 @@ def normalize_payments_ref(events: DataFrame, payload_col: str = "payload") -> D
     return _dedup_ref(df, "payment_id", None)
 
 
-def normalize_refunds_ref(events: DataFrame, payload_col: str = "payload") -> DataFrame:
+def normalize_refunds_ref(events: DataFrame) -> DataFrame:
     """fact_refunds, reference-exact (src/transformer.py:92-127):
     ``refund_type`` comes from the PAYLOAD (type|refund_type), not the
     event type; NULL refund_ids collapse to one row; keep-first."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     k = {out: json_keys(p, cands, skip_falsy=True) for out, cands in _REF_REFUND_KEYS.items()}
     df = events.where(F.col("event_type").isin(REF_REFUND_TYPES)).select(
         k["refund_id"].alias("refund_id"),
@@ -233,7 +233,7 @@ def build_fact_order_daily_ref(
     gross includes failed payments (Q3), paid_count counts successful
     PAYMENTS (not orders), NULL-date orders silently dropped (Q5)."""
     return build_fact_order_daily(
-        orders, payments, refunds, revenue_all_statuses=True, paid_count_per_payment=True
+        orders, payments, refunds, paid_count_per_payment=True
     )
 
 

@@ -75,7 +75,7 @@ def numeric_or_zero(col: Column) -> Column:
     return F.coalesce(col.try_cast("double"), F.lit(0.0))
 
 
-def safe_divide(num: Column, den: Column, scale: int | None = 4) -> Column:
-    """NULL on zero/NULL denominator (reference F10, src/transformer.py:150-151)."""
-    out = F.when(den > 0, num / den)
-    return F.round(out, scale) if scale is not None else out
+def safe_divide(num: Column, den: Column) -> Column:
+    """NULL on zero/NULL denominator, rounded to 4 places (reference F10,
+    src/transformer.py:150-151)."""
+    return F.round(F.when(den > 0, num / den), 4)

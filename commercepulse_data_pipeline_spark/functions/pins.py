@@ -6,27 +6,23 @@ fan-out consumers stop re-executing the expensive lineage above them.
 ``localCheckpoint`` is the right single-node / trusted-executor default —
 cheapest cut, no external storage — but it is NOT fault-tolerant: blocks
 live only on executors, and on a preemptible-executor cluster losing one
-AFTER the pin fails the job instead of recomputing. ``connected_components``
-already exposes a reliable ``checkpoint_dir=`` knob per call; threading a
-kwarg through every report operator would churn ten API signatures for a
-deployment-level decision, so the knob here is a MODULE-LEVEL POLICY: call
+AFTER the pin fails the job instead of recomputing. Threading a kwarg
+through every operator would churn API signatures for a deployment-level
+decision, so the knob here is a MODULE-LEVEL POLICY: call
 :func:`set_pin_policy` once at session setup and every pin site in the
-library switches to reliable ``DataFrame.checkpoint`` into that directory.
+library — ``connected_components``' per-round cuts included — switches to
+reliable ``DataFrame.checkpoint`` into that directory.
 
 Reliable checkpoints are ALWAYS eager regardless of the site's ``eager``
 argument — a lazy reliable checkpoint recomputes the whole plan a second
 time when the file is saved after the first job (the r15 rule, measured in
 ``connected_components``). Lifecycle of the checkpoint files is the
-CALLER's, exactly as documented on ``connected_components``: Spark never
-deletes reliable checkpoint files; delete the directory when the session's
-results are materialized.
+CALLER's: Spark never deletes reliable checkpoint files, and every
+connected-components round keeps its copy of the label state; delete the
+directory when the session's results are materialized.
 
 The policy points the SparkContext's checkpoint dir at its directory once,
-in :func:`set_pin_policy`; :func:`pin` never touches it. That dir is
-SparkContext-global and SHARED with ``connected_components(
-checkpoint_dir=)``, which repoints it at a per-call subdirectory of its own
-argument: pins run after such a call write there (still a reliable
-location). Call :func:`set_pin_policy` again to point it back.
+in :func:`set_pin_policy`; :func:`pin` never touches it.
 
 The default policy (no directory) is byte-for-byte the prior behaviour:
 ``localCheckpoint(eager=...)`` with each site's measured eager/lazy choice

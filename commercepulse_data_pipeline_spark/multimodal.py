@@ -92,15 +92,18 @@ class DeterministicFakeDecoder:
         }
 
 
-def _feature_from_bytes(data: bytes, bins: int = 8) -> list[float]:
-    """bins-dim content summary: mean byte value per contiguous stripe,
+_FEATURE_BINS = 8
+
+
+def _feature_from_bytes(data: bytes) -> list[float]:
+    """``_FEATURE_BINS``-dim content summary: mean byte value per contiguous stripe,
     normalized to [0, 1]. Cheap, deterministic, library-free."""
     if not data:
-        return [0.0] * bins
+        return [0.0] * _FEATURE_BINS
     n = len(data)
     out = []
-    for i in range(bins):
-        lo, hi = (i * n) // bins, ((i + 1) * n) // bins
+    for i in range(_FEATURE_BINS):
+        lo, hi = (i * n) // _FEATURE_BINS, ((i + 1) * n) // _FEATURE_BINS
         chunk = data[lo:hi] or data[lo : lo + 1]
         out.append(sum(chunk) / (len(chunk) * 255.0) if chunk else 0.0)
     return out
@@ -1907,10 +1910,6 @@ AHASH_SCHEMA = T.StructType(
 
 def image_ahash(
     media: DataFrame,
-    *,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    batch_rows: int = 64,
 ) -> DataFrame:
     """Perceptual aHash per image row, Arrow-batched (mapInPandas — the
     sanctioned Python path; binary payloads never convert row-at-a-time).
@@ -1919,15 +1918,12 @@ def image_ahash(
     Output joins the text near-dup machinery directly:
     ``dedup.sig_hamming_pairs(image_ahash(media).where("ahash is not
     null"), id_col="media_id", sig_col="ahash")``."""
-    src = media.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(content_col).alias("content"),
-    )
+    src = media.select(F.col("media_id").cast("string").alias("media_id"), "content")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        for pdf in _chunked(batches, batch_rows):
+        for pdf in _chunked(batches, 64):
             out = []
             for _, row in pdf.iterrows():
                 rec = {
@@ -2058,10 +2054,7 @@ FRAME_HASH_SCHEMA = T.StructType(
 def video_frame_hashes(
     media: DataFrame,
     *,
-    id_col: str = "media_id",
-    content_col: str = "content",
     max_frames: int = 16,
-    batch_rows: int = 16,
 ) -> DataFrame:
     """Per-frame perceptual signature rows for the video near-dup tier,
     Arrow-batched: one output row per decoded frame (media_id,
@@ -2072,15 +2065,12 @@ def video_frame_hashes(
     video — mixed feeds need no routing); undecodable payloads yield a
     single tolerant err row. Output feeds
     ``dedup.sig_hamming_pairs``/``video_neardup_pairs`` directly."""
-    src = media.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(content_col).alias("content"),
-    )
+    src = media.select(F.col("media_id").cast("string").alias("media_id"), "content")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        for pdf in _chunked(batches, batch_rows):
+        for pdf in _chunked(batches, 16):
             out = []
             for _, row in pdf.iterrows():
                 content = bytes(row["content"]) if row["content"] is not None else b""
@@ -2344,10 +2334,6 @@ AUDIO_HASH_SCHEMA = T.StructType(
 
 def audio_hash(
     media: DataFrame,
-    *,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    batch_rows: int = 32,
 ) -> DataFrame:
     """Per-row audio energy-envelope hash, Arrow-batched — the audio
     sibling of :func:`image_ahash`. Undecodable payloads yield
@@ -2355,15 +2341,12 @@ def audio_hash(
     machinery directly: ``dedup.sig_hamming_pairs(audio_hash(media)
     .where("ehash is not null"), id_col="media_id", sig_col="ehash")``
     is audio near-dup dedup."""
-    src = media.select(
-        F.col(id_col).cast("string").alias("media_id"),
-        F.col(content_col).alias("content"),
-    )
+    src = media.select(F.col("media_id").cast("string").alias("media_id"), "content")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        for pdf in _chunked(batches, batch_rows):
+        for pdf in _chunked(batches, 32):
             out = []
             for _, row in pdf.iterrows():
                 rec = {

@@ -34,11 +34,11 @@ def _symbols(word: Column) -> Column:
     return F.concat(F.split(word, ""), F.array(F.lit(END)))
 
 
-def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(df: DataFrame) -> DataFrame:
     """(word, freq) over the corpus — the ONE corpus-sized pass; every
     BPE iteration afterwards runs on this much smaller table."""
     return (
-        df.select(F.explode_outer(tokens(F.col(text_col))).alias("word"))
+        df.select(F.explode_outer(tokens(F.col("text"))).alias("word"))
         .where(F.col("word").isNotNull() & (F.col("word") != ""))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -62,11 +62,11 @@ def _adjacent_pairs(syms: Column) -> Column:
     )
 
 
-def pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pair_counts(df: DataFrame) -> DataFrame:
     """Adjacent-symbol pair counts weighted by word frequency —
     BPE round-0 statistics as (a, b, n_pairs). One corpus scan, one
     word-key shuffle, one pair-key shuffle, both map-side combined."""
-    wf = word_freqs(df, text_col)
+    wf = word_freqs(df)
     return (
         wf.select(F.explode(_adjacent_pairs(_symbols(F.col("word")))).alias("p"), "freq")
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))

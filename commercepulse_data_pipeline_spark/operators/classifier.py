@@ -87,7 +87,6 @@ def nb_train(
     *,
     text_col: str = "text",
     label_col: str = "label",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
     salt: str = "nbq-v1:",
 ) -> DataFrame:
@@ -102,7 +101,7 @@ def nb_train(
     lab = F.when(
         F.col(label_col).cast("boolean").eqNullSafe(F.lit(True)), F.lit(1)
     ).otherwise(F.lit(0))
-    docs = labeled.select(F.col(id_col), F.col(text_col), lab.alias("__lab"))
+    docs = labeled.select(F.col("doc_id"), F.col(text_col), lab.alias("__lab"))
 
     feats = hashed_features(
         docs, text_col=text_col, id_cols=["__lab"],
@@ -177,7 +176,6 @@ def nb_train_on_features(
     feats: DataFrame,
     labeled_docs: DataFrame,
     *,
-    label_col: str = "label",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Train the binary NB model from a PRE-BUILT hashed-feature frame —
@@ -190,8 +188,8 @@ def nb_train_on_features(
     exactly once instead of 1.5× (train half + full-corpus score).
 
     ``feats``: hashed_features output restricted to the TRAINING rows,
-    carrying ``label_col`` (truthy/1 = positive) and ``__b``.
-    ``labeled_docs``: the doc-LEVEL (…, label_col) frame the prior
+    carrying ``label`` (truthy/1 = positive) and ``__b``.
+    ``labeled_docs``: the doc-LEVEL (…, label) frame the prior
     counts come from. ``n_buckets`` must match the feats build (it also
     enters the smoothing denominator). Output and arithmetic are
     bit-identical to :func:`nb_train` on the same training rows.
@@ -203,7 +201,7 @@ def nb_train_on_features(
     :func:`nb_train`/:func:`nb_score` composition."""
     spark = feats.sparkSession
     lab = F.when(
-        F.col(label_col).cast("boolean").eqNullSafe(F.lit(True)), F.lit(1)
+        F.col("label").cast("boolean").eqNullSafe(F.lit(True)), F.lit(1)
     ).otherwise(F.lit(0))
     f = feats.select(lab.alias("__lab"), F.col("__b"))
     docs = labeled_docs.select(lab.alias("__lab"))
@@ -224,26 +222,24 @@ def nb_score(
     df: DataFrame,
     model: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
     salt: str = "nbq-v1:",
     feats: DataFrame | None = None,
 ) -> DataFrame:
     """Score every document under a trained model (``n_buckets``/``salt``
     MUST match training — :func:`read_model` returns them). Returns one
-    row per input doc: (id_col, n_feats, nb_logodds double rounded 4dp,
+    row per input doc: (doc_id, n_feats, nb_logodds double rounded 4dp,
     predicted int 0/1). Zero-feature docs score the prior alone; the
     prediction compares the EXACT decimal total with zero.
 
     ``feats``: a PRE-BUILT hashed-feature frame for ``df``'s rows
-    (columns ``id_col``, ``__b`` — see :func:`nb_train_on_features` for
-    the shared-explode pattern); when given, ``text_col``/``salt`` are
+    (columns ``doc_id``, ``__b`` — see :func:`nb_train_on_features` for
+    the shared-explode pattern); when given, ``text``/``salt`` are
     unused and ``df`` only supplies the id list (so zero-feature docs
     still score the prior)."""
     if feats is None:
         feats = hashed_features(
-            df, text_col=text_col, id_cols=[id_col],
+            df, id_cols=["doc_id"],
             n_buckets=n_buckets, salt=salt,
         )
     w = model.where(F.col("bucket") >= 0)
@@ -252,7 +248,7 @@ def nb_score(
     )
     sums = (
         feats.join(F.broadcast(w), feats["__b"] == w["bucket"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("__nf"),
             F.sum("weight").alias("__sw"),
@@ -261,11 +257,11 @@ def nb_score(
     zero = F.lit(0).cast("decimal(30,4)")
     total = F.coalesce(F.col("__sw"), zero) + F.col("__bias")
     return (
-        df.select(id_col)
-        .join(sums, id_col, "left")
+        df.select("doc_id")
+        .join(sums, "doc_id", "left")
         .crossJoin(F.broadcast(bias))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("__nf"), F.lit(0)).cast("long").alias("n_feats"),
             F.round(total.cast("double"), 4).alias("nb_logodds"),
             F.when(total > 0, F.lit(1)).otherwise(F.lit(0))
@@ -280,7 +276,6 @@ def nb_train_multiclass(
     *,
     text_col: str = "text",
     label_col: str = "label",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
     salt: str = "nbq-v1:",
 ) -> DataFrame:
@@ -295,7 +290,7 @@ def nb_train_multiclass(
     broadcast by :func:`nb_score_multiclass`."""
     spark = labeled.sparkSession
     docs = labeled.where(F.col(label_col).isNotNull()).select(
-        F.col(id_col), F.col(text_col),
+        F.col("doc_id"), F.col(text_col),
         F.col(label_col).cast("string").alias("__lab"),
     )
     feats = hashed_features(
@@ -372,22 +367,18 @@ def nb_score_multiclass(
     df: DataFrame,
     model: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
-    salt: str = "nbq-v1:",
 ) -> DataFrame:
     """Score every doc under a multiclass model: per-class log score =
     class prior + Σ_f weight(class, bucket(f)), argmax over classes
     with the deterministic tie-break (greatest exact decimal score,
     then LEXICOGRAPHICALLY GREATEST label — the ``detect_language``
-    argmax convention). Returns (id_col, predicted_label, score double
+    argmax convention). Returns (doc_id, predicted_label, score double
     4dp, n_feats); zero-feature docs get the prior argmax. One feature
     explode + one broadcast join (K rows per feature) + one (doc,
     class)-keyed aggregation — no corpus-sized state anywhere."""
     feats = hashed_features(
-        df, text_col=text_col, id_cols=[id_col],
-        n_buckets=n_buckets, salt=salt,
+        df, id_cols=["doc_id"], n_buckets=n_buckets,
     )
     w = model.where(F.col("bucket") >= 0)
     bias = model.where(F.col("bucket") == _BIAS_BUCKET).select(
@@ -395,7 +386,7 @@ def nb_score_multiclass(
     )
     per = (
         feats.join(F.broadcast(w), feats["__b"] == w["bucket"])
-        .groupBy(id_col, "label")
+        .groupBy("doc_id", "label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("__nf"),
             F.sum("weight").alias("__sw"),
@@ -404,10 +395,10 @@ def nb_score_multiclass(
     zero = F.lit(0).cast("decimal(30,4)")
     total = F.coalesce(F.col("__sw"), zero) + F.col("__bias")
     best = (
-        df.select(id_col)
+        df.select("doc_id")
         .crossJoin(F.broadcast(bias))
-        .join(per, [id_col, "label"], "left")
-        .groupBy(id_col)
+        .join(per, ["doc_id", "label"], "left")
+        .groupBy("doc_id")
         .agg(
             F.max(
                 F.struct(
@@ -419,7 +410,7 @@ def nb_score_multiclass(
         )
     )
     return best.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("b.lab").alias("predicted_label"),
         F.round(F.col("b.s").cast("double"), 4).alias("score"),
         F.col("b.nf").cast("long").alias("n_feats"),

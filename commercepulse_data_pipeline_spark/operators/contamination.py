@@ -40,29 +40,27 @@ def ngram_contamination(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    probe_text_col: str | None = None,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Per-corpus-doc overlap against the probe set's shingle vocabulary.
 
     Returns (id_col, set_size, hits, contamination) where ``contamination``
     = hits / set_size over the doc's DISTINCT shingles. Docs too short to
-    have any ``shingle_n``-gram are omitted (no denominator).
+    have any word 3-gram are omitted (no denominator). Probes and corpus
+    both read ``text_col``.
     """
-    probe_text_col = probe_text_col or text_col
     # explode_outer + null-filter on both sides: a plain explode's
     # inferred non-empty filter re-runs the shingle construction once more
     # per row (see functions/expr.py); shingle elements are never NULL
     probe_vocab = F.broadcast(
         probes.select(
-            F.explode_outer(word_shingles(F.col(probe_text_col), shingle_n)).alias("shingle")
+            F.explode_outer(word_shingles(F.col(text_col), 3)).alias("shingle")
         )
         .where(F.col("shingle").isNotNull())
         .distinct()
     )
     doc_sh = corpus.select(
         F.col(id_col),
-        F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("shingle"),
+        F.explode_outer(word_shingles(F.col(text_col), 3)).alias("shingle"),
     ).where(F.col("shingle").isNotNull())
     hits = (
         doc_sh.join(probe_vocab, "shingle", "left_semi")
@@ -71,7 +69,7 @@ def ngram_contamination(
     )
     sizes = corpus.select(
         F.col(id_col),
-        F.size(word_shingles(F.col(text_col), shingle_n)).alias("set_size"),
+        F.size(word_shingles(F.col(text_col), 3)).alias("set_size"),
     ).where(F.col("set_size") > 0)
     return (
         sizes.join(hits, id_col, "left")
@@ -90,9 +88,6 @@ def scrub_contamination(
     corpus: DataFrame,
     probes: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    probe_text_col: str | None = None,
     window_tokens: int = 8,
 ) -> DataFrame:
     """Decontamination CORRECTION (the acting sibling of
@@ -114,25 +109,24 @@ def scrub_contamination(
     fp) rows — corpus text never moves for detection. The only
     corpus-sized shuffle is the final doc-keyed join of the (typically
     tiny) contaminated-position lists back onto the text; pre-bucket the
-    corpus by ``id_col`` to co-locate it. Occurrences and the splice go
+    corpus by ``doc_id`` to co-locate it. Occurrences and the splice go
     through the shared ``text.window_occurrences`` /
     ``text.splice_windows`` routine, like ``dedup_passages``."""
-    probe_text_col = probe_text_col or text_col
     probe_vocab = F.broadcast(
         probes.select(
             F.explode_outer(
-                rolling_fingerprints(F.col(probe_text_col), window_tokens)
+                rolling_fingerprints(F.col("text"), window_tokens)
             ).alias("__fp")
         )
         .where(F.col("__fp").isNotNull())
         .distinct()
     )
     staged, occ = window_occurrences(
-        corpus, doc_col=id_col, text_col=text_col, window_tokens=window_tokens
+        corpus, doc_col="doc_id", text_col="text", window_tokens=window_tokens
     )
     return splice_windows(
         staged,
         occ.join(probe_vocab, "__fp", "left_semi"),
-        doc_col=id_col, window_tokens=window_tokens, keep=corpus.columns,
+        doc_col="doc_id", window_tokens=window_tokens, keep=corpus.columns,
         text_out="text_scrubbed", windows_out="n_probe_windows",
     )

@@ -100,7 +100,7 @@ def html_stage(html_col: str) -> Stage:
     (+5.6 s on the 20k-doc chain probe)."""
 
     def fn(df):
-        extracted = tx.html_extract(df, html_col, "doc_id").select("doc_id", "text")
+        extracted = tx.html_extract(df, html_col).select("doc_id", "text")
         return df.drop("text", html_col).join(extracted, "doc_id")
 
     return Stage(None, fn, pin=True)
@@ -257,7 +257,7 @@ def _near_dup_stage(args, spark) -> Stage:
             # knn_join_self consumes its corpus three times and the tfidf
             # build is a multi-shuffle lineage: cut it once
             vecs = (
-                tx.hashed_doc_vectors(exact, "text", "doc_id", dim=64, weighting="tfidf")
+                tx.hashed_doc_vectors(exact, dim=64, weighting="tfidf")
                 .select(F.col("doc_id").alias("vec_id"), F.col("vector").alias("embedding"))
                 .localCheckpoint(eager=True)
             )

@@ -14,19 +14,16 @@ repeated until a fixpoint. Convergence is O(graph diameter) rounds — for
 near-dup graphs (dense clique-ish clusters from banding) the diameter is
 tiny (2-4), so this beats the O(log n) large-star/small-star variant in
 practice while keeping every round a plain shuffle-on-key join + groupBy
-min. At truly adversarial diameters (long chains of pairwise-similar
-docs), pass ``algorithm="star"`` for two-phase large-star/small-star
-contraction (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14) — logarithmic rounds regardless of diameter.
+min. The loop runs at most ``MAX_ROUNDS`` rounds and raises past that.
 
 100 TB posture per round: one shuffle to join labels onto edges, one
 aggregation for neighbor-min, one join to merge — all keyed on node id
 (uniform if ids are). Lineage is truncated each round so the plan doesn't
-grow exponentially with iterations: ``localCheckpoint`` by default
-(single-node / trusted executors), or pass ``checkpoint_dir=`` for a
-reliable HDFS/S3 checkpoint that survives executor loss — the setting a
-preemptible-executor cluster needs. The driver holds ONE scalar per round
-(the changed count, needed for the fixpoint test) — no data ever collects.
+grow exponentially with iterations; every cut goes through
+``functions.pins.pin``, so ``set_pin_policy`` is the one switch between
+``localCheckpoint`` and a reliable checkpoint. The driver holds ONE scalar
+per round (the changed count, needed for the fixpoint test) — no data ever
+collects.
 """
 
 from __future__ import annotations
@@ -35,82 +32,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
+from commercepulse_data_pipeline_spark.functions.pins import pin
+
+# hash-to-min loop rounds after the fused first one: graphs of diameter
+# up to this converge, larger ones make connected_components raise
+MAX_ROUNDS = 25
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    *,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-    algorithm: str = "hash_to_min",
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:
     """(node, component) for every node in ``edges``; ``component`` is the
-    minimum node id reachable from the node. Raises if the fixpoint is not
-    reached within ``max_iter`` rounds (raise it for high-diameter graphs).
-    Note (ADVICE r15): the fused round-0 init performs one propagation
-    round BEFORE the loop, so the effective budget is ``max_iter + 1``
-    hash-to-min rounds — the non-convergence error fires one diameter
-    step later than a pre-r15 caller tuning ``max_iter`` against graph
-    diameter would expect.
-
-    ``algorithm``: ``"hash_to_min"`` (default) converges in O(diameter)
-    rounds — fastest for the dense clique-ish clusters near-dup banding
-    produces. ``"star"`` is large-star/small-star contraction —
-    logarithmic rounds regardless of diameter, the safe choice when the
-    pair graph may contain long chains (A≈B≈C≈… with A̸≈C).
-
-    ``checkpoint_dir``: by default each round truncates lineage with
-    ``localCheckpoint`` (fast, but checkpointed partitions live on executor
-    local storage and are LOST if an executor dies — fine single-node /
-    on-heap, wrong on a preemptible-executor cluster). Pass a reliable
-    (HDFS/S3) directory and each round writes a fault-tolerant
-    ``checkpoint`` instead — the 100 TB posture. Lifecycle is the
-    CALLER's: Spark never deletes reliable checkpoint files, and every
-    round keeps its copy of the label state, so a run accumulates
-    O(rounds) dataset copies under a per-invocation subdirectory of
-    ``checkpoint_dir`` — delete ``checkpoint_dir`` after materializing
-    the result. ``setCheckpointDir`` is SparkContext-global: concurrent
-    invocations on one session may interleave files across each other's
-    subdirs (results stay correct; cleanup is per the parent dir).
-    """
-    if algorithm not in ("hash_to_min", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        import uuid
-
-        spark.sparkContext.setCheckpointDir(
-            f"{checkpoint_dir.rstrip('/')}/cc-{uuid.uuid4().hex}"
-        )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    def _ckpt_lazy(df: DataFrame) -> DataFrame:
-        # Lazy variant for the loop body: the fixpoint test's aggregation
-        # is the FIRST action over each round's labels, so it both
-        # materializes the checkpoint and reads the changed count in ONE
-        # job — the eager form paid a separate materialization job per
-        # round (measured ~0.1-0.2s/round of pure scheduling at sf0.1,
-        # r15 optimization pass). Reliable checkpoints stay EAGER: a lazy
-        # RDD.checkpoint() recomputes the whole round a second time when
-        # the checkpoint file is saved after the first job — the
-        # one-extra-job cost is the cheaper side of that trade.
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=False)
-
-    if algorithm == "star":
-        return _star_components(edges, src, dst, max_iter=max_iter, ckpt=_ckpt)
-
+    minimum node id reachable from the node. The fused round-0 init
+    propagates one hop and every loop round one more, and the last round
+    only confirms the fixpoint, so a graph converges when its diameter is
+    at most ``MAX_ROUNDS``; past that this raises."""
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    sym = _ckpt(sym)
+    sym = pin(sym)
 
     # Round 0 fused into initialization (r15 optimization pass): the first
     # hash-to-min round over identity labels computes exactly
@@ -120,13 +58,13 @@ def connected_components(
     # join+groupBy+join round trip; min-label propagation is monotone, so
     # starting from this partially-propagated state reaches the identical
     # unique fixpoint: label(v) = min id reachable from v).
-    labels = _ckpt(
+    labels = pin(
         sym.groupBy(F.col("u").alias("node"))
         .agg(F.min("v").alias("__mn"))
         .select("node", F.least(F.col("node"), F.col("__mn")).alias("label"))
     )
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         nbr_min = (
             sym.join(labels, sym["v"] == labels["node"])
             .groupBy("u")
@@ -142,94 +80,19 @@ def connected_components(
                 .alias("__changed"),
             )
         )
-        merged = _ckpt_lazy(merged)
+        # lazy: the fixpoint test's aggregation is the FIRST action over
+        # each round's labels, so it both materializes the pin and reads
+        # the changed count in ONE job (r15: the eager form paid a
+        # separate materialization job per round). A reliable pin policy
+        # checkpoints eagerly regardless.
+        merged = pin(merged, eager=False)
         changed = merged.agg(F.sum("__changed")).head()[0] or 0
         labels = merged.drop("__changed")
         if changed == 0:
             return labels.select("node", F.col("label").alias("component"))
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "graph diameter exceeds max_iter; raise it or use algorithm='star'"
-    )
-
-
-def _star_components(
-    edges: DataFrame, src: str, dst: str, *, max_iter: int, ckpt
-) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., SoCC'14):
-    alternate
-
-        large-star(u): link every neighbor v > u to min(N(u) ∪ {u})
-        small-star(u): orient edges to the larger endpoint, link every
-                       smaller neighbor AND u itself to that min
-
-    until the edge set stops changing; the fixpoint is one star per
-    component rooted at its minimum id. Rounds are logarithmic in
-    component size REGARDLESS of diameter — the safe choice for chain-y
-    pair graphs where hash-to-min needs O(diameter) rounds.
-
-    Per round: two groupBy-min + two join-emit passes, all keyed on node
-    id, nothing collects. The fixpoint test reads one (count, hash-sum)
-    scalar pair per round and confirms the final equality with an exact
-    ``exceptAll`` check, so a hash collision can't end the loop early."""
-    nodes = (
-        edges.select(F.col(src).alias("n"))
-        .unionByName(edges.select(F.col(dst).alias("n")))
-        .distinct()
-    )
-
-    e = ckpt(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-    def large_star(cur: DataFrame) -> DataFrame:
-        sym = cur.unionByName(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("__mn"))
-        m = F.least(F.col("__mn"), F.col("u"))
-        return (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(cur: DataFrame) -> DataFrame:
-        o = cur.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        with_m = o.join(o.groupBy("u").agg(F.min("v").alias("__mn")), "u")
-        pairs = with_m.select(F.col("v").alias("u"), F.col("__mn").alias("v")).unionByName(
-            with_m.select("u", F.col("__mn").alias("v"))
-        )
-        return pairs.where(F.col("u") != F.col("v")).distinct()
-
-    def signature(cur: DataFrame) -> tuple:
-        row = cur.agg(
-            F.count(F.lit(1)).alias("c"),
-            # decimal sum: ANSI mode raises on long overflow, and 2^63-scale
-            # hash values overflow a long sum after a handful of rows
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).head()
-        return (row["c"], row["h"])
-
-    prev, prev_sig = e, signature(e)
-    for _ in range(max_iter):
-        cur = ckpt(small_star(large_star(prev)))
-        sig = signature(cur)
-        # isEmpty (take-1 probe), not limit(1).count(): a limit+count plan
-        # janino-compiles fresh classes on every execution (r16)
-        if sig == prev_sig and cur.exceptAll(prev).isEmpty():
-            labels = cur.groupBy("u").agg(F.min("v").alias("component")).select(
-                F.col("u").alias("node"), "component"
-            )
-            roots = nodes.join(labels, nodes["n"] == labels["node"], "left_anti").select(
-                F.col("n").alias("node"), F.col("n").alias("component")
-            )
-            return labels.unionByName(roots)
-        prev, prev_sig = cur, sig
-    raise RuntimeError(
-        f"star contraction did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {MAX_ROUNDS} rounds — "
+        "the graph's diameter exceeds the round budget"
     )
 
 
@@ -273,19 +136,11 @@ def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    *,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-    algorithm: str = "hash_to_min",
 ) -> DataFrame:
     """Near-dup clusters from a candidate-pair list: one row per clustered
     doc with its canonical (min-id) representative and the cluster size —
-    the "keep canonical, drop the rest" dedup decision table. Keyword
-    options pass through to ``connected_components``."""
-    cc = connected_components(
-        pairs, id_a, id_b,
-        max_iter=max_iter, checkpoint_dir=checkpoint_dir, algorithm=algorithm,
-    )
+    the "keep canonical, drop the rest" dedup decision table."""
+    cc = connected_components(pairs, id_a, id_b)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         cc.join(sizes, "component")
@@ -300,24 +155,14 @@ def dedup_clusters(
 def cluster_size_histogram(
     clusters: DataFrame,
     corpus: DataFrame | None = None,
-    *,
-    id_col: str = "doc_id",
-    member_col: str | None = None,
 ) -> DataFrame:
     """Dedup savings report: how much of the corpus sits in near-dup
     clusters of each size — one row per ``cluster_size`` with
     ``n_clusters`` and ``n_docs`` (keeping one canonical per cluster
     drops ``n_docs - n_clusters`` docs, the number this table exists to
     publish). Pass ``corpus`` to also count UNclustered docs as size-1
-    singletons, so ``sum(n_docs)`` equals the whole corpus.
-
-    ``id_col`` names the corpus id column; ``member_col`` names the
-    cluster table's member column and DEFAULTS to ``id_col`` so a
-    non-default id renames both sides consistently (ADVICE r12: the
-    clusters side used to be hard-coded ``doc_id``, so a custom
-    ``id_col`` against a standard ``dedup_clusters`` table either
-    AnalysisException'd or miscounted singletons). A standard table with
-    a custom corpus id is ``member_col="doc_id"``.
+    singletons, so ``sum(n_docs)`` equals the whole corpus; both sides
+    key on ``doc_id``.
 
     Scale shape: the cluster table reduces to one row per ``cluster_id``
     first (map-side-combinable distinct on (cluster_id, cluster_size) —
@@ -325,7 +170,6 @@ def cluster_size_histogram(
     immaterial), then a cluster_size-keyed aggregate: kilobytes out
     regardless of corpus size. The optional singleton row is ONE
     left-anti count aggregate — no collect, no driver state."""
-    member = member_col if member_col is not None else id_col
     per_cluster = clusters.select("cluster_id", "cluster_size").dropDuplicates(
         ["cluster_id"]
     )
@@ -335,10 +179,8 @@ def cluster_size_histogram(
     )
     if corpus is not None:
         singles = (
-            corpus.select(F.col(id_col))
-            .join(
-                clusters.select(F.col(member).alias(id_col)), id_col, "left_anti"
-            )
+            corpus.select("doc_id")
+            .join(clusters.select("doc_id"), "doc_id", "left_anti")
             .agg(F.count(F.lit(1)).alias("n_clusters"))
             .where(F.col("n_clusters") > 0)
             .select(
@@ -375,7 +217,6 @@ def write_cluster_table(
     path: str,
     *,
     provenance: dict | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize a ``dedup_clusters`` result as the corpus's CLUSTER
     TABLE artifact: ``path/clusters`` parquet with the pinned
@@ -403,7 +244,7 @@ def write_cluster_table(
     (
         clusters.select(*_CLUSTER_TABLE_COLS)
         .repartition("cluster_id")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(f"{path}/clusters")
     )
     meta = {"schema": list(_CLUSTER_TABLE_COLS), "provenance": provenance or {}}
@@ -443,9 +284,6 @@ def dedup_savings_by_source(
     clusters: DataFrame,
     corpus: DataFrame,
     group_col: str = "source",
-    *,
-    id_col: str = "doc_id",
-    member_col: str | None = None,
 ) -> DataFrame:
     """Per-source dedup savings: for each ``group_col`` value, how many
     docs sit in near-dup clusters and how many the min-id keep policy
@@ -461,16 +299,11 @@ def dedup_savings_by_source(
     dup_frac (= n_dropped / n_docs, 6dp). Consumes either a live
     ``dedup_clusters`` frame or :func:`read_cluster_table` — with the
     artifact, the report is ONE id-keyed left join plus a group-keyed
-    aggregate (kilobytes out); the pair graph never re-derives.
-    ``member_col`` defaults to ``id_col`` (same contract as
-    :func:`cluster_size_histogram`)."""
-    member = member_col if member_col is not None else id_col
-    m = clusters.select(
-        F.col(member).alias(id_col),
-        F.col("cluster_id").alias("__cid"),
-    )
-    j = corpus.select(F.col(group_col), F.col(id_col)).join(m, id_col, "left")
-    dropped = F.col("__cid").isNotNull() & (F.col("__cid") != F.col(id_col))
+    aggregate (kilobytes out); the pair graph never re-derives. Both
+    sides key on ``doc_id``."""
+    m = clusters.select("doc_id", F.col("cluster_id").alias("__cid"))
+    j = corpus.select(F.col(group_col), F.col("doc_id")).join(m, "doc_id", "left")
+    dropped = F.col("__cid").isNotNull() & (F.col("__cid") != F.col("doc_id"))
     n_docs = F.count(F.lit(1))
     n_dropped = F.sum(dropped.cast("long"))
     return (
@@ -496,12 +329,6 @@ def dedup_savings_by_source(
 def merge_cluster_update(
     clusters: DataFrame,
     new_pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    *,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-    algorithm: str = "hash_to_min",
 ) -> DataFrame:
     """Incremental cluster maintenance: fold a NEW batch's candidate
     pairs into an existing cluster table WITHOUT re-running connected
@@ -525,8 +352,8 @@ def merge_cluster_update(
     contribute diameter ≤ 2). Untouched clusters are an anti-join
     passthrough that never enters the loop."""
     nodes = (
-        new_pairs.select(F.col(id_a).alias("doc_id"))
-        .unionByName(new_pairs.select(F.col(id_b).alias("doc_id")))
+        new_pairs.select(F.col("id_a").alias("doc_id"))
+        .unionByName(new_pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     affected_cids = (
@@ -534,12 +361,9 @@ def merge_cluster_update(
     )
     affected = clusters.join(affected_cids, "cluster_id", "left_semi")
     edges = affected.select(
-        F.col("doc_id").alias(id_a), F.col("cluster_id").alias(id_b)
-    ).unionByName(new_pairs.select(id_a, id_b))
-    merged = dedup_clusters(
-        edges, id_a, id_b,
-        max_iter=max_iter, checkpoint_dir=checkpoint_dir, algorithm=algorithm,
-    )
+        F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("id_b")
+    ).unionByName(new_pairs.select("id_a", "id_b"))
+    merged = dedup_clusters(edges)
     untouched = clusters.join(affected_cids, "cluster_id", "left_anti")
     return untouched.select("doc_id", "cluster_id", "cluster_size").unionByName(
         merged
@@ -550,23 +374,17 @@ def update_cluster_table(
     spark,
     path: str,
     new_pairs: DataFrame,
-    *,
-    provenance: dict | None = None,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-    algorithm: str = "hash_to_min",
 ) -> DataFrame:
     """Artifact form of :func:`merge_cluster_update`: read the persisted
     cluster table, fold ``new_pairs`` in, swap the artifact's rows
     crash-safely, return the updated frame. The updated table is
-    MATERIALIZED (eager localCheckpoint) before anything moves — the
+    MATERIALIZED (eager pin) before anything moves — the
     read and the write target the same directory — and the swap is
     RENAME-aside (write to ``clusters.tmp``, rename live → ``.old``,
     rename ``.tmp`` → live; a stranded ``.old`` is adopted back on the
     next update), so a crash at any point leaves a readable table: the
     cron/stream-shaped ingest loop can die mid-update without losing
-    the corpus's cluster state. ``provenance`` replaces the sidecar's
-    dict when given; otherwise the existing sidecar stays as-is."""
+    the corpus's cluster state. The meta sidecar stays as it is."""
     from commercepulse_data_pipeline_spark.sources import commit
 
     # crash recovery: a prior update that died between its two swap
@@ -576,18 +394,12 @@ def update_cluster_table(
     table = (rows_dir, rows_dir + ".tmp", rows_dir + ".old")
     commit.recover_swap([table], keep_old=True)
     cur = read_cluster_table(spark, path)
-    upd = merge_cluster_update(
-        cur, new_pairs,
-        max_iter=max_iter, checkpoint_dir=checkpoint_dir, algorithm=algorithm,
-    ).localCheckpoint(eager=True)
-    keep_prov = (
-        provenance if provenance is not None else read_cluster_table_meta(spark, path)
-    )
+    upd = pin(merge_cluster_update(cur, new_pairs))
     # write against the OLD rows, then swap by rename-aside: a plain
     # mode("overwrite") on clusters/ deletes before it writes, so a crash
     # mid-write would leave NO live copy of the table (the next update
     # would misread the missing dir). With renames the rows are always
-    # reachable at clusters/ or clusters.old; the localCheckpoint above
+    # reachable at clusters/ or clusters.old; the pin above
     # pins the update's content before anything moves.
     (
         upd.select(*_CLUSTER_TABLE_COLS)
@@ -600,11 +412,4 @@ def update_cluster_table(
     # costs one table's worth of disk. Recovery only adopts it when
     # rows_dir itself is gone.
     commit.swap([table], keep_old=True)
-    if provenance is not None:
-        import json
-
-        meta = {"schema": list(_CLUSTER_TABLE_COLS), "provenance": provenance}
-        one_slice_df(spark, [(json.dumps(meta),)], "meta string").write.mode(
-            "overwrite"
-        ).json(f"{path}/meta")
     return upd

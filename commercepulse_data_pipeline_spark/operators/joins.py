@@ -42,12 +42,10 @@ def range_join(
     end_ts: str,
     *,
     bin_seconds: int,
-    key_cols: list[str] | None = None,
-    inclusive_end: bool = False,
 ) -> DataFrame:
     """Binned point-in-interval join: each ``points`` row pairs with every
     ``intervals`` row whose ``[start_ts, end_ts)`` contains ``point_ts``
-    (``inclusive_end=True`` closes the right edge). The reference has no
+    (the right edge is open). The reference has no
     range operator at all — its nearest is a same-day equi-join
     (src/transformer.py:140) — but time-window attribution over an events
     stream needs the real thing.
@@ -56,7 +54,7 @@ def range_join(
     as a nested-loop join — O(points × intervals), dead at 100 TB. Here
     both sides are assigned fixed-width time bins (``bin_seconds``): a
     point lands in exactly one bin, an interval is exploded to every bin it
-    overlaps, and the join becomes a plain equi-join on (keys…, bin) that
+    overlaps, and the join becomes a plain equi-join on the bin that
     sort-merges/AQE-coalesces like any other. Each qualifying (point,
     interval) pair meets in exactly one bin — the point's — so no
     post-join dedup is needed. Pick ``bin_seconds`` on the order of the
@@ -69,8 +67,7 @@ def range_join(
     Returns point columns + interval columns (caller resolves name clashes
     by renaming beforehand; a clash raises).
     """
-    key_cols = key_cols or []
-    clash = (set(points.columns) & set(intervals.columns)) - set(key_cols)
+    clash = set(points.columns) & set(intervals.columns)
     if clash:
         raise ValueError(f"range_join column clash (rename first): {sorted(clash)}")
     if bin_seconds < 1:
@@ -86,13 +83,8 @@ def range_join(
             )
         ),
     )
-    end_pred = (
-        F.col(point_ts) <= F.col(end_ts)
-        if inclusive_end
-        else F.col(point_ts) < F.col(end_ts)
-    )
-    joined = p.join(i, on=key_cols + ["__bin"], how="inner").where(
-        (F.col(point_ts) >= F.col(start_ts)) & end_pred
+    joined = p.join(i, on="__bin", how="inner").where(
+        (F.col(point_ts) >= F.col(start_ts)) & (F.col(point_ts) < F.col(end_ts))
     )
     return joined.drop("__bin")
 
@@ -106,14 +98,13 @@ def overlap_join(
     right_end: str,
     *,
     bin_seconds: int,
-    key_cols: list[str] | None = None,
 ) -> DataFrame:
     """Binned interval-overlap join: each left row pairs with every right
     row whose half-open interval overlaps it — ``l.start < r.end AND
     r.start < l.end`` (concurrency analysis, session collision, booking
     conflicts). Same scale argument as :func:`range_join`: keyless overlap
     predicates plan as nested-loop joins; binning turns them into one
-    equi-join on (keys…, bin).
+    equi-join on the bin.
 
     Interval×interval needs one extra trick vs point-in-interval: both
     sides explode to every bin they touch, so an overlapping pair shares
@@ -122,8 +113,7 @@ def overlap_join(
     w)``, which both sides' bin ranges provably cover — keeps each pair
     exactly once with no post-join dedup shuffle.
     """
-    key_cols = key_cols or []
-    clash = (set(left.columns) & set(right.columns)) - set(key_cols)
+    clash = set(left.columns) & set(right.columns)
     if clash:
         raise ValueError(f"overlap_join column clash (rename first): {sorted(clash)}")
     if bin_seconds < 1:
@@ -145,7 +135,7 @@ def overlap_join(
     meet_bin = F.floor(
         F.unix_timestamp(F.greatest(F.col(left_start), F.col(right_start))) / w
     )
-    joined = l.join(r, on=key_cols + ["__bin"], how="inner").where(
+    joined = l.join(r, on="__bin", how="inner").where(
         (F.col(left_start) < F.col(right_end))
         & (F.col(right_start) < F.col(left_end))
         & (F.col("__bin") == meet_bin)

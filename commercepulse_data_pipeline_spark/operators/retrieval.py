@@ -42,6 +42,10 @@ from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 from ..functions.expr import let
 from .text import tokens
 
+# BM25 term-saturation and length-normalization constants (the Lucene defaults)
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 def _validate_terms(query_terms: list[str]) -> list[str]:
     if not query_terms:
@@ -61,8 +65,6 @@ def bm25_score(
     text_col: str = "text",
     id_col: str = "doc_id",
     *,
-    k1: float = 1.2,
-    b: float = 0.75,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Score every document containing ≥1 query term with BM25.
@@ -73,7 +75,7 @@ def bm25_score(
     DECIMAL(30,6) for cross-engine replay.
 
     ``score(d) = Σ_t idf(t) · tf · (k1+1) / (tf + k1·(1 − b + b·dl/avgdl))``
-    summed left-to-right in ``query_terms`` order.
+    with ``k1 = BM25_K1``, ``b = BM25_B``, summed left-to-right in ``query_terms`` order.
 
     Output: one row per matching doc — ``id_col``, any ``extra_cols``
     passed through, ``n_match`` (query terms present), ``dl`` (doc token
@@ -131,10 +133,10 @@ def bm25_score(
             .cast("double")
         )
         tf = F.col(f"tf{i}").cast("double")
-        norm = (tf * F.lit(k1 + 1.0)) / (
+        norm = (tf * F.lit(BM25_K1 + 1.0)) / (
             tf
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
+            + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl))
         )
         term_score = idf * norm
         hit = (F.col(f"tf{i}") > 0).cast("int")
@@ -161,8 +163,6 @@ def bm25_topk(
     id_col: str = "doc_id",
     *,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Top-k BM25 hits: ``rank`` (1-based), then the ``bm25_score``
@@ -173,7 +173,7 @@ def bm25_topk(
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     scored = bm25_score(
-        df, query_terms, text_col, id_col, k1=k1, b=b, extra_cols=extra_cols
+        df, query_terms, text_col, id_col, extra_cols=extra_cols
     )
     return _ranked_topk(scored, id_col, k, extra_cols)
 
@@ -458,8 +458,6 @@ def bm25_topk_indexed(
     query_terms: list[str],
     *,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k BM25 from the PERSISTED inverted index — the serving path:
     per-query cost is the probed terms' partitions, never a corpus
@@ -544,8 +542,8 @@ def bm25_topk_indexed(
         .cast("double")
     )
     tf = F.col("tf").cast("double")
-    norm = (tf * F.lit(k1 + 1.0)) / (
-        tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
+    norm = (tf * F.lit(BM25_K1 + 1.0)) / (
+        tf + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * (F.col("dl").cast("double") / avgdl))
     )
     scored = (
         probed.join(F.broadcast(dfs), "term")

@@ -112,7 +112,6 @@ def weighted_sample_per_group(
     k: int,
     *,
     salt: str = "",
-    rank_col: str = "wrank",
 ) -> DataFrame:
     """Exactly-k-per-group weighted sample: rank rows inside each group by
     ``weighted_priority`` ascending (doc key tiebreak → total order),
@@ -126,7 +125,7 @@ def weighted_sample_per_group(
     """
     prio = weighted_priority(F.col(key_col), F.col(weight_col), salt=salt)
     w = Window.partitionBy(group_col).orderBy(prio.asc(), F.col(key_col).asc())
-    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
+    return df.withColumn("wrank", F.row_number().over(w)).where(F.col("wrank") <= k)
 
 
 def assign_splits(
@@ -135,7 +134,6 @@ def assign_splits(
     splits: dict[str, float],
     *,
     salt: str = "",
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/validation/test assignment — every row gets a
     split label from the same md5-bucket arithmetic as
@@ -169,7 +167,7 @@ def assign_splits(
         upper = BUCKET_SPACE if i == len(names) - 1 else upper + threshold_for(splits[name])
         cond = bucket < F.lit(upper)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 def assign_splits_grouped(
@@ -178,11 +176,7 @@ def assign_splits_grouped(
     membership: DataFrame,
     splits: dict[str, float],
     *,
-    member_col: str | None = None,
-    group_col: str = "cluster_id",
     salt: str = "",
-    split_col: str = "split",
-    key_out: str = "split_key",
 ) -> DataFrame:
     """GROUP-aware train/val/test assignment: every member of a group
     lands in the SAME split. Per-row splitting (:func:`assign_splits`)
@@ -192,8 +186,8 @@ def assign_splits_grouped(
     "Deduplicating Training Data Makes Language Models Better", found
     exactly this train/test overlap in real corpora). Splitting by the
     duplicate-CLUSTER key closes it: pass the cluster decision table
-    (e.g. ``graph.dedup_clusters`` output — ``member_col`` → row key,
-    ``group_col`` → cluster id) and the bucket is computed on the GROUP
+    (e.g. ``graph.dedup_clusters`` output: its ``key_col`` column is the
+    row key, ``cluster_id`` the group) and the bucket is computed on the GROUP
     key; rows with no group row are their own singleton group (bucketed
     on their own key), so the partition stays disjoint and exhaustive
     over the whole corpus.
@@ -211,22 +205,19 @@ def assign_splits_grouped(
     join — if a member appears under several groups, the smallest group
     id wins (deterministic MIN) — so a malformed multi-row membership
     can never fan the left join out and silently duplicate manifest rows
-    (ADVICE r11). Output: ``df`` + ``key_out`` (the effective group key,
-    string) + ``split_col``."""
-    member_col = member_col or key_col
+    (ADVICE r11). Output: ``df`` + ``split_key`` (the effective group key,
+    string) + ``split``."""
     m = (
-        membership.select(
-            F.col(member_col).alias(key_col), F.col(group_col).alias("__grp")
-        )
+        membership.select(F.col(key_col), F.col("cluster_id").alias("__grp"))
         .groupBy(key_col)
         .agg(F.min("__grp").alias("__grp"))
     )
     joined = df.join(m, key_col, "left")
     keyed = joined.withColumn(
-        key_out,
+        "split_key",
         F.coalesce(F.col("__grp").cast("string"), F.col(key_col).cast("string")),
     )
-    return assign_splits(keyed, key_out, splits, salt=salt, split_col=split_col).drop(
+    return assign_splits(keyed, "split_key", splits, salt=salt).drop(
         "__grp"
     )
 
@@ -237,9 +228,6 @@ def epoch_shuffle(
     *,
     epoch: int,
     n_shards: int,
-    salt: str = "epoch-v1",
-    shard_col: str = "shard",
-    pos_col: str = "pos",
 ) -> DataFrame:
     """Deterministic per-epoch training order: a reproducible global
     permutation of the corpus, materialized as (shard, position-within-
@@ -265,20 +253,20 @@ def epoch_shuffle(
     """
     okey = hash_bucket(
         F.coalesce(F.col(key_col).cast("string"), F.lit("")),
-        salt=f"{salt}:{epoch}:",
+        salt=f"epoch-v1:{epoch}:",
     )
     shard = F.pmod(
         hash_bucket(
             F.coalesce(F.col(key_col).cast("string"), F.lit("")),
-            salt=f"{salt}-shard:{epoch}:",
+            salt=f"epoch-v1-shard:{epoch}:",
         ),
         F.lit(n_shards),
     ).cast("int")
-    w = Window.partitionBy(shard_col).orderBy(F.col("__okey"), F.col(key_col))
+    w = Window.partitionBy("shard").orderBy(F.col("__okey"), F.col(key_col))
     return (
-        df.withColumn(shard_col, shard)
+        df.withColumn("shard", shard)
         .withColumn("__okey", okey)
-        .withColumn(pos_col, F.row_number().over(w).cast("long"))
+        .withColumn("pos", F.row_number().over(w).cast("long"))
         .drop("__okey")
     )
 
@@ -287,10 +275,7 @@ def dsir_importance(
     df: DataFrame,
     target: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
-    salt: str = "dsir-v1:",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw
@@ -308,7 +293,7 @@ def dsir_importance(
         weight(doc)   = Σ_f [ log2 p_target(bucket(f))
                               - log2 p_raw(bucket(f)) ]
 
-    Returns (id_col, n_feats, dsir_logratio) for every document with at
+    Returns (doc_id, n_feats, dsir_logratio) for every document with at
     least one feature; resample by taking the top-k by
     (dsir_logratio DESC, id).
 
@@ -336,16 +321,16 @@ def dsir_importance(
 
     def feats(frame: DataFrame, with_id: bool) -> DataFrame:
         fcol = let(
-            tokens(F.col(text_col)),
+            tokens(F.col("text")),
             lambda t: F.concat(t, token_ngrams(t, 2)),
         )
-        cols = [F.col(id_col)] if with_id else []
+        cols = [F.col("doc_id")] if with_id else []
         return (
             frame.select(*cols, F.explode_outer(fcol).alias("__feat"))
             .where(F.col("__feat").isNotNull())
             .withColumn(
                 "__b",
-                F.pmod(hash_bucket(F.col("__feat"), salt=salt), F.lit(n_buckets))
+                F.pmod(hash_bucket(F.col("__feat"), salt="dsir-v1:"), F.lit(n_buckets))
                 .cast("int"),
             )
             .drop("__feat")
@@ -381,7 +366,7 @@ def dsir_importance(
     )
     return (
         raw.join(F.broadcast(ratios), "__b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
             F.round(F.sum("__lr").cast("double"), 4).alias("dsir_logratio"),
@@ -395,7 +380,6 @@ def temperature_mixture(
     id_col: str = "doc_id",
     *,
     target_frac: float = 0.5,
-    salt: str = "alpha-mix-v1:",
 ) -> DataFrame:
     """Multilingual α-temperature rebalancing at α = 0.5 (the
     mBERT/XLM-R exponentiated-smoothing recipe): sample so the kept
@@ -451,7 +435,7 @@ def temperature_mixture(
     )
     return (
         df.join(F.broadcast(plan), group_col)
-        .where(hash_bucket(F.col(id_col).cast("string"), salt) < F.col("__thr"))
+        .where(hash_bucket(F.col(id_col).cast("string"), "alpha-mix-v1:") < F.col("__thr"))
         .drop("__thr")
     )
 

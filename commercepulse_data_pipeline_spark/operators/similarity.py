@@ -71,7 +71,6 @@ def cosine_topk(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_ids: list[int] | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector.
 
@@ -87,8 +86,6 @@ def cosine_topk(
         F.col(id_col),
         F.when(denom > 0, _dot(F.col(vec_col), q) / denom).alias("cosine_sim"),
     ).where(F.col("cosine_sim").isNotNull())
-    if exclude_ids:
-        scored = scored.where(~F.col(id_col).isin(exclude_ids))
     return scored.orderBy(
         F.col("cosine_sim").desc(), F.col(id_col).asc()
     ).limit(k).select(id_col, F.round("cosine_sim", 6).alias("cosine_sim"))
@@ -143,8 +140,6 @@ def lsh_topk(
     query_vec: list[float],
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     seed: int = 42,
     probes: int = 1,
@@ -164,8 +159,8 @@ def lsh_topk(
     """
     planes = random_hyperplanes(len(query_vec), n_planes, seed)
     buckets = _probe_buckets(query_vec, planes, probes)
-    bucketed = corpus.where(lsh_bucket(F.col(vec_col), planes).isin(buckets))
-    return cosine_topk(bucketed, query_vec, k, id_col=id_col, vec_col=vec_col)
+    bucketed = corpus.where(lsh_bucket(F.col("embedding"), planes).isin(buckets))
+    return cosine_topk(bucketed, query_vec, k)
 
 
 def lsh_topk_indexed(
@@ -207,7 +202,6 @@ def _with_centroid_assign(
     cents: list[list[float]],
     *,
     vec_col: str,
-    out_col: str = "centroid_id",
 ) -> DataFrame:
     """Constant-free nearest-centroid assignment (r15): the centroids
     travel as DATA in a ONE-ROW broadcast frame and the argmin runs
@@ -239,7 +233,7 @@ def _with_centroid_assign(
     )["cid"]
     return (
         df.crossJoin(F.broadcast(cents_df))
-        .withColumn(out_col, assign)
+        .withColumn("centroid_id", assign)
         .drop("__cents")
     )
 
@@ -247,8 +241,6 @@ def _with_centroid_assign(
 def ivf_assign(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     iters: int = 2,
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
@@ -275,15 +267,15 @@ def ivf_assign(
     from commercepulse_data_pipeline_spark.operators.dedup import _md5_long
 
     sample = (
-        corpus.select(id_col, vec_col)
-        .orderBy(_md5_long(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
+        corpus.select("vec_id", "embedding")
+        .orderBy(_md5_long(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
         .limit(n_centroids)
         .collect()
     )
     centroids = [list(map(float, r[1])) for r in sample]
 
     for _ in range(iters):
-        assigned = _with_centroid_assign(corpus, centroids, vec_col=vec_col)
+        assigned = _with_centroid_assign(corpus, centroids, vec_col="embedding")
         dim = len(centroids[0])
         means = (
             assigned.groupBy("centroid_id")
@@ -291,7 +283,7 @@ def ivf_assign(
                 *[
                     (
                         F.sum(
-                            F.element_at(F.col(vec_col), i + 1)
+                            F.element_at(F.col("embedding"), i + 1)
                             .cast("double")
                             .cast("decimal(30,15)")
                         ).cast("double")
@@ -307,7 +299,7 @@ def ivf_assign(
             new_cents[r["centroid_id"]] = [float(r[f"m{i}"]) for i in range(dim)]
         centroids = new_cents
 
-    assigned = _with_centroid_assign(corpus, centroids, vec_col=vec_col)
+    assigned = _with_centroid_assign(corpus, centroids, vec_col="embedding")
     return assigned, list(enumerate(centroids))
 
 
@@ -317,8 +309,6 @@ def ivf_topk(
     query_vec: list[float],
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     nprobe: int = 2,
 ) -> DataFrame:
     """Approximate top-k via IVF: rank centroids by distance to the query
@@ -332,7 +322,7 @@ def ivf_topk(
 
     probe_ids = [cid for cid, c in sorted(centroids, key=lambda t: d2(t[1]))[:nprobe]]
     bucketed = assigned.where(F.col("centroid_id").isin(probe_ids))
-    return cosine_topk(bucketed, query_vec, k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(bucketed, query_vec, k)
 
 
 def knn_join_self(
@@ -708,7 +698,6 @@ def _with_residual(
     cents: list[list[float]],
     *,
     vec_col: str,
-    out_col: str = "__resid",
 ) -> DataFrame:
     """Append the residual to the assigned centroid with CONSTANT-FREE
     codegen (r16, the ``_with_centroid_assign`` discipline): the
@@ -732,7 +721,7 @@ def _with_residual(
     )
     return (
         df.crossJoin(F.broadcast(cents_df))
-        .withColumn(out_col, resid)
+        .withColumn("__resid", resid)
         .drop("__rcents")
     )
 
@@ -740,7 +729,6 @@ def _with_residual(
 def pq_train(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 4,
     n_codes: int = 16,
@@ -776,9 +764,9 @@ def pq_train(
     from commercepulse_data_pipeline_spark.operators.dedup import _md5_long
 
     key_rows = (
-        corpus.select(id_col)
-        .where(F.col(id_col).isNotNull())
-        .orderBy(_md5_long(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
+        corpus.select("vec_id")
+        .where(F.col("vec_id").isNotNull())
+        .orderBy(_md5_long(F.col("vec_id").cast("string")).asc(), F.col("vec_id").asc())
         .limit(n_codes)
         .collect()
     )
@@ -787,8 +775,8 @@ def pq_train(
         raise ValueError("pq_train: empty corpus (no non-NULL ids)")
     fetched = {
         r[0]: r[1]
-        for r in corpus.select(id_col, vec_col)
-        .where(F.col(id_col).isin(keys))
+        for r in corpus.select("vec_id", vec_col)
+        .where(F.col("vec_id").isin(keys))
         .collect()
     }
     missing = [k for k in keys if k not in fetched]
@@ -911,16 +899,13 @@ def pq_topk(
     query_vec: list[float],
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
     refine: int | float = 0,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by ADC over the compressed codes: per-vector
     distance = m lookups into the broadcast-literal LUT, summed in
     subspace order (an ordered double fold — exactly replayable), then
     TakeOrdered. ``refine`` > 0 re-ranks the top ``refine`` ADC
-    candidates by exact cosine against ``vec_col`` (must be present in
+    candidates by exact cosine against ``embedding`` (must be present in
     ``encoded``) — the standard two-stage serving shape; output is then
     cosine top-k. A FLOAT refine in (0, 1) is a fraction of the corpus
     (see :func:`_resolve_refine`) — prefer it when the corpus grows
@@ -943,23 +928,23 @@ def pq_topk(
         lambda acc, j: acc
         + F.element_at(
             F.element_at(lut_lit, j + 1),
-            F.element_at(F.col(code_col), j + 1) + 1,
+            F.element_at(F.col("pq_code"), j + 1) + 1,
         ),
     )
     scored = encoded.withColumn("__appd", approx)
     refine = _resolve_refine(refine, k, encoded.count)
     if refine:
         cands = (
-            scored.orderBy(F.col("__appd").asc(), F.col(id_col).asc())
+            scored.orderBy(F.col("__appd").asc(), F.col("vec_id").asc())
             .limit(refine)
             .drop("__appd")
         )
-        return cosine_topk(cands, query_vec, k, id_col=id_col, vec_col=vec_col)
+        return cosine_topk(cands, query_vec, k)
     return (
         scored.select(
-            id_col, F.round(F.col("__appd"), 6).alias("approx_d2")
+            "vec_id", F.round(F.col("__appd"), 6).alias("approx_d2")
         )
-        .orderBy(F.col("approx_d2").asc(), F.col(id_col).asc())
+        .orderBy(F.col("approx_d2").asc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -969,12 +954,10 @@ def write_pq_index(
     path: str,
     *,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
 ) -> None:
     """Persist the compressed index: the codes table (id + m ints — the
     only thing a query scans) and the codebooks beside it."""
-    encoded.select(id_col, code_col).write.mode("overwrite").parquet(
+    encoded.select("vec_id", "pq_code").write.mode("overwrite").parquet(
         f"{path}/codes"
     )
     spark = encoded.sparkSession
@@ -1006,15 +989,12 @@ def pq_topk_indexed(
     path: str,
     query_vec: list[float],
     k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
 ) -> DataFrame:
     """Query the persisted PQ index: load the (tiny) codebooks, ADC over
     the codes table. The raw vectors are never read."""
     books = read_pq_books(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
-    return pq_topk(codes, books, query_vec, k, id_col=id_col, code_col=code_col)
+    return pq_topk(codes, books, query_vec, k)
 
 
 def pq_knn_join(
@@ -1143,8 +1123,6 @@ def write_ivfpq_index(
     corpus: DataFrame,
     path: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     m: int = 4,
     n_codes: int = 16,
@@ -1158,22 +1136,19 @@ def write_ivfpq_index(
     tighter than the raw corpus, so the same code budget quantizes much
     finer. Persists: codes partitioned by centroid_id, the centroid
     table, and the residual codebooks."""
-    assigned, cents = ivf_assign(
-        corpus, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, iters=iters,
-    )
+    assigned, cents = ivf_assign(corpus, n_centroids=n_centroids, iters=iters)
     resid = _with_residual(
-        assigned, [c for _, c in sorted(cents)], vec_col=vec_col
+        assigned, [c for _, c in sorted(cents)], vec_col="embedding"
     )
     books = pq_train(
-        resid, id_col=id_col, vec_col="__resid", m=m, n_codes=n_codes,
+        resid, vec_col="__resid", m=m, n_codes=n_codes,
         iters=iters,
     )
     encoded = pq_encode(resid, books, vec_col="__resid")
     # rebalance before the partitioned write: an unbalanced partitionBy
     # emits (input partitions × list values) files (256 tiny files → 8
     # at bench shape; measured ~2× faster write)
-    encoded.select(id_col, "centroid_id", "pq_code").hint(
+    encoded.select("vec_id", "centroid_id", "pq_code").hint(
         "rebalance", "centroid_id"
     ).write.mode("overwrite").partitionBy("centroid_id").parquet(f"{path}/codes")
     spark = corpus.sparkSession
@@ -1198,11 +1173,9 @@ def ivfpq_topk(
     query_vec: list[float],
     k: int = 10,
     *,
-    id_col: str = "vec_id",
     nprobe: int = 2,
     refine: int | float = 0,
     corpus: DataFrame | None = None,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query the IVF+PQ index: rank centroids driver-side (tiny), scan
     only the ``nprobe`` nearest lists (partition pruning — non-probed
@@ -1257,22 +1230,22 @@ def ivfpq_topk(
         )
         part = (
             src.where(F.col("centroid_id") == cid)
-            .select(id_col, approx.alias("__appd"))
+            .select("vec_id", approx.alias("__appd"))
         )
         out = part if out is None else out.unionByName(part)
     if refine:
         if corpus is None:
             raise ValueError("refine > 0 needs corpus= (id -> vector)")
         shortlist = (
-            out.orderBy(F.col("__appd").asc(), F.col(id_col).asc())
+            out.orderBy(F.col("__appd").asc(), F.col("vec_id").asc())
             .limit(refine)
-            .select(id_col)
+            .select("vec_id")
         )
-        cands = corpus.join(F.broadcast(shortlist), id_col, "left_semi")
-        return cosine_topk(cands, query_vec, k, id_col=id_col, vec_col=vec_col)
+        cands = corpus.join(F.broadcast(shortlist), "vec_id", "left_semi")
+        return cosine_topk(cands, query_vec, k)
     return (
-        out.select(id_col, F.round("__appd", 6).alias("approx_d2"))
-        .orderBy(F.col("approx_d2").asc(), F.col(id_col).asc())
+        out.select("vec_id", F.round("__appd", 6).alias("approx_d2"))
+        .orderBy(F.col("approx_d2").asc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -1280,9 +1253,6 @@ def ivfpq_topk(
 def label_centroid_outliers(
     df: DataFrame,
     *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     top_n: int = 3,
 ) -> DataFrame:
     """Per-class embedding-space outlier mining: the ``top_n`` vectors
@@ -1306,18 +1276,18 @@ def label_centroid_outliers(
     Ranking is on the 6-dp ROUNDED distance with id tiebreak (the
     ``hard_negatives`` contract: band/rank decisions agree bit-for-bit
     with the SQL replay). Output: label, vec_id, centroid_d2, rank."""
-    first = df.select(vec_col).head()
+    first = df.select("embedding").head()
     if first is None or first[0] is None:
         raise ValueError(
             "label_centroid_outliers: cannot infer vector dimension — the "
-            f"corpus is empty or its first `{vec_col}` is NULL (ADVICE r11)."
+            "corpus is empty or its first `embedding` is NULL (ADVICE r11)."
         )
     dim = len(first[0])
-    sums = df.groupBy(label_col).agg(
+    sums = df.groupBy("label").agg(
         F.count(F.lit(1)).alias("__n"),
         *[
             F.sum(
-                F.element_at(F.col(vec_col), i + 1)
+                F.element_at(F.col("embedding"), i + 1)
                 .cast("double")
                 .cast("decimal(30,15)")
             ).alias(f"__s{i}")
@@ -1325,7 +1295,7 @@ def label_centroid_outliers(
         ],
     )
     cents = sums.select(
-        label_col,
+        "label",
         F.array(
             *[
                 (F.col(f"__s{i}").cast("double") / F.col("__n")).alias(f"__c{i}")
@@ -1333,13 +1303,13 @@ def label_centroid_outliers(
             ]
         ).alias("__cent"),
     )
-    scored = df.join(F.broadcast(cents), label_col).select(
-        label_col,
-        id_col,
-        F.round(_sq_dist(F.col(vec_col), F.col("__cent")), 6).alias("centroid_d2"),
+    scored = df.join(F.broadcast(cents), "label").select(
+        "label",
+        "vec_id",
+        F.round(_sq_dist(F.col("embedding"), F.col("__cent")), 6).alias("centroid_d2"),
     )
-    w = Window.partitionBy(label_col).orderBy(
-        F.col("centroid_d2").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("label").orderBy(
+        F.col("centroid_d2").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1350,11 +1320,6 @@ def label_centroid_outliers(
 def score_pairs(
     pairs: DataFrame,
     vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Attach embedding cosine similarity to an EXISTING candidate-pair
     list — the semantic CONFIRM stage of a two-signal dedup: a lexical
@@ -1382,12 +1347,12 @@ def score_pairs(
             "(the reserved output name) — rename or drop the blocker's "
             "score before re-scoring, so the two signals stay distinct."
         )
-    va = vectors.select(F.col(id_col).alias(id_a), F.col(vec_col).alias("__va"))
-    vb = vectors.select(F.col(id_col).alias(id_b), F.col(vec_col).alias("__vb"))
+    va = vectors.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    vb = vectors.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     denom = _norm(F.col("__va")) * _norm(F.col("__vb"))
     return (
-        pairs.join(va, id_a, "left")
-        .join(vb, id_b, "left")
+        pairs.join(va, "id_a", "left")
+        .join(vb, "id_b", "left")
         .withColumn(
             "cosine_sim",
             F.round(
@@ -1402,11 +1367,6 @@ def margin_knn_join(
     src: DataFrame,
     tgt: DataFrame,
     k: int = 4,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    margin_threshold: float | None = None,
-    max_queries: int | None = 10_000,
 ) -> DataFrame:
     """Margin-based bitext candidate mining (Artetxe & Schwenk 2019,
     ratio margin): for every ``src`` row, its k nearest ``tgt`` rows
@@ -1418,8 +1378,8 @@ def margin_knn_join(
     EVERYTHING has a high avgk_bwd, so its raw-cosine false friends fall
     below threshold, which is why mining on raw cosine alone is known to
     be unreliable. The standard rule keeps margin_rank=1 pairs above a
-    threshold (~1.05); pass ``margin_threshold`` to filter, ``None``
-    returns all k candidates with margins.
+    threshold (~1.05); this returns all k candidates with margins, for the
+    caller to filter.
 
     Cross-engine determinism: neighbor cosines are the 6dp-rounded
     ``knn_join`` outputs; each side's neighborhood average stays an
@@ -1429,8 +1389,8 @@ def margin_knn_join(
     margins and margin ranks replay bit-for-bit in a SQL twin.
 
     Scale shape: two broadcast-query ``knn_join`` passes (src→tgt and
-    tgt→src; each side is broadcast ONCE, so ``max_queries`` applies to
-    both — bitext mining runs per language-pair shard in practice), two
+    tgt→src; each side is broadcast ONCE, so ``knn_join``'s ``max_queries``
+    applies to both — bitext mining runs per language-pair shard in practice), two
     per-row average aggregates, and two joins of the k·|src| candidate
     list against them. For corpus-scale self-mining use the LSH-blocked
     ``knn_join_self`` shape instead of broadcasting. Output: src_id,
@@ -1438,8 +1398,7 @@ def margin_knn_join(
     tgt_id tiebreak)."""
     fwd = pin(
         knn_join(
-            tgt, src, k=k, id_col=id_col, vec_col=vec_col,
-            exclude_self=False, max_queries=max_queries,
+            tgt, src, k=k, exclude_self=False,
         ).select(
             F.col("query_id").alias("src_id"),
             F.col("neighbor_id").alias("tgt_id"),
@@ -1453,8 +1412,7 @@ def margin_knn_join(
     # max_queries·k — so the lazy pin is tiny; the average's broadcast
     # build materializes it.
     bwd = knn_join(
-        src, tgt, k=k, id_col=id_col, vec_col=vec_col,
-        exclude_self=False, max_queries=max_queries,
+        src, tgt, k=k, exclude_self=False,
     )
     dec = "decimal(18,6)"
     af = fwd.groupBy("src_id").agg(
@@ -1482,16 +1440,12 @@ def margin_knn_join(
     out = scored.withColumn("margin_rank", F.row_number().over(w)).select(
         "src_id", "tgt_id", "cosine_sim", "margin", "margin_rank"
     )
-    if margin_threshold is not None:
-        out = out.where(F.col("margin") >= margin_threshold)
     return out
 
 
 def pair_threshold_sweep(
     scored_pairs: DataFrame,
     thresholds: tuple[float, ...] = (0.80, 0.85, 0.90, 0.95),
-    *,
-    score_col: str = "cosine_sim",
 ) -> DataFrame:
     """Confirm-threshold calibration for two-signal dedup: given a
     candidate-pair list already scored by :func:`score_pairs`, report —
@@ -1517,7 +1471,7 @@ def pair_threshold_sweep(
     taus = [float(t) for t in thresholds]
     if len(set(taus)) != len(taus):
         raise ValueError(f"pair_threshold_sweep: duplicate thresholds in {taus}")
-    s = F.col(score_col)
+    s = F.col("cosine_sim")
     aggs = [
         F.count(F.lit(1)).alias("__n_pairs"),
         F.count(s).alias("__n_scored"),

@@ -8,8 +8,8 @@ pass. A sketch rollup stores one mergeable HLL sketch per (day, group) —
 built in ONE pass over raw events, map-side combined like any algebraic
 aggregate — and answers any date-range distinct query by unioning a few
 hundred kilobyte-sized sketches, never touching raw data again. Estimates
-carry the standard HLL relative error (~1.04/√2^lg_k ≈ 1.6% at the
-default lg_k=12).
+carry the standard HLL relative error (~1.04/√2^lg_k ≈ 1.6% at
+lg_k=12).
 
 The reference has no sketch surface at all (single-node pandas counts
 exactly); this is the extension tier's scale path, the same role
@@ -36,14 +36,13 @@ def build_sketch_rollup(
     day_col: str = "day",
     group_cols: list[str] | None = None,
     key_col: str = "user_id",
-    lg_k: int = 12,
 ) -> DataFrame:
     """One row per (day, *group_cols): a mergeable HLL sketch of
     ``key_col`` plus the exact row count. One shuffle on the rollup key;
     the sketch aggregate combines map-side like a sum."""
     groups = [day_col, *(group_cols or [])]
     return events.groupBy(*groups).agg(
-        F.hll_sketch_agg(F.col(key_col).cast("string"), F.lit(lg_k)).alias("key_sketch"),
+        F.hll_sketch_agg(F.col(key_col).cast("string"), F.lit(12)).alias("key_sketch"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -55,7 +54,6 @@ def write_sketch_rollup(
     day_col: str = "day",
     group_cols: list[str] | None = None,
     key_col: str = "user_id",
-    lg_k: int = 12,
     mode: str = "overwrite",
 ) -> None:
     """Persist the rollup as parquet (sketches are plain binary columns).
@@ -63,7 +61,7 @@ def write_sketch_rollup(
     rows from reruns are harmless because readers union-merge sketches —
     HLL union is idempotent for the same underlying keys."""
     build_sketch_rollup(
-        events, day_col=day_col, group_cols=group_cols, key_col=key_col, lg_k=lg_k
+        events, day_col=day_col, group_cols=group_cols, key_col=key_col
     ).write.mode(mode).parquet(path)
 
 
@@ -73,7 +71,6 @@ def distinct_over_range(
     start_day,
     end_day,
     *,
-    day_col: str = "day",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Distinct-key estimate per group over [start_day, end_day]: filters
@@ -87,7 +84,7 @@ def distinct_over_range(
     )
 
     rollup = fold_consistent_read(spark, path).where(
-        (F.col(day_col) >= F.lit(start_day)) & (F.col(day_col) <= F.lit(end_day))
+        (F.col("day") >= F.lit(start_day)) & (F.col("day") <= F.lit(end_day))
     )
     groups = group_cols or []
     agg = rollup.groupBy(*groups).agg(
@@ -223,18 +220,12 @@ def heavy_hitters_over_shards(
     *,
     shard_col: str,
     item_col: str,
-    shard_filter=None,
 ) -> DataFrame:
     """:func:`merge_mg_summaries` over a persisted two-table rollup
     (:func:`write_mg_rollup`) for any shard subset. Touches only the
-    summary tables, never raw data. ``shard_filter`` is an optional
-    Column predicate on ``shard_col`` (pushed down to both summary
-    scans)."""
+    summary tables, never raw data."""
     items = spark.read.parquet(os.path.join(path, "items"))
     shards = spark.read.parquet(os.path.join(path, "shards"))
-    if shard_filter is not None:
-        items = items.where(shard_filter)
-        shards = shards.where(shard_filter)
     return merge_mg_summaries(items, shards, item_col=item_col)
 
 
@@ -251,16 +242,17 @@ def heavy_hitters_over_shards(
 # production telemetry.
 #
 # Binning is HDR-style: each power-of-two decade [2^m, 2^(m+1)) splits
-# into 2^sub_bits equal linear buckets, so every bucket's relative width
-# is <= 2^-sub_bits and the midpoint estimate carries a GUARANTEED
-# relative error <= 2^-(sub_bits+1) (ticks below 2^sub_bits get exact
-# singleton buckets). Bucket count is bounded by ~64 * 2^sub_bits rows
+# into 2^SUB_BITS equal linear buckets, so every bucket's relative width
+# is <= 2^-SUB_BITS and the midpoint estimate carries a GUARANTEED
+# relative error <= 2^-(SUB_BITS+1) (ticks below 2^SUB_BITS get exact
+# singleton buckets). Bucket count is bounded by ~64 * 2^SUB_BITS rows
 # per shard regardless of data volume.
 #
 # Everything is INTEGER arithmetic (msb via base-2 string length, shifts,
 # exact rational ranks ceil(num*total/den) — never float log or float
 # rank), so build, merge, selection, and the error-envelope flag replay
 # bit-identically in a SQL oracle on any engine.
+SUB_BITS = 6
 
 
 def log2_hist_sketch(
@@ -269,7 +261,6 @@ def log2_hist_sketch(
     *,
     shard_col: str | None = None,
     group_cols: list[str] | None = None,
-    sub_bits: int = 6,
 ) -> DataFrame:
     """One histogram per (shard, *group_cols): rows of (..., bin_lo,
     cnt) where ``bin_lo`` is the bucket's inclusive lower tick. The
@@ -280,7 +271,7 @@ def log2_hist_sketch(
 
     One shuffle on (shard, groups, bin) with map-side combine; the
     bucket id needs only integer ops: msb from the base-2 digit count,
-    ``shift = max(msb - sub_bits, 0)``, ``bin_lo = (v >> shift) <<
+    ``shift = max(msb - SUB_BITS, 0)``, ``bin_lo = (v >> shift) <<
     shift``."""
     v = F.col(value_col).cast("long")
     keys = [*([shard_col] if shard_col else []), *(group_cols or [])]
@@ -290,7 +281,7 @@ def log2_hist_sketch(
         df.where(v >= 0)
         .select(*keys, v.alias("__v"))
         .withColumn("__msb", F.length(F.conv(F.col("__v"), 10, 2)) - F.lit(1))
-        .withColumn("__shift", F.greatest(F.col("__msb") - F.lit(sub_bits), F.lit(0)))
+        .withColumn("__shift", F.greatest(F.col("__msb") - F.lit(SUB_BITS), F.lit(0)))
         .withColumn(
             "bin_lo",
             F.expr("shiftleft(shiftrightunsigned(__v, __shift), __shift)"),
@@ -305,7 +296,6 @@ def merge_hist_quantiles(
     probs: list[tuple[str, int, int]],
     *,
     group_cols: list[str] | None = None,
-    sub_bits: int = 6,
 ) -> DataFrame:
     """Quantile estimates per group from (a union of) histogram partials:
     merge by summing bucket counts, then for each ``(label, num, den)``
@@ -316,7 +306,7 @@ def merge_hist_quantiles(
 
     The inverted-CDF quantile value lives in the selected bucket by
     construction (bucket order = value order), so
-    ``|est - exact| <= 2^(shift-1)`` — relative error <= 2^-(sub_bits+1).
+    ``|est - exact| <= 2^(shift-1)`` — relative error <= 2^-(SUB_BITS+1).
     Output: (*group_cols, q_label, est, n_total)."""
     groups = group_cols or []
     merged = hist.groupBy(*groups, "bin_lo").agg(F.sum("cnt").alias("cnt"))
@@ -343,7 +333,7 @@ def merge_hist_quantiles(
             "__rank", F.expr("(q.num * total + q.den - 1) div q.den")
         )
         .withColumn("__msb", F.length(F.conv(F.col("bin_lo"), 10, 2)) - F.lit(1))
-        .withColumn("__shift", F.greatest(F.col("__msb") - F.lit(sub_bits), F.lit(0)))
+        .withColumn("__shift", F.greatest(F.col("__msb") - F.lit(SUB_BITS), F.lit(0)))
         .withColumn(
             "__mid_off",
             F.when(
@@ -373,17 +363,13 @@ def write_hist_rollup(
     *,
     shard_col: str,
     group_cols: list[str] | None = None,
-    sub_bits: int = 6,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist per-shard histogram partials as parquet (same posture as
-    :func:`write_sketch_rollup`: append mode supports incremental daily
-    builds; duplicate shard rows from reruns DOUBLE-COUNT — pair appends
-    with idempotent upsert if reruns are possible, counts are not
-    union-idempotent like HLL)."""
+    """Persist per-shard histogram partials as parquet, replacing the
+    rollup (counts are not union-idempotent like HLL: duplicate shard
+    rows would DOUBLE-COUNT)."""
     log2_hist_sketch(
-        df, value_col, shard_col=shard_col, group_cols=group_cols, sub_bits=sub_bits
-    ).write.mode(mode).parquet(path)
+        df, value_col, shard_col=shard_col, group_cols=group_cols
+    ).write.mode("overwrite").parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -539,7 +525,6 @@ def hist_quantiles_over_range(
     *,
     shard_col: str,
     group_cols: list[str] | None = None,
-    sub_bits: int = 6,
 ) -> DataFrame:
     """Range quantiles from the persisted rollup: filter shards
     (partition/row-group pruning), merge bucket counts, select. Touches
@@ -553,9 +538,7 @@ def hist_quantiles_over_range(
     rollup = fold_consistent_read(spark, path).where(
         (F.col(shard_col) >= F.lit(start_shard)) & (F.col(shard_col) <= F.lit(end_shard))
     )
-    return merge_hist_quantiles(
-        rollup, probs, group_cols=group_cols, sub_bits=sub_bits
-    )
+    return merge_hist_quantiles(rollup, probs, group_cols=group_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -631,14 +614,12 @@ def write_kmv_rollup(
     set_col: str,
     key_col: str,
     k: int = 128,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist the sketches as parquet. Append mode supports incremental
-    per-set builds and — like the Bloom store — re-appending the SAME
-    set's rows is harmless: readers DISTINCT and re-truncate, and the k
+    """Persist the sketches as parquet, replacing the rollup. Readers
+    DISTINCT and re-truncate, so duplicated rows are harmless: the k
     smallest of a multiset union equal the k smallest of the set union."""
     build_kmv_rollup(df, set_col=set_col, key_col=key_col, k=k).write.mode(
-        mode
+        "overwrite"
     ).parquet(path)
 
 

@@ -503,8 +503,6 @@ def strip_boilerplate(
 def strip_intradoc_repeats(
     df: DataFrame,
     *,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
     window_tokens: int = 8,
     min_repeats: int = 2,
 ) -> DataFrame:
@@ -525,12 +523,12 @@ def strip_intradoc_repeats(
     rows keyed by the document (text never travels through the fp side),
     and because every decision is doc-local the whole operator is
     embarrassingly parallel by document — pre-bucket the corpus by
-    ``doc_col`` and NO cross-partition state exists at any size.
+    ``doc_id`` and NO cross-partition state exists at any size.
 
     Returns the input columns plus ``text_derepeated``, ``n_tokens``,
     ``n_tokens_removed`` and ``n_repeat_windows``."""
     staged, occ = window_occurrences(
-        df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens
+        df, doc_col="doc_id", text_col="text", window_tokens=window_tokens
     )
     # one (doc, fp)-keyed agg decides both questions: does the window
     # repeat within this doc, and which occurrence is first
@@ -544,7 +542,7 @@ def strip_intradoc_repeats(
         .select("__doc", "__pos")
     )
     return splice_windows(
-        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
+        staged, dup_windows, doc_col="doc_id", window_tokens=window_tokens,
         keep=df.columns, text_out="text_derepeated",
         windows_out="n_repeat_windows",
     )
@@ -584,9 +582,7 @@ def pii_counts(text: Column) -> dict[str, Column]:
     }
 
 
-def repetition_scores(
-    df: DataFrame, text_col: str = "text", *, ngram_n: int = 2
-) -> DataFrame:
+def repetition_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021 §A1.1 family —
     the boilerplate filters every web-scale corpus applies before
     training):
@@ -603,7 +599,7 @@ def repetition_scores(
     tests/test_graph_sampling.py."""
     df = df.withColumn("__lines", F.split(F.col(text_col), r"\n"))
     df = df.withColumn("__toks", tokens(F.col(text_col)))
-    df = df.withColumn("__grams", token_ngrams(F.col("__toks"), ngram_n))
+    df = df.withColumn("__grams", token_ngrams(F.col("__toks"), 2))
     df = df.withColumn("__gsort", F.array_sort(F.col("__grams")))
 
     n_lines = F.size(F.col("__lines")).cast("double")
@@ -1126,11 +1122,8 @@ def collocations(
 
 def hashed_doc_vectors(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     dim: int = 64,
-    salt: str = "hashvec-v1:",
     weighting: str = "tf",
 ) -> DataFrame:
     """Hashing-trick document vectors: every token hashes (md5) into one
@@ -1149,7 +1142,7 @@ def hashed_doc_vectors(
     (the unigram-CE discipline: 1-ulp ln() wobble between JVM and libm
     must not reach the component pins).
 
-    Returns (id_col, n_tokens, norm, vector: array<double>); docs with
+    Returns (doc_id, n_tokens, norm, vector: array<double>); docs with
     zero tokens drop (no direction is defined for them).
 
     Determinism: md5 buckets replay in SQL; weights are integers (tf) or
@@ -1167,14 +1160,14 @@ def hashed_doc_vectors(
     if weighting not in ("tf", "tfidf"):
         raise ValueError(f"weighting must be 'tf' or 'tfidf', got {weighting!r}")
     toks = df.select(
-        F.col(id_col),
-        F.explode_outer(tokens(F.col(text_col))).alias("__tok"),
+        F.col("doc_id"),
+        F.explode_outer(tokens(F.col("text"))).alias("__tok"),
     ).where(F.col("__tok").isNotNull())
     counts = (
         toks.withColumn(
-            "__b", F.pmod(hash_bucket(F.col("__tok"), salt=salt), F.lit(dim)).cast("int")
+            "__b", F.pmod(hash_bucket(F.col("__tok"), salt="hashvec-v1:"), F.lit(dim)).cast("int")
         )
-        .groupBy(id_col, "__b")
+        .groupBy("doc_id", "__b")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     if weighting == "tfidf":
@@ -1189,7 +1182,7 @@ def hashed_doc_vectors(
         dfreq = counts.groupBy("__b").agg(
             F.count(F.lit(1)).alias("__df")
         )
-        ndocs = counts.select(id_col).distinct().agg(
+        ndocs = counts.select("doc_id").distinct().agg(
             F.count(F.lit(1)).alias("__nd")
         )
         idf = (
@@ -1202,7 +1195,7 @@ def hashed_doc_vectors(
             counts.join(F.broadcast(dfreq), "__b")
             .crossJoin(F.broadcast(ndocs))
             .select(
-                id_col,
+                "doc_id",
                 "__b",
                 F.col("__c").alias("__tf"),
                 (F.col("__c") * idf).alias("__c"),
@@ -1212,7 +1205,7 @@ def hashed_doc_vectors(
         counts = counts.withColumn("__tf", F.col("__c")).withColumn(
             "__c", F.col("__c").cast("double")
         )
-    entries = counts.groupBy(id_col).agg(
+    entries = counts.groupBy("doc_id").agg(
         F.map_from_entries(F.collect_list(F.struct("__b", "__c"))).alias("__m"),
         F.sum("__tf").alias("n_tokens"),
     )
@@ -1227,7 +1220,7 @@ def hashed_doc_vectors(
         entries.withColumn("__vec", vec)
         .withColumn("__norm", norm)
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.col("__norm").alias("norm"),
             F.transform(
@@ -1240,12 +1233,6 @@ def hashed_doc_vectors(
 def quarantine_report(
     df: DataFrame,
     text_col: str = "text",
-    *,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    lang_col: str = "lang",
-    keep_lang: str = "en",
-    quality_threshold: float = 0.8,
 ) -> DataFrame:
     """The REJECTED side of the curation funnel, with the reason: one row
     per dropped doc carrying the FIRST gate it failed — ``exact_dup`` →
@@ -1261,7 +1248,7 @@ def quarantine_report(
     md5(``text_col``) canonical window is the only shuffle; the reason is
     a pure CASE projection over flags computed in the same projection;
     survivors are filtered out before anything else moves. A NULL
-    ``lang_col`` never matches ``wrong_lang`` (three-valued ``<>`` — the
+    ``lang`` never matches ``wrong_lang`` (three-valued ``<>`` — the
     SQL twin agrees by construction)."""
     from pyspark.sql import Window
 
@@ -1270,15 +1257,15 @@ def quarantine_report(
     # F.size(tokens(text)) here would tokenize every doc twice)
     scored = quality_score(df, text_col, n_tokens_col="__qr_ntok")
     w = Window.partitionBy(F.md5(text_col))
-    canonical = F.col(id_col) == F.min(id_col).over(w)
+    canonical = F.col("doc_id") == F.min("doc_id").over(w)
     reason = (
         F.when(~canonical, F.lit("exact_dup"))
-        .when(F.col("quality_score") < quality_threshold, F.lit("low_quality"))
-        .when(F.col(lang_col) != keep_lang, F.lit("wrong_lang"))
+        .when(F.col("quality_score") < 0.8, F.lit("low_quality"))
+        .when(F.col("lang") != "en", F.lit("wrong_lang"))
     )
     return scored.select(
-        F.col(id_col),
-        F.col(source_col),
+        F.col("doc_id"),
+        F.col("source"),
         F.col("__qr_ntok").alias("n_tokens"),
         reason.alias("reason"),
     ).where(F.col("reason").isNotNull())
@@ -1291,7 +1278,6 @@ def cdc_chunks(
     *,
     gram: int = 2,
     divisor: int = 16,
-    salt: str = "cdc-v1:",
 ) -> DataFrame:
     """Content-defined chunking (the Rabin/FastCDC idea re-expressed over
     tokens): a chunk boundary falls AFTER token *i* whenever the hash of
@@ -1340,7 +1326,7 @@ def cdc_chunks(
             lambda i: (
                 _bucket(
                     F.concat(
-                        F.lit(salt),
+                        F.lit("cdc-v1:"),
                         F.array_join(
                             F.slice(
                                 F.col("__toks"),
@@ -1401,13 +1387,7 @@ def cdc_chunks(
     )
 
 
-def code_signals(
-    text: Column,
-    *,
-    symbol_threshold: float = 0.06,
-    indent_threshold: float = 0.2,
-    min_signals: int = 2,
-) -> dict[str, Column]:
+def code_signals(text: Column) -> dict[str, Column]:
     """``code_detect``'s columns over the ``text`` column, keyed by output
     name (``symbol_ratio``, ``indent_frac``, ``term_frac``, ``is_code``),
     so a filter can use ``is_code`` without a join."""
@@ -1427,33 +1407,30 @@ def code_signals(
         "term_frac": F.when(n_lines > 0, F.round(terminated / n_lines, 6)),
     }
     signals = (
-        F.coalesce((cols["symbol_ratio"] >= symbol_threshold).cast("int"), F.lit(0))
-        + F.coalesce((cols["indent_frac"] >= indent_threshold).cast("int"), F.lit(0))
+        F.coalesce((cols["symbol_ratio"] >= 0.06).cast("int"), F.lit(0))
+        + F.coalesce((cols["indent_frac"] >= 0.2).cast("int"), F.lit(0))
         + F.coalesce((cols["term_frac"] >= 0.5).cast("int"), F.lit(0))
     )
-    return {**cols, "is_code": signals >= min_signals}
+    return {**cols, "is_code": signals >= 2}
 
 
 def code_detect(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    *,
-    symbol_threshold: float = 0.06,
-    indent_threshold: float = 0.2,
-    min_signals: int = 2,
 ) -> DataFrame:
     """Code-vs-prose detection — the routing gate a mixed web corpus
     applies before training (code wants different tokenization, dedup
     granularity and quality filters than prose; classifying by file
     extension misses code pasted into HTML/forum/markdown pages). Pure
     regex-count heuristics, no model: a doc is flagged ``is_code`` when
-    at least ``min_signals`` of three signals fire —
+    at least two of three signals fire —
 
-      symbol_ratio  — code-punctuation chars ``{}[]();=<>`` per char
-                      (prose sits well under 2%, code 6-15%)
-      indent_frac   — fraction of lines starting with 2+ spaces or a tab
-                      (block-structured indentation)
+      symbol_ratio  — code-punctuation chars ``{}[]();=<>`` per char,
+                      fires at >= 0.06 (prose sits well under 2%, code
+                      6-15%)
+      indent_frac   — fraction of lines starting with 2+ spaces or a tab,
+                      fires at >= 0.2 (block-structured indentation)
       semi_or_brace — >= 1 semicolon-or-brace line terminator per 2
                       lines (statement-terminated languages)
 
@@ -1462,8 +1439,7 @@ def code_detect(
     backreferences or lookarounds, so RE2-based engines replay the same
     counts — the oracle-parity discipline of bpe_ish_tokens). NULL text
     yields NULL metrics and is_code=false (no evidence)."""
-    cols = code_signals(F.col(text_col), symbol_threshold=symbol_threshold,
-                        indent_threshold=indent_threshold, min_signals=min_signals)
+    cols = code_signals(F.col(text_col))
     return df.select(F.col(id_col), *(c.alias(name) for name, c in cols.items()))
 
 
@@ -1474,7 +1450,6 @@ def winnow_fingerprints(
     *,
     k: int = 3,
     w: int = 4,
-    salt: str = "winnow-v1:",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every k-token gram, slide a
@@ -1510,7 +1485,7 @@ def winnow_fingerprints(
 
     hash_array = F.transform(
         token_ngrams(tokens(F.col(text_col)), k),
-        lambda g: _bucket(F.concat(F.lit(salt), g)),
+        lambda g: _bucket(F.concat(F.lit("winnow-v1:"), g)),
     )
 
     # the hash array is referenced many times (sizes, window bounds, and
@@ -1569,7 +1544,6 @@ def winnow_match_pairs(
     *,
     k: int = 3,
     w: int = 4,
-    salt: str = "winnow-v1:",
     min_shared: int = 2,
     max_posting: int = 1000,
 ) -> DataFrame:
@@ -1594,7 +1568,7 @@ def winnow_match_pairs(
         capped_posting_lists,
     )
 
-    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w, salt=salt)
+    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
     # a doc may select the same fp hash at several positions; one vote
     # per (doc, fp) keeps n_shared = |shared fingerprint HASHES|
     keyed = fps.select(F.col("fp"), F.col(id_col).alias("__id")).distinct()
@@ -1652,10 +1626,6 @@ def _html_segmented(html: Column) -> Column:
 def html_extract(
     df: DataFrame,
     html_col: str = "html",
-    id_col: str = "doc_id",
-    *,
-    min_block_tokens: int = 3,
-    max_link_pct: int = 50,
 ) -> DataFrame:
     """HTML → text extraction, the stage in FRONT of the whole curation
     funnel (real crawls arrive as HTML; every operator downstream
@@ -1666,13 +1636,13 @@ def html_extract(
         2. segment into blocks at block-level tag boundaries
         3. per block: measure LINK DENSITY (chars of <a> inner text vs
            total text chars — integer arithmetic, engine-exact) and
-           token count, then keep blocks with >= ``min_block_tokens``
-           tokens whose link share is <= ``max_link_pct`` percent —
+           token count, then keep blocks with >= 3 tokens whose link
+           share is <= 50 percent —
            the text-density heuristic that drops nav bars, footers and
            link farms while keeping prose
         4. join kept blocks with newlines
 
-    Returns (id_col, text, n_blocks, n_kept_blocks) — one row per input
+    Returns (doc_id, text, n_blocks, n_kept_blocks) — one row per input
     row; a page with nothing worth keeping yields text = '' with its
     block counts, so the no_tokens quarantine downstream catches it.
 
@@ -1701,8 +1671,8 @@ def html_extract(
         lambda stats: let(
             F.filter(
                 stats,
-                lambda s: (n_tok(s["txt"]) >= min_block_tokens)
-                & (s["lc"] * 100 <= F.length(s["txt"]) * max_link_pct),
+                lambda s: (n_tok(s["txt"]) >= 3)
+                & (s["lc"] * 100 <= F.length(s["txt"]) * 50),
             ),
             lambda kept: F.struct(
                 F.array_join(
@@ -1716,7 +1686,7 @@ def html_extract(
         ),
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         out["text"].alias("text"),
         out["n_blocks"].alias("n_blocks"),
         out["n_kept_blocks"].alias("n_kept_blocks"),

@@ -69,10 +69,6 @@ def session_stats(sessions: DataFrame, user_col: str = "user_id", ts_col: str = 
 def ordered_funnel(
     events: DataFrame,
     steps: list[str],
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Greedy ordered event funnel: per user, step 1 matches the EARLIEST
     event of its type, and each later step matches the user's earliest
@@ -93,17 +89,17 @@ def ordered_funnel(
     if not steps:
         raise ValueError("ordered_funnel needs at least one step")
     cur = (
-        events.where(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        events.where(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
     for k in range(2, len(steps) + 1):
-        nxt = events.where(F.col(type_col) == steps[k - 1]).select(
-            user_col, F.col(ts_col).alias("__ts")
+        nxt = events.where(F.col("event_type") == steps[k - 1]).select(
+            "user_id", F.col("ts").alias("__ts")
         )
-        prev_cols = [user_col, *[f"t{i}" for i in range(1, k)]]
+        prev_cols = ["user_id", *[f"t{i}" for i in range(1, k)]]
         cur = (
-            cur.join(nxt, user_col, "left")
+            cur.join(nxt, "user_id", "left")
             .groupBy(*prev_cols)
             .agg(
                 F.min(

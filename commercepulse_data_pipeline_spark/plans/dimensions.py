@@ -12,13 +12,12 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.temporal import calendar_columns
 
 
-def build_dim_date(
-    spark: SparkSession, start: str = "2023-01-01", end: str = "2026-12-31"
-) -> DataFrame:
-    """Calendar dimension, one row per day (reference
-    src/populate_dimensions.py:19-29; 1,461 rows for the default range)."""
+def build_dim_date(spark: SparkSession) -> DataFrame:
+    """Calendar dimension, one row per day of 2023-01-01..2026-12-31
+    (reference src/populate_dimensions.py:19-29; 1,461 rows)."""
     days = spark.sql(
-        f"SELECT explode(sequence(to_date('{start}'), to_date('{end}'), interval 1 day)) AS date_key"
+        "SELECT explode(sequence(to_date('2023-01-01'), to_date('2026-12-31'), interval 1 day))"
+        " AS date_key"
     )
     cal = calendar_columns(F.col("date_key"))
     return days.select("date_key", *[expr.alias(name) for name, expr in cal.items()])

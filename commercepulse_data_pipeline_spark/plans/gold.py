@@ -19,9 +19,9 @@ joining raw payments first would fan out order rows and double-count
 order, not one per payment.
 
 Quirk handling (SURVEY §1.4):
-- Q3: both revenue definitions exposed — ``gross_all_statuses`` (daily
-  fact definition: every matched payment, even failed) and the
-  success-only definition used by the quality report.
+- Q3: the daily fact's gross counts every matched payment, even failed;
+  the success-only definition lives in the quality report
+  (``plans/quality.py``).
 - Q4: payment_success_rate = successful payments ÷ order count (the daily
   fact definition), NULL on zero denominator.
 - Q5: pandas groupby drops NULL keys; we filter NULL order_date
@@ -41,14 +41,12 @@ def build_fact_order_daily(
     payments: DataFrame,
     refunds: DataFrame,
     *,
-    revenue_all_statuses: bool = True,
     paid_count_per_payment: bool = False,
 ) -> DataFrame:
     """Daily per-vendor revenue rollup (reference src/transformer.py:130-165).
 
-    ``revenue_all_statuses=True`` reproduces the daily-fact gross
-    definition (Q3: failed payments included); False switches to the
-    quality-report success-only definition.
+    Gross revenue is the daily-fact definition (Q3: failed payments
+    included).
 
     ``paid_count_per_payment=True`` is the reference's exact paid_count
     (number of successful PAYMENTS in the group, src/transformer.py:142 —
@@ -58,13 +56,11 @@ def build_fact_order_daily(
     """
     pay_per_order = payments.groupBy("order_id").agg(
         F.sum("payment_amount").alias("pay_amount_all"),
-        F.sum(F.when(F.col("payment_status") == "success", F.col("payment_amount")).otherwise(F.lit(0.0))).alias("pay_amount_success"),
         F.sum(F.when(F.col("payment_status") == "success", 1).otherwise(0)).alias("n_success_payments"),
     )
     ref_per_order = refunds.groupBy("order_id").agg(
         F.sum("refund_amount").alias("refund_amount"),
     )
-    gross_col = "pay_amount_all" if revenue_all_statuses else "pay_amount_success"
     joined = (
         orders.where(F.col("order_date").isNotNull())  # Q5 made explicit
         .select("order_id", "order_date", "vendor")
@@ -72,7 +68,7 @@ def build_fact_order_daily(
         .join(ref_per_order, "order_id", "left")
     )
     daily = joined.groupBy("order_date", "vendor").agg(
-        F.round(F.coalesce(F.sum(gross_col), F.lit(0.0)), 2).alias("gross_revenue"),
+        F.round(F.coalesce(F.sum("pay_amount_all"), F.lit(0.0)), 2).alias("gross_revenue"),
         F.round(F.coalesce(F.sum("refund_amount"), F.lit(0.0)), 2).alias("total_refunds"),
         F.count(F.lit(1)).alias("order_count"),
         (
@@ -116,13 +112,11 @@ def normalize_currency(
     *,
     amount_col: str,
     date_col: str,
-    currency_col: str = "currency",
-    base_currency: str = "NGN",
 ) -> DataFrame:
     """Q7 fix (SURVEY §1.4): the reference ships daily USDNGN rates
     (data/fx_rates_2023.csv) but never reads them — all revenue sums mix
-    USD and NGN. Here USD amounts convert to the base currency using the
-    rate in effect on the fact's date (backward as-of semantics, so gap
+    USD and NGN. Here USD amounts convert to NGN (a NULL ``currency``
+    counts as NGN) using the rate in effect on the fact's date (backward as-of semantics, so gap
     days fall back to the latest earlier rate).
 
     ``fx_rates`` is the ``sources.readers.read_fx_rates`` shape
@@ -142,7 +136,7 @@ def normalize_currency(
     bounds = fx_rates.agg(
         F.min("fx_date").alias("lo"), F.max("fx_date").alias("hi")
     ).first()
-    out_amount = f"{amount_col}_{base_currency.lower()}"
+    out_amount = f"{amount_col}_ngn"
     if bounds["lo"] is None:  # no rates at all → everything passes through
         return facts.withColumn(
             out_amount, _dec_round2(F.col(amount_col))
@@ -166,7 +160,7 @@ def normalize_currency(
         "__fx_date",
         "left",
     )
-    cur = F.upper(F.coalesce(F.col(currency_col), F.lit(base_currency)))
+    cur = F.upper(F.coalesce(F.col("currency"), F.lit("NGN")))
     converted = F.when(
         (cur == "USD") & F.col("usd_ngn").isNotNull(),
         F.col(amount_col) * F.col("usd_ngn"),

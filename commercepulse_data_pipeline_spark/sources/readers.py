@@ -55,7 +55,7 @@ EVENT_TIME_CANDIDATES = ("created_at", "order_date", "payment_date", "shipped_at
 VENDOR_CANDIDATES = ("vendor_id", "vendor", "seller_id", "merchant_id")
 
 
-def read_jsonl_events(spark: SparkSession, path: str, source: str = "live_stream") -> DataFrame:
+def read_jsonl_events(spark: SparkSession, path: str) -> DataFrame:
     """JSONL event scan with bad-record retention (reference S2).
 
     PERMISSIVE mode parks unparseable lines in ``_corrupt_record``;
@@ -70,7 +70,7 @@ def read_jsonl_events(spark: SparkSession, path: str, source: str = "live_stream
     )
     return (
         raw.withColumn("ingested_at", F.coalesce("ingested_at", F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'")))
-        .withColumn("source", F.coalesce("source", F.lit(source)))
+        .withColumn("source", F.coalesce("source", F.lit("live_stream")))
         .withColumn("skipped", F.col("_corrupt_record").isNotNull() | F.col("event_id").isNull())
     )
 
@@ -85,7 +85,7 @@ def valid_events(events: DataFrame) -> DataFrame:
 
 
 def read_historical_json(
-    spark: SparkSession, path: str, event_type: str, source: str = "historical_bootstrap"
+    spark: SparkSession, path: str, event_type: str
 ) -> DataFrame:
     """Historical JSON-array bootstrap (reference S1,
     src/bootstrap_loader.py:84-99): whole-file JSON arrays of flat records
@@ -109,7 +109,7 @@ def read_historical_json(
         vendor.alias("vendor"),
         payload.alias("payload"),
         F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ingested_at"),
-        F.lit(source).alias("source"),
+        F.lit("historical_bootstrap").alias("source"),
     )
 
 
@@ -127,7 +127,6 @@ def write_bronze(events: DataFrame, path: str, mode: str = "append") -> None:
 def read_bronze(
     spark: SparkSession,
     path: str,
-    event_types: list[str] | None = None,
     *,
     merge_schema: bool = False,
 ) -> DataFrame:
@@ -148,8 +147,6 @@ def read_bronze(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(path)
-    if event_types:
-        df = df.where(F.col("event_type").isin(event_types))
     return df.dropDuplicates(["event_id"])
 
 

@@ -54,15 +54,12 @@ def cluster_table_batch(
     batch_df: DataFrame,
     batch_id: int,
     store_dir: str,
-    *,
-    params: dict | None = None,
-    max_bucket: int = 1000,
 ) -> None:
     """Fold one micro-batch of (doc_id, text, ...) rows into the
     persisted cluster table at ``{store_dir}/clusters`` (created on the
     first batch), maintaining the MinHash band index at
     ``{store_dir}/index`` alongside."""
-    p = dict(DEFAULT_PARAMS, **(params or {}))
+    p = DEFAULT_PARAMS
     spark = batch_df.sparkSession
 
     # band ONCE (eager checkpoint): consumed by within-batch pairs, the
@@ -71,7 +68,7 @@ def cluster_table_batch(
         eager=True
     )
     pairs = dd.minhash_candidate_pairs(
-        batch_df, "text", "doc_id", max_bucket=max_bucket, bands_df=batch_bands, **p
+        batch_df, "text", "doc_id", bands_df=batch_bands, **p
     )
 
     bands_root = f"{store_dir}/index/bands"
@@ -81,8 +78,7 @@ def cluster_table_batch(
     idx = batches.prior(spark, bands_root, batch_id)
     if idx is not None:
         vs_index = dd.minhash_pairs_between(
-            batch_df, idx, "text", "doc_id",
-            max_bucket=max_bucket, new_bands=batch_bands, **p,
+            batch_df, idx, "text", "doc_id", new_bands=batch_bands, **p,
         )
         pairs = pairs.union(vs_index).distinct()
 
@@ -93,7 +89,7 @@ def cluster_table_batch(
         graph.write_cluster_table(
             graph.dedup_clusters(pairs),
             f"{store_dir}/clusters",
-            provenance=dict(p, blocker="minhash", max_bucket=max_bucket),
+            provenance=dict(p, blocker="minhash", max_bucket=1000),
         )
 
     batches.write(batch_bands, bands_root, batch_id)

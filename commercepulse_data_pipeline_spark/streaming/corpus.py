@@ -50,12 +50,8 @@ def clean_corpus_batch(
     batch_id: int,
     store_dir: str,
     *,
-    params: dict | None = None,
-    max_bucket: int = 1000,
     strip_repeats: bool = False,
     repeat_window: int = 8,
-    min_repeats: int = 2,
-    min_remaining_tokens: int = 1,
     quarantine: bool = False,
     html_col: str | None = None,
     quality_model_dir: str | None = None,
@@ -64,7 +60,7 @@ def clean_corpus_batch(
     """Process one micro-batch of (doc_id, text, ...) rows through the
     curation stages — optional HTML extraction (``html_col``), optional
     within-doc repeat strip (``strip_repeats``, window ``repeat_window``,
-    ``min_repeats``, ``min_remaining_tokens``), scrub, exact dedup,
+    at least 2 repeats, at least 1 token left), scrub, exact dedup,
     near-dup filter against the accumulated index, optional quality gate
     (``quality_model_dir``/``quality_threshold``) — and append survivors
     + their bands under this batch's own directory.
@@ -82,7 +78,7 @@ def clean_corpus_batch(
     duplicate reports as ``near_dup`` here (in-batch exact dedup only
     sees its own batch; the identical doc's MinHash signature collides
     on every band, so the cross-batch index probe is what catches it)."""
-    p = dict(DEFAULT_PARAMS, **(params or {}))
+    p = DEFAULT_PARAMS
     spark = batch_df.sparkSession
     gate = (
         cur.quality_stage(spark, quality_model_dir, quality_threshold)
@@ -90,7 +86,7 @@ def clean_corpus_batch(
     )
     head = [cur.html_stage(html_col)] if html_col else []
     if strip_repeats:
-        head.append(cur.strip_repeats_stage(repeat_window, min_repeats, min_remaining_tokens))
+        head.append(cur.strip_repeats_stage(repeat_window, 2, 1))
     batch, rejects = cur.run(
         batch_df, head + [cur.scrub_stage(), cur.exact_dedup_stage()], quarantine
     )
@@ -113,7 +109,7 @@ def clean_corpus_batch(
     # under the gate the near-dup survivors gain the scorer and its
     # selection as consumers, on top of both writes: pin them
     near_dup = cur.cross_batch_near_dup_stage(
-        batch_bands, idx, p, max_bucket, pin=True if gate else None
+        batch_bands, idx, p, 1000, pin=True if gate else None
     )
     kept, tail_rejects = cur.run(batch, [near_dup] + ([gate] if gate else []), quarantine)
 

@@ -90,23 +90,19 @@ def dedup_embeddings_batch(
     *,
     tau: float = 0.95,
     n_planes: int = 8,
-    seed: int = 42,
-    max_bucket: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Process one micro-batch of (vec_id, embedding) rows: bucket,
     in-batch + cross-batch semantic dedup, append survivors + index."""
     spark = batch_df.sparkSession
-    first = batch_df.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = batch_df.select(F.size(F.col("embedding")).alias("d")).first()
     if first is None:
         return  # empty batch: nothing to write, planes can wait
-    planes = _read_or_create_planes(spark, store_dir, int(first["d"]), n_planes, seed)
+    planes = _read_or_create_planes(spark, store_dir, int(first["d"]), n_planes, 42)
 
     # bucket ONCE (eager checkpoint): consumed by within-batch pairs, the
     # probe keys, the cross-batch join, and both writes
     b = batch_df.withColumn(
-        "lsh_bucket", F.conv(lsh_bucket(F.col(vec_col), planes), 2, 10).cast("long")
+        "lsh_bucket", F.conv(lsh_bucket(F.col("embedding"), planes), 2, 10).cast("long")
     ).localCheckpoint(eager=True)
 
     def cos(va, vb):
@@ -115,8 +111,8 @@ def dedup_embeddings_batch(
 
     # within-batch: posting list per bucket, width-capped, lowest id wins
     posting = capped_posting_lists(
-        b.select("lsh_bucket", F.col(id_col)), ["lsh_bucket"], F.col(id_col),
-        max_bucket=max_bucket,
+        b.select("lsh_bucket", F.col("vec_id")), ["lsh_bucket"], F.col("vec_id"),
+        max_bucket=1000,
     )
     pairs = (
         posting.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
@@ -124,12 +120,12 @@ def dedup_embeddings_batch(
         .select("p.id_a", "p.id_b")
         .distinct()
     )
-    va = b.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = b.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    va = b.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    vb = b.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     within = (
         pairs.join(va, "id_a").join(vb, "id_b")
         .where(cos(F.col("__va"), F.col("__vb")) >= tau)
-        .select(F.col("id_b").alias(id_col))  # id_a < id_b: keep-first
+        .select(F.col("id_b").alias("vec_id"))  # id_a < id_b: keep-first
     )
     drop = within
 
@@ -143,19 +139,19 @@ def dedup_embeddings_batch(
         w = Window.partitionBy("lsh_bucket")
         cand = (
             cand.withColumn("__bn", F.count(F.lit(1)).over(w))
-            .where(F.col("__bn") <= max_bucket)
+            .where(F.col("__bn") <= 1000)
             .drop("__bn")
         )
         arriving = (
             cand.select(
-                F.col(id_col).alias("__old_id"),
-                F.col(vec_col).alias("__va"),
+                F.col("vec_id").alias("__old_id"),
+                F.col("embedding").alias("__va"),
                 "lsh_bucket",
             )
             .join(
                 b.select(
-                    F.col(id_col).alias("__new_id"),
-                    F.col(vec_col).alias("__vb"),
+                    F.col("vec_id").alias("__new_id"),
+                    F.col("embedding").alias("__vb"),
                     "lsh_bucket",
                 ),
                 "lsh_bucket",
@@ -164,10 +160,10 @@ def dedup_embeddings_batch(
                 (F.col("__old_id") != F.col("__new_id"))
                 & (cos(F.col("__va"), F.col("__vb")) >= tau)
             )
-            .select(F.col("__new_id").alias(id_col))
+            .select(F.col("__new_id").alias("vec_id"))
         )
         drop = drop.union(arriving)
 
-    kept = b.join(drop.distinct(), id_col, "left_anti")
+    kept = b.join(drop.distinct(), "vec_id", "left_anti")
     batches.write(kept.drop("lsh_bucket"), f"{store_dir}/vectors", batch_id)
     batches.write(kept, lists_root, batch_id, "lsh_bucket")

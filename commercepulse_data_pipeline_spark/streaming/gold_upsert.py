@@ -79,8 +79,6 @@ _SILVER = {
 def upsert_gold_batch(
     batch_df: DataFrame,
     store_dir: str,
-    *,
-    revenue_all_statuses: bool = True,
 ) -> None:
     """One IVM step: fold a batch of raw envelope events into the silver
     tables and recompute the affected days of gold. Callable directly
@@ -122,7 +120,6 @@ def upsert_gold_batch(
         new["orders"].where(F.col("order_date").isin(affected_dates)),
         new["payments"],
         new["refunds"],
-        revenue_all_statuses=revenue_all_statuses,
     )
     # fact holds one row per (order_date, vendor) of the affected dates
     # only, and those dates leave the old gold here, so a keyed MERGE
@@ -141,7 +138,6 @@ def maintain_gold_daily_stream(
     checkpoint: str,
     *,
     trigger_once: bool = True,
-    revenue_all_statuses: bool = True,
 ):
     """Start the continuous gold maintenance query over a raw event
     stream (``read_event_stream`` output). ``{store_dir}/gold`` converges
@@ -153,7 +149,7 @@ def maintain_gold_daily_stream(
         stream,
         checkpoint,
         lambda batch_df, _batch_id: upsert_gold_batch(
-            batch_df, store_dir, revenue_all_statuses=revenue_all_statuses
+            batch_df, store_dir
         ),
         trigger_once=trigger_once,
     )

@@ -59,8 +59,6 @@ def passage_dedup_batch(
     batch_id: int,
     store_dir: str,
     *,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
     window_tokens: int = 8,
     min_docs: int = 2,
 ) -> None:
@@ -72,7 +70,7 @@ def passage_dedup_batch(
     fp_root = f"{store_dir}/fp_index"
 
     staged, occ = window_occurrences(
-        batch_df, doc_col=doc_col, text_col=text_col, window_tokens=window_tokens
+        batch_df, doc_col="doc_id", text_col="text", window_tokens=window_tokens
     )
     # occurrence table feeds stats, the dup join and the index write —
     # eager checkpoint so the tokenize+md5 build runs once
@@ -109,8 +107,8 @@ def passage_dedup_batch(
         .select("__doc", "__pos")
     )
     out = splice_windows(
-        staged, dup_windows, doc_col=doc_col, window_tokens=window_tokens,
-        keep=[c for c in batch_df.columns if c != text_col], text_out=text_col,
+        staged, dup_windows, doc_col="doc_id", window_tokens=window_tokens,
+        keep=[c for c in batch_df.columns if c != "text"], text_out="text",
     )
     batches.write(out, f"{store_dir}/corpus", batch_id)
     batches.write(
@@ -126,7 +124,6 @@ def seed_probe_fingerprints(
     probes: DataFrame,
     store_dir: str,
     *,
-    text_col: str = "text",
     window_tokens: int = 8,
     min_docs: int = 2,
 ) -> None:
@@ -139,7 +136,7 @@ def seed_probe_fingerprints(
     :func:`operators.contamination.scrub_contamination` semantics applied
     continuously. Idempotent overwrite; call before (or any time during)
     the stream."""
-    fps = rolling_fingerprints(F.col(text_col), window_tokens)
+    fps = rolling_fingerprints(F.col("text"), window_tokens)
     batches.write(
         probes.select(F.explode_outer(fps).alias("fp"))
         .where(F.col("fp").isNotNull())

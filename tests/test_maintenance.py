@@ -223,7 +223,7 @@ def _corpus_store(spark, tmp_path, n_batches=4):
     for bid, rows in enumerate(batches):
         clean_corpus_batch(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            bid, store, max_bucket=100000,
+            bid, store,
         )
     return store
 
@@ -259,7 +259,7 @@ def test_compact_streaming_index_corpus_stays_live(spark, tmp_path):
     # micro-batch's near-dup of doc 1 is dropped
     clean_corpus_batch(
         spark.createDataFrame([(50, _BASE + " tonight")], "doc_id long, text string"),
-        4, store, max_bucket=100000,
+        4, store,
     )
     kept = {r.doc_id for r in
             spark.read.parquet(f"{store}/corpus").select("doc_id").collect()}
@@ -451,7 +451,7 @@ def test_compact_streaming_index_refold_crash_keeps_new_consolidated(
                      (5, (50, "more unrelated content five"))):
         clean_corpus_batch(
             spark.createDataFrame([doc], "doc_id long, text string"),
-            bid, store, max_bucket=100000,
+            bid, store,
         )
     rows_before = spark.read.parquet(bands_root).count()
 

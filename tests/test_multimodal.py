@@ -1665,10 +1665,10 @@ def test_image_ahash_incremental_between(spark):
         [("recrawl", _ppm_from_gray(recrawl)), ("fresh", _ppm_from_gray(fresh))],
         "media_id string, content binary",
     )
-    idx = image_ahash(index_media).where("ahash is not null")
-    new = image_ahash(batch_media).where("ahash is not null")
+    idx = image_ahash(index_media).where("ahash is not null").withColumnRenamed("ahash", "sig")
+    new = image_ahash(batch_media).where("ahash is not null").withColumnRenamed("ahash", "sig")
     pairs = {(r.id_a, r.id_b) for r in sig_hamming_pairs_between(
-        new, idx, id_col="media_id", sig_col="ahash", hamming_threshold=6
+        new, idx, id_col="media_id", hamming_threshold=6
     ).collect()}
     assert pairs == {("orig", "recrawl")}
 

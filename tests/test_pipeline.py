@@ -130,14 +130,6 @@ def test_fact_order_daily_values(silver):
     assert total_gross == 1000.0 + 500.0 + 250.0 + 10.0
 
 
-def test_fact_order_daily_success_only_definition(silver):
-    orders, payments, refunds = silver
-    daily = build_fact_order_daily(orders, payments, refunds, revenue_all_statuses=False)
-    rows = {(str(r.order_date), r.vendor): r for r in daily.collect()}
-    # success-only definition: the failed O2 payment is excluded
-    assert rows[("2026-02-10", "vendor_a")].gross_revenue == 0.0
-
-
 def test_readme_analytics_queries(silver):
     orders, payments, refunds = silver
     daily = build_fact_order_daily(orders, payments, refunds)

@@ -148,7 +148,7 @@ def test_shingle_path_single_tokenization(spark):
     optimized = sig._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("split(lower") == 1, optimized
 
-    sh = dd.simhash_table(df, "text", "doc_id", shingle_n=2)
+    sh = dd.simhash_table(df, "text", "doc_id")
     optimized = sh._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("split(lower") == 1, optimized
 

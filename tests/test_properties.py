@@ -426,23 +426,20 @@ def test_dedup_lines_sorted_form_matches_naive(spark, docs):
 
 @given(
     edges=st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=40
+        st.tuples(st.integers(0, 20), st.integers(0, 20)), min_size=1, max_size=40
     )
 )
 @pytest.mark.slow
 @settings(**_SETTINGS)
-def test_connected_components_star_matches_hash_to_min(spark, edges):
-    """Both CC algorithms produce identical (node, component) labelings on
-    ANY graph (self-loops, duplicates, disconnected pieces included) —
-    and both match a pure-Python union-find model."""
+def test_connected_components_matches_union_find(spark, edges):
+    """connected_components produces the (node, component) labeling of a
+    pure-Python union-find model on ANY graph within the round budget
+    (self-loops, duplicates, disconnected pieces included; 21 nodes keep
+    every diameter inside it)."""
     from commercepulse_data_pipeline_spark.operators.graph import connected_components
 
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = {(r.node, r.component)
-         for r in connected_components(df, max_iter=60).collect()}
-    b = {(r.node, r.component)
-         for r in connected_components(df, max_iter=60, algorithm="star").collect()}
-    assert a == b
+    a = {(r.node, r.component) for r in connected_components(df).collect()}
 
     parent: dict[int, int] = {}
 

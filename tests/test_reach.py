@@ -37,9 +37,41 @@ KEPT = {
     "functions.pins.set_pin_policy": "the reliable-checkpoint directory is "
     "a deployment setting",
     "functions.pins.get_pin_policy": "reads back set_pin_policy",
+    "operators.graph.read_cluster_table_meta": "reads back the provenance "
+    "sidecar write_cluster_table stores; the cluster-table CLI tests check "
+    "what the CLI records there",
     "operators.similarity.lsh_topk_indexed": "the only reader of the LSH "
     "index the stream-dedup-embeddings store writes; "
     "test_stream_dedup_embeddings_cross_batch checks the store with it",
+}
+
+# Optional parameters no entry point sets that stay, each for its reason:
+# a deployment setting, or a seam a Tier-1 correctness test needs.
+# Nothing else goes here.
+KEPT_OPTIONS = {
+    "streaming.ingest.read_event_stream(max_files_per_trigger)": "test seam: "
+    "the gold stream tests set 1 to split one landing into a micro-batch per "
+    "file and check the fold converges to the batch build",
+    "multimodal.extract_features(batch_rows)": "test seam: "
+    "test_extract_features_partition_independent and "
+    "test_real_decode_distributed cut partitions into 1-2-row decode chunks",
+    "operators.sketches.write_sketch_rollup(mode)": "test seam: "
+    "test_sketch_rollup_incremental_append appends one day at a time and "
+    "checks range queries merge across appends",
+    "operators.sketches.write_mg_rollup(mode)": "test seam: "
+    "test_mg_incremental_append_and_shard_filter appends one shard at a time",
+    "operators.sketches.write_bloom_rollup(mode)": "test seam: "
+    "test_bloom_rollup_append_is_idempotent re-appends a shard",
+    "operators.windows.robust_anomalies(pin_input)": "deployment setting: an "
+    "input bounded only by corpus size must not be pinned (functions/pins.py)",
+    "sources.readers.read_bronze(merge_schema)": "deployment setting: a "
+    "bronze store written before a vendor added a column reads with "
+    "mergeSchema",
+    "streaming.corpus.clean_corpus_batch(strip_repeats)": "test seam: "
+    "test_stream_clean_corpus_strip_repeats checks the streaming twin's "
+    "repeat-strip stage",
+    "streaming.corpus.clean_corpus_batch(repeat_window)": "test seam: "
+    "test_stream_clean_corpus_strip_repeats fits the window to its short docs",
 }
 
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -140,9 +172,11 @@ def _is_all(stmt: ast.stmt) -> bool:
     return any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets)
 
 
-def unreached_defs(package: pathlib.Path, roots: list[pathlib.Path]) -> list[str]:
-    """Top-level defs of ``package`` (``module.name``) that nothing
-    reached names, walked to a fixpoint from the roots."""
+def _walk(package: pathlib.Path, roots: list[pathlib.Path]):
+    """Walk names from the roots to a fixpoint. Returns every top-level
+    package def by name (``name -> [(module.name, stmt)]``), the names
+    the walk met, and the bodies it walked: the roots, the package's
+    module-level statements and dunders, and every reached def."""
     todo: list[ast.AST] = [ast.parse(root.read_text()) for root in roots]
     defs: dict[str, list[tuple[str, ast.stmt]]] = {}
     for module, path in _modules(package).items():
@@ -159,12 +193,112 @@ def unreached_defs(package: pathlib.Path, roots: list[pathlib.Path]) -> list[str
             ):
                 todo.append(stmt)
     named: set[str] = set()
+    walked: list[ast.AST] = []
     while todo:
-        for name in _named(todo.pop()):
+        node = todo.pop()
+        walked.append(node)
+        for name in _named(node):
             if name not in named:
                 named.add(name)
                 todo.extend(stmt for _, stmt in defs.get(name, ()))
+    return defs, named, walked
+
+
+def unreached_defs(package: pathlib.Path, roots: list[pathlib.Path]) -> list[str]:
+    """Top-level defs of ``package`` (``module.name``) that nothing
+    reached names, walked to a fixpoint from the roots."""
+    defs, named, _ = _walk(package, roots)
     return sorted(d for name, found in defs.items() if name not in named for d, _ in found)
+
+
+def _options(fn: ast.FunctionDef) -> dict[str, tuple[int | None, ast.expr]]:
+    """Optional parameters: ``name -> (position or None, default)``."""
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    first = len(positional) - len(args.defaults)
+    out = {a.arg: (first + i, d) for i, (a, d) in enumerate(zip(positional[first:], args.defaults))}
+    out.update({a.arg: (None, d) for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None})
+    return out
+
+
+def _call_name(call: ast.Call) -> str | None:
+    return getattr(call.func, "id", getattr(call.func, "attr", None))
+
+
+def unset_options(package: pathlib.Path, roots: list[pathlib.Path]) -> list[str]:
+    """Optional parameters of reached top-level package functions
+    (``module.fn(param)``) that no root or reached body sets and that
+    ``KEPT_OPTIONS`` does not hold.
+
+    A call to ``fn`` sets ``param`` when it passes it by keyword or
+    covers its position with a value other than the default's own
+    expression (a root's call sets it with any value), or spreads
+    ``*args``/``**kw``. A value that is a plain name of the enclosing
+    package function's own option (``p=p``) sets it only if that option
+    is set, to a fixpoint. A function named other than as a call target
+    (stored, wrapped, ``setattr``-patched) has every option set.
+    ``cli.py`` functions and dunders are roots and ``KEPT`` functions are
+    not reached, so none of them is checked."""
+    defs, named, walked = _walk(package, roots)
+    fns = {
+        qual: stmt
+        for found in defs.values()
+        for qual, stmt in found
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)) and stmt.name in named
+    }
+    options = {qual: _options(stmt) for qual, stmt in fns.items()}
+    owner = {id(stmt): qual for qual, stmt in fns.items()}
+    as_value: set[str] = set()
+    is_set = {
+        (f"{package.name}.{name.partition('(')[0]}", name.partition("(")[2][:-1])
+        for name in KEPT_OPTIONS
+    }
+    follows: list[tuple[tuple[str, str], tuple[str, str]]] = []
+    for body in walked:
+        enclosing = owner.get(id(body))
+        in_root = isinstance(body, ast.Module)
+        targets = {id(n.func) for n in ast.walk(body) if isinstance(n, ast.Call)}
+        for node in ast.walk(body):
+            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in targets:
+                as_value.add(getattr(node, "id", getattr(node, "attr", None)))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                as_value.add(node.value)
+            if not isinstance(node, ast.Call):
+                continue
+            spread = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                kw.arg is None for kw in node.keywords
+            )
+            given = {kw.arg: kw.value for kw in node.keywords if kw.arg is not None}
+            for qual, _ in defs.get(_call_name(node), ()):
+                for param, (pos, default) in options.get(qual, {}).items():
+                    value = given.get(param)
+                    if pos is not None and pos < len(node.args):
+                        value = node.args[pos]
+                    if spread:
+                        is_set.add((qual, param))
+                    elif value is None or (not in_root and ast.dump(value) == ast.dump(default)):
+                        continue
+                    elif (
+                        enclosing is not None
+                        and isinstance(value, ast.Name)
+                        and value.id in options[enclosing]
+                    ):
+                        follows.append(((qual, param), (enclosing, value.id)))
+                    else:
+                        is_set.add((qual, param))
+    is_set |= {
+        (qual, param) for qual, stmt in fns.items() if stmt.name in as_value for param in options[qual]
+    }
+    grew = True
+    while grew:
+        grew = False
+        for target, source in follows:
+            if source in is_set and target not in is_set:
+                is_set.add(target)
+                grew = True
+    return sorted(
+        f"{qual}({param})" for qual, opts in options.items() for param in opts if (qual, param) not in is_set
+    )
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -174,6 +308,10 @@ def test_every_package_module_is_reached_from_an_entry_point():
 def test_every_package_function_is_reached_from_an_entry_point():
     kept = sorted(f"{PACKAGE.name}.{name}" for name in KEPT)
     assert unreached_defs(PACKAGE, _roots(PACKAGE)) == kept
+
+
+def test_every_optional_parameter_is_set_from_an_entry_point():
+    assert unset_options(PACKAGE, _roots(PACKAGE)) == []
 
 
 def test_walk_reports_an_unimported_module(tmp_path):
@@ -234,3 +372,41 @@ def test_walk_reports_an_unnamed_function(tmp_path):
     assert unreached_defs(copy, roots + [script]) == sorted(
         kept + [f"{pkg}.fns.exported", f"{pkg}.fns.orphan"]
     )
+
+
+def test_walk_reports_an_unset_option(tmp_path):
+    """The option check itself, on a copy of the package: an added keyword
+    that no call sets is reported, and so is one that a package call sets
+    only to its default or through an unset pass-through; keywords set by
+    name, by position, through a set pass-through, through a ``**kw``
+    spread, or on a function used as a value are not."""
+    pkg = PACKAGE.name
+    copy = tmp_path / pkg
+    shutil.copytree(PACKAGE, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    (copy / "opts.py").write_text(
+        "def opt_main(x, by_pos=0, *, by_name=0, unset=0, as_default=0):\n"
+        "    return opt_inner(x, passed=by_name, dropped=unset) + opt_spread(x, **{})\n"
+        "\n\n"
+        "def opt_inner(x, *, passed=0, dropped=0):\n"
+        "    return x\n"
+        "\n\n"
+        "def opt_spread(x, *, by_spread=0):\n"
+        "    return x\n"
+        "\n\n"
+        "def opt_value(x, *, stored=0):\n"
+        "    return x\n"
+        "\n\n"
+        "TABLE = [opt_value]\n"
+        "\n\n"
+        "def opt_default(x):\n"
+        "    return opt_main(x, as_default=0)\n"
+    )
+    script = tmp_path / "script.py"
+    script.write_text(
+        f"from {pkg} import opts\n\n\n"
+        "def run():\n"
+        "    opts.opt_main(1, 2, by_name=3)\n"
+        "    opts.opt_default(1)\n"
+    )
+    unset = ("opt_inner(dropped)", "opt_main(as_default)", "opt_main(unset)")
+    assert unset_options(copy, _roots(copy) + [script]) == [f"{pkg}.opts.{o}" for o in unset]

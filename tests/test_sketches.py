@@ -157,9 +157,8 @@ def test_mg_boundary_ties_drop_by_value_and_keep_offset(spark, tmp_path):
 
 
 def test_mg_incremental_append_and_shard_filter(spark, tmp_path):
-    """Shards append independently (the incremental build path); a shard
-    filter prunes both summary scans and tightens the bound to the
-    selected shards only."""
+    """Shards append independently (the incremental build path); the
+    merged summaries over every appended shard keep the MG bound."""
     df = _zipf_docs(spark)
     path = str(tmp_path / "mg")
     for s in range(4):
@@ -167,11 +166,8 @@ def test_mg_incremental_append_and_shard_filter(spark, tmp_path):
             df.where(F.col("source") == f"src{s}"), path,
             shard_col="source", item_col="token", capacity=8, mode="append",
         )
-    sub = sk.heavy_hitters_over_shards(
-        spark, path, shard_col="source", item_col="token",
-        shard_filter=F.col("source").isin("src0", "src1"),
-    )
-    ref = df.where(F.col("source").isin("src0", "src1"))
+    sub = sk.heavy_hitters_over_shards(spark, path, shard_col="source", item_col="token")
+    ref = df
     exact = {
         r["token"]: r["n"]
         for r in ref.groupBy("token").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -204,10 +200,10 @@ def test_mg_plans_are_scale_shaped(spark, tmp_path):
 
 def test_log2_hist_quantiles_error_bound_and_merge(spark):
     """HDR-style log2 histogram rollup: (a) every quantile estimate is
-    within the guaranteed relative error 2^-(sub_bits+1) of the exact
+    within the guaranteed relative error 2^-(SUB_BITS+1) of the exact
     inverted-CDF quantile; (b) merging per-shard partials equals building
     one histogram over the union (mergeable-summary property); (c) small
-    ticks (< 2^sub_bits) land in exact singleton buckets so their
+    ticks (< 2^SUB_BITS) land in exact singleton buckets so their
     quantiles are EXACT."""
     import random
 
@@ -227,15 +223,15 @@ def test_log2_hist_quantiles_error_bound_and_merge(spark):
     df = spark.createDataFrame(rows, "shard string, v long")
     probs = [("p01", 1, 100), ("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)]
 
-    hist = log2_hist_sketch(df, "v", shard_col="shard", sub_bits=6)
+    hist = log2_hist_sketch(df, "v", shard_col="shard")
     merged = {
         r["q_label"]: r["est"]
-        for r in merge_hist_quantiles(hist, probs, sub_bits=6).collect()
+        for r in merge_hist_quantiles(hist, probs).collect()
     }
     direct = {
         r["q_label"]: r["est"]
         for r in merge_hist_quantiles(
-            log2_hist_sketch(df, "v", sub_bits=6), probs, sub_bits=6
+            log2_hist_sketch(df, "v"), probs
         ).collect()
     }
     assert merged == direct  # partial-merge == one-shot build
@@ -253,7 +249,7 @@ def test_log2_hist_quantiles_error_bound_and_merge(spark):
     got = {
         r["q_label"]: r["est"]
         for r in merge_hist_quantiles(
-            log2_hist_sketch(small, "v", sub_bits=6), probs, sub_bits=6
+            log2_hist_sketch(small, "v"), probs
         ).collect()
     }
     ys = sorted([1, 1, 2, 5, 8, 13, 21, 34, 55])

@@ -204,7 +204,7 @@ def test_stream_clean_corpus_cross_batch_neardup(spark, tmp_path):
     q = batches.start(
         batches.drops(spark, str(drops), "doc_id long, text string", max_files_per_trigger=1),
         str(tmp_path / "ckpt"),
-        lambda df, i: clean_corpus_batch(df, i, store, max_bucket=100000),
+        lambda df, i: clean_corpus_batch(df, i, store),
     )
     q.awaitTermination(120)
 
@@ -236,25 +236,6 @@ def test_stream_clean_corpus_cross_batch_neardup(spark, tmp_path):
               dd.minhash_pairs_incremental(batch4, spark, f"{store}/index").collect()}
     assert (30, 40) in pairs4           # batch-3 doc findable only via the append
 
-    # write_minhash_index(mode=append) must take the SAME layout-aware
-    # path (r6 self-review: it previously flat-appended, and Spark's
-    # partition discovery silently DROPS flat root files — the appended
-    # batch would vanish from every later dedup with no error)
-    n_before = spark.read.parquet(f"{store}/index/bands").count()
-    meta = dd.read_minhash_index_meta(spark, f"{store}/index")
-    dd.write_minhash_index(
-        batch4, f"{store}/index", mode="append",
-        num_hashes=int(meta["num_hashes"]), bands=int(meta["bands"]),
-        shingle_n=int(meta["shingle_n"]),
-    )
-    assert spark.read.parquet(f"{store}/index/bands").count() > n_before
-    batch5 = spark.createDataFrame(
-        [(50, base + " tonight indeed truly")], "doc_id long, text string"
-    )
-    pairs5 = {(r.id_a, r.id_b) for r in
-              dd.minhash_pairs_incremental(batch5, spark, f"{store}/index").collect()}
-    assert (40, 50) in pairs5           # batch-4 doc visible only if the append landed
-
 
 def test_clean_corpus_batch_replay_idempotent(spark, tmp_path):
     """Checkpoint-replay safety: re-running a batch under the SAME
@@ -271,11 +252,11 @@ def test_clean_corpus_batch_replay_idempotent(spark, tmp_path):
          (3, "entirely unrelated content")],
         "doc_id long, text string",
     )
-    clean_corpus_batch(batch, 0, store, max_bucket=100000)
+    clean_corpus_batch(batch, 0, store)
     first = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
     assert first == {1, 3}                   # keep-first: lowest id wins
 
-    clean_corpus_batch(batch, 0, store, max_bucket=100000)   # replay
+    clean_corpus_batch(batch, 0, store)   # replay
     again = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
     assert again == first                    # no data loss on replay
     # index mirrors the corpus (bands only for kept docs)
@@ -287,7 +268,7 @@ def test_clean_corpus_batch_replay_idempotent(spark, tmp_path):
     batch1 = spark.createDataFrame(
         [(10, base + " tonight as well")], "doc_id long, text string"
     )
-    clean_corpus_batch(batch1, 1, store, max_bucket=100000)
+    clean_corpus_batch(batch1, 1, store)
     final = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
     assert final == {1, 3}                   # 10 dropped as cross-batch dup
 
@@ -417,7 +398,7 @@ def test_corpus_stream_crash_replay_from_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def crashing(bdf, bid):
-        clean_corpus_batch(bdf, bid, store, max_bucket=100000)
+        clean_corpus_batch(bdf, bid, store)
         if bid == 1:
             # torn write: the second sink's output vanishes with the crash
             shutil.rmtree(f"{store}/index/bands/ingest_batch=1")
@@ -440,7 +421,7 @@ def test_corpus_stream_crash_replay_from_checkpoint(spark, tmp_path):
     q2 = batches.start(
         batches.drops(spark, drops, "doc_id long, text string", max_files_per_trigger=1),
         ckpt,
-        lambda df, i: clean_corpus_batch(df, i, store, max_bucket=100000),
+        lambda df, i: clean_corpus_batch(df, i, store),
     )
     q2.awaitTermination(120)
     kept = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
@@ -1187,7 +1168,7 @@ def test_stream_clean_corpus_strip_repeats(spark, tmp_path):
         batches.drops(spark, str(drops), "doc_id long, text string", max_files_per_trigger=1),
         str(tmp_path / "ckpt"),
         lambda df, i: clean_corpus_batch(
-            df, i, store, max_bucket=100000, strip_repeats=True, repeat_window=4
+            df, i, store, strip_repeats=True, repeat_window=4
         ),
     )
     q.awaitTermination(120)
@@ -1232,7 +1213,7 @@ def test_stream_clean_corpus_quarantine_reasons(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    clean_corpus_batch(b0, 0, store, max_bucket=100000, quarantine=True)
+    clean_corpus_batch(b0, 0, store, quarantine=True)
     kept0 = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
     q0 = {r.doc_id: r.reason for r in
           spark.read.parquet(f"{store}/quarantine/ingest_batch=0").collect()}
@@ -1251,7 +1232,7 @@ def test_stream_clean_corpus_quarantine_reasons(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    clean_corpus_batch(b1, 1, store, max_bucket=100000, quarantine=True)
+    clean_corpus_batch(b1, 1, store, quarantine=True)
     q1 = {r.doc_id: r.reason for r in
           spark.read.parquet(f"{store}/quarantine/ingest_batch=1").collect()}
     kept_all = {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()}
@@ -1259,7 +1240,7 @@ def test_stream_clean_corpus_quarantine_reasons(spark, tmp_path):
     assert q1 == {10: "near_dup", 11: "near_dup"}
 
     # replay batch 1: same quarantine partition, no duplication
-    clean_corpus_batch(b1, 1, store, max_bucket=100000, quarantine=True)
+    clean_corpus_batch(b1, 1, store, quarantine=True)
     q1_again = [
         (r.doc_id, r.reason)
         for r in spark.read.parquet(f"{store}/quarantine/ingest_batch=1").collect()
@@ -1269,7 +1250,7 @@ def test_stream_clean_corpus_quarantine_reasons(spark, tmp_path):
     b2 = spark.createDataFrame(
         [(20, "third batch totally novel text")], "doc_id long, text string"
     )
-    clean_corpus_batch(b2, 2, store, max_bucket=100000)
+    clean_corpus_batch(b2, 2, store)
     import os
     assert not os.path.exists(f"{store}/quarantine/ingest_batch=2")
 
@@ -1379,7 +1360,7 @@ def test_cluster_stream_crash_replay_from_checkpoint(spark, tmp_path):
     )
 
     def crashing(bdf, bid):
-        cluster_table_batch(bdf, bid, store, max_bucket=100000)
+        cluster_table_batch(bdf, bid, store)
         if bid == 1:
             # torn crash: bands partition gone AND the swap interrupted
             # between its two renames (rows only reachable at .old)
@@ -1410,13 +1391,13 @@ def test_cluster_stream_crash_replay_from_checkpoint(spark, tmp_path):
     q2 = batches.start(
         batches.drops(spark, drops, "doc_id long, text string", max_files_per_trigger=1),
         ckpt,
-        lambda df, i: cluster_table_batch(df, i, store, max_bucket=100000),
+        lambda df, i: cluster_table_batch(df, i, store),
     )
     q2.awaitTermination(120)
 
     everything = spark.read.parquet(drops)
     want = sorted(map(tuple, dedup_clusters(
-        minhash_candidate_pairs(everything, "text", "doc_id", max_bucket=100000)
+        minhash_candidate_pairs(everything, "text", "doc_id")
     ).collect()))
     got = sorted(map(tuple, read_cluster_table(spark, f"{store}/clusters").collect()))
     assert got == want
@@ -1472,7 +1453,7 @@ def test_stream_clean_corpus_html_and_quality_gate(spark, tmp_path):
         batches.drops(spark, str(drops), "doc_id long, page string"),
         str(tmp_path / "ckpt"),
         lambda df, i: clean_corpus_batch(
-            df, i, store, max_bucket=100000, quarantine=True,
+            df, i, store, quarantine=True,
             html_col="page", quality_model_dir=model_dir,
         ),
     )
@@ -1491,7 +1472,7 @@ def test_stream_clean_corpus_html_and_quality_gate(spark, tmp_path):
         f"{store}/corpus/ingest_batch=0").collect()))
     batch_df = spark.read.parquet(str(drops / "b1.parquet"))
     clean_corpus_batch(
-        batch_df, 0, store, quarantine=True, max_bucket=100000,
+        batch_df, 0, store, quarantine=True,
         html_col="page", quality_model_dir=model_dir,
     )
     after = sorted(map(tuple, spark.read.parquet(
