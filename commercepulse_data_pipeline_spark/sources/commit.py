@@ -1,33 +1,38 @@
-"""The repo's two local-filesystem commit protocols, and the only code in
+"""The repo's one local-filesystem commit protocol, and the only code in
 the package that renames store directories.
 
-**Swap** replaces whole directories: the caller writes each new table to
-its ``tmp`` sibling, then :func:`swap` renames each live dir aside to
-``old`` and each ``tmp`` in. A swap of several tables first records its
-intent (a marker written via tmp + fsync + rename, like the fold marker);
-that record is the commit point. :func:`recover_swap`, called before the
-next read, rolls forward past it (the remaining tables are renamed in)
-and discards the tmps before it, so the tables always move together —
-all old or all new. A one-table swap needs no record: a crash between
-its two renames leaves the only copy at ``old``, which recovery adopts
-back. Users: ``readers`` (``<path>._compact_*``, ``<path>._purge_*``),
-``streaming/gold_upsert`` (``<store>/<table>.{tmp,old}`` + ``_SWAP.json``),
-``operators/graph.update_cluster_table`` (``clusters.{tmp,old}``; the
-``old`` copy is kept as the rollback copy).
+A commit replaces or drops whole directories ("tables"). The caller
+writes each replaced table to its ``tmp`` sibling; :func:`swap` then
+renames each live dir aside to ``old``, renames each ``tmp`` in and
+deletes the ``old`` dirs. A dropped table has no ``tmp``: it is renamed
+aside and deleted. A commit of several tables first records its intent
+(a marker written via tmp + fsync + rename, listing every table by its
+paths relative to the marker's directory, so a copied store still
+recovers). Nothing moves before the record, and the record is the
+commit point. :func:`recover_swap`, called before the next read, rolls
+forward from the tables the record lists and, with no record, discards
+the tmps, so the tables always move together — all old or all new. A
+one-table swap needs no record: a crash between its two renames leaves
+the only copy at ``old``, which recovery adopts back.
 
-**Fold** consolidates the append-only ``ingest_batch=N`` partitions of
-a streaming index store: ``readers.compact_streaming_index`` writes all
-but the ``keep_latest`` newest partitions (plus any previous
-consolidated one) as one ``ingest_batch=-1`` partition under
-``<root>._fold_tmp``, then :func:`_fold_commit` sets the old
-consolidated aside in ``<root>._fold_old``, writes ``_FOLDED.json`` there
-(commit point), renames the new consolidated in and drops the folded
-dirs. :func:`recover_fold` finishes or undoes an interrupted fold;
-``readers.fold_consistent_read`` reads every resting state of it.
+Users:
 
-Each rename is atomic on POSIX; neither protocol speaks HDFS or object
-stores — there, a table format's commit (Delta/Iceberg/Hudi) is the
-answer.
+- ``readers`` layout rewrites: ``<path>._compact_*``, ``<path>._purge_*``
+  (one table);
+- ``streaming/gold_upsert``: ``<store>/<table>.{tmp,old}`` for four
+  tables, recorded in ``<store>/_SWAP.json``;
+- ``operators/graph.update_cluster_table``: ``clusters.{tmp,old}``, the
+  ``old`` copy kept as the rollback copy;
+- ``readers.compact_streaming_index``, the partition fold of a streaming
+  index store: the new consolidated ``ingest_batch=-1`` partition is a
+  replaced table and each folded ``ingest_batch=N`` partition a dropped
+  one, with hidden ``<root>/.<partition>.{tmp,old}`` siblings and the
+  record at ``<root>/_SWAP.json``. ``readers.fold_consistent_read``
+  reads the store while that record is present.
+
+Each rename is atomic on POSIX; the protocol does not speak HDFS or
+object stores — there, a table format's commit (Delta/Iceberg/Hudi) is
+the answer.
 """
 
 from __future__ import annotations
@@ -38,8 +43,12 @@ import shutil
 from typing import Sequence
 from urllib.parse import urlparse
 
-# (live, tmp, old) paths of one swapped directory
-Table = tuple[str, str, str]
+# (live, tmp, old) paths of one committed directory; tmp is None for a
+# directory the commit drops
+Table = tuple[str, str | None, str]
+
+# the intent record's file name in a store directory
+INTENT = "_SWAP.json"
 
 # A folded store's layout: micro-batch N lands in ``<root>/ingest_batch=N``
 # and a fold consolidates into ``<root>/ingest_batch=-1``, a value no
@@ -82,25 +91,42 @@ def read_marker(path: str) -> dict | None:
         return None
 
 
+def intent_tables(intent: str) -> list[Table] | None:
+    """The tables a durable intent record lists, resolved against the
+    record's directory; None when there is no record."""
+    record = read_marker(intent)
+    if record is None:
+        return None
+    base = os.path.dirname(intent)
+    return [
+        tuple(None if p is None else os.path.normpath(os.path.join(base, p)) for p in table)
+        for table in record["tables"]
+    ]
+
+
 def swap(tables: Sequence[Table], *, intent: str | None = None, keep_old: bool = False) -> None:
-    """Replace each ``live`` dir with its fully written ``tmp`` dir.
-    Pass ``intent`` (a marker path) when more than one table must move as
-    a unit; ``keep_old`` leaves the replaced dirs at ``old`` until the
-    next swap (a rollback copy)."""
+    """Replace each ``live`` dir with its fully written ``tmp`` dir, and
+    drop each ``live`` dir whose ``tmp`` is None. Pass ``intent`` (a
+    marker path) when more than one table must move as a unit;
+    ``keep_old`` leaves the replaced dirs at ``old`` until the next swap
+    (a rollback copy)."""
     for _, _, old in tables:
         if os.path.exists(old):
             shutil.rmtree(old)  # left by an earlier swap; its live dir is current
     if intent:
-        _write_marker(intent, {"swap": [os.path.basename(live) for live, _, _ in tables]})
+        base = os.path.dirname(intent)
+        rel = [[None if p is None else os.path.relpath(p, base) for p in table] for table in tables]
+        _write_marker(intent, {"tables": rel})
     _roll_forward(tables, intent, keep_old)
 
 
 def _roll_forward(tables: Sequence[Table], intent: str | None, keep_old: bool) -> None:
     for live, tmp, old in tables:
-        if os.path.exists(tmp):  # else this table was already swapped in
+        if tmp is None or os.path.exists(tmp):  # else already swapped in
             if os.path.exists(live):
                 os.rename(live, old)
-            os.rename(tmp, live)
+            if tmp is not None:
+                os.rename(tmp, live)
     if not keep_old:
         for _, _, old in tables:
             shutil.rmtree(old, ignore_errors=True)
@@ -109,13 +135,15 @@ def _roll_forward(tables: Sequence[Table], intent: str | None, keep_old: bool) -
 
 
 def recover_swap(tables: Sequence[Table], *, intent: str | None = None, keep_old: bool = False) -> None:
-    """Finish or undo a swap that died part-way; call it with the same
-    arguments before reading the tables. Past the intent record, roll
-    forward: rename in every tmp still waiting. Before it, roll back:
-    adopt a stranded ``old`` whose live dir is missing (a one-table swap,
-    or a store written before intent records) and discard the tmps."""
-    if intent and read_marker(intent) is not None:
-        _roll_forward(tables, intent, keep_old)
+    """Finish or undo a swap that died part-way; call it before reading
+    the tables. Past the intent record, roll forward the tables the
+    record lists: rename aside every live dir still waiting and rename
+    in every tmp. Before it, roll back ``tables``: adopt a stranded
+    ``old`` whose live dir is missing (a one-table swap) and discard the
+    tmps."""
+    recorded = intent_tables(intent) if intent else None
+    if recorded is not None:
+        _roll_forward(recorded, intent, keep_old)
         return
     if intent:
         for stale in (intent, intent + ".tmp"):
@@ -124,62 +152,5 @@ def recover_swap(tables: Sequence[Table], *, intent: str | None = None, keep_old
     for live, tmp, old in tables:
         if not os.path.exists(live) and os.path.exists(old):
             os.rename(old, live)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def recover_fold(root: str) -> None:
-    """Crash recovery for an interrupted fold. The marker (written at
-    the commit point) lists the folded partition dirs: marker present →
-    roll FORWARD (place the consolidated partition from the tmp dir if
-    needed, delete the listed folded dirs, discard the set-aside state);
-    marker absent but set-aside dir present → roll BACK (adopt set-aside
-    partitions back, discard the tmp)."""
-    p = root.rstrip("/")
-    old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    marker = os.path.join(old_root, "_FOLDED.json")
-    m = read_marker(marker)
-    if m is not None:
-        dst = os.path.join(p, m["consolidated"])
-        src = os.path.join(tmp_root, m["consolidated"])
-        if not os.path.exists(dst) and os.path.exists(src):
-            os.rename(src, dst)
-        for name in m["folded"]:
-            # the folded list INCLUDES the old consolidated dir when a
-            # re-fold subsumed it — but at roll-forward time the dir at
-            # that name is the NEW consolidated partition (the old one
-            # sits in old_root); deleting it here would destroy the fold
-            # we are completing
-            if name == m["consolidated"]:
-                continue
-            d = os.path.join(p, name)
-            if os.path.exists(d):
-                shutil.rmtree(d)
-    elif os.path.isdir(old_root):
-        for entry in os.listdir(old_root):
-            if entry.startswith("_FOLDED.json"):  # torn/partial marker
-                continue
-            dst = os.path.join(p, entry)
-            if not os.path.exists(dst):
-                os.rename(os.path.join(old_root, entry), dst)
-    shutil.rmtree(old_root, ignore_errors=True)
-    shutil.rmtree(tmp_root, ignore_errors=True)
-
-
-def _fold_commit(p: str, cons_name: str, fold_names: list[str], had_consolidated: bool) -> None:
-    """Commit a fold whose consolidated partition is already written to
-    ``<p>._fold_tmp/<cons_name>``: set the old consolidated aside, write
-    the marker (COMMIT POINT — recovery rolls forward past it), rename
-    the new consolidated in, delete the folded dirs, clean up."""
-    old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    os.makedirs(old_root, exist_ok=True)
-    if had_consolidated:
-        os.rename(os.path.join(p, cons_name), os.path.join(old_root, cons_name))
-    _write_marker(os.path.join(old_root, "_FOLDED.json"), {"consolidated": cons_name, "folded": fold_names})
-    os.rename(os.path.join(tmp_root, cons_name), os.path.join(p, cons_name))
-    for name in fold_names:
-        d = os.path.join(p, name)
-        if os.path.exists(d) and name != cons_name:
-            shutil.rmtree(d)
-    shutil.rmtree(old_root, ignore_errors=True)
-    shutil.rmtree(tmp_root, ignore_errors=True)
-
+        if tmp is not None:
+            shutil.rmtree(tmp, ignore_errors=True)

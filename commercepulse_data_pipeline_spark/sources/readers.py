@@ -308,7 +308,7 @@ def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
     that case this returns False so the caller retries the batch instead
     of silently treating a compaction race as "first batch" and skipping
     cross-batch dedup. A root that exists counts as absent only when it
-    holds nothing but marker entries (``_SUCCESS``, ``_FOLDED.json*``,
+    holds nothing but marker entries (``_SUCCESS``, ``_SWAP.json*``,
     …) — i.e. created-but-never-written.
 
     The filesystem confirmation is LOCAL-FILESYSTEM-ONLY (the same
@@ -368,113 +368,82 @@ def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
 
 
 def fold_consistent_read(spark: SparkSession, root: str) -> DataFrame:
-    """READ-SIDE contract for the streaming index stores: return a
-    CONSISTENT view of the store at every resting point of the fold
-    protocol, so a monitoring job can probe concurrently with compaction
-    (and after a mid-fold crash, BEFORE any recovery runs — this function
-    never mutates the store).
+    """READ-SIDE contract for the streaming index stores: the store as
+    it stands before or after a fold, never a mix, at every resting point
+    of :func:`compact_streaming_index`'s commit — so a monitoring job can
+    probe concurrently with compaction, and after a mid-fold crash BEFORE
+    any recovery runs (this function never mutates the store).
 
-    The fold protocol (:func:`compact_streaming_index`) has two windows where a
-    naive ``spark.read.parquet(root)`` reads a WRONG store:
+    The fold commits through :func:`commit.swap`, which records its
+    intent before it moves anything, so with no record present the root
+    is the pre- or post-fold store and this is a plain partitioned read.
+    While a record is present, a plain read could miss the consolidated
+    partition (between its rename aside and its tmp's rename in) or
+    count a folded partition AND the new consolidated one — a double
+    count for the count-summing passage fingerprint index. The view then
+    reads the post-fold store, which every compactor guarantees answers
+    like the pre-fold one: each replaced partition (the consolidated
+    one) from its tmp while the tmp exists and from live once it does
+    not, plus the root with every replaced and dropped partition pruned
+    out. That is one plan branch per replaced partition plus one for the
+    root, whatever the partition count.
 
-    - pre-commit (old consolidated set aside, marker not yet written):
-      the old consolidated's rows are invisible → under-count. This
-      reader rolls BACK: root partitions + the set-aside consolidated.
-    - post-commit (marker written; new consolidated possibly not yet
-      renamed in, folded dirs possibly not yet deleted): folded partials
-      and the new consolidated can coexist → double-count for
-      count-summing stores (the passage fingerprint index). This reader
-      rolls FORWARD:
-      the new consolidated (from root, or from the tmp dir if the rename
-      hasn't happened) + only the partitions NOT in the marker's folded
-      list — exactly the post-fold store, which every compactor
-      guarantees answers like the pre-fold one.
-
-    With no fold in flight this is a plain partitioned read. Guarantee
-    scope: any RESTING state (crash-consistent). Against a compactor
-    advancing concurrently mid-call, a rename can still win the race
-    with the file listing — retry on FileNotFound, as with any
+    Guarantee scope: any RESTING state (crash-consistent). Against a
+    compactor advancing concurrently mid-call, a rename can still win the
+    race with the file listing — retry on FileNotFound, as with any
     concurrently-rewritten path.
 
-    LOCAL-ONLY by construction: marker/old-dir detection uses driver
-    ``os.path``/``os.listdir``, matching the fold protocol itself (the
-    compactors commit with driver-local renames). A non-file scheme
+    LOCAL-ONLY by construction: the record is read with Python file I/O,
+    matching the commit itself (local renames). A non-file scheme
     (``hdfs://``, ``s3a://``) would silently degrade to a plain read —
-    exactly the inconsistency window this reader exists to close — so it
+    exactly the miss or double count this reader exists to prevent — so it
     raises instead (ADVICE r9). Non-local stores need a compactor and a
     reader built on the same atomic-rename substrate (HDFS rename / a
-    table format's snapshot isolation), not this marker protocol."""
+    table format's snapshot isolation), not this protocol."""
     import os as _os
+    from functools import reduce
 
     if "://" in root:
         scheme = root.split("://", 1)[0]
         raise ValueError(
-            f"fold_consistent_read is local-filesystem-only (the fold "
-            f"marker protocol is driver-local rename/listdir); got "
+            f"fold_consistent_read is local-filesystem-only (the fold's "
+            f"intent record is read with local file I/O); got "
             f"scheme {scheme!r} for {root!r}. Use spark.read.parquet "
             f"directly (NO fold consistency) or a snapshot-isolated table "
             f"format for non-local stores."
         )
     p = root.rstrip("/")
-    old_root, tmp_root = p + "._fold_old", p + "._fold_tmp"
-    cons_name = f"{commit.BATCH_COL}={commit.CONSOLIDATED_BATCH}"
-    m = commit.read_marker(_os.path.join(old_root, "_FOLDED.json"))
-
-    def _part_df(path: str, value: int) -> DataFrame:
-        return spark.read.parquet(path).withColumn(
-            commit.BATCH_COL, F.lit(value).cast("int")
-        )
-
+    tables = commit.intent_tables(_os.path.join(p, commit.INTENT))
+    if tables is None:
+        return spark.read.parquet(p)
     prefix = commit.BATCH_COL + "="
-    if m is not None:
-        # post-commit: roll-forward view. TWO plan branches regardless of
-        # how many batch partitions exist (a per-partition union would
-        # make the plan grow with the store): the root read with the
-        # folded values pruned out, plus the new consolidated from
-        # wherever it currently lives.
-        folded_vals = [
-            int(name[len(prefix):])
-            for name in m["folded"]
-            if name != m["consolidated"]
-        ]
-        cons_at_root = _os.path.join(p, m["consolidated"])
-        cons_path = (
-            cons_at_root
-            if _os.path.isdir(cons_at_root)
-            else _os.path.join(tmp_root, m["consolidated"])
+
+    def value(path: str) -> int:
+        return int(_os.path.basename(path)[len(prefix):])
+
+    moved = [value(live) for live, _, _ in tables]
+    parts = [
+        spark.read.parquet(tmp if _os.path.isdir(tmp) else live).withColumn(
+            commit.BATCH_COL, F.lit(value(live)).cast("int")
         )
-        cons_df = _part_df(cons_path, commit.CONSOLIDATED_BATCH)
-        live = [
-            entry
-            for entry in _os.listdir(p)
-            if entry.startswith(prefix)
-            and entry != m["consolidated"]
-            and int(entry[len(prefix):]) not in folded_vals
-            and _os.path.isdir(_os.path.join(p, entry))
-        ]
-        if not live:
-            return cons_df
-        rest = spark.read.parquet(p).where(
-            ~F.col(commit.BATCH_COL).isin(
-                folded_vals + [commit.CONSOLIDATED_BATCH]
-            )
-        )
-        return rest.unionByName(cons_df)
-    if _os.path.isdir(_os.path.join(old_root, cons_name)):
-        # pre-commit: roll-back view (set-aside consolidated + everything
-        # still at root) — again two branches
-        cons_df = _part_df(
-            _os.path.join(old_root, cons_name), commit.CONSOLIDATED_BATCH
-        )
-        has_root_parts = any(
-            entry.startswith(prefix)
-            and _os.path.isdir(_os.path.join(p, entry))
-            for entry in _os.listdir(p)
-        )
-        if not has_root_parts:
-            return cons_df
-        return spark.read.parquet(p).unionByName(cons_df)
-    return spark.read.parquet(p)
+        for live, tmp, _ in tables
+        if tmp is not None
+    ]
+    if any(
+        entry.startswith(prefix)
+        and value(entry) not in moved
+        and _os.path.isdir(_os.path.join(p, entry))
+        for entry in _os.listdir(p)
+    ):
+        parts.insert(0, spark.read.parquet(p).where(~F.col(commit.BATCH_COL).isin(moved)))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _fold_table(p: str, name: str, *, drop: bool = False) -> commit.Table:
+    # hidden siblings inside the root: partition discovery skips names
+    # starting with "."
+    hidden = f"{p}/.{name}"
+    return (f"{p}/{name}", None if drop else hidden + ".tmp", hidden + ".old")
 
 
 def compact_streaming_index(
@@ -499,18 +468,19 @@ def compact_streaming_index(
     only the single uncommitted batch — so ``keep_latest >= 2`` guarantees
     a replayed batch's own partition is never folded out from under it.
     ``sub_partition_col`` preserves an inner layout (the embedding lists'
-    ``lsh_bucket``) through the rewrite.
+    ``lsh_bucket``) through the rewrite. Folding is row-preserving, so
+    the keep-first and idempotent-upsert decisions the sinks make against
+    the index do not change across a fold.
 
-    Crash safety: the fold commits through :mod:`sources.commit` — the
-    consolidated rewrite lands in a hidden tmp sibling, a marker file
-    written at the commit point lists the folded dirs, and an interrupted
-    fold is rolled forward past the marker or back before it by
-    :func:`commit.recover_fold` on the next call. Readers racing the swap
-    can transiently see the index without the consolidated rows (a
-    near-dup admitted once) or with folded rows duplicated (harmless:
-    candidate pairs are distinct, width caps momentarily tighter) —
-    :func:`fold_consistent_read` closes that window; a transactional
-    table format is the cluster-grade answer.
+    Crash safety: the fold is one :func:`commit.swap`. The new
+    consolidated partition is written to a hidden tmp inside the root
+    and is a replaced table; each folded partition is a dropped table.
+    The intent record (``<root>/_SWAP.json``) is written before any
+    rename, and the next call's :func:`commit.recover_swap` rolls an
+    interrupted fold forward past it or discards the tmp before it.
+    Readers racing the swap can see folded rows twice through a plain
+    read; :func:`fold_consistent_read` closes that window; a
+    transactional table format is the cluster-grade answer.
 
     Returns {"folded", "partitions_after", "files_after"}.
     """
@@ -518,8 +488,10 @@ def compact_streaming_index(
     import os as _os
 
     p = root.rstrip("/")
-    commit.recover_fold(p)
     prefix = commit.BATCH_COL + "="
+    cons = _fold_table(p, f"{prefix}{commit.CONSOLIDATED_BATCH}")
+    intent = _os.path.join(p, commit.INTENT)
+    commit.recover_swap([cons], intent=intent)
     parts = {
         int(entry[len(prefix):]): entry
         for entry in _os.listdir(p)
@@ -529,13 +501,10 @@ def compact_streaming_index(
     fold = real[: len(real) - keep_latest] if keep_latest else real
     if not fold:
         return {"folded": 0, "partitions_after": len(parts), "files_after": None}
-    had_consolidated = commit.CONSOLIDATED_BATCH in parts
-    fold_vals = fold + ([commit.CONSOLIDATED_BATCH] if had_consolidated else [])
-    fold_names = [parts[v] for v in fold_vals]
-    cons_name = f"{prefix}{commit.CONSOLIDATED_BATCH}"
+    fold_vals = fold + ([commit.CONSOLIDATED_BATCH] if commit.CONSOLIDATED_BATCH in parts else [])
 
     fold_bytes = sum(
-        _os.path.getsize(f) for name in fold_names for f in _data_files(_os.path.join(p, name))
+        _os.path.getsize(f) for v in fold_vals for f in _data_files(_os.path.join(p, parts[v]))
     )
     n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(p).where(F.col(commit.BATCH_COL).isin(fold_vals)).drop(commit.BATCH_COL)
@@ -543,8 +512,8 @@ def compact_streaming_index(
         writer = df.repartition(n_out, sub_partition_col).write.partitionBy(sub_partition_col)
     else:
         writer = df.repartition(n_out).write
-    writer.mode("overwrite").parquet(_os.path.join(p + "._fold_tmp", cons_name))
-    commit._fold_commit(p, cons_name, fold_names, had_consolidated)
+    writer.mode("overwrite").parquet(cons[1])
+    commit.swap([cons] + [_fold_table(p, parts[v], drop=True) for v in fold], intent=intent)
     return {
         "folded": len(fold),
         "partitions_after": len(parts) - len(fold_vals) + 1,

@@ -3,18 +3,22 @@ follows, and the only module that drives one.
 
 A store is a root directory whose micro-batch N lands in
 ``<root>/ingest_batch=N`` (``sources.commit.BATCH_COL``); a fold
-consolidates old batches into ``ingest_batch=-1``
-(``sources.commit.CONSOLIDATED_BATCH``). Replay safety comes from two
-rules, both kept here:
+(``sources.readers.compact_streaming_index``) consolidates old batches
+into ``ingest_batch=-1`` (``sources.commit.CONSOLIDATED_BATCH``) and
+commits through ``sources.commit.swap``, whose intent record
+``<root>/_SWAP.json`` marks a fold in flight. Replay safety comes from
+two rules, both kept here:
 
 - :func:`write` overwrites the batch's own partition, so a checkpoint
   replay of batch N (a crash between the sink's commit and the
   checkpoint's advance) replaces N's first attempt instead of
   duplicating it;
-- :func:`prior` reads the store fold-consistently WITHOUT batch N's own
-  partition, so a replayed batch never sees its first attempt as earlier
-  state (it would, e.g., drop both members of every within-batch
-  near-dup pair and overwrite the doc the first attempt kept).
+- :func:`prior` reads the store fold-consistently
+  (``readers.fold_consistent_read``: the post-fold store while an
+  intent record is present) WITHOUT batch N's own partition, so a
+  replayed batch never sees its first attempt as earlier state (it
+  would, e.g., drop both members of every within-batch near-dup pair
+  and overwrite the doc the first attempt kept).
 
 A sink is a plain function ``X_batch(batch_df, batch_id, store, ...)``;
 run it continuously with

@@ -98,9 +98,11 @@ def clean_corpus_batch(
         eager=True
     )
     bands_root = f"{store_dir}/index/bands"
-    # Fold-aware read: compact_streaming_index's pre-commit window would
-    # otherwise HIDE the consolidated bands partition — a silently missed
-    # near-dup, the worst failure mode for a dedup index. Without its own
+    # Fold-aware read: in a store whose compact_streaming_index fold is
+    # mid-commit (or crashed there), a plain read misses the consolidated
+    # bands partition between its rename aside and its tmp's rename in —
+    # a silently missed near-dup, the worst failure mode for a dedup
+    # index. Without its own
     # partition: a replayed batch would otherwise see its first attempt's
     # bands as "indexed", every within-batch near-dup pair would come back
     # as a cross-batch pair, BOTH members would be dropped, and the

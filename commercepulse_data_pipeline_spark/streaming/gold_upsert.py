@@ -86,7 +86,7 @@ def upsert_gold_batch(
     spark = batch_df.sparkSession
     paths = {t: os.path.join(store_dir, t) for t in _TABLES}
     tables = [(paths[t], paths[t] + ".tmp", paths[t] + ".old") for t in _TABLES]
-    intent = os.path.join(store_dir, "_SWAP.json")
+    intent = os.path.join(store_dir, commit.INTENT)
     # finish or undo a prior batch's interrupted swap before reading: a
     # missing table would otherwise read as "first batch ever" and be
     # rebuilt from this batch alone

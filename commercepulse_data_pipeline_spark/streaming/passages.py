@@ -33,7 +33,9 @@ attempt instead of splicing against it (the same replay hazard
 partitions, so the per-batch overwrite keeps the sum exact under
 replays. The index read goes through ``fold_consistent_read``, so a
 ``compact_streaming_index`` fold of the fp partitions (row-preserving —
-readers re-sum) can run concurrently.
+readers re-sum) can run concurrently: while the fold's intent record is
+present the read sees the post-fold store, never a folded partition
+beside the consolidated one that already holds its counts.
 
 At 100 TB: per-batch cost is O(batch) fingerprinting + one fp-keyed
 semi-restricted index join; batch text crosses exactly one doc-keyed

@@ -123,8 +123,8 @@ def test_compact_parquet_salts_big_hive_partition(spark, tmp_path):
 
 
 def test_recover_swap_adopts_stranded_dataset(spark, tmp_path):
-    """ADVICE r6: a crash between _swap_in's two renames strands the only
-    copy at <path>._purge_old; the next rewrite op adopts it back instead
+    """ADVICE r6: a crash between commit.swap's two renames strands the
+    only copy at <path>._purge_old; the next rewrite op adopts it back instead
     of failing at spark.read."""
     import os
 
@@ -319,100 +319,95 @@ def test_compact_streaming_index_embeddings_sub_partitions(spark, tmp_path):
     assert 10 not in kept and kept == {1, 2, 3}
 
 
-def test_fold_consistent_read_counts_set_aside_consolidated_before_commit(
-    spark, tmp_path, monkeypatch
-):
-    """A re-fold killed before its marker is durable leaves the old
-    consolidated partition set aside in ``._fold_old``: a plain read of
-    the root misses its rows, ``fold_consistent_read`` does not, and the
-    next compaction recovers and folds the same rows."""
-    import os
+# the re-fold's store-changing steps: the intent record's rename; the
+# consolidated partition renamed aside and its tmp in; the two folded
+# partitions renamed aside; the three set-aside dirs deleted; the
+# record removed
+_REFOLD_POINTS = 9
 
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        compact_streaming_index,
-        fold_consistent_read,
-    )
+
+@pytest.fixture(scope="module")
+def refold(spark, tmp_path_factory):
+    """A synthetic ``fp long, n long`` index store — a consolidated
+    partition, two batches to fold and one kept — re-folded once,
+    uninterrupted, with the store copied just before each rename, rmtree
+    and file removal the commit makes in it: copy k is exactly what a
+    crash at point k leaves on disk."""
+    import os
+    import shutil
+
+    from commercepulse_data_pipeline_spark.sources import commit
+    from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
     from commercepulse_data_pipeline_spark.streaming import batches
 
-    root = str(tmp_path / "idx")
-
-    def land(batch_id):
-        rows = [(batch_id, i) for i in range(batch_id + 1)]
+    base = tmp_path_factory.mktemp("refold")
+    root = str(base / "idx")
+    for batch_id, fps in (
+        (commit.CONSOLIDATED_BATCH, range(5)),
+        (0, range(3)),
+        (1, range(3, 7)),
+        (2, (0, 7)),
+    ):
+        rows = [(fp, batch_id + 2) for fp in fps]
         batches.write(spark.createDataFrame(rows, "fp long, n long"), root, batch_id)
+    before = _summed_counts(spark, root)
 
-    def probe():
-        return sorted(map(tuple, fold_consistent_read(spark, root).select("fp", "n").collect()))
+    copies: list[str] = []
 
-    for batch_id in range(3):
-        land(batch_id)
-    compact_streaming_index(spark, root, keep_latest=1)  # batches 0-1 -> consolidated
-    land(3)
-    truth = probe()
-    assert len(truth) == 10
+    def snapshot(path):
+        if root in str(path) and os.path.exists(path):
+            copies.append(str(base / f"point{len(copies) + 1}"))
+            shutil.copytree(root, copies[-1])
 
-    real_rename = os.rename
+    with pytest.MonkeyPatch.context() as mp:
+        for module, name in ((os, "rename"), (os, "replace"), (os, "remove"), (shutil, "rmtree")):
+            def patched(path, *a, _real=getattr(module, name), **kw):
+                snapshot(path)
+                return _real(path, *a, **kw)
 
-    def crash_marker(src, dst):
-        if str(dst).endswith("_FOLDED.json"):
-            raise RuntimeError("injected crash before commit")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_marker)
-    with pytest.raises(RuntimeError, match="before commit"):
-        compact_streaming_index(spark, root, keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.isdir(root + "._fold_old/ingest_batch=-1")
-    assert spark.read.parquet(root).count() < len(truth)
-    assert probe() == truth
-
-    stats = compact_streaming_index(spark, root, keep_latest=0)
-    assert stats["folded"] == 2 and stats["partitions_after"] == 1
-    assert probe() == truth
+            mp.setattr(module, name, patched)
+        compact_streaming_index(spark, root, keep_latest=1)
+    return {"root": root, "copies": copies, "before": before, "after": _store_rows(spark, root)}
 
 
-@pytest.mark.slow
-def test_compact_streaming_index_crash_rolls_forward(spark, tmp_path, monkeypatch):
-    """Kill the fold at its commit point (marker written, consolidated
-    partition not yet renamed in): the next call must roll FORWARD —
-    place the consolidated dir, drop the folded ones, lose nothing."""
+def _summed_counts(spark, root):
+    from commercepulse_data_pipeline_spark.sources.readers import fold_consistent_read
+
+    df = fold_consistent_read(spark, root).groupBy("fp").agg(F.sum("n").alias("n"))
+    return sorted(map(tuple, df.collect()))
+
+
+def _store_rows(spark, root):
     import os
 
-    from commercepulse_data_pipeline_spark.operators import dedup as dd
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        compact_streaming_index,
-    )
+    rows = spark.read.parquet(root).select("fp", "n", "ingest_batch").collect()
+    return sorted(os.listdir(root)), sorted(map(tuple, rows))
 
-    store = _corpus_store(spark, tmp_path)
-    bands_root = f"{store}/index/bands"
-    rows_before = spark.read.parquet(bands_root).count()
 
-    real_rename = os.rename
-    cons_dst = os.path.join(bands_root, "ingest_batch=-1")
+def test_refold_uninterrupted_keeps_counts(spark, refold):
+    assert len(refold["copies"]) == _REFOLD_POINTS
+    assert _summed_counts(spark, refold["root"]) == refold["before"]
+    names, _ = refold["after"]
+    assert names == ["ingest_batch=-1", "ingest_batch=2"]
 
-    def crashing(src, dst):
-        if str(dst) == cons_dst:
-            raise RuntimeError("injected crash at commit point")
-        return real_rename(src, dst)
 
-    monkeypatch.setattr(os, "rename", crashing)
-    with pytest.raises(RuntimeError, match="commit point"):
-        compact_streaming_index(spark, bands_root, keep_latest=1)
-    monkeypatch.undo()
-    # torn: marker + tmp exist, consolidated partition absent
-    assert os.path.exists(bands_root + "._fold_old/_FOLDED.json")
-    assert not os.path.exists(cons_dst)
+@pytest.mark.parametrize("point", range(1, _REFOLD_POINTS + 1))
+def test_refold_crash_at_every_point_reads_then_recovers(spark, refold, tmp_path, point):
+    """At each point of the re-fold, the store read without recovery
+    through ``fold_consistent_read`` sums to the pre-fold counts (no
+    partition missed, none counted twice), and the next
+    ``compact_streaming_index`` leaves the store the uninterrupted fold
+    left."""
+    import shutil
 
-    stats = compact_streaming_index(spark, bands_root, keep_latest=1)
-    assert os.path.exists(cons_dst)
-    assert not os.path.exists(bands_root + "._fold_old")
-    assert not os.path.exists(bands_root + "._fold_tmp")
-    assert spark.read.parquet(bands_root).count() == rows_before
-    probe = spark.createDataFrame(
-        [(100, _BASE + " tonight")], "doc_id long, text string"
-    )
-    pairs = {(r.id_a, r.id_b) for r in
-             dd.minhash_pairs_incremental(probe, spark, f"{store}/index").collect()}
-    assert (1, 100) in pairs
+    from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
+
+    assert point <= len(refold["copies"]), "the fold made fewer store changes"
+    root = str(tmp_path / "idx")
+    shutil.copytree(refold["copies"][point - 1], root)
+    assert _summed_counts(spark, root) == refold["before"]
+    compact_streaming_index(spark, root, keep_latest=1)
+    assert _store_rows(spark, root) == refold["after"]
 
 
 @pytest.mark.slow
@@ -423,59 +418,6 @@ def test_cli_compact_index_subcommand(spark, tmp_path, capsys):
     assert main(["compact-index", f"{store}/index/bands", "--keep-latest", "1"]) == 0
     assert "folded 3 batch" in capsys.readouterr().out
     assert spark.read.parquet(f"{store}/index/bands").count() > 0
-
-
-@pytest.mark.slow
-def test_compact_streaming_index_refold_crash_keeps_new_consolidated(
-    spark, tmp_path, monkeypatch
-):
-    """The r7 self-review bug: a SECOND compaction re-folds the existing
-    ingest_batch=-1 partition, so the marker's folded list contains the
-    consolidated NAME — a crash right after the commit rename must not
-    let recovery delete the dir at that name (it is the NEW data; the
-    old copy sits set-aside). Kill immediately after the commit rename,
-    recover, verify zero loss."""
-    import os
-    import shutil
-
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        compact_streaming_index,
-    )
-    from commercepulse_data_pipeline_spark.streaming.corpus import clean_corpus_batch
-
-    store = _corpus_store(spark, tmp_path)
-    bands_root = f"{store}/index/bands"
-    compact_streaming_index(spark, bands_root, keep_latest=1)  # creates -1
-    # two more batches so the second fold has something + the old -1
-    for bid, doc in ((4, (40, "more unrelated content four")),
-                     (5, (50, "more unrelated content five"))):
-        clean_corpus_batch(
-            spark.createDataFrame([doc], "doc_id long, text string"),
-            bid, store,
-        )
-    rows_before = spark.read.parquet(bands_root).count()
-
-    cons_dst = os.path.join(bands_root, "ingest_batch=-1")
-    real_rmtree = shutil.rmtree
-
-    def crashing(path, *a, **kw):
-        # first deletion AFTER the commit rename → crash before cleanup
-        if str(path).startswith(bands_root) and "ingest_batch=" in str(path):
-            raise RuntimeError("injected crash after commit rename")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", crashing)
-    with pytest.raises(RuntimeError, match="after commit rename"):
-        compact_streaming_index(spark, bands_root, keep_latest=1)
-    monkeypatch.undo()
-    # torn: new -1 in place, old -1 set aside, folded batch dirs remain
-    assert os.path.exists(cons_dst)
-    assert os.path.exists(bands_root + "._fold_old/ingest_batch=-1")
-
-    stats = compact_streaming_index(spark, bands_root, keep_latest=1)
-    assert not os.path.exists(bands_root + "._fold_old")
-    assert spark.read.parquet(bands_root).count() == rows_before, \
-        "recovery deleted the new consolidated partition"
 
 
 def test_missing_store_error_classification(spark, tmp_path):

@@ -968,19 +968,15 @@ def test_passage_stream_crash_replay_from_checkpoint(spark, tmp_path):
     assert parts == {"ingest_batch=0", "ingest_batch=1", "ingest_batch=2"}
 
 
-def test_passage_fp_index_fold_probe_equality(spark, tmp_path, monkeypatch):
+def test_passage_fp_index_fold_probe_equality(spark, tmp_path):
     """VERDICT r9 item 4: the passage fp-index's additive row-preserving
     fold (claimed at streaming/passages.py module docstring) holds — the
     per-fingerprint summed counts (the exact input to the duplicate
-    decision) are identical before the fold, during BOTH marker windows
-    of a crashed fold, and after recovery; and a real batch processed
-    against the folded store still splices an indexed passage. Mirrors
-    the five sketch stores' probe-during-fold tests."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
+    decision) are identical before and after a fold and a re-fold that
+    subsumes the consolidated partition; and a real batch processed
+    against the folded store still splices an indexed passage. The fold's
+    crash points are covered by test_maintenance.py's every-point re-fold
+    test."""
     from commercepulse_data_pipeline_spark.sources.readers import (
         compact_streaming_index,
         fold_consistent_read,
@@ -1014,28 +1010,10 @@ def test_passage_fp_index_fold_probe_equality(spark, tmp_path, monkeypatch):
 
     truth = probe()
     assert truth, "expected a populated fp index"
-
-    # -- window 1: PRE-COMMIT. Crash the fold at the marker rename.
-    real_rename = os.rename
-
-    def crash_marker(src, dst):
-        if str(dst).endswith("_FOLDED.json"):
-            raise RuntimeError("injected crash before commit")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_marker)
-    with _pytest.raises(RuntimeError, match="before commit"):
-        compact_streaming_index(spark, fp_root, keep_latest=1)
-    monkeypatch.undo()
-    assert probe() == truth  # roll-back view
-    # full recovery + fold completes: counts unchanged, store folded
     compact_streaming_index(spark, fp_root, keep_latest=1)
     assert probe() == truth
-    assert os.path.isdir(os.path.join(fp_root, "ingest_batch=-1"))
-    assert not os.path.exists(fp_root + "._fold_old")
 
-    # -- window 2: POST-COMMIT, consolidated still in tmp (the fold now
-    # subsumes the existing consolidated partition too).
+    # a re-fold subsumes the existing consolidated partition too
     passage_dedup_batch(
         spark.createDataFrame(
             [(14, f"fifth arrival quotes {shared} once more")],
@@ -1045,33 +1023,6 @@ def test_passage_fp_index_fold_probe_equality(spark, tmp_path, monkeypatch):
     )
     truth2 = probe()
     assert truth2 != truth  # the new batch's counts are visible
-
-    def crash_cons(src, dst):
-        if str(dst) == os.path.join(fp_root, "ingest_batch=-1"):
-            raise RuntimeError("injected crash at commit point")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_cons)
-    with _pytest.raises(RuntimeError, match="commit point"):
-        compact_streaming_index(spark, fp_root, keep_latest=0)
-    monkeypatch.undo()
-    assert os.path.exists(fp_root + "._fold_old/_FOLDED.json")
-    assert probe() == truth2  # roll-forward view reads tmp consolidated
-
-    # -- window 3: consolidated renamed in, folded dirs not yet deleted
-    # (the double-count window for an additive index).
-    real_rmtree = shutil.rmtree
-
-    def crash_rmtree(path, *a, **kw):
-        if "ingest_batch=" in str(path) and "._fold" not in str(path):
-            raise RuntimeError("injected crash before folded-dir delete")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
-    with _pytest.raises(RuntimeError, match="folded-dir delete"):
-        compact_streaming_index(spark, fp_root, keep_latest=0)
-    monkeypatch.undo()
-    assert probe() == truth2  # no double count
     compact_streaming_index(spark, fp_root, keep_latest=0)
     assert probe() == truth2
 
