@@ -168,22 +168,30 @@ def test_one_table_swap_keeps_rollback_copy_and_adopts_it(tmp_path):
 
 def test_swap_recovery_adopts_store_stranded_without_intent(tmp_path):
     """A store torn by a swap that wrote no intent record (one table
-    renamed aside, never replaced) recovers by adopting the old copy. So
-    does one whose record is unparseable (a store written before markers
-    were atomic) beside a torn ``_SWAP.json.tmp``: the commit never
-    happened, and recovery removes both instead of failing on them."""
-    for torn in (False, True):
-        root, tables, intent = _store(tmp_path / str(torn))
-        if torn:
-            with open(intent, "w") as fh:
-                fh.write('{"tables": [["orders", "orders.tmp", "ord')
-            with open(intent + ".tmp", "w") as fh:
-                fh.write("{")
-        live, tmp, old = tables[1]
-        os.rename(live, old)
-        commit.recover_swap(tables, intent=intent)
-        assert [_version(t[0]) for t in tables] == ["old"] * len(tables)
-        assert sorted(os.listdir(root)) == sorted(_TABLES)
+    renamed aside, never replaced) recovers by adopting the old copy."""
+    root, tables, intent = _store(tmp_path)
+    live, tmp, old = tables[1]
+    os.rename(live, old)
+    commit.recover_swap(tables, intent=intent)
+    assert [_version(t[0]) for t in tables] == ["old"] * len(tables)
+    assert sorted(os.listdir(root)) == sorted(_TABLES)
+
+
+def test_fold_recovery_rolls_back_past_a_torn_marker(tmp_path):
+    """An unparseable intent record (a store written before markers were
+    atomic) beside a torn ``_SWAP.json.tmp`` means the fold's commit
+    never happened: recovery adopts the set-aside partition back, keeps
+    the folded one, and removes both record files instead of failing on
+    them."""
+    root, tables, intent = _fold_store(tmp_path)
+    with open(intent, "w") as fh:
+        fh.write('{"tables": [["ingest_batch=-1", "ingest_batch=-1.tmp", "ing')
+    with open(intent + ".tmp", "w") as fh:
+        fh.write("{")
+    cons = tables[0][0]
+    os.rename(cons, tables[0][2])
+    commit.recover_swap(tables, intent=intent)
+    _assert_folded(root, "old")
 
 
 _RENAMES = {"os": {"rename", "replace"}, "shutil": {"move"}}
