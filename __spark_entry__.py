@@ -1802,11 +1802,12 @@ def _pq_knn_join_oracle_sql() -> str:
 # IVF+PQ parameters shared by the Spark query and its generated oracle.
 _IVFPQ_TOPK = dict(k=10, n_centroids=8, m=4, n_codes=8, iters=1, nprobe=2, dim=64)
 
-# Bump when write_pq_index / write_ivfpq_index or their on-disk layout
-# change: the cache key otherwise carries no code version, so a stale
-# index built by the previous revision would be silently served to the
-# correctness run until /tmp is cleared, masking regressions (ADVICE r10).
-_ANN_CACHE_VERSION = "v1"
+# Bump when write_pq_index / write_ivfpq_index / write_text_index or
+# their on-disk layout change: the cache key otherwise carries no code
+# version, so a stale index built by the previous revision would be
+# silently served to the correctness run until /tmp is cleared, masking
+# regressions (ADVICE r10).
+_ANN_CACHE_VERSION = "v2"
 
 
 def _ann_index_cache(

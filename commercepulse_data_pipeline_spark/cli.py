@@ -680,14 +680,18 @@ def cmd_cluster_table(args) -> int:
         )
         return 0
     bands_df = None
+    if args.index or args.report_occupancy:
+        # band ONCE when a second consumer needs the bands: the pair
+        # stage, the occupancy report and the index write all read this
+        # pinned table instead of re-running the md5 signature build
+        bands_df = dd.minhash_bands(
+            docs, "text", "doc_id", num_hashes=8, bands=4, shingle_n=3
+        ).localCheckpoint(eager=False)
     if args.report_occupancy:
         # occupancy under EXACTLY the banding keys + cap the pair stage
         # uses (r15 guard): a band bucket past --max-bucket drops
         # WHOLESALE — surface it instead of letting "few clusters" read
-        # as "few dups". Bands are built once and reused by the pairs.
-        bands_df = dd.minhash_bands(
-            docs, "text", "doc_id", num_hashes=8, bands=4, shingle_n=3
-        ).localCheckpoint(eager=True)
+        # as "few dups".
         occ = {
             r["status"]: r
             for r in dd.bucket_occupancy_report(
@@ -727,7 +731,7 @@ def cmd_cluster_table(args) -> int:
         # persist the batch's bands as the probe index so later
         # --update calls dedup against everything seen so far
         dd.write_minhash_index(
-            docs, args.index, num_hashes=8, bands=4, shingle_n=3
+            docs, args.index, num_hashes=8, bands=4, shingle_n=3, bands_df=bands_df
         )
     provenance = {
         "blocker": "minhash", "num_hashes": 8, "bands": 4, "shingle_n": 3,
@@ -796,8 +800,12 @@ def cmd_dedup_report(args) -> int:
 def cmd_text_index(args) -> int:
     """Build (or incrementally append to) the BM25 inverted index from a
     documents parquet — the serving artifact `search --index` probes.
-    Append mode pins the layout params via the meta sidecar and rolls
-    the corpus stats forward (operators/retrieval.py::write_text_index)."""
+    The build is the consolidated partition of the store
+    `stream-text-index` grows, so either command can extend an index
+    the other wrote. Append mode refuses a store with other layout
+    params and adds one stats row, so the corpus stats roll forward
+    (operators/retrieval.py::write_text_index); the summary line sums
+    every stats row of the store."""
     from commercepulse_data_pipeline_spark.operators import retrieval as ret
 
     spark = _spark()
@@ -807,22 +815,22 @@ def cmd_text_index(args) -> int:
         docs, args.out, text_col=args.text_col, id_col=args.id_col,
         n_buckets=args.n_buckets, mode=mode, positions=args.positions,
     )
-    meta = ret.read_text_index_meta(spark, args.out)
+    stats = ret._index_stats(spark, args.out)
     print(
         f"text-index: {mode} -> {args.out} "
-        f"(n_docs={meta['n_docs']}, sum_dl={meta['sum_dl']}, "
-        f"n_buckets={meta['n_buckets']}, "
-        f"positions={meta.get('positions', False)})"
+        f"(n_docs={stats['n_docs']}, sum_dl={stats['sum_dl']}, "
+        f"n_buckets={stats['n_buckets']}, positions={stats['positions']})"
     )
     return 0
 
 
 def cmd_search(args) -> int:
     """BM25 top-k retrieval: `--index <dir>` probes a persisted inverted
-    index (partition-pruned — the serving path; accepts batch-built and
-    stream-built stores), `--docs <parquet>` scores by corpus scan (the
-    one-off path). Terms are comma-separated; prints the hits and
-    optionally lands them as parquet."""
+    index (partition-pruned — the serving path; `text-index` and
+    `stream-text-index` write the same store, and the index's stats
+    rows supply the corpus stats and columns), `--docs <parquet>` scores
+    by corpus scan (the one-off path). Terms are comma-separated; prints
+    the hits and optionally lands them as parquet."""
     from commercepulse_data_pipeline_spark.operators import retrieval as ret
 
     terms = [t for t in (s.strip() for s in args.terms.split(",")) if t]
@@ -838,7 +846,7 @@ def cmd_search(args) -> int:
         if args.text_col != "text" or args.id_col != "doc_id":
             print(
                 "search: WARNING --text-col/--id-col are ignored with "
-                "--index (the index meta's columns win)"
+                "--index (the index's own id column wins)"
             )
         if args.phrase:
             hits = ret.phrase_topk(spark, args.index, terms, k=args.k)

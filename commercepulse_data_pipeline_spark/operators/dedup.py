@@ -26,7 +26,7 @@ from commercepulse_data_pipeline_spark.operators.text import (
     token_ngrams,
     tokens as _tokens,
 )
-from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL, CONSOLIDATED_BATCH
+from commercepulse_data_pipeline_spark.streaming import batches
 
 
 # ---------------------------------------------------------------------------
@@ -972,61 +972,39 @@ def write_minhash_index(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
+    bands_df: DataFrame | None = None,
 ) -> None:
     """Persist the corpus's LSH band table as its near-dup INDEX
-    (mirroring the persisted LSH/PQ indexes in ``similarity``):
-    (id, band_id, band_key) parquet plus a sidecar meta file pinning the
-    banding parameters, so the read side always re-bands new docs with
-    the SAME hash family. Rows land before the meta. Later batches append
-    through ``minhash_pairs_incremental(update_index=True)``."""
+    (mirroring the persisted LSH/PQ indexes in ``similarity``): the
+    (id, band_id, band_key) rows land in ``bands/ingest_batch=-1``, the
+    consolidated partition of the band store the streaming curation and
+    cluster stores grow (``streaming/corpus.py``,
+    ``streaming/clusters.py``), replacing whatever the store held; then
+    the meta sidecar (:func:`write_minhash_index_meta`). Later batches
+    append through ``minhash_pairs_incremental(update_index=True)`` or
+    land as stream batches of the same store.
+
+    ``bands_df``: the ``minhash_bands`` table of ``df`` under these
+    parameters, when the caller has it pinned already."""
+    params = dict(num_hashes=num_hashes, bands=bands, shingle_n=shingle_n)
+    if bands_df is None:
+        bands_df = minhash_bands(df, **params)
+    batches.write_consolidated(bands_df, f"{path}/bands", "overwrite")
+    write_minhash_index_meta(df.sparkSession, path, params)
+
+
+def write_minhash_index_meta(spark, path: str, params: dict) -> None:
+    """The band index's ``path/meta`` sidecar: one JSON row pinning the
+    banding ``params`` (num_hashes, bands, shingle_n) and the id/text
+    columns, so the read side always re-bands new docs with the SAME
+    hash family. Every band index writer calls this. Params are constant
+    per store, so rewriting the sidecar per batch is idempotent."""
     import json
 
-    meta = {
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-        "id_col": "doc_id",
-        "text_col": "text",
-    }
-    minhash_bands(
-        df, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
-    ).write.mode("overwrite").parquet(f"{path}/bands")
+    meta = dict(params, id_col="doc_id", text_col="text")
     one_slice_df(
-        df.sparkSession, [(json.dumps(sorted(meta.items())),)], "meta string"
+        spark, [(json.dumps(sorted(meta.items())),)], "meta string"
     ).write.mode("overwrite").json(f"{path}/meta")
-
-
-def _append_bands(spark, bands_df: DataFrame, path: str, mode: str) -> None:
-    """Write band rows honoring the index's on-disk layout. A stream-built
-    index (streaming/corpus.py) is hive-partitioned bands/ingest_batch=N;
-    flat part files appended at the bands/ root of such an index are
-    SILENTLY INVISIBLE to later partition-discovery reads (verified: Spark
-    keeps only the partition-dir files) — so appends must land under a
-    partition value there. -1 never collides with stream batch ids (>=0).
-    Flat indexes (write_minhash_index from batch) keep flat appends."""
-    partitioned = False
-    if mode == "append":
-        try:
-            partitioned = BATCH_COL in spark.read.parquet(f"{path}/bands").columns
-        except Exception as exc:  # noqa: BLE001 — filtered just below
-            from commercepulse_data_pipeline_spark.sources.readers import (
-                is_missing_store_error,
-            )
-
-            if not is_missing_store_error(exc, f"{path}/bands"):
-                # guessing "flat layout" on a transient error would land
-                # appends invisible to a partitioned index's reads
-                raise
-            partitioned = False  # no bands yet: layout set by this write
-    if partitioned:
-        (
-            bands_df.withColumn(BATCH_COL, F.lit(CONSOLIDATED_BATCH))
-            .write.mode("append")
-            .partitionBy(BATCH_COL)
-            .parquet(f"{path}/bands")
-        )
-    else:
-        bands_df.write.mode(mode).parquet(f"{path}/bands")
 
 
 def read_minhash_index_meta(spark, path: str) -> dict:
@@ -1064,8 +1042,6 @@ def minhash_pairs_incremental(
         shingle_n=int(meta["shingle_n"]),
     )
     id_col, text_col = meta["id_col"], meta["text_col"]
-    # fold-aware on stream-built (ingest_batch-partitioned) indexes; a
-    # flat batch index takes the plain-read fast path
     from commercepulse_data_pipeline_spark.sources.readers import (
         fold_consistent_read,
     )
@@ -1084,8 +1060,7 @@ def minhash_pairs_incremental(
     out = vs_index.union(within).distinct()
     if update_index:
         out = out.localCheckpoint(eager=True)  # pin results BEFORE the append
-        # layout-aware append (ADVICE r5): see _append_bands
-        _append_bands(spark, nb, index_path, "append")
+        batches.write_consolidated(nb, f"{index_path}/bands", "append")
     return out
 
 

@@ -40,7 +40,8 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from ..functions.expr import let
-from .text import tokens
+from ..streaming import batches
+from .text import rle_counts, tokens
 
 # BM25 term-saturation and length-normalization constants (the Lucene defaults)
 BM25_K1 = 1.2
@@ -178,31 +179,6 @@ def bm25_topk(
     return _ranked_topk(scored, id_col, k, extra_cols)
 
 
-def _staged_rle(df: DataFrame, text_col: str) -> DataFrame:
-    """Input rows + ``__dl`` (token count) and ``__rle`` (sorted-run
-    (value, cnt) pairs — distinct terms with within-doc counts,
-    array-side). Shared by the batch index writer and the streaming
-    ingest batch fn; callers localCheckpoint it (it always feeds both
-    the postings explode and the stats aggregate)."""
-    from .text import rle_counts
-
-    return (
-        df.withColumn("__toks", tokens(F.col(text_col)))
-        .withColumn("__dl", F.size(F.col("__toks")).cast("long"))
-        .withColumn("__rle", rle_counts(F.array_sort(F.col("__toks"))))
-    )
-
-
-def _corpus_stats(staged):
-    """(n, s) corpus-stats row from ``_staged_rle`` output — doc count
-    and total token mass. Zero-token docs hold no postings but DO count
-    here (the contract both the batch writer and the streaming batch fn
-    must share — this helper is the single source of it)."""
-    return staged.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("__dl"), F.lit(0)).alias("s")
-    ).head()
-
-
 def _ranked_topk(
     scored: DataFrame, id_col: str, k: int, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -224,8 +200,10 @@ def _ranked_topk(
 
 
 def _postings_from_staged(staged: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
-    """(id, term, tf, dl, term_bucket) posting rows from ``_staged_rle``
-    output — what explodes is distinct terms per doc, not occurrences."""
+    """(id, term, tf, dl, term_bucket) posting rows from the
+    ``_index_slice`` staging's per-doc ``__rle`` (distinct terms with
+    within-doc counts) — what explodes is distinct terms per doc, not
+    occurrences."""
     from ..functions.hashing import stable_bucket
 
     return (
@@ -265,6 +243,51 @@ def _positional_postings(toked: DataFrame, id_col: str, n_buckets: int) -> DataF
     )
 
 
+# One row per written slice of the corpus (a stream micro-batch, a build
+# or an append): its doc count n, its token mass s and the layout params
+# every slice of one index must share.
+_STATS_SCHEMA = "n long, s long, n_buckets int, id_col string, positions boolean"
+
+
+def _index_slice(
+    df: DataFrame, text_col: str, id_col: str, n_buckets: int, positions: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The (stats, postings) frames of one slice of the corpus, the
+    staging both index writers share (``write_text_index`` and
+    ``streaming/retrieval.py::text_index_batch``). Stats is one
+    ``_STATS_SCHEMA`` row; zero-token docs hold no postings but DO count
+    in ``n``, matching the scan scorer's N. Postings are one row per
+    (doc, distinct term) with ``(id, term, tf, dl, term_bucket)``, plus
+    ``pos`` when ``positions``.
+
+    Writers land stats FIRST, postings second: a serve racing a
+    half-written slice (or reading after a crash between the two writes)
+    then sees stats that count docs whose postings are not yet visible,
+    which only UNDER-ranks and converges on a re-run. The opposite order
+    would score visible postings against stats that undercount the
+    corpus — systematically inflated scores, the worse silent failure."""
+    staged = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks")).withColumn(
+        "__dl", F.size("__toks").cast("long")
+    )
+    if not positions:
+        staged = staged.withColumn(
+            "__rle", rle_counts(F.array_sort(F.col("__toks")))
+        ).drop("__toks")
+    staged = staged.localCheckpoint(eager=False)  # feeds postings AND the stats agg
+    row = staged.agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("__dl"), F.lit(0)).alias("s")
+    ).head()
+    stats = one_slice_df(
+        df.sparkSession,
+        [(int(row["n"]), int(row["s"]), n_buckets, id_col, positions)],
+        _STATS_SCHEMA,
+    )
+    postings = (_positional_postings if positions else _postings_from_staged)(
+        staged, id_col, n_buckets
+    )
+    return stats, postings
+
+
 def write_text_index(
     df: DataFrame,
     path: str,
@@ -276,121 +299,89 @@ def write_text_index(
     positions: bool = False,
 ) -> None:
     """Persist the corpus's inverted index — the BM25 SERVING artifact
-    (mirroring ``write_minhash_index`` / ``similarity.write_pq_index``):
-    ``postings/`` = one parquet row per (doc, distinct term) carrying
-    ``(id, term, tf, dl)``, hive-partitioned by
-    ``term_bucket = stable_bucket(term, n_buckets)`` so a query's probe
+    (mirroring ``write_minhash_index`` / ``similarity.write_pq_index``).
+    It is the store ``streaming/retrieval.py::text_index_batch`` grows,
+    with the build as its consolidated partition
+    (``ingest_batch=-1``):
+
+      postings/ingest_batch=N/term_bucket=B/   one row per (doc, distinct
+                                               term): (id, term, tf, dl)
+      stats/ingest_batch=N/                    one ``_STATS_SCHEMA`` row
+                                               per written slice
+
+    ``term_bucket = stable_bucket(term, n_buckets)``, so a query's probe
     reads ONLY its terms' partitions (directory pruning, then a
-    term-isin row-group filter inside them); ``meta/`` = a 1-row JSON
-    sidecar pinning the layout params AND the corpus stats
-    ``(n_docs, sum_dl)`` BM25 needs at query time (zero-token docs hold
-    no postings but DO count here, matching the scan scorer).
+    term-isin row-group filter inside them); ``_index_stats`` sums the
+    stats rows into the corpus stats BM25 needs at query time.
 
     Per-doc term counts come array-side (the ``rle_counts`` sorted-run
     idiom — what explodes is distinct terms per doc, not occurrences),
     so the build is one map pass + one partitioned write.
 
-    ``mode="append"`` is the incremental-ingest path: the sidecar's
-    layout params must match (appending under a different bucket count
-    would make old postings unreachable by pruning), the batch's rows
-    land in the same partition layout, and the stats roll forward to
-    old + batch. House caveat (the write_minhash_index contract): rows
-    land before the meta update, so a crash between the two leaves
-    stats one batch stale — re-run the append idempotently only if the
-    batch write itself is idempotent (e.g. a dedup'ed batch id).
+    ``mode="overwrite"`` replaces the whole store, stream partitions
+    included. ``mode="append"`` is the incremental-ingest path: the
+    store's layout params must match (appending under a different bucket
+    count would make old postings unreachable by pruning), and the
+    batch's postings and one stats row append to the consolidated
+    partition. An append is not idempotent: re-running it counts the
+    batch twice.
 
     ``positions=True`` builds a POSITIONAL index: postings gain a
     ``pos`` column (sorted 0-based token offsets of every occurrence),
     enabling exact phrase search (``phrase_topk``) at the cost of one
     extra shuffle at build time (occurrence explode + per-(doc, term)
     collect, instead of the array-side distinct-term pass) and the
-    position mass on disk. The flag is a LAYOUT param — pinned by the
-    meta sidecar, so appends can't mix positional and plain postings.
+    position mass on disk. The flag is a LAYOUT param carried by every
+    stats row, so appends can't mix positional and plain postings.
     """
-    import json
-
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-    spark = df.sparkSession
-    params = {
-        "n_buckets": n_buckets,
-        "id_col": id_col,
-        "text_col": text_col,
-        "positions": positions,
-    }
-
-    existing = None
     if mode == "append":
+        params = {"n_buckets": n_buckets, "id_col": id_col, "positions": positions}
         try:
-            existing = read_text_index_meta(spark, path)
+            existing = _index_stats(df.sparkSession, path)
         except Exception as exc:  # noqa: BLE001 — filtered just below
             from ..sources.readers import is_missing_store_error
 
-            if not is_missing_store_error(exc, f"{path}/meta"):
+            if not is_missing_store_error(exc, f"{path}/stats"):
                 raise
-            existing = None  # first write to this path
-        if existing is not None and any(
-            # .get with the positions default: meta written before the
-            # positional layout existed means a plain (False) index
-            str(existing.get(k, False)) != str(v) for k, v in params.items()
-        ):
-            raise ValueError(
-                f"append with params {params} != index meta "
-                f"{ {k: existing.get(k, False) for k in params} }; "
-                "rebuilding the index is the only safe migration"
-            )
+        else:
+            have = {k: existing[k] for k in params}
+            if have != params:
+                raise ValueError(
+                    f"append with params {params} != index params {have}; "
+                    "rebuilding the index is the only safe migration"
+                )
 
-    if positions:
-        toked = df.select(
-            F.col(id_col), tokens(F.col(text_col)).alias("__toks")
-        ).withColumn("__dl", F.size("__toks").cast("long")).localCheckpoint(
-            eager=False  # feeds postings AND the stats agg
-        )
-        stats_row = _corpus_stats(toked)
-        postings = _positional_postings(toked, id_col, n_buckets)
-    else:
-        staged = _staged_rle(df, text_col).localCheckpoint(
-            eager=False  # feeds postings AND the stats agg
-        )
-        stats_row = _corpus_stats(staged)
-        postings = _postings_from_staged(staged, id_col, n_buckets)
+    stats, postings = _index_slice(df, text_col, id_col, n_buckets, positions)
+    batches.write_consolidated(stats, f"{path}/stats", mode)
     # rebalance-before-partitionBy (guide §6): without it the write emits
     # (input partitions × term buckets) files per build/append
-    postings.hint("rebalance", "term_bucket").write.mode(mode).partitionBy(
-        "term_bucket"
-    ).parquet(f"{path}/postings")
-
-    n_docs, sum_dl = int(stats_row["n"]), int(stats_row["s"])
-    if existing is not None:
-        n_docs += int(existing["n_docs"])
-        sum_dl += int(existing["sum_dl"])
-    meta = {**params, "n_docs": n_docs, "sum_dl": sum_dl}
-    one_slice_df(
-        spark, [(json.dumps(sorted(meta.items())),)], "meta string"
-    ).write.mode("overwrite").json(f"{path}/meta")
+    batches.write_consolidated(
+        postings.hint("rebalance", "term_bucket"), f"{path}/postings", mode, "term_bucket"
+    )
 
 
-def read_text_index_meta(spark, path: str) -> dict:
-    import json
+def _index_stats(spark, path: str) -> dict:
+    """The text index's corpus stats and layout: ``n_docs`` and
+    ``sum_dl`` summed over every stats row, and the ``n_buckets``,
+    ``id_col`` and ``positions`` they all carry. A store whose rows
+    disagree is refused. Summing is replay-safe: a replayed stream batch
+    overwrites its own stats partition.
 
-    # The meta sidecar is a one-row JSON written coalesce(1); a serving
-    # path (bm25_topk_indexed / phrase_topk) re-reads it on EVERY query,
-    # so its cost is pure fixed latency (r15 optimization pass). For a
-    # plain local path, read it with the driver's filesystem directly —
-    # the Delta-log discipline: sidecar metadata never needs a cluster.
-    # Non-local URIs (object stores) and a MISSING meta dir fall through
-    # to the Spark reader, keeping the error type callers match on for
-    # the streaming-store layout; the explicit one-column schema there
-    # skips the schema-inference job the bare reader would launch.
+    Every query reads this, so its cost is fixed latency. For a plain
+    local path the rows are read on the driver with pyarrow — sidecar
+    metadata never needs a cluster. A bare (scheme-less) path resolves
+    against ``fs.defaultFS``, so on an HDFS/S3A deployment a same-named
+    LOCAL directory must not shadow the cluster copy: the driver read is
+    taken only for explicit ``file:`` URIs or when the default
+    filesystem itself is local. Other URIs and a store with no local
+    stats files go through the Spark reader with an explicit schema (no
+    schema-inference job), which also raises the missing-path error
+    callers match on."""
     import glob
-    import os
 
-    # ADVICE r15: a bare (scheme-less) path resolves against
-    # fs.defaultFS on the cluster — on an HDFS/S3A deployment a
-    # same-named LOCAL directory must not shadow the cluster copy, so
-    # the driver-filesystem fast path is taken only for explicit file:
-    # URIs or when the default filesystem itself is local.
-    from ..sources.commit import local_path
+    from ..sources.commit import BATCH_COL, local_path
 
     local = None
     if path.startswith("file:"):
@@ -399,17 +390,40 @@ def read_text_index_meta(spark, path: str) -> dict:
         default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
         if default_fs.startswith("file:"):
             local = path
-    meta_dir = f"{path}/meta"
-    if local is not None and os.path.isdir(f"{local}/meta"):
-        parts = sorted(glob.glob(os.path.join(f"{local}/meta", "part-*.json")))
-        if parts:
-            with open(parts[0]) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        return dict(json.loads(json.loads(line)["meta"]))
-    row = spark.read.schema("meta string").json(meta_dir).head()
-    return dict(json.loads(row.meta))
+    cols = ["n", "s", "n_buckets", "id_col", "positions"]
+    files = sorted(glob.glob(f"{local}/stats/{BATCH_COL}=*/*.parquet")) if local else []
+    if files:
+        import pyarrow.parquet as pq
+
+        rows = [
+            tuple(r[c] for c in cols)
+            for f in files
+            for r in pq.ParquetFile(f).read(columns=cols).to_pylist()
+        ]
+    else:
+        rows = [
+            tuple(r)
+            for r in spark.read.schema(_STATS_SCHEMA)
+            .parquet(f"{path}/stats")
+            .select(*cols)
+            .collect()
+        ]
+    if not rows:
+        raise FileNotFoundError(f"no text index stats under {path}/stats")
+    layouts = {r[2:] for r in rows}
+    if len(layouts) != 1:
+        raise ValueError(
+            f"inconsistent index params at {path}: "
+            f"(n_buckets, id_col, positions) in {sorted(layouts)}"
+        )
+    ((n_buckets, id_col, positions),) = layouts
+    return {
+        "n_docs": sum(r[0] for r in rows),
+        "sum_dl": sum(r[1] for r in rows),
+        "n_buckets": n_buckets,
+        "id_col": id_col,
+        "positions": positions,
+    }
 
 
 def _probe_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
@@ -480,41 +494,9 @@ def bm25_topk_indexed(
         raise ValueError(f"k must be positive, got {k}")
 
     terms = _validate_terms(query_terms)
-    try:
-        meta = read_text_index_meta(spark, path)
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        from ..sources.readers import is_missing_store_error
-
-        if not is_missing_store_error(exc, f"{path}/meta"):
-            raise
-        # streaming-store layout (streaming/retrieval.py): no mutable
-        # meta — per-batch 1-row stats partitions roll up here instead
-        # (replayed batches overwrite their own partition, so the sum
-        # never double-counts)
-        srow = (
-            spark.read.parquet(f"{path}/stats")
-            .agg(
-                F.sum("n").alias("n_docs"),
-                F.sum("s").alias("sum_dl"),
-                F.collect_set("n_buckets").alias("bks"),
-                F.collect_set("id_col").alias("ids"),
-            )
-            .head()
-        )
-        if len(srow.bks) != 1 or len(srow.ids) != 1:
-            raise ValueError(
-                f"inconsistent stream-store params at {path}: "
-                f"n_buckets={sorted(srow.bks)}, id_col={sorted(srow.ids)}"
-            )
-        meta = {
-            "n_docs": srow.n_docs,
-            "sum_dl": srow.sum_dl,
-            "n_buckets": srow.bks[0],
-            "id_col": srow.ids[0],
-        }
-    n_docs, sum_dl = int(meta["n_docs"]), int(meta["sum_dl"])
-    n_buckets = int(meta["n_buckets"])
-    id_col = str(meta["id_col"])
+    stats = _index_stats(spark, path)
+    n_docs, sum_dl = stats["n_docs"], stats["sum_dl"]
+    n_buckets, id_col = stats["n_buckets"], stats["id_col"]
 
     buckets = _probe_buckets(spark, terms, n_buckets)
     # `probed` (the posting mass of the query's terms — probe-bounded by
@@ -597,14 +579,13 @@ def phrase_topk(
             )
     from pyspark.sql import Window
 
-    meta = read_text_index_meta(spark, path)
-    if not str(meta.get("positions", False)) == "True":
+    stats = _index_stats(spark, path)
+    if not stats["positions"]:
         raise ValueError(
             f"index at {path} was built without positions=True; "
             "phrase search needs the positional layout"
         )
-    n_buckets = int(meta["n_buckets"])
-    id_col = str(meta["id_col"])
+    n_buckets, id_col = stats["n_buckets"], stats["id_col"]
 
     distinct_terms = sorted(set(lowered))
     buckets = _probe_buckets(spark, distinct_terms, n_buckets)

@@ -23,6 +23,10 @@ two rules, both kept here:
 A sink is a plain function ``X_batch(batch_df, batch_id, store, ...)``;
 run it continuously with
 ``start(drops(spark, path, schema), checkpoint, lambda df, i: X_batch(df, i, store))``.
+A batch build of the same store is one more batch of it:
+:func:`write_consolidated` lands it in the consolidated partition, so a
+store built in batch and extended by a stream (or the other way round)
+keeps one layout and one reader.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from commercepulse_data_pipeline_spark.sources import readers
-from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL
+from commercepulse_data_pipeline_spark.sources.commit import BATCH_COL, CONSOLIDATED_BATCH
 
 
 def drops(
@@ -63,6 +67,21 @@ def write(df: DataFrame, root: str, batch_id: int, *partition_cols: str) -> None
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(f"{root}/{BATCH_COL}={batch_id}")
+
+
+def write_consolidated(df: DataFrame, root: str, mode: str, *partition_cols: str) -> None:
+    """Land ``df`` in the consolidated partition of the store at ``root``:
+    ``mode="append"`` adds it to that partition, ``mode="overwrite"``
+    replaces the whole store with it (static overwrite whatever the
+    session's ``partitionOverwriteMode``, so no stream partition
+    survives a fresh build)."""
+    (
+        df.withColumn(BATCH_COL, F.lit(CONSOLIDATED_BATCH))
+        .write.mode(mode)
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(BATCH_COL, *partition_cols)
+        .parquet(root)
+    )
 
 
 def prior(spark: SparkSession, root: str, batch_id: int) -> DataFrame | None:

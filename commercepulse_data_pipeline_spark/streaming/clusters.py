@@ -18,9 +18,15 @@ is a corpus-lifetime fact):
    ``graph.update_cluster_table`` — affected-subgraph-only CC, rows
    swapped crash-safely (rename-aside);
 3. write the batch's bands under ``{store}/index/bands/ingest_batch=N``
-   (replay-idempotent per-batch overwrite, same sidecar as
-   ``write_minhash_index`` so the index is a full-fledged
-   ``minhash_pairs_incremental`` store).
+   (replay-idempotent per-batch overwrite) and the sidecar through
+   ``dedup.write_minhash_index_meta``.
+
+``{store}/index`` has the one band-index layout: ``write_minhash_index``
+(``cluster-table --index``) builds its consolidated partition
+``ingest_batch=-1``, this stream and ``streaming/corpus.py`` add batch
+partitions, and ``minhash_pairs_incremental`` reads every partition and
+appends to the consolidated one — so a batch-built index can seed a
+stream and a stream-built one can take ``cluster-table --update``.
 
 Replay convergence (no exactly-once sink needed): re-deriving a batch's
 pairs yields the same pair set (own-partition exclusion keeps the index
@@ -37,12 +43,9 @@ corpus-sized pair graph never rebuilds.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
-
-from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from commercepulse_data_pipeline_spark.operators import dedup as dd
 from commercepulse_data_pipeline_spark.operators import graph
@@ -93,8 +96,4 @@ def cluster_table_batch(
         )
 
     batches.write(batch_bands, bands_root, batch_id)
-    # same sidecar as write_minhash_index: {store}/index is a full index
-    meta = dict(p, id_col="doc_id", text_col="text")
-    one_slice_df(
-        spark, [(json.dumps(sorted(meta.items())),)], "meta string"
-    ).write.mode("overwrite").json(f"{store_dir}/index/meta")
+    dd.write_minhash_index_meta(spark, f"{store_dir}/index", p)

@@ -22,7 +22,8 @@ Idempotency: every write lands in a batch-id-named directory with
 output instead of duplicating it (the same pattern as the bronze sink's
 exactly-once story, restated for a two-sink batch function). The index
 read side globs the whole ``bands`` tree, so batch N+1 dedups against
-everything batches ≤ N kept.
+everything batches ≤ N kept — and against a ``write_minhash_index``
+build, which lands in the same store's consolidated partition.
 
 At 100 TB: per-batch cost is O(batch) + one scan of the index restricted
 to probed band keys (broadcast semi-join — see ``minhash_pairs_between``);
@@ -32,12 +33,9 @@ partitioned by ingest batch.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 from commercepulse_data_pipeline_spark.operators import curation as cur
 from commercepulse_data_pipeline_spark.operators import dedup as dd
 from commercepulse_data_pipeline_spark.streaming import batches
@@ -123,11 +121,6 @@ def clean_corpus_batch(
         F.broadcast(kept.select("doc_id")), "doc_id", "left_semi"
     )
     batches.write(kept_bands, bands_root, batch_id)
-    # same sidecar format as write_minhash_index, so {store}/index is a
-    # full-fledged index: minhash_pairs_incremental can read it directly.
-    # Written unconditionally — params are constant for a query, so the
-    # overwrite is idempotent and needs no driver-local existence check.
-    meta = dict(p, id_col="doc_id", text_col="text")
-    one_slice_df(
-        spark, [(json.dumps(sorted(meta.items())),)], "meta string"
-    ).write.mode("overwrite").json(f"{store_dir}/index/meta")
+    # {store}/index is a full band index: minhash_pairs_incremental and
+    # cluster-table --update read it directly
+    dd.write_minhash_index_meta(spark, f"{store_dir}/index", p)

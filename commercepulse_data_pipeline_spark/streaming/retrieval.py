@@ -1,28 +1,34 @@
-"""Continuous inverted-index ingest — the streaming sibling of
-``operators/retrieval.py::write_text_index`` (the same discipline as
-``streaming/embeddings.py::dedup_embeddings_batch``): tail a directory of
-document parquet drops and maintain a BM25-servable postings store.
+"""Continuous inverted-index ingest — the streaming writer of the store
+``operators/retrieval.py::write_text_index`` builds (the same discipline
+as ``streaming/embeddings.py::dedup_embeddings_batch``): tail a directory
+of document parquet drops and maintain a BM25-servable postings store.
 
-Store layout (what ``bm25_topk_indexed`` reads when no batch-mode
-``meta/`` sidecar exists):
+Store layout, one for both writers (``bm25_topk_indexed`` and
+``phrase_topk`` read it through ``_index_stats``):
 
   {store}/postings/ingest_batch=N/term_bucket=B/   posting rows
   {store}/stats/ingest_batch=N/                    one (n, s, n_buckets,
-                                                   id_col) row per batch
+                                                   id_col, positions)
+                                                   row per written slice
+
+Micro-batch N lands in ``ingest_batch=N``; a ``text-index`` build or
+append lands in the consolidated partition ``ingest_batch=-1``. So a
+built index can be extended by a stream, and a stream-built store by
+``text-index --append``.
 
 Replay idempotency: every write is a per-batch-partition OVERWRITE — a
 replayed micro-batch (crash between commit and checkpoint advance)
 reproduces its own partitions bit-identically and the query-time stats
 roll-up never double-counts. There is NO mutable meta to corrupt; layout
 params ride in every stats row and the reader refuses a store whose
-batches disagree (the stream-side analogue of write_text_index's
-append-param pin).
+rows disagree (the same check ``write_text_index`` makes before an
+append).
 
 At scale: per-batch cost is one map pass over the batch (array-side
 distinct-term counts) + a partitioned write — O(batch), never an index
 rewrite; the serving probe stays partition-pruned regardless of how many
 ingest_batch partitions accumulate (term_bucket prunes at its level).
-Compact with the same maintenance tooling as any hive-partitioned table
+``compact-index`` folds old batch partitions into the consolidated one
 when small-batch file counts grow.
 
 Append semantics: batches are treated as DISJOINT corpus slices — a doc
@@ -34,11 +40,8 @@ exactly as a corpus containing both copies would. Dedup belongs upstream
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
-
-from ..operators.retrieval import _corpus_stats, _postings_from_staged, _staged_rle
+from ..operators.retrieval import _index_slice
 from commercepulse_data_pipeline_spark.streaming import batches
 
 
@@ -51,35 +54,12 @@ def text_index_batch(
     id_col: str = "doc_id",
     n_buckets: int = 64,
 ) -> None:
-    """Fold one micro-batch of documents into the postings store.
-    Zero-token docs hold no postings but count in the batch's stats row
-    (the write_text_index contract, single-sourced in ``_corpus_stats``).
-
-    Write order is stats FIRST, postings second — deliberately: a serve
-    racing a half-committed batch (or reading after a crash between the
-    two writes) then sees stats that count docs whose postings are not
-    yet visible, which only UNDER-ranks (the docs are absent, idf/avgdl
-    slightly conservative) and converges on replay. The opposite order
-    would score visible postings against stats that undercount the
-    corpus — systematically inflated scores, which is the worse silent
-    failure. On the very first batch the window instead surfaces as a
-    missing-postings read error: honest, and gone once the batch
-    commits."""
-    spark = batch_df.sparkSession
-    staged = _staged_rle(batch_df, text_col).localCheckpoint(eager=True)
-    stats_row = _corpus_stats(staged)
-    batches.write(
-        one_slice_df(
-            spark,
-            [(int(stats_row["n"]), int(stats_row["s"]), n_buckets, id_col)],
-            "n long, s long, n_buckets int, id_col string",
-        ),
-        f"{store_dir}/stats",
-        batch_id,
-    )
-    batches.write(
-        _postings_from_staged(staged, id_col, n_buckets),
-        f"{store_dir}/postings",
-        batch_id,
-        "term_bucket",
-    )
+    """Fold one micro-batch of documents into the postings store: its
+    stats row, then its postings (the order ``_index_slice`` explains),
+    each in the batch's own partition. Zero-token docs hold no postings
+    but count in the batch's stats row. On the very first batch a serve
+    between the two writes fails with a missing-postings read error:
+    honest, and gone once the batch commits."""
+    stats, postings = _index_slice(batch_df, text_col, id_col, n_buckets, False)
+    batches.write(stats, f"{store_dir}/stats", batch_id)
+    batches.write(postings, f"{store_dir}/postings", batch_id, "term_bucket")

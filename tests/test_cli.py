@@ -1251,3 +1251,166 @@ def test_search_phrase_cli(spark, tmp_path, capsys):
         cli.main([
             "search", "--index", plain, "--terms", "big,data", "--phrase",
         ])
+
+
+def _drop(incoming, name, columns):
+    """Land ``columns`` as one parquet file directly in ``incoming``, the
+    directory a file-stream subcommand tails."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(incoming, exist_ok=True)
+    pq.write_table(pa.table(columns), os.path.join(incoming, f"{name}.parquet"))
+    return str(incoming)
+
+
+def _assert_matches_scan(spark, hits_path, docs, terms):
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+
+    hits = spark.read.parquet(hits_path).orderBy("rank").collect()
+    scan = ret.bm25_topk(
+        spark.createDataFrame(docs, "doc_id bigint, text string"), terms, k=10
+    ).collect()
+    assert [(r.rank, r.doc_id, r.n_match, r.dl) for r in hits] == [
+        (r.rank, r.doc_id, r.n_match, r.dl) for r in scan
+    ]
+    for a, b in zip(hits, scan):
+        assert abs(a.score - b.score) < 1e-6
+
+
+def test_text_index_extended_by_stream_text_index(spark, tmp_path, capsys):
+    """text-index builds the store's consolidated partition and
+    stream-text-index adds micro-batches to the SAME store: search over
+    it equals the scan scorer over every doc, built and streamed."""
+    built = [(1, "spark query engine spark spark"), (2, "pasta recipe basil spark")]
+    streamed = [(3, "basil basil basil pesto"), (4, "query planner beats hand tuning")]
+    spark.createDataFrame(built, "doc_id bigint, text string").write.parquet(
+        str(tmp_path / "docs")
+    )
+    ix = str(tmp_path / "ix")
+    assert cli.main([
+        "text-index", "--docs", str(tmp_path / "docs"), "--out", ix,
+        "--n-buckets", "8",
+    ]) == 0
+    incoming = _drop(tmp_path / "in", "b0", {
+        "doc_id": [d for d, _ in streamed], "text": [t for _, t in streamed],
+    })
+    assert cli.main([
+        "stream-text-index", "--docs-path", incoming, "--store", ix,
+        "--checkpoint", str(tmp_path / "ckpt"), "--n-buckets", "8",
+    ]) == 0
+    terms = ["spark", "basil", "query"]
+    assert cli.main([
+        "search", "--index", ix, "--terms", ",".join(terms), "--k", "10",
+        "--out", str(tmp_path / "hits"),
+    ]) == 0
+    _assert_matches_scan(spark, str(tmp_path / "hits"), built + streamed, terms)
+
+
+def test_stream_text_index_store_extended_by_text_index_append(spark, tmp_path, capsys):
+    """A stream-built store takes a text-index --append as one more slice:
+    the summary line counts every doc, streamed and appended, and search
+    finds the appended doc with the scan scorer's ranking."""
+    streamed = [(1, "spark query engine spark spark"), (2, "pasta recipe basil spark"),
+                (3, "query planner beats hand tuning")]
+    appended = [(4, "basil basil pesto")]
+    incoming = _drop(tmp_path / "in", "b0", {
+        "doc_id": [d for d, _ in streamed], "text": [t for _, t in streamed],
+    })
+    store = str(tmp_path / "store")
+    assert cli.main([
+        "stream-text-index", "--docs-path", incoming, "--store", store,
+        "--checkpoint", str(tmp_path / "ckpt"), "--n-buckets", "8",
+    ]) == 0
+    spark.createDataFrame(appended, "doc_id bigint, text string").write.parquet(
+        str(tmp_path / "docs2")
+    )
+    capsys.readouterr()
+    assert cli.main([
+        "text-index", "--docs", str(tmp_path / "docs2"), "--out", store,
+        "--n-buckets", "8", "--append",
+    ]) == 0
+    sum_dl = sum(len(t.split()) for _, t in streamed + appended)
+    assert f"n_docs=4, sum_dl={sum_dl}," in capsys.readouterr().out
+    assert cli.main([
+        "search", "--index", store, "--terms", "basil,spark", "--k", "10",
+        "--out", str(tmp_path / "hits"),
+    ]) == 0
+    assert "doc_id=4" in capsys.readouterr().out
+    _assert_matches_scan(spark, str(tmp_path / "hits"), streamed + appended, ["basil", "spark"])
+
+
+def test_cli_bootstrap_then_dims(spark, tmp_path, capsys):
+    """bootstrap lands historical JSON arrays in bronze (an exact replay
+    collapses on its event id) and dims builds the dimension tables from
+    that bronze."""
+    orders = [
+        {"order_id": "O1", "customer_id": "C1", "created_at": "2024-03-01T10:00:00Z",
+         "vendor": "vendor_a", "total": 10},
+        {"order_id": "O2", "customer_id": "C2", "created_at": "2024-03-02T10:00:00Z",
+         "vendor": "vendor_b", "total": 20},
+    ]
+    payments = [{"payment_id": "P1", "order_id": "O1", "amount": 10,
+                 "paid_at": "2024-03-01T11:00:00Z"}]
+    o, p = tmp_path / "orders.json", tmp_path / "payments.json"
+    o.write_text(json.dumps(orders + orders[1:]))  # O2 replayed
+    p.write_text(json.dumps(payments))
+    bronze = str(tmp_path / "bronze")
+    assert cli.main([
+        "bootstrap", f"historical_order={o}", f"historical_payment={p}",
+        "--bronze", bronze,
+    ]) == 0
+    out = capsys.readouterr().out
+    assert "bootstrapped historical_order: 3 events" in out
+    assert "bootstrapped historical_payment: 1 events" in out
+    assert spark.read.parquet(bronze).count() == 3
+
+    wh = str(tmp_path / "wh")
+    assert cli.main(["dims", "--bronze", bronze, "--warehouse", wh]) == 0
+    assert "dims written" in capsys.readouterr().out
+    assert spark.read.parquet(f"{wh}/dim_date.parquet").count() == 1461
+    assert spark.read.parquet(f"{wh}/dim_product.parquet").count() == 1
+    assert sorted(
+        r.customer_id for r in spark.read.parquet(f"{wh}/dim_customer.parquet").collect()
+    ) == ["C1", "C2"]
+
+
+def test_cli_stream_clean_corpus(spark, tmp_path, capsys):
+    """stream-clean-corpus drains document drops into a cleaned corpus:
+    an exact and a near duplicate of doc 1 drop, each with a quarantine
+    row."""
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    incoming = _drop(tmp_path / "in", "b0", {
+        "doc_id": [1, 2, 3, 4],
+        "text": [base, base, "entirely unrelated content about pasta", base + " tonight"],
+    })
+    store = str(tmp_path / "store")
+    assert cli.main([
+        "stream-clean-corpus", "--docs", incoming, "--store", store,
+        "--checkpoint", str(tmp_path / "ckpt"), "--quarantine",
+    ]) == 0
+    assert f"corpus maintained at {store}/corpus" in capsys.readouterr().out
+    assert sorted(r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()) == [1, 3]
+    assert spark.read.parquet(f"{store}/quarantine").count() == 2
+    assert spark.read.parquet(f"{store}/index/bands").select("doc_id").distinct().count() == 2
+
+
+def test_cli_stream_dedup_embeddings(spark, tmp_path, capsys):
+    """stream-dedup-embeddings drains vector drops into a deduplicated
+    store: a scaled copy of vector 1 (cosine 1) drops, keep-first."""
+    import pyarrow as pa
+
+    a, b = [1.0, 0.2, -0.5, 3.0], [-2.0, 1.0, 0.7, 0.1]
+    incoming = _drop(tmp_path / "in", "b0", {
+        "vec_id": pa.array([1, 2, 3], pa.int64()),
+        "embedding": pa.array([a, [2 * x for x in a], b], pa.list_(pa.float32())),
+    })
+    store = str(tmp_path / "store")
+    assert cli.main([
+        "stream-dedup-embeddings", "--vectors", incoming, "--store", store,
+        "--checkpoint", str(tmp_path / "ckpt"),
+    ]) == 0
+    assert f"vector store maintained at {store}/vectors" in capsys.readouterr().out
+    assert sorted(r.vec_id for r in spark.read.parquet(f"{store}/vectors").collect()) == [1, 3]

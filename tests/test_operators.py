@@ -2467,7 +2467,7 @@ def test_text_index_build_query_and_append(spark, tmp_path):
     """Inverted-index BM25 serving: the indexed top-k returns the same
     docs/ranks/n_match/dl as the scan scorer (scores agree to 1e-6 —
     exact-decimal group sum vs fixed-order double sum), zero-token docs
-    count in the stats sidecar, append rolls stats forward and finds
+    count in the stats rows, append rolls stats forward and finds
     docs from both batches, and a param-mismatched append refuses."""
     from commercepulse_data_pipeline_spark.operators import retrieval as ret
 
@@ -2481,12 +2481,19 @@ def test_text_index_build_query_and_append(spark, tmp_path):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     path = str(tmp_path / "tix")
     ret.write_text_index(df, path, n_buckets=8)
+    import os
 
-    meta = ret.read_text_index_meta(spark, path)
-    assert int(meta["n_docs"]) == 5
-    assert int(meta["sum_dl"]) == sum(len(t.split()) for _, t in docs)
+    assert not os.path.exists(f"{path}/meta")  # the stats rows replace it
+    meta = ret._index_stats(spark, path)
+    assert meta == {
+        "n_docs": 5,
+        "sum_dl": sum(len(t.split()) for _, t in docs),
+        "n_buckets": 8,
+        "id_col": "doc_id",
+        "positions": False,
+    }
 
-    # defaultFS gating (ADVICE r15): an explicit file: URI reads the meta
+    # defaultFS gating (ADVICE r15): an explicit file: URI reads the stats
     # through the driver filesystem WITHOUT touching the Spark session at
     # all, while a bare path under a NON-local default filesystem must
     # fall through to the cluster reader (a same-named local dir must not
@@ -2496,7 +2503,7 @@ def test_text_index_build_query_and_append(spark, tmp_path):
             raise AssertionError(f"touched Spark ({name}) for a file: path")
 
     for uri in (f"file:{path}", f"file://{path}", f"file://localhost{path}"):
-        assert ret.read_text_index_meta(_NoSpark(), uri) == meta
+        assert ret._index_stats(_NoSpark(), uri) == meta
 
     class _Sentinel(Exception):
         pass
@@ -2519,7 +2526,7 @@ def test_text_index_build_query_and_append(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(_Sentinel):
-        ret.read_text_index_meta(_ClusterSpark(), path)
+        ret._index_stats(_ClusterSpark(), path)
 
     terms = ["spark", "basil"]
     scan = ret.bm25_topk(df, terms, k=5).collect()
@@ -2533,9 +2540,9 @@ def test_text_index_build_query_and_append(spark, tmp_path):
     # append a second batch: stats roll forward, new docs retrievable
     batch2 = spark.createDataFrame([(6, "spark spark spark")], ["doc_id", "text"])
     ret.write_text_index(batch2, path, n_buckets=8, mode="append")
-    meta2 = ret.read_text_index_meta(spark, path)
-    assert int(meta2["n_docs"]) == 6
-    assert int(meta2["sum_dl"]) == int(meta["sum_dl"]) + 3
+    meta2 = ret._index_stats(spark, path)
+    assert meta2["n_docs"] == 6
+    assert meta2["sum_dl"] == meta["sum_dl"] + 3
     hits = {r.doc_id for r in ret.bm25_topk_indexed(spark, path, ["spark"], k=10).collect()}
     assert hits == {1, 2, 6}
 

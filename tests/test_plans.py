@@ -675,8 +675,8 @@ def test_bm25_indexed_probe_prunes_partitions(spark, tmp_path):
     # materializes the pruned scan once; the scoring join reads cache),
     # so the pruning evidence lives on the probe subplan — assert it
     # there, on exactly the expression bm25_topk_indexed executes.
-    meta = ret.read_text_index_meta(spark, path)
-    buckets = ret._probe_buckets(spark, ["alpha", "w3"], int(meta["n_buckets"]))
+    n_buckets = ret._index_stats(spark, path)["n_buckets"]
+    buckets = ret._probe_buckets(spark, ["alpha", "w3"], n_buckets)
     probe_plan = _plan(ret._probed_postings(spark, path, ["alpha", "w3"], buckets))
     assert "PartitionFilters: [" in probe_plan and "term_bucket" in probe_plan.split(
         "PartitionFilters: ["

@@ -273,6 +273,39 @@ def test_clean_corpus_batch_replay_idempotent(spark, tmp_path):
     assert final == {1, 3}                   # 10 dropped as cross-batch dup
 
 
+def test_clean_corpus_batch_extends_a_built_minhash_index(spark, tmp_path):
+    """write_minhash_index (the cluster-table --index build) writes the
+    consolidated partition of the band store clean_corpus_batch grows: a
+    stream batch on that store drops the arriving near-dup of an indexed
+    doc, keeps the rest and adds its bands as batch 0."""
+    from commercepulse_data_pipeline_spark.operators import dedup as dd
+    from commercepulse_data_pipeline_spark.streaming.corpus import clean_corpus_batch
+
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    store = str(tmp_path / "store")
+    dd.write_minhash_index(
+        spark.createDataFrame(
+            [(1, base), (2, "completely different content about cooking pasta sauce")],
+            "doc_id long, text string",
+        ),
+        f"{store}/index",
+    )
+    clean_corpus_batch(
+        spark.createDataFrame(
+            [(10, base + " tonight"), (11, "nothing like anything indexed before")],
+            "doc_id long, text string",
+        ),
+        0,
+        store,
+    )
+    assert {r.doc_id for r in spark.read.parquet(f"{store}/corpus").collect()} == {11}
+    bands = spark.read.parquet(f"{store}/index/bands")
+    assert {
+        (r.ingest_batch, r.doc_id)
+        for r in bands.select("ingest_batch", "doc_id").distinct().collect()
+    } == {(-1, 1), (-1, 2), (0, 11)}
+
+
 def test_stream_dedup_embeddings_cross_batch(spark, tmp_path):
     """Streaming embedding curation: batch 2's near-dup of an indexed
     batch-1 vector drops (keep-first), within-batch dups collapse to the
@@ -1511,5 +1544,5 @@ def test_stream_text_index_serve_and_replay(spark, tmp_path):
         spark.createDataFrame([(7, "x")], "doc_id bigint, text string"),
         3, store, n_buckets=16,
     )
-    with pytest.raises(ValueError, match="inconsistent stream-store"):
+    with pytest.raises(ValueError, match="inconsistent index params"):
         ret.bm25_topk_indexed(spark, store, ["x"], k=5)
