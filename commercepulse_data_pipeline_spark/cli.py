@@ -456,10 +456,15 @@ def cmd_compact(args) -> int:
 
 def cmd_compact_index(args) -> int:
     """Streaming-store maintenance: fold a batch-partitioned index dir
-    (``{store}/index/bands`` or ``{store}/index/lists``) into its
-    consolidated partition, keeping the newest ``--keep-latest`` batch
-    partitions for replay safety. Run it on a cron beside a live stream —
-    the fold is crash-recoverable and the store stays queryable."""
+    (``{store}/index/bands``, ``{store}/index/lists`` with
+    ``--sub-partition-col lsh_bucket``, or a text index's
+    ``{index}/stats`` and ``{index}/postings`` with
+    ``--sub-partition-col term_bucket``) into its consolidated partition,
+    keeping the newest ``--keep-latest`` batch partitions for replay
+    safety. Run it on a cron beside a live stream — the fold is
+    crash-recoverable and the store stays queryable: every reader of
+    these stores lists them through ``readers.store_partitions``, so a
+    running or interrupted fold reads as the store before or after it."""
     from commercepulse_data_pipeline_spark.sources.readers import (
         compact_streaming_index,
     )
@@ -1070,7 +1075,7 @@ def main(argv: list[str] | None = None) -> int:
     ti.add_argument("--n-buckets", type=int, default=64, dest="n_buckets")
     ti.add_argument("--append", action="store_true",
                     help="incremental ingest: layout params must match the "
-                         "index meta; corpus stats roll forward")
+                         "index's stats rows; corpus stats roll forward")
     ti.add_argument("--positions", action="store_true",
                     help="positional layout (occurrence offsets in every "
                          "posting) — enables `search --phrase`")

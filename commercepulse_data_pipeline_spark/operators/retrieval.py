@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from ..functions.expr import let
+from ..sources import readers
 from ..streaming import batches
 from .text import rle_counts, tokens
 
@@ -336,22 +337,15 @@ def write_text_index(
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-    if mode == "append":
+    if mode == "append" and _index_exists(df.sparkSession, path):
         params = {"n_buckets": n_buckets, "id_col": id_col, "positions": positions}
-        try:
-            existing = _index_stats(df.sparkSession, path)
-        except Exception as exc:  # noqa: BLE001 — filtered just below
-            from ..sources.readers import is_missing_store_error
-
-            if not is_missing_store_error(exc, f"{path}/stats"):
-                raise
-        else:
-            have = {k: existing[k] for k in params}
-            if have != params:
-                raise ValueError(
-                    f"append with params {params} != index params {have}; "
-                    "rebuilding the index is the only safe migration"
-                )
+        existing = _index_stats(df.sparkSession, path)
+        have = {k: existing[k] for k in params}
+        if have != params:
+            raise ValueError(
+                f"append with params {params} != index params {have}; "
+                "rebuilding the index is the only safe migration"
+            )
 
     stats, postings = _index_slice(df, text_col, id_col, n_buckets, positions)
     batches.write_consolidated(stats, f"{path}/stats", mode)
@@ -362,6 +356,17 @@ def write_text_index(
     )
 
 
+def _index_exists(spark, path: str) -> bool:
+    """Whether the text index at ``path`` has a stats store yet, asked of
+    the listing (``readers.store_partitions``) before anything is read;
+    a non-local index asks its Hadoop filesystem."""
+    root = f"{path.rstrip('/')}/stats"
+    if readers.local_path(spark, root) is not None:
+        return bool(readers.store_partitions(spark, root))
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(root)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def _index_stats(spark, path: str) -> dict:
     """The text index's corpus stats and layout: ``n_docs`` and
     ``sum_dl`` summed over every stats row, and the ``n_buckets``,
@@ -369,47 +374,31 @@ def _index_stats(spark, path: str) -> dict:
     disagree is refused. Summing is replay-safe: a replayed stream batch
     overwrites its own stats partition.
 
-    Every query reads this, so its cost is fixed latency. For a plain
-    local path the rows are read on the driver with pyarrow — sidecar
-    metadata never needs a cluster. A bare (scheme-less) path resolves
-    against ``fs.defaultFS``, so on an HDFS/S3A deployment a same-named
-    LOCAL directory must not shadow the cluster copy: the driver read is
-    taken only for explicit ``file:`` URIs or when the default
-    filesystem itself is local. Other URIs and a store with no local
-    stats files go through the Spark reader with an explicit schema (no
-    schema-inference job), which also raises the missing-path error
-    callers match on."""
-    import glob
-
-    from ..sources.commit import BATCH_COL, local_path
-
-    local = None
-    if path.startswith("file:"):
-        local = local_path(path)
-    elif "://" not in path:
-        default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-        if default_fs.startswith("file:"):
-            local = path
+    Every query reads this, so its cost is fixed latency. A local index
+    (``readers.local_path``) has its rows read on the driver with
+    pyarrow from the files of ``readers.store_partitions(<path>/stats)``,
+    so a running or interrupted ``compact-index`` fold of ``stats/`` is
+    read as the store before or after it; a ``file:`` URI never touches
+    the session. A non-local index goes through the Spark reader with an
+    explicit schema (no schema-inference job)."""
     cols = ["n", "s", "n_buckets", "id_col", "positions"]
-    files = sorted(glob.glob(f"{local}/stats/{BATCH_COL}=*/*.parquet")) if local else []
-    if files:
+    root = f"{path.rstrip('/')}/stats"
+    if readers.local_path(spark, root) is not None:
         import pyarrow.parquet as pq
 
         rows = [
             tuple(r[c] for c in cols)
-            for f in files
+            for d in readers.store_partitions(spark, root).values()
+            for f in sorted(readers._data_files(d, "*.parquet"))
             for r in pq.ParquetFile(f).read(columns=cols).to_pylist()
         ]
     else:
         rows = [
             tuple(r)
-            for r in spark.read.schema(_STATS_SCHEMA)
-            .parquet(f"{path}/stats")
-            .select(*cols)
-            .collect()
+            for r in spark.read.schema(_STATS_SCHEMA).parquet(root).select(*cols).collect()
         ]
     if not rows:
-        raise FileNotFoundError(f"no text index stats under {path}/stats")
+        raise FileNotFoundError(f"no text index stats under {root}")
     layouts = {r[2:] for r in rows}
     if len(layouts) != 1:
         raise ValueError(
@@ -460,10 +449,16 @@ def _probed_postings(spark, path: str, terms: list[str], buckets: list[int]):
     """The bucket-pruned, term-filtered postings scan shared by the
     indexed serving paths — split out so the partition-pruning plan
     regression asserts on the probe itself (the serving path pins the
-    probe's result, so the FINAL plan reads the pinned RDD)."""
-    return spark.read.parquet(f"{path}/postings").where(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-    )
+    probe's result, so the FINAL plan reads the pinned RDD). A local
+    index is read through ``readers.fold_consistent_read`` (a plain root
+    read at rest, so the ``term_bucket`` filter still prunes
+    directories); a non-local one with a plain Spark read."""
+    root = f"{path.rstrip('/')}/postings"
+    if readers.local_path(spark, root) is not None:
+        postings = readers.fold_consistent_read(spark, root)
+    else:
+        postings = spark.read.parquet(root)
+    return postings.where(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
 
 
 def bm25_topk_indexed(

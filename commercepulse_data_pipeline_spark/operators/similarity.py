@@ -177,7 +177,12 @@ def lsh_topk_indexed(
     (tiny) persisted plane table on the driver, read ONLY the probed
     buckets' partitions (partition pruning, plan-asserted in tests), exact
     cosine re-rank inside them. Same answers as ``lsh_topk`` with the same
-    planes — the restriction moves from a filter scan to pruning."""
+    planes — the restriction moves from a filter scan to pruning.
+    ``lists/`` is read through ``readers.fold_consistent_read``, so a
+    ``compact-index`` fold of it, running or interrupted, is served as
+    the store before or after the fold."""
+    from ..sources.readers import fold_consistent_read
+
     planes = [
         list(r.plane)
         for r in sorted(
@@ -185,7 +190,7 @@ def lsh_topk_indexed(
         )
     ]
     buckets = [int(b, 2) for b in _probe_buckets(query_vec, planes, probes)]
-    lists = spark.read.parquet(f"{path}/lists").where(F.col("lsh_bucket").isin(buckets))
+    lists = fold_consistent_read(spark, f"{path}/lists").where(F.col("lsh_bucket").isin(buckets))
     return cosine_topk(lists, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 

@@ -27,8 +27,14 @@ Users:
   index store: the new consolidated ``ingest_batch=-1`` partition is a
   replaced table and each folded ``ingest_batch=N`` partition a dropped
   one, with hidden ``<root>/.<partition>.{tmp,old}`` siblings and the
-  record at ``<root>/_SWAP.json``. ``readers.fold_consistent_read``
-  reads the store while that record is present.
+  record at ``<root>/_SWAP.json``.
+
+Two things read an intent record: :func:`recover_swap`, which rolls the
+commit forward from it, and ``readers.store_partitions``, the only
+listing of a folded store, which lists the post-fold store while the
+record is present. Every reader of such a store (``batches.prior``,
+``readers.fold_consistent_read``, the text and LSH index readers) goes
+through that listing, so none of them ever sees a half-folded store.
 
 Each rename is atomic on POSIX; the protocol does not speak HDFS or
 object stores — there, a table format's commit (Delta/Iceberg/Hudi) is
@@ -41,7 +47,6 @@ import json
 import os
 import shutil
 from typing import Sequence
-from urllib.parse import urlparse
 
 # (live, tmp, old) paths of one committed directory; tmp is None for a
 # directory the commit drops
@@ -55,17 +60,6 @@ INTENT = "_SWAP.json"
 # streaming batch id takes.
 BATCH_COL = "ingest_batch"
 CONSOLIDATED_BATCH = -1
-
-
-def local_path(uri: str) -> str | None:
-    """The driver-local path of ``uri``, or None when it names another
-    filesystem: ``file:/p``, ``file:///p``, ``file://localhost/p`` and
-    ``/p`` all map to ``/p``; ``s3a://b/k`` and ``hdfs://nn/p`` map to
-    None."""
-    u = urlparse(uri)
-    if u.scheme == "file":
-        return u.path if u.netloc in ("", "localhost") else None
-    return None if u.scheme else uri
 
 
 def _write_marker(path: str, obj: dict) -> None:

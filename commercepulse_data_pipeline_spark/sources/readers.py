@@ -13,6 +13,9 @@ src/live_event_loader.py:32-48).
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -172,12 +175,11 @@ def _recover(path: str) -> None:
 
 def _data_files(path: str, pattern: str = "*") -> list[str]:
     import glob as _glob
-    import os as _os
 
     return [
         f
-        for f in _glob.glob(_os.path.join(path, "**", pattern), recursive=True)
-        if _os.path.isfile(f) and not _os.path.basename(f).startswith(("_", "."))
+        for f in _glob.glob(os.path.join(path, "**", pattern), recursive=True)
+        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
     ]
 
 
@@ -190,11 +192,10 @@ def _rewrite_layout(spark: SparkSession, path: str, target_file_mb: int, write) 
     ``<path>._compact_old`` until the next rewrite adopts it back), and
     recount. Local filesystem only."""
     import math
-    import os as _os
 
     _recover(path)
     files = _data_files(path)
-    total = sum(_os.path.getsize(f) for f in files)
+    total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     table = _staged(path, "compact")
     write(spark.read.parquet(path), n_out, files, table[1])
@@ -239,7 +240,6 @@ def compact_parquet(
     Returns {"files_before", "files_after", "bytes"} for ops logging.
     """
     import math
-    import os as _os
     import urllib.parse as _uparse
 
     target_bytes = target_file_mb * 1024 * 1024
@@ -253,12 +253,12 @@ def compact_parquet(
         hive = True
         prefix = partition_col + "="
         for f in files:
-            seg = next((s for s in f.split(_os.sep) if s.startswith(prefix)), None)
+            seg = next((s for s in f.split(os.sep) if s.startswith(prefix)), None)
             if seg is None:
                 hive = False
                 break
             val = _uparse.unquote(seg[len(prefix):])
-            part_bytes[val] = part_bytes.get(val, 0) + _os.path.getsize(f)
+            part_bytes[val] = part_bytes.get(val, 0) + os.path.getsize(f)
         if hive and part_bytes and len(part_bytes) <= 10_000:
             widths = {v: max(1, math.ceil(b / target_bytes)) for v, b in part_bytes.items()}
             width_map = F.create_map(
@@ -291,152 +291,106 @@ def compact_parquet(
     return _rewrite_layout(spark, path, target_file_mb, write)
 
 
-def is_missing_store_error(exc: BaseException, root: str | None = None) -> bool:
-    """True iff ``exc`` means "this store path does not exist yet" — the
-    ONLY condition a first-batch bootstrap probe may treat as an empty
-    store. Everything else (permission errors, schema corruption,
-    transient listing failures) returns False and must FAIL the batch so
-    the engine retries it: swallowing a transient error as "first batch"
-    would silently skip cross-batch dedup/state and persist wrong output
-    (ADVICE r9). ``UNABLE_TO_INFER_SCHEMA`` counts as missing — it is
-    what Spark raises for a created-but-never-written store directory.
+def local_path(spark: SparkSession, root: str) -> str | None:
+    """The driver-local path of ``root``, or None when it names another
+    filesystem — the one rule every store reader resolves a root with.
+    ``file:/p``, ``file:///p`` and ``file://localhost/p`` are ``/p``;
+    ``s3a://b/k`` and ``hdfs://nn/p`` are not local. A bare path resolves
+    against ``fs.defaultFS`` as Spark would resolve it, so it is local
+    only when that filesystem is: on an HDFS/S3A deployment a same-named
+    local directory must not shadow the cluster copy. A ``file:`` URI
+    never touches the session."""
+    u = urlparse(root)
+    if u.scheme:
+        return u.path if u.scheme == "file" and u.netloc in ("", "localhost") else None
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    return root if default_fs.startswith("file:") else None
 
-    Pass ``root`` (the store path the failed read targeted) to also
-    confirm ON THE FILESYSTEM that the store is genuinely absent/empty
-    (ADVICE r10): a concurrent compactor's fold rename can surface these
-    same error classes mid-read on a store that very much exists — in
-    that case this returns False so the caller retries the batch instead
-    of silently treating a compaction race as "first batch" and skipping
-    cross-batch dedup. A root that exists counts as absent only when it
-    holds nothing but marker entries (``_SUCCESS``, ``_SWAP.json*``,
-    …) — i.e. created-but-never-written.
 
-    The filesystem confirmation is LOCAL-FILESYSTEM-ONLY (the same
-    explicit contract as :func:`fold_consistent_read`): for a root with
-    a non-file scheme (``s3a://``, ``hdfs://``, …) there is no driver-
-    local listing to probe, so the probe is skipped and the error
-    classification alone decides — i.e. remote stores get NO
-    compaction-race protection from this function. Callers folding a
-    remote store concurrently with readers must serialize externally
-    (ADVICE r11)."""
-    import os as _os
+def require_local_path(spark: SparkSession, root: str) -> str:
+    """:func:`local_path` of a root that must be local: a store the fold
+    lists and renames with local file I/O. Any other root raises, since
+    reading it without its intent record would silently miss or
+    double-count the partitions a fold is moving (ADVICE r9)."""
+    local = local_path(spark, root)
+    if local is None:
+        raise ValueError(
+            f"{root!r} is not on the driver's filesystem, and batch-partitioned "
+            f"stores are local-filesystem-only (the fold's intent record is "
+            f"read with local file I/O). Use spark.read.parquet directly (NO "
+            f"fold consistency) or a snapshot-isolated table format for "
+            f"non-local stores."
+        )
+    return os.path.abspath(local)
 
-    def _classified_missing() -> bool:
-        from pyspark.errors import AnalysisException
 
-        if isinstance(exc, FileNotFoundError):
-            return True
-        if isinstance(exc, AnalysisException):
-            ec = None
-            # getErrorClass is deprecated in PySpark 4 (-> getCondition);
-            # probe the new name first, fall back for older versions
-            for probe in ("getCondition", "getErrorClass"):
-                fn = getattr(exc, probe, None)
-                if fn is None:
-                    continue
-                try:
-                    ec = fn()
-                except Exception:  # noqa: BLE001 — fall back to message probe
-                    ec = None
-                if ec is not None:
-                    break
-            if ec is not None:
-                return ec in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            msg = str(exc)
-            return "PATH_NOT_FOUND" in msg or "Unable to infer schema" in msg
-        return False
-
-    if not _classified_missing():
-        return False
-    if root is None:
-        return True
-    path = commit.local_path(root)
-    if path is None:
-        # Non-local scheme: no driver-local listing exists, so the race
-        # probe below would ALWAYS read "absent". Skip it explicitly and
-        # let the error classification decide (documented local-only
-        # contract above).
-        return True
-    if not _os.path.exists(path):
-        return True
-    try:
-        entries = _os.listdir(path)
-    except OSError:
-        # can't confirm the store is empty -> not safely "missing"
-        return False
-    return all(e.startswith("_") for e in entries)
+def store_partitions(spark: SparkSession, root: str) -> dict[int, str]:
+    """The fold-consistent ``{ingest_batch value: directory}`` of the
+    local batch-partitioned store at ``root``, the only listing of such a
+    store in the package. With no intent record it is every
+    ``ingest_batch=N`` directory. While :func:`compact_streaming_index`'s
+    record (``<root>/_SWAP.json``) is present it is the post-fold store:
+    each replaced partition (the consolidated one) from its tmp while the
+    tmp exists and from its live directory after, without the dropped
+    (folded) partitions. An empty dict means there is no store yet: the
+    root is missing or holds only markers. The listing never mutates the
+    store, so it answers the same at every resting point of a fold,
+    before any recovery runs."""
+    p = require_local_path(spark, root)
+    prefix = commit.BATCH_COL + "="
+    tables = commit.intent_tables(os.path.join(p, commit.INTENT)) or []
+    moved = {live for live, _, _ in tables}
+    entries = os.listdir(p) if os.path.isdir(p) else []
+    # (live, directory to read) pairs: a replaced partition is read from its
+    # tmp while the tmp exists; a dropped one (no tmp) is left out
+    lives = [os.path.join(p, e) for e in entries if e.startswith(prefix)]
+    dirs = [(d, d) for d in lives if d not in moved]
+    dirs += [(live, tmp if os.path.isdir(tmp) else live) for live, tmp, _ in tables if tmp is not None]
+    return dict(
+        sorted((int(os.path.basename(live)[len(prefix):]), d) for live, d in dirs if os.path.isdir(d))
+    )
 
 
 def fold_consistent_read(spark: SparkSession, root: str) -> DataFrame:
-    """READ-SIDE contract for the streaming index stores: the store as
-    it stands before or after a fold, never a mix, at every resting point
-    of :func:`compact_streaming_index`'s commit — so a monitoring job can
-    probe concurrently with compaction, and after a mid-fold crash BEFORE
-    any recovery runs (this function never mutates the store).
+    """The batch-partitioned store at ``root`` as :func:`store_partitions`
+    lists it: before or after a fold, never a mix, at every resting point
+    of :func:`compact_streaming_index`'s commit. A reader can probe
+    concurrently with compaction, or after a mid-fold crash before any
+    recovery runs; this function never mutates the store.
 
-    The fold commits through :func:`commit.swap`, which records its
-    intent before it moves anything, so with no record present the root
-    is the pre- or post-fold store and this is a plain partitioned read.
-    While a record is present, a plain read could miss the consolidated
-    partition (between its rename aside and its tmp's rename in) or
-    count a folded partition AND the new consolidated one — a double
-    count for the count-summing passage fingerprint index. The view then
-    reads the post-fold store, which every compactor guarantees answers
-    like the pre-fold one: each replaced partition (the consolidated
-    one) from its tmp while the tmp exists and from live once it does
-    not, plus the root with every replaced and dropped partition pruned
-    out. That is one plan branch per replaced partition plus one for the
-    root, whatever the partition count.
+    With no intent record the store is at rest and this is a plain
+    partitioned read of ``root``, so partition filters on its inner
+    columns (``term_bucket``, ``lsh_bucket``) still prune directories.
+    While a record is present a plain read could miss the consolidated
+    partition (between its rename aside and its tmp's rename in) or count
+    a folded partition AND the new consolidated one. The view then reads
+    the listing: the partitions still at their live directories through
+    one root read restricted to their values, and each partition read
+    from its tmp as one more branch.
 
     Guarantee scope: any RESTING state (crash-consistent). Against a
     compactor advancing concurrently mid-call, a rename can still win the
     race with the file listing — retry on FileNotFound, as with any
     concurrently-rewritten path.
 
-    LOCAL-ONLY by construction: the record is read with Python file I/O,
-    matching the commit itself (local renames). A non-file scheme
-    (``hdfs://``, ``s3a://``) would silently degrade to a plain read —
-    exactly the miss or double count this reader exists to prevent — so it
-    raises instead (ADVICE r9). Non-local stores need a compactor and a
-    reader built on the same atomic-rename substrate (HDFS rename / a
-    table format's snapshot isolation), not this protocol."""
-    import os as _os
+    Local only, like the listing: another root raises ``ValueError``
+    (:func:`require_local_path`)."""
     from functools import reduce
 
-    if "://" in root:
-        scheme = root.split("://", 1)[0]
-        raise ValueError(
-            f"fold_consistent_read is local-filesystem-only (the fold's "
-            f"intent record is read with local file I/O); got "
-            f"scheme {scheme!r} for {root!r}. Use spark.read.parquet "
-            f"directly (NO fold consistency) or a snapshot-isolated table "
-            f"format for non-local stores."
-        )
-    p = root.rstrip("/")
-    tables = commit.intent_tables(_os.path.join(p, commit.INTENT))
-    if tables is None:
-        return spark.read.parquet(p)
+    p = require_local_path(spark, root)
+    if commit.intent_tables(os.path.join(p, commit.INTENT)) is None:
+        return spark.read.parquet(root)
     prefix = commit.BATCH_COL + "="
-
-    def value(path: str) -> int:
-        return int(_os.path.basename(path)[len(prefix):])
-
-    moved = [value(live) for live, _, _ in tables]
-    parts = [
-        spark.read.parquet(tmp if _os.path.isdir(tmp) else live).withColumn(
-            commit.BATCH_COL, F.lit(value(live)).cast("int")
-        )
-        for live, tmp, _ in tables
-        if tmp is not None
+    parts = store_partitions(spark, root)
+    in_place = [v for v, d in parts.items() if d == os.path.join(p, f"{prefix}{v}")]
+    frames = [
+        spark.read.parquet(f"file://{d}").withColumn(commit.BATCH_COL, F.lit(v).cast("int"))
+        for v, d in parts.items()
+        if v not in in_place
     ]
-    if any(
-        entry.startswith(prefix)
-        and value(entry) not in moved
-        and _os.path.isdir(_os.path.join(p, entry))
-        for entry in _os.listdir(p)
-    ):
-        parts.insert(0, spark.read.parquet(p).where(~F.col(commit.BATCH_COL).isin(moved)))
-    return reduce(DataFrame.unionByName, parts)
+    if in_place:
+        frames.insert(0, spark.read.parquet(root).where(F.col(commit.BATCH_COL).isin(in_place)))
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _fold_table(p: str, name: str, *, drop: bool = False) -> commit.Table:
@@ -455,7 +409,8 @@ def compact_streaming_index(
     sub_partition_col: str | None = None,
 ) -> dict:
     """Retention/compaction for append-mode streaming index stores
-    (``streaming/corpus.py`` bands, ``streaming/embeddings.py`` lists):
+    (``streaming/corpus.py`` bands, ``streaming/embeddings.py`` lists,
+    ``streaming/retrieval.py`` stats and postings):
     every micro-batch appends its own ``ingest_batch=N`` partition, so a
     long-lived stream grows one small directory per batch with no bound.
     This folds all but the ``keep_latest`` newest batch partitions into a
@@ -468,7 +423,8 @@ def compact_streaming_index(
     only the single uncommitted batch — so ``keep_latest >= 2`` guarantees
     a replayed batch's own partition is never folded out from under it.
     ``sub_partition_col`` preserves an inner layout (the embedding lists'
-    ``lsh_bucket``) through the rewrite. Folding is row-preserving, so
+    ``lsh_bucket``, the text postings' ``term_bucket``) through the
+    rewrite. Folding is row-preserving, so
     the keep-first and idempotent-upsert decisions the sinks make against
     the index do not change across a fold.
 
@@ -479,45 +435,41 @@ def compact_streaming_index(
     rename, and the next call's :func:`commit.recover_swap` rolls an
     interrupted fold forward past it or discards the tmp before it.
     Readers racing the swap can see folded rows twice through a plain
-    read; :func:`fold_consistent_read` closes that window; a
-    transactional table format is the cluster-grade answer.
+    read; every reader of these stores lists them through
+    :func:`store_partitions` (or reads through
+    :func:`fold_consistent_read`), which closes that window; a
+    transactional table format is the cluster-grade answer. The partition
+    list comes from the same listing, after recovery.
 
     Returns {"folded", "partitions_after", "files_after"}.
     """
     import math
-    import os as _os
 
-    p = root.rstrip("/")
+    p = require_local_path(spark, root)
     prefix = commit.BATCH_COL + "="
     cons = _fold_table(p, f"{prefix}{commit.CONSOLIDATED_BATCH}")
-    intent = _os.path.join(p, commit.INTENT)
+    intent = os.path.join(p, commit.INTENT)
     commit.recover_swap([cons], intent=intent)
-    parts = {
-        int(entry[len(prefix):]): entry
-        for entry in _os.listdir(p)
-        if entry.startswith(prefix) and _os.path.isdir(_os.path.join(p, entry))
-    }
-    real = sorted(v for v in parts if v != commit.CONSOLIDATED_BATCH)
+    parts = store_partitions(spark, root)
+    real = [v for v in parts if v != commit.CONSOLIDATED_BATCH]
     fold = real[: len(real) - keep_latest] if keep_latest else real
     if not fold:
         return {"folded": 0, "partitions_after": len(parts), "files_after": None}
     fold_vals = fold + ([commit.CONSOLIDATED_BATCH] if commit.CONSOLIDATED_BATCH in parts else [])
 
-    fold_bytes = sum(
-        _os.path.getsize(f) for v in fold_vals for f in _data_files(_os.path.join(p, parts[v]))
-    )
+    fold_bytes = sum(os.path.getsize(f) for v in fold_vals for f in _data_files(parts[v]))
     n_out = max(1, math.ceil(fold_bytes / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(p).where(F.col(commit.BATCH_COL).isin(fold_vals)).drop(commit.BATCH_COL)
+    df = spark.read.parquet(root).where(F.col(commit.BATCH_COL).isin(fold_vals)).drop(commit.BATCH_COL)
     if sub_partition_col:
         writer = df.repartition(n_out, sub_partition_col).write.partitionBy(sub_partition_col)
     else:
         writer = df.repartition(n_out).write
-    writer.mode("overwrite").parquet(cons[1])
-    commit.swap([cons] + [_fold_table(p, parts[v], drop=True) for v in fold], intent=intent)
+    writer.mode("overwrite").parquet(f"file://{cons[1]}")
+    commit.swap([cons] + [_fold_table(p, f"{prefix}{v}", drop=True) for v in fold], intent=intent)
     return {
         "folded": len(fold),
         "partitions_after": len(parts) - len(fold_vals) + 1,
-        "files_after": len(_data_files(root)),
+        "files_after": len(_data_files(p)),
     }
 
 

@@ -20,6 +20,10 @@ two rules, both kept here:
   would, e.g., drop both members of every within-batch near-dup pair
   and overwrite the doc the first attempt kept).
 
+Whether a store exists yet is the listing's answer
+(``readers.store_partitions``), asked before anything is read; no read
+error ever counts as "no store".
+
 A sink is a plain function ``X_batch(batch_df, batch_id, store, ...)``;
 run it continuously with
 ``start(drops(spark, path, schema), checkpoint, lambda df, i: X_batch(df, i, store))``.
@@ -88,13 +92,10 @@ def prior(spark: SparkSession, root: str, batch_id: int) -> DataFrame | None:
     """Everything the store at ``root`` held before batch ``batch_id``:
     a fold-consistent read minus the batch's own partition (the
     consolidated partition and every other batch stay). None only when
-    the store does not exist yet; any other read error propagates, since
-    treating a transient failure as "first batch" would skip the
-    cross-batch probe for good."""
-    try:
-        store = readers.fold_consistent_read(spark, root)
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not readers.is_missing_store_error(exc, root):
-            raise
+    the store's listing (``readers.store_partitions``) is empty, decided
+    before anything is read; every read error propagates, since treating
+    a transient failure as "first batch" would skip the cross-batch probe
+    for good."""
+    if not readers.store_partitions(spark, root):
         return None
-    return store.where(F.col(BATCH_COL) != F.lit(batch_id))
+    return readers.fold_consistent_read(spark, root).where(F.col(BATCH_COL) != F.lit(batch_id))

@@ -21,7 +21,8 @@ Idempotency: every write lands in a batch-id-named directory with
 ``overwrite`` mode — a checkpoint replay of batch N overwrites N's own
 output instead of duplicating it (the same pattern as the bronze sink's
 exactly-once story, restated for a two-sink batch function). The index
-read side globs the whole ``bands`` tree, so batch N+1 dedups against
+read side (``batches.prior``) reads every partition the ``bands`` store
+lists, so batch N+1 dedups against
 everything batches ≤ N kept — and against a ``write_minhash_index``
 build, which lands in the same store's consolidated partition.
 

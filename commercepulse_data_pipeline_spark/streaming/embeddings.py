@@ -56,31 +56,27 @@ from commercepulse_data_pipeline_spark.operators.similarity import (
     lsh_bucket,
     random_hyperplanes,
 )
+from commercepulse_data_pipeline_spark.sources import readers
 from commercepulse_data_pipeline_spark.streaming import batches
 
 
 def _read_or_create_planes(
     spark: SparkSession, store_dir: str, dim: int, n_planes: int, seed: int
 ) -> list[list[float]]:
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        is_missing_store_error,
-    )
-
-    try:
-        rows = spark.read.parquet(f"{store_dir}/index/planes").collect()
+    planes_dir = f"{store_dir}/index/planes"
+    # planes are created only when no plane file exists: re-seeding them
+    # over a store that has some would bucket this batch under a
+    # DIFFERENT hash family than the index
+    if readers._data_files(readers.require_local_path(spark, planes_dir)):
+        rows = spark.read.parquet(planes_dir).collect()
         return [list(r.plane) for r in sorted(rows, key=lambda r: r.plane_id)]
-    except Exception as exc:  # noqa: BLE001 — filtered just below
-        if not is_missing_store_error(exc, f"{store_dir}/index/planes"):
-            # re-seeding planes on a transient read error would bucket
-            # this batch under a DIFFERENT hash family than the store
-            raise
-        planes = random_hyperplanes(dim, n_planes, seed)
-        one_slice_df(
-            spark,
-            [(i, [float(v) for v in p]) for i, p in enumerate(planes)],
-            "plane_id int, plane array<double>",
-        ).write.mode("overwrite").parquet(f"{store_dir}/index/planes")
-        return planes
+    planes = random_hyperplanes(dim, n_planes, seed)
+    one_slice_df(
+        spark,
+        [(i, [float(v) for v in p]) for i, p in enumerate(planes)],
+        "plane_id int, plane array<double>",
+    ).write.mode("overwrite").parquet(planes_dir)
+    return planes
 
 
 def dedup_embeddings_batch(

@@ -1309,6 +1309,48 @@ def test_text_index_extended_by_stream_text_index(spark, tmp_path, capsys):
     _assert_matches_scan(spark, str(tmp_path / "hits"), built + streamed, terms)
 
 
+def test_compact_index_folds_both_text_index_roots_and_search_is_unchanged(
+    spark, tmp_path, capsys
+):
+    """One store: text-index, then stream-text-index, then compact-index of
+    its stats root and of its postings root (term_bucket kept, every batch
+    folded). search prints the same hits before and after the folds."""
+    import os
+
+    built = [(1, "spark query engine spark spark"), (2, "pasta recipe basil spark")]
+    streamed = [(3, "basil basil basil pesto"), (4, "query planner beats hand tuning")]
+    spark.createDataFrame(built, "doc_id bigint, text string").write.parquet(
+        str(tmp_path / "docs")
+    )
+    ix = str(tmp_path / "ix")
+    assert cli.main([
+        "text-index", "--docs", str(tmp_path / "docs"), "--out", ix, "--n-buckets", "8",
+    ]) == 0
+    incoming = _drop(tmp_path / "in", "b0", {
+        "doc_id": [d for d, _ in streamed], "text": [t for _, t in streamed],
+    })
+    assert cli.main([
+        "stream-text-index", "--docs-path", incoming, "--store", ix,
+        "--checkpoint", str(tmp_path / "ckpt"), "--n-buckets", "8",
+    ]) == 0
+    search = ["search", "--index", ix, "--terms", "spark,basil,query", "--k", "10"]
+    capsys.readouterr()
+    assert cli.main(search) == 0
+    before = capsys.readouterr().out
+    assert before.count("  #") == 4
+    for args in (
+        [f"{ix}/stats"],
+        [f"{ix}/postings", "--sub-partition-col", "term_bucket"],
+    ):
+        assert cli.main(["compact-index", *args, "--keep-latest", "0"]) == 0
+        assert [e for e in os.listdir(args[0]) if not e.startswith(("_", "."))] == [
+            "ingest_batch=-1"
+        ]
+    capsys.readouterr()
+    assert cli.main(search) == 0
+    assert capsys.readouterr().out == before
+
+
 def test_stream_text_index_store_extended_by_text_index_append(spark, tmp_path, capsys):
     """A stream-built store takes a text-index --append as one more slice:
     the summary line counts every doc, streamed and appended, and search

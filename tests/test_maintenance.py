@@ -326,16 +326,37 @@ def test_compact_streaming_index_embeddings_sub_partitions(spark, tmp_path):
 _REFOLD_POINTS = 9
 
 
-@pytest.fixture(scope="module")
-def refold(spark, tmp_path_factory):
-    """A synthetic ``fp long, n long`` index store — a consolidated
-    partition, two batches to fold and one kept — re-folded once,
-    uninterrupted, with the store copied just before each rename, rmtree
-    and file removal the commit makes in it: copy k is exactly what a
-    crash at point k leaves on disk."""
+def _crash_copies(store, root, base, fold):
+    """Run ``fold()`` once, uninterrupted, copying the directory ``store``
+    to ``<base>-point<k>`` just before each rename, rmtree and file
+    removal the fold makes under ``root``: copy k is exactly what a crash
+    at point k leaves on disk."""
     import os
     import shutil
 
+    copies: list[str] = []
+
+    def snapshot(path):
+        if root in str(path) and os.path.exists(path):
+            copies.append(f"{base}-point{len(copies) + 1}")
+            shutil.copytree(store, copies[-1])
+
+    with pytest.MonkeyPatch.context() as mp:
+        for module, name in ((os, "rename"), (os, "replace"), (os, "remove"), (shutil, "rmtree")):
+            def patched(path, *a, _real=getattr(module, name), **kw):
+                snapshot(path)
+                return _real(path, *a, **kw)
+
+            mp.setattr(module, name, patched)
+        fold()
+    return copies
+
+
+@pytest.fixture(scope="module")
+def refold(spark, tmp_path_factory):
+    """A synthetic ``fp long, n long`` index store — a consolidated
+    partition, two batches to fold and one kept — re-folded once with a
+    copy at every crash point."""
     from commercepulse_data_pipeline_spark.sources import commit
     from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
     from commercepulse_data_pipeline_spark.streaming import batches
@@ -351,22 +372,9 @@ def refold(spark, tmp_path_factory):
         rows = [(fp, batch_id + 2) for fp in fps]
         batches.write(spark.createDataFrame(rows, "fp long, n long"), root, batch_id)
     before = _summed_counts(spark, root)
-
-    copies: list[str] = []
-
-    def snapshot(path):
-        if root in str(path) and os.path.exists(path):
-            copies.append(str(base / f"point{len(copies) + 1}"))
-            shutil.copytree(root, copies[-1])
-
-    with pytest.MonkeyPatch.context() as mp:
-        for module, name in ((os, "rename"), (os, "replace"), (os, "remove"), (shutil, "rmtree")):
-            def patched(path, *a, _real=getattr(module, name), **kw):
-                snapshot(path)
-                return _real(path, *a, **kw)
-
-            mp.setattr(module, name, patched)
-        compact_streaming_index(spark, root, keep_latest=1)
+    copies = _crash_copies(
+        root, root, base / "idx", lambda: compact_streaming_index(spark, root, keep_latest=1)
+    )
     return {"root": root, "copies": copies, "before": before, "after": _store_rows(spark, root)}
 
 
@@ -380,7 +388,8 @@ def _summed_counts(spark, root):
 def _store_rows(spark, root):
     import os
 
-    rows = spark.read.parquet(root).select("fp", "n", "ingest_batch").collect()
+    df = spark.read.parquet(root)
+    rows = df.select(*sorted(df.columns)).collect()
     return sorted(os.listdir(root)), sorted(map(tuple, rows))
 
 
@@ -410,6 +419,134 @@ def test_refold_crash_at_every_point_reads_then_recovers(spark, refold, tmp_path
     assert _store_rows(spark, root) == refold["after"]
 
 
+_TEXT_DOCS = [
+    (1, "spark query engine spark spark"),
+    (2, "pasta recipe with basil and spark"),
+    (3, "basil basil basil pesto"),
+    (4, "query planner beats hand tuning"),
+    (5, "spark basil query"),
+    (6, "hand made pasta"),
+]
+_TEXT_TERMS = ["spark", "basil", "query", "pasta"]
+# each root of the text index, with the inner layout its fold keeps
+_TEXT_ROOTS = {"stats": None, "postings": "term_bucket"}
+
+
+def _text_hits(spark, ix):
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+
+    return [tuple(r) for r in ret.bm25_topk_indexed(spark, ix, _TEXT_TERMS, k=10).collect()]
+
+
+@pytest.fixture(scope="module")
+def text_refold(spark, tmp_path_factory):
+    """A text index built by ``write_text_index`` and streamed into by
+    three ``text_index_batch`` batches, its ``stats`` and then its
+    ``postings`` root re-folded with a copy of the whole index at every
+    crash point of each fold."""
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+    from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
+    from commercepulse_data_pipeline_spark.streaming.retrieval import text_index_batch
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    base = tmp_path_factory.mktemp("text_refold")
+    ix = str(base / "ix")
+    ret.write_text_index(docs(_TEXT_DOCS[:2]), ix, n_buckets=4)
+    for batch_id, rows in enumerate((_TEXT_DOCS[2:4], _TEXT_DOCS[4:5], _TEXT_DOCS[5:])):
+        text_index_batch(docs(rows), batch_id, ix, n_buckets=4)
+    out = {"folds": {}, "ix": ix, "index_stats": ret._index_stats(spark, ix), "hits": _text_hits(spark, ix)}
+    for name, sub in _TEXT_ROOTS.items():
+        root = f"{ix}/{name}"
+
+        def fold(root=root, sub=sub):
+            compact_streaming_index(spark, root, keep_latest=1, sub_partition_col=sub)
+
+        out["folds"][name] = {
+            "copies": _crash_copies(ix, root, base / name, fold),
+            "after": _store_rows(spark, root),
+        }
+    return out
+
+
+def test_text_index_refold_uninterrupted_serves_the_same_hits(spark, text_refold):
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+
+    ix = text_refold["ix"]
+    assert text_refold["index_stats"]["n_docs"] == len(_TEXT_DOCS)
+    assert ret._index_stats(spark, ix) == text_refold["index_stats"]
+    assert _text_hits(spark, ix) == text_refold["hits"]
+    for name in _TEXT_ROOTS:
+        assert len(text_refold["folds"][name]["copies"]) == _REFOLD_POINTS
+        names, _ = text_refold["folds"][name]["after"]
+        assert [n for n in names if n.startswith("ingest_batch=")] == [
+            "ingest_batch=-1", "ingest_batch=2"
+        ]
+
+
+@pytest.mark.parametrize("point", range(1, _REFOLD_POINTS + 1))
+@pytest.mark.parametrize("name", sorted(_TEXT_ROOTS))
+def test_text_index_refold_crash_at_every_point_serves_then_recovers(
+    spark, text_refold, tmp_path, name, point
+):
+    """At each crash point of the ``stats`` fold and of the ``postings``
+    fold, the index read without recovery has the pre-fold corpus stats
+    and BM25 hits, and the next ``compact_streaming_index`` of the root
+    leaves it as the uninterrupted fold left it."""
+    import shutil
+
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+    from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
+
+    ix = str(tmp_path / "ix")
+    shutil.copytree(text_refold["folds"][name]["copies"][point - 1], ix)
+    assert ret._index_stats(spark, ix) == text_refold["index_stats"]
+    assert _text_hits(spark, ix) == text_refold["hits"]
+    compact_streaming_index(
+        spark, f"{ix}/{name}", keep_latest=1, sub_partition_col=_TEXT_ROOTS[name]
+    )
+    assert _store_rows(spark, f"{ix}/{name}") == text_refold["folds"][name]["after"]
+
+
+def test_lsh_index_refold_crash_at_every_point_serves_the_same_rows(spark, tmp_path):
+    """A ``stream-dedup-embeddings`` store's ``index/lists``, re-folded
+    with ``lsh_bucket`` kept: every crash point's copy, read without
+    recovery, answers ``lsh_topk_indexed`` with the pre-fold rows."""
+    from commercepulse_data_pipeline_spark.operators import similarity as sim
+    from commercepulse_data_pipeline_spark.sources.readers import compact_streaming_index
+    from commercepulse_data_pipeline_spark.streaming.embeddings import dedup_embeddings_batch
+
+    vectors = [
+        [1.0, 0.2, -0.5, 3.0], [-2.0, 1.0, 0.7, 0.1], [0.3, -4.0, 1.5, 0.9],
+        [0.9, 0.3, -0.4, 2.5], [1.2, 0.1, -0.6, 2.8],
+    ]
+    store = str(tmp_path / "estore")
+    for batch_id, vec in enumerate(vectors):
+        dedup_embeddings_batch(
+            spark.createDataFrame([(batch_id + 1, vec)], "vec_id long, embedding array<float>"),
+            batch_id, store, tau=0.999, n_planes=2,
+        )
+    index, lists = f"{store}/index", f"{store}/index/lists"
+    compact_streaming_index(spark, lists, keep_latest=3, sub_partition_col="lsh_bucket")
+
+    def query(path):
+        got = sim.lsh_topk_indexed(spark, path, vectors[0], k=10, probes=3).collect()
+        return [tuple(r) for r in got]
+
+    before = query(index)
+    # the consolidated partition's vec 1, the two batches the re-fold
+    # folds and the one it keeps (vec 2 sits outside the probed buckets)
+    assert {r[0] for r in before} == {1, 3, 4, 5}
+
+    def fold():
+        compact_streaming_index(spark, lists, keep_latest=1, sub_partition_col="lsh_bucket")
+
+    copies = _crash_copies(index, lists, tmp_path / "lsh", fold)
+    assert len(copies) == 9
+    assert [query(c) for c in copies] == [before] * len(copies)
+
+
 @pytest.mark.slow
 def test_cli_compact_index_subcommand(spark, tmp_path, capsys):
     from commercepulse_data_pipeline_spark.cli import main
@@ -418,60 +555,3 @@ def test_cli_compact_index_subcommand(spark, tmp_path, capsys):
     assert main(["compact-index", f"{store}/index/bands", "--keep-latest", "1"]) == 0
     assert "folded 3 batch" in capsys.readouterr().out
     assert spark.read.parquet(f"{store}/index/bands").count() > 0
-
-
-def test_missing_store_error_classification(spark, tmp_path):
-    """is_missing_store_error: PATH_NOT_FOUND and empty-dir schema
-    inference count as 'store not written yet'; other analysis errors
-    (e.g. a real parquet read failing on a non-parquet file) do not.
-    fold_consistent_read refuses non-file schemes outright (ADVICE r9:
-    silent consistency downgrade is worse than an error)."""
-    import os
-
-    import pytest as _pytest
-
-    from commercepulse_data_pipeline_spark.sources.readers import (
-        fold_consistent_read,
-        is_missing_store_error,
-    )
-
-    # missing path -> True
-    try:
-        spark.read.parquet(str(tmp_path / "nope")).collect()
-        raise AssertionError("expected PATH_NOT_FOUND")
-    except Exception as exc:  # noqa: BLE001
-        assert is_missing_store_error(exc)
-    # created-but-never-written dir -> True (UNABLE_TO_INFER_SCHEMA)
-    os.makedirs(tmp_path / "empty")
-    try:
-        spark.read.json(str(tmp_path / "empty")).collect()
-        raise AssertionError("expected UNABLE_TO_INFER_SCHEMA")
-    except Exception as exc:  # noqa: BLE001
-        assert is_missing_store_error(exc)
-    # a plain FileNotFoundError counts too (driver-local listing)
-    assert is_missing_store_error(FileNotFoundError("x"))
-    # a non-missing error must NOT be swallowed
-    assert not is_missing_store_error(ValueError("boom"))
-    # with root= (ADVICE r10): a missing-classified error against a store
-    # that EXISTS WITH DATA is a compaction race, not "first batch" —
-    # the caller must retry, never skip cross-batch dedup
-    populated = tmp_path / "populated"
-    os.makedirs(populated)
-    (populated / "part-0.parquet").write_bytes(b"x")
-    assert not is_missing_store_error(FileNotFoundError("x"), str(populated))
-    # root genuinely absent -> still True
-    assert is_missing_store_error(FileNotFoundError("x"), str(tmp_path / "gone"))
-    # root exists but holds only marker files -> created-never-written,
-    # still "missing" (the UNABLE_TO_INFER_SCHEMA shape)
-    markers = tmp_path / "markers"
-    os.makedirs(markers)
-    (markers / "_SUCCESS").write_text("")
-    assert is_missing_store_error(FileNotFoundError("x"), str(markers))
-    # file:-prefixed roots are normalized before the FS probe
-    for uri in (f"file:{populated}", f"file://{populated}", f"file://localhost{populated}"):
-        assert not is_missing_store_error(FileNotFoundError("x"), uri)
-    # non-file scheme raises loudly instead of degrading to a plain read
-    with _pytest.raises(ValueError, match="local-filesystem-only"):
-        fold_consistent_read(spark, "s3a://bucket/store")
-    with _pytest.raises(ValueError, match="local-filesystem-only"):
-        fold_consistent_read(spark, "hdfs://nn/store")

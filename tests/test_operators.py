@@ -2551,6 +2551,29 @@ def test_text_index_build_query_and_append(spark, tmp_path):
         ret.write_text_index(batch2, path, n_buckets=16, mode="append")
 
 
+def test_text_index_on_a_non_local_root_reads_through_spark(spark, tmp_path, monkeypatch):
+    """A root the local rule does not claim is never listed with ``os``:
+    append asks Hadoop ``FileSystem.exists`` whether the index exists,
+    and the stats and postings come from plain Spark reads. (The root is
+    a local directory that ``readers.local_path`` is patched to refuse.)"""
+    from commercepulse_data_pipeline_spark.operators import retrieval as ret
+    from commercepulse_data_pipeline_spark.sources import readers
+
+    monkeypatch.setattr(readers, "local_path", lambda _spark, _root: None)
+    path = str(tmp_path / "tix")
+    batch1 = spark.createDataFrame([(1, "spark basil"), (2, "pesto")], ["doc_id", "text"])
+    ret.write_text_index(batch1, path, n_buckets=8, mode="append")  # no index yet
+    batch2 = spark.createDataFrame([(3, "spark spark")], ["doc_id", "text"])
+    ret.write_text_index(batch2, path, n_buckets=8, mode="append")
+    assert ret._index_stats(spark, path)["n_docs"] == 3
+    hits = ret.bm25_topk_indexed(spark, path, ["spark"], k=5).collect()
+    assert [r.doc_id for r in hits] == [3, 1]
+    with pytest.raises(ValueError, match="append with params"):
+        ret.write_text_index(batch2, path, n_buckets=16, mode="append")
+    with pytest.raises(ValueError, match="local-filesystem-only"):
+        readers.fold_consistent_read(spark, path)
+
+
 def test_indexed_bm25_leaves_no_checkpoint_files_under_reliable_pins(spark, tmp_path):
     """The indexed BM25 serving path pins its probed postings locally
     whatever the pin policy: under a reliable ``set_pin_policy`` one query
