@@ -485,7 +485,7 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``max_bucket`` is effectively disabled here so the DuckDB oracle
     (which has no cap) matches exactly at test SF; production sets the
-    operator's scale-safe default (~1000) — see _pairs_in_group's memory
+    operator's scale-safe default (~1000) — see dedup._bucket_pairs' memory
     note."""
     d = _docs(spark, sf_dir)
     return dd.minhash_candidate_pairs(
@@ -1128,7 +1128,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs ≥ 0.5 via shingle inverted index.
 
     ``max_shingle_freq`` effectively disabled for oracle parity at test
-    SF; production caps stop-shingles (~1000) — see _pairs_in_group."""
+    SF; production caps stop-shingles (~1000) — see dedup._bucket_pairs."""
     d = _docs(spark, sf_dir)
     return dd.ngram_jaccard_pairs(
         d, "text", "doc_id", shingle_n=3, threshold=0.5, max_shingle_freq=1000000

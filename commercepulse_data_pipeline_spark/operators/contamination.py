@@ -26,7 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from commercepulse_data_pipeline_spark.operators.dedup import word_shingles
+from commercepulse_data_pipeline_spark.operators.dedup import (
+    _shingle_rows,
+    _shingle_set_sizes,
+)
 from commercepulse_data_pipeline_spark.operators.text import (
     rolling_fingerprints,
     splice_windows,
@@ -48,31 +51,18 @@ def ngram_contamination(
     have any word 3-gram are omitted (no denominator). Probes and corpus
     both read ``text_col``.
     """
-    # explode_outer + null-filter on both sides: a plain explode's
-    # inferred non-empty filter re-runs the shingle construction once more
-    # per row (see functions/expr.py); shingle elements are never NULL
     probe_vocab = F.broadcast(
-        probes.select(
-            F.explode_outer(word_shingles(F.col(text_col), 3)).alias("shingle")
-        )
-        .where(F.col("shingle").isNotNull())
-        .distinct()
+        _shingle_rows(probes, [], text_col, 3, "shingle").distinct()
     )
-    doc_sh = corpus.select(
-        F.col(id_col),
-        F.explode_outer(word_shingles(F.col(text_col), 3)).alias("shingle"),
-    ).where(F.col("shingle").isNotNull())
     hits = (
-        doc_sh.join(probe_vocab, "shingle", "left_semi")
+        _shingle_rows(corpus, [id_col], text_col, 3, "shingle")
+        .join(probe_vocab, "shingle", "left_semi")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("hits"))
     )
-    sizes = corpus.select(
-        F.col(id_col),
-        F.size(word_shingles(F.col(text_col), 3)).alias("set_size"),
-    ).where(F.col("set_size") > 0)
     return (
-        sizes.join(hits, id_col, "left")
+        _shingle_set_sizes(corpus, id_col, text_col, 3)
+        .join(hits, id_col, "left")
         .select(
             id_col,
             "set_size",

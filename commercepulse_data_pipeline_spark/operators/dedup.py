@@ -11,6 +11,12 @@ construction), so the O(n²) pair space is never materialized. At 100 TB the
 only hot spot is a degenerate bucket (e.g. the empty document); callers cap
 bucket width with ``max_bucket`` salting-style guard.
 
+The blocked-pair step exists once, for every near-dup operator here and in
+``similarity``, ``text`` and ``streaming/embeddings``: ``_bucket_pairs``
+(all pairs within each capped bucket) and ``_probe_pairs`` (an arriving
+batch against a persisted bucketed index), over shingle rows from
+``_shingle_rows`` and signature blocks from ``_sig_block_keys``.
+
 Scale notes per operator are in the docstrings.
 """
 
@@ -247,11 +253,8 @@ def sig_block_occupancy(
     same cap) — run it alongside a pair job to see what the cap dropped
     instead of reading "no dups found" (r15 guard). Output shape is
     :func:`bucket_occupancy_report`'s three-band rollup."""
-    blocks = min(64, hamming_threshold + 1)
-    sh = sigs.select(F.col(id_col), F.col(sig_col).alias("sig"))
-    width = max(1, 64 // blocks)
     return bucket_occupancy_report(
-        _sig_blocks(sh, id_col, blocks, width),
+        _sig_block_keys(sigs, id_col, sig_col, hamming_threshold),
         ["block_id", "block_val"],
         max_bucket=max_bucket,
     )
@@ -276,20 +279,35 @@ def drop_degenerate_sigs(
     return sigs.where(c.isNotNull() & (c != F.lit(0)) & (c != F.lit(-1)))
 
 
-def _pairs_in_group(ids: Column) -> Column:
-    """All ordered pairs (id_a < id_b) from an array of ids, as
-    array<struct<id_a,id_b>> — pure Catalyst (nested transform over the
-    sorted array), generated inside the aggregation stage with no join."""
-    # Memory note: the pair array materializes len²/2 structs PER BUCKET
-    # ROW before the downstream explode — callers must cap bucket width
-    # (max_bucket / max_shingle_freq ≈ 1000 → ≤ ~500k pairs ≈ a few MB).
-    # Wider buckets are near-useless for similarity anyway (stop-shingles,
-    # boilerplate); drop or salt them instead of generating their pairs.
-    # The sorted array is let-bound: referenced inline from the outer
-    # lambda, array_sort(ids) would re-sort the bucket once per MEMBER
-    # (O(n² log n) per bucket).
-    return let(
-        F.array_sort(ids),
+def _bucket_pairs(
+    keyed: DataFrame, keys: list[str], item: Column, max_bucket: int
+) -> DataFrame:
+    """The blocked-pair step of every near-dup operator: one ``(id_a,
+    id_b)`` row per ordered pair ``id_a < id_b`` of ``item`` values that
+    share a ``keys`` bucket — once per shared bucket, so callers
+    ``distinct()`` or count as they need. ``item`` may be a struct (it
+    orders field by field, first field first); its pairs keep it whole.
+
+    Shape: :func:`capped_posting_lists` (singleton and over-cap buckets
+    never reach the collect), then all pairs of each posting list built
+    in-array — pure Catalyst, a nested transform over the sorted list,
+    generated inside the aggregation stage with no join.
+
+    Memory: the pair array materializes len²/2 structs PER BUCKET ROW
+    before the explode, so ``max_bucket`` (≈ 1000 → ≤ ~500k pairs ≈ a
+    few MB) bounds it. Wider buckets are near-useless for similarity
+    anyway (stop-shingles, boilerplate); drop or salt them instead of
+    generating their pairs.
+
+    The sorted list is let-bound (``functions/expr.py::let``): referenced
+    inline from the outer lambda, ``array_sort`` would re-sort the bucket
+    once per MEMBER (O(n² log n) per bucket). explode_OUTER + null
+    filter, not a plain explode: the plain form's inferred non-empty
+    filter would build the O(bucket²) pair array a second time per bucket
+    row; pairs are never NULL, so dropping the outer null row is exact.
+    """
+    pairs = let(
+        F.array_sort(F.col("__ids")),
         lambda s: F.flatten(
             F.transform(
                 s,
@@ -300,31 +318,96 @@ def _pairs_in_group(ids: Column) -> Column:
             )
         ),
     )
+    return (
+        capped_posting_lists(keyed, keys, item, max_bucket=max_bucket)
+        .select(F.explode_outer(pairs).alias("p"))
+        .where(F.col("p").isNotNull())
+        .select("p.id_a", "p.id_b")
+    )
+
+
+def _probe_pairs(
+    new_keyed: DataFrame, index_keyed: DataFrame, keys: list[str], max_bucket: int
+) -> DataFrame:
+    """The incremental blocked-pair step: rows of an arriving batch
+    (``new_keyed``: ``keys`` + ``__new_id`` + payload) joined to the rows
+    of a persisted index (``index_keyed``: ``keys`` + ``__old_id`` +
+    payload) that share a ``keys`` bucket, same-id pairs dropped. The
+    caller applies its own verify step (Hamming, cosine) and projection.
+
+    Per-ingest work is O(batch) + one pruned scan of the index: the
+    batch's distinct keys BROADCAST as a left-semi filter, so the only
+    index rows that ever shuffle are those whose bucket the batch
+    actually probes; each probed key is then width-capped (``max_bucket``,
+    window count — a degenerate boilerplate key in the index would
+    otherwise fan each probing batch row into the whole bucket) before
+    the pair join, whose batch side broadcasts too (an ingest batch is
+    small by definition). Ids shared between batch and index (re-ingest)
+    never pair with themselves."""
+    probe_keys = F.broadcast(new_keyed.select(*keys).distinct())
+    w = Window.partitionBy(*keys)
+    return (
+        index_keyed.join(probe_keys, keys, "left_semi")
+        .withColumn("__key_n", F.count(F.lit(1)).over(w))
+        .where(F.col("__key_n") <= max_bucket)
+        .drop("__key_n")
+        .join(F.broadcast(new_keyed), keys)
+        .where(F.col("__old_id") != F.col("__new_id"))
+    )
+
+
+def _shingle_rows(
+    df: DataFrame, keep: list[str], text_col: str, n: int, out: str
+) -> DataFrame:
+    """One row per (``keep`` columns, distinct n-word shingle of
+    ``text_col``) — the shingle column named ``out``; docs with no
+    shingle (< n tokens) yield no row.
+
+    explode_OUTER + null filter, not a plain explode: the plain form's
+    inferred non-empty filter (InferFiltersFromGenerate) evaluates the
+    shingle construction a second time per row (see functions/expr.py);
+    shingles are never NULL, so dropping the outer null row is exact."""
+    return df.select(
+        *keep, F.explode_outer(word_shingles(F.col(text_col), n)).alias(out)
+    ).where(F.col(out).isNotNull())
+
+
+def _shingle_set_sizes(
+    df: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, set_size) — distinct n-word shingle count per doc with at
+    least one shingle. A pure per-doc projection of the (already
+    distinct) shingle array: deriving it from the exploded rows instead
+    (groupBy + count) would re-run the shingle explode, since Spark shares
+    no subplan between two consumers. (A window count over the exploded
+    rows computes it in ONE pass but shuffles them a second time —
+    measured ≈ equal at sf0.1; at 100 TB the extra exchange costs more
+    than the extra map-only scan.)"""
+    return df.select(
+        F.col(id_col), F.size(word_shingles(F.col(text_col), n)).alias("set_size")
+    ).where(F.col("set_size") > 0)
+
+
+def _shared_shingle_counts(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, max_shingle_freq: int
+) -> DataFrame:
+    """(id_a < id_b, shared) — distinct n-word shingles two docs share,
+    for every pair sharing at least one shingle whose posting list holds
+    2..``max_shingle_freq`` docs. The intersection count under exact
+    Jaccard and containment: posting list per shingle (one uniform
+    shuffle, cap-before-collect, so a stop-shingle's full id list is never
+    buffered), never O(n²)."""
+    sh = _shingle_rows(df, [id_col], text_col, shingle_n, "shingle")
+    return (
+        _bucket_pairs(sh, ["shingle"], F.col(id_col), max_shingle_freq)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
-
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """MinHash signature as array<string> of length ``num_hashes``.
-
-    Hash family: md5(seed || ':' || shingle), min taken LEXICOGRAPHICALLY
-    over the hex digests. Lexicographic min of a uniform hash is a valid
-    min-hash and — deliberately — is reproducible in any engine with md5
-    (our DuckDB oracle computes the identical signature).
-    """
-    def body(shingles: Column) -> Column:
-        def min_for_seed(i: int) -> Column:
-            return F.array_min(
-                F.transform(shingles, lambda s: F.md5(F.concat_ws(":", F.lit(str(i)), s)))
-            )
-        return F.array(*[min_for_seed(i) for i in range(num_hashes)])
-
-    # let-bound: each of the k transform() arguments would otherwise
-    # re-evaluate the shingle construction (k evals per row)
-    return let(word_shingles(text, shingle_n), body)
-
 
 def minhash_signature_table(
     df: DataFrame,
@@ -338,22 +421,14 @@ def minhash_signature_table(
 
     This is the scale shape: one md5 per (shingle, seed) computed exactly
     once, partial min aggregation map-side, a single shuffle on the doc
-    id. The pure-expression ``minhash_signature`` (array column) inlines a
-    huge expression tree that Catalyst may duplicate per consumer —
-    measured 5-50× slower in multi-band plans; prefer this table form for
-    anything beyond a single projection.
+    id. (An array-column signature inlines a huge expression tree that
+    Catalyst may duplicate per consumer — measured 5-50× slower in
+    multi-band plans.)
 
     Docs with zero shingles (< shingle_n tokens) produce no rows — same
     contract as the DuckDB oracle's unnest.
     """
-    # explode_OUTER + null-filter: a plain explode's inferred non-empty
-    # filter (InferFiltersFromGenerate) evaluates the shingle construction
-    # a second time per row (see functions/expr.py); shingle elements are
-    # never NULL, so dropping the outer-generate's null row is exact.
-    sh = df.select(
-        F.col(id_col),
-        F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("__shingle"),
-    ).where(F.col("__shingle").isNotNull())
+    sh = _shingle_rows(df, [id_col], text_col, shingle_n, "__shingle")
     aggs = [
         F.min(F.md5(F.concat_ws(":", F.lit(str(i)), F.col("__shingle")))).alias(f"h{i}")
         for i in range(num_hashes)
@@ -435,17 +510,9 @@ def minhash_candidate_pairs(
             df, text_col, id_col, num_hashes=num_hashes, bands=bands, shingle_n=shingle_n
         )
     )
-    buckets = capped_posting_lists(
-        b, ["band_id", "band_key"], F.col(id_col), max_bucket=max_bucket
-    )
-    # explode_outer: the inferred non-empty filter of a plain explode
-    # would generate the O(bucket²) pair array TWICE per bucket row
-    return (
-        buckets.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    return _bucket_pairs(
+        b, ["band_id", "band_key"], F.col(id_col), max_bucket
+    ).distinct()
 
 
 def minhash_star_edges(
@@ -539,35 +606,8 @@ def ngram_jaccard_pairs(
     pair rows); enforced cap-before-collect (``capped_posting_lists``) so a
     stop-shingle's full id list is never buffered.
     """
-    # explode_outer + null-filter: avoids the inferred filter's second
-    # evaluation of the shingle construction (functions/expr.py)
-    sh = (
-        df.select(
-            F.col(id_col),
-            F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("shingle"),
-        ).where(F.col("shingle").isNotNull())
-    )
-    # set size = array length of the (already-distinct) shingle array: a
-    # pure per-doc projection. Deriving it from the exploded rows instead
-    # (groupBy + count) would re-run the shingle explode a second time —
-    # sh has two consumers and Spark does not share subplans across them.
-    # (A window count(id) over sh computes it in ONE pass but shuffles
-    # the whole exploded table a second time — measured ≈equal at sf0.1
-    # (1.59s vs 1.69s, within noise); at 100 TB the extra exchange of the
-    # exploded rows costs more than the extra map-only scan, so the
-    # two-scan form stays.)
-    sizes = df.select(
-        F.col(id_col), F.size(word_shingles(F.col(text_col), shingle_n)).alias("set_size")
-    ).where(F.col("set_size") > 0)
-    posting = capped_posting_lists(
-        sh, ["shingle"], F.col(id_col), max_bucket=max_shingle_freq
-    )
-    shared = (
-        posting.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
-        .groupBy("p.id_a", "p.id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    shared = _shared_shingle_counts(df, id_col, text_col, shingle_n, max_shingle_freq)
+    sizes = _shingle_set_sizes(df, id_col, text_col, shingle_n)
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
     return (
@@ -598,37 +638,24 @@ def containment_pairs(
     doc) but containment ≈ 1 in the short→long direction — the shape
     quote-dedup and boilerplate-extraction filters need.
 
-    Same distributed shape as the Jaccard path (posting lists per
-    shingle, cap-before-collect, never O(n²)); the undirected
-    shared-shingle counts are computed ONCE and both directions are
-    emitted by a union — no second pass. Output: (id_src, id_dst,
+    Same distributed shape as the Jaccard path
+    (:func:`_shared_shingle_counts`); each undirected count row emits
+    both directions through a two-element explode — a union of two
+    projections of the counts would derive them once per branch (Spark
+    shares no subplan between union children). Output: (id_src, id_dst,
     containment) with containment rounded to 6 dp.
     """
-    sh = (
-        df.select(
-            F.col(id_col),
-            F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("shingle"),
-        ).where(F.col("shingle").isNotNull())
-    )
-    sizes = df.select(
-        F.col(id_col), F.size(word_shingles(F.col(text_col), shingle_n)).alias("set_size")
-    ).where(F.col("set_size") > 0)
-    posting = capped_posting_lists(
-        sh, ["shingle"], F.col(id_col), max_bucket=max_shingle_freq
-    )
-    shared = (
-        posting.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
-        .groupBy("p.id_a", "p.id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    shared = _shared_shingle_counts(df, id_col, text_col, shingle_n, max_shingle_freq)
     directed = shared.select(
-        F.col("id_a").alias("id_src"), F.col("id_b").alias("id_dst"), "shared"
-    ).unionAll(
-        shared.select(
-            F.col("id_b").alias("id_src"), F.col("id_a").alias("id_dst"), "shared"
-        )
-    )
+        F.explode_outer(
+            F.array(
+                F.struct(F.col("id_a").alias("id_src"), F.col("id_b").alias("id_dst")),
+                F.struct(F.col("id_b").alias("id_src"), F.col("id_a").alias("id_dst")),
+            )
+        ).alias("d"),
+        "shared",
+    ).select("d.id_src", "d.id_dst", "shared")
+    sizes = _shingle_set_sizes(df, id_col, text_col, shingle_n)
     ssz = sizes.select(F.col(id_col).alias("id_src"), F.col("set_size").alias("size_src"))
     return (
         directed.join(ssz, "id_src")
@@ -680,14 +707,8 @@ def simhash_table(
     sign bit. Shingles are word 2-grams.
     """
     half = 32
-    # explode_outer + null-filter: see minhash_signature_table
-    hashed = (
-        df.select(
-            F.col(id_col),
-            F.explode_outer(word_shingles(F.col(text_col), 2)).alias("__s"),
-        )
-        .where(F.col("__s").isNotNull())
-        .select(id_col, _md5_long(F.col("__s")).alias("__h"))
+    hashed = _shingle_rows(df, [id_col], text_col, 2, "__s").select(
+        id_col, _md5_long(F.col("__s")).alias("__h")
     )
 
     def lane(j: int) -> Column:
@@ -720,12 +741,19 @@ def simhash_table(
     return counts.select(F.col(id_col), total.alias("sig"))
 
 
-def _sig_blocks(
-    sigs: DataFrame, id_col: str, blocks: int, width: int
+def _sig_block_keys(
+    sigs: DataFrame, id_col: str, sig_col: str, hamming_threshold: int
 ) -> DataFrame:
-    """Explode a (id, sig) table into pigeonhole block keys: one row per
-    (id, block_id, block_val), sig carried along for the exact-verify
-    step. Shared by the self-pair and incremental simhash forms."""
+    """Explode a 64-bit signature table into its pigeonhole block keys:
+    one row per (id, sig, block_id, block_val), the signature (renamed
+    ``sig``) carried along for the exact-verify step. The one block
+    geometry of the pair, probe and occupancy forms: ``hamming_threshold
+    + 1`` blocks (at most 64) of ``64 // blocks`` bits — if hamming(a, b)
+    <= threshold < blocks, at least one block matches exactly; bits past
+    blocks * width are uncovered, which only ADDS candidates."""
+    blocks = min(64, hamming_threshold + 1)
+    width = max(1, 64 // blocks)
+    sh = sigs.select(F.col(id_col), F.col(sig_col).alias("sig"))
     blocks_arr = F.array(*[
         F.struct(
             F.lit(i).alias("block_id"),
@@ -735,7 +763,7 @@ def _sig_blocks(
         )
         for i in range(blocks)
     ])
-    return sigs.select(
+    return sh.select(
         id_col, "sig", F.explode_outer(blocks_arr).alias("b")
     ).select(id_col, "sig", "b.block_id", "b.block_val")
 
@@ -785,27 +813,19 @@ def sig_hamming_pairs(
     exactly with ``bit_count(xor)``. ``sigs`` is (id, sig) rows with
     non-NULL sigs; returns distinct (id_a < id_b, hamming <= threshold).
     Scale/guarantee notes as on :func:`simhash_pairs`."""
-    blocks = min(64, hamming_threshold + 1)
-    sh = sigs.select(F.col(id_col), F.col(sig_col).alias("sig"))
-    width = max(1, 64 // blocks)
-    exploded = _sig_blocks(sh, id_col, blocks, width)
-    # Posting-list candidate generation (same shape as minhash_candidate_pairs):
-    # one shuffle on the block key, singleton buckets pruned, pairs built
-    # in-array. Each item carries its signature for the exact-verify step.
-    buckets = capped_posting_lists(
-        exploded,
-        ["block_id", "block_val"],
-        F.struct(F.col(id_col), F.col("sig")),
-        max_bucket=max_bucket,
-    )
+    # each item carries its signature for the exact-verify step
     cand = (
-        buckets.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
+        _bucket_pairs(
+            _sig_block_keys(sigs, id_col, sig_col, hamming_threshold),
+            ["block_id", "block_val"],
+            F.struct(F.col(id_col), F.col("sig")),
+            max_bucket,
+        )
         .select(
-            F.col(f"p.id_a.{id_col}").alias("id_a"),
-            F.col("p.id_a.sig").alias("sig_a"),
-            F.col(f"p.id_b.{id_col}").alias("id_b"),
-            F.col("p.id_b.sig").alias("sig_b"),
+            F.col(f"id_a.{id_col}").alias("id_a"),
+            F.col("id_a.sig").alias("sig_a"),
+            F.col(f"id_b.{id_col}").alias("id_b"),
+            F.col("id_b.sig").alias("sig_b"),
         )
         .distinct()
     )
@@ -833,13 +853,11 @@ def simhash_pairs_between(
     side is just (id, sig) rows — 8 bytes per doc, the cheapest near-dup
     index there is.
 
-    Scale shape mirrors the minhash form: the new batch's block keys
-    BROADCAST as a semi-join filter, so the only index rows that shuffle
-    are those whose pigeonhole block the batch actually probes; probed
-    keys are width-capped (``max_bucket``) before the pair join; the
-    exact Hamming verify runs on the joined (sig, sig) pair — pigeonhole
-    (threshold < blocks) keeps the output exactly "all cross pairs with
-    hamming <= threshold", engine-independent given the signatures.
+    Scale shape: :func:`_probe_pairs` on the pigeonhole block keys, as
+    the minhash form does on band keys; the exact Hamming verify runs on
+    the joined (sig, sig) pair — pigeonhole (threshold < blocks) keeps
+    the output exactly "all cross pairs with hamming <= threshold",
+    engine-independent given the signatures.
 
     Returns distinct (id_a < id_b, hamming); ids shared between batch
     and index (re-ingest) never pair with themselves."""
@@ -867,28 +885,18 @@ def sig_hamming_pairs_between(
     persisted (id, sig) table
     (8 bytes/image, the cheapest image-dedup index there is), O(batch)
     per ingest. Scale/guarantee notes as on :func:`simhash_pairs_between`."""
-    blocks = min(64, hamming_threshold + 1)
-    width = max(1, 64 // blocks)
-    nb = _sig_blocks(
-        new_sigs.select(F.col(id_col).alias("__new_id"), "sig"), "__new_id",
-        blocks, width,
-    ).withColumnRenamed("sig", "__sig_new")
-    ib = _sig_blocks(
-        index_sigs.select(F.col(id_col).alias("__old_id"), "sig"), "__old_id",
-        blocks, width,
-    ).withColumnRenamed("sig", "__sig_old")
-    probe_keys = F.broadcast(nb.select("block_id", "block_val").distinct())
-    matched = ib.join(probe_keys, ["block_id", "block_val"], "left_semi")
-    w = Window.partitionBy("block_id", "block_val")
-    matched = (
-        matched.withColumn("__key_n", F.count(F.lit(1)).over(w))
-        .where(F.col("__key_n") <= max_bucket)
-        .drop("__key_n")
-    )
+    def keyed(sigs: DataFrame, side: str) -> DataFrame:
+        return _sig_block_keys(
+            sigs.select(F.col(id_col).alias(f"__{side}_id"), "sig"),
+            f"__{side}_id", "sig", hamming_threshold,
+        ).withColumnRenamed("sig", f"__sig_{side}")
+
     hamming = F.bit_count(F.col("__sig_old").bitwiseXOR(F.col("__sig_new")))
     return (
-        matched.join(F.broadcast(nb), ["block_id", "block_val"])
-        .where(F.col("__old_id") != F.col("__new_id"))
+        _probe_pairs(
+            keyed(new_sigs, "new"), keyed(index_sigs, "old"),
+            ["block_id", "block_val"], max_bucket,
+        )
         .select(
             F.least("__old_id", "__new_id").alias("id_a"),
             F.greatest("__old_id", "__new_id").alias("id_b"),
@@ -925,13 +933,9 @@ def minhash_pairs_between(
     signature build runs once (the table is consumed twice here: probe
     keys and the pair join).
 
-    Scale shape: the new batch's bands BROADCAST (an ingest batch is
-    small by definition); the index side is first restricted by a
-    broadcast left-semi on the new batch's band keys — so the only rows
-    that ever shuffle are index rows whose key the new batch actually
-    probes — then width-capped per key (``max_bucket``, window count —
-    degenerate boilerplate keys in the index would otherwise fan each
-    probing new doc into the whole bucket) before the pair join.
+    Scale shape: :func:`_probe_pairs` on the band keys — the index is
+    restricted to the keys the batch probes and width-capped per key
+    (``max_bucket``) before the pair join with the broadcast batch bands.
 
     Returns distinct (id_a < id_b) pairs; ids shared between batch and
     index (re-ingest) never pair with themselves.
@@ -941,28 +945,19 @@ def minhash_pairs_between(
             new_df, text_col, id_col,
             num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
         )
-    probe_keys = F.broadcast(new_bands.select("band_id", "band_key").distinct())
-    matched = index_bands.join(probe_keys, ["band_id", "band_key"], "left_semi")
-    w = Window.partitionBy("band_id", "band_key")
-    matched = (
-        matched.withColumn("__key_n", F.count(F.lit(1)).over(w))
-        .where(F.col("__key_n") <= max_bucket)
-        .drop("__key_n")
-    )
-    pairs = (
-        matched.withColumnRenamed(id_col, "__old_id")
-        .join(
-            F.broadcast(new_bands.withColumnRenamed(id_col, "__new_id")),
+    return (
+        _probe_pairs(
+            new_bands.withColumnRenamed(id_col, "__new_id"),
+            index_bands.withColumnRenamed(id_col, "__old_id"),
             ["band_id", "band_key"],
+            max_bucket,
         )
-        .where(F.col("__old_id") != F.col("__new_id"))
         .select(
             F.least("__old_id", "__new_id").alias("id_a"),
             F.greatest("__old_id", "__new_id").alias("id_b"),
         )
         .distinct()
     )
-    return pairs
 
 
 def write_minhash_index(
@@ -1101,11 +1096,7 @@ def fuzzy_text_join(
         F.lit("R").alias("__side"),
     )
     both = lt.unionByName(rt)
-    sh = both.select(
-        "__id",
-        "__side",
-        F.explode_outer(word_shingles(F.col("__text"), shingle_n)).alias("shingle"),
-    ).where(F.col("shingle").isNotNull())
+    sh = _shingle_rows(both, ["__id", "__side"], "__text", shingle_n, "shingle")
     # cap-before-collect with per-side counts: a bucket must have BOTH
     # sides represented to produce any cross pair — one-sided buckets
     # (the bulk of a lopsided join's vocabulary) are filtered out before

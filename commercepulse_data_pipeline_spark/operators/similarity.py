@@ -386,22 +386,11 @@ def knn_join_self(
         F.col(id_col).alias("__id"), F.explode_outer(F.array(*tables)).alias("tb")
     ).select("__id", "tb.table_id", "tb.bucket")
 
-    from commercepulse_data_pipeline_spark.operators.dedup import (
-        _pairs_in_group,
-        capped_posting_lists,
-    )
+    from commercepulse_data_pipeline_spark.operators.dedup import _bucket_pairs
 
-    # Two-pass cap (VERDICT r2 #3): over-cap buckets are eliminated by a
-    # window count filter BEFORE any id array is collected.
-    buckets = capped_posting_lists(
-        keyed, ["table_id", "bucket"], F.col("__id"), max_bucket=max_bucket
-    )
-    pairs = (
-        buckets.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    pairs = _bucket_pairs(
+        keyed, ["table_id", "bucket"], F.col("__id"), max_bucket
+    ).distinct()
     # Per-VECTOR norms computed once at join time instead of per pair
     # (P pairs ≫ n vectors; the norm value is identical, so scores and
     # oracle hashes are unchanged). The pair dot stays a fold — see _dot.

@@ -1555,27 +1555,22 @@ def winnow_match_pairs(
     high ``n_shared`` means long or many shared runs).
 
     Scale shape: the fingerprint table feeds the standard inverted-index
-    machinery — posting list per fp hash with the cap enforced BEFORE
-    collect (``dedup.capped_posting_lists``: singleton and over-cap
-    postings never reach the aggregation buffer), pair expansion inside
-    the aggregation stage, then one (pair)-keyed count. A
+    machinery — ``dedup._bucket_pairs`` over posting lists per fp hash
+    (cap enforced BEFORE collect: singleton and over-cap postings never
+    reach the aggregation buffer), then one (pair)-keyed count. A
     corpus-common fingerprint (boilerplate phrase) is dropped by the
     cap instead of emitting its quadratic pair block — the same
     stop-shingle discipline as ``ngram_jaccard_pairs``. Output:
     (id_a < id_b, n_shared) with ``n_shared >= min_shared``."""
-    from commercepulse_data_pipeline_spark.operators.dedup import (
-        _pairs_in_group,
-        capped_posting_lists,
-    )
+    from commercepulse_data_pipeline_spark.operators.dedup import _bucket_pairs
 
     fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
     # a doc may select the same fp hash at several positions; one vote
     # per (doc, fp) keeps n_shared = |shared fingerprint HASHES|
     keyed = fps.select(F.col("fp"), F.col(id_col).alias("__id")).distinct()
-    posts = capped_posting_lists(keyed, ["fp"], F.col("__id"), max_bucket=max_posting)
-    pairs = posts.select(F.explode(_pairs_in_group(F.col("__ids"))).alias("p"))
     return (
-        pairs.groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _bucket_pairs(keyed, ["fp"], F.col("__id"), max_posting)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )

@@ -13,19 +13,6 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.pins import pin
 
 
-def running_total(
-    df: DataFrame, partition_cols: list[str], order_col: str, value_col: str,
-    out_col: str = "running_total",
-) -> DataFrame:
-    """Cumulative sum per key ordered by time. One shuffle on the key."""
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(F.col(order_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, F.sum(value_col).over(w))
-
-
 def sessionize(
     df: DataFrame,
     user_col: str = "user_id",

@@ -47,8 +47,8 @@ from pyspark.sql import functions as F
 from commercepulse_data_pipeline_spark.functions.localdf import one_slice_df
 
 from commercepulse_data_pipeline_spark.operators.dedup import (
-    _pairs_in_group,
-    capped_posting_lists,
+    _bucket_pairs,
+    _probe_pairs,
 )
 from commercepulse_data_pipeline_spark.operators.similarity import (
     _dot,
@@ -106,16 +106,9 @@ def dedup_embeddings_batch(
         return F.when(denom > 0, _dot(va, vb) / denom)
 
     # within-batch: posting list per bucket, width-capped, lowest id wins
-    posting = capped_posting_lists(
-        b.select("lsh_bucket", F.col("vec_id")), ["lsh_bucket"], F.col("vec_id"),
-        max_bucket=1000,
-    )
-    pairs = (
-        posting.select(F.explode_outer(_pairs_in_group(F.col("__ids"))).alias("p"))
-        .where(F.col("p").isNotNull())
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    pairs = _bucket_pairs(
+        b.select("lsh_bucket", F.col("vec_id")), ["lsh_bucket"], F.col("vec_id"), 1000
+    ).distinct()
     va = b.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
     vb = b.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     within = (
@@ -128,34 +121,18 @@ def dedup_embeddings_batch(
     lists_root = f"{store_dir}/index/lists"
     idx = batches.prior(spark, lists_root, batch_id)
     if idx is not None:
-        probe = F.broadcast(b.select("lsh_bucket").distinct())
-        cand = idx.join(probe, "lsh_bucket", "left_semi")
-        from pyspark.sql import Window
+        def side(df, name, vec):
+            return df.select(
+                F.col("vec_id").alias(f"__{name}_id"),
+                F.col("embedding").alias(vec),
+                "lsh_bucket",
+            )
 
-        w = Window.partitionBy("lsh_bucket")
-        cand = (
-            cand.withColumn("__bn", F.count(F.lit(1)).over(w))
-            .where(F.col("__bn") <= 1000)
-            .drop("__bn")
-        )
         arriving = (
-            cand.select(
-                F.col("vec_id").alias("__old_id"),
-                F.col("embedding").alias("__va"),
-                "lsh_bucket",
+            _probe_pairs(
+                side(b, "new", "__vb"), side(idx, "old", "__va"), ["lsh_bucket"], 1000
             )
-            .join(
-                b.select(
-                    F.col("vec_id").alias("__new_id"),
-                    F.col("embedding").alias("__vb"),
-                    "lsh_bucket",
-                ),
-                "lsh_bucket",
-            )
-            .where(
-                (F.col("__old_id") != F.col("__new_id"))
-                & (cos(F.col("__va"), F.col("__vb")) >= tau)
-            )
+            .where(cos(F.col("__va"), F.col("__vb")) >= tau)
             .select(F.col("__new_id").alias("vec_id"))
         )
         drop = drop.union(arriving)

@@ -365,15 +365,6 @@ def test_joins(spark):
     assert orphans(child, parent, "k").collect()[0].x == "b"
 
 
-def test_windows_running_total_and_topn(spark):
-    df = spark.createDataFrame(
-        [("u1", 1, 10.0), ("u1", 2, 5.0), ("u2", 1, 7.0)], ["u", "seq", "v"]
-    )
-    rt = win.running_total(df, ["u"], order_col="seq", value_col="v")
-    got = {(r.u, r.seq): r.running_total for r in rt.collect()}
-    assert got[("u1", 2)] == 15.0
-
-
 def test_sessionize_gap(spark):
     rows = [
         ("u1", "2026-01-01 10:00:00"),
@@ -514,7 +505,8 @@ def test_capped_posting_lists_never_collects_overcap_bucket(spark):
 def test_pair_generators_drop_planted_degenerate_bucket(spark):
     """End-to-end: 15 identical docs (one degenerate bucket everywhere)
     plus a true near-dup pair. With the cap below 15 every pair generator
-    drops the clones wholesale but still reports the planted pair."""
+    drops the clones wholesale but still reports the planted pair (in
+    both directions for the directed containment pairs)."""
     clone = "the same boilerplate text repeated verbatim across documents"
     a = "alpha beta gamma delta epsilon zeta eta theta"
     b = "alpha beta gamma delta epsilon zeta eta iota"
@@ -535,6 +527,14 @@ def test_pair_generators_drop_planted_degenerate_bucket(spark):
         df, "text", "doc_id", hamming_threshold=10, max_bucket=10
     ).collect()
     assert {(r.id_a, r.id_b) for r in sh} == {(100, 101)}
+
+    cp = dd.containment_pairs(
+        df, "text", "doc_id", threshold=0.5, max_shingle_freq=10
+    ).collect()
+    assert {(r.id_src, r.id_dst) for r in cp} == {(100, 101), (101, 100)}
+
+    wm = tx.winnow_match_pairs(df, "text", "doc_id", max_posting=10).collect()
+    assert {(r.id_a, r.id_b) for r in wm} == {(100, 101)}
 
 
 def test_lsh_topk_contains_exact_match(spark):

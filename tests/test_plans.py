@@ -153,18 +153,42 @@ def test_shingle_path_single_tokenization(spark):
     assert optimized.count("split(lower") == 1, optimized
 
 
-def test_pair_generation_single_sort(spark):
-    """_pairs_in_group must sort the bucket id list once (let-bound):
-    referenced inline from the pair lambdas, array_sort(ids) would re-sort
-    the bucket per MEMBER — O(n² log n) per bucket — and a plain explode's
-    inferred filter would add a second full pair-array construction."""
+@pytest.mark.parametrize(
+    "op",
+    [
+        "containment_pairs",
+        "knn_join_self",
+        "minhash_candidate_pairs",
+        "ngram_jaccard_pairs",
+        "simhash_candidate_pairs",
+        "winnow_match_pairs",
+    ],
+)
+def test_pair_generation_single_sort(spark, op):
+    """Every caller of dedup._bucket_pairs sorts each bucket's id list
+    once (let-bound): referenced inline from the pair lambdas,
+    array_sort(ids) would re-sort the bucket per MEMBER — O(n² log n) per
+    bucket — and a plain explode's inferred filter, or a second consumer
+    of the pair rows, would add another full pair-array construction."""
     from commercepulse_data_pipeline_spark.operators import dedup as dd
+    from commercepulse_data_pipeline_spark.operators import similarity as sim
+    from commercepulse_data_pipeline_spark.operators import text as tx
 
     df = spark.createDataFrame(
         [(i, "x y z common shingle text here") for i in range(6)], ["doc_id", "text"]
     )
-    pairs = dd.minhash_candidate_pairs(df, "text", "doc_id", max_bucket=100)
-    optimized = pairs._jdf.queryExecution().optimizedPlan().toString()
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.5, float(i % 2)]) for i in range(6)], ["vec_id", "embedding"]
+    )
+    calls = {
+        "containment_pairs": lambda: dd.containment_pairs(df, max_shingle_freq=100),
+        "knn_join_self": lambda: sim.knn_join_self(vecs, max_bucket=100, dim=3),
+        "minhash_candidate_pairs": lambda: dd.minhash_candidate_pairs(df, max_bucket=100),
+        "ngram_jaccard_pairs": lambda: dd.ngram_jaccard_pairs(df, max_shingle_freq=100),
+        "simhash_candidate_pairs": lambda: dd.simhash_candidate_pairs(df, max_bucket=100),
+        "winnow_match_pairs": lambda: tx.winnow_match_pairs(df, max_posting=100),
+    }
+    optimized = calls[op]()._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("array_sort") == 1, optimized
 
 

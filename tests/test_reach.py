@@ -10,9 +10,10 @@ module`` and ``importlib.import_module`` with a constant name all count.
 Functions: a top-level ``def`` or ``class`` is reached when a root, a
 reached body or a module-level statement of the package names it: an
 ``ast.Name``, an attribute name, an import alias, or an identifier-shaped
-string constant (``setattr``/``getattr`` targets, call-time lookups).
-Every ``cli.py`` function and every dunder is a root. An ``__all__`` list
-or an ``__init__.py`` re-export does not reach anything.
+string constant (``setattr``/``getattr`` targets, call-time lookups) that
+is not a dict-literal key (a query table's ``{"name": q_name}`` names only
+the value). Every ``cli.py`` function and every dunder is a root. An
+``__all__`` list or an ``__init__.py`` re-export does not reach anything.
 
 The walk reads source, never imports it. A module or function that only
 its own tests use fails here."""
@@ -155,7 +156,9 @@ def unreached(package: pathlib.Path, roots: list[pathlib.Path]) -> list[str]:
 
 def _named(node: ast.AST):
     """Every name ``node`` mentions: names, attribute names, import
-    aliases and identifier-shaped string constants."""
+    aliases and identifier-shaped string constants other than dict-literal
+    keys."""
+    keys = {id(k) for n in ast.walk(node) if isinstance(n, ast.Dict) for k in n.keys}
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             yield n.id
@@ -163,7 +166,12 @@ def _named(node: ast.AST):
             yield n.attr
         elif isinstance(n, ast.alias):
             yield from n.name.split(".")
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.isidentifier()
+            and id(n) not in keys
+        ):
             yield n.value
 
 
@@ -342,13 +350,17 @@ def test_walk_reports_an_unimported_module(tmp_path):
 def test_walk_reports_an_unnamed_function(tmp_path):
     """The check itself, on a copy of the package: an added function that
     nothing names is reported, and so is one named only in ``__all__`` and
-    an ``__init__.py`` re-export; functions reached through
+    an ``__init__.py`` re-export, or only as a dict-literal key; functions
+    reached through
     ``module.fn``, a lazy import, or a string constant used with
     ``setattr``/``getattr`` are not."""
     pkg = PACKAGE.name
     copy = tmp_path / pkg
     shutil.copytree(PACKAGE, copy, ignore=shutil.ignore_patterns("__pycache__"))
-    fns = ("by_attr", "by_getattr", "by_lazy_import", "by_setattr", "exported", "orphan")
+    fns = (
+        "by_attr", "by_dict_key", "by_getattr", "by_lazy_import", "by_setattr",
+        "exported", "orphan",
+    )
     (copy / "fns.py").write_text(
         '__all__ = ["exported"]\n'
         + "".join(f"\n\ndef {fn}():\n    return None\n" for fn in fns)
@@ -364,13 +376,14 @@ def test_walk_reports_an_unnamed_function(tmp_path):
         "    by_lazy_import()\n"
         "    getattr(fns, 'by_getattr')()\n"
         "    setattr(fns, 'by_setattr', None)\n"
+        "    return {'by_dict_key': 1}\n"
     )
     roots = _roots(copy)
     kept = [f"{pkg}.{name}" for name in KEPT]
     added = [f"{pkg}.fns.{fn}" for fn in fns]
     assert unreached_defs(copy, roots) == sorted(kept + added)
     assert unreached_defs(copy, roots + [script]) == sorted(
-        kept + [f"{pkg}.fns.exported", f"{pkg}.fns.orphan"]
+        kept + [f"{pkg}.fns.{fn}" for fn in ("by_dict_key", "exported", "orphan")]
     )
 
 
